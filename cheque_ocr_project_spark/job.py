@@ -35,8 +35,9 @@ def build_args(argv=None):
                     default="arrow")
     ap.add_argument("--wave-size", type=int, default=16,
                     help="buckets committed per manifest wave (crash loses "
-                         "at most one in-flight wave; wave_size >= n_buckets "
-                         "= single input pass)")
+                         "at most one in-flight wave; each wave adds a fixed "
+                         "~0.8 s on 4 local cores, so fewer, larger waves "
+                         "are cheaper)")
     ap.add_argument("--stage-input", action="store_true",
                     help="write the bucketed input once (partitioned by "
                          "bucket) so waves read with partition pruning "

@@ -15,6 +15,8 @@ Hyperplanes are seeded (deterministic run-to-run).
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -355,6 +357,15 @@ def seed_assignment(emb: DataFrame, n_pivots: int = 8,
     )
 
 
+def spark_round4(x: float) -> float:
+    """Spark's ``round(x, 4)`` on a double: HALF_UP on the shortest decimal
+    that reads back as ``x`` (Scala's ``BigDecimal(double)`` goes through
+    ``Double.toString``), not on the double's exact binary expansion — the
+    double nearest 0.29995 rounds to 0.3, not 0.2999."""
+    return float(Decimal(repr(float(x))).quantize(Decimal("0.0001"),
+                                                  rounding=ROUND_HALF_UP))
+
+
 def semantic_dedup(emb: DataFrame, n_pivots: int = 8,
                    threshold: float = 0.3, id_col: str = "vec_id",
                    vec_col: str = "embedding") -> DataFrame:
@@ -393,17 +404,12 @@ def semantic_dedup(emb: DataFrame, n_pivots: int = 8,
     # kernel does exactly that (f32 products upcast into a f64
     # accumulator, one dim at a time — verified bitwise on all pairs of
     # a 60-vector sample: dot, denominator, and rounded cosine all
-    # equal), and Spark's round(x, 4) = BigDecimal(double) HALF_UP =
-    # Decimal(float).quantize(HALF_UP), applied to the few candidates
-    # within 1e-3 of the threshold (rounding moves a value by < 5.1e-5,
-    # so the margin cannot lose a pair). try_divide's NULL-on-zero
+    # equal), and Spark's round(x, 4) is spark_round4, applied to the few
+    # candidates within 1e-3 of the threshold (rounding moves a value by
+    # < 5.1e-5, so the margin cannot lose a pair). try_divide's NULL-on-zero
     # divisor is the den > 0 mask. One cell = one task — the SemDeDup
     # scale knob is n_pivots itself (cells stay bounded by CHOICE of k),
     # so a cell kernel is the paper's own execution shape.
-    from decimal import ROUND_HALF_UP, Decimal
-
-    quant = Decimal("0.0001")
-
     def _cell_dropped(pdf: pd.DataFrame) -> pd.DataFrame:
         order = np.argsort(pdf["id"].to_numpy(), kind="stable")
         ids = pdf["id"].to_numpy()[order]
@@ -439,10 +445,7 @@ def semantic_dedup(emb: DataFrame, n_pivots: int = 8,
                 j = c0 + jj
                 if dropped[j]:
                     continue
-                cos = float(
-                    Decimal(raw[r, jj]).quantize(quant,
-                                                 rounding=ROUND_HALF_UP))
-                if cos >= threshold:
+                if spark_round4(raw[r, jj]) >= threshold:
                     dropped[j] = True
         return pd.DataFrame({"id": ids[dropped]})
 

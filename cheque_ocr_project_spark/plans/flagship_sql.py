@@ -29,8 +29,9 @@ NL = "chr(10)"
 # ---------------------------------------------------------------------------
 
 def any_term(expr: str, terms) -> str:
-    """OR-of-contains (null-safe False), = columns.any_term."""
-    ors = " OR ".join(f"contains({expr}, {D.q(t)})" for t in terms)
+    """OR-of-contains (null-safe False), = columns.any_term. Terms render
+    sorted, so the SQL text does not depend on set order (the hash seed)."""
+    ors = " OR ".join(f"contains({expr}, {D.q(t)})" for t in sorted(terms))
     return f"coalesce(({ors}), FALSE)"
 
 
@@ -82,7 +83,7 @@ def is_junk_v1(expr: str) -> str:
     u = f"upper({expr})"
     return (
         f"({expr} IS NULL OR length({expr}) < 3 "
-        f"OR {any_term(u, sorted(vocab.JUNK_TERMS_V1))} "
+        f"OR {any_term(u, vocab.JUNK_TERMS_V1)} "
         f"OR {any_term(u, ('SIGN', 'SGN', 'BEARER', 'ORDER'))})"
     )
 
@@ -90,7 +91,7 @@ def is_junk_v1(expr: str) -> str:
 def bank_hits(expr: str) -> str:
     return " + ".join(
         f"(CASE WHEN contains({expr}, {D.q(t)}) THEN 1 ELSE 0 END)"
-        for t in vocab.BANK_TERMS
+        for t in sorted(vocab.BANK_TERMS)
     )
 
 

@@ -246,3 +246,77 @@ def test_staged_input_waves(spark, transcripts_sdf, fixture_data, tmp_path):
         spark, transcripts_sdf, dd, out, n_buckets=8, stage_input=True
     )
     assert stats2["processed_buckets"] == 0
+
+
+def _assert_manifest_exact(transcripts_sdf, out, n_buckets):
+    """Every manifest entry equals an independent recomputation: its input
+    fingerprint and row count from the input, its rows and bytes from the
+    committed data."""
+    import pandas as pd
+
+    inputs = {
+        r["bucket"]: (r["input_fingerprint"], r["input_rows"])
+        for r in CP.input_fingerprints(
+            CP.with_bucket(transcripts_sdf, n_buckets)).collect()
+    }
+    data = pd.read_parquet(f"{out}/data")
+    nbytes = sum(data[c].fillna("").map(lambda s: len(s.encode()))
+                 for c in ("main_text", "payee_cleaned", "issuer"))
+    committed = nbytes.groupby(data["bucket"].astype("int64")).agg(
+        ["count", "sum"])
+    entries = CP.read_manifest(out)
+    assert sorted(e["bucket"] for e in entries) == list(range(n_buckets))
+    for e in entries:
+        b = e["bucket"]
+        assert (e["input_fingerprint"], e["input_rows"]) == inputs[b], e
+        assert (e["rows"], e["bytes"]) == tuple(committed.loc[b]), e
+
+
+def test_manifest_entries_match_input_and_committed_data(
+        spark, transcripts_sdf, fixture_data, tmp_path):
+    """Multi-wave, crashed-then-resumed and staged-input runs all record
+    each bucket's exact input fingerprint/rows and committed rows/bytes."""
+    import pytest
+
+    _t, _m, dd = fixture_data
+    n = 8
+    plain = str(tmp_path / "plain")
+    CP.run_with_checkpoint(spark, transcripts_sdf, dd, plain, n, wave_size=3)
+    _assert_manifest_exact(transcripts_sdf, plain, n)
+
+    resumed = str(tmp_path / "resumed")
+    with pytest.raises(RuntimeError, match="simulated driver crash"):
+        CP.run_with_checkpoint(spark, transcripts_sdf, dd, resumed, n,
+                               wave_size=3, _fail_after_waves=1)
+    stats = CP.run_with_checkpoint(spark, transcripts_sdf, dd, resumed, n,
+                                   wave_size=3)
+    assert stats["skipped_buckets"] == 3
+    _assert_manifest_exact(transcripts_sdf, resumed, n)
+
+    staged = str(tmp_path / "staged")
+    CP.run_with_checkpoint(spark, transcripts_sdf, dd, staged, n,
+                           wave_size=3, stage_input=True)
+    _assert_manifest_exact(transcripts_sdf, staged, n)
+
+
+def test_checkpoint_spark_job_budget(spark, transcripts_sdf, fixture_data,
+                                     tmp_path):
+    """The bookkeeping costs one fingerprint aggregate up front and one
+    small read-back per wave: at most 2 Spark jobs up front plus 3 per wave
+    (the wave's write and read-back). A per-wave input rescan or schema
+    inference of the data directory breaks the budget."""
+    _t, _m, dd = fixture_data
+    transcripts_sdf.count()  # fill the cache outside the counted group
+    sc = spark.sparkContext
+    group = "checkpoint-job-budget"
+    sc.setJobGroup(group, "checkpointed run")
+    try:
+        stats = CP.run_with_checkpoint(spark, transcripts_sdf, dd,
+                                       str(tmp_path / "out"), n_buckets=8,
+                                       wave_size=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert stats["waves"] == 4
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 2 + 3 * stats["waves"], jobs

@@ -182,3 +182,29 @@ def test_entry_pins_utc_on_non_utc_driver(spark, duck):
         assert list(a["hr"].astype(str)) == list(b["hr"].astype(str))
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_oracle_sql_independent_of_hash_seed():
+    """The oracle SQL text must not depend on the hash seed: set iteration
+    order changes with PYTHONHASHSEED, so any renderer that walks a set
+    unsorted makes the gate's SQL differ from run to run."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    render = ("import json, __spark_entry__ as E; "
+              "print(json.dumps(E.oracle_sql()))")
+    texts = []
+    for seed in ("1", "2"):
+        out = subprocess.run(
+            [sys.executable, "-c", render], check=True, capture_output=True,
+            text=True, cwd=Path(__file__).resolve().parents[1],
+            env={**os.environ, "PYTHONHASHSEED": seed},
+        ).stdout
+        texts.append(json.loads(out.splitlines()[-1]))
+    assert len(texts[0]) == len(entrymod.oracle_sql())
+    differ = sorted(k for k in texts[0].keys() | texts[1].keys()
+                    if texts[0].get(k) != texts[1].get(k))
+    assert not differ, differ

@@ -341,6 +341,21 @@ def test_semantic_dedup_chain_keeps_only_min_id(spark, tmp_path):
     assert kept == {3, 7}, kept
 
 
+def test_semantic_dedup_rounding_follows_spark_round(spark):
+    """The cell kernel's rounding must equal Spark's round(x, 4) on a
+    double, including on decimal ties whose binary expansion falls below
+    the tie: the double nearest 0.29995 rounds to 0.3 (its exact expansion
+    would round to 0.2999)."""
+    from cheque_ocr_project_spark.operators import similarity as SIM
+
+    assert SIM.spark_round4(0.29995) == 0.3
+    xs = [0.29995, *(float(f"0.{k:04d}5") for k in range(8990, 9010))]
+    got = spark.createDataFrame(list(enumerate(xs)), "i int, x double")
+    want = {r["i"]: r["r"]
+            for r in got.select("i", F.round("x", 4).alias("r")).collect()}
+    assert [SIM.spark_round4(x) for x in xs] == [want[i] for i in range(len(xs))]
+
+
 # ---------------------------------------------------------------------------
 # minhash_novelty — sequential-ingest novelty filter
 # ---------------------------------------------------------------------------
