@@ -96,6 +96,14 @@ HEADLINE = [
 ]
 
 
+def driver_memory() -> str:
+    """$SPARK_GRAFT_MEM, else half the host's physical memory in whole GiB
+    (at least 1g, at most the former 48g default)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return (os.environ.get("SPARK_GRAFT_MEM")
+            or f"{min(48, max(1, phys // 2**31))}g")
+
+
 def build_session() -> SparkSession:
     return (
         SparkSession.builder.master(f"local[{CPUS}]")
@@ -105,7 +113,7 @@ def build_session() -> SparkSession:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -152,7 +160,7 @@ def main() -> None:
     # "flagship_" prefix (flagship_nofuzzy, flagship_extract_v3, ...) are
     # ordinary contract queries and must time registry[rec] (ADVICE r05:
     # a bare prefix test silently timed the wrong computation for them).
-    ENGINE_RECORDS = {"flagship_vectorized", "flagship_arrow", "flagship_hybrid"}
+    ENGINE_RECORDS = {f"flagship_{eng}" for eng in P.ENGINES}
     transcripts = None  # staged lazily, right before the engine shootout
     dd = Q.default_drawer_dict()
 
@@ -239,16 +247,13 @@ def main() -> None:
     transcripts = spark.read.parquet(staged)
     n_turns = transcripts.count()
     # warmup pass (python workers + codegen), then min-of-K measured runs
-    # (same noise rationale as timed()); the hybrid engine (all-JVM stages +
-    # Arrow fuzzy UDF) is measured alongside the default Arrow engine so the
+    # (same noise rationale as timed()); every engine is measured so the
     # engine trade-off is visible per round.
     engine_secs: dict[str, float] = {}
-    for eng in ("vectorized", "arrow", "hybrid"):
+    for eng in P.ENGINES:
         run_record(f"flagship_{eng}")       # warmup pass, untimed
         gate()
-        # hybrid is the slowest and most noise-sensitive engine (many
-        # stages); 2 passes bound total bench wall without losing the signal
-        for _ in range(2 if eng == "hybrid" else 3):
+        for _ in range(3):
             one_pass(f"flagship_{eng}")
 
     # Load-aware re-timing (VERDICT r04 #1, tightened r06 #2): any
@@ -258,8 +263,7 @@ def main() -> None:
     # the pass that produced it, plus an explicit contaminated list when
     # the budget ran out while the box stayed hot.
     retime_budget = RETIME_BUDGET
-    retime_order = list(HEADLINE) + [f"flagship_{e}" for e in
-                                     ("vectorized", "arrow", "hybrid")]
+    retime_order = list(HEADLINE) + [f"flagship_{e}" for e in P.ENGINES]
     for rec in retime_order:
         for _ in range(2):                      # <= 2 retries per record
             if quiet_passes(rec) or retime_budget <= 0:
@@ -282,7 +286,7 @@ def main() -> None:
 
     for name in HEADLINE:
         timings[name] = accepted(name)[0]
-    for eng in ("vectorized", "arrow", "hybrid"):
+    for eng in P.ENGINES:
         engine_secs[eng] = accepted(f"flagship_{eng}")[0]
     flagship_sec = engine_secs["arrow"]
     timings["flagship_extract"] = round(flagship_sec, 3)

@@ -42,15 +42,15 @@ while os.getloadavg()[0] > GATE_LOAD and budget > 0:
 gate_wait_s = 240 - budget
 load_ambient = round(os.getloadavg()[0], 2)
 from pyspark.sql import SparkSession
+import bench
 spark = (SparkSession.builder.master(f"local[{cpus}]")
          .appName(f"scaling-{cpus}")
          .config("spark.sql.shuffle.partitions", str(cpus))
          .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.driver.memory", "48g")
+         .config("spark.driver.memory", bench.driver_memory())
          .config("spark.ui.enabled", "false")
          .getOrCreate())
 spark.sparkContext.setLogLevel("FATAL")
-import bench
 from cheque_ocr_project_spark.plans import pipeline as P, queries as Q
 # repartition BEFORE caching: the raw source is one parquet split, and a
 # single-partition cache would feed all workers through one serial scan

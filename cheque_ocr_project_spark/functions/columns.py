@@ -12,7 +12,6 @@ Arrow-batched UDF path instead (currently only difflib fuzzy matching).
 
 from __future__ import annotations
 
-import re as _re
 from functools import reduce
 
 from pyspark.sql import Column
@@ -24,12 +23,6 @@ from cheque_ocr_project_spark.oracle import vocab
 # helpers
 # --------------------------------------------------------------------------
 
-def esc(literal: str) -> str:
-    """Escape a literal for use inside a Java regex (re.escape output is
-    Java-compatible: backslash before punctuation only)."""
-    return _re.escape(literal)
-
-
 def any_term(col: Column, terms) -> Column:
     """True iff any literal term is a substring of col (null-safe False).
 
@@ -39,11 +32,6 @@ def any_term(col: Column, terms) -> Column:
     contains chain 2.4s)."""
     hit = reduce(lambda a, b: a | b, [col.contains(t) for t in terms])
     return F.coalesce(hit, F.lit(False))
-
-
-def count_matching(col: Column, char_class: str) -> Column:
-    """Number of characters of col matching the class (0 for null)."""
-    return F.length(F.regexp_replace(F.coalesce(col, F.lit("")), f"[^{char_class}]", ""))
 
 
 # java.util.regex perf cliff (measured, PLANS.md round 3): scanning a negated
@@ -59,8 +47,8 @@ _WORDISH_CHARS = _ALPHA_CHARS + _DIGIT_CHARS + "_ \t\n\x0b\f\r.-"
 
 
 def count_chars(col: Column, chars: str) -> Column:
-    """Number of characters of col in the literal char set (0 for null) —
-    translate-based fast path equal to count_matching for literal sets."""
+    """Number of characters of col in the literal char set (0 for null),
+    counted with translate(), not a negated-class regex (see above)."""
     c = F.coalesce(col, F.lit(""))
     return F.length(c) - F.length(F.translate(c, chars, ""))
 
@@ -157,27 +145,6 @@ def clean_payee(col: Column) -> Column:
     ).otherwise(s)
 
 
-def correct_spelling_ai(col: Column) -> Column:
-    """= oracle.cleaning.correct_spelling_ai (ordered literal replace chain)."""
-    s = F.upper(col)
-    for wrong, right in vocab.SPELLING_CORRECTIONS:
-        s = F.replace(s, F.lit(wrong), F.lit(right))
-    for word in vocab.GARBAGE_WORDS:
-        s = F.replace(s, F.lit(word), F.lit(""))
-    s = F.trim(F.regexp_replace(s, r"\s+", " "))
-    s = F.regexp_replace(s, r"[^A-Z\s]", "")  # short inputs; see clean_payee
-    titled = initcap_lower(s)
-    return F.when(col.isNull() | (F.length(col) == 0), F.lit("UNKNOWN")).otherwise(
-        F.when(F.length(s) >= 3, titled).otherwise(F.lit("UNKNOWN"))
-    )
-
-
-def initcap_lower(col: Column) -> Column:
-    """Python str.title() over an A-Z/space string == initcap(lower(s))
-    (title() capitalizes after any non-alpha; input charset here is [A-Z ])."""
-    return F.initcap(F.lower(col))
-
-
 # --------------------------------------------------------------------------
 # predicates  (oracle.predicates)
 # --------------------------------------------------------------------------
@@ -215,104 +182,6 @@ def is_junk_v1(col: Column) -> Column:
         | any_term(u, vocab.JUNK_TERMS_V1)
         | any_term(u, ("SIGN", "SGN", "BEARER", "ORDER"))
     )
-
-
-def contains_bank_keyword(col: Column) -> Column:
-    return any_term(F.upper(col), vocab.BANK_TERMS)
-
-
-def bank_hits(col: Column) -> Column:
-    """Count of BANK_TERMS present as substrings (on already-upper text)."""
-    hits = [F.when(col.contains(t), 1).otherwise(0) for t in vocab.BANK_TERMS]
-    return reduce(lambda a, b: a + b, hits)
-
-
-def is_valid_drawer_v1(text: Column) -> Column:
-    """= oracle.predicates.is_valid_drawer_v1 over *cleaned* text.
-
-    The cleaned charset is [A-Z0-9 .,&/-] so isalpha ≡ [A-Z]; expressed as
-    one boolean conjunction (pure predicates — evaluation order is free).
-    """
-    t = F.coalesce(text, F.lit(""))
-    alpha = n_alpha(t)
-    digits = n_digit(t)
-    total = F.length(t)
-    # Python str.split(): any-whitespace split, empty tokens dropped
-    words = F.filter(F.split(t, r"\s+"), lambda w: w != "")
-    has_ms = t.contains("M/S")  # "M/S." ⊂ "M/S" containment
-    dot_count = count_chars(t, ".")
-    hyphen_parts = F.size(F.split(t, "-"))
-    alpha_after_dot_strip = n_alpha(F.translate(t, ".", ""))
-
-    reject = (
-        is_junk_v1(t)
-        | contains_bank_keyword(t)
-        | t.contains("BANK")
-        | t.contains("PLEASE")
-        | ((dot_count > 2) & ~has_ms)
-        | any_term(t, vocab.LOCATION_KEYWORDS)
-        | (total == 0)
-        | ((digits > alpha) & (alpha < 4))
-        | ((total > 6) & (F.try_divide(alpha, total) < 0.45))
-        | ((bank_hits(t) > 0) & (alpha < 8))
-        | (total < 5)
-        | (digits >= 3)
-        | (~t.contains(" ") & (digits == 0) & (alpha >= 5) & is_garbage(t))
-        | (~t.contains(" ") & (digits > 0))
-        | t.contains("NOTOVER")
-        | t.contains("NOT OVER")
-        | (t.contains("RS") & (F.size(words) <= 3))
-        | (t.contains("/") & ~has_ms)
-        | (t.contains("-") & (hyphen_parts > 3))
-        | (t.contains(".") & (alpha_after_dot_strip == 0))
-        | (digits > alpha)
-        | (F.try_divide(alpha, total) < 0.6)
-        | is_garbage(t)
-    )
-    return ~reject
-
-
-def looks_like_real_name(text: Column) -> Column:
-    """= oracle.predicates.looks_like_real_name (raw, case-preserved text)."""
-    t = F.coalesce(text, F.lit(""))
-    letters = n_alpha(t)
-    digits = n_digit(t)
-    total = F.length(t)
-    # chars outside [A-Za-z0-9 ] == what translate leaves after deleting them
-    special = F.length(F.translate(t, _ALPHA_CHARS + "0123456789 ", ""))
-    u = F.upper(t)
-    # Python str.split(): any-whitespace split, empty tokens dropped
-    words = F.filter(F.split(u, r"\s+"), lambda w: w != "")
-    n_words = F.size(words)
-    common = F.size(
-        F.array_intersect(words, F.array(*[F.lit(w) for w in sorted(vocab.COMMON_NAME_PARTS)]))
-    )
-    # NB: the reference counts duplicate common words twice only in scoring,
-    # not here — this predicate only needs common == 0 vs > 0.
-
-    suspicious = reduce(
-        lambda a, b: a | b,
-        [
-            u.contains(s) & (F.lit(len(s)) > total / 2)
-            for s in vocab.SUSPICIOUS_NAME_TERMS
-        ],
-    )
-    multi_word_garbage = F.exists(
-        words, lambda w: (F.length(w) < 2) | is_garbage(w)
-    )
-    reject = (
-        t.isNull()
-        | (total == 0)
-        | (u == "XXX")
-        | ((digits > letters) & (letters < 5))
-        | ((total < 4) & ~u.isin("CO", "LTD", "PVT", "INC", "M/S"))
-        | (special > 3)
-        | is_garbage(t)
-        | suspicious
-        | ((common == 0) & (n_words >= 2) & multi_word_garbage)
-        | ((common == 0) & (n_words == 1) & ((total < 5) | is_garbage(t)))
-    )
-    return ~reject
 
 
 def common_name_part_count(words: Column) -> Column:

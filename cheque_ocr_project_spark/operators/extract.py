@@ -1,114 +1,21 @@
 """Arrow-batched extraction operators.
 
-Two roles:
-
-1. ``fuzzy_match_candidates`` — the only stage of the flagship pipeline that
-   cannot be a native expression: difflib-parity dictionary matching
-   (issuer_processor_v.py:359-375). Run over the *distinct* candidate
-   strings (J6 memoization — dedup-before-expensive-op) against a
-   broadcast dictionary, then hash-joined back.
-
-2. ``extract_turns_udf`` — the full-oracle mapInPandas path: applies
-   oracle.turn.extract_turn over Arrow record batches. This is the
-   parity-guaranteed fallback and the apples-to-apples baseline the native
-   pipeline is benchmarked against (it is also how a model-holding UDF
-   would be shaped: per-worker lazy state, batch-in/batch-out).
+``extract_turns_udf`` is the full-oracle mapInPandas path (the default
+'arrow' engine): it applies oracle.turn.extract_turn over Arrow record
+batches, with per-task state (the broadcast dictionary and a fuzzy-match
+memo) — the shape a model-holding UDF takes: per-worker lazy state,
+batch-in/batch-out. ``extract_turns_v3_udf`` does the same for the V3
+variant.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cheque_ocr_project_spark.oracle import fuzzy as oracle_fuzzy
 from cheque_ocr_project_spark.oracle import issuer as oracle_issuer
 from cheque_ocr_project_spark.oracle import turn as oracle_turn
-
-FUZZY_SCHEMA = T.StructType([
-    T.StructField("cand_text", T.StringType()),
-    T.StructField("matched_name", T.StringType()),
-    T.StructField("similarity", T.DoubleType()),
-])
-
-
-def fuzzy_match_candidates(spark: SparkSession, candidates: DataFrame,
-                           drawer_dict: list[str],
-                           text_col: str = "cand_text") -> DataFrame:
-    """(distinct candidate text) -> (text, matched_name, similarity).
-
-    ``drawer_dict`` is broadcast once per job (small dimension); difflib runs
-    Arrow-batched over distinct candidates only. Output joins back to the
-    exploded line relation on ``cand_text``.
-    """
-    bc = spark.sparkContext.broadcast(drawer_dict)
-
-    def match_batch(pdf_iter):
-        dd = bc.value
-        for pdf in pdf_iter:
-            # Null candidates are dropped Python-side (free) so callers can
-            # pass a null-including distinct set without a Catalyst filter —
-            # a filter on a computed candidate column gets predicate-pushed
-            # below the producing projection and re-inlines its whole
-            # expression tree (the hybrid engine relies on this).
-            texts = pdf[text_col].dropna().reset_index(drop=True)
-            matched = []
-            sims = []
-            for t in texts:
-                name, sim = oracle_fuzzy.match_name_v1(t, dd)
-                matched.append(name)
-                sims.append(sim)
-            yield pd.DataFrame({
-                "cand_text": texts,
-                "matched_name": matched,
-                "similarity": sims,
-            })
-
-    return candidates.select(F.col(text_col)).distinct().mapInPandas(
-        match_batch, schema=FUZZY_SCHEMA
-    )
-
-
-FUZZY_STRUCT = T.StructType([
-    T.StructField("matched_name", T.StringType()),
-    T.StructField("similarity", T.DoubleType()),
-])
-
-
-def fuzzy_match_udf(spark: SparkSession, drawer_dict: list[str]):
-    """Scalar Arrow-batched difflib matcher: cand -> (matched_name, sim).
-
-    Inline alternative to ``fuzzy_match_candidates`` + broadcast join: the
-    hybrid engine calls this directly on the candidate column, so the fuzzy
-    step needs NO extra input scan, NO distinct shuffle, and NO broadcast —
-    one Arrow hop carrying only the (short) candidate strings. Matching is
-    memoized per batch series (J6: distinct-before-expensive-op, done
-    Python-side where it's a dict lookup), mirroring the reference's
-    match_cache (issuer_processor_v.py:359-375). Nulls pass through as
-    (null, null)."""
-    bc = spark.sparkContext.broadcast(drawer_dict)
-
-    @F.pandas_udf(FUZZY_STRUCT)
-    def match(cands: pd.Series) -> pd.DataFrame:
-        dd = bc.value
-        memo: dict = {}
-        names, sims = [], []
-        for c in cands:
-            if c is None or isinstance(c, float):
-                names.append(None)
-                sims.append(None)
-                continue
-            hit = memo.get(c)
-            if hit is None:
-                hit = oracle_fuzzy.match_name_v1(c, dd)
-                memo[c] = hit
-            names.append(hit[0])
-            sims.append(hit[1])
-        return pd.DataFrame({"matched_name": names, "similarity": sims})
-
-    return match
-
 
 RESULT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),

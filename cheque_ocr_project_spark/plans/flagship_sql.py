@@ -11,9 +11,9 @@ drawer dictionary that stage is the identity, so ``flagship_nofuzzy``
 (reference lifecycle: issuer_processor_v.py:378-496, ocr_engine.py:109-192,
 cheque_classifier.py:122-194, government_payee_rules.py:127-175).
 
-Every fragment mirrors the Spark Column builders in functions/columns.py and
-plans/pipeline.py expression-for-expression (same float operation order, so
-doubles are bit-identical)."""
+Every fragment renders the Python oracle (oracle/predicates.py,
+oracle/boilerplate.py, oracle/issuer.py, ...) condition-for-condition, in
+the oracle's float operation order, so doubles are bit-identical."""
 
 from __future__ import annotations
 
@@ -96,7 +96,8 @@ def bank_hits(expr: str) -> str:
 
 
 def is_valid_drawer_v1(t: str) -> str:
-    """= columns.is_valid_drawer_v1 over *cleaned* (non-null, upper) text.
+    """= oracle.predicates.is_valid_drawer_v1 over *cleaned* (non-null,
+    upper) text.
     ``t`` must be a simple column reference (it is repeated many times)."""
     alpha = n_alpha(t)
     digits = n_digit(t)
@@ -137,7 +138,8 @@ def is_valid_drawer_v1(t: str) -> str:
 
 
 def looks_like_real_name(t: str) -> str:
-    """= columns.looks_like_real_name over raw case-preserved text."""
+    """= oracle.predicates.looks_like_real_name over raw case-preserved
+    text."""
     tt = f"coalesce({t}, '')"
     letters = n_alpha(tt)
     digits = n_digit(tt)
@@ -179,7 +181,7 @@ def is_bank_or_metadata(expr: str) -> str:
 
 
 def is_government_entity(x: str) -> str:
-    """= pipeline._is_government_entity (null/empty → FALSE)."""
+    """= oracle.govrules.is_government_entity (null/empty → FALSE)."""
     u = f"upper(coalesce({x}, ''))"
     pat = "|".join(f"(?:{p})" for p in vocab.GOVT_PAYEE_PATTERNS)
     return (
@@ -226,7 +228,8 @@ def payee_raw(u: str) -> str:
 
 
 def line_conf(ln: str) -> str:
-    """= pipeline._line_conf: 0.6 + 0.4 * alpha_ratio (0.0 for empty)."""
+    """= oracle.issuer.line_confidence: 0.6 + 0.4 * alpha_ratio (0.0 for
+    empty)."""
     return (
         f"CASE WHEN length({ln}) = 0 THEN 0.0 "
         f"ELSE 0.6 + 0.4 * ({n_alpha(ln)} / length({ln})) END"
@@ -234,7 +237,7 @@ def line_conf(ln: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# main-content strip (= oracle.boilerplate / pipeline.main_content_col)
+# main-content strip (= oracle.boilerplate.main_content)
 # ---------------------------------------------------------------------------
 
 def html_main(text: str) -> str:

@@ -1,24 +1,15 @@
-"""The flagship extraction pipeline as a native DataFrame plan.
+"""Flagship extraction: the engine dispatch, plus the native Column builders
+the registry queries share.
 
-Decomposition of the reference lifecycle (SURVEY.md §3.1/§3.2) into Catalyst
-stages — whole-stage-codegen native expressions everywhere except the
-difflib fuzzy join (Arrow-batched, memoized over distinct candidates):
+``extract_pipeline`` maps transcripts(conv_id, turn_idx, role, text, tool,
+ts) to one extraction record per turn through one of ``ENGINES``, both
+Arrow-batched ``mapInPandas`` passes over the Python oracle semantics
+(operators/extract.py, operators/vectorized.py).
 
-  transcripts
-    → main-content strip (tool payloads; array HOFs, zero shuffle)
-    → turn-level classify / payee / field grammars   (native, zero shuffle)
-    → line relation (posexplode)                     (narrow)
-    → candidate generation + validity               (native)
-    → distinct-candidate fuzzy match                (Arrow UDF, J6 memoized)
-    → scoring + per-turn top-1 (max_by aggregation) (1 shuffle on turn key)
-    → FOR-scan short-circuit (min_by aggregation)   (same shuffle)
-    → join back to turn level                       (co-partitioned join)
-
-Scale design: per-turn keys (conv_id, turn_idx) give fine-grained shuffle
-granularity, so a single 10^6-turn conversation cannot pin a task (the salt
-is the turn index itself); AQE handles residual skew. The only shuffles are
-keyed aggregations over (conv_id, turn_idx) plus one distinct over the
-candidate vocabulary (tiny relative to lines).
+The Catalyst builders below (plain main-content strip, officer
+designation, government-entity rules, payee section and payee grammar)
+are imported by the registry queries in plans/queries.py and
+plans/queries_v3.py; each cites the oracle function it must equal.
 """
 
 from __future__ import annotations
@@ -33,10 +24,11 @@ from cheque_ocr_project_spark.operators import extract as X
 from cheque_ocr_project_spark.oracle import issuer as oracle_issuer
 from cheque_ocr_project_spark.oracle import vocab
 
-KEYS = ["conv_id", "turn_idx"]
+# The extraction engines ``extract_pipeline`` accepts; the first is the default.
+ENGINES = ("arrow", "vectorized")
 
 # --------------------------------------------------------------------------
-# main-content extraction (oracle.boilerplate parity, array HOFs)
+# native column builders (oracle parity; imported by the registry queries)
 # --------------------------------------------------------------------------
 
 _COLLAPSE = lambda c: F.trim(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
@@ -45,84 +37,10 @@ _COLLAPSE = lambda c: F.trim(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
 _PYSTRIP = lambda c: F.regexp_replace(c, r"^\s+|\s+$", "")  # noqa: E731
 
 
-def _html_main(text: Column) -> Column:
-    lines = F.split(text, "\n")
-    lines = F.filter(lines, lambda ln: ~ln.rlike(r"(?i)<\s*(script|style)\b"))
-
-    def stats(ln: Column) -> Column:
-        stripped = F.regexp_replace(ln, r"<[^>]*>", "")
-        visible = _COLLAPSE(stripped)
-        tag_density = F.try_divide(F.length(ln) - F.length(stripped), F.length(ln))
-        anchor_len = F.aggregate(
-            F.regexp_extract_all(ln, F.lit(r"(?i)<a\b[^>]*>(.*?)</a>"), F.lit(1)),
-            F.lit(0),
-            lambda acc, x: acc + F.length(F.regexp_replace(x, r"<[^>]*>", "")),
-        )
-        link_density = F.when(
-            F.length(visible) > 0, anchor_len / F.length(visible)
-        ).otherwise(F.lit(1.0))
-        return F.struct(
-            visible.alias("vis"),
-            tag_density.alias("tagd"),
-            link_density.alias("linkd"),
-        )
-
-    kept = F.filter(
-        F.transform(lines, stats),
-        lambda s: (F.length(s["vis"]) >= 25)
-        & (s["tagd"] < 0.6)
-        & (s["linkd"] < 0.34),
-    )
-    return F.array_join(F.transform(kept, lambda s: s["vis"]), "\n")
-
-
-def _pdf_main(text: Column) -> Column:
-    lines = F.split(F.replace(text, F.lit("\x0c"), F.lit("\n")), "\n")
-    lines = F.filter(F.transform(lines, _COLLAPSE), lambda x: x != "")
-    kept = F.filter(
-        lines,
-        lambda ln: ~ln.rlike(r"(?i)^\s*(page\s+)?\d+(\s+of\s+\d+)?\s*$")
-        & (F.size(F.filter(lines, lambda x: x == ln)) < 3),
-    )
-    return F.array_join(kept, "\n")
-
-
 def _plain_main(text: Column) -> Column:
+    """= oracle.boilerplate.extract_plain."""
     lines = F.filter(F.transform(F.split(text, "\n"), _COLLAPSE), lambda x: x != "")
     return F.array_join(lines, "\n")
-
-
-def main_content_col(text: Column, tool: Column) -> Column:
-    """= oracle.boilerplate.main_content dispatch."""
-    has_tag = text.contains("<") & text.rlike(r"<[^>]*>")
-    return (
-        F.when(text.isNull() | (F.length(text) == 0), F.lit(""))
-        .when((tool == "web_fetch") | has_tag, _html_main(text))
-        .when(tool == "pdf_extract", _pdf_main(text))
-        .otherwise(_plain_main(text))
-    )
-
-
-def with_main_content(df: DataFrame) -> DataFrame:
-    content = F.when(
-        F.col("role") == "tool", main_content_col(F.col("text"), F.col("tool"))
-    ).otherwise(F.coalesce(F.col("text"), F.lit("")))
-    return df.withColumn("content", content)
-
-
-# --------------------------------------------------------------------------
-# turn-level stages (classification / payee / fields) — all native
-# --------------------------------------------------------------------------
-
-def _line_conf(ln: Column) -> Column:
-    """= oracle.issuer.line_confidence (0.6 + 0.4 * alpha_ratio)."""
-    return F.when(F.length(ln) == 0, F.lit(0.0)).otherwise(
-        0.6 + 0.4 * (C.n_alpha(ln) / F.length(ln))
-    )
-
-
-def _nonblank_lines(content: Column) -> Column:
-    return F.filter(F.split(content, "\n"), lambda ln: ln.rlike(r"\S"))
 
 
 def _designation_literal(u: Column) -> Column:
@@ -197,13 +115,6 @@ def _payee_section(u: Column) -> Column:
     return chain.otherwise(F.lit(None).cast("string"))
 
 
-def _payable_to_government(u: Column) -> Column:
-    section = _payee_section(u)
-    return F.when(section.isNotNull(), _is_government_entity(section)).otherwise(
-        F.lit(False)
-    )
-
-
 # Literal-prefix guard per PAYEE_PATTERN (pure prefilter, regex stays
 # authoritative): every match of pattern i necessarily contains the literal,
 # and contains() is ~10x cheaper than letting the backtracking scan run on
@@ -238,573 +149,9 @@ def _payee_raw_col(u: Column) -> Column:
     return F.get(sel, 0)
 
 
-def _barrier(df: DataFrame) -> DataFrame:
-    """Exchange barrier on the per-turn key: materializes every column
-    computed so far so downstream expression trees reference attributes
-    instead of inlining the full derivation per reference (CollapseProject /
-    filter-pushdown otherwise re-evaluate heavy regex trees dozens of times
-    per row — the `variant_keep_best` trap, PLANS.md). Partitioning on KEYS
-    is reused by the later groupBy/join on the same keys, so the pipeline
-    pays the shuffle once."""
-    return df.repartition(*[F.col(k) for k in KEYS])
-
-
-def _field_cols(ft: Column, has_text: Column) -> dict:
-    """Field grammars (date / amount / account / MICR) over the full text."""
-    date_pat = r"Date:\s*(\d{2})[./](\d{2})[./](\d{4})"
-    amount_pat = r"[₹Rs\.]*\s*([\d,]+(?:\.\d{2})?)[/\-]?"
-    account_pat = r"A/C No\.?[\s:]*(\d{10,20})"
-    micr = vocab.MICR_PATTERN
-    has_micr = has_text & ft.rlike(micr)
-    return {
-        "field_date": F.when(
-            has_text & ft.rlike(date_pat),
-            F.concat(
-                F.regexp_extract(ft, date_pat, 1),
-                F.regexp_extract(ft, date_pat, 2),
-                F.regexp_extract(ft, date_pat, 3),
-            ),
-        ),
-        "field_amount": F.when(
-            has_text & ft.rlike(amount_pat),
-            F.replace(F.regexp_extract(ft, amount_pat, 1), F.lit(","), F.lit("")),
-        ),
-        "field_account": F.when(
-            has_text & ft.rlike(account_pat),
-            F.regexp_extract(ft, account_pat, 1),
-        ),
-        "micr_city": F.when(has_micr, F.regexp_extract(ft, micr, 1)),
-        "micr_bank": F.when(has_micr, F.regexp_extract(ft, micr, 2)),
-        "micr_serial": F.when(has_micr, F.regexp_extract(ft, micr, 3)),
-    }
-
-
-def turn_stage0(df: DataFrame) -> DataFrame:
-    """Hybrid stage 0 (B1 barrier): line stats + uppercased full text,
-    materialized behind one exchange on the per-turn key. Both the
-    classification stage AND the issuer line relation read this staged
-    output — the explode inherits the (conv_id, turn_idx) partitioning, so
-    the issuer aggregation needs no further shuffle."""
-    lines = _nonblank_lines(F.col("content"))
-    conf_sum = F.aggregate(
-        lines, F.lit(0.0), lambda acc, ln: acc + _line_conf(ln)
-    )
-    df = (
-        df.select(*KEYS, "content")
-        .withColumn("lines", lines)
-        .withColumn("n_lines", F.size("lines"))
-        .withColumn("full_text", F.array_join("lines", " "))
-        .withColumn(
-            "confidence",
-            F.when(F.col("n_lines") > 0, conf_sum / F.col("n_lines")).otherwise(0.0),
-        )
-        .withColumn("__u", F.upper(F.col("full_text")))
-    )
-    return _barrier(df)
-
-
-def _flag_exprs(u, has_text) -> dict:
-    """Turn-level classification flag + payee expressions over the
-    uppercased full text (cheque_classifier.py:73-180 semantics)."""
-    words_u = F.filter(F.split(u, r"\s+"), lambda w: w != "")
-    return {
-        "cat3": u.contains("GOVERNMENT ACCOUNT") | u.contains("GOVT ACCOUNT"),
-        "cat2": u.contains("NOT TRANSFERABLE") & C.any_term(
-            u, ("GOVT", "GOVERNMENT", "PAO", "DDO")
-        ),
-        "cat1": C.any_term(u, vocab.GOVT_MARKERS_HIGH) | C.any_term(
-            u, vocab.GOVT_MARKERS_MEDIUM
-        ),
-        "is_dd": C.any_term(u, vocab.DD_MARKERS),
-        "is_mc": C.any_term(u, vocab.MC_MARKERS),
-        "crossed": F.coalesce(
-            u.rlike("|".join(f"(?:{p})" for p in vocab.CROSSED_PATTERNS)),
-            F.lit(False),
-        ),
-        "is_self": u.contains("SELF") & (F.size(words_u) < 15),
-        "payee_raw": F.when(has_text, _payee_raw_col(u)).otherwise(
-            F.lit(None).cast("string")
-        ),
-    }
-
-
-def _classification_cols(fl: dict, has_text, payee_raw,
-                         designation) -> dict:
-    """cheque_type / government / payee_rule / payee_cleaned from flag
-    Columns (attribute refs in the staged engines, raw expressions in the
-    collapsed native plan). ``payee_cleaned`` tests the flag disjunction
-    directly (== the is_government column under has_text)."""
-    cat3, cat2, cat1 = fl["cat3"], fl["cat2"], fl["cat1"]
-    is_dd, is_mc = fl["is_dd"], fl["is_mc"]
-    crossed, is_self = fl["crossed"], fl["is_self"]
-
-    payee_raw_u = F.upper(F.coalesce(payee_raw, F.lit("")))
-    gov_payee = (
-        F.when(cat3, F.lit("GOVERNMENT"))
-        .when(
-            cat2,
-            F.when(
-                designation.isNotNull(),
-                F.concat(F.lit("GOVERNMENT - "), designation),
-            )
-            .when(
-                (F.length(payee_raw_u) > 0)
-                & C.any_term(payee_raw_u, vocab.OFFICER_DESIGNATIONS),
-                F.concat(F.lit("GOVERNMENT - "), payee_raw),
-            )
-            .otherwise(F.lit("GOVERNMENT OFFICER")),
-        )
-        .otherwise(  # category I
-            F.when(_is_government_entity(payee_raw), F.lit("GOVERNMENT"))
-            .otherwise(F.coalesce(payee_raw, F.lit("XXX")))
-        )
-    )
-    return {
-        "cheque_type": (
-            F.when(~has_text, F.lit(None).cast("string"))
-            .when(cat3, "GOVT_GOVT_ACCOUNT")
-            .when(cat2, "GOVT_NON_TRANSFERABLE")
-            .when(cat1, "GOVT_NEGOTIABLE")
-            .when(is_dd, "DEMAND_DRAFT")
-            .when(is_mc, "MANAGERS_CHEQUE")
-            .when(crossed, "CROSSED")
-            .when(is_self, "SELF")
-            .otherwise("ORDER")
-        ),
-        "is_government": F.when(~has_text, F.lit(False)).otherwise(
-            cat3 | cat2 | cat1
-        ),
-        "government_category": (
-            F.when(~has_text, F.lit(None).cast("string"))
-            .when(cat3, "III")
-            .when(cat2, "II")
-            .when(cat1, "I")
-            .otherwise(F.lit(None).cast("string"))
-        ),
-        "payee_rule": (
-            F.when(~has_text, F.lit(None).cast("string"))
-            .when(cat3, "government_account")
-            .when(cat2, "government_officer")
-            .when(cat1, "government_contractor")
-            .when(is_dd, "dd_standard")
-            .when(is_mc, "mc_standard")
-            .when(crossed, "account_payee")
-            .when(is_self, "self")
-            .otherwise("standard")
-        ),
-        "payee_cleaned": (
-            F.when(~has_text, F.lit("XXX"))
-            .when(cat3 | cat2 | cat1, gov_payee)
-            .when(payee_raw.isNotNull(), C.clean_payee(payee_raw))
-            .otherwise(F.lit("XXX"))
-        ),
-    }
-
-
-def turn_level(df: DataFrame) -> DataFrame:
-    """classification + payee + fields + confidence columns as ONE collapsed
-    projection chain, zero shuffle — the declarative reference shape (the
-    hybrid engine stages the same expressions behind exchange barriers
-    instead; see _extract_hybrid)."""
-    lines = _nonblank_lines(F.col("content"))
-    conf_sum = F.aggregate(
-        lines, F.lit(0.0), lambda acc, ln: acc + _line_conf(ln)
-    )
-    df = (
-        df.withColumn("lines", lines)
-        .withColumn("n_lines", F.size("lines"))
-        .withColumn("full_text", F.array_join("lines", " "))
-        .withColumn(
-            "confidence",
-            F.when(F.col("n_lines") > 0,
-                   conf_sum / F.col("n_lines")).otherwise(0.0),
-        )
-    )
-    u = F.upper(F.col("full_text"))
-    has_text = F.col("n_lines") > 0
-    fl = _flag_exprs(u, has_text)
-    df = df.withColumn("payee_raw", fl["payee_raw"])
-    df = df.withColumns(_classification_cols(
-        fl, has_text, F.col("payee_raw"), _designation_literal(u)
-    ))
-    df = df.withColumns(_field_cols(F.col("full_text"), has_text))
-    df = df.withColumn("success", has_text)
-    df = df.withColumn(
-        "error",
-        F.when(~has_text, F.lit("No text detected")).otherwise(
-            F.lit(None).cast("string")
-        ),
-    )
-    return df
-
-
 # --------------------------------------------------------------------------
-# issuer stage (line relation → candidates → fuzzy → top-1 → gates)
+# engine dispatch
 # --------------------------------------------------------------------------
-
-def _line_relation(df: DataFrame) -> DataFrame:
-    return df.select(
-        *KEYS,
-        F.posexplode(F.col("lines")).alias("line_idx", "raw_line"),
-    ).withColumn("conf", _line_conf(F.col("raw_line")))
-
-
-def _for_suffix(text: Column, u: Column, marker: str) -> Column:
-    """text[u.find(marker)+len(marker):].strip() — raw-case FOR suffix."""
-    return _PYSTRIP(F.substr(text, F.instr(u, marker) + len(marker)))
-
-
-_MARKER_RX = "FOR |F/O |F/ |PROP "  # raw-scan precondition (any marker)
-_FOR_LINE_RX = "FOR |F/O |F/|PROP "  # cleaned-text FOR-branch precondition
-
-
-def _extract_hybrid(spark: SparkSession, transcripts: DataFrame,
-                    drawer_dict: list[str], threshold: float) -> DataFrame:
-    """The hybrid engine: one fused single-branch plan — native Catalyst
-    stages for cleaning / classification / grammars, an Arrow-batched UDF
-    ONLY for the difflib fuzzy dictionary match, no per-row Python anywhere.
-
-    Shape (one scan, two shuffles, zero joins):
-
-        scan → stage0 (line stats, __u)                 [exchange B1]
-          → turn flags + payee_raw + field grammars     (per-turn, native)
-          → posexplode_outer(lines) carrying turn cols  (zero-line turns kept)
-          → stext/cleaned + 3 candidate kinds           (native, one copy each)
-          → difflib fuzzy                               (Arrow UDF, memoized)
-          → ONE aggregation per turn                    [exchange: partial
-            (first(turn cols) + min(scan) + max(top1))   agg shuffles per-turn
-          → gates + classification chains → result       rows only]
-
-    Design constraints baked in (measured the hard way; PLANS.md round 3):
-    - No Catalyst filter may reference a computed candidate column
-      (predicate pushdown re-inlines the whole tree below the barrier);
-      null-dropping happens inside min/max/first aggregates and inside the
-      fuzzy UDF batch.
-    - Multi-referenced regex-bearing aliases (cleaned, payee_raw, __u) are
-      materialized behind the B1 exchange or kept single-reference;
-      cheap-looking aliases (upper/contains chains) DO get inlined by
-      CollapseProject, so anything referenced by fan-out when-chains crosses
-      an aggregation or exchange boundary first.
-    - The aggregation folds the former scan-hit/top-1/turn-join trio into
-      one partial-aggregated shuffle of per-turn rows: min over
-      (line_idx, name, conf) == min_by(line_idx) since line_idx is unique
-      per turn; max over (score, -line_idx, name, conf) == max_by with the
-      stable-sort tiebreak since (score, -line_idx) is a total order.
-
-    Reference lifecycle this mirrors: issuer_processor_v.py:378-496.
-    """
-    s0 = turn_stage0(with_main_content(transcripts))
-    u = F.col("__u")
-    has_text = F.col("n_lines") > 0
-    fl = _flag_exprs(u, has_text)
-    flagged = s0.withColumns({
-        "cat3": fl["cat3"], "cat2": fl["cat2"], "cat1": fl["cat1"],
-        "is_dd": fl["is_dd"], "is_mc": fl["is_mc"],
-        "crossed": fl["crossed"], "is_self": fl["is_self"],
-        "payee_raw": fl["payee_raw"],
-        **_field_cols(F.col("full_text"), has_text),
-    }).drop("full_text")
-
-    # Line relation CARRYING the turn-level columns (the aggregation brings
-    # them back with first(); all rows of a turn hold identical values).
-    # posexplode_outer keeps zero-line turns as one null-line row, which
-    # yields no candidate (clean_text_v1(null) = 'XXX' fails validity) and
-    # so gates to the same XXX/0.0 the old left join produced.
-    ex = flagged.select(
-        "*", F.posexplode_outer("lines").alias("line_idx", "raw_line")
-    ).drop("lines")
-    ex = ex.withColumns({
-        "conf": _line_conf(F.col("raw_line")),
-        "stext": _PYSTRIP(F.col("raw_line")),
-        "cleaned": C.clean_text_v1(_PYSTRIP(F.col("raw_line"))),
-    }).drop("raw_line")
-
-    cleaned = F.col("cleaned")
-    u_raw = F.upper(F.col("stext"))
-
-    # FOR-scan short-circuit (raw text): first marker (list order) whose raw
-    # suffix passes looks_like_real_name, at >= threshold confidence
-    # (issuer_processor_v.py:474-481). Array-HOF: the name predicate is
-    # generated once, inside the filter lambda, and only evaluated on the
-    # rare marker lines behind the rlike prefilter.
-    scan_pots = F.array(*[
-        F.when(u_raw.contains(m), _for_suffix(F.col("stext"), u_raw, m))
-        for m in vocab.FOR_MARKERS
-    ])
-    scan_sel = F.filter(
-        scan_pots, lambda p: p.isNotNull() & C.looks_like_real_name(p)
-    )
-    scan_cand = F.when(
-        u_raw.rlike(_MARKER_RX) & (F.col("conf") >= threshold),
-        F.get(scan_sel, 0),
-    )
-
-    # FOR-branch candidates (cleaned text): first marker whose suffix is a
-    # valid drawer; validity tree generated once, evaluated on marker lines.
-    for_pots = F.array(*[
-        F.when(
-            cleaned.contains(m),
-            _PYSTRIP(F.substr(cleaned, F.instr(cleaned, m) + len(m))),
-        )
-        for m in vocab.FOR_MARKERS
-    ])
-    for_sel = F.filter(
-        for_pots, lambda p: p.isNotNull() & C.is_valid_drawer_v1(p)
-    )
-    is_for_line = cleaned.rlike(_FOR_LINE_RX)
-    for_cand = F.when(is_for_line, F.get(for_sel, 0))
-    normal_cand = F.when(~is_for_line & C.is_valid_drawer_v1(cleaned), cleaned)
-
-    cand_lines = ex.withColumns({
-        "scan_cand": scan_cand,
-        "cand": F.coalesce(for_cand, normal_cand),
-        "is_for": F.when(is_for_line, for_cand.isNotNull()).otherwise(F.lit(False)),
-    }).drop("stext", "cleaned")
-
-    # Inline Arrow-batched difflib match on the normal candidates (memoized
-    # per batch — J6): the only bytes crossing the Python boundary are the
-    # short candidate strings; for-rows and candidate-less rows pass null.
-    fuzzy = X.fuzzy_match_udf(spark, drawer_dict)
-    scored = cand_lines.withColumn(
-        "__fz", fuzzy(F.when(~F.col("is_for"), F.col("cand")))
-    )
-    matched = F.col("__fz.matched_name")
-    final_text = F.when(F.col("is_for"), F.col("cand")).otherwise(
-        F.coalesce(matched, F.col("cand"))
-    )
-    words = F.filter(F.split(final_text, r"\s+"), lambda w: w != "")
-    n_words = F.size(words)
-    wc_boost = F.when((n_words >= 2) & (n_words <= 4), F.lit(0.15)).otherwise(0.0)
-    common_boost = 0.1 * C.common_name_part_count(words)
-    susp = C.any_term(final_text, vocab.SUSPICIOUS_SCORE_TERMS)
-    match_boost = F.when(
-        matched.isNotNull(), 0.20 + (0.25 * F.col("__fz.similarity"))
-    ).otherwise(0.0)
-    # Same left-assoc float order as the oracle: conf+match, +wc, +common, -susp
-    normal_score = (
-        (((F.col("conf") + match_boost) + wc_boost) + common_boost)
-        - F.when(susp, 0.40).otherwise(0.0)
-    )
-    score = F.when(F.col("is_for"), F.col("conf") + 0.3).otherwise(normal_score)
-
-    turn_cols = [
-        "content", "n_lines", "confidence", "__u",
-        "cat3", "cat2", "cat1", "is_dd", "is_mc", "crossed", "is_self",
-        "payee_raw", "field_date", "field_amount", "field_account",
-        "micr_city", "micr_bank", "micr_serial",
-    ]
-    per_turn = scored.groupBy(*KEYS).agg(
-        *[F.first(c).alias(c) for c in turn_cols],
-        F.min(
-            F.when(
-                F.col("scan_cand").isNotNull(),
-                F.struct(
-                    F.col("line_idx").alias("idx"),
-                    F.col("scan_cand").alias("name"),
-                    F.col("conf").alias("conf"),
-                ),
-            )
-        ).alias("scan_s"),
-        F.max(
-            F.when(
-                F.col("cand").isNotNull(),
-                F.struct(
-                    score.alias("score"),
-                    (-F.col("line_idx")).alias("neg_idx"),
-                    final_text.alias("name"),
-                    F.col("conf").alias("conf"),
-                ),
-            )
-        ).alias("top_s"),
-    )
-
-    xxx = F.struct(F.lit("XXX").alias("name"), F.lit(0.0).alias("conf"))
-    best_text = F.col("top_s.name")
-    best_conf = F.col("top_s.conf")
-    gated = (
-        F.when(
-            F.col("scan_s").isNotNull(),
-            F.struct(
-                F.col("scan_s.name").alias("name"),
-                F.col("scan_s.conf").alias("conf"),
-            ),
-        )
-        .when(F.col("top_s").isNull(), xxx)
-        .when(best_conf < threshold, xxx)
-        .when(~C.looks_like_real_name(best_text), xxx)
-        .otherwise(F.struct(best_text.alias("name"), best_conf.alias("conf")))
-    )
-
-    has_text = F.col("n_lines") > 0
-    fl_ref = {k: F.col(k) for k in
-              ("cat3", "cat2", "cat1", "is_dd", "is_mc", "crossed", "is_self")}
-    out = per_turn.withColumns({
-        "issuer": gated.getField("name"),
-        "issuer_conf": gated.getField("conf"),
-        **_classification_cols(fl_ref, has_text, F.col("payee_raw"),
-                               _designation_literal(F.col("__u"))),
-    })
-    out = out.withColumns({
-        "main_text": F.col("content"),
-        "success": has_text,
-        "error": F.when(~has_text, F.lit("No text detected")).otherwise(
-            F.lit(None).cast("string")
-        ),
-        "status": F.when(F.col("issuer") != "XXX",
-                         F.lit("AUTO-UPDATED")).otherwise(F.lit("REJECTED")),
-        "opr_no": F.lit(vocab.FIXED_OPR_NO),
-        "file_mark": F.lit(vocab.FIXED_FILE_MARK),
-    })
-    return out.select(*RESULT_COLUMNS)
-
-
-def issuer_stage(spark: SparkSession, df_turns: DataFrame, drawer_dict: list[str],
-                 threshold: float) -> DataFrame:
-    """Per-turn (issuer, issuer_conf) via the V1 path (oracle parity).
-
-    Three filtered branches over the line relation (scan / FOR / normal),
-    heavy predicates gated behind cheap rlike prefilters — the declarative
-    reference shape; CollapseProject + filter pushdown re-inline the
-    clean_text derivation into every predicate reference, so this shape is
-    slow but plan-minimal. The hybrid engine fuses this stage into its
-    single-branch plan instead (_extract_hybrid)."""
-    lines = _line_relation(df_turns).select(
-        *KEYS,
-        "line_idx",
-        "conf",
-        _PYSTRIP(F.col("raw_line")).alias("stext"),
-        C.clean_text_v1(_PYSTRIP(F.col("raw_line"))).alias("cleaned"),
-    )
-
-    # FOR-scan short-circuit: first marker (list order) whose raw-text
-    # suffix passes looks_like_real_name at >= threshold confidence — the
-    # reference keeps trying later markers on the same line when one
-    # fails (issuer_processor_v.py:474-481). Prefilter: marker + threshold.
-    u_raw = F.upper(F.col("stext"))
-    scan_base = lines.filter(
-        u_raw.rlike(_MARKER_RX) & (F.col("conf") >= threshold)
-    )
-    scan_cand = None
-    for m in vocab.FOR_MARKERS:
-        cand = _for_suffix(F.col("stext"), u_raw, m)
-        ok = u_raw.contains(m) & C.looks_like_real_name(cand)
-        scan_cand = F.when(ok, cand) if scan_cand is None else scan_cand.when(ok, cand)
-    scan_cand = scan_cand.otherwise(F.lit(None).cast("string"))
-    scan_hits = (
-        scan_base.select(*KEYS, "line_idx", "conf", scan_cand.alias("scan_cand"))
-        .filter(F.col("scan_cand").isNotNull())
-        .groupBy(*KEYS)
-        .agg(
-            F.min_by(
-                F.struct(
-                    F.col("scan_cand").alias("name"), F.col("conf").alias("conf")
-                ),
-                F.col("line_idx"),
-            ).alias("scan_hit")
-        )
-    )
-
-    # FOR-branch candidates (cleaned text): rare lines, prefiltered.
-    is_for_line = F.col("cleaned").rlike(_FOR_LINE_RX)
-    for_cand = None
-    for m in vocab.FOR_MARKERS:
-        pot = _PYSTRIP(F.substr(F.col("cleaned"), F.instr(F.col("cleaned"), m) + len(m)))
-        ok = F.col("cleaned").contains(m) & C.is_valid_drawer_v1(pot)
-        for_cand = F.when(ok, pot) if for_cand is None else for_cand.when(ok, pot)
-    for_cand = for_cand.otherwise(F.lit(None).cast("string"))
-    for_lines = (
-        lines.filter(is_for_line)
-        .select(*KEYS, "line_idx", "conf", for_cand.alias("cand"))
-        .filter(F.col("cand").isNotNull())
-        .withColumn("is_for", F.lit(True))
-    )
-
-    # Normal candidates: one validity evaluation per line.
-    normal_lines = (
-        lines.filter(~is_for_line)
-        .filter(C.is_valid_drawer_v1(F.col("cleaned")))
-        .select(*KEYS, "line_idx", "conf", F.col("cleaned").alias("cand"))
-        .withColumn("is_for", F.lit(False))
-    )
-
-    cand_lines = for_lines.unionByName(normal_lines)
-    normal_cands = normal_lines.select(F.col("cand").alias("cand_text"))
-
-    # Fuzzy dictionary match over DISTINCT normal candidates (J6 memoization).
-    fuzzy = X.fuzzy_match_candidates(spark, normal_cands, drawer_dict)
-    cand_lines = cand_lines.join(
-        F.broadcast(fuzzy),
-        (cand_lines["cand"] == fuzzy["cand_text"]) & ~cand_lines["is_for"],
-        "left",
-    ).drop("cand_text")
-
-    matched = F.col("matched_name")
-    final_text = F.when(F.col("is_for"), F.col("cand")).otherwise(
-        F.coalesce(matched, F.col("cand"))
-    )
-    words = F.filter(F.split(final_text, r"\s+"), lambda w: w != "")
-    n_words = F.size(words)
-    wc_boost = F.when((n_words >= 2) & (n_words <= 4), F.lit(0.15)).otherwise(0.0)
-    common_boost = 0.1 * C.common_name_part_count(words)
-    susp = C.any_term(final_text, vocab.SUSPICIOUS_SCORE_TERMS)
-    match_boost = F.when(
-        matched.isNotNull(), 0.20 + (0.25 * F.col("similarity"))
-    ).otherwise(0.0)
-    # Same left-assoc float order as the oracle: conf+match, +wc, +common, -susp
-    normal_score = (
-        (((F.col("conf") + match_boost) + wc_boost) + common_boost)
-        - F.when(susp, 0.40).otherwise(0.0)
-    )
-    score = F.when(F.col("is_for"), F.col("conf") + 0.3).otherwise(normal_score)
-
-    cand_lines = cand_lines.withColumn("final_text", final_text).withColumn(
-        "score", score
-    )
-
-    # Stable top-1: max score, ties broken by earliest line (stable-sort parity).
-    top1 = cand_lines.groupBy(*KEYS).agg(
-        F.max_by(
-            F.struct(
-                F.col("final_text").alias("name"), F.col("conf").alias("conf")
-            ),
-            F.struct(
-                F.col("score").alias("score"),
-                (-F.col("line_idx")).alias("neg_idx"),
-            ),
-        ).alias("top1")
-    )
-
-    per_turn = scan_hits.join(top1, KEYS, "full")
-
-    xxx = F.struct(F.lit("XXX").alias("name"), F.lit(0.0).alias("conf"))
-    best_text = F.col("top1.name")
-    best_conf = F.col("top1.conf")
-    gated = (
-        F.when(F.col("scan_hit").isNotNull(), F.col("scan_hit"))
-        .when(F.col("top1").isNull(), xxx)
-        .when(best_conf < threshold, xxx)
-        .when(~C.looks_like_real_name(best_text), xxx)
-        .otherwise(F.struct(best_text.alias("name"), best_conf.alias("conf")))
-    )
-    return per_turn.select(
-        *KEYS,
-        gated.getField("name").alias("issuer"),
-        gated.getField("conf").alias("issuer_conf"),
-    )
-
-
-# --------------------------------------------------------------------------
-# full pipeline
-# --------------------------------------------------------------------------
-
-RESULT_COLUMNS = [
-    "conv_id", "turn_idx", "main_text", "success", "error", "cheque_type",
-    "is_government", "government_category", "payee_rule", "payee_raw",
-    "payee_cleaned", "issuer", "issuer_conf", "confidence", "field_date",
-    "field_amount", "field_account", "micr_city", "micr_bank", "micr_serial",
-    "status", "opr_no", "file_mark",
-]
-
 
 def salted_repartition(df: DataFrame, num_partitions: int | None = None,
                        salt_buckets: int = 64) -> DataFrame:
@@ -823,78 +170,37 @@ def extract_pipeline(spark: SparkSession, transcripts: DataFrame,
                      drawer_dict: list[str],
                      threshold: float = oracle_issuer.DEFAULT_THRESHOLD_V1,
                      salt_buckets: int | None = None,
-                     engine: str = "arrow") -> DataFrame:
+                     engine: str = ENGINES[0]) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → extraction
-    records (RESULT_COLUMNS), one row per turn.
+    records (operators.extract.RESULT_SCHEMA), one row per turn.
 
     engine='arrow' (default): one Arrow-batched mapInPandas pass running
     the oracle per record inside the batch, with a per-task fuzzy memo
-    cache. Measured fastest end-to-end (PLANS.md round-3 engine shootout:
-    ~127k turns/s at 500k turns on 32 cores) — the branchy reference
-    grammars short-circuit aggressively per row, which per-row CPython
-    exploits better than any full-column evaluation.
+    cache. Measured fastest end-to-end — the branchy reference grammars
+    short-circuit aggressively per row, which per-row CPython exploits
+    better than any full-column evaluation.
 
     engine='vectorized': the same one-pass mapInPandas shape but the batch
     kernel is pandas/numpy SERIES operations — byte-level char counting,
     progressive predicate masks in kill order, token-deduped word stats,
     difflib once per distinct candidate (operators/vectorized.py). Zero
-    per-row Python in the hot path; measured ~0.65x the arrow engine here
-    (both engines sit on the same literal-scan memory wall, and pandas
-    object-dtype passes cost ~0.3us/row each), kept as the north-rule
-    "vectorized tokenize+classify" shape and for corpora where batch-level
-    vector work wins.
+    per-row Python in the hot path; measured at ~0.6x the arrow engine's
+    throughput (4 cores, sf0.1).
 
-    engine='hybrid': native Catalyst stages for classification / grammars /
-    cleaning fused into a single-branch plan (one scan, two shuffles, zero
-    joins — see _extract_hybrid) with exchange barriers sized so every
-    generated codegen method stays under janino's 64KB limit (compiled,
-    never interpreted), plus an Arrow-batched UDF ONLY for the difflib
-    fuzzy dictionary match (the one stage with no native equivalent). This
-    removes the per-row Python inner loop from the hot path entirely.
-
-    engine='native': the fully-decomposed barrier-free Catalyst plan.
-    Kept as the declarative reference implementation — proven bit-equal in
-    tests — but 10-30x slower than the others: the collapsed projections
-    blow janino's method limit and fall back to interpreted eval while
-    re-inlining heavy derivations per reference.
-
-    All engines are tested for per-turn equality against the pure-Python
+    Both engines are tested for per-turn equality against the pure-Python
     oracle (tests/test_pipeline_equality.py).
     """
+    if engine not in ENGINES:
+        raise ValueError(
+            f"unknown engine {engine!r}: expected one of {ENGINES}"
+        )
     if salt_buckets:
         transcripts = salted_repartition(transcripts, salt_buckets=salt_buckets)
     if engine == "arrow":
         return X.extract_turns_udf(spark, transcripts, drawer_dict, threshold)
-    if engine == "vectorized":
-        from cheque_ocr_project_spark.operators import vectorized as V
+    from cheque_ocr_project_spark.operators import vectorized as V
 
-        return V.extract_turns_vectorized(
-            spark, transcripts, drawer_dict, threshold
-        )
-    if engine == "hybrid":
-        return _extract_hybrid(spark, transcripts, drawer_dict, threshold)
-    if engine != "native":
-        raise ValueError(
-            f"unknown engine {engine!r}: expected one of "
-            "'arrow', 'vectorized', 'hybrid', 'native'"
-        )
-    turns = turn_level(with_main_content(transcripts))
-    issuer = issuer_stage(spark, turns, drawer_dict, threshold)
-    out = turns.join(issuer, KEYS, "left")
-    out = (
-        out.withColumn("issuer", F.coalesce(F.col("issuer"), F.lit("XXX")))
-        .withColumn("issuer_conf", F.coalesce(F.col("issuer_conf"), F.lit(0.0)))
-        .withColumn(
-            "status",
-            F.when(F.col("issuer") != "XXX", F.lit("AUTO-UPDATED")).otherwise(
-                F.lit("REJECTED")
-            ),
-        )
-        .withColumn("opr_no", F.lit(vocab.FIXED_OPR_NO))
-        .withColumn("file_mark", F.lit(vocab.FIXED_FILE_MARK))
-        .withColumn("main_text", F.col("content"))
-    )
-    return out.select(*RESULT_COLUMNS)
+    return V.extract_turns_vectorized(spark, transcripts, drawer_dict, threshold)
 
 
 def ordered(df: DataFrame) -> DataFrame:

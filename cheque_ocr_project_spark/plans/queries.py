@@ -2863,7 +2863,7 @@ def q_flagship_nofuzzy(spark, sf_dir):
     except the difflib fuzzy join (which empty-dict reduces to the identity)
     — and therefore fully SQL-provable. The fuzzy flagship keeps its
     rows-only driver check; its correctness evidence is the pytest equality
-    suite (native == arrow == pure-Python oracle)."""
+    suite (arrow == vectorized == pure-Python oracle)."""
     from cheque_ocr_project_spark.plans import pipeline as P
 
     transcripts = documents_as_transcripts(spark, sf_dir)

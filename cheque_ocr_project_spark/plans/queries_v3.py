@@ -302,15 +302,6 @@ FROM documents"""
 
 def q_issuer_simple(spark, sf_dir):
     u = F.upper(F.col("text"))
-    bank = None
-    for b in vocab.SIMPLE_BANK_NAMES:
-        bank = (
-            F.when(u.contains(b), F.lit(b))
-            if bank is None
-            else bank.when(u.contains(b), F.lit(b))
-        )
-    bank = bank.otherwise(F.lit(None).cast("string"))
-
     # r08: plain substring_index chain — substring_index(s, d, 1) already
     # returns s unchanged when d is absent, so the old
     # when(contains)/otherwise wrapper was a semantic no-op that TRIPLED
@@ -440,8 +431,8 @@ def q_govt_entity(spark, sf_dir):
 
     cand = F.substring(F.col("text"), 1, 60)
     u = F.upper(F.col("text"))
-    # Pre-materialize the payee section: _payable_to_government otherwise
-    # inlines the section when-chain into the ~90-literal entity scan per
+    # Pre-materialize the payee section: payable_to_govt would otherwise
+    # inline the section when-chain into the ~90-literal entity scan per
     # reference (the variant_keep_best projection-collapse trap — a vocab
     # widening would multiply it). Two stacked projections keep the heavy
     # derivation single-copy; CollapseProject keeps multi-referenced

@@ -84,16 +84,6 @@ def test_predicates_on_corpus(corpus_sdf):
         [predicates.is_junk_v1(s) for s in CORPUS],
         "is_junk_v1",
     )
-    _check(
-        _spark_vals(corpus_sdf, C.is_valid_drawer_v1(C.clean_text_v1(F.col("s")))),
-        [predicates.is_valid_drawer_v1(cleaning.clean_text_v1(s)) for s in CORPUS],
-        "is_valid_drawer_v1",
-    )
-    _check(
-        _spark_vals(corpus_sdf, C.looks_like_real_name(F.col("s"))),
-        [predicates.looks_like_real_name(s) for s in CORPUS],
-        "looks_like_real_name",
-    )
 
 
 def test_payee_grammar_on_corpus(corpus_sdf):

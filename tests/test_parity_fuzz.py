@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cheque_ocr_project_spark.functions import columns as C
-from cheque_ocr_project_spark.oracle import cleaning, classify, grammars, predicates
+from cheque_ocr_project_spark.oracle import cleaning, grammars, predicates
 
 _CHARS = (
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789"
@@ -103,19 +103,6 @@ def test_junk_garbage_parity(fuzz_sdf):
     _compare(got_garb, exp_garb, "is_garbage")
 
 
-def test_valid_drawer_parity(fuzz_sdf):
-    cleaned_cases = [cleaning.clean_text_v1(s) for s in CASES]
-    got = _spark_col(fuzz_sdf, C.is_valid_drawer_v1(C.clean_text_v1(F.col("s"))))
-    exp = [predicates.is_valid_drawer_v1(c) for c in cleaned_cases]
-    _compare(got, exp, "is_valid_drawer_v1")
-
-
-def test_looks_like_real_name_parity(fuzz_sdf):
-    got = _spark_col(fuzz_sdf, C.looks_like_real_name(F.col("s")))
-    exp = [predicates.looks_like_real_name(s) for s in CASES]
-    _compare(got, exp, "looks_like_real_name")
-
-
 def test_payee_extract_parity(fuzz_sdf):
     from cheque_ocr_project_spark.plans.pipeline import _payee_raw_col
 
@@ -139,12 +126,12 @@ def test_classify_parity(fuzz_sdf):
         "turn_idx", F.col("turn_idx").cast("int")
     )
     out = (
-        P.turn_level(P.with_main_content(sdf))
+        P.extract_pipeline(spark, sdf, [])
         .select("turn_idx", "cheque_type", "payee_rule")
         .orderBy("turn_idx")
         .collect()
     )
-    from cheque_ocr_project_spark.oracle import boilerplate, issuer, payee
+    from cheque_ocr_project_spark.oracle import payee
 
     for row in out:
         s = CASES[row.turn_idx]

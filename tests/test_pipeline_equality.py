@@ -1,4 +1,4 @@
-"""Per-turn equality: native Catalyst pipeline == oracle == UDF pipeline.
+"""Per-turn equality: every extraction engine == the pure-Python oracle.
 
 This is the graft's correctness gate (north rule: per-turn text equality
 under stable (conv_id, turn_idx) ordering).
@@ -9,7 +9,6 @@ import math
 import pandas as pd
 import pytest
 
-from cheque_ocr_project_spark.operators import extract as X
 from cheque_ocr_project_spark.plans import pipeline as P
 from tests.conftest import oracle_frame
 
@@ -60,14 +59,6 @@ def expected(fixture_data):
     return oracle_frame(transcripts, drawer_dict)
 
 
-def test_native_pipeline_matches_oracle(spark, transcripts_sdf, fixture_data, expected):
-    _t, _m, drawer_dict = fixture_data
-    out = P.extract_pipeline(
-        spark, transcripts_sdf, drawer_dict, engine="native"
-    ).toPandas()
-    _assert_frames_equal(out, expected, "native")
-
-
 def test_vectorized_pipeline_matches_oracle(spark, transcripts_sdf, fixture_data, expected):
     """The pandas-Series-vectorized batch kernel (zero per-row Python; the
     measured-fastest 'arrow' engine is the default) must match the oracle
@@ -77,16 +68,6 @@ def test_vectorized_pipeline_matches_oracle(spark, transcripts_sdf, fixture_data
         spark, transcripts_sdf, drawer_dict, engine="vectorized"
     ).toPandas()
     _assert_frames_equal(out, expected, "vectorized")
-
-
-def test_hybrid_pipeline_matches_oracle(spark, transcripts_sdf, fixture_data, expected):
-    """The barrier-staged native + Arrow-fuzzy-join engine (the fast
-    non-Python path) must match the oracle per turn."""
-    _t, _m, drawer_dict = fixture_data
-    out = P.extract_pipeline(
-        spark, transcripts_sdf, drawer_dict, engine="hybrid"
-    ).toPandas()
-    _assert_frames_equal(out, expected, "hybrid")
 
 
 def test_arrow_pipeline_matches_oracle(spark, transcripts_sdf, fixture_data, expected):
@@ -109,11 +90,10 @@ def test_stable_ordering(spark, transcripts_sdf, fixture_data):
 
 def test_normalize_separators_closes_exotic_ws_divergence(spark, fixture_data):
     """The documented residual (PLANS.md round 4): on \\x1c-\\x1f / NEL /
-    Unicode-space input the Python-oracle path and the Catalyst engines
-    tokenize differently. With the scan-boundary normalizer (job.py
-    --normalize-ws) applied to the input, every engine matches the oracle
-    on exactly those rows — closing the gap without touching the
-    reference-parity oracle itself."""
+    Unicode-space input Python and Java regex tokenize differently. With
+    the scan-boundary normalizer (job.py --normalize-ws) applied to the
+    input, every engine matches the oracle on exactly those rows — closing
+    the gap without touching the reference-parity oracle itself."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -156,8 +136,23 @@ def test_normalize_separators_closes_exotic_ws_divergence(spark, fixture_data):
         )
     )
     expected = oracle_frame(norm_pdf, drawer_dict)
-    for engine in ("native", "vectorized", "arrow"):
+    for engine in P.ENGINES:
         out = P.extract_pipeline(
             spark, norm_sdf, drawer_dict, engine=engine
         ).toPandas()
         _assert_frames_equal(out, expected, f"normalized-{engine}")
+
+
+def test_engine_list_is_the_single_source(spark, transcripts_sdf, capsys):
+    """Engine names outside P.ENGINES are rejected, and job.py --engine
+    offers exactly P.ENGINES (default first)."""
+    from cheque_ocr_project_spark import job
+
+    for engine in ("hybrid", "native"):
+        with pytest.raises(ValueError, match="unknown engine"):
+            P.extract_pipeline(spark, transcripts_sdf, [], engine=engine)
+    with pytest.raises(SystemExit):
+        job.build_args(["--help"])
+    assert "--engine {%s}" % ",".join(P.ENGINES) in capsys.readouterr().out
+    args = job.build_args(["--input", "in", "--output", "out"])
+    assert args.engine == P.ENGINES[0]
