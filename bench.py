@@ -42,7 +42,7 @@ QUIET_LOAD = float(
 # the sweep threshold (0.6*CPUS) exists to classify breadth passes after
 # the bench has been saturating the box for minutes, but the headline
 # rows are the record of truth the judge compares round-over-round, so
-# they are measured FIRST (before the engine shootout pollutes the 1-min
+# they are measured FIRST (before the flagship passes pollute the 1-min
 # average) with a short load-drain gate before each record.
 HEADLINE_QUIET_LOAD = float(
     os.environ.get("SPARK_GRAFT_HEADLINE_QUIET_LOAD",
@@ -155,27 +155,25 @@ def main() -> None:
     # the reading when comparing rounds). VERDICT r03 #8.
     pass_loads: dict[str, list[float]] = {}
 
-    # ONLY the engine-shootout records route to extract_pipeline over the
+    # ONLY the flagship_arrow record routes to extract_pipeline over the
     # replicated transcripts; registry names that happen to share the
     # "flagship_" prefix (flagship_nofuzzy, flagship_extract_v3, ...) are
     # ordinary contract queries and must time registry[rec] (ADVICE r05:
     # a bare prefix test silently timed the wrong computation for them).
-    ENGINE_RECORDS = {f"flagship_{eng}" for eng in P.ENGINES}
-    transcripts = None  # staged lazily, right before the engine shootout
+    FLAGSHIP = "flagship_arrow"
+    transcripts = None  # staged lazily, right before the flagship passes
     dd = Q.default_drawer_dict()
 
     def run_record(rec: str) -> None:
-        if rec in ENGINE_RECORDS:
-            df = P.extract_pipeline(
-                spark, transcripts, dd, engine=rec.removeprefix("flagship_")
-            )
+        if rec == FLAGSHIP:
+            df = P.extract_pipeline(spark, transcripts, dd)
         else:
             df = registry[rec](spark, SF_DIR)
         df.write.format("noop").mode("overwrite").save()
 
     def one_pass(rec: str) -> float:
         """THE single measured-pass implementation (load sample, timer,
-        noop sink). Every pass — engine shootout, headline, breadth
+        noop sink). Every pass — flagship, headline, breadth
         sweep, load-aware retime — goes through here, so the protocol
         cannot drift between copies."""
         pass_loads.setdefault(rec, []).append(round(os.getloadavg()[0], 2))
@@ -228,7 +226,7 @@ def main() -> None:
             pass
 
     # HEADLINE phase FIRST (VERDICT r06 #2): these are the round-over-round
-    # record of truth, so they run before the engine shootout saturates the
+    # record of truth, so they run before the flagship passes saturate the
     # box, each record gated on a quiet start.
     for name in HEADLINE:
         gate()
@@ -247,23 +245,20 @@ def main() -> None:
     transcripts = spark.read.parquet(staged)
     n_turns = transcripts.count()
     # warmup pass (python workers + codegen), then min-of-K measured runs
-    # (same noise rationale as timed()); every engine is measured so the
-    # engine trade-off is visible per round.
-    engine_secs: dict[str, float] = {}
-    for eng in P.ENGINES:
-        run_record(f"flagship_{eng}")       # warmup pass, untimed
-        gate()
-        for _ in range(3):
-            one_pass(f"flagship_{eng}")
+    # (same noise rationale as timed()).
+    run_record(FLAGSHIP)                    # warmup pass, untimed
+    gate()
+    for _ in range(3):
+        one_pass(FLAGSHIP)
 
     # Load-aware re-timing (VERDICT r04 #1, tightened r06 #2): any
-    # headline/engine record with NO pass under the headline ceiling gets
+    # headline/flagship record with NO pass under the headline ceiling gets
     # bounded extra passes (global budget, short pre-sleep for the spike
     # to drain); the final record tags every headline min with the load of
     # the pass that produced it, plus an explicit contaminated list when
     # the budget ran out while the box stayed hot.
     retime_budget = RETIME_BUDGET
-    retime_order = list(HEADLINE) + [f"flagship_{e}" for e in P.ENGINES]
+    retime_order = list(HEADLINE) + [FLAGSHIP]
     for rec in retime_order:
         for _ in range(2):                      # <= 2 retries per record
             if quiet_passes(rec) or retime_budget <= 0:
@@ -286,9 +281,7 @@ def main() -> None:
 
     for name in HEADLINE:
         timings[name] = accepted(name)[0]
-    for eng in P.ENGINES:
-        engine_secs[eng] = accepted(f"flagship_{eng}")[0]
-    flagship_sec = engine_secs["arrow"]
+    flagship_sec = accepted(FLAGSHIP)[0]
     timings["flagship_extract"] = round(flagship_sec, 3)
     turns_per_sec = n_turns / flagship_sec if flagship_sec else 0.0
 
@@ -347,10 +340,6 @@ def main() -> None:
                 "sf": sf,
                 "flagship_turns": n_turns,
                 "flagship_turns_per_sec": round(turns_per_sec, 1),
-                "flagship_engine_turns_per_sec": {
-                    eng: round(n_turns / sec, 1)
-                    for eng, sec in engine_secs.items()
-                },
                 "cpus": CPUS,
                 "load_avg": round(os.getloadavg()[0], 2),
                 "quiet_load_threshold": QUIET_LOAD,

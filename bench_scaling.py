@@ -7,19 +7,22 @@ local[N] and local[4N] — on the same deterministic input, in separate JVMs
 throughput at both and efficiency = (T_4N / T_N) / 4, appending the table
 to BENCH/BASELINE.md.
 
-Usage: python bench_scaling.py [--n 2] [--sf-dir /root/testdata/sf0.1]
+Usage: python bench_scaling.py [--n N] [--sf-dir DIR]
        [--replication 150] [--runs 2]
 
-Default N=2 -> 4N=8: the extraction stage pairs every Spark task thread
-with an Arrow python worker plus JVM serialization threads, so local[C]
-occupies >2C hardware threads — N=2 keeps BOTH levels comfortably inside
-this 32-core box (see BENCH/BASELINE.md for the oversubscription data).
+Default N = max(1, cores // 4), so 4N fits the host (1 -> 4 on 4 cores,
+8 -> 32 on 32). The extraction stage pairs every Spark task thread with an
+Arrow python worker plus JVM serialization threads, so local[C] occupies
+>2C hardware threads; a run whose 4N exceeds the core count is flagged
+"oversubscribed" in the summary and in BENCH/BASELINE.md (see there for
+the oversubscription data).
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import subprocess
 import sys
 from pathlib import Path
@@ -86,7 +89,7 @@ def run_level(cpus: int, sf_dir: str, replication: int) -> dict:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=2)
+    ap.add_argument("--n", type=int, default=max(1, os.cpu_count() // 4))
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--replication", type=int, default=150)
     ap.add_argument("--runs", type=int, default=2)
@@ -120,6 +123,7 @@ def main() -> None:
         "ambient_4N": n4.get("load_ambient"),
         "gate_timed_out": bool(n.get("gate_timed_out")
                                or n4.get("gate_timed_out")),
+        "oversubscribed": 4 * args.n > os.cpu_count(),
     }
     print(json.dumps(summary))
 
@@ -147,7 +151,9 @@ def main() -> None:
             f"  (1-min load at measure start — N leg: {summary['load_N']}, "
             f"4N leg: {summary['load_4N']}; ambient pre-warmup — N: "
             f"{summary['ambient_N']}, 4N: {summary['ambient_4N']}"
-            f"{'; GATE TIMED OUT hot' if summary['gate_timed_out'] else ''})\n"
+            f"{'; GATE TIMED OUT hot' if summary['gate_timed_out'] else ''}"
+            f"; oversubscribed: {summary['oversubscribed']} "
+            f"(4N={4 * args.n}, {os.cpu_count()} cores))\n"
         )
     print(f"appended to {md}")
 

@@ -20,8 +20,6 @@ import json
 
 
 def build_args(argv=None):
-    from cheque_ocr_project_spark.plans.pipeline import ENGINES
-
     ap = argparse.ArgumentParser(description="transcripts extraction job")
     ap.add_argument("--input", required=True,
                     help="transcripts source: Iceberg table name or parquet path")
@@ -32,7 +30,6 @@ def build_args(argv=None):
     ap.add_argument("--threshold", type=float, default=0.90)
     ap.add_argument("--n-buckets", type=int, default=64,
                     help="checkpoint/salt buckets (resume granularity)")
-    ap.add_argument("--engine", choices=ENGINES, default=ENGINES[0])
     ap.add_argument("--wave-size", type=int, default=16,
                     help="buckets committed per manifest wave (crash loses "
                          "at most one in-flight wave; each wave adds a fixed "
@@ -53,8 +50,8 @@ def build_args(argv=None):
                     default=True,
                     help="normalize exotic separators (\\x1c-\\x1f, NEL, "
                          "Unicode spaces) to plain spaces at the scan "
-                         "boundary, so the Python-oracle engines agree with "
-                         "the Catalyst/DuckDB twins of the same grammars "
+                         "boundary, so the Python-oracle extraction agrees "
+                         "with the Catalyst/DuckDB twins of the same grammars "
                          "beyond the ASCII input contract. "
                          "DEFAULT ON (VERDICT r05 #3) — real ingest should "
                          "not depend on callers knowing the flag; pass "
@@ -135,7 +132,7 @@ def main(argv=None) -> None:
 
     stats = checkpoint.run_with_checkpoint(
         spark, transcripts, drawer_dict, args.output,
-        n_buckets=args.n_buckets, threshold=args.threshold, engine=args.engine,
+        n_buckets=args.n_buckets, threshold=args.threshold,
         wave_size=args.wave_size, stage_input=args.stage_input,
     )
     print(json.dumps({"job": "extraction", **stats}))

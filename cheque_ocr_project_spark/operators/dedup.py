@@ -48,6 +48,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cheque_ocr_project_spark.operators.extract import par
+
 POLY_P = (1 << 31) - 1       # 2147483647, Mersenne prime
 POLY_MULT = 31
 SIMHASH_BITS = 62            # h1*2^31 + h2 < 2^62 — never negative in int64
@@ -229,17 +231,8 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                 "sk3": sks[3],
             })
 
-    src = _parallel(df.select(F.col(id_col), F.col(text_col)))
+    src = par(df.select(F.col(id_col), F.col(text_col)))
     return src.mapInPandas(batches, schema=schema)
-
-
-def _parallel(df: DataFrame) -> DataFrame:
-    """CPU-bound signature stages: at least one task per core (no-op at
-    real scale where input splits >> cores — same policy as
-    operators.extract._ensure_parallelism)."""
-    from cheque_ocr_project_spark.operators.extract import _ensure_parallelism
-
-    return _ensure_parallelism(df.sparkSession, df)
 
 
 def cap_bucket_size(banded: DataFrame, key_col: str,
@@ -669,24 +662,14 @@ def novelty_ingest_batch(spark, batch_df: DataFrame, table: str,
     crash between the append and the checkpoint commit) emit
     bit-identical verdicts: duplicate index rows are harmless to pair
     identity (the candidate join dedups on (id_a, id_b))."""
-    import shutil
-    import tempfile
-    import time as _time
-    from pathlib import Path
+    from cheque_ocr_project_spark.sources import scratch
 
     params = dict(num_perm=num_perm, bands=bands, shingle_k=shingle_k,
                   seed=seed)
     _recover_crashed_compaction(spark, table)
-    # bounded scratch: sweep hour-old banded stages from prior runs
-    tmp_root = Path(tempfile.gettempdir())
-    cutoff = _time.time() - 3600
-    for old in tmp_root.glob("novelty_banded_*"):
-        try:
-            if old.is_dir() and old.stat().st_mtime < cutoff:
-                shutil.rmtree(old, ignore_errors=True)
-        except OSError:
-            pass
-    stage = tempfile.mkdtemp(prefix="novelty_banded_")
+    # bounded scratch: sweep stale banded stages from prior runs
+    scratch.sweep("novelty_banded_")
+    stage = scratch.mkdtemp("novelty_banded_")
     minhash_banded(
         batch_df, id_col, text_col, num_perm, bands, shingle_k, seed
     ).write.mode("overwrite").parquet(stage)      # THE one banding action
@@ -886,7 +869,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                 sims = np.zeros(len(row_tokens), dtype=np.int64)
             yield pd.DataFrame({"id": pdf[id_col].values, "simhash": sims})
 
-    src = _parallel(df.select(F.col(id_col), F.col(text_col)))
+    src = par(df.select(F.col(id_col), F.col(text_col)))
     return src.mapInPandas(batches, schema=schema)
 
 
@@ -1048,7 +1031,7 @@ def winnowing_fingerprints(df: DataFrame, id_col: str, text_col: str,
                 fps.extend(sorted(sel))
             yield pd.DataFrame({"id": ids, "fp": fps})
 
-    src = _parallel(df.select(F.col(id_col), F.col(text_col)))
+    src = par(df.select(F.col(id_col), F.col(text_col)))
     return src.mapInPandas(batches, schema=schema)
 
 

@@ -1,11 +1,12 @@
-"""Arrow-batched extraction operators.
+"""Arrow-batched extraction operators, plus the scan-parallelism guard.
 
-``extract_turns_udf`` is the full-oracle mapInPandas path (the default
-'arrow' engine): it applies oracle.turn.extract_turn over Arrow record
-batches, with per-task state (the broadcast dictionary and a fuzzy-match
-memo) — the shape a model-holding UDF takes: per-worker lazy state,
-batch-in/batch-out. ``extract_turns_v3_udf`` does the same for the V3
-variant.
+``extract_turns_udf`` is the full-oracle mapInPandas path behind
+``plans.pipeline.extract_pipeline``: it applies oracle.turn.extract_turn
+over Arrow record batches, with per-task state (the broadcast dictionary
+and a fuzzy-match memo) — the shape a model-holding UDF takes: per-worker
+lazy state, batch-in/batch-out. ``extract_turns_v3_udf`` does the same for
+the V3 variant. ``par`` gives any per-row-heavy stage at least one task
+per core.
 """
 
 from __future__ import annotations
@@ -112,6 +113,17 @@ def _ensure_parallelism(spark: SparkSession, df: DataFrame) -> DataFrame:
         except Exception:
             pass
     return df.repartition(target)
+
+
+def par(df: DataFrame) -> DataFrame:
+    """``_ensure_parallelism`` on the DataFrame's own session, for the
+    per-row-heavy stages outside extraction: regex cascades, model and
+    signature batch loops, the n*k*dim similarity cross joins. A small-SF
+    input is ONE parquet file with ONE row group, so without it the whole
+    stage runs on a single task while the other cores idle (r08: payee_clean
+    sf1.0 9.9 s single-task). Apply it only where the output is a pure
+    function of each row, so partitioning cannot change results."""
+    return _ensure_parallelism(df.sparkSession, df)
 
 
 V3_SCHEMA = T.StructType([

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from cheque_ocr_project_spark.operators.extract import par
+
 _WORKER_STATE: dict = {}
 
 NER_SCHEMA = T.StructType([
@@ -91,16 +93,6 @@ def _load_ner():
     return run
 
 
-def _par(df: DataFrame) -> DataFrame:
-    """Scale-adaptive parallelism for the per-row model stages — a
-    single-file transcripts scan otherwise pins the whole Arrow batch
-    loop on one task (same policy as extract._ensure_parallelism; no-op
-    at real scale)."""
-    from cheque_ocr_project_spark.operators.extract import _ensure_parallelism
-
-    return _ensure_parallelism(df.sparkSession, df)
-
-
 def ner_entities(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
     """Per-turn named entities (U2 shape: lazy per-worker model init)."""
 
@@ -119,7 +111,7 @@ def ner_entities(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
                 "backend": backends,
             })
 
-    return _par(transcripts.select("conv_id", "turn_idx", "text")).mapInPandas(
+    return par(transcripts.select("conv_id", "turn_idx", "text")).mapInPandas(
         batches, schema=NER_SCHEMA
     )
 
@@ -201,7 +193,7 @@ def zero_shot_classify(spark: SparkSession, transcripts: DataFrame,
                 "label": labs, "score": scores, "backend": backends,
             })
 
-    return _par(transcripts.select("conv_id", "turn_idx", "text")).mapInPandas(
+    return par(transcripts.select("conv_id", "turn_idx", "text")).mapInPandas(
         batches, schema=ZERO_SHOT_SCHEMA
     )
 
@@ -274,7 +266,7 @@ def qa_extract(spark: SparkSession, transcripts: DataFrame,
                 "answer": answers, "score": scores, "backend": backends,
             })
 
-    return _par(transcripts.select("conv_id", "turn_idx", "text")).mapInPandas(
+    return par(transcripts.select("conv_id", "turn_idx", "text")).mapInPandas(
         batches, schema=QA_SCHEMA
     )
 
@@ -356,6 +348,6 @@ def t5_spell_correct(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
                 "corrected": outs, "spell_conf": confs, "backend": backends,
             })
 
-    return _par(transcripts.select("conv_id", "turn_idx", "text")).mapInPandas(
+    return par(transcripts.select("conv_id", "turn_idx", "text")).mapInPandas(
         batches, schema=T5_SCHEMA
     )

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cheque_ocr_project_spark.operators.extract import par
+
 
 def _cosine(vec_a, vec_b) -> "F.Column":
     dot = F.aggregate(
@@ -34,21 +36,11 @@ def _cosine(vec_a, vec_b) -> "F.Column":
     return F.try_divide(dot, na * nb)
 
 
-
-def _par(df: DataFrame) -> DataFrame:
-    """Scale-adaptive parallelism for the heavy corpus-side stages (the
-    n*k*dim cross joins and Arrow signature stages): a single-file
-    embeddings table otherwise runs them on ONE scan task — same policy
-    as operators.extract._ensure_parallelism, no-op at real scale."""
-    from cheque_ocr_project_spark.operators.extract import _ensure_parallelism
-
-    return _ensure_parallelism(df.sparkSession, df)
-
 def cosine_topk_bruteforce(emb: DataFrame, queries: DataFrame, k: int = 5,
                            id_col: str = "vec_id",
                            vec_col: str = "embedding") -> DataFrame:
     """queries(query_id, qvec) x emb → top-k neighbors per query."""
-    joined = _par(emb).crossJoin(F.broadcast(queries)).filter(
+    joined = par(emb).crossJoin(F.broadcast(queries)).filter(
         F.col(id_col) != F.col("query_id")
     )
     sim = F.round(_cosine(F.col(vec_col), F.col("qvec")), 4)
@@ -117,7 +109,7 @@ def hyperplane_signatures(spark: SparkSession, df: DataFrame, id_col: str,
                 keys.append([f"{b}:{int(c)}" for b, c in enumerate(row)])
             yield pd.DataFrame({"id": pdf[id_col].values, "bands": keys})
 
-    return _par(df.select(F.col(id_col), F.col(vec_col))).mapInPandas(
+    return par(df.select(F.col(id_col), F.col(vec_col))).mapInPandas(
         batches, schema)
 
 
@@ -231,7 +223,7 @@ def _nearest_pivots(df: DataFrame, pivots: DataFrame, id_col: str,
                     vec_col: str, n: int) -> DataFrame:
     """(id, pivot_id) for each row's n highest-cosine pivots (round-4 with
     pivot-id tiebreak — cross-engine-stable ranking)."""
-    joined = _par(df).crossJoin(F.broadcast(pivots))
+    joined = par(df).crossJoin(F.broadcast(pivots))
     sim = F.round(_cosine(F.col(vec_col), F.col("pvec")), 4)
     w = Window.partitionBy(id_col).orderBy(
         F.col("psim").desc(), F.col("pivot_id").asc()
@@ -349,7 +341,7 @@ def seed_assignment(emb: DataFrame, n_pivots: int = 8,
     )
     pivots = ivf_pivots(emb, n_pivots, id_col, vec_col)
     return (
-        _par(emb).crossJoin(F.broadcast(pivots))
+        par(emb).crossJoin(F.broadcast(pivots))
         .select(id_col, "pivot_id", dist0.alias("dist"))
         .groupBy(id_col)
         .agg(F.min(F.struct("dist", "pivot_id")).alias("m"))

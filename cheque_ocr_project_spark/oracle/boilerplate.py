@@ -9,7 +9,8 @@ and PDF-extracted blobs carried in `role='tool'` turns.
 
 The rules below are the graft's own deterministic definition (there is no
 text-payload equivalent in the reference to match bit-for-bit); they are the
-single source of truth for both the Spark vectorized UDF and the tests.
+single source of truth for both the Arrow-batched extraction UDF and the
+tests.
 
 Heuristic (per physical line of the payload):
   HTML path (tool == 'web_fetch' or the text contains a tag):

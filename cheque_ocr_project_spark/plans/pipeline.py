@@ -1,10 +1,9 @@
-"""Flagship extraction: the engine dispatch, plus the native Column builders
-the registry queries share.
+"""Flagship extraction, plus the native Column builders the registry
+queries share.
 
 ``extract_pipeline`` maps transcripts(conv_id, turn_idx, role, text, tool,
-ts) to one extraction record per turn through one of ``ENGINES``, both
-Arrow-batched ``mapInPandas`` passes over the Python oracle semantics
-(operators/extract.py, operators/vectorized.py).
+ts) to one extraction record per turn in one Arrow-batched ``mapInPandas``
+pass over the Python oracle (operators/extract.py).
 
 The Catalyst builders below (plain main-content strip, officer
 designation, government-entity rules, payee section and payee grammar)
@@ -23,9 +22,6 @@ from cheque_ocr_project_spark.functions import columns as C
 from cheque_ocr_project_spark.operators import extract as X
 from cheque_ocr_project_spark.oracle import issuer as oracle_issuer
 from cheque_ocr_project_spark.oracle import vocab
-
-# The extraction engines ``extract_pipeline`` accepts; the first is the default.
-ENGINES = ("arrow", "vectorized")
 
 # --------------------------------------------------------------------------
 # native column builders (oracle parity; imported by the registry queries)
@@ -150,7 +146,7 @@ def _payee_raw_col(u: Column) -> Column:
 
 
 # --------------------------------------------------------------------------
-# engine dispatch
+# flagship extraction
 # --------------------------------------------------------------------------
 
 def salted_repartition(df: DataFrame, num_partitions: int | None = None,
@@ -170,37 +166,22 @@ def extract_pipeline(spark: SparkSession, transcripts: DataFrame,
                      drawer_dict: list[str],
                      threshold: float = oracle_issuer.DEFAULT_THRESHOLD_V1,
                      salt_buckets: int | None = None,
-                     engine: str = ENGINES[0]) -> DataFrame:
+                     engine: str = "arrow") -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → extraction
     records (operators.extract.RESULT_SCHEMA), one row per turn.
 
-    engine='arrow' (default): one Arrow-batched mapInPandas pass running
-    the oracle per record inside the batch, with a per-task fuzzy memo
-    cache. Measured fastest end-to-end — the branchy reference grammars
-    short-circuit aggressively per row, which per-row CPython exploits
-    better than any full-column evaluation.
-
-    engine='vectorized': the same one-pass mapInPandas shape but the batch
-    kernel is pandas/numpy SERIES operations — byte-level char counting,
-    progressive predicate masks in kill order, token-deduped word stats,
-    difflib once per distinct candidate (operators/vectorized.py). Zero
-    per-row Python in the hot path; measured at ~0.6x the arrow engine's
-    throughput (4 cores, sf0.1).
-
-    Both engines are tested for per-turn equality against the pure-Python
-    oracle (tests/test_pipeline_equality.py).
+    One Arrow-batched mapInPandas pass runs the oracle per record inside
+    the batch, with a per-task fuzzy memo cache: the branchy reference
+    grammars short-circuit per row, which per-row CPython exploits better
+    than full-column evaluation. ``engine`` accepts only ``"arrow"``.
+    Tested for per-turn equality against the pure-Python oracle
+    (tests/test_pipeline_equality.py).
     """
-    if engine not in ENGINES:
-        raise ValueError(
-            f"unknown engine {engine!r}: expected one of {ENGINES}"
-        )
+    if engine != "arrow":
+        raise ValueError(f"unknown engine {engine!r}: expected 'arrow'")
     if salt_buckets:
         transcripts = salted_repartition(transcripts, salt_buckets=salt_buckets)
-    if engine == "arrow":
-        return X.extract_turns_udf(spark, transcripts, drawer_dict, threshold)
-    from cheque_ocr_project_spark.operators import vectorized as V
-
-    return V.extract_turns_vectorized(spark, transcripts, drawer_dict, threshold)
+    return X.extract_turns_udf(spark, transcripts, drawer_dict, threshold)
 
 
 def ordered(df: DataFrame) -> DataFrame:

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from cheque_ocr_project_spark.functions import columns as C
 from cheque_ocr_project_spark.functions import ducksql as D
+from cheque_ocr_project_spark.operators.extract import par
 from cheque_ocr_project_spark.oracle import vocab
 
 # ---------------------------------------------------------------------------
@@ -30,21 +31,6 @@ from cheque_ocr_project_spark.oracle import vocab
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _par(df: DataFrame) -> DataFrame:
-    """Scale-adaptive scan parallelism for per-row-HEAVY projections
-    (regex cascades, long literal chains): a small-SF documents table is
-    ONE parquet file with ONE row group, so without this the entire
-    expression cascade runs on a single task while the other cores idle
-    (r08 measurement: payee_clean sf1.0 9.9s single-task). Same policy as
-    operators.extract._ensure_parallelism — decided from file-source
-    metadata only, a pure no-op at real scale where input splits >=
-    cores. Applied ONLY to row-wise projections (output is a pure
-    function of each row), so partitioning cannot affect results."""
-    from cheque_ocr_project_spark.operators.extract import _ensure_parallelism
-
-    return _ensure_parallelism(df.sparkSession, df)
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,7 +67,7 @@ _TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0b\f\r]"
 # ---------------------------------------------------------------------------
 
 def q_clean_text(spark, sf_dir):
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id", C.clean_text_v1(F.col("text")).alias("cleaned")
     )
 
@@ -97,7 +83,7 @@ def sql_clean_text():
 # ---------------------------------------------------------------------------
 
 def q_junk_flag(spark, sf_dir):
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id",
         C.is_junk_v1(F.upper(F.col("text"))).alias("is_junk"),
         C.is_garbage(F.upper(F.col("text"))).alias("is_garbage"),
@@ -148,7 +134,7 @@ def q_classify(spark, sf_dir):
         .when(is_dd, 0.95).when(is_mc, 0.95).when(crossed, 0.85)
         .when(is_self, 0.8).otherwise(0.7)
     )
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id",
         ctype.alias("cheque_type"),
         conf.alias("type_conf"),
@@ -207,7 +193,7 @@ def q_payee_extract(spark, sf_dir):
     # the pipeline's _payee_raw_col (pure prefilter, regex authoritative).
     from cheque_ocr_project_spark.plans.pipeline import _PAYEE_GUARDS
 
-    staged = _par(_docs(spark, sf_dir)).select(
+    staged = par(_docs(spark, sf_dir)).select(
         "doc_id",
         F.regexp_replace(F.upper(F.col("text")), r"[\n\r]+$", "").alias("__u"),
     )
@@ -266,7 +252,7 @@ def q_payee_clean(spark, sf_dir):
     # whole documents — bound the input like the reference bounds model
     # inputs (ai_processor.py:159 text[:512])
     cand = F.substring(F.col("text"), 1, 80)
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id", C.clean_payee(cand).alias("payee_cleaned")
     )
 
@@ -293,7 +279,7 @@ def q_spelling_correct(spark, sf_dir):
     out = F.when(
         F.col("text").isNull() | (F.length("text") == 0), F.lit("UNKNOWN")
     ).otherwise(F.when(F.length(s) >= 3, s).otherwise(F.lit("UNKNOWN")))
-    return _par(_docs(spark, sf_dir)).select("doc_id", out.alias("corrected"))
+    return par(_docs(spark, sf_dir)).select("doc_id", out.alias("corrected"))
 
 
 def sql_spelling_correct():
@@ -329,7 +315,7 @@ def q_field_grammars(spark, sf_dir):
     account = F.when(t.rlike(_ACCOUNT_PAT), F.regexp_extract(t, _ACCOUNT_PAT, 1))
     micr = vocab.MICR_PATTERN
     has_micr = t.rlike(micr)
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id",
         date.alias("field_date"),
         amount.alias("field_amount"),
@@ -370,7 +356,7 @@ def q_token_stats(spark, sf_dir):
     t = F.col("text")
     ws_tokens = F.size(F.regexp_extract_all(t, F.lit(r"\S+"), F.lit(0)))
     bpe_tokens = F.size(F.regexp_extract_all(t, F.lit(_TOKEN_PATTERN), F.lit(0)))
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id",
         ws_tokens.alias("ws_tokens"),
         bpe_tokens.alias("bpe_tokens"),
@@ -398,7 +384,7 @@ def q_quality_score(spark, sf_dir):
     quality = F.round(
         0.4 * alpha_ratio + 0.3 * stop_ratio + 0.3 * (1.0 - punct_ratio), 6
     )
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id",
         F.round(alpha_ratio, 6).alias("alpha_ratio"),
         F.round(punct_ratio, 6).alias("punct_ratio"),
@@ -491,7 +477,7 @@ def q_pii_redact(spark, sf_dir):
         F.regexp_extract_all(after_email, F.lit(PII_NUMBER_RX), F.lit(0))
     )
     redacted = F.regexp_replace(after_email, PII_NUMBER_RX, "<NUM>")
-    return _par(_docs_with_pii(spark, sf_dir)).select(
+    return par(_docs_with_pii(spark, sf_dir)).select(
         "doc_id",
         n_emails.alias("n_emails"),
         n_numbers.alias("n_numbers"),
@@ -537,7 +523,7 @@ def q_doc_chunks(spark, sf_dir):
         (F.greatest(n - CHUNK_TOKENS, F.lit(0)) + CHUNK_STRIDE - 1)
         / F.lit(CHUNK_STRIDE)
     ).cast("int")
-    d = _par(_docs(spark, sf_dir)).select(
+    d = par(_docs(spark, sf_dir)).select(
         "doc_id", tokens.alias("toks"), n.alias("n_tokens"),
         F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
     )
@@ -665,7 +651,7 @@ def q_vocab_topk(spark, sf_dir):
     TakeOrderedAndProject (per-partition top-k, tiny driver merge) — the
     corpus never funnels through one sort task. Tie-break (count desc,
     term asc) matches the oracle exactly."""
-    d = _par(_docs(spark, sf_dir)).select(
+    d = par(_docs(spark, sf_dir)).select(
         F.explode(
             F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0))
         ).alias("term")
@@ -701,7 +687,7 @@ def q_oov_rate(spark, sf_dir):
     skewed term key; the per-doc agg re-combines map-side. ppm uses the
     cross-multiplied integer form (oov * 1e6 div n), exact and safe to
     ~9.2e12 tokens per document."""
-    toks = _par(_docs(spark, sf_dir)).select(
+    toks = par(_docs(spark, sf_dir)).select(
         "doc_id",
         F.explode(
             F.regexp_extract_all(
@@ -785,7 +771,7 @@ def q_token_freq_buckets(spark, sf_dir):
     fits); per-doc agg re-combines map-side; the corpus total rides a
     1-row broadcast cross join; the documents join-back is on the
     high-cardinality doc_id."""
-    docs = _par(_docs(spark, sf_dir))
+    docs = par(_docs(spark, sf_dir))
     toks = docs.select(
         "doc_id",
         F.explode(
@@ -868,7 +854,7 @@ def q_source_token_budget(spark, sf_dir):
         F.regexp_extract_all(F.col("text"), F.lit(r"[^ \t\n\x0B\f\r]+"), F.lit(0))
     )
     per_src = (
-        _par(_docs(spark, sf_dir)).select("source", toks.alias("t"))
+        par(_docs(spark, sf_dir)).select("source", toks.alias("t"))
         .groupBy("source")
         .agg(F.sum("t").alias("tokens"), F.count(F.lit(1)).alias("n_docs"))
     )
@@ -937,7 +923,7 @@ def q_tfidf_topk(spark, sf_dir):
     distinct (doc, term) pairs, never raw token rows. The config is
     therefore pinned where the contract session is prepared
     (__spark_entry__._pin_session_confs) and in tests/conftest.py, not assumed."""
-    d = _par(_docs(spark, sf_dir)).select(
+    d = par(_docs(spark, sf_dir)).select(
         "doc_id",
         F.explode(
             F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0))
@@ -1013,7 +999,7 @@ def q_boilerplate_ngrams(spark, sf_dir):
     stage into an otherwise pure-JVM plan — the oracle checks the
     semantics; the hash is a mechanical key substitution."""
     toks = (
-        _par(_docs(spark, sf_dir))
+        par(_docs(spark, sf_dir))
         .select(
             "doc_id",
             F.regexp_extract_all(
@@ -1110,7 +1096,7 @@ def q_remove_boilerplate(spark, sf_dir):
     has no whale-partition sort; span order inside one doc is bounded by
     doc length). Final left joins restore zero-token docs with
     n_spans=0 and empty text_clean."""
-    toks = _par(_docs(spark, sf_dir)).select(
+    toks = par(_docs(spark, sf_dir)).select(
         "doc_id",
         F.regexp_extract_all(
             F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
@@ -1224,7 +1210,7 @@ def q_collocations_topk(spark, sf_dir):
     for the same expression tree (the tfidf_topk doctrine — libm is
     the non-portable part, not arithmetic), unbounded in range, and
     collisions just become deterministic bigram-ordered ties."""
-    toks = _par(_docs(spark, sf_dir)).select(
+    toks = par(_docs(spark, sf_dir)).select(
         F.regexp_extract_all(
             F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
         ).alias("t")
@@ -1304,7 +1290,7 @@ def q_lang_id(spark, sf_dir):
     n = F.size(tokens)
     ratio = F.when(n > 0, stop_hits / n).otherwise(0.0)
     lang = F.when(ratio >= 0.05, "en").otherwise("unk")
-    return _par(_docs(spark, sf_dir)).select("doc_id", lang.alias("lang_pred"))
+    return par(_docs(spark, sf_dir)).select("doc_id", lang.alias("lang_pred"))
 
 
 def sql_lang_id():
@@ -1321,7 +1307,7 @@ FROM documents"""
 
 def q_fingerprint(spark, sf_dir):
     norm = F.trim(F.regexp_replace(F.upper(F.col("text")), r"\s+", " "))
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id", F.md5(norm).alias("fingerprint")
     )
 
@@ -1455,7 +1441,7 @@ def q_last_tokens(spark, sf_dir):
     tokens = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0))
     last3 = F.array_join(F.slice(tokens, -3, 3), " ")
     return (
-        _par(_docs(spark, sf_dir))
+        par(_docs(spark, sf_dir))
         .filter(F.size(tokens) >= 3)
         .select("doc_id", last3.alias("last_tokens"))
     )
@@ -1862,27 +1848,17 @@ def q_streaming_novelty(spark, sf_dir):
     trigger/poll quantization) — see bench.py ADAPTER_TIMED."""
     import os
     import shutil
-    import tempfile
-    import time as _time
-    from pathlib import Path
 
+    from cheque_ocr_project_spark.sources import scratch
     from cheque_ocr_project_spark.streaming import stream as ST
 
-    # bounded scratch (ADVICE r07): sweep hour-old staging dirs from
-    # prior invocations — mirrors the novelty_banded_* sweep — and
-    # remove each part dir as soon as its one file is moved out.
-    tmp_root = Path(tempfile.gettempdir())
-    cutoff = _time.time() - 3600
-    for prefix in ("novelty_stream_", "novelty_part"):
-        for old in tmp_root.glob(f"{prefix}*"):
-            try:
-                if old.is_dir() and old.stat().st_mtime < cutoff:
-                    shutil.rmtree(old, ignore_errors=True)
-            except OSError:
-                pass
+    # bounded scratch (ADVICE r07): sweep stale staging dirs from prior
+    # invocations and remove each part dir as soon as its one file is
+    # moved out.
+    scratch.sweep("novelty_stream_", "novelty_part")
 
     docs = _docs_with_near_dups(spark, sf_dir).select("doc_id", "text")
-    stage = tempfile.mkdtemp(prefix="novelty_stream_in_")
+    stage = scratch.mkdtemp("novelty_stream_in_")
     base = 1_600_000_000
     for i, (lo, hi) in enumerate(NOVELTY_BATCH_BOUNDS):
         b = docs
@@ -1890,7 +1866,7 @@ def q_streaming_novelty(spark, sf_dir):
             b = b.filter(F.col("doc_id") >= lo)
         if hi is not None:
             b = b.filter(F.col("doc_id") < hi)
-        part = tempfile.mkdtemp(prefix=f"novelty_part{i}_")
+        part = scratch.mkdtemp(f"novelty_part{i}_")
         b.coalesce(1).write.mode("overwrite").parquet(part)
         src = next(
             f for f in os.listdir(part)
@@ -1904,8 +1880,8 @@ def q_streaming_novelty(spark, sf_dir):
     t = MINHASH_STREAM_NOVELTY_TABLE
     _drop_table_and_location(spark, t)
     _drop_table_and_location(spark, f"{t}__delta")
-    out_dir = tempfile.mkdtemp(prefix="novelty_stream_out_")
-    ckpt = tempfile.mkdtemp(prefix="novelty_stream_ckpt_")
+    out_dir = scratch.mkdtemp("novelty_stream_out_")
+    ckpt = scratch.mkdtemp("novelty_stream_ckpt_")
     q = ST.stream_novelty(spark, stage, out_dir, ckpt, t)
     if not q.awaitTermination(240):
         q.stop()
@@ -2134,7 +2110,7 @@ def q_containment_pairs(spark, sf_dir):
     shuffle); per-doc totals are counted on the same filtered relation
     so the ratio is consistent. The pair agg and both count aggs are
     map-side combined; the ppm is exact cross-multiplied integer."""
-    toks = _par(_docs_with_near_dups(spark, sf_dir)).select(
+    toks = par(_docs_with_near_dups(spark, sf_dir)).select(
         "doc_id",
         F.regexp_extract_all(
             F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
@@ -2863,7 +2839,7 @@ def q_flagship_nofuzzy(spark, sf_dir):
     except the difflib fuzzy join (which empty-dict reduces to the identity)
     — and therefore fully SQL-provable. The fuzzy flagship keeps its
     rows-only driver check; its correctness evidence is the pytest equality
-    suite (arrow == vectorized == pure-Python oracle)."""
+    suite (arrow == pure-Python oracle)."""
     from cheque_ocr_project_spark.plans import pipeline as P
 
     transcripts = documents_as_transcripts(spark, sf_dir)
@@ -3085,7 +3061,7 @@ def q_pack_sequences(spark, sf_dir):
     # rows-branch scan (chunk is a window partition key there), the two
     # exchange children differ, and ReuseExchange is lost (= corpus read
     # twice). doc_id is never null in the contract schema.
-    d = _par(_docs(spark, sf_dir)).select(
+    d = par(_docs(spark, sf_dir)).select(
         "doc_id", "source", ws_tokens.alias("n_tokens"),
         F.coalesce(F.expr(f"doc_id div {PACK_CHUNK}"), F.lit(-1))
         .alias("chunk"),
@@ -3195,7 +3171,7 @@ def q_gopher_quality(spark, sf_dir):
     keep = None
     for g in gates.values():
         keep = g if keep is None else (keep & g)
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id", wc.alias("word_count"),
         stop_hits.alias("stop_hits"),
         *[c.alias(n) for n, c in gates.items()],
@@ -3265,7 +3241,7 @@ def q_rep_top_bigram(spark, sf_dir):
         F.slice(words, 1, n - 1), F.slice(words, 2, n - 1),
         lambda a, b: F.concat_ws(" ", a, b),
     )
-    d = _par(_docs(spark, sf_dir)).select(
+    d = par(_docs(spark, sf_dir)).select(
         "doc_id", F.explode(bigrams).alias("gram")
     )
     cnt = d.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("cnt"))
@@ -3310,7 +3286,7 @@ def _docs_with_dup_lines(spark, sf_dir) -> DataFrame:
         F.col("doc_id") % 4 == 0,
         F.concat(F.lit("\nsection "), (F.col("doc_id") % 100).cast("string")),
     ).otherwise("")
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id", F.concat(F.col("text"), section, footer).alias("text")
     )
 
@@ -4466,7 +4442,7 @@ def q_corpus_filter_v3(spark, sf_dir):
     ).otherwise(True)
 
     gated = (
-        _par(_docs(spark, sf_dir))
+        par(_docs(spark, sf_dir))
         .filter((quality >= 0.5) & (stop_ratio >= 0.05) & gopher_ok & rep_ok)
         .select(
             "doc_id", "text",
@@ -4598,25 +4574,16 @@ def q_corpus_job_survivors(spark, sf_dir):
     a fixed shared path would let a concurrent invocation (the bench
     sweep racing a driver contract check) rmtree the survivors parquet
     out from under the other's lazily-collected plan. Disk stays
-    bounded by sweeping SIBLING run dirs older than an hour (old
-    enough that no live plan still reads them); nothing is ever
+    bounded by sweeping SIBLING run dirs older than an hour whose
+    creating process is gone (sources.scratch.sweep); nothing is ever
     removed after building the return value."""
-    import shutil
-    import tempfile
-    import time as _time
     from pathlib import Path
 
     from cheque_ocr_project_spark import corpus_job
+    from cheque_ocr_project_spark.sources import scratch
 
-    tmp = Path(tempfile.gettempdir())
-    cutoff = _time.time() - 3600
-    for old in tmp.glob("corpus_job_contract_*"):
-        try:
-            if old.is_dir() and old.stat().st_mtime < cutoff:
-                shutil.rmtree(old, ignore_errors=True)
-        except OSError:
-            pass  # a concurrent sweep already removed it
-    out = Path(tempfile.mkdtemp(prefix="corpus_job_contract_"))
+    scratch.sweep("corpus_job_contract_")
+    out = Path(scratch.mkdtemp("corpus_job_contract_"))
     corpus_job.run(spark, sf_dir, str(out))
     return spark.read.parquet(str(out / "survivors" / "documents.parquet"))
 
@@ -4677,7 +4644,7 @@ def q_variant_keep_best(spark, sf_dir):
     )
     u = F.upper(F.array_join(lines, " "))
     staged = (
-        _par(_docs(spark, sf_dir))
+        par(_docs(spark, sf_dir))
         .select("doc_id", chosen.alias("ch"))
         .select(
             "doc_id",
@@ -4859,8 +4826,8 @@ def q_model_ensemble(spark, sf_dir):
     # r08: stage the four component signals once, then combine from
     # attribute refs — the inline form re-evaluated every heavy HOF
     # component a second time inside the ensemble expression (same
-    # doubles either way); _par parallelizes the single-file scan.
-    staged = _par(d).select(
+    # doubles either way); par parallelizes the single-file scan.
+    staged = par(d).select(
         "conv_id", "turn_idx",
         ocr.alias("ocr_conf"), ner.alias("ner_conf"),
         context.alias("context_conf"), spelling.alias("spelling_conf"),

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from cheque_ocr_project_spark.functions import columns as C
 from cheque_ocr_project_spark.functions import ducksql as D
+from cheque_ocr_project_spark.operators.extract import par
 from cheque_ocr_project_spark.oracle import vocab
 
 
@@ -22,22 +23,12 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _par(df: DataFrame) -> DataFrame:
-    """Scale-adaptive scan parallelism for per-row-heavy row-wise
-    projections — see plans.queries._par (single-file/single-row-group
-    small-SF scans otherwise run the whole regex cascade on ONE task);
-    no-op at real scale where input splits >= cores."""
-    from cheque_ocr_project_spark.operators.extract import _ensure_parallelism
-
-    return _ensure_parallelism(df.sparkSession, df)
-
-
 # ---------------------------------------------------------------------------
 # P2: clean_text v3
 # ---------------------------------------------------------------------------
 
 def q_clean_text_v3(spark, sf_dir):
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id", C.clean_text_v3(F.col("text")).alias("cleaned_v3")
     )
 
@@ -153,7 +144,7 @@ def _valid_business_v3_col(t: Column) -> Column:
 
 def q_junk_v3(spark, sf_dir):
     u = F.upper(F.col("text"))
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id",
         _junk_v3_col(u).alias("is_junk_v3"),
         _valid_business_v3_col(F.upper(F.col("text"))).alias("is_valid_business_v3"),
@@ -189,7 +180,7 @@ FROM documents"""
 
 def q_remove_prefixes(spark, sf_dir):
     cand = F.upper(F.substring(F.col("text"), 1, 60))
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id", C.remove_prefixes_v3(cand).alias("deprefixed")
     )
 
@@ -217,7 +208,7 @@ def q_issuer_for_grammar(spark, sf_dir):
         cand = F.substring_index(cand, marker, 1)
     cand = F.substring_index(cand, "\n", 1)
     out = F.when(u.contains("FOR") & (F.length(cand) > 3), cand)
-    return _par(_docs(spark, sf_dir)).select("doc_id", out.alias("for_candidate"))
+    return par(_docs(spark, sf_dir)).select("doc_id", out.alias("for_candidate"))
 
 
 def sql_issuer_for_grammar():
@@ -268,7 +259,7 @@ def q_issuer_auth_account_grammar(spark, sf_dir):
             )
         return chain.otherwise(F.lit(None).cast("string"))
 
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id",
         first_match(
             vocab.AUTH_SIGNATORY_PATTERNS,
@@ -318,7 +309,7 @@ def q_issuer_simple(spark, sf_dir):
     # materialize the multi-referenced derivations once per row (words is
     # referenced 3x, cleaned 2x, for_result 2x — inlined, each reference
     # would re-run the whole split/regex chain)
-    staged = _par(_docs(spark, sf_dir)).select(
+    staged = par(_docs(spark, sf_dir)).select(
         "doc_id", "text",
         u.alias("__u"),
         words.alias("__words"),
@@ -385,7 +376,7 @@ FROM documents"""
 
 def q_score_name(spark, sf_dir):
     cand = F.substring(F.col("text"), 1, 40)
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id", F.round(C.score_name(cand), 6).alias("name_score")
     )
 
@@ -437,7 +428,7 @@ def q_govt_entity(spark, sf_dir):
     # widening would multiply it). Two stacked projections keep the heavy
     # derivation single-copy; CollapseProject keeps multi-referenced
     # non-cheap aliases materialized.
-    staged = _par(_docs(spark, sf_dir)).select(
+    staged = par(_docs(spark, sf_dir)).select(
         "doc_id",
         _is_government_entity(cand).alias("is_govt_entity"),
         _payee_section(u).alias("payee_section"),
@@ -477,7 +468,7 @@ def q_officer_designation(spark, sf_dir):
     from cheque_ocr_project_spark.plans.pipeline import _designation_literal
 
     u = F.upper(F.col("text"))
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id", _designation_literal(u).alias("designation")
     )
 
@@ -507,7 +498,7 @@ def q_filename_fields(spark, sf_dir):
         fname.rlike(r"\d+"), F.regexp_extract(fname, r"(\d+)", 1)
     ).otherwise("0")
     date = F.when(fname.rlike(r"(\d{8})"), F.regexp_extract(fname, r"(\d{8})", 1))
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id", fname.alias("filename"),
         amount.alias("amount"), account.alias("account"), date.alias("file_date"),
     )
@@ -576,7 +567,7 @@ def q_clean_text_v2(spark, sf_dir):
     s = F.regexp_replace(s, r"[^A-Z0-9 .,&/-]", " ")
     s = F.trim(F.regexp_replace(s, r"\s+", " "))
     out = F.when(t.isNull() | (F.length(t) == 0), F.lit("XXX")).otherwise(s)
-    return _par(_docs(spark, sf_dir)).select("doc_id", out.alias("cleaned_v2"))
+    return par(_docs(spark, sf_dir)).select("doc_id", out.alias("cleaned_v2"))
 
 
 def sql_clean_text_v2():
@@ -671,7 +662,7 @@ def q_fast_pattern_extract(spark, sf_dir):
     # the '\s+$' alternations of the FAST_* patterns). The normalized text
     # is materialized as its own projection so the ~12 pattern references
     # don't each re-inline the regexp_replace (CollapseProject).
-    staged = _par(_docs(spark, sf_dir)).select(
+    staged = par(_docs(spark, sf_dir)).select(
         "doc_id",
         F.regexp_replace(F.upper(F.col("text")), r"[\n\r]+$", "").alias("__u"),
     )
@@ -733,7 +724,7 @@ def q_for_first3(spark, sf_dir):
     out = F.when(
         u.contains("FOR") & (F.size(F.split(u, "FOR")) > 1), first3
     ).otherwise(F.lit("UNKNOWN"))
-    return _par(_docs(spark, sf_dir)).select("doc_id", out.alias("for_first3"))
+    return par(_docs(spark, sf_dir)).select("doc_id", out.alias("for_first3"))
 
 
 def sql_for_first3():
@@ -838,7 +829,7 @@ SELECT c_custkey, c_name, total_spent, rank FROM (
 def q_main_content_plain(spark, sf_dir):
     from cheque_ocr_project_spark.plans.pipeline import _plain_main
 
-    return _par(_docs(spark, sf_dir)).select(
+    return par(_docs(spark, sf_dir)).select(
         "doc_id", _plain_main(F.col("text")).alias("main_text")
     )
 

@@ -1,3 +1,5 @@
+import math
+
 import pandas as pd
 import pytest
 from pyspark.sql import SparkSession
@@ -69,3 +71,44 @@ def oracle_frame(transcripts: pd.DataFrame, drawer_dict) -> pd.DataFrame:
         rows.append(rec)
     cols = ["conv_id", "turn_idx", *oracle_turn.RESULT_FIELDS]
     return pd.DataFrame(rows, columns=cols)
+
+
+_KEY = ["conv_id", "turn_idx"]
+_FLOAT_COLS = {"issuer_conf", "confidence"}
+
+
+def _normalize(df: pd.DataFrame) -> pd.DataFrame:
+    df = df.sort_values(_KEY).reset_index(drop=True)
+    return df[sorted(df.columns)]
+
+
+def assert_frames_equal(actual: pd.DataFrame, expected: pd.DataFrame, tag: str):
+    actual = _normalize(actual)
+    expected = _normalize(expected)
+    assert len(actual) == len(expected), f"{tag}: row count mismatch"
+    mismatch_report = []
+    for col in expected.columns:
+        a, e = actual[col], expected[col]
+        if col in _FLOAT_COLS:
+            bad = [
+                i
+                for i, (x, y) in enumerate(zip(a, e))
+                if not (
+                    (pd.isna(x) and pd.isna(y))
+                    or (not pd.isna(x) and not pd.isna(y) and math.isclose(x, y, rel_tol=0, abs_tol=1e-12))
+                )
+            ]
+        else:
+            bad = [
+                i
+                for i, (x, y) in enumerate(zip(a, e))
+                if not ((pd.isna(x) and pd.isna(y)) or x == y)
+            ]
+        if bad:
+            i = bad[0]
+            mismatch_report.append(
+                f"{tag}: column {col}: {len(bad)} mismatches; first at "
+                f"{expected.loc[i, 'conv_id']}/{expected.loc[i, 'turn_idx']}: "
+                f"actual={actual.loc[i, col]!r} expected={expected.loc[i, col]!r}"
+            )
+    assert not mismatch_report, "\n".join(mismatch_report)

@@ -1,6 +1,7 @@
 """Parity fuzz: oracle (Python re) vs native Column builders (Java regex)
 on adversarial generated strings — the proof that promoting grammars to
-native expressions preserved semantics beyond the curated fixture."""
+native expressions preserved semantics beyond the curated fixture — and
+the whole extraction pipeline vs oracle.turn on the same strings."""
 
 import random
 
@@ -10,6 +11,7 @@ from pyspark.sql import functions as F
 
 from cheque_ocr_project_spark.functions import columns as C
 from cheque_ocr_project_spark.oracle import cleaning, grammars, predicates
+from tests.conftest import assert_frames_equal, oracle_frame
 
 _CHARS = (
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789"
@@ -111,104 +113,70 @@ def test_payee_extract_parity(fuzz_sdf):
     _compare(got, exp, "payee_extract")
 
 
-def test_classify_parity(fuzz_sdf):
-    from cheque_ocr_project_spark.plans import pipeline as P
+# Unicode / whitespace edges beyond the ASCII fuzz alphabet.
+UNICODE_CASES = [
+    "FOR R\u00c9SUM\u00c9 TRADERS",   # unicode uppercase beyond ASCII
+    "PAY TO \u0131STANBUL CO",         # dotless i (unicode upper edge)
+    "\u00a0 NBSP LEADING", "TAB\tSEP", "A.B.C.D",
+]
 
+# role='tool' payloads (FIXTURES.md section 1): HTML main content wrapped in
+# nav/script/footer boilerplate of varying link density, and PDF blobs with
+# repeated page headers and page numbers.
+_NAV = ('<div class="nav"><a href="/home">Home</a> '
+        '<a href="/about">About</a></div>')
+TOOL_CASES = [
+    ("web_fetch", "\n".join([
+        _NAV, "<script>var t = init();</script>",
+        "<p>PAY TO : M/S SHARMA STEEL INDUSTRIES PVT LTD for the invoice "
+        "settled this quarter</p>",
+        "<p>FOR GUPTA TRADERS AUTHORISED SIGNATORY as per the mandate on "
+        "record</p>",
+        '<footer><a href="/terms">Terms</a> | <a href="/p">Privacy</a></footer>',
+    ])),
+    ("web_fetch", "\n".join([
+        "<style>.x { color: #888; }</style>",
+        '<p>Read <a href="/a">the full cheque scan archive listing</a> '
+        "here</p>",
+        "<div>DEMAND DRAFT PAYABLE AT PAR Rs. 1,25,000.00/- Date: "
+        "23.02.2026</div>",
+    ])),
+    (None, "<p>GOVERNMENT ACCOUNT NOT TRANSFERABLE PAY AND ACCOUNTS "
+           "OFFICE DDO</p>\n<p>ORDER OF KUMAR ENTERPRISES</p>"),
+    ("pdf_extract", "\n".join([
+        "QUARTERLY ACCOUNT STATEMENT",
+        "FAVOUR OF 5HARMA 5TEEL 1NDUSTRIES as recorded in the ledger",
+        "Page 1", "QUARTERLY ACCOUNT STATEMENT",
+        "F/O AGGARWAL TRADING CO A/C No: 50200101786768",
+        "Page 2", "QUARTERLY ACCOUNT STATEMENT",
+        "123456789 987654321 400259",
+    ])),
+    ("pdf_extract", "HEADER\x0cHEADER\x0cHEADER\nBENEFICIARY: SHRI RAMESH "
+                    "KUMAR\nPage 3"),
+    ("pdf_extract", ""),
+]
+
+
+def test_classify_parity(fuzz_sdf):
+    """Every RESULT_SCHEMA column of the extraction pipeline equals
+    oracle.turn.extract_turn on the fuzz corpus, the unicode edges and the
+    tool payloads, with the default dictionary so the fuzzy top-1 runs."""
+    from cheque_ocr_project_spark.plans import pipeline as P
+    from cheque_ocr_project_spark.plans.queries import default_drawer_dict
+
+    rows = [("user", s, None) for s in CASES + UNICODE_CASES]
+    rows += [("tool", text, tool) for tool, text in TOOL_CASES]
     pdf = pd.DataFrame({
-        "conv_id": [str(i) for i in range(len(CASES))],
-        "turn_idx": range(len(CASES)),
-        "role": ["user"] * len(CASES),
-        "text": CASES,
-        "tool": [None] * len(CASES),
+        "conv_id": [str(i) for i in range(len(rows))],
+        "turn_idx": range(len(rows)),
+        "role": [r[0] for r in rows],
+        "text": [r[1] for r in rows],
+        "tool": [r[2] for r in rows],
     })
     spark = fuzz_sdf.sparkSession
     sdf = spark.createDataFrame(pdf).withColumn(
         "turn_idx", F.col("turn_idx").cast("int")
     )
-    out = (
-        P.extract_pipeline(spark, sdf, [])
-        .select("turn_idx", "cheque_type", "payee_rule")
-        .orderBy("turn_idx")
-        .collect()
-    )
-    from cheque_ocr_project_spark.oracle import payee
-
-    for row in out:
-        s = CASES[row.turn_idx]
-        content = s or ""
-        rec = payee.process_turn_payee(content)
-        assert row.cheque_type == rec["cheque_type"], (
-            f"classify diverged on {s!r}: {row.cheque_type} vs {rec['cheque_type']}"
-        )
-        assert row.payee_rule == rec["payee_rule"], f"payee_rule diverged on {s!r}"
-
-
-# ---------------------------------------------------------------------------
-# vectorized-engine Series twins vs oracle (pure pandas — no Spark needed)
-# ---------------------------------------------------------------------------
-
-def test_vectorized_series_twins_fuzz():
-    """The pandas-Series predicate/cleaning twins used by engine='vectorized'
-    must equal the oracle element-wise on the adversarial fuzz corpus —
-    including the byte-level counting paths (unicode inputs go through
-    clean_text_v1 first, matching the engine's usage contract)."""
-    import pandas as pd
-
-    from cheque_ocr_project_spark.operators import vectorized as V
-
-    raw = pd.Series([c for c in CASES if c is not None] + [
-        "FOR RÉSUMÉ TRADERS",   # unicode uppercase beyond ASCII
-        "PAY TO ıSTANBUL CO",        # dotless i (unicode upper edge)
-        "  NBSP LEADING", "TAB\tSEP", "A.B.C.D",
-    ])
-
-    # clean_text_v1 twin on RAW (possibly unicode) input
-    got = V.clean_v1_series(raw)
-    want = raw.map(lambda t: cleaning.clean_text_v1(t))
-    for i, (g, w) in enumerate(zip(got, want)):
-        assert g == w, f"clean_v1[{i}]: {g!r} != {w!r} for {raw.iloc[i]!r}"
-
-    cleaned = want  # engine contract: these twins run on cleaned text
-
-    got = V.is_valid_drawer_v1_series(cleaned)
-    want_v = cleaned.map(predicates.is_valid_drawer_v1)
-    for i, (g, w) in enumerate(zip(got, want_v)):
-        assert bool(g) == bool(w), (
-            f"is_valid[{i}]: {g} != {w} for {cleaned.iloc[i]!r}"
-        )
-
-    got = V.is_garbage_series(cleaned)
-    want_g = cleaned.map(predicates.is_garbage)
-    for i, (g, w) in enumerate(zip(got, want_g)):
-        assert bool(g) == bool(w), (
-            f"garbage[{i}]: {g} != {w} for {cleaned.iloc[i]!r}"
-        )
-
-    got = V.looks_like_real_name_series(cleaned)
-    want_l = cleaned.map(predicates.looks_like_real_name)
-    for i, (g, w) in enumerate(zip(got, want_l)):
-        assert bool(g) == bool(w), (
-            f"looks[{i}]: {g} != {w} for {cleaned.iloc[i]!r}"
-        )
-
-    got = V.clean_payee_series(cleaned)
-    want_p = cleaned.map(cleaning.clean_payee)
-    for i, (g, w) in enumerate(zip(got, want_p)):
-        assert g == w, f"clean_payee[{i}]: {g!r} != {w!r} for {cleaned.iloc[i]!r}"
-
-    # payee extraction twin over UPPER full text (raw upper — the engine
-    # applies it to ftu which may contain any charset)
-    ftu = raw.fillna("").str.upper()
-    got = V.payee_raw_series(ftu)
-    want_x = ftu.map(grammars.extract_payee)
-    for i, (g, w) in enumerate(zip(got, want_x)):
-        ok = (pd.isna(g) and w is None) or g == w
-        assert ok, f"payee[{i}]: {g!r} != {w!r} for {ftu.iloc[i]!r}"
-
-    govt = V.is_government_entity_series(cleaned)
-    from cheque_ocr_project_spark.oracle import govrules
-    want_e = cleaned.map(govrules.is_government_entity)
-    for i, (g, w) in enumerate(zip(govt, want_e)):
-        assert bool(g) == bool(w), (
-            f"govt[{i}]: {g} != {w} for {cleaned.iloc[i]!r}"
-        )
+    dd = default_drawer_dict()
+    out = P.extract_pipeline(spark, sdf, dd).toPandas()
+    assert_frames_equal(out, oracle_frame(pdf, dd), "fuzz")

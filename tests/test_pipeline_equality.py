@@ -1,56 +1,13 @@
-"""Per-turn equality: every extraction engine == the pure-Python oracle.
+"""Per-turn equality: the extraction pipeline == the pure-Python oracle.
 
 This is the graft's correctness gate (north rule: per-turn text equality
 under stable (conv_id, turn_idx) ordering).
 """
 
-import math
-
-import pandas as pd
 import pytest
 
 from cheque_ocr_project_spark.plans import pipeline as P
-from tests.conftest import oracle_frame
-
-KEY = ["conv_id", "turn_idx"]
-FLOAT_COLS = {"issuer_conf", "confidence"}
-
-
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.sort_values(KEY).reset_index(drop=True)
-    return df[sorted(df.columns)]
-
-
-def _assert_frames_equal(actual: pd.DataFrame, expected: pd.DataFrame, tag: str):
-    actual = _normalize(actual)
-    expected = _normalize(expected)
-    assert len(actual) == len(expected), f"{tag}: row count mismatch"
-    mismatch_report = []
-    for col in expected.columns:
-        a, e = actual[col], expected[col]
-        if col in FLOAT_COLS:
-            bad = [
-                i
-                for i, (x, y) in enumerate(zip(a, e))
-                if not (
-                    (pd.isna(x) and pd.isna(y))
-                    or (not pd.isna(x) and not pd.isna(y) and math.isclose(x, y, rel_tol=0, abs_tol=1e-12))
-                )
-            ]
-        else:
-            bad = [
-                i
-                for i, (x, y) in enumerate(zip(a, e))
-                if not ((pd.isna(x) and pd.isna(y)) or x == y)
-            ]
-        if bad:
-            i = bad[0]
-            mismatch_report.append(
-                f"{tag}: column {col}: {len(bad)} mismatches; first at "
-                f"{expected.loc[i, 'conv_id']}/{expected.loc[i, 'turn_idx']}: "
-                f"actual={actual.loc[i, col]!r} expected={expected.loc[i, col]!r}"
-            )
-    assert not mismatch_report, "\n".join(mismatch_report)
+from tests.conftest import assert_frames_equal, oracle_frame
 
 
 @pytest.fixture(scope="module")
@@ -59,23 +16,12 @@ def expected(fixture_data):
     return oracle_frame(transcripts, drawer_dict)
 
 
-def test_vectorized_pipeline_matches_oracle(spark, transcripts_sdf, fixture_data, expected):
-    """The pandas-Series-vectorized batch kernel (zero per-row Python; the
-    measured-fastest 'arrow' engine is the default) must match the oracle
-    per turn."""
-    _t, _m, drawer_dict = fixture_data
-    out = P.extract_pipeline(
-        spark, transcripts_sdf, drawer_dict, engine="vectorized"
-    ).toPandas()
-    _assert_frames_equal(out, expected, "vectorized")
-
-
 def test_arrow_pipeline_matches_oracle(spark, transcripts_sdf, fixture_data, expected):
     _t, _m, drawer_dict = fixture_data
     out = P.extract_pipeline(
         spark, transcripts_sdf, drawer_dict, engine="arrow"
     ).toPandas()
-    _assert_frames_equal(out, expected, "arrow")
+    assert_frames_equal(out, expected, "arrow")
 
 
 def test_stable_ordering(spark, transcripts_sdf, fixture_data):
@@ -92,7 +38,7 @@ def test_normalize_separators_closes_exotic_ws_divergence(spark, fixture_data):
     """The documented residual (PLANS.md round 4): on \\x1c-\\x1f / NEL /
     Unicode-space input Python and Java regex tokenize differently. With
     the scan-boundary normalizer (job.py --normalize-ws) applied to the
-    input, every engine matches the oracle on exactly those rows — closing
+    input, the pipeline matches the oracle on exactly those rows — closing
     the gap without touching the reference-parity oracle itself."""
     import pandas as pd
     from pyspark.sql import functions as F
@@ -136,23 +82,24 @@ def test_normalize_separators_closes_exotic_ws_divergence(spark, fixture_data):
         )
     )
     expected = oracle_frame(norm_pdf, drawer_dict)
-    for engine in P.ENGINES:
-        out = P.extract_pipeline(
-            spark, norm_sdf, drawer_dict, engine=engine
-        ).toPandas()
-        _assert_frames_equal(out, expected, f"normalized-{engine}")
+    out = P.extract_pipeline(spark, norm_sdf, drawer_dict).toPandas()
+    assert_frames_equal(out, expected, "normalized")
 
 
-def test_engine_list_is_the_single_source(spark, transcripts_sdf, capsys):
-    """Engine names outside P.ENGINES are rejected, and job.py --engine
-    offers exactly P.ENGINES (default first)."""
+def test_engine_list_is_the_single_source(spark, transcripts_sdf, tmp_path):
+    """"arrow" is the only engine: any other name is rejected, job.py has
+    no --engine option, and the checkpointed job still takes
+    engine="arrow"."""
     from cheque_ocr_project_spark import job
+    from cheque_ocr_project_spark.sources import checkpoint as CP
 
-    for engine in ("hybrid", "native"):
-        with pytest.raises(ValueError, match="unknown engine"):
-            P.extract_pipeline(spark, transcripts_sdf, [], engine=engine)
+    with pytest.raises(ValueError, match="unknown engine"):
+        P.extract_pipeline(spark, transcripts_sdf, [], engine="vectorized")
     with pytest.raises(SystemExit):
-        job.build_args(["--help"])
-    assert "--engine {%s}" % ",".join(P.ENGINES) in capsys.readouterr().out
-    args = job.build_args(["--input", "in", "--output", "out"])
-    assert args.engine == P.ENGINES[0]
+        job.build_args(["--input", "in", "--output", "out",
+                        "--engine", "arrow"])
+    stats = CP.run_with_checkpoint(
+        spark, transcripts_sdf.limit(20), [], str(tmp_path / "out"),
+        n_buckets=2, engine="arrow",
+    )
+    assert stats["rows"] == 20

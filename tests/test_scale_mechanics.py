@@ -146,7 +146,7 @@ def test_plan_shapes_hold(spark):
     # Gopher gates: per-row array expressions — no UDF, no Window, no KEY
     # shuffle, and the scan reads only (doc_id, text). r08: one
     # round-robin repartition is allowed — the scale-adaptive scan
-    # parallelism for single-file small-SF inputs (plans.queries._par,
+    # parallelism for single-file small-SF inputs (operators.extract.par,
     # no-op at real scale); any keyed exchange would still fail here.
     plan_txt = reg["gopher_quality"](spark, sf)._jdf.queryExecution() \
         .executedPlan().toString()
