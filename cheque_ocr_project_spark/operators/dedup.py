@@ -1,6 +1,6 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four families, each designed for the 100 TB shape:
+Five families, each designed for the 100 TB shape:
 
 - ``exact``        — hash-groupBy on a normalized fingerprint (1 shuffle)
 - ``minhash_lsh``  — shingle → vectorized MinHash signature (Arrow UDF,
@@ -10,9 +10,20 @@ Four families, each designed for the 100 TB shape:
 - ``simhash``      — 62-bit SimHash, banded by 16-bit chunks (pigeonhole:
   any pair within Hamming distance 3 shares at least one of 4 chunks) →
   exact Hamming verify.
+- ``winnow/overlap`` — winnowing fingerprints (or any distinct per-doc
+  key set, e.g. word shingles) → overlap_pairs: keys held by too many
+  docs are capped, pairs whose shared keys cover enough of the smaller
+  doc's set are kept, in exact integer parts per million.
 - ``ngram_jaccard``— exact char-n-gram Jaccard as a native expression
   (array_intersect/array_union), used standalone on bounded candidate sets
   or as the verifier behind the LSH candidates.
+
+One bucket-pair join serves them all (and the embedding-LSH operators in
+similarity.py): ``band_pairs`` caps hot buckets (cap_bucket_size) and
+self-joins a banded relation into ``id_a < id_b`` candidates carrying the
+caller's columns per side; ``probe_index`` joins a banded batch against
+a persisted bucketed index plus its delta side table; ``overlap_pairs``
+is band_pairs plus the shared-key count and its ratio.
 
 Hash spec (shared with the DuckDB oracle SQL in plans/dedup_sql.py — every
 step is exact 64-bit integer arithmetic, so numpy and DuckDB compute
@@ -274,6 +285,68 @@ def oversized_buckets(banded: DataFrame, key_col: str,
     return banded.groupBy(key_col).count().filter(F.col("count") > max_bucket)
 
 
+def _pair_side(banded: DataFrame, key: str, carry, s: str) -> DataFrame:
+    """(key, id_s, c_s for c in carry) — one side of a bucket-pair join."""
+    return banded.select(
+        key, F.col("id").alias(f"id_{s}"),
+        *[F.col(c).alias(f"{c}_{s}") for c in carry],
+    )
+
+
+def band_pairs(banded: DataFrame, key: str, carry=(),
+               max_bucket: int | None = None) -> DataFrame:
+    """The bucket self-join every near-dup operator runs: cap hot buckets
+    (cap_bucket_size — the cap always runs BEFORE the quadratic join),
+    then pair same-bucket rows with ``id_a < id_b``. ``banded`` has an
+    ``id`` column, the bucket ``key`` and the ``carry`` columns; the
+    result is (key, id_a, c_a..., id_b, c_b...), one row per shared
+    bucket — callers that need one row per pair dedup after their own
+    map-side filter (see _est_filtered_pairs)."""
+    banded = cap_bucket_size(banded, key, max_bucket)
+    return (
+        _pair_side(banded, key, carry, "a")
+        .join(_pair_side(banded, key, carry, "b"), key)
+        .filter(F.col("id_a") < F.col("id_b"))
+    )
+
+
+def overlap_pairs(rel: DataFrame, key: str, maxdf: int,
+                  min_ppm: int) -> DataFrame:
+    """(id_a, id_b, shared, ppm) over a DISTINCT (id, key) relation: pairs
+    whose shared keys cover >= ``min_ppm`` parts per million of the
+    smaller member's key set. Keys held by more than ``maxdf`` ids carry
+    no pair signal but quadratic join cost, so they are capped BEFORE the
+    self-join; per-id totals are counted on the SAME capped relation so
+    the ratio is consistent. The pair count and both total aggregates are
+    map-side combinable; the ppm is exact integer arithmetic (shared *
+    1e6 never overflows a long)."""
+    kept = cap_bucket_size(rel, key, maxdf)
+    tot = kept.groupBy("id").agg(F.count(F.lit(1)).alias("tot"))
+    shared = (
+        band_pairs(kept, key)
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    return (
+        shared
+        .join(tot.select(F.col("id").alias("id_a"),
+                         F.col("tot").alias("tot_a")), "id_a")
+        .join(tot.select(F.col("id").alias("id_b"),
+                         F.col("tot").alias("tot_b")), "id_b")
+        .select(
+            "id_a", "id_b",
+            F.col("shared").cast("long").alias("shared"),
+            F.expr("CAST((shared * 1000000) div least(tot_a, tot_b) "
+                   "AS BIGINT)").alias("ppm"),
+        )
+        .filter(F.col("ppm") >= min_ppm)
+    )
+
+
+# the columns a MinHash candidate pair carries into _est_filtered_pairs
+_MINHASH_CARRY = ("sig", "sk0", "sk1", "sk2", "sk3")
+
+
 def minhash_banded(df: DataFrame, id_col: str, text_col: str,
                    num_perm: int = 64, bands: int = 16, shingle_k: int = 5,
                    seed: int = DEFAULT_SEED) -> DataFrame:
@@ -324,25 +397,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     3.3s -> 8-16s at sf0.1 — reverted. ``max_bucket`` (off by default — the
     contract oracle recomputes the uncapped semantics) bounds hot-bucket
     pair blowup via cap_bucket_size."""
-    banded = cap_bucket_size(
-        minhash_banded(df, id_col, text_col, num_perm, bands, shingle_k, seed),
-        "band_key", max_bucket,
-    )
-
-    left = banded.select(
-        F.col("band_key"),
-        F.col("id").alias("id_a"), F.col("sig").alias("sig_a"),
-        *[F.col(f"sk{i}").alias(f"sk{i}_a") for i in range(4)],
-    )
-    right = banded.select(
-        F.col("band_key"),
-        F.col("id").alias("id_b"), F.col("sig").alias("sig_b"),
-        *[F.col(f"sk{i}").alias(f"sk{i}_b") for i in range(4)],
-    )
-    cand = _select_pair_cols(
-        left.join(right, "band_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
+    banded = minhash_banded(df, id_col, text_col, num_perm, bands,
+                            shingle_k, seed)
+    cand = band_pairs(banded, "band_key", _MINHASH_CARRY, max_bucket)
     return _est_filtered_pairs(cand, threshold, num_perm)
 
 
@@ -436,20 +493,20 @@ def persist_minhash_index(df: DataFrame, table: str, id_col: str,
     (issuer_processor_v.py:244-258) — is amortized into the layout."""
     banded = minhash_banded(df, id_col, text_col, num_perm, bands,
                             shingle_k, seed)
-    _persist_minhash_banded(banded, table, dict(
+    _persist_banded(banded, table, "band_key", dict(
         num_perm=num_perm, bands=bands, shingle_k=shingle_k, seed=seed,
     ), n_buckets)
 
 
-def _persist_minhash_banded(banded: DataFrame, table: str, params: dict,
-                            n_buckets: int) -> None:
-    """Write an ALREADY-BANDED signature relation as the bucketed index
-    and stamp its geometry — the banded-level half of
-    persist_minhash_index, shared with novelty_ingest_batch (which
-    bands once and reuses the relation)."""
+def _persist_banded(banded: DataFrame, table: str, key: str, params: dict,
+                    n_buckets: int) -> None:
+    """Write an ALREADY-BANDED relation as the index bucketed by ``key``
+    and stamp its geometry — the banded-level half of persist_*_index,
+    shared with novelty_ingest_batch (which bands once and reuses the
+    relation)."""
     from cheque_ocr_project_spark.sources.io import write_bucketed
 
-    write_bucketed(banded, table, ["band_key"], n_buckets=n_buckets)
+    write_bucketed(banded, table, [key], n_buckets=n_buckets)
     _set_index_params(banded.sparkSession, table, params)
 
 
@@ -504,61 +561,63 @@ def incremental_minhash_candidates(spark, new_docs: DataFrame, table: str,
                                    num_perm: int = 64, bands: int = 16,
                                    shingle_k: int = 5,
                                    seed: int = DEFAULT_SEED) -> DataFrame:
-    """(id_a=new, id_b=corpus, sig_a, sig_b) band-mate candidates of a new
-    batch against the persisted index. The corpus scan reads
-    bucket-aligned: the sort-merge join needs NO exchange above it.
-
-    If un-compacted appended batches exist (append_to_minhash_index), the
-    probe ALSO joins the delta relation — as a SECOND join unioned after,
-    never a union below the join: a union's output partitioning is
-    unknown, so unioning the relations first would force a corpus-side
-    exchange and destroy exactly the zero-exchange property the bucketed
-    layout paid for. The delta side is small by contract (it is folded
-    into the index by compact_index before it grows)."""
+    """(id_a=new, id_b=corpus, sig_a, sig_b, sketches) band-mate
+    candidates of a new batch against the persisted index (see
+    probe_index)."""
     _check_index_params(spark, table, dict(
         num_perm=num_perm, bands=bands, shingle_k=shingle_k, seed=seed))
     new_banded = minhash_banded(
         new_docs, id_col, text_col, num_perm, bands, shingle_k, seed
     )
-    return _incremental_candidates_banded(spark, new_banded, table)
+    return probe_index(spark, new_banded, table, "band_key", _MINHASH_CARRY)
 
 
-def _incremental_candidates_banded(spark, new_banded: DataFrame,
-                                   table: str) -> DataFrame:
-    """The probe-join core of incremental_minhash_candidates over an
-    ALREADY-BANDED probe relation (columns id, sig, band_key) — shared
-    with novelty_ingest_batch so the probe never re-bands a batch that
-    was banded for the append anyway. Parameter checking is the
-    caller's job (the banded relation carries no geometry to verify)."""
-    # carry the sketch columns when BOTH sides have them (an index table
-    # persisted before the sketch existed simply skips the prefilter —
-    # _est_filtered_pairs falls back to the exact estimator alone)
-    with_sk = ("sk0" in new_banded.columns
-               and "sk0" in spark.table(table).columns)
-
-    def side(df: DataFrame, suffix: str) -> DataFrame:
-        cols = [
-            F.col("band_key"),
-            F.col("id").alias(f"id_{suffix}"),
-            F.col("sig").alias(f"sig_{suffix}"),
-        ]
-        if with_sk:
-            cols += [F.col(f"sk{i}").alias(f"sk{i}_{suffix}")
-                     for i in range(4)]
-        return df.select(*cols)
-
-    probe = side(new_banded, "a")
-    cand = (
-        probe.join(side(spark.table(table), "b"), "band_key")
-        .filter(F.col("id_a") != F.col("id_b"))
-    )
+def _index_tables(spark, table: str, banded: DataFrame) -> list[str]:
+    """The relations of a persisted index — the bucketed base, plus the
+    delta side table when batches were appended since the last
+    compaction — each checked on its own against ``banded``'s columns:
+    the schema IS the index format, so a relation written by an older
+    format (e.g. before the MinHash sketch columns) fails here with a
+    re-persist instruction instead of a raw analysis error in the join."""
     delta = _delta_table(table)
-    if spark.catalog.tableExists(delta):
-        cand = cand.unionByName(
-            probe.join(side(spark.table(delta), "b"), "band_key")
-            .filter(F.col("id_a") != F.col("id_b"))
-        )
-    return cand
+    tables = [table] + ([delta] if spark.catalog.tableExists(delta) else [])
+    want = {(f.name, f.dataType.simpleString()) for f in banded.schema}
+    for t in tables:
+        have = {(f.name, f.dataType.simpleString())
+                for f in spark.table(t).schema}
+        if have != want:
+            raise ValueError(
+                f"index table {t} has a different format than this batch "
+                f"(missing {sorted(want - have)}, unexpected "
+                f"{sorted(have - want)}) — re-persist the index through "
+                "persist_*_index"
+            )
+    return tables
+
+
+def probe_index(spark, probe_banded: DataFrame, table: str, key: str,
+                carry) -> DataFrame:
+    """(key, id_a, c_a..., id_b, c_b...) band-mate candidates of an
+    ALREADY-BANDED probe relation against a persisted index: id_a = probe
+    id, id_b = indexed id, ``carry`` columns suffixed per side. The index
+    scan reads bucket-aligned, so the sort-merge join needs NO exchange
+    on the index side. Parameter checking is the caller's job (the
+    banded relation carries no geometry to verify); the format check is
+    done here (_index_tables).
+
+    If un-compacted appended batches exist (the delta side table), the
+    probe ALSO joins the delta — as a SECOND join unioned after, never a
+    union below the join: a union's output partitioning is unknown, so
+    unioning the relations first would force an index-side exchange and
+    destroy exactly the zero-exchange property the bucketed layout paid
+    for. The delta is small by contract (compact_index folds it in)."""
+    tables = _index_tables(spark, table, probe_banded)
+    probe = _pair_side(probe_banded, key, carry, "a")
+    return reduce(DataFrame.unionByName, [
+        probe.join(_pair_side(spark.table(t), key, carry, "b"), key)
+        .filter(F.col("id_a") != F.col("id_b"))
+        for t in tables
+    ])
 
 
 def incremental_minhash_pairs(spark, new_docs: DataFrame, table: str,
@@ -570,21 +629,11 @@ def incremental_minhash_pairs(spark, new_docs: DataFrame, table: str,
     incremental form of minhash_lsh_pairs for rolling ingest. Same
     estimator, same threshold semantics; pair identity is (new id,
     corpus id)."""
-    cand = _select_pair_cols(incremental_minhash_candidates(
+    cand = incremental_minhash_candidates(
         spark, new_docs, table, id_col, text_col, num_perm, bands,
         shingle_k, seed,
-    ))
+    )
     return _est_filtered_pairs(cand, threshold, num_perm)
-
-
-def _select_pair_cols(cand: DataFrame) -> DataFrame:
-    """Project a candidate relation to the pair/signature columns, keeping
-    the sketch columns when present (they power the prefilter in
-    _est_filtered_pairs)."""
-    cols = ["id_a", "id_b", "sig_a", "sig_b"]
-    if "sk0_a" in cand.columns:
-        cols += [f"sk{i}_{s}" for s in ("a", "b") for i in range(4)]
-    return cand.select(*cols)
 
 
 # ---------------------------------------------------------------------------
@@ -620,13 +669,15 @@ def append_to_minhash_index(spark, new_docs: DataFrame, table: str,
         num_perm=num_perm, bands=bands, shingle_k=shingle_k, seed=seed))
     banded = minhash_banded(new_docs, id_col, text_col, num_perm, bands,
                             shingle_k, seed)
-    _append_minhash_banded(banded, table)
+    _append_banded(spark, banded, table)
 
 
-def _append_minhash_banded(banded: DataFrame, table: str) -> None:
+def _append_banded(spark, banded: DataFrame, table: str) -> None:
     """Append an ALREADY-BANDED relation to the delta side table —
-    shared with novelty_ingest_batch (recovery + geometry checks are
-    the caller's job at the banded level)."""
+    shared by both append_to_*_index and novelty_ingest_batch (recovery
+    + geometry checks are the caller's job at the banded level; the
+    base's and an existing delta's format are checked here)."""
+    _index_tables(spark, table, banded)
     banded.write.format("parquet").mode("append").saveAsTable(
         _delta_table(table))
 
@@ -675,32 +726,22 @@ def novelty_ingest_batch(spark, batch_df: DataFrame, table: str,
     ).write.mode("overwrite").parquet(stage)      # THE one banding action
     bd = spark.read.parquet(stage)
 
-    left = bd.select("band_key", F.col("id").alias("id_a"),
-                     F.col("sig").alias("sig_a"),
-                     *[F.col(f"sk{i}").alias(f"sk{i}_a") for i in range(4)])
-    right = bd.select("band_key", F.col("id").alias("id_b"),
-                      F.col("sig").alias("sig_b"),
-                      *[F.col(f"sk{i}").alias(f"sk{i}_b") for i in range(4)])
-    within_cand = _select_pair_cols(
-        left.join(right, "band_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
+    within_cand = band_pairs(bd, "band_key", _MINHASH_CARRY)
     dropped = _est_filtered_pairs(within_cand, threshold, num_perm).select(
         F.col("id_b").alias(id_col)
     )
     if spark.catalog.tableExists(table):
         _check_index_params(spark, table, params)
-        cross_cand = _select_pair_cols(_incremental_candidates_banded(
-            spark, bd, table
-        ))
+        cross_cand = probe_index(spark, bd, table, "band_key",
+                                 _MINHASH_CARRY)
         cross = _est_filtered_pairs(cross_cand, threshold, num_perm)
         dropped = dropped.unionByName(
             cross.filter(F.col("id_a") > F.col("id_b"))
             .select(F.col("id_a").alias(id_col))
         )
-        _append_minhash_banded(bd, table)
+        _append_banded(spark, bd, table)
     else:
-        _persist_minhash_banded(bd, table, params, n_buckets)
+        _persist_banded(bd, table, "band_key", params, n_buckets)
     return dropped.distinct()
 
 
@@ -710,9 +751,8 @@ def append_to_simhash_index(spark, new_docs: DataFrame, table: str,
     """SimHash twin of append_to_minhash_index."""
     _recover_crashed_compaction(spark, table)
     _check_index_params(spark, table, dict(max_hamming=max_hamming))
-    banded = simhash_banded(new_docs, id_col, text_col, max_hamming)
-    banded.write.format("parquet").mode("append").saveAsTable(
-        _delta_table(table))
+    _append_banded(spark, simhash_banded(new_docs, id_col, text_col,
+                                         max_hamming), table)
 
 
 def _table_bucket_spec(spark, table: str) -> tuple[list[str], int]:
@@ -909,12 +949,9 @@ def persist_simhash_index(df: DataFrame, table: str, id_col: str,
     joins the corpus with zero corpus-side exchange. The index is bound
     to its max_hamming (chunk widths derive from it) — probe with the
     same value."""
-    from cheque_ocr_project_spark.sources.io import write_bucketed
-
-    banded = simhash_banded(df, id_col, text_col, max_hamming)
-    write_bucketed(banded, table, ["chunk_key"], n_buckets=n_buckets)
-    _set_index_params(banded.sparkSession, table,
-                      dict(max_hamming=max_hamming))
+    _persist_banded(simhash_banded(df, id_col, text_col, max_hamming),
+                    table, "chunk_key", dict(max_hamming=max_hamming),
+                    n_buckets)
 
 
 def incremental_simhash_pairs(spark, new_docs: DataFrame, table: str,
@@ -927,42 +964,19 @@ def incremental_simhash_pairs(spark, new_docs: DataFrame, table: str,
     mismatch would band into a different key geometry and silently
     return near-empty results."""
     _check_index_params(spark, table, dict(max_hamming=max_hamming))
-    corpus = spark.table(table).select(
-        "chunk_key", F.col("id").alias("id_b"),
-        F.col("simhash").alias("sim_b"),
-    )
-    new_banded = simhash_banded(
-        new_docs, id_col, text_col, max_hamming
-    ).select(
-        "chunk_key", F.col("id").alias("id_a"),
-        F.col("simhash").alias("sim_a"),
-    )
-    cand = (
-        new_banded.join(corpus, "chunk_key")
-        .filter(F.col("id_a") != F.col("id_b"))
-    )
-    delta = _delta_table(table)
-    if spark.catalog.tableExists(delta):
-        # second join + union ABOVE it — see incremental_minhash_candidates
-        # for why a union below the join would re-shuffle the corpus side
-        dcorpus = spark.table(delta).select(
-            "chunk_key", F.col("id").alias("id_b"),
-            F.col("simhash").alias("sim_b"),
-        )
-        cand = cand.unionByName(
-            new_banded.join(dcorpus, "chunk_key")
-            .filter(F.col("id_a") != F.col("id_b"))
-        )
-    return _hamming_filtered_pairs(cand, max_hamming)
+    new_banded = simhash_banded(new_docs, id_col, text_col, max_hamming)
+    return _hamming_filtered_pairs(
+        probe_index(spark, new_banded, table, "chunk_key", ("simhash",)),
+        max_hamming)
 
 
 def _hamming_filtered_pairs(cand: DataFrame, max_hamming: int) -> DataFrame:
     """Hamming-filter THEN dedup the pair key — same ordering argument as
-    _est_filtered_pairs: hamming is a pure function of (sim_a, sim_b),
-    functional in (id_a, id_b), so the filter commutes with the dedup and
-    the dropDuplicates exchange carries only surviving pairs instead of
-    one row per shared chunk."""
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+    _est_filtered_pairs: hamming is a pure function of (simhash_a,
+    simhash_b), functional in (id_a, id_b), so the filter commutes with
+    the dedup and the dropDuplicates exchange carries only surviving
+    pairs instead of one row per shared chunk."""
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
         cand.withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
@@ -984,18 +998,8 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
     ``max_bucket`` (off by default) bounds hot-chunk pair blowup via
     cap_bucket_size; the 8-byte signature rides both join sides (unlike
     MinHash there is no wide payload to trim)."""
-    banded = cap_bucket_size(
-        simhash_banded(df, id_col, text_col, max_hamming),
-        "chunk_key", max_bucket,
-    )
-    left = banded.select("chunk_key", F.col("id").alias("id_a"),
-                         F.col("simhash").alias("sim_a"))
-    right = banded.select("chunk_key", F.col("id").alias("id_b"),
-                          F.col("simhash").alias("sim_b"))
-    cand = (
-        left.join(right, "chunk_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
+    cand = band_pairs(simhash_banded(df, id_col, text_col, max_hamming),
+                      "chunk_key", ("simhash",), max_bucket)
     return _hamming_filtered_pairs(cand, max_hamming)
 
 

@@ -36,6 +36,25 @@ def _cosine(vec_a, vec_b) -> "F.Column":
     return F.try_divide(dot, na * nb)
 
 
+def _rank_topk(scored: DataFrame, id_col: str, vec_col: str,
+               k: int) -> DataFrame:
+    """(query_id, neighbor_id, sim, rn): the k best-scored candidates per
+    query of a (query_id, qvec, id_col, vec_col) relation — the tail every
+    top-k operator shares. Round-4 precision is proven cross-engine-stable
+    by the brute-force ann_topk oracle; ranking uses the rounded value,
+    ties broken by id ascending."""
+    sim = F.round(_cosine(F.col(vec_col), F.col("qvec")), 4)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col(id_col).asc()
+    )
+    return (
+        scored.withColumn("sim", sim)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("query_id", F.col(id_col).alias("neighbor_id"), "sim", "rn")
+    )
+
+
 def cosine_topk_bruteforce(emb: DataFrame, queries: DataFrame, k: int = 5,
                            id_col: str = "vec_id",
                            vec_col: str = "embedding") -> DataFrame:
@@ -43,16 +62,7 @@ def cosine_topk_bruteforce(emb: DataFrame, queries: DataFrame, k: int = 5,
     joined = par(emb).crossJoin(F.broadcast(queries)).filter(
         F.col(id_col) != F.col("query_id")
     )
-    sim = F.round(_cosine(F.col(vec_col), F.col("qvec")), 4)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        joined.withColumn("sim", sim)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "sim", "rn")
-    )
+    return _rank_topk(joined, id_col, vec_col, k)
 
 
 PLANE_MOD = (1 << 31) - 1
@@ -171,18 +181,7 @@ def lsh_topk(spark: SparkSession, emb: DataFrame, queries: DataFrame,
         cand.join(emb, id_col)
         .join(F.broadcast(queries), "query_id")
     )
-    # round-4 precision: proven cross-engine-stable for the green brute-force
-    # ann_topk oracle; ranking uses the rounded value (ties -> id asc)
-    sim = F.round(_cosine(F.col(vec_col), F.col("qvec")), 4)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("sim", sim)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "sim", "rn")
-    )
+    return _rank_topk(scored, id_col, vec_col, k)
 
 
 IVF_PIVOT_MIX = 2654435761
@@ -259,16 +258,7 @@ def ivf_topk(spark: SparkSession, emb: DataFrame, queries: DataFrame,
         .dropDuplicates(["query_id", id_col])
     )
     scored = cand.join(emb, id_col).join(F.broadcast(queries), "query_id")
-    sim = F.round(_cosine(F.col(vec_col), F.col("qvec")), 4)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("sim", sim)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "sim", "rn")
-    )
+    return _rank_topk(scored, id_col, vec_col, k)
 
 
 def cosine_near_dup_pairs(spark: SparkSession, emb: DataFrame, dim: int,
@@ -284,17 +274,13 @@ def cosine_near_dup_pairs(spark: SparkSession, emb: DataFrame, dim: int,
     (dedup.cap_bucket_size); members of a dropped band can still pair
     through their other bands, and dedup.oversized_buckets over the
     exploded signatures is the observability twin."""
-    from cheque_ocr_project_spark.operators.dedup import cap_bucket_size
+    from cheque_ocr_project_spark.operators.dedup import band_pairs
 
     sigs = hyperplane_signatures(
         spark, emb, id_col, vec_col, dim, n_planes, n_bands, seed
     ).select(F.col("id"), F.explode("bands").alias("band_key"))
-    sigs = cap_bucket_size(sigs, "band_key", max_bucket)
-    left = sigs.select("band_key", F.col("id").alias("id_a"))
-    right = sigs.select("band_key", F.col("id").alias("id_b"))
     cand = (
-        left.join(right, "band_key")
-        .filter(F.col("id_a") < F.col("id_b"))
+        band_pairs(sigs, "band_key", max_bucket=max_bucket)
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )

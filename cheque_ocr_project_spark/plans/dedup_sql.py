@@ -114,8 +114,16 @@ def sql_minhash_incremental(num_perm: int = 64, bands: int = 16,
     convention id_a = probe id, id_b = corpus/delta id. Identical
     signature machinery — the index layout changes WHERE the join reads,
     never WHAT it computes."""
-    base = sql_minhash_near_dup(num_perm, bands, shingle_k, threshold, seed)
-    return f"""SELECT p.id_b AS id_a, p.id_a AS id_b, p.est_jaccard
+    return _cross_pairs(
+        sql_minhash_near_dup(num_perm, bands, shingle_k, threshold, seed),
+        "est_jaccard", probe_min_id)
+
+
+def _cross_pairs(base: str, metric: str, probe_min_id: int) -> str:
+    """``base``'s (id_a < id_b, metric) pairs restricted to cross pairs
+    (corpus id < probe_min_id <= probe id), re-oriented to the
+    incremental convention id_a = probe id, id_b = corpus/delta id."""
+    return f"""SELECT p.id_b AS id_a, p.id_a AS id_b, p.{metric}
 FROM ({base}
 ) p
 WHERE p.id_a < {probe_min_id} AND p.id_b >= {probe_min_id}"""
@@ -158,50 +166,56 @@ WITH {ctes}
 {final}"""
 
 
+def sql_overlap_tail(src: str, key: str, maxdf: int, min_ppm: int,
+                     shared_col: str, ppm_col: str) -> str:
+    """Twin of dedup.overlap_pairs over the DISTINCT (id, ``key``)
+    relation ``src``: the kept/tot/shared CTEs and the final SELECT of
+    (id_a, id_b, ``shared_col``, ``ppm_col``) — keys held by more than
+    ``maxdf`` ids dropped before the self-join, per-id totals on the
+    same capped relation, integer ppm vs the smaller total."""
+    return f"""kept AS (
+  SELECT id, {key} FROM {src}
+  QUALIFY count(*) OVER (PARTITION BY {key}) <= {maxdf}
+),
+tot AS (SELECT id, count(*) AS tot FROM kept GROUP BY id),
+shared AS (
+  SELECT a.id AS id_a, b.id AS id_b, count(*) AS {shared_col}
+  FROM kept a JOIN kept b ON a.{key} = b.{key} AND a.id < b.id
+  GROUP BY a.id, b.id
+)
+SELECT id_a, id_b, {shared_col}, {ppm_col} FROM (
+  SELECT s.id_a, s.id_b, CAST(s.{shared_col} AS BIGINT) AS {shared_col},
+         CAST((s.{shared_col} * 1000000) // least(ta.tot, tb.tot) AS BIGINT)
+           AS {ppm_col}
+  FROM shared s
+  JOIN tot ta ON ta.id = s.id_a
+  JOIN tot tb ON tb.id = s.id_b
+) WHERE {ppm_col} >= {min_ppm}"""
+
+
 def sql_winnow_substring_pairs(k: int = 8, window: int = 8,
                                maxdf: int = 20,
                                tau_ppm: int = 500000) -> str:
     """Twin of plans.q_winnow_substring_pairs: winnowing fingerprints
-    over the clone-planted docs, doc-frequency cap BEFORE the self-join,
-    shared-fingerprint counts, integer overlap ppm vs the smaller doc's
-    (capped) fingerprint total."""
+    over the clone-planted docs, then the overlap-pairs tail."""
     ctes, final = _winnow_parts(k, window, src="docs")
     return f"""
 WITH {DOCS_WITH_NEAR_DUPS_CTE.lstrip()},
 {ctes},
 fps AS ({final}),
-kept AS (
-  SELECT id, fp FROM fps
-  QUALIFY count(*) OVER (PARTITION BY fp) <= {maxdf}
-),
-tot AS (SELECT id, count(*) AS tot FROM kept GROUP BY id),
-shared AS (
-  SELECT a.id AS id_a, b.id AS id_b, count(*) AS shared_fps
-  FROM kept a JOIN kept b ON a.fp = b.fp AND a.id < b.id
-  GROUP BY a.id, b.id
-)
-SELECT id_a, id_b, shared_fps, overlap_ppm FROM (
-  SELECT s.id_a, s.id_b, CAST(s.shared_fps AS BIGINT) AS shared_fps,
-         CAST((s.shared_fps * 1000000) // least(ta.tot, tb.tot) AS BIGINT)
-           AS overlap_ppm
-  FROM shared s
-  JOIN tot ta ON ta.id = s.id_a
-  JOIN tot tb ON tb.id = s.id_b
-) WHERE overlap_ppm >= {tau_ppm}"""
+{sql_overlap_tail("fps", "fp", maxdf, tau_ppm, "shared_fps", "overlap_ppm")}"""
 
 
-def sql_near_dup_clusters(max_hamming: int = 3) -> str:
-    """Connected components over the SimHash pair graph, as a recursive
-    CTE computing the transitive closure then min-reachable-id per node
-    (exact twin of dedup.connected_components' fixpoint). Closure size is
-    fine at oracle scale; the Spark side is the scale path."""
-    pair_sql = sql_simhash_near_dup(max_hamming)
-    body = pair_sql.split("WITH", 1)[1]
-    final_select = body.rindex("SELECT id_a, id_b")
-    ctes, final = body[:final_select].rstrip().rstrip(","), body[final_select:]
-    final = final.strip()
+def _simhash_components(max_hamming: int) -> str:
+    """``WITH RECURSIVE`` CTE chain ending in ``comp(node, component)``:
+    the SimHash pair graph over the clone-planted docs, its transitive
+    closure, and the min-reachable id per node (exact twin of
+    dedup.connected_components' fixpoint). Closure size is fine at
+    oracle scale; the Spark side is the scale path."""
+    ctes, final = _simhash_parts(max_hamming, None)
     return f"""
-WITH RECURSIVE {ctes},
+WITH RECURSIVE {DOCS_WITH_NEAR_DUPS_CTE},
+{ctes},
 pairs AS ({final}),
 edges AS (
   SELECT id_a AS src, id_b AS dst FROM pairs
@@ -212,7 +226,13 @@ reach(node, m) AS (
   UNION
   SELECT e.src, r.m FROM edges e JOIN reach r ON r.node = e.dst
 ),
-comp AS (SELECT node, min(m) AS component FROM reach GROUP BY node)
+comp AS (SELECT node, min(m) AS component FROM reach GROUP BY node)"""
+
+
+def sql_near_dup_clusters(max_hamming: int = 3) -> str:
+    """Connected components over the SimHash pair graph, one row per
+    component with its size and smallest member."""
+    return f"""{_simhash_components(max_hamming)}
 SELECT component, count(*) AS n_members,
        CAST(min(node) AS BIGINT) AS keeper_id
 FROM comp GROUP BY component"""
@@ -222,11 +242,8 @@ def sql_simhash_incremental(max_hamming: int = 3,
                             probe_min_id: int = 1000000) -> str:
     """SimHash twin of sql_minhash_incremental: full-recompute pairs
     restricted to cross pairs, probe side = the near-dup clones."""
-    base = sql_simhash_near_dup(max_hamming)
-    return f"""SELECT p.id_b AS id_a, p.id_a AS id_b, p.hamming
-FROM ({base}
-) p
-WHERE p.id_a < {probe_min_id} AND p.id_b >= {probe_min_id}"""
+    return _cross_pairs(sql_simhash_near_dup(max_hamming), "hamming",
+                        probe_min_id)
 
 
 def sql_dedup_survivors(max_hamming: int = 3) -> str:
@@ -234,23 +251,7 @@ def sql_dedup_survivors(max_hamming: int = 3) -> str:
     (recursive-CTE closure, as sql_near_dup_clusters) + singleton
     fallback, survivor = longest text then smallest doc_id, in the same
     deterministic two-agg form."""
-    pair_sql = sql_simhash_near_dup(max_hamming)
-    body = pair_sql.split("WITH", 1)[1]
-    final_select = body.rindex("SELECT id_a, id_b")
-    ctes, final = body[:final_select].rstrip().rstrip(","), body[final_select:]
-    return f"""
-WITH RECURSIVE {ctes},
-pairs AS ({final.strip()}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs
-),
-reach(node, m) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.src, r.m FROM edges e JOIN reach r ON r.node = e.dst
-),
-comp AS (SELECT node, min(m) AS component FROM reach GROUP BY node),
+    return f"""{_simhash_components(max_hamming)},
 alldocs AS (
   SELECT doc_id, coalesce(length(text), 0) AS len FROM docs
 ),
@@ -274,6 +275,19 @@ def sql_simhash_near_dup(max_hamming: int = 3,
                          max_bucket: int | None = None) -> str:
     """SimHash twin; ``max_bucket`` mirrors dedup.cap_bucket_size exactly
     (drop chunk buckets with more than N members before the self-join)."""
+    ctes, final = _simhash_parts(max_hamming, max_bucket)
+    return f"""
+WITH {DOCS_WITH_NEAR_DUPS_CTE},
+{ctes}
+{final}"""
+
+
+def _simhash_parts(max_hamming: int,
+                   max_bucket: int | None) -> tuple[str, str]:
+    """(CTE chain over ``docs``, final SELECT of (id_a, id_b, hamming)) of
+    the SimHash pair relation — PARTS, like _winnow_parts, so the
+    component queries compose them without string-slicing the rendered
+    query."""
     n_chunks, width = DD.simhash_chunking(max_hamming)
     mask = (1 << width) - 1
     tok_h64 = (
@@ -284,9 +298,7 @@ def sql_simhash_near_dup(max_hamming: int = 3,
         f"\n  QUALIFY count(*) OVER (PARTITION BY chunk, ck) <= {max_bucket}"
         if max_bucket is not None else ""
     )
-    return f"""
-WITH {DOCS_WITH_NEAR_DUPS_CTE},
-toks AS (
+    ctes = f"""toks AS (
   SELECT doc_id,
          list_filter(string_split_regex(upper(text), '[ \\t\\n\\x0b\\f\\r]+'), t -> t <> '') AS toks
   FROM docs
@@ -318,6 +330,9 @@ cand AS (
                   l.simhash AS sa, r.simhash AS sb
   FROM keyed l JOIN keyed r
     ON l.chunk = r.chunk AND l.ck = r.ck AND l.doc_id < r.doc_id
-)
-SELECT id_a, id_b, CAST(bit_count(xor(sa, sb)) AS INT) AS hamming
-FROM cand WHERE bit_count(xor(sa, sb)) <= {max_hamming}"""
+)"""
+    final = (
+        "SELECT id_a, id_b, CAST(bit_count(xor(sa, sb)) AS INT) AS hamming\n"
+        f"FROM cand WHERE bit_count(xor(sa, sb)) <= {max_hamming}"
+    )
+    return ctes, final

@@ -326,6 +326,70 @@ def test_winnowing_shared_substring_guarantee(spark):
     assert not (by_doc[0] & by_doc[2])
 
 
+def _overlap_brute_force(keys_of: dict, maxdf: int, min_ppm: int) -> dict:
+    """Pure-Python overlap_pairs: drop keys held by more than maxdf ids,
+    count totals on what is left, keep id_a < id_b pairs whose shared
+    count covers >= min_ppm of the smaller total."""
+    df = {}
+    for ks in keys_of.values():
+        for k in ks:
+            df[k] = df.get(k, 0) + 1
+    kept = {i: {k for k in ks if df[k] <= maxdf} for i, ks in keys_of.items()}
+    out = {}
+    for a in kept:
+        for b in kept:
+            shared = len(kept[a] & kept[b])
+            if a < b and shared:
+                ppm = shared * 1_000_000 // min(len(kept[a]), len(kept[b]))
+                if ppm >= min_ppm:
+                    out[(a, b)] = (shared, ppm)
+    return out
+
+
+def test_overlap_pairs_boundaries_match_brute_force(spark):
+    """dedup.overlap_pairs at its edges: a key held by exactly maxdf ids
+    is kept and one held by maxdf + 1 is dropped; a pair at exactly
+    min_ppm is kept and one just below is dropped; only id_a < id_b
+    pairs are emitted. Also checked whole against the brute force on a
+    seeded random relation."""
+    import random
+
+    maxdf, min_ppm = 3, 500_000
+    keys_of = {
+        # "k3" held by exactly maxdf ids: all three pairs kept at 1e6 ppm
+        1: {"k3"}, 2: {"k3"}, 3: {"k3"},
+        # "k4" held by maxdf + 1 ids: dropped, so 4..7 pair with nobody
+        4: {"k4", "u4"}, 5: {"k4", "u5"}, 6: {"k4", "u6"}, 7: {"k4", "u7"},
+        # shared 1 of min total 2: exactly 500000 ppm, kept
+        10: {"a", "b"}, 11: {"a", "c", "d", "e"},
+        # shared 1 of min total 3: 333333 ppm, dropped
+        12: {"f", "g", "h"}, 13: {"f", "i", "j"},
+    }
+
+    def run(kmap):
+        rel = spark.createDataFrame(
+            [(i, k) for i, ks in kmap.items() for k in sorted(ks)],
+            "id long, key string",
+        )
+        res = DD.overlap_pairs(rel, "key", maxdf, min_ppm)
+        assert res.columns == ["id_a", "id_b", "shared", "ppm"]
+        return {(r.id_a, r.id_b): (r.shared, r.ppm) for r in res.collect()}
+
+    got = run(keys_of)
+    assert got == _overlap_brute_force(keys_of, maxdf, min_ppm)
+    assert {(1, 2), (1, 3), (2, 3)} <= set(got)
+    assert not any(a in (4, 5, 6, 7) for a, _b in got)
+    assert got[(10, 11)] == (1, 500_000)
+    assert (12, 13) not in got
+    assert all(a < b for a, b in got)
+
+    rng = random.Random(11)
+    rand = {i: set(rng.sample(range(12), rng.randint(1, 5)))
+            for i in range(40)}
+    rand = {i: {f"r{k}" for k in ks} for i, ks in rand.items()}
+    assert run(rand) == _overlap_brute_force(rand, maxdf, min_ppm)
+
+
 def test_stratified_sample_deterministic_and_growth_stable(spark):
     """Per-source mixing rates hold (+/- hash variance), zero-rate strata
     vanish, and growing the corpus never flips an existing decision."""

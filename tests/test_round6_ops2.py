@@ -460,6 +460,9 @@ def test_rotation_names_valid_and_new_ops_lead_the_sample():
     assert len(set(Q._CHECK_FIRST)) == len(Q._CHECK_FIRST)
     lead50 = list(reg)[:50]
     for name in (
+        # moved onto the shared bucket-pair join / top-k tail
+        "containment_pairs", "winnow_substring_pairs", "near_dup_clusters",
+        "dedup_survivors", "ann_topk", "embedding_near_dup",
         # r04-carries
         "media_resize", "media_frame_sample", "qa_extract", "t5_spell",
         "zero_shot_classify", "variant_keep_best",

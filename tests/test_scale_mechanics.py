@@ -531,6 +531,47 @@ def test_unstamped_index_probe_is_loud(spark):
         spark.sql("DROP TABLE IF EXISTS t_unstamped_idx")
 
 
+def test_old_format_delta_is_loud(spark):
+    """The base and the delta of a persisted index are format-checked each
+    on its own: a delta written before the MinHash sketch columns existed
+    (no sk0..sk3) under a current-format base must make the probe and a
+    further append raise the re-persist error, not a raw analysis error
+    from the join or the write."""
+    import pytest
+
+    from cheque_ocr_project_spark.operators import dedup as DD
+    from cheque_ocr_project_spark.sources.io import drop_table_and_location
+
+    t = "t_mixed_format_idx"
+    corpus = spark.createDataFrame(
+        [(i, f"mixed format corpus document number {i}") for i in range(20)],
+        "doc_id long, text string",
+    )
+    batch = spark.createDataFrame(
+        [(100 + i, f"mixed format batch document number {i}")
+         for i in range(5)],
+        "doc_id long, text string",
+    )
+    probe = spark.createDataFrame([(500, "mixed format corpus document "
+                                         "number 3")],
+                                  "doc_id long, text string")
+    try:
+        for name in (t, f"{t}__delta"):
+            drop_table_and_location(spark, name)
+        DD.persist_minhash_index(corpus, t, "doc_id", "text", n_buckets=4)
+        old = DD.minhash_banded(batch, "doc_id", "text").drop(
+            "sk0", "sk1", "sk2", "sk3")
+        old.write.format("parquet").mode("append").saveAsTable(
+            f"{t}__delta")
+        with pytest.raises(ValueError, match="re-persist"):
+            DD.incremental_minhash_pairs(spark, probe, t, "doc_id", "text")
+        with pytest.raises(ValueError, match="re-persist"):
+            DD.append_to_minhash_index(spark, probe, t, "doc_id", "text")
+    finally:
+        for name in (t, f"{t}__delta"):
+            drop_table_and_location(spark, name)
+
+
 def test_write_bucketed_rejects_append(spark):
     """Appending would create a second file per bucket — the writer must
     refuse up front (before committing data) rather than fail the
@@ -805,8 +846,6 @@ def test_minhash_sketch_prefilter_drops_nothing(spark):
     columns stripped (exact-estimator-only fallback path) must yield the
     identical pair set and estimates. Uses the near-dup-planted corpus at
     sf0.01 so real hot-band candidates flow through both paths."""
-    from pyspark.sql import functions as F
-
     from cheque_ocr_project_spark.operators import dedup as DD
     from cheque_ocr_project_spark.plans import queries as Q
 
@@ -816,28 +855,9 @@ def test_minhash_sketch_prefilter_drops_nothing(spark):
     sk_cols = [c for c in banded.columns if c.startswith("sk")]
 
     def pairs(b):
-        has_sk = "sk0" in b.columns
-        cols = ["id_a", "id_b", "sig_a", "sig_b"]
-        if has_sk:
-            cols += [f"{c}_{s}" for s in ("a", "b") for c in sk_cols]
-        left = b.select(
-            "band_key", F.col("id").alias("id_a"),
-            F.col("sig").alias("sig_a"),
-            *([F.col(c).alias(f"{c}_a") for c in sk_cols]
-              if has_sk else []),
-        )
-        right = b.select(
-            "band_key", F.col("id").alias("id_b"),
-            F.col("sig").alias("sig_b"),
-            *([F.col(c).alias(f"{c}_b") for c in sk_cols]
-              if has_sk else []),
-        )
-        cand = (
-            left.join(right, "band_key")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(*cols)
-        )
-        return DD._est_filtered_pairs(cand, 0.5, 64)
+        carry = [c for c in ("sig", *sk_cols) if c in b.columns]
+        return DD._est_filtered_pairs(
+            DD.band_pairs(b, "band_key", carry), 0.5, 64)
 
     with_sketch = {
         (r.id_a, r.id_b): r.est_jaccard for r in pairs(banded).collect()
