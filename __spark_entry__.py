@@ -15,8 +15,10 @@ the external driver's session config, every contract callable pins
 its plan, so a non-UTC driver host cannot silently diverge from the
 oracle.
 
-Implementation lives in cheque_ocr_project_spark.plans.queries; the local
-parity test tests/test_driver_contract.py mirrors the driver's comparison.
+The registry lives in cheque_ocr_project_spark.plans.queries, merged from
+the query-family modules beside it (each Spark query next to its DuckDB
+twin); the local parity test tests/test_driver_contract.py mirrors the
+driver's comparison.
 """
 
 from __future__ import annotations
@@ -26,6 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from cheque_ocr_project_spark.plans import queries as Q
+from cheque_ocr_project_spark.plans.flagship import q_flagship_extract
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -47,7 +50,7 @@ def _pin_session_confs(spark: SparkSession) -> None:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     _pin_session_confs(spark)
-    return Q.q_flagship_extract(spark, SF0001)
+    return q_flagship_extract(spark, SF0001)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

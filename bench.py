@@ -125,9 +125,9 @@ def force(df) -> int:
 
 
 def replicated_transcripts(spark, sf_dir: str, replication: int):
-    from cheque_ocr_project_spark.plans import queries as Q
+    from cheque_ocr_project_spark.sources.io import documents_as_transcripts
 
-    base = Q.documents_as_transcripts(spark, sf_dir)
+    base = documents_as_transcripts(spark, sf_dir)
     reps = F.explode(F.sequence(F.lit(0), F.lit(replication - 1))).alias("rep")
     return (
         base.select("*", reps)
@@ -139,6 +139,7 @@ def replicated_transcripts(spark, sf_dir: str, replication: int):
 def main() -> None:
     from cheque_ocr_project_spark.plans import pipeline as P
     from cheque_ocr_project_spark.plans import queries as Q
+    from cheque_ocr_project_spark.sources.synth import default_drawer_dict
 
     spark = build_session()
     spark.sparkContext.setLogLevel("ERROR")
@@ -162,7 +163,7 @@ def main() -> None:
     # a bare prefix test silently timed the wrong computation for them).
     FLAGSHIP = "flagship_arrow"
     transcripts = None  # staged lazily, right before the flagship passes
-    dd = Q.default_drawer_dict()
+    dd = default_drawer_dict()
 
     def run_record(rec: str) -> None:
         if rec == FLAGSHIP:

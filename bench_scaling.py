@@ -54,12 +54,13 @@ spark = (SparkSession.builder.master(f"local[{cpus}]")
          .config("spark.ui.enabled", "false")
          .getOrCreate())
 spark.sparkContext.setLogLevel("FATAL")
-from cheque_ocr_project_spark.plans import pipeline as P, queries as Q
+from cheque_ocr_project_spark.plans import pipeline as P
+from cheque_ocr_project_spark.sources.synth import default_drawer_dict
 # repartition BEFORE caching: the raw source is one parquet split, and a
 # single-partition cache would feed all workers through one serial scan
 t = bench.replicated_transcripts(spark, sf_dir, replication).repartition(cpus).cache()
 n = t.count()
-dd = Q.default_drawer_dict()
+dd = default_drawer_dict()
 # warmup at FULL parallelism: one complete pass so every python worker is
 # forked + has imported the package before the measured run (steady-state
 # throughput; a cold local[4N] otherwise pays 4N imports inside the measure)

@@ -36,6 +36,9 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from cheque_ocr_project_spark.plans import queries as Q
+from cheque_ocr_project_spark.plans.corpus import q_corpus_filter_v3
+
 DOCS_SCHEMA_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
 
 
@@ -68,8 +71,6 @@ def _finish_stage(stage_dir: Path, rows: int, t0: float) -> None:
 def run(spark: SparkSession, input_dir: str, output_dir: str,
         resume: bool = False, overwrite: bool = False) -> dict:
     """Run (or resume) the pipeline; returns per-stage row counts."""
-    from cheque_ocr_project_spark.plans import queries as Q
-
     out = Path(output_dir)
     # destruction is scoped to the paths THIS pipeline writes (job.py's
     # discipline: an --output pointed at a directory that also holds
@@ -96,7 +97,7 @@ def run(spark: SparkSession, input_dir: str, output_dir: str,
     surv_dir = out / "survivors"
     if not (resume and _stage_done(surv_dir)):
         t0 = time.time()
-        ids = Q.q_corpus_filter_v3(spark, input_dir).select("doc_id")
+        ids = q_corpus_filter_v3(spark, input_dir).select("doc_id")
         docs = spark.read.parquet(f"{input_dir}/documents.parquet")
         kept = docs.join(ids, "doc_id").select(*DOCS_SCHEMA_COLS)
         kept.write.mode("overwrite").parquet(

@@ -184,6 +184,55 @@ def is_junk_v1(col: Column) -> Column:
     )
 
 
+_RX_META = set("\\^$.|?*+()[]{}")
+
+
+def literal_prefix(pattern: str) -> str:
+    """Leading literal run of a regex (chars before the first metachar) —
+    a sound contains() prefilter: the pattern cannot match unless its
+    literal prefix occurs in the text. If the run stops at a quantifier
+    ('?', '*', '{'), the preceding char is optional/repeated and is dropped
+    from the prefix (e.g. 'AUTHORISED?...' -> 'AUTHORISE')."""
+    out = []
+    for ch in pattern:
+        if ch in _RX_META:
+            if ch in "?*{" and out:
+                out.pop()
+            break
+        out.append(ch)
+    return "".join(out)
+
+
+def is_junk_v3(u: Column) -> Column:
+    """V3 junk rule over upper-cased text (60% / 50% coverage rules)."""
+    short_caps = u.rlike(r"^[A-Z]{2,4}$") & ~u.isin(*vocab.SHORT_CAPS_OK_V3)
+    # literal-prefix guards skip the regex for the ~90% of rows that lack
+    # the pattern's anchor text (pure optimization, regex authoritative)
+    pattern_hits = []
+    for p in vocab.JUNK_PATTERNS_V3:
+        # no separate rlike: regexp_extract returns '' on no-match, and the
+        # >= length*0.6 test can only pass on a real match once length >= 2
+        # (enforced below) — one regex scan per pattern instead of two
+        hit = (
+            F.length(F.regexp_extract(u, f"(?i){p}", 0)) >= F.length(u) * 0.6
+        )
+        prefix = literal_prefix(p)
+        if len(prefix) >= 3:
+            hit = u.contains(prefix) & hit
+        pattern_hits.append(hit)
+    variation_hits = [
+        u.contains(j) & (F.lit(len(j)) >= F.length(u) * 0.5)
+        for j in vocab.JUNK_VARIATIONS_V3
+    ]
+    return (
+        u.isNull()
+        | (F.length(u) < 2)
+        | short_caps
+        | reduce(lambda a, b: a | b, pattern_hits)
+        | reduce(lambda a, b: a | b, variation_hits)
+    )
+
+
 def common_name_part_count(words: Column) -> Column:
     """Count of words (with duplicates) that are COMMON_NAME_PARTS —
     scoring semantics (issuer_processor_v.py:428-430)."""

@@ -127,6 +127,27 @@ def is_junk_v1_sql(col: str) -> str:
     )
 
 
+def is_junk_v3_sql(u: str) -> str:
+    """= columns.is_junk_v3 over an upper-cased expression."""
+    caps_ok = ", ".join(q(t) for t in vocab.SHORT_CAPS_OK_V3)
+    short_caps = (
+        f"(regexp_matches({u}, '^[A-Z]{{2,4}}$') AND {u} NOT IN ({caps_ok}))"
+    )
+    pats = " OR ".join(
+        f"(regexp_matches({u}, {rx(p)}, 'i') AND "
+        f"length(regexp_extract({u}, {rx(p)}, 0, 'i')) >= length({u}) * 0.6)"
+        for p in vocab.JUNK_PATTERNS_V3
+    )
+    variations = " OR ".join(
+        f"(contains({u}, {q(j)}) AND {len(j)} >= length({u}) * 0.5)"
+        for j in vocab.JUNK_VARIATIONS_V3
+    )
+    return (
+        f"({u} IS NULL OR length({u}) < 2 OR {short_caps} OR {pats} "
+        f"OR {variations})"
+    )
+
+
 def chain_replace_sql(expr: str, pairs) -> str:
     """Ordered literal replace chain (DuckDB replace())."""
     s = expr

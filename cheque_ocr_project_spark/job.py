@@ -127,7 +127,7 @@ def main(argv=None) -> None:
         ]
         drawer_dict = fuzzy.build_drawer_dict(raw_names)
     else:
-        from cheque_ocr_project_spark.plans.queries import default_drawer_dict
+        from cheque_ocr_project_spark.sources.synth import default_drawer_dict
         drawer_dict = default_drawer_dict()
 
     stats = checkpoint.run_with_checkpoint(

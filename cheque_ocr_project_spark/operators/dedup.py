@@ -25,7 +25,7 @@ caller's columns per side; ``probe_index`` joins a banded batch against
 a persisted bucketed index plus its delta side table; ``overlap_pairs``
 is band_pairs plus the shared-key count and its ratio.
 
-Hash spec (shared with the DuckDB oracle SQL in plans/dedup_sql.py — every
+Hash spec (shared with the DuckDB oracle SQL in plans/near_dup.py — every
 step is exact 64-bit integer arithmetic, so numpy and DuckDB compute
 bit-identical signatures):
 
@@ -75,7 +75,7 @@ DEFAULT_SEED = 13
 def perm_constants(num_perm: int, seed: int = DEFAULT_SEED
                    ) -> tuple[np.ndarray, np.ndarray]:
     """Seeded (a, b) constants < P for the MinHash permutations; the DuckDB
-    oracle renders these same literals (plans/dedup_sql.py)."""
+    oracle renders these same literals (plans/near_dup.py)."""
     rng = np.random.RandomState(seed)
     a = rng.randint(1, POLY_P, size=num_perm).astype(np.int64)
     b = rng.randint(0, POLY_P, size=num_perm).astype(np.int64)

@@ -140,7 +140,7 @@ DEFAULT_ZS_LABELS = ("government cheque", "business payment", "personal cheque")
 
 def zero_shot_overlap(text: str, labels) -> tuple[str, float]:
     """Deterministic fallback: label-word containment ratio; argmax with
-    first-label tie-break. SQL-recomputable (plans/models_sql.py)."""
+    first-label tie-break. SQL-recomputable (plans/flagship.py)."""
     words = set(_ws_split(text[:512].upper()))
     best_label, best = labels[0], -1.0
     for lab in labels:

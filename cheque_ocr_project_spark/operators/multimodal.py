@@ -8,7 +8,7 @@ clearly-marked deterministic stub on ImportError OR decode failure — the
 job can never crash on a codec path (the real decode of a non-image payload
 degrades to the stub row, labeled in ``decoder``).
 
-Stub feature spec (shared with the DuckDB oracle in plans/media_sql.py):
+Stub feature spec (shared with the DuckDB oracle in plans/flagship.py):
 ``seed = polyhash(payload-as-utf8-text)`` — the same 31-bit polynomial hash
 as the dedup operators — and every stub feature is an exact integer formula
 of (seed, meta), so the driver recomputes all three feature tables.

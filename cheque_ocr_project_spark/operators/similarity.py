@@ -75,7 +75,7 @@ def plane_coeffs(dim: int, n_planes: int, n_bands: int,
 
     ``c(b,p,d) = ((seed*7919 + b*1000003 + p*1009 + d) * 2654435761
                   mod 2^31-1) mod 5 - 2`` — exact 64-bit integer arithmetic,
-    so the DuckDB oracle (plans/similarity_sql.py) renders the identical
+    so the DuckDB oracle (plans/ann.py) renders the identical
     planes and the LSH candidate sets match bit-for-bit. Sign bits come from
     integer dot products over the quantized vector (floor(x*1000 + 0.5)),
     which are order-independent — no float-summation ambiguity."""

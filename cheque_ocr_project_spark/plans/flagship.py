@@ -1,26 +1,52 @@
-"""DuckDB oracle SQL for the flagship extraction pipeline (no-fuzzy variant).
+"""Flagship family: the extraction pipeline, its variants and model and
+media stages as registry queries, with their DuckDB twins.
 
-Renders the ENTIRE deterministic flagship path — main-content strip (HTML /
-PDF / plain), line relation, classification cascade, payee grammars +
-government rules, per-line clean/validity/scoring, FOR-scan short-circuit,
-top-1 select, threshold gates, status — as one DuckDB statement over the
-documents-as-transcripts mapping. The only stage of the real flagship this
-cannot express is the difflib fuzzy dictionary join (J2); with an empty
-drawer dictionary that stage is the identity, so ``flagship_nofuzzy``
-(plans/queries.py) is the SQL-provable twin of the flagship
+``sql_flagship_nofuzzy`` renders the ENTIRE deterministic flagship path —
+main-content strip (HTML / PDF / plain), line relation, classification
+cascade, payee grammars + government rules, per-line clean/validity/
+scoring, FOR-scan short-circuit, top-1 select, threshold gates, status —
+as one DuckDB statement over the documents-as-transcripts mapping. The
+only stage of the real flagship this cannot express is the difflib fuzzy
+dictionary join (J2); with an empty drawer dictionary that stage is the
+identity, so ``flagship_nofuzzy`` is the SQL-provable twin of the flagship
 (reference lifecycle: issuer_processor_v.py:378-496, ocr_engine.py:109-192,
 cheque_classifier.py:122-194, government_payee_rules.py:127-175).
 
 Every fragment renders the Python oracle (oracle/predicates.py,
 oracle/boilerplate.py, oracle/issuer.py, ...) condition-for-condition, in
-the oracle's float operation order, so doubles are bit-identical."""
+the oracle's float operation order, so doubles are bit-identical. The
+model-phase twins render the deterministic fallbacks the registered model
+queries run without ``transformers``; the media twins mirror
+operators/multimodal.py's integer stub features.
+"""
 
 from __future__ import annotations
 
-from cheque_ocr_project_spark.functions import ducksql as D
-from cheque_ocr_project_spark.oracle import vocab
+from functools import partial
 
-THRESHOLD = 0.90
+from pyspark.sql import functions as F
+
+from cheque_ocr_project_spark.functions import columns as C
+from cheque_ocr_project_spark.functions import ducksql as D
+from cheque_ocr_project_spark.operators import extract as X
+from cheque_ocr_project_spark.operators import models as M
+from cheque_ocr_project_spark.operators import multimodal as MM
+from cheque_ocr_project_spark.operators.extract import par
+from cheque_ocr_project_spark.oracle import issuer as oracle_issuer
+from cheque_ocr_project_spark.oracle import vocab
+from cheque_ocr_project_spark.oracle.variants import EARLY_EXIT, VARIANT_NAMES
+from cheque_ocr_project_spark.plans import pipeline as P
+from cheque_ocr_project_spark.plans.grammar import PAYEE_PATTERNS_SQLSAFE
+from cheque_ocr_project_spark.plans.near_dup import poly_sql
+from cheque_ocr_project_spark.plans.text_stats import STOPWORDS
+from cheque_ocr_project_spark.sources import scratch
+from cheque_ocr_project_spark.sources.io import (
+    documents_as_transcripts, read_documents,
+)
+from cheque_ocr_project_spark.sources.synth import default_drawer_dict
+from cheque_ocr_project_spark.streaming import stream as ST
+
+
 NL = "chr(10)"
 
 
@@ -199,23 +225,6 @@ def designation_literal(u: str) -> str:
     return f"CASE {whens} ELSE NULL END"
 
 
-# lookahead-free rewrites of vocab.PAYEE_PATTERNS — group 1 is identical
-# (the asserted terminator becomes consumed; capture unaffected). full_text
-# is newline-free so '$' dialects also agree.
-PAYEE_PATTERNS_SQLSAFE = (
-    r"PAY\s*TO\s*[:\s]*([A-Z][A-Z\s\.]+?)(\s+RUPEES|\s+RS\.?|\s*$)",
-    r"ORDER\s*OF\s*[:\s]*([A-Z][A-Z\s\.]+?)(\s+RUPEES|\s+RS\.?|\s*$)",
-    r"[Pp][Aa][Yy]\s*[:\s]*([A-Z][A-Z\s\.]{2,30})",
-    r"BEARER\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"OR\s*BEARER\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"FAVOUR\s+OF\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"FAVOR\s+OF\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"BENEFICIARY\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"([A-Z][A-Z\s\.]{3,30})\s+(RUPEES|RS\.?)",
-    r"^([A-Z][A-Z\s\.]{5,50})$",
-)
-
-
 def payee_raw(u: str) -> str:
     whens = []
     for p in PAYEE_PATTERNS_SQLSAFE:
@@ -336,9 +345,8 @@ def remove_prefixes_v3(expr: str) -> str:
     return D.pystrip_sql(s)
 
 
-def sql_flagship_v3_nofuzzy(threshold: float = 0.85) -> str:
-    from cheque_ocr_project_spark.plans.queries_v3 import _junk_v3_sql
-
+def sql_flagship_v3_nofuzzy(
+        threshold: float = oracle_issuer.DEFAULT_THRESHOLD_V3) -> str:
     def valid_business_v3(u: str) -> str:
         bank_hit = " OR ".join(
             f"(contains({u}, {D.q(b)}) AND {len(b)} >= length({u}) * 0.7)"
@@ -348,7 +356,7 @@ def sql_flagship_v3_nofuzzy(threshold: float = 0.85) -> str:
         digits = n_digit(u)
         total = f"length({u})"
         return f"""({u} IS NOT NULL AND length({u}) >= 3
-      AND NOT {_junk_v3_sql(u)}
+      AND NOT {D.is_junk_v3_sql(u)}
       AND NOT ({bank_hit})
       AND (CASE WHEN {digits} > 0 AND {alpha} = 0 THEN length({u}) >= 8
            ELSE NOT (CASE WHEN {alpha} > 0
@@ -359,7 +367,7 @@ def sql_flagship_v3_nofuzzy(threshold: float = 0.85) -> str:
     def valid_drawer_v3(u: str) -> str:
         return (
             f"({u} IS NOT NULL AND length({u}) >= 3 "
-            f"AND NOT {_junk_v3_sql(u)} AND {valid_business_v3(u)})"
+            f"AND NOT {D.is_junk_v3_sql(u)} AND {valid_business_v3(u)})"
         )
 
     short_review = (
@@ -399,7 +407,7 @@ lines2 AS (
 cands AS (
   SELECT conv_id, turn_idx, line_idx, conf, cleaned
   FROM lines2
-  WHERE cleaned <> '' AND NOT {_junk_v3_sql('cleaned')}
+  WHERE cleaned <> '' AND NOT {D.is_junk_v3_sql('cleaned')}
     AND {valid_drawer_v3('cleaned')}
 ),
 top1 AS (
@@ -420,7 +428,7 @@ per_turn AS (
 )
 SELECT conv_id, turn_idx, issuer_v3, confidence_v3, matched_with,
   CASE
-    WHEN issuer_v3 <> 'NO_VALID_TEXT' AND {_junk_v3_sql('issuer_v3')}
+    WHEN issuer_v3 <> 'NO_VALID_TEXT' AND {D.is_junk_v3_sql('issuer_v3')}
       THEN 'JUNK-FILTERED'
     WHEN confidence_v3 >= {threshold} AND length(issuer_v3) > 0
          AND issuer_v3 <> 'NO_VALID_TEXT'
@@ -440,7 +448,8 @@ FROM per_turn"""
 # full statement
 # ---------------------------------------------------------------------------
 
-def sql_flagship_nofuzzy(threshold: float = THRESHOLD) -> str:
+def sql_flagship_nofuzzy(
+        threshold: float = oracle_issuer.DEFAULT_THRESHOLD_V1) -> str:
     u = "upper(full_text)"
     cat3 = f"(contains({u}, 'GOVERNMENT ACCOUNT') OR contains({u}, 'GOVT ACCOUNT'))"
     cat2 = (
@@ -671,3 +680,546 @@ SELECT p.conv_id, p.turn_idx, p.success, p.error, p.cheque_type,
        '{vocab.FIXED_OPR_NO}' AS opr_no, FALSE AS file_mark
 FROM payeed p
 JOIN issuer i ON i.conv_id = p.conv_id AND i.turn_idx = p.turn_idx"""
+
+
+# ---------------------------------------------------------------------------
+# flagship: full extraction pipeline over documents-as-transcripts
+# (difflib fuzzy join → rows-only check, no SQL oracle)
+# ---------------------------------------------------------------------------
+
+def q_flagship_extract(spark, sf_dir):
+    transcripts = documents_as_transcripts(spark, sf_dir)
+    return P.extract_pipeline(spark, transcripts, default_drawer_dict()).drop(
+        "main_text"
+    )
+
+
+def q_flagship_nofuzzy(spark, sf_dir):
+    """The flagship pipeline with an empty drawer dictionary: every stage
+    except the difflib fuzzy join (which empty-dict reduces to the identity)
+    — and therefore fully SQL-provable. The fuzzy flagship keeps its
+    rows-only driver check; its correctness evidence is the pytest equality
+    suite (arrow == pure-Python oracle)."""
+    transcripts = documents_as_transcripts(spark, sf_dir)
+    return P.extract_pipeline(spark, transcripts, []).drop("main_text")
+
+
+def q_streaming_extract_nofuzzy(spark, sf_dir):
+    """The incremental-ingest S-family path under the driver oracle:
+    stream_extract (streaming/stream.py — foreachBatch over the SAME
+    extract_turns_udf the batch flagship runs, parquet sink partitioned
+    by batch_id for at-least-once idempotency; graft analog of the
+    reference's incremental batch machinery, parallel_processor.py)
+    driven availableNow over staged transcripts, then the SINK read back
+    as the result. Empty drawer dictionary makes every stage exact-SQL
+    (the fuzzy join reduces to the identity), so the oracle is the same
+    sql_flagship_nofuzzy the batch row uses — proving streaming ingest
+    lands bit-identical records to the batch pipeline, through the real
+    parquet sink rather than a memory adapter. foreachBatch availableNow
+    self-terminates (no state timers), so a plain awaitTermination is
+    sound here, unlike the stateful adapters. Staging, sink and
+    checkpoint dirs are pid-tagged scratch dirs; hour-old siblings of dead
+    runs are swept."""
+    scratch.sweep("extract_stream_")
+    tr = documents_as_transcripts(spark, sf_dir)
+    stage = scratch.mkdtemp("extract_stream_in_")
+    tr.coalesce(1).write.mode("overwrite").parquet(stage)
+    out_dir = scratch.mkdtemp("extract_stream_out_")
+    ckpt = scratch.mkdtemp("extract_stream_ckpt_")
+    q = ST.stream_extract(
+        spark, stage, out_dir, ckpt, drawer_dict=[],
+        threshold=oracle_issuer.DEFAULT_THRESHOLD_V1,
+    )
+    if not q.awaitTermination(240):
+        q.stop()
+        raise RuntimeError(
+            "streaming extract did not terminate within 240s — refusing to "
+            "read a potentially partial sink (loud-incomplete discipline, "
+            "same as q_sessionize_streaming)"
+        )
+    return spark.read.parquet(out_dir).drop("batch_id", "main_text")
+
+
+def q_flagship_extract_v3(spark, sf_dir):
+    transcripts = documents_as_transcripts(spark, sf_dir)
+    return X.extract_turns_v3_udf(spark, transcripts, default_drawer_dict())
+
+
+def q_flagship_v3_nofuzzy(spark, sf_dir):
+    """V3 pipeline with an empty drawer dictionary — the difflib stage is
+    the identity, so the whole path is SQL-provable (same pattern as
+    flagship_nofuzzy)."""
+    transcripts = documents_as_transcripts(spark, sf_dir)
+    return X.extract_turns_v3_udf(spark, transcripts, [])
+
+
+# ---------------------------------------------------------------------------
+# W2/P11: preprocessing-variant try-all-keep-best
+# (issuer_processor_v2.py:296-330, IssuerBatchProcessorV3.py:374-393)
+# ---------------------------------------------------------------------------
+
+def _mean_line_conf(v):
+    """Mean per-line confidence over the non-blank lines of ``v`` (0.0
+    when there are none) — the variant score and the ensemble's OCR
+    signal."""
+    lines = F.filter(F.split(v, "\n"), lambda ln: ln.rlike(r"\S"))
+    line_conf = lambda ln: (  # noqa: E731 — = oracle.issuer.line_confidence
+        F.when(F.length(ln) == 0, F.lit(0.0)).otherwise(
+            0.6 + 0.4 * (C.n_alpha(ln) / F.length(ln))
+        )
+    )
+    s = F.aggregate(lines, F.lit(0.0), lambda acc, ln: acc + line_conf(ln))
+    return F.when(F.size(lines) > 0, s / F.size(lines)).otherwise(0.0)
+
+
+def q_variant_keep_best(spark, sf_dir):
+    """W2 idiom end-to-end: variant struct columns collapsed with
+    when-chain early exit (>= 0.95) + greatest() over structs (max conf,
+    earliest variant on ties via neg_idx). = oracle.variants.keep_best."""
+    t = F.coalesce(F.col("text"), F.lit(""))
+    variants = [
+        t,
+        F.regexp_replace(t, r"<[^>]*>", ""),
+        F.trim(F.regexp_replace(t, r"\s+", " ")),
+    ]
+    structs = []
+    for i, (name, v) in enumerate(zip(VARIANT_NAMES, variants)):
+        structs.append(
+            F.struct(
+                _mean_line_conf(v).alias("conf"),
+                F.lit(-i).alias("neg_idx"),
+                F.lit(name).alias("name"),
+                v.alias("vtext"),
+            )
+        )
+    chain = None
+    for s in structs:
+        hit = s.getField("conf") >= EARLY_EXIT
+        chain = F.when(hit, s) if chain is None else chain.when(hit, s)
+    chosen = chain.otherwise(F.greatest(*structs))
+
+    lines = F.filter(
+        F.split(F.col("ch.vtext"), "\n"), lambda ln: ln.rlike(r"\S")
+    )
+    u = F.upper(F.array_join(lines, " "))
+    staged = (
+        par(read_documents(spark, sf_dir))
+        .select("doc_id", chosen.alias("ch"))
+        .select(
+            "doc_id",
+            F.col("ch.name").alias("best_variant"),
+            F.col("ch.conf").alias("best_conf"),
+            u.alias("u"),
+        )
+        # Exchange barrier: the payee chain below references `u` ~270 times
+        # (10 patterns x rlike/extract/25-term bank gate); without the
+        # barrier CollapseProject would inline the whole variant-confidence
+        # machinery into every reference (measured 97s -> ~3s at sf0.1).
+        .repartition(F.col("doc_id"))
+    )
+    payee = None
+    for p in PAYEE_PATTERNS_SQLSAFE:
+        cand = F.regexp_replace(
+            F.regexp_extract(F.col("u"), p, 1), r"^\s+|\s+$", ""
+        )
+        ok = F.col("u").rlike(p) & ~C.is_bank_or_metadata(cand)
+        payee = F.when(ok, cand) if payee is None else payee.when(ok, cand)
+    payee = payee.otherwise(F.lit(None).cast("string"))
+
+    return staged.select(
+        "doc_id", "best_variant", "best_conf", payee.alias("payee_raw")
+    )
+
+
+def sql_variant_keep_best():
+    def vconf(v):
+        lines = (
+            f"list_filter(string_split({v}, chr(10)), "
+            f"ln -> regexp_matches(ln, '[^ \\t\\n\\x0b\\f\\r]'))"
+        )
+        fold = (
+            f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+            f"list_transform({lines}, ln -> {line_conf('ln')})), "
+            f"(a, b) -> a + b)"
+        )
+        return (
+            f"CASE WHEN len({lines}) > 0 THEN {fold} / len({lines}) "
+            f"ELSE 0.0 END"
+        )
+
+    return f"""
+WITH v AS (
+  SELECT doc_id, coalesce(text, '') AS t,
+         regexp_replace(coalesce(text, ''), '<[^>]*>', '', 'g') AS dom,
+         trim(regexp_replace(coalesce(text, ''), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')) AS ws
+  FROM documents
+),
+conf AS (
+  SELECT doc_id, t, dom, ws,
+         {vconf('t')} AS c0, {vconf('dom')} AS c1, {vconf('ws')} AS c2
+  FROM v
+),
+pick AS (
+  SELECT *, CASE WHEN c0 >= 0.95 THEN 0 WHEN c1 >= 0.95 THEN 1
+                 WHEN c2 >= 0.95 THEN 2
+                 WHEN c0 >= c1 AND c0 >= c2 THEN 0
+                 WHEN c1 >= c2 THEN 1 ELSE 2 END AS bi
+  FROM conf
+),
+sel AS (
+  SELECT doc_id,
+         CASE bi WHEN 0 THEN 'plain' WHEN 1 THEN 'dom_stripped'
+                 ELSE 'ws_norm' END AS best_variant,
+         CASE bi WHEN 0 THEN c0 WHEN 1 THEN c1 ELSE c2 END AS best_conf,
+         CASE bi WHEN 0 THEN t WHEN 1 THEN dom ELSE ws END AS vtext
+  FROM pick
+),
+ft AS (
+  SELECT doc_id, best_variant, best_conf,
+         upper(array_to_string(list_filter(string_split(vtext, chr(10)),
+               ln -> regexp_matches(ln, '[^ \\t\\n\\x0b\\f\\r]')), ' ')) AS u
+  FROM sel
+)
+SELECT doc_id, best_variant, best_conf, {payee_raw('u')} AS payee_raw
+FROM ft"""
+
+
+# ---------------------------------------------------------------------------
+# model phase (U2-U5 plumbing + K3 ensemble) — the registered queries
+# exercise the deterministic fallbacks (no transformers installed);
+# the `backend` column makes a real-model environment visibly diverge.
+# ---------------------------------------------------------------------------
+
+TRANSCRIPT_KEYS = "source || '-' || CAST(doc_id // 2147483648 AS VARCHAR) AS conv_id, CAST(doc_id % 2147483648 AS INT) AS turn_idx"
+
+
+def q_zero_shot_classify(spark, sf_dir):
+    return M.zero_shot_classify(spark, documents_as_transcripts(spark, sf_dir))
+
+
+def sql_zero_shot_classify(labels=M.DEFAULT_ZS_LABELS) -> str:
+    scores = []
+    for lab in labels:
+        lw = lab.upper().split()
+        hits = " + ".join(
+            f"(CASE WHEN list_contains(tw, {D.q(w)}) THEN 1 ELSE 0 END)"
+            for w in lw
+        )
+        scores.append(f"(({hits}) / {len(lw)})")
+    best = f"greatest({', '.join(scores)})"
+    label_case = "CASE " + " ".join(
+        f"WHEN {s} = best THEN {D.q(lab)}"
+        for s, lab in zip(scores, labels)
+    ) + " END"
+    return f"""
+WITH t AS (
+  SELECT {TRANSCRIPT_KEYS},
+         list_filter(string_split_regex(upper(text[1:512]), '[ \\t\\n\\x0b\\f\\r]+'),
+                     x -> x <> '') AS tw
+  FROM documents
+),
+scored AS (
+  SELECT conv_id, turn_idx, tw, {best} AS best FROM t
+)
+SELECT conv_id, turn_idx, {label_case} AS label,
+       CAST(best AS DOUBLE) AS score, 'overlap' AS backend
+FROM scored"""
+
+
+def q_ner_entities(spark, sf_dir):
+    """U2 NER surface (deterministic fallback in this container), exploded
+    to one row per entity so the oracle can hash scalar columns."""
+    out = M.ner_entities(spark, documents_as_transcripts(spark, sf_dir))
+    return out.select(
+        "conv_id", "turn_idx",
+        F.posexplode("entities").alias("ent_idx", "e"),
+        "backend",
+    ).select(
+        "conv_id", "turn_idx", F.col("ent_idx").cast("int").alias("ent_idx"),
+        F.col("e.entity").alias("entity"), F.col("e.label").alias("label"),
+        F.col("e.score").alias("score"), "backend",
+    )
+
+
+def sql_ner_entities() -> str:
+    """U2 deterministic-fallback NER twin (operators/models._load_ner fake
+    branch): non-overlapping all-caps spans of 1-4 words (2+ letters each)
+    over text[:512].upper(); ORG iff any span word is a hint literal;
+    score = round(min(1, len/30 + 0.5), 4); first 10 spans. RE2 and Python
+    re agree on \\b + greedy {0,3} for this pattern (leftmost, greedy)."""
+    pat = r"\b([A-Z][A-Z]+(?:\s+[A-Z][A-Z]+){0,3})\b"
+    hints = ", ".join(D.q(h) for h in M._FAKE_ORG_HINTS)
+    return f"""
+WITH t AS (
+  SELECT {TRANSCRIPT_KEYS},
+         regexp_extract_all(upper(text[1:512]), {D.rx(pat)}, 1) AS spans
+  FROM documents
+),
+e AS (
+  SELECT conv_id, turn_idx,
+         unnest(range(1, len(spans) + 1)) AS i,
+         unnest(spans) AS entity
+  FROM t
+)
+SELECT conv_id, turn_idx, CAST(i - 1 AS INT) AS ent_idx, entity,
+       CASE WHEN len(list_filter(string_split(entity, ' '),
+                                 w -> w IN ({hints}))) > 0
+            THEN 'ORG' ELSE 'PER' END AS label,
+       round(least(1.0, length(entity) / 30.0 + 0.5), 4) AS score,
+       'fake' AS backend
+FROM e WHERE i <= 10"""
+
+
+def q_qa_extract(spark, sf_dir):
+    return M.qa_extract(spark, documents_as_transcripts(spark, sf_dir))
+
+
+def sql_qa_extract() -> str:
+    u = "regexp_replace(upper(text[1:512]), '[\\n\\r]+$', '')"
+    whens = []
+    for p in PAYEE_PATTERNS_SQLSAFE:
+        cand = pystrip(f"regexp_extract(u, {D.rx(p)}, 1)")
+        whens.append(
+            f"WHEN regexp_matches(u, {D.rx(p)}) "
+            f"AND NOT {is_bank_or_metadata(cand)} THEN {cand}"
+        )
+    answer = "CASE " + " ".join(whens) + " ELSE NULL END"
+    return f"""
+WITH t AS (
+  SELECT {TRANSCRIPT_KEYS}, {u} AS u FROM documents
+),
+ans AS (
+  SELECT conv_id, turn_idx, {answer} AS answer FROM t
+)
+SELECT conv_id, turn_idx, answer,
+       CASE WHEN answer IS NULL THEN 0.0
+            ELSE 0.5 + 0.5 * least(1.0, length(answer) / 30.0) END AS score,
+       'heuristic' AS backend
+FROM ans"""
+
+
+def q_t5_spell(spark, sf_dir):
+    out = M.t5_spell_correct(spark, documents_as_transcripts(spark, sf_dir))
+    # UPPER form: DuckDB lacks initcap, and upper∘title is the identity on
+    # the [A-Z ] output charset (same convention as spelling_correct)
+    return out.select(
+        "conv_id", "turn_idx", F.upper("corrected").alias("corrected"),
+        "spell_conf", "backend",
+    )
+
+
+def sql_t5_spell() -> str:
+    # mirror of models.spell_correct_deterministic's exotic-separator
+    # pre-normalization (\x1c-\x1f, \x85 -> space). The class is rendered
+    # with RE2 hex escapes — NOT raw control bytes — so the generated SQL
+    # stays byte-clean and the characters are visible in logs/diffs.
+    snip = ("regexp_replace(text[1:512], "
+            r"'[\x1c-\x1f\x{0085}]', ' ', 'g')")
+    corrected = D.correct_spelling_sql(snip)
+    a = (f"list_filter(string_split_regex(upper({snip}), "
+         f"'[ \\t\\n\\x0b\\f\\r]+'), x -> x <> '')")
+    b = "list_filter(string_split_regex(corr, '[ \\t\\n\\x0b\\f\\r]+'), x -> x <> '')"
+    return f"""
+WITH t AS (
+  SELECT {TRANSCRIPT_KEYS}, text, {corrected} AS corr FROM documents
+),
+w AS (
+  SELECT conv_id, turn_idx, corr, {a} AS wa, {b} AS wb FROM t
+)
+SELECT conv_id, turn_idx, corr AS corrected,
+       CASE WHEN greatest(len(wa), len(wb)) = 0 THEN 1.0
+            ELSE len(list_filter(range(1, greatest(len(wa), len(wb)) + 1),
+                                 i -> wa[i] = wb[i])) * 1.0
+                 / greatest(len(wa), len(wb)) END AS spell_conf,
+       'map' AS backend
+FROM w"""
+
+
+CAP_SPAN_RX = r"\b([A-Z][A-Z]+(?:\s+[A-Z][A-Z]+){0,3})\b"
+
+
+def q_model_ensemble(spark, sf_dir):
+    """K3 ensemble confidence wired end-to-end: deterministic per-turn
+    component signals combined with the reference's weights
+    (ai_processor.py:75-80) via models.ensemble_confidence."""
+    d = documents_as_transcripts(spark, sf_dir)
+    ocr = _mean_line_conf(F.col("text"))
+    u512 = F.upper(F.substring(F.col("text"), 1, 512))
+    caps = F.size(
+        F.regexp_extract_all(u512, F.lit(CAP_SPAN_RX), F.lit(1))
+    )
+    ner = F.least(F.lit(1.0), caps / F.lit(10.0))
+    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"[a-z]+"), F.lit(0))
+    stop_hits = F.size(F.filter(toks, lambda w: w.isin(*STOPWORDS)))
+    context = F.when(F.size(toks) > 0, stop_hits / F.size(toks)).otherwise(0.0)
+    spelling = F.lit(1.0) - C.n_digit(F.col("text")) / F.length(F.col("text"))
+    # r08: stage the four component signals once, then combine from
+    # attribute refs — the inline form re-evaluated every heavy HOF
+    # component a second time inside the ensemble expression (same
+    # doubles either way); par parallelizes the single-file scan.
+    staged = par(d).select(
+        "conv_id", "turn_idx",
+        ocr.alias("ocr_conf"), ner.alias("ner_conf"),
+        context.alias("context_conf"), spelling.alias("spelling_conf"),
+    )
+    return staged.select(
+        "conv_id", "turn_idx",
+        "ocr_conf", "ner_conf", "context_conf", "spelling_conf",
+        M.ensemble_confidence(
+            F.col("ocr_conf"), F.col("ner_conf"),
+            F.col("context_conf"), F.col("spelling_conf"),
+        ).alias("ensemble"),
+    )
+
+
+def sql_model_ensemble() -> str:
+    """K3: 0.3*ocr + 0.4*ner + 0.2*context + 0.1*spelling, every component
+    deterministic and recomputable."""
+    lines = "list_filter(string_split(text, chr(10)), ln -> regexp_matches(ln, '[^ \\t\\n\\x0b\\f\\r]'))"
+    conf_fold = (
+        f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+        f"list_transform(lines, ln -> {line_conf('ln')})), (a, b) -> a + b)"
+    )
+    caps = f"len(regexp_extract_all(upper(text[1:512]), {D.rx(CAP_SPAN_RX)}, 1))"
+    stop_list = ", ".join(D.q(w) for w in STOPWORDS)
+    toks = "regexp_extract_all(lower(text), '[a-z]+')"
+    context = (
+        f"CASE WHEN len({toks}) > 0 THEN "
+        f"len(list_filter({toks}, w -> w IN ({stop_list}))) * 1.0 / len({toks}) "
+        f"ELSE 0.0 END"
+    )
+    spelling = (
+        "1.0 - length(regexp_replace(text, '[^0-9]', '', 'g')) / length(text)"
+    )
+    return f"""
+WITH t AS (
+  SELECT {TRANSCRIPT_KEYS}, text, {lines} AS lines FROM documents
+),
+parts AS (
+  SELECT conv_id, turn_idx,
+    CASE WHEN len(lines) > 0 THEN {conf_fold} / len(lines) ELSE 0.0 END AS ocr_conf,
+    least(1.0, {caps} / 10.0) AS ner_conf,
+    {context} AS context_conf,
+    {spelling} AS spelling_conf
+  FROM t
+)
+SELECT conv_id, turn_idx, ocr_conf, ner_conf, context_conf, spelling_conf,
+       0.3 * ocr_conf + 0.4 * ner_conf + 0.2 * context_conf
+         + 0.1 * spelling_conf AS ensemble
+FROM parts"""
+
+
+# ---------------------------------------------------------------------------
+# Multimodal plumbing (stubbed decode; rows-only checks)
+# ---------------------------------------------------------------------------
+
+FRAME_FPS = 1.0
+SEED = poly_sql("text", 7)
+N = "octet_length(encode(text))"
+WIDTH = f"(({N} % 640) + 32)"
+HEIGHT = f"((({N} * 7) % 480) + 32)"
+DURATION = f"((({N} * 31) % 60000) + 1000)"
+
+
+def q_media_image_features(spark, sf_dir):
+    media = MM.media_from_documents(read_documents(spark, sf_dir))
+    return MM.image_features(media)
+
+
+def sql_media_image_features() -> str:
+    return f"""
+WITH img AS (
+  SELECT doc_id AS media_id, {SEED} AS seed,
+         {WIDTH} AS w, {HEIGHT} AS h
+  FROM documents WHERE doc_id % 3 = 0
+)
+SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+       ((seed + 31 * w + 7 * h) % 256) / 255.0 AS mean_luma,
+       ((seed * 13 + w + h) % 100) / 100.0 AS edge_density,
+       'stub' AS decoder
+FROM img"""
+
+
+def q_media_audio_features(spark, sf_dir):
+    media = MM.media_from_documents(read_documents(spark, sf_dir))
+    return MM.audio_features(media)
+
+
+def sql_media_audio_features() -> str:
+    return f"""
+WITH aud AS (
+  SELECT doc_id AS media_id, {SEED} AS seed, {N} AS n
+  FROM documents WHERE doc_id % 3 = 1
+)
+SELECT media_id, CAST(16000 AS INT) AS sample_rate,
+       ((seed * 17 + n) % 1000) / 1000.0 AS rms,
+       CAST((seed * 7 + n * 3) % 1000 AS INT) AS zero_crossings
+FROM aud"""
+
+
+def q_media_frame_sample(spark, sf_dir):
+    media = MM.media_from_documents(read_documents(spark, sf_dir))
+    return MM.sample_frames(media, fps=FRAME_FPS)
+
+
+def sql_media_frame_sample(fps: float = 1.0) -> str:
+    return f"""
+WITH vid AS (
+  SELECT doc_id AS media_id, {SEED} AS seed,
+         greatest(1, CAST(floor({DURATION} / 1000.0 * {fps}) AS INT)) AS nf
+  FROM documents WHERE doc_id % 3 = 2
+),
+frames AS (
+  SELECT media_id, seed, unnest(range(0, nf)) AS i FROM vid
+)
+SELECT media_id, CAST(i AS INT) AS frame_idx,
+       CAST(floor(i * 1000 / {fps}) AS INT) AS ts_ms,
+       ((seed >> (i % 24)) & 255) / 255.0 AS frame_luma
+FROM frames"""
+
+
+def q_media_resize(spark, sf_dir):
+    media = MM.media_from_documents(read_documents(spark, sf_dir))
+    out = MM.resize_images(media, scale_percent=50)
+    return out.select(
+        "media_id", "width", "height",
+        F.octet_length("payload").alias("payload_bytes"),
+    )
+
+
+def sql_media_resize():
+    # mirrors media_from_documents + resize_images for image-kind docs.
+    # floor() matches Spark's truncating int cast (DuckDB CAST rounds).
+    return """
+SELECT doc_id AS media_id,
+  CAST(floor((((octet_length(encode(text)) % 640) + 32) * 50) / 100.0) AS INT) AS width,
+  CAST(floor((((octet_length(encode(text)) * 7 % 480) + 32) * 50) / 100.0) AS INT) AS height,
+  greatest(CAST(floor((octet_length(encode(text)) * 50) / 100.0) AS INT), 1) AS payload_bytes
+FROM documents WHERE doc_id % 3 = 0"""
+
+
+# ---------------------------------------------------------------------------
+# registry
+# ---------------------------------------------------------------------------
+
+REGISTRY: dict[str, tuple] = {
+    "flagship_extract": (q_flagship_extract, None),
+    "flagship_nofuzzy": (q_flagship_nofuzzy, sql_flagship_nofuzzy),
+    "streaming_extract_nofuzzy": (
+        q_streaming_extract_nofuzzy, sql_flagship_nofuzzy
+    ),
+    "flagship_extract_v3": (q_flagship_extract_v3, None),
+    "flagship_v3_nofuzzy": (q_flagship_v3_nofuzzy, sql_flagship_v3_nofuzzy),
+    "variant_keep_best": (q_variant_keep_best, sql_variant_keep_best),
+    "zero_shot_classify": (q_zero_shot_classify, sql_zero_shot_classify),
+    "ner_entities": (q_ner_entities, sql_ner_entities),
+    "qa_extract": (q_qa_extract, sql_qa_extract),
+    "t5_spell": (q_t5_spell, sql_t5_spell),
+    "model_ensemble": (q_model_ensemble, sql_model_ensemble),
+    "media_image_features": (q_media_image_features, sql_media_image_features),
+    "media_audio_features": (q_media_audio_features, sql_media_audio_features),
+    "media_frame_sample": (
+        q_media_frame_sample, partial(sql_media_frame_sample, fps=FRAME_FPS)
+    ),
+    "media_resize": (q_media_resize, sql_media_resize),
+}

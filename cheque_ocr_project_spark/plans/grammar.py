@@ -1,26 +1,505 @@
-"""Driver-contract queries, batch 2: V3-variant operators + remaining
-reference grammars (SURVEY.md §2: P2/P4/P7, F6-F8, F14, F17, K2, A1, W3,
-C3-C5, and the simple issuer extractor from parallel_processor.py).
+"""Grammar family: the reference's text grammars as registry queries.
 
-Same contract as plans/queries.py: Spark DataFrame query + DuckDB oracle
-SQL generated from the shared vocab, identical aliases both sides.
+Cleaning, junk and garbage predicates, the classification cascade, payee
+and field grammars, the V3 variants, issuer grammars, the levenshtein and
+containment dictionary joins, and the star-schema analytics — each a Spark
+query (native Catalyst expressions, built from the same vocab as the
+flagship pipeline) beside its DuckDB twin, with identical output aliases.
+The Catalyst builders these queries share (plain main-content strip,
+officer designation, government-entity rule, payee section and payee
+grammar) live here too; each cites the oracle function it must equal.
+
+SQL-dialect note: DuckDB regex is RE2 (no lookahead), so the queries that
+need terminator context (``payee_extract``) use lookahead-free rewrites of
+the reference patterns ON BOTH SIDES; the flagship pipeline keeps the
+faithful Python-``re`` grammars (proven equal to the oracle in
+tests/test_pipeline_equality.py).
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 from cheque_ocr_project_spark.functions import columns as C
 from cheque_ocr_project_spark.functions import ducksql as D
 from cheque_ocr_project_spark.operators.extract import par
 from cheque_ocr_project_spark.oracle import vocab
+from cheque_ocr_project_spark.sources.io import read_documents
+
+# lookahead-free rewrites of vocab.PAYEE_PATTERNS — group 1 is identical
+# (the asserted terminator becomes consumed; capture unaffected)
+PAYEE_PATTERNS_SQLSAFE = (
+    r"PAY\s*TO\s*[:\s]*([A-Z][A-Z\s\.]+?)(\s+RUPEES|\s+RS\.?|\s*$)",
+    r"ORDER\s*OF\s*[:\s]*([A-Z][A-Z\s\.]+?)(\s+RUPEES|\s+RS\.?|\s*$)",
+    r"[Pp][Aa][Yy]\s*[:\s]*([A-Z][A-Z\s\.]{2,30})",
+    r"BEARER\s*[:\s]*([A-Z][A-Z\s\.]+)",
+    r"OR\s*BEARER\s*[:\s]*([A-Z][A-Z\s\.]+)",
+    r"FAVOUR\s+OF\s*[:\s]*([A-Z][A-Z\s\.]+)",
+    r"FAVOR\s+OF\s*[:\s]*([A-Z][A-Z\s\.]+)",
+    r"BENEFICIARY\s*[:\s]*([A-Z][A-Z\s\.]+)",
+    r"([A-Z][A-Z\s\.]{3,30})\s+(RUPEES|RS\.?)",
+    r"^([A-Z][A-Z\s\.]{5,50})$",
+)
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+# --------------------------------------------------------------------------
+# native column builders (oracle parity; shared by the queries below)
+# --------------------------------------------------------------------------
+
+_COLLAPSE = lambda c: F.trim(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
+
+# Python str.strip() strips ALL whitespace; Spark trim() strips spaces only.
+_PYSTRIP = lambda c: F.regexp_replace(c, r"^\s+|\s+$", "")  # noqa: E731
+
+
+def _plain_main(text: Column) -> Column:
+    """= oracle.boilerplate.extract_plain."""
+    lines = F.filter(F.transform(F.split(text, "\n"), _COLLAPSE), lambda x: x != "")
+    return F.array_join(lines, "\n")
+
+
+def _designation_literal(u: Column) -> Column:
+    """Rule-engine designation: literal list scanned in order
+    (= oracle.govrules.extract_officer_designation)."""
+    chain = None
+    for d in vocab.OFFICER_DESIGNATIONS:
+        chain = (
+            F.when(u.contains(d), F.lit(d))
+            if chain is None
+            else chain.when(u.contains(d), F.lit(d))
+        )
+    return chain.otherwise(F.lit(None).cast("string"))
+
+
+# Boolean-equivalent cheap forms of GOVT_PAYEE_PATTERNS (r08, guide §1.2
+# per-task work): the hit is consumed ONLY as a boolean, so each
+# `[A-Z\s]+WORD` pattern — whose greedy class prefix backtracks at every
+# position — reduces to `[A-Z\s]WORD` (a match of either form contains a
+# match of the other: the char immediately before WORD is in the class),
+# and every pattern gets a literal contains() guard that short-circuits
+# the regex for the vast majority of rows that lack the anchor word.
+# Guards are pure prefilters (a regex match implies its literals occur);
+# the regex stays authoritative.
+_GOVT_PAYEE_BOOL_PATTERNS: tuple = (
+    (("PAY", "GOVT"), r"PAY[:\s]*GOVT"),
+    (("PAY", "GOVERNMENT"), r"PAY[:\s]*GOVERNMENT"),
+    (("FAVOUR", "GOVT"), r"FAVOUR[:\s]*GOVT"),
+    (("FAVOUR", "GOVERNMENT"), r"FAVOUR[:\s]*GOVERNMENT"),
+    (("TO", "DEPARTMENT"), r"TO\s+THE\s+[A-Z\s]+DEPARTMENT"),
+    (("BOARD",), r"[A-Z\s]BOARD"),
+    (("MUNICIPALITY",), r"[A-Z\s]MUNICIPALITY"),
+    (("COMMITTEE",), r"[A-Z\s]COMMITTEE"),
+    (("AUTHORITY",), r"[A-Z\s]AUTHORITY"),
+    (("TRUST",), r"[A-Z\s]TRUST"),
+    (("CORPORATION",), r"[A-Z\s]CORPORATION"),
+)
+
+
+def _is_government_entity(x: Column) -> Column:
+    """= oracle.govrules.is_government_entity (null/empty → False)."""
+    u = F.upper(F.coalesce(x, F.lit("")))
+    words = F.filter(F.split(u, r"\s+"), lambda w: w != "")
+    pattern_hit = F.coalesce(
+        reduce(
+            lambda a, b: a | b,
+            [C.any_term(u, guards) & u.rlike(rx)
+             for guards, rx in _GOVT_PAYEE_BOOL_PATTERNS],
+        ),
+        F.lit(False),
+    )
+    # indicator contains-chain BEFORE the word-count split: & short-
+    # circuits left-to-right, so rows without any indicator never pay the
+    # split/filter/size allocation (same boolean).
+    return (F.length(u) > 0) & (
+        C.any_term(u, vocab.GOVT_ENTITIES)
+        | pattern_hit
+        | (C.any_term(u, vocab.GOVT_INDICATORS) & (F.size(words) <= 4))
+    )
+
+
+def _payee_section(u: Column) -> Column:
+    """= oracle.grammars.extract_payee_section (first indicator, 200 chars)."""
+    chain = None
+    for ind in vocab.PAYEE_SECTION_INDICATORS:
+        sect = F.substr(u, F.instr(u, ind) + len(ind), F.lit(200))
+        chain = (
+            F.when(u.contains(ind), sect)
+            if chain is None
+            else chain.when(u.contains(ind), sect)
+        )
+    return chain.otherwise(F.lit(None).cast("string"))
+
+
+# Literal-prefix guard per PAYEE_PATTERN (pure prefilter, regex stays
+# authoritative): every match of pattern i necessarily contains the literal,
+# and contains() is ~10x cheaper than letting the backtracking scan run on
+# rows that cannot match. None = no cheap guard (pattern 10 is ^-anchored —
+# it fails on the first non-[A-Z\s.] char, no scan).
+_PAYEE_GUARDS: tuple = (
+    ("PAY",), ("ORDER",), ("PAY",), ("BEARER",), ("BEARER",),
+    ("FAVOUR",), ("FAVOR",), ("BENEFICIARY",), ("RUPEES", "RS"), None,
+)
+
+
+def _payee_raw_col(u: Column) -> Column:
+    """= oracle.grammars.extract_payee: 10 ordered patterns, first whose
+    candidate is not bank/metadata wins.
+
+    Array-HOF form, not a when-chain: the candidates go into one array and
+    the bank/metadata gate lives in a single `filter` lambda, so its ~40-term
+    tree is generated ONCE instead of once per pattern (10x smaller codegen
+    method — the when-chain form was a janino 64KB-limit contributor)."""
+    def hit(p: str, guards) -> Column:
+        rx = u.rlike(p)
+        if not guards:
+            return rx
+        g = C.any_term(u, guards)
+        return g & rx
+
+    cands = F.array(*[
+        F.when(hit(p, g), _PYSTRIP(F.regexp_extract(u, p, 1)))
+        for p, g in zip(vocab.PAYEE_PATTERNS, _PAYEE_GUARDS)
+    ])
+    sel = F.filter(cands, lambda c: c.isNotNull() & ~C.is_bank_or_metadata(c))
+    return F.get(sel, 0)
+
+
+# ---------------------------------------------------------------------------
+# P1: clean_text (issuer_processor_v.py:208-218)
+# ---------------------------------------------------------------------------
+
+def q_clean_text(spark, sf_dir):
+    return par(read_documents(spark, sf_dir)).select(
+        "doc_id", C.clean_text_v1(F.col("text")).alias("cleaned")
+    )
+
+
+def sql_clean_text():
+    return (
+        f"SELECT doc_id, {D.clean_text_v1_sql('text')} AS cleaned FROM documents"
+    )
+
+
+# ---------------------------------------------------------------------------
+# P3/P5: junk + garbage predicates
+# ---------------------------------------------------------------------------
+
+def q_junk_flag(spark, sf_dir):
+    return par(read_documents(spark, sf_dir)).select(
+        "doc_id",
+        C.is_junk_v1(F.upper(F.col("text"))).alias("is_junk"),
+        C.is_garbage(F.upper(F.col("text"))).alias("is_garbage"),
+    )
+
+
+def sql_junk_flag():
+    return (
+        "SELECT doc_id, "
+        f"{D.is_junk_v1_sql('upper(text)')} AS is_junk, "
+        f"{D.is_garbage_sql('upper(text)')} AS is_garbage "
+        "FROM documents"
+    )
+
+
+# ---------------------------------------------------------------------------
+# C1/C2: classification cascade (cheque_classifier.py:122-194)
+# ---------------------------------------------------------------------------
+
+def q_classify(spark, sf_dir):
+    u = F.upper(F.col("text"))
+    cat3 = u.contains("GOVERNMENT ACCOUNT") | u.contains("GOVT ACCOUNT")
+    cat2 = u.contains("NOT TRANSFERABLE") & C.any_term(
+        u, ("GOVT", "GOVERNMENT", "PAO", "DDO")
+    )
+    cat1 = C.any_term(u, vocab.GOVT_MARKERS_HIGH) | C.any_term(
+        u, vocab.GOVT_MARKERS_MEDIUM
+    )
+    is_dd = C.any_term(u, vocab.DD_MARKERS)
+    is_mc = C.any_term(u, vocab.MC_MARKERS)
+    crossed = F.coalesce(
+        u.rlike("|".join(f"(?:{p})" for p in vocab.CROSSED_PATTERNS)), F.lit(False)
+    )
+    words = F.filter(F.split(u, r"\s+"), lambda w: w != "")
+    is_self = u.contains("SELF") & (F.size(words) < 15)
+    ctype = (
+        F.when(cat3, "GOVT_GOVT_ACCOUNT")
+        .when(cat2, "GOVT_NON_TRANSFERABLE")
+        .when(cat1, "GOVT_NEGOTIABLE")
+        .when(is_dd, "DEMAND_DRAFT")
+        .when(is_mc, "MANAGERS_CHEQUE")
+        .when(crossed, "CROSSED")
+        .when(is_self, "SELF")
+        .otherwise("ORDER")
+    )
+    conf = (
+        F.when(cat3, 0.98).when(cat2, 0.95).when(cat1, 0.92)
+        .when(is_dd, 0.95).when(is_mc, 0.95).when(crossed, 0.85)
+        .when(is_self, 0.8).otherwise(0.7)
+    )
+    return par(read_documents(spark, sf_dir)).select(
+        "doc_id",
+        ctype.alias("cheque_type"),
+        conf.alias("type_conf"),
+        (cat3 | cat2 | cat1).alias("is_government"),
+        F.when(cat3, "III").when(cat2, "II").when(cat1, "I").alias("govt_category"),
+    )
+
+
+def sql_classify():
+    u = "upper(text)"
+    cat3 = f"({u} LIKE '%GOVERNMENT ACCOUNT%' OR {u} LIKE '%GOVT ACCOUNT%')"
+    cat2 = (
+        f"({u} LIKE '%NOT TRANSFERABLE%' AND "
+        f"{D.any_term_sql(u, ('GOVT', 'GOVERNMENT', 'PAO', 'DDO'))})"
+    )
+    cat1 = (
+        f"({D.any_term_sql(u, vocab.GOVT_MARKERS_HIGH)} OR "
+        f"{D.any_term_sql(u, vocab.GOVT_MARKERS_MEDIUM)})"
+    )
+    dd = D.any_term_sql(u, vocab.DD_MARKERS)
+    mc = D.any_term_sql(u, vocab.MC_MARKERS)
+    crossed = f"regexp_matches({u}, {D.rx('|'.join(f'(?:{p})' for p in vocab.CROSSED_PATTERNS))})"
+    n_words = f"len(regexp_extract_all({u}, '[^ \\t\\n\\x0b\\f\\r]+'))"
+    is_self = f"({u} LIKE '%SELF%' AND {n_words} < 15)"
+    return f"""
+SELECT doc_id,
+  CASE WHEN {cat3} THEN 'GOVT_GOVT_ACCOUNT'
+       WHEN {cat2} THEN 'GOVT_NON_TRANSFERABLE'
+       WHEN {cat1} THEN 'GOVT_NEGOTIABLE'
+       WHEN {dd} THEN 'DEMAND_DRAFT'
+       WHEN {mc} THEN 'MANAGERS_CHEQUE'
+       WHEN {crossed} THEN 'CROSSED'
+       WHEN {is_self} THEN 'SELF'
+       ELSE 'ORDER' END AS cheque_type,
+  CASE WHEN {cat3} THEN 0.98 WHEN {cat2} THEN 0.95 WHEN {cat1} THEN 0.92
+       WHEN {dd} THEN 0.95 WHEN {mc} THEN 0.95 WHEN {crossed} THEN 0.85
+       WHEN {is_self} THEN 0.8 ELSE 0.7 END AS type_conf,
+  ({cat3} OR {cat2} OR {cat1}) AS is_government,
+  CASE WHEN {cat3} THEN 'III' WHEN {cat2} THEN 'II' WHEN {cat1} THEN 'I'
+       END AS govt_category
+FROM documents"""
+
+
+# ---------------------------------------------------------------------------
+# F1: payee extraction (lookahead-free rewrite, both sides)
+# ---------------------------------------------------------------------------
+
+def q_payee_extract(spark, sf_dir):
+    # Strip trailing line terminators BEFORE matching: Java '$' (non-
+    # MULTILINE) also matches before a final newline while RE2 '$' matches
+    # only end-of-text — normalizing the input removes the dialect gap.
+    # The normalization is materialized as its own projection first: the
+    # when-chain references it ~2x per pattern x 10 patterns, and
+    # CollapseProject would otherwise inline the regexp_replace into every
+    # branch (the variant_keep_best trap). Same literal-prefix guards as
+    # _payee_raw_col (pure prefilter, regex authoritative).
+    staged = par(read_documents(spark, sf_dir)).select(
+        "doc_id",
+        F.regexp_replace(F.upper(F.col("text")), r"[\n\r]+$", "").alias("__u"),
+    )
+    u = F.col("__u")
+    # r08: array-HOF form (the _payee_raw_col structure) instead of a
+    # when-chain — the chain inlined trim(regexp_extract(u, p, 1)) into
+    # every bank/metadata Contains guard (~31 regex evaluations per
+    # matched pattern per row) while the bank gate's ~40-term tree was
+    # generated once PER PATTERN. Here each pattern runs at most ONE
+    # regex scan (the extract, gated on its cheap literal-contains
+    # guard; group 1 is mandatory and starts with [A-Z], so a
+    # non-empty trimmed extract <=> rlike — no separate rlike scan),
+    # and the bank gate lives in a single filter lambda.
+    def cand(p: str, guards) -> Column:
+        ex = F.trim(F.regexp_extract(u, p, 1))
+        if not guards:
+            return ex
+        return F.when(C.any_term(u, guards), ex)
+
+    cands = F.array(*[
+        cand(p, g) for p, g in zip(PAYEE_PATTERNS_SQLSAFE, _PAYEE_GUARDS)
+    ])
+    sel = F.filter(
+        cands,
+        lambda c: c.isNotNull() & (F.length(c) > 0)
+        & ~C.is_bank_or_metadata(c),
+    )
+    payee = F.get(sel, 0)
+    return staged.select("doc_id", payee.alias("payee_raw"))
+
+
+def sql_payee_extract():
+    u = "regexp_replace(upper(text), '[\\n\\r]+$', '')"
+    bank_meta = (
+        f"({D.any_term_sql('cand', vocab.PAYEE_BANK_TERMS)} OR "
+        f"{D.any_term_sql('cand', vocab.PAYEE_METADATA_TERMS)})"
+    )
+    whens = []
+    for p in PAYEE_PATTERNS_SQLSAFE:
+        cand = f"trim(regexp_extract({u}, {D.rx(p)}, 1))"
+        cond = (
+            f"regexp_matches({u}, {D.rx(p)}) AND NOT "
+            + bank_meta.replace("cand", cand)
+        )
+        whens.append(f"WHEN {cond} THEN {cand}")
+    case = "CASE " + " ".join(whens) + " ELSE NULL END"
+    return f"SELECT doc_id, {case} AS payee_raw FROM documents"
+
+
+# ---------------------------------------------------------------------------
+# F9-F12: payee cleaning chain
+# ---------------------------------------------------------------------------
+
+def q_payee_clean(spark, sf_dir):
+    # cleaning operates on extracted payee candidates (short strings), not
+    # whole documents — bound the input like the reference bounds model
+    # inputs (ai_processor.py:159 text[:512])
+    cand = F.substring(F.col("text"), 1, 80)
+    return par(read_documents(spark, sf_dir)).select(
+        "doc_id", C.clean_payee(cand).alias("payee_cleaned")
+    )
+
+
+def sql_payee_clean():
+    return (
+        f"SELECT doc_id, {D.clean_payee_sql('text[1:80]')} AS payee_cleaned "
+        "FROM documents"
+    )
+
+
+# ---------------------------------------------------------------------------
+# F13: spelling-correction chain (UPPER form — DuckDB lacks initcap)
+# ---------------------------------------------------------------------------
+
+def q_spelling_correct(spark, sf_dir):
+    s = F.upper(F.col("text"))
+    for wrong, right in vocab.SPELLING_CORRECTIONS:
+        s = F.replace(s, F.lit(wrong), F.lit(right))
+    for word in vocab.GARBAGE_WORDS:
+        s = F.replace(s, F.lit(word), F.lit(""))
+    s = F.trim(F.regexp_replace(s, r"\s+", " "))
+    s = F.regexp_replace(s, r"[^A-Z\s]", "")
+    out = F.when(
+        F.col("text").isNull() | (F.length("text") == 0), F.lit("UNKNOWN")
+    ).otherwise(F.when(F.length(s) >= 3, s).otherwise(F.lit("UNKNOWN")))
+    return par(read_documents(spark, sf_dir)).select("doc_id", out.alias("corrected"))
+
+
+def sql_spelling_correct():
+    return (
+        f"SELECT doc_id, {D.correct_spelling_sql('text')} AS corrected "
+        "FROM documents"
+    )
+
+
+# ---------------------------------------------------------------------------
+# F2-F5: field grammars (date / amount / account / MICR)
+# ---------------------------------------------------------------------------
+
+_DATE_PAT = r"Date:\s*(\d{2})[./](\d{2})[./](\d{4})"
+_AMOUNT_PAT = r"[₹Rs\.]*\s*([\d,]+(\.\d{2})?)[/\-]?"
+_ACCOUNT_PAT = r"A/C No\.?[\s:]*(\d{10,20})"
+
+
+def q_field_grammars(spark, sf_dir):
+    t = F.col("text")
+    date = F.when(
+        t.rlike(_DATE_PAT),
+        F.concat(
+            F.regexp_extract(t, _DATE_PAT, 1),
+            F.regexp_extract(t, _DATE_PAT, 2),
+            F.regexp_extract(t, _DATE_PAT, 3),
+        ),
+    )
+    amount = F.when(
+        t.rlike(_AMOUNT_PAT),
+        F.replace(F.regexp_extract(t, _AMOUNT_PAT, 1), F.lit(","), F.lit("")),
+    )
+    account = F.when(t.rlike(_ACCOUNT_PAT), F.regexp_extract(t, _ACCOUNT_PAT, 1))
+    micr = vocab.MICR_PATTERN
+    has_micr = t.rlike(micr)
+    return par(read_documents(spark, sf_dir)).select(
+        "doc_id",
+        date.alias("field_date"),
+        amount.alias("field_amount"),
+        account.alias("field_account"),
+        F.when(has_micr, F.regexp_extract(t, micr, 1)).alias("micr_city"),
+        F.when(has_micr, F.regexp_extract(t, micr, 2)).alias("micr_bank"),
+        F.when(has_micr, F.regexp_extract(t, micr, 3)).alias("micr_serial"),
+    )
+
+
+def sql_field_grammars():
+    def ex(pat, grp):
+        return f"regexp_extract(text, {D.rx(pat)}, {grp})"
+
+    def guard(pat, expr):
+        return f"CASE WHEN regexp_matches(text, {D.rx(pat)}) THEN {expr} END"
+
+    date = guard(_DATE_PAT, f"{ex(_DATE_PAT,1)} || {ex(_DATE_PAT,2)} || {ex(_DATE_PAT,3)}")
+    amount = guard(_AMOUNT_PAT, f"replace({ex(_AMOUNT_PAT,1)}, ',', '')")
+    account = guard(_ACCOUNT_PAT, ex(_ACCOUNT_PAT, 1))
+    micr = vocab.MICR_PATTERN
+    return f"""
+SELECT doc_id,
+  {date} AS field_date,
+  {amount} AS field_amount,
+  {account} AS field_account,
+  {guard(micr, ex(micr, 1))} AS micr_city,
+  {guard(micr, ex(micr, 2))} AS micr_bank,
+  {guard(micr, ex(micr, 3))} AS micr_serial
+FROM documents"""
+
+
+# ---------------------------------------------------------------------------
+# J2 (SQL variant): levenshtein-similarity dictionary join
+# ---------------------------------------------------------------------------
+
+def q_lev_match(spark, sf_dir):
+    docs = read_documents(spark, sf_dir)
+    first_tok = F.regexp_extract(F.upper(F.col("text")), r"^([A-Za-z]+)", 1)
+    dim = (
+        docs.filter(F.col("doc_id") < 30)
+        .select(F.upper(first_tok).alias("dict_name"))
+        .filter(F.length("dict_name") > 0)
+        .distinct()
+    )
+    cands = docs.select("doc_id", F.upper(first_tok).alias("cand"))
+    joined = cands.join(F.broadcast(dim))
+    sim = F.round(
+        1.0
+        - F.levenshtein(F.col("cand"), F.col("dict_name"))
+        / F.greatest(F.length("cand"), F.length("dict_name")),
+        6,
+    )
+    joined = joined.withColumn("sim", sim).filter(F.col("sim") >= 0.5)
+    w = Window.partitionBy("doc_id").orderBy(
+        F.col("sim").desc(), F.col("dict_name").asc()
+    )
+    return (
+        joined.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("doc_id", "dict_name", "sim")
+    )
+
+
+def sql_lev_match():
+    return """
+WITH dim AS (
+  SELECT DISTINCT upper(regexp_extract(upper(text), '^([A-Za-z]+)', 1)) AS dict_name
+  FROM documents WHERE doc_id < 30
+    AND length(regexp_extract(upper(text), '^([A-Za-z]+)', 1)) > 0
+), cands AS (
+  SELECT doc_id, upper(regexp_extract(upper(text), '^([A-Za-z]+)', 1)) AS cand
+  FROM documents
+)
+SELECT doc_id, dict_name, sim FROM (
+  SELECT c.doc_id, d.dict_name,
+         round(1.0 - levenshtein(c.cand, d.dict_name) * 1.0
+               / greatest(length(c.cand), length(d.dict_name)), 6) AS sim
+  FROM cands c CROSS JOIN dim d
+) WHERE sim >= 0.5
+QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY sim DESC, dict_name ASC) = 1"""
 
 
 # ---------------------------------------------------------------------------
@@ -28,7 +507,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def q_clean_text_v3(spark, sf_dir):
-    return par(_docs(spark, sf_dir)).select(
+    return par(read_documents(spark, sf_dir)).select(
         "doc_id", C.clean_text_v3(F.col("text")).alias("cleaned_v3")
     )
 
@@ -46,73 +525,6 @@ def sql_clean_text_v3():
 # ---------------------------------------------------------------------------
 # P4/P7: V3 junk + business-name validity (60% / 50% / 70% coverage rules)
 # ---------------------------------------------------------------------------
-
-_RX_META = set("\\^$.|?*+()[]{}")
-
-
-def _literal_prefix(pattern: str) -> str:
-    """Leading literal run of a regex (chars before the first metachar) —
-    a sound contains() prefilter: the pattern cannot match unless its
-    literal prefix occurs in the text. If the run stops at a quantifier
-    ('?', '*', '{'), the preceding char is optional/repeated and is dropped
-    from the prefix (e.g. 'AUTHORISED?...' -> 'AUTHORISE')."""
-    out = []
-    for ch in pattern:
-        if ch in _RX_META:
-            if ch in "?*{" and out:
-                out.pop()
-            break
-        out.append(ch)
-    return "".join(out)
-
-
-def _junk_v3_col(u: Column) -> Column:
-    short_caps = u.rlike(r"^[A-Z]{2,4}$") & ~u.isin(*vocab.SHORT_CAPS_OK_V3)
-    # literal-prefix guards skip the regex for the ~90% of rows that lack
-    # the pattern's anchor text (pure optimization, regex authoritative)
-    pattern_hits = []
-    for p in vocab.JUNK_PATTERNS_V3:
-        # no separate rlike: regexp_extract returns '' on no-match, and the
-        # >= length*0.6 test can only pass on a real match once length >= 2
-        # (enforced below) — one regex scan per pattern instead of two
-        hit = (
-            F.length(F.regexp_extract(u, f"(?i){p}", 0)) >= F.length(u) * 0.6
-        )
-        prefix = _literal_prefix(p)
-        if len(prefix) >= 3:
-            hit = u.contains(prefix) & hit
-        pattern_hits.append(hit)
-    variation_hits = [
-        u.contains(j) & (F.lit(len(j)) >= F.length(u) * 0.5)
-        for j in vocab.JUNK_VARIATIONS_V3
-    ]
-    return (
-        u.isNull()
-        | (F.length(u) < 2)
-        | short_caps
-        | reduce(lambda a, b: a | b, pattern_hits)
-        | reduce(lambda a, b: a | b, variation_hits)
-    )
-
-
-def _junk_v3_sql(u: str) -> str:
-    caps_ok = ", ".join(D.q(t) for t in vocab.SHORT_CAPS_OK_V3)
-    short_caps = (
-        f"(regexp_matches({u}, '^[A-Z]{{2,4}}$') AND {u} NOT IN ({caps_ok}))"
-    )
-    pats = " OR ".join(
-        f"(regexp_matches({u}, {D.rx(p)}, 'i') AND "
-        f"length(regexp_extract({u}, {D.rx(p)}, 0, 'i')) >= length({u}) * 0.6)"
-        for p in vocab.JUNK_PATTERNS_V3
-    )
-    variations = " OR ".join(
-        f"(contains({u}, {D.q(j)}) AND {len(j)} >= length({u}) * 0.5)"
-        for j in vocab.JUNK_VARIATIONS_V3
-    )
-    return (
-        f"({u} IS NULL OR length({u}) < 2 OR {short_caps} OR {pats} "
-        f"OR {variations})"
-    )
 
 
 def _valid_business_v3_col(t: Column) -> Column:
@@ -134,7 +546,7 @@ def _valid_business_v3_col(t: Column) -> Column:
     return (
         t.isNotNull()
         & (F.length(t) >= 3)
-        & ~_junk_v3_col(u)
+        & ~C.is_junk_v3(u)
         & ~bank_hit
         & F.when((digits > 0) & (alpha == 0), pure_number_ok).otherwise(
             ~F.when(alpha > 0, mixed_reject).otherwise(F.lit(False))
@@ -144,16 +556,15 @@ def _valid_business_v3_col(t: Column) -> Column:
 
 def q_junk_v3(spark, sf_dir):
     u = F.upper(F.col("text"))
-    return par(_docs(spark, sf_dir)).select(
+    return par(read_documents(spark, sf_dir)).select(
         "doc_id",
-        _junk_v3_col(u).alias("is_junk_v3"),
+        C.is_junk_v3(u).alias("is_junk_v3"),
         _valid_business_v3_col(F.upper(F.col("text"))).alias("is_valid_business_v3"),
     )
 
 
 def sql_junk_v3():
     u = "upper(text)"
-    caps_ok = ", ".join(D.q(t) for t in vocab.BANK_NAMES_V3)
     bank_hit = " OR ".join(
         f"(contains({u}, {D.q(b)}) AND {len(b)} >= length({u}) * 0.7)"
         for b in vocab.BANK_NAMES_V3
@@ -162,7 +573,7 @@ def sql_junk_v3():
     digits = D.n_digit_sql(u)
     total = f"length({u})"
     valid = f"""({u} IS NOT NULL AND length({u}) >= 3
-      AND NOT {_junk_v3_sql(u)}
+      AND NOT {D.is_junk_v3_sql(u)}
       AND NOT ({bank_hit})
       AND (CASE WHEN {digits} > 0 AND {alpha} = 0 THEN length({u}) >= 8
            ELSE NOT (CASE WHEN {alpha} > 0
@@ -170,7 +581,7 @@ def sql_junk_v3():
                            AND NOT ({digits} > 5))
                      ELSE FALSE END) END))"""
     return f"""
-SELECT doc_id, {_junk_v3_sql(u)} AS is_junk_v3, {valid} AS is_valid_business_v3
+SELECT doc_id, {D.is_junk_v3_sql(u)} AS is_junk_v3, {valid} AS is_valid_business_v3
 FROM documents"""
 
 
@@ -180,7 +591,7 @@ FROM documents"""
 
 def q_remove_prefixes(spark, sf_dir):
     cand = F.upper(F.substring(F.col("text"), 1, 60))
-    return par(_docs(spark, sf_dir)).select(
+    return par(read_documents(spark, sf_dir)).select(
         "doc_id", C.remove_prefixes_v3(cand).alias("deprefixed")
     )
 
@@ -208,7 +619,7 @@ def q_issuer_for_grammar(spark, sf_dir):
         cand = F.substring_index(cand, marker, 1)
     cand = F.substring_index(cand, "\n", 1)
     out = F.when(u.contains("FOR") & (F.length(cand) > 3), cand)
-    return par(_docs(spark, sf_dir)).select("doc_id", out.alias("for_candidate"))
+    return par(read_documents(spark, sf_dir)).select("doc_id", out.alias("for_candidate"))
 
 
 def sql_issuer_for_grammar():
@@ -259,7 +670,7 @@ def q_issuer_auth_account_grammar(spark, sf_dir):
             )
         return chain.otherwise(F.lit(None).cast("string"))
 
-    return par(_docs(spark, sf_dir)).select(
+    return par(read_documents(spark, sf_dir)).select(
         "doc_id",
         first_match(
             vocab.AUTH_SIGNATORY_PATTERNS,
@@ -309,7 +720,7 @@ def q_issuer_simple(spark, sf_dir):
     # materialize the multi-referenced derivations once per row (words is
     # referenced 3x, cleaned 2x, for_result 2x — inlined, each reference
     # would re-run the whole split/regex chain)
-    staged = par(_docs(spark, sf_dir)).select(
+    staged = par(read_documents(spark, sf_dir)).select(
         "doc_id", "text",
         u.alias("__u"),
         words.alias("__words"),
@@ -376,7 +787,7 @@ FROM documents"""
 
 def q_score_name(spark, sf_dir):
     cand = F.substring(F.col("text"), 1, 40)
-    return par(_docs(spark, sf_dir)).select(
+    return par(read_documents(spark, sf_dir)).select(
         "doc_id", F.round(C.score_name(cand), 6).alias("name_score")
     )
 
@@ -415,11 +826,6 @@ def _is_govt_entity_sql(x: str) -> str:
 
 
 def q_govt_entity(spark, sf_dir):
-    from cheque_ocr_project_spark.plans.pipeline import (
-        _is_government_entity,
-        _payee_section,
-    )
-
     cand = F.substring(F.col("text"), 1, 60)
     u = F.upper(F.col("text"))
     # Pre-materialize the payee section: payable_to_govt would otherwise
@@ -428,7 +834,7 @@ def q_govt_entity(spark, sf_dir):
     # widening would multiply it). Two stacked projections keep the heavy
     # derivation single-copy; CollapseProject keeps multi-referenced
     # non-cheap aliases materialized.
-    staged = par(_docs(spark, sf_dir)).select(
+    staged = par(read_documents(spark, sf_dir)).select(
         "doc_id",
         _is_government_entity(cand).alias("is_govt_entity"),
         _payee_section(u).alias("payee_section"),
@@ -465,10 +871,8 @@ FROM documents"""
 
 
 def q_officer_designation(spark, sf_dir):
-    from cheque_ocr_project_spark.plans.pipeline import _designation_literal
-
     u = F.upper(F.col("text"))
-    return par(_docs(spark, sf_dir)).select(
+    return par(read_documents(spark, sf_dir)).select(
         "doc_id", _designation_literal(u).alias("designation")
     )
 
@@ -498,7 +902,7 @@ def q_filename_fields(spark, sf_dir):
         fname.rlike(r"\d+"), F.regexp_extract(fname, r"(\d+)", 1)
     ).otherwise("0")
     date = F.when(fname.rlike(r"(\d{8})"), F.regexp_extract(fname, r"(\d{8})", 1))
-    return par(_docs(spark, sf_dir)).select(
+    return par(read_documents(spark, sf_dir)).select(
         "doc_id", fname.alias("filename"),
         amount.alias("amount"), account.alias("account"), date.alias("file_date"),
     )
@@ -526,7 +930,7 @@ def q_line_confidence(spark, sf_dir):
     conf = F.when(F.length(t) == 0, F.lit(0.0)).otherwise(
         0.6 + 0.4 * (C.n_alpha(t) / F.length(t))
     )
-    return _docs(spark, sf_dir).select(
+    return read_documents(spark, sf_dir).select(
         "doc_id", F.round(conf, 6).alias("line_conf")
     )
 
@@ -541,10 +945,8 @@ FROM documents"""
 
 
 def q_window_order(spark, sf_dir):
-    from pyspark.sql import Window
-
     w = Window.partitionBy("source").orderBy("doc_id")
-    return _docs(spark, sf_dir).select(
+    return read_documents(spark, sf_dir).select(
         "doc_id", "source", F.row_number().over(w).alias("turn_rank")
     )
 
@@ -567,7 +969,7 @@ def q_clean_text_v2(spark, sf_dir):
     s = F.regexp_replace(s, r"[^A-Z0-9 .,&/-]", " ")
     s = F.trim(F.regexp_replace(s, r"\s+", " "))
     out = F.when(t.isNull() | (F.length(t) == 0), F.lit("XXX")).otherwise(s)
-    return par(_docs(spark, sf_dir)).select("doc_id", out.alias("cleaned_v2"))
+    return par(read_documents(spark, sf_dir)).select("doc_id", out.alias("cleaned_v2"))
 
 
 def sql_clean_text_v2():
@@ -584,7 +986,7 @@ def q_containment_match(spark, sf_dir):
     """J3 containment theta-join: candidate contained-in dictionary name (or
     vice versa) with length ratio > 0.6, argmax per candidate (ties keep the
     lexicographically-first dictionary name = sorted-dict iteration order)."""
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     tok2 = F.upper(
         F.array_join(F.slice(F.regexp_extract_all(F.col("text"), F.lit(r"[A-Za-z]+"), F.lit(0)), 1, 2), " ")
     )
@@ -604,8 +1006,6 @@ def q_containment_match(spark, sf_dir):
         F.length("dict_name") / F.length("cand"),
     )
     j = j.withColumn("sim", F.round(ratio, 6)).filter(F.col("sim") > 0.6)
-    from pyspark.sql import Window
-
     w = Window.partitionBy("doc_id").orderBy(
         F.col("sim").desc(), F.col("dict_name").asc()
     )
@@ -662,7 +1062,7 @@ def q_fast_pattern_extract(spark, sf_dir):
     # the '\s+$' alternations of the FAST_* patterns). The normalized text
     # is materialized as its own projection so the ~12 pattern references
     # don't each re-inline the regexp_replace (CollapseProject).
-    staged = par(_docs(spark, sf_dir)).select(
+    staged = par(read_documents(spark, sf_dir)).select(
         "doc_id",
         F.regexp_replace(F.upper(F.col("text")), r"[\n\r]+$", "").alias("__u"),
     )
@@ -679,7 +1079,7 @@ def q_fast_pattern_extract(spark, sf_dir):
         chain = None
         for p in patterns:
             cond = u.rlike(p)
-            prefix = _literal_prefix(p)
+            prefix = C.literal_prefix(p)
             if len(prefix) >= 3:  # skip the backtracking regex cheaply
                 cond = u.contains(prefix) & cond
             elif p in interior:
@@ -724,7 +1124,7 @@ def q_for_first3(spark, sf_dir):
     out = F.when(
         u.contains("FOR") & (F.size(F.split(u, "FOR")) > 1), first3
     ).otherwise(F.lit("UNKNOWN"))
-    return par(_docs(spark, sf_dir)).select("doc_id", out.alias("for_first3"))
+    return par(read_documents(spark, sf_dir)).select("doc_id", out.alias("for_first3"))
 
 
 def sql_for_first3():
@@ -795,8 +1195,6 @@ GROUP BY n_name"""
 
 
 def q_top_customers(spark, sf_dir):
-    from pyspark.sql import Window
-
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     agg = (
@@ -827,9 +1225,7 @@ SELECT c_custkey, c_name, total_spent, rank FROM (
 # ---------------------------------------------------------------------------
 
 def q_main_content_plain(spark, sf_dir):
-    from cheque_ocr_project_spark.plans.pipeline import _plain_main
-
-    return par(_docs(spark, sf_dir)).select(
+    return par(read_documents(spark, sf_dir)).select(
         "doc_id", _plain_main(F.col("text")).alias("main_text")
     )
 
@@ -848,7 +1244,15 @@ FROM documents"""
 # registry
 # ---------------------------------------------------------------------------
 
-REGISTRY_V3: dict[str, tuple] = {
+REGISTRY: dict[str, tuple] = {
+    "clean_text": (q_clean_text, sql_clean_text),
+    "junk_flag": (q_junk_flag, sql_junk_flag),
+    "classify": (q_classify, sql_classify),
+    "payee_extract": (q_payee_extract, sql_payee_extract),
+    "payee_clean": (q_payee_clean, sql_payee_clean),
+    "spelling_correct": (q_spelling_correct, sql_spelling_correct),
+    "field_grammars": (q_field_grammars, sql_field_grammars),
+    "lev_match": (q_lev_match, sql_lev_match),
     "clean_text_v3": (q_clean_text_v3, sql_clean_text_v3),
     "junk_v3": (q_junk_v3, sql_junk_v3),
     "remove_prefixes": (q_remove_prefixes, sql_remove_prefixes),

@@ -1,4876 +1,23 @@
-"""Driver-contract queries: one entry per implemented operator.
+"""The driver-contract registry: every query family's rows, merged in
+sampling order.
 
-Each registry entry pairs a Spark DataFrame query (native expressions, built
-from the same vocab as the flagship pipeline) with DuckDB oracle SQL
-generated from that vocab. Column names/aliases are identical on both sides
-(the driver hash-compares values after sorting columns by name).
-
-SQL-dialect note: DuckDB regex is RE2 (no lookahead), so the two queries
-that need terminator context (`payee_extract`) use lookahead-free rewrites
-of the reference patterns ON BOTH SIDES; the flagship pipeline keeps the
-faithful Python-`re` grammars (proven equal to the oracle in
-tests/test_pipeline_equality.py).
+Each family module (grammar, text_stats, events, near_dup, ann, corpus,
+flagship) holds its Spark queries, their DuckDB twins and the parameter
+constants both sides read, and exports ``REGISTRY: {name: (query, twin)}``.
+A twin is a SQL string, a callable rendering one, or None (rows-only
+check). Column names/aliases are identical on both sides (the driver
+hash-compares values after sorting columns by name).
 """
 
 from __future__ import annotations
 
-
-from functools import reduce
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from cheque_ocr_project_spark.functions import columns as C
-from cheque_ocr_project_spark.functions import ducksql as D
-from cheque_ocr_project_spark.operators.extract import par
-from cheque_ocr_project_spark.oracle import vocab
-
-# ---------------------------------------------------------------------------
-# shared bits
-# ---------------------------------------------------------------------------
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
-def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-PAYEE_PATTERNS_SQLSAFE = (
-    r"PAY\s*TO\s*[:\s]*([A-Z][A-Z\s\.]+?)(\s+RUPEES|\s+RS\.?|\s*$)",
-    r"ORDER\s*OF\s*[:\s]*([A-Z][A-Z\s\.]+?)(\s+RUPEES|\s+RS\.?|\s*$)",
-    r"[Pp][Aa][Yy]\s*[:\s]*([A-Z][A-Z\s\.]{2,30})",
-    r"BEARER\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"OR\s*BEARER\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"FAVOUR\s+OF\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"FAVOR\s+OF\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"BENEFICIARY\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"([A-Z][A-Z\s\.]{3,30})\s+(RUPEES|RS\.?)",
-    r"^([A-Z][A-Z\s\.]{5,50})$",
+from cheque_ocr_project_spark.plans import (
+    ann, corpus, events, flagship, grammar, near_dup, text_stats,
 )
+# re-exported: the benchmark harness imports it from here
+from cheque_ocr_project_spark.sources.synth import default_drawer_dict  # noqa: F401
 
-_STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "on",
-              "for", "with", "at", "by", "from", "as", "that", "this")
-
-# explicit ASCII whitespace (== Java \s) so the RE2 oracle tokenizes
-# identically — RE2 \s lacks \x0b
-_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0b\f\r]"
-
-
-# ---------------------------------------------------------------------------
-# P1: clean_text (issuer_processor_v.py:208-218)
-# ---------------------------------------------------------------------------
-
-def q_clean_text(spark, sf_dir):
-    return par(_docs(spark, sf_dir)).select(
-        "doc_id", C.clean_text_v1(F.col("text")).alias("cleaned")
-    )
-
-
-def sql_clean_text():
-    return (
-        f"SELECT doc_id, {D.clean_text_v1_sql('text')} AS cleaned FROM documents"
-    )
-
-
-# ---------------------------------------------------------------------------
-# P3/P5: junk + garbage predicates
-# ---------------------------------------------------------------------------
-
-def q_junk_flag(spark, sf_dir):
-    return par(_docs(spark, sf_dir)).select(
-        "doc_id",
-        C.is_junk_v1(F.upper(F.col("text"))).alias("is_junk"),
-        C.is_garbage(F.upper(F.col("text"))).alias("is_garbage"),
-    )
-
-
-def sql_junk_flag():
-    return (
-        "SELECT doc_id, "
-        f"{D.is_junk_v1_sql('upper(text)')} AS is_junk, "
-        f"{D.is_garbage_sql('upper(text)')} AS is_garbage "
-        "FROM documents"
-    )
-
-
-# ---------------------------------------------------------------------------
-# C1/C2: classification cascade (cheque_classifier.py:122-194)
-# ---------------------------------------------------------------------------
-
-def q_classify(spark, sf_dir):
-    u = F.upper(F.col("text"))
-    cat3 = u.contains("GOVERNMENT ACCOUNT") | u.contains("GOVT ACCOUNT")
-    cat2 = u.contains("NOT TRANSFERABLE") & C.any_term(
-        u, ("GOVT", "GOVERNMENT", "PAO", "DDO")
-    )
-    cat1 = C.any_term(u, vocab.GOVT_MARKERS_HIGH) | C.any_term(
-        u, vocab.GOVT_MARKERS_MEDIUM
-    )
-    is_dd = C.any_term(u, vocab.DD_MARKERS)
-    is_mc = C.any_term(u, vocab.MC_MARKERS)
-    crossed = F.coalesce(
-        u.rlike("|".join(f"(?:{p})" for p in vocab.CROSSED_PATTERNS)), F.lit(False)
-    )
-    words = F.filter(F.split(u, r"\s+"), lambda w: w != "")
-    is_self = u.contains("SELF") & (F.size(words) < 15)
-    ctype = (
-        F.when(cat3, "GOVT_GOVT_ACCOUNT")
-        .when(cat2, "GOVT_NON_TRANSFERABLE")
-        .when(cat1, "GOVT_NEGOTIABLE")
-        .when(is_dd, "DEMAND_DRAFT")
-        .when(is_mc, "MANAGERS_CHEQUE")
-        .when(crossed, "CROSSED")
-        .when(is_self, "SELF")
-        .otherwise("ORDER")
-    )
-    conf = (
-        F.when(cat3, 0.98).when(cat2, 0.95).when(cat1, 0.92)
-        .when(is_dd, 0.95).when(is_mc, 0.95).when(crossed, 0.85)
-        .when(is_self, 0.8).otherwise(0.7)
-    )
-    return par(_docs(spark, sf_dir)).select(
-        "doc_id",
-        ctype.alias("cheque_type"),
-        conf.alias("type_conf"),
-        (cat3 | cat2 | cat1).alias("is_government"),
-        F.when(cat3, "III").when(cat2, "II").when(cat1, "I").alias("govt_category"),
-    )
-
-
-def sql_classify():
-    u = "upper(text)"
-    cat3 = f"({u} LIKE '%GOVERNMENT ACCOUNT%' OR {u} LIKE '%GOVT ACCOUNT%')"
-    cat2 = (
-        f"({u} LIKE '%NOT TRANSFERABLE%' AND "
-        f"{D.any_term_sql(u, ('GOVT', 'GOVERNMENT', 'PAO', 'DDO'))})"
-    )
-    cat1 = (
-        f"({D.any_term_sql(u, vocab.GOVT_MARKERS_HIGH)} OR "
-        f"{D.any_term_sql(u, vocab.GOVT_MARKERS_MEDIUM)})"
-    )
-    dd = D.any_term_sql(u, vocab.DD_MARKERS)
-    mc = D.any_term_sql(u, vocab.MC_MARKERS)
-    crossed = f"regexp_matches({u}, {D.rx('|'.join(f'(?:{p})' for p in vocab.CROSSED_PATTERNS))})"
-    n_words = f"len(regexp_extract_all({u}, '[^ \\t\\n\\x0b\\f\\r]+'))"
-    is_self = f"({u} LIKE '%SELF%' AND {n_words} < 15)"
-    return f"""
-SELECT doc_id,
-  CASE WHEN {cat3} THEN 'GOVT_GOVT_ACCOUNT'
-       WHEN {cat2} THEN 'GOVT_NON_TRANSFERABLE'
-       WHEN {cat1} THEN 'GOVT_NEGOTIABLE'
-       WHEN {dd} THEN 'DEMAND_DRAFT'
-       WHEN {mc} THEN 'MANAGERS_CHEQUE'
-       WHEN {crossed} THEN 'CROSSED'
-       WHEN {is_self} THEN 'SELF'
-       ELSE 'ORDER' END AS cheque_type,
-  CASE WHEN {cat3} THEN 0.98 WHEN {cat2} THEN 0.95 WHEN {cat1} THEN 0.92
-       WHEN {dd} THEN 0.95 WHEN {mc} THEN 0.95 WHEN {crossed} THEN 0.85
-       WHEN {is_self} THEN 0.8 ELSE 0.7 END AS type_conf,
-  ({cat3} OR {cat2} OR {cat1}) AS is_government,
-  CASE WHEN {cat3} THEN 'III' WHEN {cat2} THEN 'II' WHEN {cat1} THEN 'I'
-       END AS govt_category
-FROM documents"""
-
-
-# ---------------------------------------------------------------------------
-# F1: payee extraction (lookahead-free rewrite, both sides)
-# ---------------------------------------------------------------------------
-
-def q_payee_extract(spark, sf_dir):
-    # Strip trailing line terminators BEFORE matching: Java '$' (non-
-    # MULTILINE) also matches before a final newline while RE2 '$' matches
-    # only end-of-text — normalizing the input removes the dialect gap.
-    # The normalization is materialized as its own projection first: the
-    # when-chain references it ~2x per pattern x 10 patterns, and
-    # CollapseProject would otherwise inline the regexp_replace into every
-    # branch (the variant_keep_best trap). Same literal-prefix guards as
-    # the pipeline's _payee_raw_col (pure prefilter, regex authoritative).
-    from cheque_ocr_project_spark.plans.pipeline import _PAYEE_GUARDS
-
-    staged = par(_docs(spark, sf_dir)).select(
-        "doc_id",
-        F.regexp_replace(F.upper(F.col("text")), r"[\n\r]+$", "").alias("__u"),
-    )
-    u = F.col("__u")
-    # r08: array-HOF form (the _payee_raw_col structure) instead of a
-    # when-chain — the chain inlined trim(regexp_extract(u, p, 1)) into
-    # every bank/metadata Contains guard (~31 regex evaluations per
-    # matched pattern per row) while the bank gate's ~40-term tree was
-    # generated once PER PATTERN. Here each pattern runs at most ONE
-    # regex scan (the extract, gated on its cheap literal-contains
-    # guard; group 1 is mandatory and starts with [A-Z], so a
-    # non-empty trimmed extract <=> rlike — no separate rlike scan),
-    # and the bank gate lives in a single filter lambda.
-    def cand(p: str, guards) -> Column:
-        ex = F.trim(F.regexp_extract(u, p, 1))
-        if not guards:
-            return ex
-        return F.when(C.any_term(u, guards), ex)
-
-    cands = F.array(*[
-        cand(p, g) for p, g in zip(PAYEE_PATTERNS_SQLSAFE, _PAYEE_GUARDS)
-    ])
-    sel = F.filter(
-        cands,
-        lambda c: c.isNotNull() & (F.length(c) > 0)
-        & ~C.is_bank_or_metadata(c),
-    )
-    payee = F.get(sel, 0)
-    return staged.select("doc_id", payee.alias("payee_raw"))
-
-
-def sql_payee_extract():
-    u = "regexp_replace(upper(text), '[\\n\\r]+$', '')"
-    bank_meta = (
-        f"({D.any_term_sql('cand', vocab.PAYEE_BANK_TERMS)} OR "
-        f"{D.any_term_sql('cand', vocab.PAYEE_METADATA_TERMS)})"
-    )
-    whens = []
-    for p in PAYEE_PATTERNS_SQLSAFE:
-        cand = f"trim(regexp_extract({u}, {D.rx(p)}, 1))"
-        cond = (
-            f"regexp_matches({u}, {D.rx(p)}) AND NOT "
-            + bank_meta.replace("cand", cand)
-        )
-        whens.append(f"WHEN {cond} THEN {cand}")
-    case = "CASE " + " ".join(whens) + " ELSE NULL END"
-    return f"SELECT doc_id, {case} AS payee_raw FROM documents"
-
-
-# ---------------------------------------------------------------------------
-# F9-F12: payee cleaning chain
-# ---------------------------------------------------------------------------
-
-def q_payee_clean(spark, sf_dir):
-    # cleaning operates on extracted payee candidates (short strings), not
-    # whole documents — bound the input like the reference bounds model
-    # inputs (ai_processor.py:159 text[:512])
-    cand = F.substring(F.col("text"), 1, 80)
-    return par(_docs(spark, sf_dir)).select(
-        "doc_id", C.clean_payee(cand).alias("payee_cleaned")
-    )
-
-
-def sql_payee_clean():
-    return (
-        f"SELECT doc_id, {D.clean_payee_sql('text[1:80]')} AS payee_cleaned "
-        "FROM documents"
-    )
-
-
-# ---------------------------------------------------------------------------
-# F13: spelling-correction chain (UPPER form — DuckDB lacks initcap)
-# ---------------------------------------------------------------------------
-
-def q_spelling_correct(spark, sf_dir):
-    s = F.upper(F.col("text"))
-    for wrong, right in vocab.SPELLING_CORRECTIONS:
-        s = F.replace(s, F.lit(wrong), F.lit(right))
-    for word in vocab.GARBAGE_WORDS:
-        s = F.replace(s, F.lit(word), F.lit(""))
-    s = F.trim(F.regexp_replace(s, r"\s+", " "))
-    s = F.regexp_replace(s, r"[^A-Z\s]", "")
-    out = F.when(
-        F.col("text").isNull() | (F.length("text") == 0), F.lit("UNKNOWN")
-    ).otherwise(F.when(F.length(s) >= 3, s).otherwise(F.lit("UNKNOWN")))
-    return par(_docs(spark, sf_dir)).select("doc_id", out.alias("corrected"))
-
-
-def sql_spelling_correct():
-    return (
-        f"SELECT doc_id, {D.correct_spelling_sql('text')} AS corrected "
-        "FROM documents"
-    )
-
-
-# ---------------------------------------------------------------------------
-# F2-F5: field grammars (date / amount / account / MICR)
-# ---------------------------------------------------------------------------
-
-_DATE_PAT = r"Date:\s*(\d{2})[./](\d{2})[./](\d{4})"
-_AMOUNT_PAT = r"[₹Rs\.]*\s*([\d,]+(\.\d{2})?)[/\-]?"
-_ACCOUNT_PAT = r"A/C No\.?[\s:]*(\d{10,20})"
-
-
-def q_field_grammars(spark, sf_dir):
-    t = F.col("text")
-    date = F.when(
-        t.rlike(_DATE_PAT),
-        F.concat(
-            F.regexp_extract(t, _DATE_PAT, 1),
-            F.regexp_extract(t, _DATE_PAT, 2),
-            F.regexp_extract(t, _DATE_PAT, 3),
-        ),
-    )
-    amount = F.when(
-        t.rlike(_AMOUNT_PAT),
-        F.replace(F.regexp_extract(t, _AMOUNT_PAT, 1), F.lit(","), F.lit("")),
-    )
-    account = F.when(t.rlike(_ACCOUNT_PAT), F.regexp_extract(t, _ACCOUNT_PAT, 1))
-    micr = vocab.MICR_PATTERN
-    has_micr = t.rlike(micr)
-    return par(_docs(spark, sf_dir)).select(
-        "doc_id",
-        date.alias("field_date"),
-        amount.alias("field_amount"),
-        account.alias("field_account"),
-        F.when(has_micr, F.regexp_extract(t, micr, 1)).alias("micr_city"),
-        F.when(has_micr, F.regexp_extract(t, micr, 2)).alias("micr_bank"),
-        F.when(has_micr, F.regexp_extract(t, micr, 3)).alias("micr_serial"),
-    )
-
-
-def sql_field_grammars():
-    def ex(pat, grp):
-        return f"regexp_extract(text, {D.rx(pat)}, {grp})"
-
-    def guard(pat, expr):
-        return f"CASE WHEN regexp_matches(text, {D.rx(pat)}) THEN {expr} END"
-
-    date = guard(_DATE_PAT, f"{ex(_DATE_PAT,1)} || {ex(_DATE_PAT,2)} || {ex(_DATE_PAT,3)}")
-    amount = guard(_AMOUNT_PAT, f"replace({ex(_AMOUNT_PAT,1)}, ',', '')")
-    account = guard(_ACCOUNT_PAT, ex(_ACCOUNT_PAT, 1))
-    micr = vocab.MICR_PATTERN
-    return f"""
-SELECT doc_id,
-  {date} AS field_date,
-  {amount} AS field_amount,
-  {account} AS field_account,
-  {guard(micr, ex(micr, 1))} AS micr_city,
-  {guard(micr, ex(micr, 2))} AS micr_bank,
-  {guard(micr, ex(micr, 3))} AS micr_serial
-FROM documents"""
-
-
-# ---------------------------------------------------------------------------
-# Text analysis: token count / quality score / language-ID / fingerprint
-# ---------------------------------------------------------------------------
-
-def q_token_stats(spark, sf_dir):
-    t = F.col("text")
-    ws_tokens = F.size(F.regexp_extract_all(t, F.lit(r"\S+"), F.lit(0)))
-    bpe_tokens = F.size(F.regexp_extract_all(t, F.lit(_TOKEN_PATTERN), F.lit(0)))
-    return par(_docs(spark, sf_dir)).select(
-        "doc_id",
-        ws_tokens.alias("ws_tokens"),
-        bpe_tokens.alias("bpe_tokens"),
-    )
-
-
-def sql_token_stats():
-    return f"""
-SELECT doc_id,
-  len(regexp_extract_all(text, '[^ \\t\\n\\x0b\\f\\r]+')) AS ws_tokens,
-  len(regexp_extract_all(text, {D.rx(_TOKEN_PATTERN)})) AS bpe_tokens
-FROM documents"""
-
-
-def q_quality_score(spark, sf_dir):
-    t = F.col("text")
-    length = F.length(t)
-    alpha_ratio = C.n_alpha(t) / length
-    punct_ratio = (
-        F.length(F.regexp_replace(t, r"[^.,;:!?]", "")) / length
-    )
-    tokens = F.regexp_extract_all(F.lower(t), F.lit(r"[a-z]+"), F.lit(0))
-    stop_hits = F.size(F.filter(tokens, lambda w: w.isin(*_STOPWORDS)))
-    stop_ratio = F.when(F.size(tokens) > 0, stop_hits / F.size(tokens)).otherwise(0.0)
-    quality = F.round(
-        0.4 * alpha_ratio + 0.3 * stop_ratio + 0.3 * (1.0 - punct_ratio), 6
-    )
-    return par(_docs(spark, sf_dir)).select(
-        "doc_id",
-        F.round(alpha_ratio, 6).alias("alpha_ratio"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stop_ratio, 6).alias("stop_ratio"),
-        quality.alias("quality"),
-    )
-
-
-def sql_quality_score():
-    stop_list = ", ".join(D.q(w) for w in _STOPWORDS)
-    return f"""
-SELECT doc_id,
-  round(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 / length(text), 6) AS alpha_ratio,
-  round(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) * 1.0 / length(text), 6) AS punct_ratio,
-  round(CASE WHEN len(regexp_extract_all(lower(text), '[a-z]+')) > 0
-        THEN len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                              w -> w IN ({stop_list}))) * 1.0
-             / len(regexp_extract_all(lower(text), '[a-z]+'))
-        ELSE 0.0 END, 6) AS stop_ratio,
-  round(0.4 * (length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 / length(text))
-      + 0.3 * (CASE WHEN len(regexp_extract_all(lower(text), '[a-z]+')) > 0
-               THEN len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                                     w -> w IN ({stop_list}))) * 1.0
-                    / len(regexp_extract_all(lower(text), '[a-z]+'))
-               ELSE 0.0 END)
-      + 0.3 * (1.0 - length(regexp_replace(text, '[^.,;:!?]', '', 'g')) * 1.0 / length(text)), 6) AS quality
-FROM documents"""
-
-
-# PII redaction (training-data hygiene pass): structural patterns only —
-# emails and long number-like runs (phones / account ids). Explicit char
-# classes, no shorthand escapes, no lookaround/backrefs: the exact same
-# pattern is valid and identically-greedy in Java regex and RE2, so both
-# engines redact the same spans. Order matters: emails first (their
-# digits must not be half-eaten by the number pass).
-PII_EMAIL_RX = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+"
-PII_NUMBER_RX = r"\+?[0-9][0-9()./ -]{7,}[0-9]"
-# NULL-text note (applies to every size(...)/len(...) twin pair in this
-# module): Spark's size() returns NULL for NULL input on this build
-# (legacy sizeOfNull semantics are off in the resolved plan — verified
-# empirically), matching DuckDB's len(NULL) = NULL, and the planted
-# concat transforms propagate NULL identically through both engines'
-# null-propagating concatenation. The documents contract keeps text
-# non-null regardless.
-
-
-def _docs_with_pii(spark, sf_dir) -> DataFrame:
-    """The synthetic corpus contains no PII, so (same pattern as
-    _docs_with_near_dups) a deterministic planted transform makes the
-    redaction BIND: every 5th doc gains an email, every 7th a phone-like
-    run — both engines compute the identical appended strings. Only
-    modulo + string-cast on doc_id: safe across the full int64 fuzz
-    range."""
-    id_s = F.col("doc_id").cast("string")
-    email = F.when(
-        F.col("doc_id") % 5 == 0,
-        F.concat(F.lit(" contact user"), id_s, F.lit("@mail.example.com")),
-    ).otherwise("")
-    phone = F.when(
-        F.col("doc_id") % 7 == 0,
-        F.concat(F.lit(" call +1 555 010 "),
-                 (F.col("doc_id") % 10000).cast("string")),
-    ).otherwise("")
-    return _docs(spark, sf_dir).select(
-        "doc_id", F.concat(F.col("text"), email, phone).alias("text")
-    )
-
-
-PII_DOCS_CTE = """docs AS (
-  SELECT doc_id,
-    text
-    || CASE WHEN doc_id % 5 = 0
-            THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@mail.example.com'
-            ELSE '' END
-    || CASE WHEN doc_id % 7 = 0
-            THEN ' call +1 555 010 ' || CAST(doc_id % 10000 AS VARCHAR)
-            ELSE '' END AS text
-  FROM documents
-)"""
-
-
-def q_pii_redact(spark, sf_dir):
-    """Redact emails and phone/id-like number runs; emit match counts and
-    the redacted text. One pruned scan, zero shuffles, pure JVM regex —
-    the shape a 100 TB pre-training hygiene pass needs."""
-    t = F.col("text")
-    n_emails = F.size(F.regexp_extract_all(t, F.lit(PII_EMAIL_RX), F.lit(0)))
-    after_email = F.regexp_replace(t, PII_EMAIL_RX, "<EMAIL>")
-    n_numbers = F.size(
-        F.regexp_extract_all(after_email, F.lit(PII_NUMBER_RX), F.lit(0))
-    )
-    redacted = F.regexp_replace(after_email, PII_NUMBER_RX, "<NUM>")
-    return par(_docs_with_pii(spark, sf_dir)).select(
-        "doc_id",
-        n_emails.alias("n_emails"),
-        n_numbers.alias("n_numbers"),
-        F.substring(redacted, 1, 300).alias("redacted"),
-    )
-
-
-def sql_pii_redact():
-    email = D.rx(PII_EMAIL_RX)
-    num = D.rx(PII_NUMBER_RX)
-    return f"""
-WITH {PII_DOCS_CTE},
-a AS (
-  SELECT doc_id, text,
-         regexp_replace(text, {email}, '<EMAIL>', 'g') AS after_email
-  FROM docs
-)
-SELECT doc_id,
-  len(regexp_extract_all(text, {email})) AS n_emails,
-  len(regexp_extract_all(after_email, {num})) AS n_numbers,
-  regexp_replace(after_email, {num}, '<NUM>', 'g')[1:300] AS redacted
-FROM a"""
-
-
-# Context-window chunking: token window size / stride (overlap =
-# CHUNK_TOKENS - CHUNK_STRIDE). sf docs run ~40-90 ws-tokens, so the
-# 64/48 split genuinely produces multi-chunk docs at test scale.
-CHUNK_TOKENS = 64
-CHUNK_STRIDE = 48
-
-
-def q_doc_chunks(spark, sf_dir):
-    """Split documents into overlapping token-window chunks — the
-    context-window preparation step of a pre-training pipeline. Chunks
-    are token slices re-joined with single spaces (identical in both
-    engines, so the text compare is exact); chunk count is
-    1 + ceil(max(n - C, 0) / stride) in pure integer arithmetic. One
-    pruned scan, a sequence-explode, zero shuffles."""
-    t = F.col("text")
-    tokens = F.regexp_extract_all(t, F.lit(r"[^ \t\n\x0B\f\r]+"), F.lit(0))
-    n = F.size(tokens)
-    n_chunks = F.lit(1) + F.floor(
-        (F.greatest(n - CHUNK_TOKENS, F.lit(0)) + CHUNK_STRIDE - 1)
-        / F.lit(CHUNK_STRIDE)
-    ).cast("int")
-    d = par(_docs(spark, sf_dir)).select(
-        "doc_id", tokens.alias("toks"), n.alias("n_tokens"),
-        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
-    )
-    sl = F.slice(
-        F.col("toks"), F.col("chunk_idx") * CHUNK_STRIDE + 1, CHUNK_TOKENS
-    )
-    return d.select(
-        "doc_id", "chunk_idx", "n_tokens",
-        F.size(sl).alias("chunk_tokens"),
-        F.array_join(sl, " ").alias("chunk_text"),
-    )
-
-
-def sql_doc_chunks():
-    toks = r"regexp_extract_all(text, '[^ \t\n\x0b\f\r]+')"
-    return f"""
-WITH d AS (
-  SELECT doc_id, {toks} AS toks, len({toks}) AS n_tokens FROM documents
-),
-e AS (
-  SELECT doc_id, toks, n_tokens,
-         unnest(range(0, 1 + (greatest(n_tokens - {CHUNK_TOKENS}, 0)
-                              + {CHUNK_STRIDE} - 1) // {CHUNK_STRIDE}))
-           AS chunk_idx
-  FROM d
-)
-SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-       CAST(n_tokens AS INT) AS n_tokens,
-       CAST(len(list_slice(toks, chunk_idx * {CHUNK_STRIDE} + 1,
-                           chunk_idx * {CHUNK_STRIDE} + {CHUNK_TOKENS}))
-            AS INT) AS chunk_tokens,
-       array_to_string(list_slice(toks, chunk_idx * {CHUNK_STRIDE} + 1,
-                                  chunk_idx * {CHUNK_STRIDE} + {CHUNK_TOKENS}),
-                       ' ') AS chunk_text
-FROM e"""
-
-
-# (label, numerator, denominator) of the discrete quantile ranks. Rank
-# k = ceil(num*n/den) is computed in EXACT integer arithmetic —
-# (num*n + den-1) div den — because the float route is a dialect trap:
-# DuckDB parses 0.9 as DECIMAL (0.9*100 = 90 exactly) while Spark
-# multiplies doubles (0.9*100 = 90.000000000000014, ceil -> 91).
-QUANTILE_RANKS = (("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100))
-
-
-def doclen_quantiles_over(d: DataFrame) -> DataFrame:
-    """Exact discrete quantiles over (source, n_chars) rows — the de-skewed
-    shape shared by the contract query and the planted-whale test."""
-    from pyspark.sql import Window
-
-    g = d.groupBy("source", "n_chars").agg(F.count(F.lit(1)).alias("c"))
-    w_cum = (
-        Window.partitionBy("source")
-        .orderBy(F.col("n_chars").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    r = g.select(
-        "source", "n_chars",
-        F.sum("c").over(w_cum).alias("cum"),
-        F.sum("c").over(Window.partitionBy("source")).alias("n"),
-    )
-    picks = [
-        F.min(
-            F.when(
-                F.col("cum") >= F.expr(f"({num} * n + {den - 1}) div {den}"),
-                F.col("n_chars"),
-            )
-        ).alias(label)
-        for label, num, den in QUANTILE_RANKS
-    ]
-    return r.groupBy("source").agg(F.max("n").alias("n_docs"), *picks)
-
-
-def q_doclen_quantiles(spark, sf_dir):
-    """Per-source document-length distribution: exact DISCRETE quantiles
-    (the k-th smallest value, k = ceil(p*n)) — no interpolation, so every
-    output is an integer that exists in the data and the cross-engine
-    compare is exact.
-
-    De-skew (VERDICT r05 #1): the k-th smallest n_chars is a function of
-    the per-(source, n_chars) COUNTS alone, so the rows are reduced to
-    that bounded relation first (map-side-combined agg, well-distributed
-    shuffle on the composite key) and the per-source window — cumulative
-    count + total — sorts DISTINCT LENGTHS, not rows. The quantile is the
-    smallest n_chars whose cumulative count reaches rank k. A source
-    holding 99% of a 100 TB corpus contributes at most ~max-doc-length
-    window rows instead of pinning its entire row set in one task; the
-    previous per-source row_number window was the last
-    low-cardinality-partition window in the contract. Two shuffles total
-    (composite-key agg, then source window + final agg on the same key) —
-    same count as the old shape."""
-    return doclen_quantiles_over(
-        _docs(spark, sf_dir).select("source", "n_chars")
-    )
-
-
-def sql_doclen_quantiles():
-    picks = ",\n       ".join(
-        f"CAST(max(CASE WHEN rn = ({num} * n + {den - 1}) // {den} "
-        f"THEN n_chars END) AS BIGINT) AS {label}"
-        for label, num, den in QUANTILE_RANKS
-    )
-    return f"""
-WITH r AS (
-  SELECT source, n_chars,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY n_chars, doc_id) AS rn,
-         count(*) OVER (PARTITION BY source) AS n
-  FROM documents
-)
-SELECT source, CAST(max(n) AS BIGINT) AS n_docs,
-       {picks}
-FROM r GROUP BY source"""
-
-
-VOCAB_TOPK = 20   # the synthetic corpus has 31 distinct terms, so the
-                  # limit BINDS (a k above the vocabulary would make the
-                  # top-k a no-op at test scale)
-
-
-def q_vocab_topk(spark, sf_dir):
-    """Corpus-level vocabulary head: the top-k terms by total occurrence
-    count. Scale shape: explode -> map-side-combined global count ->
-    orderBy+limit, which Catalyst plans as a distributed
-    TakeOrderedAndProject (per-partition top-k, tiny driver merge) — the
-    corpus never funnels through one sort task. Tie-break (count desc,
-    term asc) matches the oracle exactly."""
-    d = par(_docs(spark, sf_dir)).select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0))
-        ).alias("term")
-    )
-    return (
-        d.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("term").asc())
-        .limit(VOCAB_TOPK)
-    )
-
-
-def sql_vocab_topk():
-    return f"""
-SELECT term, CAST(count(*) AS BIGINT) AS n
-FROM (
-  SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
-  FROM documents
-)
-GROUP BY term ORDER BY n DESC, term ASC LIMIT {VOCAB_TOPK}"""
-
-
-def q_oov_rate(spark, sf_dir):
-    """Tokenizer-coverage audit: per-document out-of-vocabulary token
-    count and exact integer ppm rate, against the same top-K vocabulary
-    head vocab_topk ships (count desc, term asc — the limit binds at 20
-    of 31 corpus terms at sf0.01, so OOV is non-trivial). The metric a
-    tokenizer build loops on: raise K or add merges until oov_ppm drops
-    below budget.
-
-    Scale shape: the vocabulary is a TakeOrderedAndProject (never a
-    global sort) and joins back BROADCAST (K rows) onto the exploded
-    token stream — a left join null-check, so no second shuffle on the
-    skewed term key; the per-doc agg re-combines map-side. ppm uses the
-    cross-multiplied integer form (oov * 1e6 div n), exact and safe to
-    ~9.2e12 tokens per document."""
-    toks = par(_docs(spark, sf_dir)).select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
-            )
-        ).alias("term"),
-    )
-    vocab = (
-        toks.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("term").asc())
-        .limit(VOCAB_TOPK)
-        .select("term", F.lit(1).alias("in_vocab"))
-    )
-    flagged = toks.join(F.broadcast(vocab), "term", "left")
-    agg = flagged.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum(
-            F.when(F.col("in_vocab").isNull(), 1).otherwise(0)
-        ).alias("oov_tokens"),
-    )
-    return agg.select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("oov_tokens").cast("long").alias("oov_tokens"),
-        F.expr(
-            "CAST((oov_tokens * 1000000) div greatest(n_tokens, 1) AS BIGINT)"
-        ).alias("oov_ppm"),
-    )
-
-
-def sql_oov_rate():
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
-  FROM documents
-), vocab AS (
-  SELECT term FROM (
-    SELECT term, count(*) AS n FROM toks GROUP BY term
-    ORDER BY n DESC, term ASC LIMIT {VOCAB_TOPK}
-  )
-), agg AS (
-  SELECT t.doc_id, count(*) AS n_tokens,
-         sum(CASE WHEN v.term IS NULL THEN 1 ELSE 0 END) AS oov_tokens
-  FROM toks t LEFT JOIN vocab v ON v.term = t.term
-  GROUP BY t.doc_id
-)
-SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(oov_tokens AS BIGINT) AS oov_tokens,
-       CAST((oov_tokens * 1000000) // greatest(n_tokens, 1) AS BIGINT)
-         AS oov_ppm
-FROM agg"""
-
-
-# CCNet-style head/middle/tail thresholds on the mean-token-frequency
-# ppm, calibrated to BIND at sf0.01 (freq_ppm spans 30575-34064 there;
-# p10/p50/p90 = 33058/33341/33532): all three buckets non-empty, so the
-# driver hash proves the bucketing logic, not just that rows flowed.
-FREQ_HEAD_PPM = 33400
-FREQ_MIDDLE_PPM = 33100
-
-
-def q_token_freq_buckets(spark, sf_dir):
-    """Quality bucketing by language-model-frequency proxy — the CCNet
-    discipline (Wenzek et al. 2020 split web text into head/middle/tail
-    by LM perplexity; the deterministic, oracle-provable analog scores
-    each document by the MEAN corpus frequency of its tokens). Common
-    fluent text lands in the head; hapax-dense noise lands in the tail;
-    training mixes then sample per bucket. Output: (doc_id, n_tokens,
-    freq_ppm, bucket), one row per document — token-less docs score 0
-    (tail), a filter op must pass a verdict on EVERY doc.
-
-    Exactness: freq_ppm = floor(sum(cnt) * 1e6 / (n_tokens * N)) in
-    DECIMAL(38,0)/HUGEINT — the numerator and the n*N denominator both
-    overflow int64 at web scale, but the QUOTIENT is a mean relative
-    frequency <= 1e6, so the final long cast can never wrap (the
-    collocations lesson: check the quotient's range, not just the
-    operands').
-
-    Scale shape: one explode; the term-count join is UNHINTED (the
-    vocabulary is unbounded at web scale — AQE broadcasts when it
-    fits); per-doc agg re-combines map-side; the corpus total rides a
-    1-row broadcast cross join; the documents join-back is on the
-    high-cardinality doc_id."""
-    docs = par(_docs(spark, sf_dir))
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
-            )
-        ).alias("term"),
-    )
-    uni = toks.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
-    total = uni.agg(F.sum("cnt").cast("long").alias("total"))
-    per_doc = (
-        toks.join(uni, "term")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_tokens"),
-             F.sum("cnt").alias("sum_cnt"))
-        .crossJoin(F.broadcast(total))
-        .select(
-            "doc_id", F.col("n_tokens").cast("long").alias("n_tokens"),
-            F.expr(
-                "CAST((CAST(sum_cnt AS DECIMAL(38,0)) * 1000000) div "
-                "(CAST(n_tokens AS DECIMAL(38,0)) * total) AS BIGINT)"
-            ).alias("freq_ppm"),
-        )
-    )
-    out = docs.select("doc_id").join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
-        F.coalesce("freq_ppm", F.lit(0)).alias("freq_ppm"),
-    )
-    return out.withColumn(
-        "bucket",
-        F.when(F.col("freq_ppm") >= FREQ_HEAD_PPM, "head")
-        .when(F.col("freq_ppm") >= FREQ_MIDDLE_PPM, "middle")
-        .otherwise("tail"),
-    )
-
-
-def sql_token_freq_buckets():
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
-  FROM documents
-), uni AS (
-  SELECT term, count(*) AS cnt FROM toks GROUP BY term
-), n AS (
-  SELECT CAST(sum(cnt) AS BIGINT) AS total FROM uni
-), per_doc AS (
-  SELECT t.doc_id, count(*) AS n_tokens,
-         CAST((CAST(sum(u.cnt) AS HUGEINT) * 1000000) //
-              (CAST(count(*) AS HUGEINT) * any_value(n.total)) AS BIGINT)
-           AS freq_ppm
-  FROM toks t JOIN uni u USING (term) CROSS JOIN n
-  GROUP BY t.doc_id
-), filled AS (
-  SELECT d.doc_id,
-         CAST(coalesce(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-         coalesce(p.freq_ppm, 0) AS freq_ppm
-  FROM documents d LEFT JOIN per_doc p ON p.doc_id = d.doc_id
-)
-SELECT doc_id, n_tokens, freq_ppm,
-       CASE WHEN freq_ppm >= {FREQ_HEAD_PPM} THEN 'head'
-            WHEN freq_ppm >= {FREQ_MIDDLE_PPM} THEN 'middle'
-            ELSE 'tail' END AS bucket
-FROM filled"""
-
-
-def q_source_token_budget(spark, sf_dir):
-    """Training-mix accounting: per-source whitespace-token totals and
-    the corpus share in integer parts-per-million. Overflow note: the
-    naive ``tokens * 1e6 div total`` wraps int64 once the corpus passes
-    ~9.2e12 tokens (a 100 TB corpus does), so the product is taken in
-    wide integer arithmetic instead — DECIMAL(38,0) on the Spark side,
-    HUGEINT in the oracle — giving the EXACT ``floor(tokens*1e6/total)``
-    at any corpus size (ppm error < 1 by construction; the previous
-    pre-scaled-divisor form had relative error up to ~1/(total div 1e6)
-    and degenerated to raw token counts below 1e6 total — ADVICE r05).
-    One scan, one map-side-combined agg, a broadcast of the single-row
-    total."""
-    toks = F.size(
-        F.regexp_extract_all(F.col("text"), F.lit(r"[^ \t\n\x0B\f\r]+"), F.lit(0))
-    )
-    per_src = (
-        par(_docs(spark, sf_dir)).select("source", toks.alias("t"))
-        .groupBy("source")
-        .agg(F.sum("t").alias("tokens"), F.count(F.lit(1)).alias("n_docs"))
-    )
-    total = per_src.agg(F.sum("tokens").alias("corpus_tokens"))
-    return (
-        per_src.crossJoin(F.broadcast(total))
-        .select(
-            "source", "n_docs", "tokens",
-            F.expr(
-                "CAST((CAST(tokens AS DECIMAL(38,0)) * 1000000)"
-                " div greatest(corpus_tokens, 1) AS BIGINT)"
-            ).alias("share_ppm"),
-        )
-    )
-
-
-def sql_source_token_budget():
-    toks = r"len(regexp_extract_all(text, '[^ \t\n\x0b\f\r]+'))"
-    return f"""
-WITH s AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum({toks}) AS BIGINT) AS tokens
-  FROM documents GROUP BY source
-)
-SELECT source, n_docs, tokens,
-       CAST(CAST(tokens AS HUGEINT) * 1000000
-            // greatest((SELECT sum(tokens) FROM s), 1)
-            AS BIGINT) AS share_ppm
-FROM s"""
-
-
-TFIDF_TOPK = 3
-
-
-def q_tfidf_topk(spark, sf_dir):
-    """Per-document top-k distinctive terms by term-frequency /
-    document-frequency ratio (scaled to exact integer micros) — the
-    keyword-extraction shape: explode -> map-side-combined (doc, term)
-    count -> vocabulary document-frequency agg -> term join -> per-doc
-    top-k window on the high-cardinality doc key.
-
-    Dialect note (why tf/df rather than the ln-based idf): IEEE divide
-    and floor are correctly-rounded hardware ops, bit-identical across
-    engines, while libm ln() may differ in the last ulp — and with ~1e5
-    (doc, term) pairs a last-ulp disagreement lands on a round()
-    boundary often enough to flip a driver hash. Integer micros keep the
-    compare exact. The term join shuffles on term (no broadcast
-    assumption: a 100 TB crawl vocabulary is not broadcast-size; AQE
-    will broadcast when it is).
-
-    Plan note: this is a deliberate TWO-scan shape (audited). The
-    one-scan alternative — df as count() OVER (PARTITION BY term) —
-    puts every (doc, term) row of a hot term ('the') in ONE window
-    task: whale-term skew, the failure shape sessionize_chunked exists
-    to avoid. Both aggs here are map-side combined, so hot terms
-    collapse before their shuffles; two passes over a pruned 2-column
-    scan is the cheaper price. (ReuseExchange cannot merge the
-    branches: column pruning drops tf from the document-frequency agg,
-    so the partial-agg subtrees differ.)
-
-    Skew note (VERDICT r05 #6): the tf⋈df join still shuffles on the
-    zipfian term key, and a stop-word's post-agg partition carries up to
-    ~n_docs rows. The load-bearing mitigation is AQE skew-join — runtime
-    CONFIG, not plan shape — which splits the hot probe partitions; both
-    inputs being map-side combined bounds what any partition can hold to
-    distinct (doc, term) pairs, never raw token rows. The config is
-    therefore pinned where the contract session is prepared
-    (__spark_entry__._pin_session_confs) and in tests/conftest.py, not assumed."""
-    d = par(_docs(spark, sf_dir)).select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0))
-        ).alias("term"),
-    )
-    tf = d.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = tf.join(dfreq, "term").withColumn(
-        "score_micro",
-        F.floor(F.col("tf") * 1000000.0 / F.col("df")).cast("long"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("score_micro").desc(), F.col("term").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TFIDF_TOPK)
-        .select("doc_id", "term", "tf", "df", "score_micro", "rn")
-    )
-
-
-def sql_tfidf_topk():
-    return f"""
-WITH t AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
-  FROM documents
-),
-tf AS (SELECT doc_id, term, count(*) AS tf FROM t GROUP BY doc_id, term),
-dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term)
-SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df,
-       score_micro, rn
-FROM (
-  SELECT tf.doc_id, tf.term, tf.tf, d.df,
-         CAST(floor(tf.tf * 1000000.0 / d.df) AS BIGINT) AS score_micro,
-         row_number() OVER (
-           PARTITION BY tf.doc_id
-           ORDER BY CAST(floor(tf.tf * 1000000.0 / d.df) AS BIGINT) DESC,
-                    tf.term ASC) AS rn
-  FROM tf JOIN dfreq d USING (term)
-)
-WHERE rn <= {TFIDF_TOPK}"""
-
-
-BOILER_N = 5
-BOILER_MIN_DOCS = 2  # binds at sf0.01: 1096 of 23995 distinct 5-grams are
-                     # shared (max doc_freq 3); production sets this high
-                     # (50+) — the threshold is the only tuning knob
-
-
-def q_boilerplate_ngrams(spark, sf_dir):
-    """Corpus-level boilerplate detection — the cross-document companion
-    of the per-doc repetition gates: per-document count of word 5-grams
-    that also appear in other documents (doc_freq >= BOILER_MIN_DOCS).
-    High boiler_grams/n_grams marks template/navigation text a training
-    pipeline strips before tokenization.
-
-    Scale shape mirrors tfidf_topk's audited two-agg discipline: explode
-    → DISTINCT (doc_id, gram) so intra-doc repeats count once → doc_freq
-    agg on gram (map-side combined, a hot template gram collapses before
-    its shuffle) → join the SMALL filtered boilerplate set back (shared
-    grams only — broadcast-able; the skewed-gram probe rides AQE
-    skew-join like tfidf's term join) → two per-doc aggs. Counts only,
-    no division: exact integers carry no rounding-dialect risk, callers
-    derive whatever ratio they gate on.
-
-    100 TB note: the shuffle key here is the raw 5-gram STRING (~30-60
-    bytes); a production run hashes it to int64 first (xxhash64 —
-    collisions only merge counts, never lose documents) cutting shuffle
-    bytes several-fold. Kept as strings in the contract query because
-    DuckDB has no xxhash64 and the polyhash twin would force an Arrow
-    stage into an otherwise pure-JVM plan — the oracle checks the
-    semantics; the hash is a mechanical key substitution."""
-    toks = (
-        par(_docs(spark, sf_dir))
-        .select(
-            "doc_id",
-            F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
-            ).alias("toks"),
-        )
-        .filter(F.size("toks") >= BOILER_N)
-    )
-    grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(toks) - {BOILER_N - 1}), "
-                f"i -> array_join(slice(toks, i, {BOILER_N}), ' '))"
-            )
-        ).alias("gram"),
-    ).distinct()
-    boiler = (
-        grams.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("doc_freq"))
-        .filter(F.col("doc_freq") >= BOILER_MIN_DOCS)
-        .select("gram")
-    )
-    totals = grams.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_grams")
-    )
-    hits = (
-        grams.join(boiler, "gram")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("boiler_grams"))
-    )
-    return totals.join(hits, "doc_id", "left").select(
-        "doc_id",
-        F.col("n_grams").cast("long").alias("n_grams"),
-        F.coalesce("boiler_grams", F.lit(0)).cast("long").alias(
-            "boiler_grams"
-        ),
-    )
-
-
-def sql_boilerplate_ngrams():
-    # range(a, b) is exclusive of b and t[i:i+k] is inclusive in DuckDB,
-    # so range(1, len-(N-2)) x t[i:i+(N-1)] yields exactly the Spark
-    # sequence(1, size-(N-1)) x slice(toks, i, N) gram set
-    return f"""
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS t
-  FROM documents
-), eligible AS (
-  SELECT doc_id, t FROM toks WHERE len(t) >= {BOILER_N}
-), grams AS (
-  SELECT DISTINCT doc_id, gram FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(t) - {BOILER_N - 2}),
-                  i -> array_to_string(t[i:i+{BOILER_N - 1}], ' '))) AS gram
-    FROM eligible)
-), boiler AS (
-  SELECT gram FROM (
-    SELECT gram, count(*) AS doc_freq FROM grams GROUP BY gram
-  ) WHERE doc_freq >= {BOILER_MIN_DOCS}
-), totals AS (
-  SELECT doc_id, count(*) AS n_grams FROM grams GROUP BY doc_id
-), hits AS (
-  SELECT g.doc_id, count(*) AS boiler_grams
-  FROM grams g JOIN boiler b USING (gram) GROUP BY g.doc_id
-)
-SELECT t.doc_id, CAST(t.n_grams AS BIGINT) AS n_grams,
-       CAST(coalesce(h.boiler_grams, 0) AS BIGINT) AS boiler_grams
-FROM totals t LEFT JOIN hits h ON h.doc_id = t.doc_id"""
-
-
-SPAN_W = 4           # words per non-overlapping tile
-SPAN_MIN_DOCS = 2    # a tile in >= 2 documents is boilerplate
-                     # (binds at sf0.01: 341 of 6544 distinct tiles)
-
-
-def q_remove_boilerplate(spark, sf_dir):
-    """The removal stage boilerplate_ngrams only detects: tile each
-    document into non-overlapping SPAN_W-word spans, drop every span
-    whose text appears in >= SPAN_MIN_DOCS distinct documents, and
-    reassemble the surviving spans in order (the CCNet/RefinedWeb-style
-    shared-span dedup a training pipeline runs before tokenization;
-    graft analog of the reference's junk-segment removal,
-    issuer_processor_v.py:208-218 applied corpus-wide).
-
-    Scale shape follows boilerplate_ngrams' audited discipline: explode
-    to spans once → DISTINCT (doc_id, span) before the doc_freq agg
-    (map-side combined; a hot template span collapses before its
-    shuffle) → anti-join the boilerplate set back (high-df by
-    definition, so FAR smaller than the corpus — AQE broadcasts it when
-    it fits, skew-join covers a hot span otherwise) → per-doc reassembly
-    via sort_array over (idx, span) structs, NEVER a window (a
-    collect_list + sort_array agg is map-side partial-aggregatable and
-    has no whale-partition sort; span order inside one doc is bounded by
-    doc length). Final left joins restore zero-token docs with
-    n_spans=0 and empty text_clean."""
-    toks = par(_docs(spark, sf_dir)).select(
-        "doc_id",
-        F.regexp_extract_all(
-            F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
-        ).alias("t"),
-    )
-    # sequence(1, 0) would generate a DESCENDING [1, 0] — guard size >= 1
-    spans = toks.filter(F.size("t") >= 1).select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(1, CAST(ceil(size(t) / {SPAN_W}.0) AS INT)), "
-                f"i -> array_join(slice(t, (i-1)*{SPAN_W}+1, {SPAN_W}), ' '))"
-            )
-        ).alias("idx", "span"),
-    )
-    boiler = (
-        spans.select("doc_id", "span").distinct()
-        .groupBy("span").agg(F.count(F.lit(1)).alias("doc_freq"))
-        .filter(F.col("doc_freq") >= SPAN_MIN_DOCS)
-        .select("span")
-    )
-    totals = spans.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_spans"))
-    kept = (
-        spans.join(boiler, "span", "left_anti")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("kept_spans"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("idx", "span"))),
-                    lambda s: s.getField("span"),
-                ),
-                " ",
-            ).alias("text_clean"),
-        )
-    )
-    return (
-        _docs(spark, sf_dir).select("doc_id")
-        .join(totals, "doc_id", "left")
-        .join(kept, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
-            F.coalesce("kept_spans", F.lit(0)).cast("long").alias("kept_spans"),
-            F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-        )
-    )
-
-
-def sql_remove_boilerplate():
-    # parallel unnests zip in DuckDB; range(0, n) is exclusive and
-    # t[a:b] is 1-based inclusive, so i in 0..n-1 with t[i*W+1 : i*W+W]
-    # tiles exactly like Spark's sequence(1, n) x slice(t, (i-1)*W+1, W)
-    w = SPAN_W
-    return f"""
-WITH t AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS t
-  FROM documents
-), sp AS (
-  SELECT doc_id,
-         unnest(range(0, CAST(ceil(len(t) / {w}.0) AS INT))) AS idx,
-         unnest(list_transform(range(0, CAST(ceil(len(t) / {w}.0) AS INT)),
-                i -> array_to_string(t[i*{w}+1:i*{w}+{w}], ' '))) AS span
-  FROM t WHERE len(t) >= 1
-), boiler AS (
-  SELECT span FROM (
-    SELECT span, count(*) AS doc_freq
-    FROM (SELECT DISTINCT doc_id, span FROM sp) GROUP BY span
-  ) WHERE doc_freq >= {SPAN_MIN_DOCS}
-), totals AS (
-  SELECT doc_id, count(*) AS n_spans FROM sp GROUP BY doc_id
-), kept AS (
-  SELECT doc_id, count(*) AS kept_spans,
-         string_agg(span, ' ' ORDER BY idx) AS text_clean
-  FROM sp ANTI JOIN boiler USING (span) GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(coalesce(tt.n_spans, 0) AS BIGINT) AS n_spans,
-       CAST(coalesce(k.kept_spans, 0) AS BIGINT) AS kept_spans,
-       coalesce(k.text_clean, '') AS text_clean
-FROM documents d
-LEFT JOIN totals tt ON tt.doc_id = d.doc_id
-LEFT JOIN kept k ON k.doc_id = d.doc_id"""
-
-
-COLLOC_K = 20
-
-
-def q_collocations_topk(spark, sf_dir):
-    """Corpus collocations: top-K adjacent word pairs by lift — the
-    phrase-mining companion of vocab_topk (a tokenizer-vocabulary build
-    promotes high-lift bigrams to merge candidates). Lift is kept as an
-    exact integer ppm ratio, pair_cnt * N_tokens * 1e6 div (c1 * c2) —
-    rounding-free like tfidf_topk's integer-micros score (libm log, the
-    usual PMI formulation, is NOT bit-identical across engines).
-
-    Scale shape: unigram and bigram counts are both map-side-combined
-    aggs over one explode each; the unigram joins are deliberately
-    UNHINTED (the vocabulary is unbounded at web scale — AQE broadcasts
-    at runtime when it fits); the corpus total rides a 1-row broadcast
-    cross join; the final top-K is orderBy+limit — a distributed
-    TakeOrderedAndProject, never a global sort.
-
-    Overflow: every integer formulation of lift wraps somewhere a web
-    corpus actually reaches — the int64 numerator at ~9.2e12 tokens,
-    and even a DECIMAL(38,0) numerator still funnels through an int64
-    QUOTIENT, which a hapax pair (pair_cnt=c1=c2=1, lift = N*1e6)
-    exceeds at the same ~9.2e12 tokens, i.e. exactly the rows that
-    rank first. So the lift is a DOUBLE ratio instead: multiplication
-    and division are hardware-IEEE ops, bit-identical across engines
-    for the same expression tree (the tfidf_topk doctrine — libm is
-    the non-portable part, not arithmetic), unbounded in range, and
-    collisions just become deterministic bigram-ordered ties."""
-    toks = par(_docs(spark, sf_dir)).select(
-        F.regexp_extract_all(
-            F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
-        ).alias("t")
-    )
-    # element_at is 1-based on both engines (Spark t[i] would be 0-based)
-    pairs = toks.filter(F.size("t") >= 2).select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 1), "
-                "i -> struct(element_at(t, i) AS w1, element_at(t, i + 1) AS w2))"
-            )
-        ).alias("p")
-    ).select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    uni = (
-        toks.select(F.explode("t").alias("w"))
-        .groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    )
-    total = uni.agg(F.sum("c").cast("long").alias("total"))
-    bi = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("pair_cnt"))
-    # NO forced broadcast on the unigram joins: the vocabulary is
-    # unbounded at web scale (1e8+ terms), so a broadcast hint would
-    # eventually OOM the driver; both sides are already term-keyed
-    # aggregates, and AQE broadcasts at runtime whenever the vocab
-    # actually fits (it does at every test SF). Only the 1-row corpus
-    # total is hint-broadcast.
-    scored = (
-        bi.join(uni.select(F.col("w").alias("w1"),
-                           F.col("c").alias("c1")), "w1")
-        .join(uni.select(F.col("w").alias("w2"),
-                         F.col("c").alias("c2")), "w2")
-        .crossJoin(F.broadcast(total))
-        .select(
-            F.concat_ws(" ", "w1", "w2").alias("bigram"),
-            F.col("pair_cnt").cast("long").alias("pair_cnt"),
-            F.expr(
-                "(CAST(pair_cnt AS DOUBLE) * CAST(total AS DOUBLE) "
-                "* 1000000.0) / (CAST(c1 AS DOUBLE) * CAST(c2 AS DOUBLE))"
-            ).alias("lift_ppm"),
-        )
-    )
-    return scored.orderBy(
-        F.col("lift_ppm").desc(), F.col("bigram").asc()
-    ).limit(COLLOC_K)
-
-
-def sql_collocations_topk():
-    return f"""
-WITH t AS (
-  SELECT regexp_extract_all(lower(text), '[a-z]+') AS t FROM documents
-), pr AS (
-  SELECT unnest(list_transform(range(1, len(t)), i -> t[i])) AS w1,
-         unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS w2
-  FROM t WHERE len(t) >= 2
-), uni AS (
-  SELECT unnest(t) AS w FROM t
-), uc AS (
-  SELECT w, count(*) AS c FROM uni GROUP BY w
-), n AS (
-  SELECT CAST(count(*) AS BIGINT) AS total FROM uni
-), bi AS (
-  SELECT w1, w2, count(*) AS pair_cnt FROM pr GROUP BY w1, w2
-)
-SELECT bi.w1 || ' ' || bi.w2 AS bigram,
-       CAST(bi.pair_cnt AS BIGINT) AS pair_cnt,
-       (CAST(bi.pair_cnt AS DOUBLE) * CAST(n.total AS DOUBLE) * 1000000.0)
-         / (CAST(u1.c AS DOUBLE) * CAST(u2.c AS DOUBLE)) AS lift_ppm
-FROM bi
-JOIN uc u1 ON u1.w = bi.w1
-JOIN uc u2 ON u2.w = bi.w2
-CROSS JOIN n
-ORDER BY lift_ppm DESC, bigram ASC LIMIT {COLLOC_K}"""
-
-
-def q_lang_id(spark, sf_dir):
-    tokens = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"[a-z]+"), F.lit(0))
-    stop_hits = F.size(F.filter(tokens, lambda w: w.isin(*_STOPWORDS)))
-    n = F.size(tokens)
-    ratio = F.when(n > 0, stop_hits / n).otherwise(0.0)
-    lang = F.when(ratio >= 0.05, "en").otherwise("unk")
-    return par(_docs(spark, sf_dir)).select("doc_id", lang.alias("lang_pred"))
-
-
-def sql_lang_id():
-    stop_list = ", ".join(D.q(w) for w in _STOPWORDS)
-    ratio = f"""CASE WHEN len(regexp_extract_all(lower(text), '[a-z]+')) > 0
-      THEN len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                            w -> w IN ({stop_list}))) * 1.0
-           / len(regexp_extract_all(lower(text), '[a-z]+'))
-      ELSE 0.0 END"""
-    return f"""
-SELECT doc_id, CASE WHEN {ratio} >= 0.05 THEN 'en' ELSE 'unk' END AS lang_pred
-FROM documents"""
-
-
-def q_fingerprint(spark, sf_dir):
-    norm = F.trim(F.regexp_replace(F.upper(F.col("text")), r"\s+", " "))
-    return par(_docs(spark, sf_dir)).select(
-        "doc_id", F.md5(norm).alias("fingerprint")
-    )
-
-
-def sql_fingerprint():
-    norm = D.collapse_ws("upper(text)")
-    return f"SELECT doc_id, md5({norm}) AS fingerprint FROM documents"
-
-
-def q_dedup_exact(spark, sf_dir):
-    norm = F.trim(F.regexp_replace(F.upper(F.col("text")), r"\s+", " "))
-    df = _docs(spark, sf_dir).withColumn("fingerprint", F.md5(norm))
-    return df.groupBy("fingerprint").agg(
-        F.min("doc_id").alias("keeper_doc_id"),
-        F.count(F.lit(1)).alias("n_dups"),
-    )
-
-
-def sql_dedup_exact():
-    norm = D.collapse_ws("upper(text)")
-    return f"""
-SELECT md5({norm}) AS fingerprint, min(doc_id) AS keeper_doc_id,
-       count(*) AS n_dups
-FROM documents GROUP BY 1"""
-
-
-# ---------------------------------------------------------------------------
-# W1/W5/A2/K4/S11/S12: events-hosted operators
-# ---------------------------------------------------------------------------
-
-def q_top1_event_per_user(spark, sf_dir):
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        _events(spark, sf_dir)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", "event_type", "value")
-    )
-
-
-def sql_top1_event_per_user():
-    return """
-SELECT user_id, event_id, event_type, value
-FROM events
-QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1"""
-
-
-def q_event_status_gate(spark, sf_dir):
-    status = (
-        F.when(F.col("value") >= 90.0, "AUTO-UPDATED")
-        .when(F.col("value") >= 70.0, "REVIEW")
-        .otherwise("REJECTED")
-    )
-    return (
-        _events(spark, sf_dir)
-        .withColumn("status", status)
-        .groupBy("status")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def sql_event_status_gate():
-    return """
-SELECT CASE WHEN value >= 90.0 THEN 'AUTO-UPDATED'
-            WHEN value >= 70.0 THEN 'REVIEW'
-            ELSE 'REJECTED' END AS status, count(*) AS n
-FROM events GROUP BY 1"""
-
-
-def q_event_stats(spark, sf_dir):
-    return _events(spark, sf_dir).groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("value"), 4).alias("sum_value"),
-        F.round(F.avg("value"), 4).alias("avg_value"),
-        F.round(F.min("value"), 4).alias("min_value"),
-        F.round(F.max("value"), 4).alias("max_value"),
-    )
-
-
-def sql_event_stats():
-    return """
-SELECT event_type, count(*) AS n,
-       round(sum(value), 4) AS sum_value,
-       round(avg(value), 4) AS avg_value,
-       round(min(value), 4) AS min_value,
-       round(max(value), 4) AS max_value
-FROM events GROUP BY 1"""
-
-
-def q_json_props(spark, sf_dir):
-    k = F.get_json_object(F.col("props"), "$.k").cast("int")
-    return (
-        _events(spark, sf_dir)
-        .withColumn("k", k)
-        .groupBy("event_type")
-        .agg(F.sum("k").alias("sum_k"), F.count(F.lit(1)).alias("n"))
-    )
-
-
-def sql_json_props():
-    # CAST the aggregate: DuckDB sum(INTEGER) yields HUGEINT while Spark
-    # sum(int) yields BIGINT — values agree but the driver hashes types too.
-    return """
-SELECT event_type,
-       CAST(sum(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k,
-       count(*) AS n
-FROM events GROUP BY 1"""
-
-
-def q_union_dedup(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    a = ev.filter(F.col("event_type") == "error").select("user_id")
-    b = ev.filter(F.col("value") > 95.0).select("user_id")
-    return a.unionByName(b).dropDuplicates(["user_id"])
-
-
-def sql_union_dedup():
-    return """
-SELECT DISTINCT user_id FROM (
-  SELECT user_id FROM events WHERE event_type = 'error'
-  UNION ALL
-  SELECT user_id FROM events WHERE value > 95.0
-)"""
-
-
-def q_last_tokens(spark, sf_dir):
-    tokens = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0))
-    last3 = F.array_join(F.slice(tokens, -3, 3), " ")
-    return (
-        par(_docs(spark, sf_dir))
-        .filter(F.size(tokens) >= 3)
-        .select("doc_id", last3.alias("last_tokens"))
-    )
-
-
-def sql_last_tokens():
-    return """
-SELECT doc_id,
-  array_to_string(regexp_extract_all(text, '[^ \\t\\n\\x0b\\f\\r]+')[-3:], ' ') AS last_tokens
-FROM documents
-WHERE len(regexp_extract_all(text, '[^ \\t\\n\\x0b\\f\\r]+')) >= 3"""
-
-
-# ---------------------------------------------------------------------------
-# J2 (SQL variant): levenshtein-similarity dictionary join
-# ---------------------------------------------------------------------------
-
-def q_lev_match(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    first_tok = F.regexp_extract(F.upper(F.col("text")), r"^([A-Za-z]+)", 1)
-    dim = (
-        docs.filter(F.col("doc_id") < 30)
-        .select(F.upper(first_tok).alias("dict_name"))
-        .filter(F.length("dict_name") > 0)
-        .distinct()
-    )
-    cands = docs.select("doc_id", F.upper(first_tok).alias("cand"))
-    joined = cands.join(F.broadcast(dim))
-    sim = F.round(
-        1.0
-        - F.levenshtein(F.col("cand"), F.col("dict_name"))
-        / F.greatest(F.length("cand"), F.length("dict_name")),
-        6,
-    )
-    joined = joined.withColumn("sim", sim).filter(F.col("sim") >= 0.5)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("sim").desc(), F.col("dict_name").asc()
-    )
-    return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "dict_name", "sim")
-    )
-
-
-def sql_lev_match():
-    return """
-WITH dim AS (
-  SELECT DISTINCT upper(regexp_extract(upper(text), '^([A-Za-z]+)', 1)) AS dict_name
-  FROM documents WHERE doc_id < 30
-    AND length(regexp_extract(upper(text), '^([A-Za-z]+)', 1)) > 0
-), cands AS (
-  SELECT doc_id, upper(regexp_extract(upper(text), '^([A-Za-z]+)', 1)) AS cand
-  FROM documents
-)
-SELECT doc_id, dict_name, sim FROM (
-  SELECT c.doc_id, d.dict_name,
-         round(1.0 - levenshtein(c.cand, d.dict_name) * 1.0
-               / greatest(length(c.cand), length(d.dict_name)), 6) AS sim
-  FROM cands c CROSS JOIN dim d
-) WHERE sim >= 0.5
-QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY sim DESC, dict_name ASC) = 1"""
-
-
-# ---------------------------------------------------------------------------
-# Similarity search: brute-force cosine top-k (embeddings)
-# ---------------------------------------------------------------------------
-
-def q_ann_topk(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import similarity as SIM
-
-    emb = _embeddings(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return SIM.cosine_topk_bruteforce(emb, queries, k=5).select(
-        "query_id", F.col("neighbor_id").alias("vec_id"), "rn"
-    )
-
-
-def sql_ann_topk():
-    return """
-WITH q AS (
-  SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5
-), scored AS (
-  SELECT q.query_id, e.vec_id,
-         round(list_dot_product(e.embedding, q.qvec)
-               / (sqrt(list_dot_product(e.embedding, e.embedding))
-                  * sqrt(list_dot_product(q.qvec, q.qvec))), 4) AS sim
-  FROM embeddings e CROSS JOIN q
-  WHERE e.vec_id <> q.query_id
-)
-SELECT query_id, vec_id, rn FROM (
-  SELECT query_id, vec_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id ASC) AS rn
-  FROM scored
-) WHERE rn <= 5"""
-
-
-# ---------------------------------------------------------------------------
-# Dedup family (exact is above; these are the LSH/SimHash/ngram operators)
-# ---------------------------------------------------------------------------
-
-def _docs_with_near_dups(spark, sf_dir) -> DataFrame:
-    """documents ∪ deterministic near-duplicate copies (every 7th doc, with
-    its 2nd..4th whitespace tokens dropped), ids offset by 1,000,000 — gives
-    the dedup operators guaranteed, reproducible positives. Only ids below
-    2^62 are cloned so the offset can never overflow int64 (large-id fuzz
-    sweep territory); real corpora are unaffected."""
-    d = _docs(spark, sf_dir)
-    toks = F.split(F.col("text"), " ")
-    mutated = F.array_join(
-        F.concat(F.slice(toks, 1, 1), F.slice(toks, 5, 100000)), " "
-    )
-    dups = d.filter(
-        (F.col("doc_id") % 7 == 0) & (F.col("doc_id") < (1 << 62))
-    ).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        mutated.alias("text"), "lang", "source", "n_chars",
-    )
-    return d.unionByName(dups)
-
-
-def q_minhash_near_dup(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    docs = _docs_with_near_dups(spark, sf_dir)
-    return DD.minhash_lsh_pairs(
-        docs, "doc_id", "text", num_perm=64, bands=16, shingle_k=5,
-        threshold=0.5,
-    )
-
-
-# The bucket cap a 100 TB run would actually set: a hot LSH bucket makes
-# candidate pairs quadratic in its size, so production caps it (members can
-# still pair through their other bands). Small enough to BIND at sf0.01
-# (87 pairs vs 105 uncapped — the driver row proves the capped semantics
-# change the answer, not just that the cap code ran).
-MINHASH_CAP_MAX_BUCKET = 2
-
-
-def q_minhash_near_dup_capped(spark, sf_dir):
-    """minhash_near_dup with the production bucket cap engaged (VERDICT
-    r03 #6); oracle mirrors the cap by partitioning on the band VALUE."""
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    docs = _docs_with_near_dups(spark, sf_dir)
-    return DD.minhash_lsh_pairs(
-        docs, "doc_id", "text", num_perm=64, bands=16, shingle_k=5,
-        threshold=0.5, max_bucket=MINHASH_CAP_MAX_BUCKET,
-    )
-
-
-def q_simhash_near_dup(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    docs = _docs_with_near_dups(spark, sf_dir)
-    return DD.simhash_pairs(docs, "doc_id", "text", max_hamming=3)
-
-
-MINHASH_CONTRACT_TABLE = "minhash_contract_idx"
-
-
-def _index_split(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(corpus, batch, probe) of the persisted-index queries: even-id
-    originals (persisted), odd-id originals (appended as the delta) and
-    the near-dup clones (ids >= 1,000,000, probed)."""
-    originals = docs.filter(F.col("doc_id") < 1000000)
-    return (
-        originals.filter(F.col("doc_id") % 2 == 0),
-        originals.filter(F.col("doc_id") % 2 == 1),
-        docs.filter(F.col("doc_id") >= 1000000),
-    )
-
-
-def _drop_table_and_location(spark, table: str) -> None:
-    """Shared with the index-maintenance ops — see sources/io.py."""
-    from cheque_ocr_project_spark.sources.io import drop_table_and_location
-
-    drop_table_and_location(spark, table)
-
-
-def q_minhash_incremental(spark, sf_dir):
-    """The rolling-ingest index path under the driver oracle (previously
-    eq-test only): persist a band_key-bucketed index over the even-id
-    originals, APPEND the odd-id originals as a delta batch
-    (append_to_minhash_index), then probe with the near-dup clones
-    (ids >= 1,000,000) through the delta-aware incremental join. Pairs
-    must equal the full recompute restricted to cross pairs — the clones'
-    originals sit in BOTH the bucketed index (even) and the delta (odd),
-    so a silently unprobed delta or index would drop about half the
-    pairs, not zero. Idempotent per invocation: the delta is dropped
-    before the append and the index is persisted with overwrite."""
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    corpus, batch, probe = _index_split(_docs_with_near_dups(spark, sf_dir))
-    t = MINHASH_CONTRACT_TABLE
-    _drop_table_and_location(spark, t)
-    _drop_table_and_location(spark, f"{t}__delta")
-    DD.persist_minhash_index(corpus, t, "doc_id", "text", n_buckets=8)
-    DD.append_to_minhash_index(spark, batch, t, "doc_id", "text")
-    return DD.incremental_minhash_pairs(
-        spark, probe, t, "doc_id", "text", threshold=0.5
-    )
-
-
-def _sql_minhash_near_dup():
-    from cheque_ocr_project_spark.plans import dedup_sql
-
-    return dedup_sql.sql_minhash_near_dup(
-        num_perm=64, bands=16, shingle_k=5, threshold=0.5
-    )
-
-
-def _sql_minhash_near_dup_capped():
-    from cheque_ocr_project_spark.plans import dedup_sql
-
-    return dedup_sql.sql_minhash_near_dup(
-        num_perm=64, bands=16, shingle_k=5, threshold=0.5,
-        max_bucket=MINHASH_CAP_MAX_BUCKET,
-    )
-
-
-def _sql_simhash_near_dup():
-    from cheque_ocr_project_spark.plans import dedup_sql
-
-    return dedup_sql.sql_simhash_near_dup(max_hamming=3)
-
-
-def _sql_minhash_incremental():
-    from cheque_ocr_project_spark.plans import dedup_sql
-
-    return dedup_sql.sql_minhash_incremental(
-        num_perm=64, bands=16, shingle_k=5, threshold=0.5
-    )
-
-
-MINHASH_COMPACT_TABLE = "minhash_compact_idx"
-
-
-def q_minhash_compacted(spark, sf_dir):
-    """compact_index under the driver oracle: same three-way split as
-    q_minhash_incremental, but the delta is FOLDED into the bucketed
-    layout (compact_index) before probing — the probe runs entirely
-    against the compacted index, no delta join. Compaction is
-    semantics-preserving, so the oracle is the SAME cross-pair SQL; a
-    compaction that dropped, duplicated, or mis-bucketed rows would
-    break the hash match."""
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    corpus, batch, probe = _index_split(_docs_with_near_dups(spark, sf_dir))
-    t = MINHASH_COMPACT_TABLE
-    for suffix in ("", "__delta", "__compact", "__old"):
-        _drop_table_and_location(spark, f"{t}{suffix}")
-    DD.persist_minhash_index(corpus, t, "doc_id", "text", n_buckets=8)
-    DD.append_to_minhash_index(spark, batch, t, "doc_id", "text")
-    DD.compact_index(spark, t)
-    assert not spark.catalog.tableExists(f"{t}__delta")
-    return DD.incremental_minhash_pairs(
-        spark, probe, t, "doc_id", "text", threshold=0.5
-    )
-
-
-SIMHASH_CONTRACT_TABLE = "simhash_contract_idx"
-
-
-def q_simhash_incremental(spark, sf_dir):
-    """SimHash twin of q_minhash_incremental: same three-way split
-    (even-id corpus → persisted chunk_key-bucketed index, odd-id batch →
-    delta append, clones → delta-aware probe), same both-paths-must-fire
-    property. See q_minhash_incremental for the setup discipline."""
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    corpus, batch, probe = _index_split(_docs_with_near_dups(spark, sf_dir))
-    t = SIMHASH_CONTRACT_TABLE
-    _drop_table_and_location(spark, t)
-    _drop_table_and_location(spark, f"{t}__delta")
-    DD.persist_simhash_index(corpus, t, "doc_id", "text", n_buckets=8)
-    DD.append_to_simhash_index(spark, batch, t, "doc_id", "text")
-    return DD.incremental_simhash_pairs(
-        spark, probe, t, "doc_id", "text", max_hamming=3
-    )
-
-
-def _sql_simhash_incremental():
-    from cheque_ocr_project_spark.plans import dedup_sql
-
-    return dedup_sql.sql_simhash_incremental(max_hamming=3)
-
-
-MINHASH_NOVELTY_TABLE = "minhash_novelty_idx"
-# id-ordered arrival batches for the novelty filter: fixed boundaries so
-# the decomposition is deterministic for ANY id distribution (the
-# large-id fuzz sweep included — an empty batch is just a no-op probe).
-# At the contract SFs this splits originals across two batches and the
-# clones into the third, so within-batch pairs, index probes, AND delta
-# probes all must fire for the oracle hash to match.
-NOVELTY_BATCH_BOUNDS = ((None, 250), (250, 1000000), (1000000, None))
-
-
-def _novelty_batches(docs: DataFrame) -> list[DataFrame]:
-    """``docs`` cut into the id-ordered NOVELTY_BATCH_BOUNDS batches."""
-    batches = []
-    for lo, hi in NOVELTY_BATCH_BOUNDS:
-        b = docs
-        if lo is not None:
-            b = b.filter(F.col("doc_id") >= lo)
-        if hi is not None:
-            b = b.filter(F.col("doc_id") < hi)
-        batches.append(b)
-    return batches
-
-
-def q_minhash_novelty(spark, sf_dir):
-    """Sequential-ingest novelty filter — the rolling-dedup composition
-    a 100 TB crawl pipeline actually runs (graft analog of the
-    reference's incremental master loop, issuer_processor_v.py:244-258):
-    documents arrive in id order in batches; each batch is compared
-    against everything seen so far (the persisted LSH index + delta)
-    AND against itself, docs with an earlier near-dup are dropped, and
-    the whole batch is appended to the index. A doc is NOVEL iff it has
-    no LSH near-dup (64/16/5, est_jaccard >= 0.5) with ANY smaller id —
-    the same greedy smaller-id-wins rule as semantic_dedup, which is
-    exactly what the batched machinery computes when batches are
-    id-ordered: within-batch pairs drop the larger id, cross-batch
-    pairs drop the probe only when its id exceeds the corpus id (under
-    id-ordered arrival that IS "arrived later", and the guard makes the
-    rule order-independent and replay-safe — dedup.novelty_ingest_batch
-    is the single shared implementation the streaming twin also runs).
-    The oracle is the FULL one-shot recompute's survivor set, so a
-    probe that missed the delta, an append banded under the wrong
-    geometry, or a batch that skipped its own internal pairs all break
-    the hash.
-
-    Scale shape: each batch is banded EXACTLY ONCE (materialized to a
-    scratch parquet and reused by the self-join, the index probe, and
-    the append) + the bucketed index join (exchange-free on the corpus
-    side) + the small delta join; the seen-corpus is never re-banded —
-    the LSM index amortizes it."""
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    docs = _docs_with_near_dups(spark, sf_dir)
-    t = MINHASH_NOVELTY_TABLE
-    _drop_table_and_location(spark, t)
-    _drop_table_and_location(spark, f"{t}__delta")
-    dropped = []
-    for b in _novelty_batches(docs):
-        if b.isEmpty():
-            continue  # same skip the streaming twin's foreachBatch takes
-        dropped.append(
-            DD.novelty_ingest_batch(
-                spark, b, t, "doc_id", "text", threshold=0.5, n_buckets=8
-            )
-        )
-    if not dropped:
-        return docs.select("doc_id", F.length("text").alias("text_len"))
-    all_dropped = reduce(lambda a, c: a.unionByName(c), dropped).distinct()
-    return (
-        docs.join(all_dropped, "doc_id", "left_anti")
-        .select("doc_id", F.length("text").alias("text_len"))
-    )
-
-
-def _sql_minhash_novelty():
-    from cheque_ocr_project_spark.plans import dedup_sql
-
-    pair_sql = dedup_sql.sql_minhash_near_dup(threshold=0.5)
-    return f"""
-WITH pairs AS ({pair_sql}),
-dropped AS (SELECT DISTINCT id_b AS doc_id FROM pairs),{dedup_sql.DOCS_WITH_NEAR_DUPS_CTE.lstrip()}
-SELECT d.doc_id, length(d.text) AS text_len
-FROM docs d ANTI JOIN dropped ON d.doc_id = dropped.doc_id"""
-
-
-MINHASH_STREAM_NOVELTY_TABLE = "minhash_stream_novelty_idx"
-
-
-def q_streaming_novelty(spark, sf_dir):
-    """minhash_novelty's STREAMING twin — the rolling crawl-dedup loop
-    under Structured Streaming (streaming/stream.stream_novelty): the
-    id-ordered batches become one staged file each (mtimes forced
-    ascending so the file source's arrival order IS the id order),
-    foreachBatch probes the persisted LSH index + delta and itself,
-    novel docs land in the real parquet sink, and every batch appends
-    to the index. Oracle = the SAME one-shot greedy-survivor SQL the
-    batch row uses, proving streaming ingest with external index state
-    emits bit-identical novelty verdicts to the batch decomposition.
-    The sweep timing for this row is adapter-dominated (staging +
-    trigger/poll quantization) — see bench.py ADAPTER_TIMED."""
-    import os
-    import shutil
-
-    from cheque_ocr_project_spark.sources import scratch
-    from cheque_ocr_project_spark.streaming import stream as ST
-
-    # bounded scratch (ADVICE r07): sweep stale staging dirs from prior
-    # invocations and remove each part dir as soon as its one file is
-    # moved out.
-    scratch.sweep("novelty_stream_", "novelty_part")
-
-    docs = _docs_with_near_dups(spark, sf_dir).select("doc_id", "text")
-    stage = scratch.mkdtemp("novelty_stream_in_")
-    base = 1_600_000_000
-    for i, b in enumerate(_novelty_batches(docs)):
-        part = scratch.mkdtemp(f"novelty_part{i}_")
-        b.coalesce(1).write.mode("overwrite").parquet(part)
-        src = next(
-            f for f in os.listdir(part)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(stage, f"batch_{i}.parquet")
-        os.replace(os.path.join(part, src), dst)
-        os.utime(dst, (base + i, base + i))
-        shutil.rmtree(part, ignore_errors=True)
-
-    t = MINHASH_STREAM_NOVELTY_TABLE
-    _drop_table_and_location(spark, t)
-    _drop_table_and_location(spark, f"{t}__delta")
-    out_dir = scratch.mkdtemp("novelty_stream_out_")
-    ckpt = scratch.mkdtemp("novelty_stream_ckpt_")
-    q = ST.stream_novelty(spark, stage, out_dir, ckpt, t)
-    if not q.awaitTermination(240):
-        q.stop()
-        raise RuntimeError(
-            "streaming novelty did not terminate within 240s — refusing "
-            "to read a potentially partial sink"
-        )
-    return spark.read.parquet(out_dir).drop("batch_id")
-
-
-def q_winnow_fingerprint(spark, sf_dir):
-    """Winnowing fingerprints (rolling-hash k-grams → window minima): any
-    shared substring of length >= k + w - 1 yields a shared fingerprint —
-    the substring-robust document fingerprint the md5 `fingerprint` query
-    cannot provide."""
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    return DD.winnowing_fingerprints(
-        _docs(spark, sf_dir), "doc_id", "text", k=8, window=8
-    )
-
-
-def _sql_winnow_fingerprint():
-    from cheque_ocr_project_spark.plans import dedup_sql
-
-    return dedup_sql.sql_winnow_fingerprint(k=8, window=8)
-
-
-# Exact-substring pair detection knobs: fingerprints carried by more
-# than MAXDF docs produce quadratic pairs but no substring signal (the
-# cap runs BEFORE the self-join, dedup.overlap_pairs); TAU keeps pairs
-# where shared fingerprints cover >= half the smaller doc's (capped)
-# fingerprint set.
-WINNOW_PAIR_MAXDF = 20
-WINNOW_PAIR_TAU_PPM = 500000
-
-
-def q_winnow_substring_pairs(spark, sf_dir):
-    """Exact-substring near-duplicate pairs (the Lee et al. 2022
-    'Deduplicating Training Data' family): two docs pair when their
-    winnowing fingerprints — which any shared substring of length
-    >= k + window - 1 is guaranteed to hit — overlap on >= TAU ppm of
-    the smaller doc's fingerprint set. Catches long VERBATIM spans
-    (quotes, syndication, boilerplate-wrapped copies) that set-based
-    MinHash under-scores when the surrounding text differs.
-
-    Scale shape: dedup.overlap_pairs over the (doc, fingerprint)
-    relation — fingerprint doc-frequency capped at MAXDF BEFORE the
-    self-join (<= MAXDF^2 pairs per fingerprint)."""
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    docs = _docs_with_near_dups(spark, sf_dir)
-    fps = DD.winnowing_fingerprints(docs, "doc_id", "text", k=8, window=8)
-    return DD.overlap_pairs(
-        fps, "fp", WINNOW_PAIR_MAXDF, WINNOW_PAIR_TAU_PPM
-    ).select("id_a", "id_b", F.col("shared").alias("shared_fps"),
-             F.col("ppm").alias("overlap_ppm"))
-
-
-def _sql_winnow_substring_pairs():
-    from cheque_ocr_project_spark.plans import dedup_sql
-
-    return dedup_sql.sql_winnow_substring_pairs(
-        k=8, window=8, maxdf=WINNOW_PAIR_MAXDF,
-        tau_ppm=WINNOW_PAIR_TAU_PPM,
-    )
-
-
-def q_near_dup_clusters(spark, sf_dir):
-    """Duplicate-cluster assignment: connected components over the SimHash
-    near-dup pair graph (keep one document per cluster). Iterative
-    min-label propagation on the Spark side; recursive-CTE transitive
-    closure as the DuckDB oracle."""
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    docs = _docs_with_near_dups(spark, sf_dir)
-    pairs = DD.simhash_pairs(docs, "doc_id", "text", max_hamming=3)
-    comp = DD.connected_components(pairs)
-    return comp.groupBy("comp").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.min("node").alias("keeper_id"),
-    ).select(F.col("comp").alias("component"), "n_members", "keeper_id")
-
-
-def _sql_near_dup_clusters():
-    from cheque_ocr_project_spark.plans import dedup_sql
-
-    return dedup_sql.sql_near_dup_clusters(max_hamming=3)
-
-
-def q_dedup_survivors(spark, sf_dir):
-    """Canonical-document selection — the step a corpus pipeline actually
-    runs AFTER near-dup clustering: every document lands in a cluster
-    (its SimHash component, or itself as a singleton) and each cluster
-    keeps exactly one survivor, chosen by longest text with
-    smallest-doc_id tie-break. The argmax is the deterministic two-agg
-    form (max length per cluster, then min id among the max-length
-    members), NOT max_by over a struct — max_by's tie behavior is
-    engine/partition-order dependent, and a window over the cluster key
-    would put a whale cluster (every doc identical) in one task. All
-    stages are keyed aggregations with map-side combine; the join-back
-    on a skewed cluster key rides AQE skew-join like tfidf's term join."""
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    docs = _docs_with_near_dups(spark, sf_dir)
-    return dedup_survivors_over(docs)
-
-
-def dedup_survivors_over(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """The composition behind q_dedup_survivors, over any (doc_id, text)
-    relation — factored out so the tie-break and plan shape are testable
-    on planted inputs."""
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    pairs = DD.simhash_pairs(docs, "doc_id", "text", max_hamming=max_hamming)
-    comp = DD.connected_components(pairs)
-    d = docs.select(
-        "doc_id", F.coalesce(F.length("text"), F.lit(0)).alias("len")
-    )
-    j = d.join(comp, d.doc_id == comp.node, "left").select(
-        "doc_id", "len", F.coalesce("comp", "doc_id").alias("cluster")
-    )
-    agg = j.groupBy("cluster").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.max("len").alias("survivor_len"),
-    )
-    return (
-        j.join(agg, "cluster")
-        .filter(F.col("len") == F.col("survivor_len"))
-        .groupBy("cluster", "n_members", "survivor_len")
-        .agg(F.min("doc_id").alias("survivor_id"))
-        .select(
-            "cluster", "n_members", "survivor_id",
-            F.col("survivor_len").cast("long").alias("survivor_len"),
-        )
-    )
-
-
-def _sql_dedup_survivors():
-    from cheque_ocr_project_spark.plans import dedup_sql
-
-    return dedup_sql.sql_dedup_survivors(max_hamming=3)
-
-
-def q_ngram_jaccard_pairs(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    # length >= n on both sides: keeps the short-string edge cases (Spark
-    # emits one truncated gram for len < n, DuckDB emits none) out of the
-    # compared row set — semantics align exactly on the kept rows.
-    d = (
-        _docs(spark, sf_dir)
-        .filter(F.col("doc_id") < 25)
-        .select("doc_id", F.substring("text", 1, 100).alias("t"))
-        .filter(F.length("t") >= 3)
-    )
-    a = d.select(F.col("doc_id").alias("id_a"), F.col("t").alias("t_a"))
-    b = d.select(F.col("doc_id").alias("id_b"), F.col("t").alias("t_b"))
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    return pairs.select(
-        "id_a", "id_b",
-        DD.ngram_jaccard(F.col("t_a"), F.col("t_b"), 3).alias("jaccard"),
-    )
-
-
-def sql_ngram_jaccard_pairs():
-    grams = (
-        "list_distinct(list_transform(range(1, greatest(length({t}) - 1, 1)),"
-        " i -> {t}[i:i+2]))"
-    )
-    ga, gb = grams.format(t="t_a"), grams.format(t="t_b")
-    return f"""
-WITH d AS (SELECT doc_id, text[1:100] AS t FROM documents
-           WHERE doc_id < 25 AND length(text[1:100]) >= 3)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       round(len(list_intersect({ga.replace('t_a','a.t')}, {gb.replace('t_b','b.t')})) * 1.0
-             / len(list_distinct(list_concat({ga.replace('t_a','a.t')}, {gb.replace('t_b','b.t')}))), 6) AS jaccard
-FROM d a JOIN d b ON a.doc_id < b.doc_id"""
-
-
-CONT_GRAM_W = 3        # word-shingle width
-CONT_MAXDF = 20        # drop shingles in more docs (no signal, all cost)
-CONT_MIN_PPM = 750_000  # emit pairs covering >= 75% of the smaller set
-
-
-def q_containment_pairs(spark, sf_dir):
-    """Asymmetric near-duplicate detection: pairs where the shared
-    word-shingle set covers >= CONT_MIN_PPM of the SMALLER document's
-    shingles — the quote-expansion / syndication duplicates symmetric
-    Jaccard under-scores (a short article embedded in a longer page has
-    low Jaccard but containment ~1). Runs over the same planted
-    clone corpus as the MinHash family, so positives are guaranteed
-    (106 pairs >= threshold at sf0.01: the 72 clones plus natural
-    high-overlap pairs).
-
-    Scale shape: shingles are DISTINCT per doc, then dedup.overlap_pairs
-    caps them at CONT_MAXDF docs before the self-join — a shingle in
-    more documents than that carries no containment signal but
-    quadratic join cost (max MAXDF^2 pairs per shingle)."""
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    toks = par(_docs_with_near_dups(spark, sf_dir)).select(
-        "doc_id",
-        F.regexp_extract_all(
-            F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
-        ).alias("t"),
-    )
-    w = CONT_GRAM_W
-    sh = (
-        toks.filter(F.size("t") >= w)
-        .select(
-            F.col("doc_id").alias("id"),
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, size(t) - {w - 1}), "
-                    f"i -> array_join(slice(t, i, {w}), ' '))"
-                )
-            ).alias("gram"),
-        )
-        .distinct()
-    )
-    return DD.overlap_pairs(sh, "gram", CONT_MAXDF, CONT_MIN_PPM).select(
-        "id_a", "id_b", F.col("shared").alias("shared_grams"),
-        F.col("ppm").alias("cont_ppm"),
-    )
-
-
-def _sql_containment_pairs():
-    from cheque_ocr_project_spark.plans.dedup_sql import (
-        DOCS_WITH_NEAR_DUPS_CTE, sql_overlap_tail,
-    )
-
-    w = CONT_GRAM_W
-    return f"""
-WITH {DOCS_WITH_NEAR_DUPS_CTE},
-toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS t FROM docs
-), sh AS (
-  SELECT DISTINCT doc_id AS id, gram FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(t) - {w - 2}),
-                  i -> array_to_string(t[i:i+{w - 1}], ' '))) AS gram
-    FROM toks WHERE len(t) >= {w})
-),
-{sql_overlap_tail("sh", "gram", CONT_MAXDF, CONT_MIN_PPM,
-                  "shared_grams", "cont_ppm")}"""
-
-
-def q_embedding_near_dup(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import similarity as SIM
-
-    emb = _embeddings(spark, sf_dir).filter(F.col("vec_id") < 200)
-    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"))
-    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b"))
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    cos = F.round(SIM._cosine(F.col("vec_a"), F.col("vec_b")), 4)
-    return (
-        pairs.withColumn("cosine", cos)
-        .filter(F.col("cosine") >= 0.3)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def sql_embedding_near_dup():
-    return """
-WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_dot_product(a.embedding, b.embedding)
-             / (sqrt(list_dot_product(a.embedding, a.embedding))
-                * sqrt(list_dot_product(b.embedding, b.embedding))), 4) AS cosine
-FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE round(list_dot_product(a.embedding, b.embedding)
-      / (sqrt(list_dot_product(a.embedding, a.embedding))
-         * sqrt(list_dot_product(b.embedding, b.embedding))), 4) >= 0.3"""
-
-
-def q_ann_lsh_topk(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import similarity as SIM
-
-    emb = _embeddings(spark, sf_dir)
-    queries_df = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return SIM.lsh_topk(spark, emb, queries_df, dim=64, k=5, n_planes=4, n_bands=24)
-
-
-def q_embedding_lsh_near_dup(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import similarity as SIM
-
-    emb = _embeddings(spark, sf_dir)
-    return SIM.cosine_near_dup_pairs(spark, emb, dim=64, threshold=0.3)
-
-
-# Production bucket caps for the embedding-LSH joins (VERDICT r04 #2 —
-# the last pair-generating joins without a hot-bucket guard). Both BIND at
-# sf0.01: near-dup drops 59 -> 39 pairs at cap 8 (max observed bucket 17);
-# the top-k cap 90 drops the four hottest 4-bit bands (sizes 121-133) and
-# changes the returned neighbor set — the driver hash proves the capped
-# semantics, not just that the code path ran.
-EMB_LSH_CAP = 8
-ANN_LSH_CAP = 90
-
-
-def q_embedding_lsh_near_dup_capped(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import similarity as SIM
-
-    emb = _embeddings(spark, sf_dir)
-    return SIM.cosine_near_dup_pairs(
-        spark, emb, dim=64, threshold=0.3, max_bucket=EMB_LSH_CAP
-    )
-
-
-def _sql_embedding_lsh_near_dup_capped():
-    from cheque_ocr_project_spark.plans import similarity_sql
-
-    return similarity_sql.sql_embedding_lsh_near_dup(
-        dim=64, threshold=0.3, max_bucket=EMB_LSH_CAP
-    )
-
-
-def q_ann_lsh_topk_capped(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import similarity as SIM
-
-    emb = _embeddings(spark, sf_dir)
-    queries_df = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return SIM.lsh_topk(
-        spark, emb, queries_df, dim=64, k=5, n_planes=4, n_bands=24,
-        max_bucket=ANN_LSH_CAP,
-    )
-
-
-def _sql_ann_lsh_topk_capped():
-    from cheque_ocr_project_spark.plans import similarity_sql
-
-    return similarity_sql.sql_ann_lsh_topk(
-        dim=64, k=5, n_planes=4, n_bands=24, max_bucket=ANN_LSH_CAP
-    )
-
-
-def _sql_ann_lsh_topk():
-    from cheque_ocr_project_spark.plans import similarity_sql
-
-    return similarity_sql.sql_ann_lsh_topk(dim=64, k=5, n_planes=4, n_bands=24)
-
-
-def q_ann_ivf_topk(spark, sf_dir):
-    """IVF-flat ANN (the brief's 'IVF variant as the scale path'):
-    hash-sampled pivots → cell assignment → nprobe probing → exact
-    re-rank. Fully native expressions; the DuckDB oracle recomputes the
-    identical index."""
-    from cheque_ocr_project_spark.operators import similarity as SIM
-
-    emb = _embeddings(spark, sf_dir)
-    queries_df = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return SIM.ivf_topk(spark, emb, queries_df, k=5, n_pivots=16, nprobe=4)
-
-
-def _sql_ann_ivf_topk():
-    from cheque_ocr_project_spark.plans import similarity_sql
-
-    return similarity_sql.sql_ann_ivf_topk(k=5, n_pivots=16, nprobe=4)
-
-
-def _sql_embedding_lsh_near_dup():
-    from cheque_ocr_project_spark.plans import similarity_sql
-
-    return similarity_sql.sql_embedding_lsh_near_dup(
-        dim=64, threshold=0.3, n_planes=12, n_bands=6
-    )
-
-
-def q_kmeans_refine(spark, sf_dir):
-    """One deterministic Lloyd step over the IVF seed pivots — see
-    operators/similarity.kmeans_refine."""
-    from cheque_ocr_project_spark.operators import similarity as SIM
-
-    return SIM.kmeans_refine(_embeddings(spark, sf_dir), n_pivots=8)
-
-
-def _sql_kmeans_refine():
-    from cheque_ocr_project_spark.plans import similarity_sql
-
-    return similarity_sql.sql_kmeans_refine(n_pivots=8)
-
-
-SEMDEDUP_TAU = 0.3
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup-style semantic deduplication over the embedding table:
-    cluster by the shared seed_assignment scaffold, drop any vector with
-    a smaller-id cell-mate above cosine SEMDEDUP_TAU, return the
-    survivors with their cluster — see operators/similarity
-    .semantic_dedup for the scale argument (the quadratic compare is
-    cell-bounded by the CHOICE of k, the paper's own knob)."""
-    from cheque_ocr_project_spark.operators import similarity as SIM
-
-    return SIM.semantic_dedup(
-        _embeddings(spark, sf_dir), n_pivots=8, threshold=SEMDEDUP_TAU
-    )
-
-
-def _sql_semantic_dedup():
-    from cheque_ocr_project_spark.plans import similarity_sql
-
-    return similarity_sql.sql_semantic_dedup(
-        n_pivots=8, threshold=SEMDEDUP_TAU
-    )
-
-
-# Shared int8 quantize/reconstruct spec — embedding_quantize (the QA
-# audit) and ann_quantized_topk (search over the codes) must stay on the
-# SAME codebook formula, so both build from these single definitions.
-# All integer divisions have non-negative operands (q and pm-mn are >= 0
-# by construction), the one precondition under which Spark's truncating
-# ``div`` and DuckDB's flooring ``//`` agree.
-# Spark side: reconstructed micros from (pm, mn, mx).
-_QUANT_RECON_EXPR = (
-    "mn + ((((pm - mn) * 255) div greatest(mx - mn, 1)) * (mx - mn)) div 255"
-)
-# DuckDB side: raw/dims/r CTE chain + the same reconstruction over d/r.
-# CAST(val AS DOUBLE) before the multiply: a bare `val * 1000000.0`
-# pairs FLOAT with DECIMAL in DuckDB and rounds at float32 precision,
-# drifting the floor by 1 at ulp boundaries (same trap the QUANT macro
-# in similarity_sql.py documents); Spark promotes float*double to
-# double, so the explicit cast makes both engines identical.
-_QUANT_SQL_CTES = """raw AS (
-  SELECT vec_id,
-         unnest(range(0, len(embedding))) AS dim,
-         unnest(embedding) AS val
-  FROM embeddings
-), dims AS (
-  SELECT vec_id, dim,
-         CAST(floor(CAST(val AS DOUBLE) * 1000000.0) AS BIGINT) AS pm
-  FROM raw
-), r AS (
-  SELECT dim, min(pm) AS mn, max(pm) AS mx FROM dims GROUP BY dim
-)"""
-_QUANT_RECON_SQL = (
-    "r.mn + ((((d.pm - r.mn) * 255) // greatest(r.mx - r.mn, 1))"
-    " * (r.mx - r.mn)) // 255"
-)
-
-
-def _quantized_dims(spark, sf_dir) -> DataFrame:
-    """(vec_id, dim, pm, mn, mx): per-(vector, dimension) integer micros
-    plus the broadcast per-dim corpus range — the shared front half of
-    the quantization queries. One explode; the min/max agg is map-side
-    combined down to n_dims rows and joins back BROADCAST."""
-    dims = _embeddings(spark, sf_dir).select(
-        "vec_id", F.posexplode("embedding").alias("dim", "val")
-    ).select(
-        "vec_id", "dim",
-        F.floor(F.col("val") * F.lit(1000000.0)).cast("long").alias("pm"),
-    )
-    ranges = dims.groupBy("dim").agg(
-        F.min("pm").alias("mn"), F.max("pm").alias("mx")
-    )
-    return dims.join(F.broadcast(ranges), "dim")
-
-
-def q_embedding_quantize(spark, sf_dir):
-    """Int8 per-dimension embedding quantization QA — the compression
-    pass an ANN index build runs (IVF/PQ stores code books, serving
-    needs the reconstruction-error audit this query produces): scale
-    each dimension to 0..255 against its corpus min/max and report the
-    per-vector L1 and max reconstruction error.
-
-    Everything downstream of the initial float->micros floor is exact
-    int64 (quantize, reconstruct, error), so the oracle comparison is
-    bit-equal — a float codebook would hit the cross-engine rounding
-    dialects tfidf_topk documents. Codebook formula shared with
-    ann_quantized_topk via _QUANT_RECON_EXPR / _quantized_dims.
-
-    Scale shape: see _quantized_dims; the final per-vector error agg
-    re-combines map-side. Two shuffles total, both on high-cardinality
-    keys, no windows, no skew exposure (dim is uniform by
-    construction)."""
-    err = _quantized_dims(spark, sf_dir).select(
-        "vec_id",
-        F.expr(f"abs(pm - ({_QUANT_RECON_EXPR}))").alias("e"),
-    )
-    return err.groupBy("vec_id").agg(
-        F.sum("e").cast("long").alias("q_err_l1_micros"),
-        F.max("e").cast("long").alias("q_err_max_micros"),
-    )
-
-
-def sql_embedding_quantize():
-    return f"""
-WITH {_QUANT_SQL_CTES}, e AS (
-  SELECT d.vec_id, abs(d.pm - ({_QUANT_RECON_SQL})) AS e
-  FROM dims d JOIN r USING (dim)
-)
-SELECT vec_id,
-       CAST(sum(e) AS BIGINT) AS q_err_l1_micros,
-       CAST(max(e) AS BIGINT) AS q_err_max_micros
-FROM e GROUP BY vec_id"""
-
-
-def q_ann_quantized_topk(spark, sf_dir):
-    """Brute-force top-k over the int8 codes embedding_quantize
-    produces — the memory-compressed serving path (1 byte/dim instead
-    of 4; the search-over-codes half of a PQ index). Ranking is exact
-    integer squared-L2 over the RECONSTRUCTED micros, so quantization
-    error perturbs neighbor ranks exactly as it would in production
-    and the oracle comparison is bit-exact (no float summation
-    anywhere; DuckDB's sum->HUGEINT widening only ever feeds the
-    rank comparison).
-
-    Scale shape: per-dim ranges broadcast (n_dims rows); the
-    reconstructed query side (|Q| x n_dims rows) broadcasts into the
-    corpus-dims join; the distance agg is map-side combined per
-    (query, vec). The final window partitions by query_id over
-    corpus-sized candidate sets — the documented brute-force baseline
-    shape (same caveat as ann_topk); ann_lsh_topk / ann_ivf_topk are
-    the 100 TB paths, and their bucketing composes with these codes
-    unchanged."""
-    from pyspark.sql import Window
-
-    recon = _quantized_dims(spark, sf_dir).select(
-        "vec_id", "dim", F.expr(_QUANT_RECON_EXPR).alias("rv")
-    )
-    qd = recon.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "dim", F.col("rv").alias("qr")
-    )
-    scored = (
-        recon.join(F.broadcast(qd), "dim")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", "vec_id",
-            F.expr("(rv - qr) * (rv - qr)").alias("sq"),
-        )
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("sq").alias("dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "vec_id", "rn")
-    )
-
-
-def sql_ann_quantized_topk():
-    return f"""
-WITH {_QUANT_SQL_CTES}, recon AS (
-  SELECT d.vec_id, d.dim, {_QUANT_RECON_SQL} AS rv
-  FROM dims d JOIN r USING (dim)
-), qd AS (
-  SELECT vec_id AS query_id, dim, rv AS qr FROM recon WHERE vec_id < 5
-), scored AS (
-  SELECT q.query_id, c.vec_id, sum((c.rv - q.qr) * (c.rv - q.qr)) AS dist
-  FROM recon c JOIN qd q USING (dim)
-  WHERE c.vec_id <> q.query_id
-  GROUP BY q.query_id, c.vec_id
-)
-SELECT query_id, vec_id, rn FROM (
-  SELECT query_id, vec_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY dist ASC, vec_id ASC) AS rn
-  FROM scored
-) WHERE rn <= 5"""
-
-
-# IVF-over-quantized-codes composition (VERDICT r06 #3): same pivot count /
-# probe width as ann_ivf_topk so the two serving shapes are comparable.
-ANN_IVFQ_PIVOTS = 16
-ANN_IVFQ_NPROBE = 4
-ANN_IVFQ_K = 5
-
-
-def q_ann_ivf_quantized_topk(spark, sf_dir):
-    """IVF bucketing OVER the int8 codes — the actual PQ+IVF serving
-    shape at 100 TB, proving by a driver-hashed query (not prose) that
-    the quantized representation composes with the cell index: pivots
-    come from the SAME hash-sampled formula as ann_ivf_topk
-    (similarity.ivf_pivots / similarity_sql.pivots_cte), every distance
-    (assignment, probing, re-rank) is exact integer squared-L2 over the
-    RECONSTRUCTED micros of the shared _QUANT_RECON_EXPR codebook — so
-    the index and the search can never drift from embedding_quantize's
-    audited codes, and an engine serving 1 byte/dim never touches a
-    float. Reference analog: the memoized dictionary-match fast path
-    (IssuerBatchProcessorV3.py:288-316) — a cheap representation gates
-    the expensive compare.
-
-    Scale shape vs ann_quantized_topk (the declared brute-force
-    baseline): the corpus-wide work is the pivot-assignment agg
-    (n*k_pivots rows, map-side combined) + a min(struct) argmin with NO
-    window; the final top-k window partitions by query over
-    CELL-RESTRICTED candidates (nprobe cells), not the corpus. The only
-    corpus-sized shuffles are the assignment agg and the candidate
-    equi-join — the classic IVF fan-in."""
-    from pyspark.sql import Window
-
-    from cheque_ocr_project_spark.operators import similarity as SIM
-
-    recon = _quantized_dims(spark, sf_dir).select(
-        "vec_id", "dim", F.expr(_QUANT_RECON_EXPR).alias("rv")
-    )
-    pivot_ids = SIM.ivf_pivots(
-        _embeddings(spark, sf_dir), ANN_IVFQ_PIVOTS
-    ).select("pivot_id")
-    pdims = recon.join(
-        F.broadcast(pivot_ids.withColumnRenamed("pivot_id", "vec_id")),
-        "vec_id",
-    ).select(
-        F.col("vec_id").alias("pivot_id"), "dim", F.col("rv").alias("pv")
-    )
-    adist = (
-        recon.join(F.broadcast(pdims), "dim")
-        .select("vec_id", "pivot_id",
-                F.expr("(rv - pv) * (rv - pv)").alias("sq"))
-        .groupBy("vec_id", "pivot_id")
-        .agg(F.sum("sq").alias("dist"))
-    )
-    assign = (
-        adist.groupBy("vec_id")
-        .agg(F.min(F.struct("dist", "pivot_id")).alias("m"))
-        .select("vec_id", F.col("m.pivot_id").alias("pivot_id"))
-    )
-    qd = recon.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "dim", F.col("rv").alias("qr")
-    )
-    qdist = (
-        qd.join(F.broadcast(pdims), "dim")
-        .select("query_id", "pivot_id",
-                F.expr("(qr - pv) * (qr - pv)").alias("sq"))
-        .groupBy("query_id", "pivot_id")
-        .agg(F.sum("sq").alias("dist"))
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("pivot_id").asc()
-    )
-    probes = (
-        qdist.withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= ANN_IVFQ_NPROBE)
-        .select("query_id", "pivot_id")
-    )
-    cand = (
-        assign.join(probes, "pivot_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-        .dropDuplicates(["query_id", "vec_id"])
-    )
-    scored = (
-        cand.join(recon, "vec_id")
-        .join(F.broadcast(qd), ["query_id", "dim"])
-        .select("query_id", "vec_id",
-                F.expr("(rv - qr) * (rv - qr)").alias("sq"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("sq").alias("dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= ANN_IVFQ_K)
-        .select("query_id", "vec_id",
-                F.col("dist").cast("long").alias("dist_sq_micros"), "rn")
-    )
-
-
-def sql_ann_ivf_quantized_topk():
-    from cheque_ocr_project_spark.plans import similarity_sql
-
-    return f"""
-WITH {_QUANT_SQL_CTES}, recon AS (
-  SELECT d.vec_id, d.dim, {_QUANT_RECON_SQL} AS rv
-  FROM dims d JOIN r USING (dim)
-), {similarity_sql.pivots_cte(ANN_IVFQ_PIVOTS)}, pdims AS (
-  SELECT p.pivot_id, c.dim, c.rv AS pv
-  FROM pivots p JOIN recon c ON c.vec_id = p.pivot_id
-), adist AS (
-  SELECT c.vec_id, p.pivot_id,
-         sum((c.rv - p.pv) * (c.rv - p.pv)) AS dist
-  FROM recon c JOIN pdims p USING (dim) GROUP BY c.vec_id, p.pivot_id
-), assign AS (
-  SELECT vec_id, pivot_id FROM (
-    SELECT vec_id, pivot_id,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY dist ASC, pivot_id ASC) AS pr
-    FROM adist
-  ) WHERE pr = 1
-), qd AS (
-  SELECT vec_id AS query_id, dim, rv AS qr FROM recon WHERE vec_id < 5
-), qdist AS (
-  SELECT q.query_id, p.pivot_id,
-         sum((q.qr - p.pv) * (q.qr - p.pv)) AS dist
-  FROM qd q JOIN pdims p USING (dim) GROUP BY q.query_id, p.pivot_id
-), probes AS (
-  SELECT query_id, pivot_id FROM (
-    SELECT query_id, pivot_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY dist ASC, pivot_id ASC) AS pr
-    FROM qdist
-  ) WHERE pr <= {ANN_IVFQ_NPROBE}
-), cand AS (
-  SELECT DISTINCT pr.query_id, a.vec_id
-  FROM assign a JOIN probes pr USING (pivot_id)
-  WHERE a.vec_id <> pr.query_id
-), scored AS (
-  SELECT c.query_id, c.vec_id,
-         sum((r2.rv - q.qr) * (r2.rv - q.qr)) AS dist
-  FROM cand c
-  JOIN recon r2 ON r2.vec_id = c.vec_id
-  JOIN qd q ON q.query_id = c.query_id AND q.dim = r2.dim
-  GROUP BY c.query_id, c.vec_id
-)
-SELECT query_id, vec_id, CAST(dist AS BIGINT) AS dist_sq_micros, rn FROM (
-  SELECT query_id, vec_id, dist,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY dist ASC, vec_id ASC) AS rn
-  FROM scored
-) WHERE rn <= {ANN_IVFQ_K}"""
-
-
-def q_ann_lsh_topk_multiprobe(spark, sf_dir):
-    """ann_lsh_topk with Hamming-1 multiprobe ON — the production recall
-    knob on the 100 TB path (VERDICT r06 #6: a recall-critical branch
-    should not live on local tests alone). Same banding geometry as
-    ann_lsh_topk; the query side additionally probes every single-bit
-    flip of each band code (constant x(n_planes+1) explosion of the
-    SMALL side only — the corpus never pays)."""
-    from cheque_ocr_project_spark.operators import similarity as SIM
-
-    emb = _embeddings(spark, sf_dir)
-    queries_df = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return SIM.lsh_topk(
-        spark, emb, queries_df, dim=64, k=5, n_planes=4, n_bands=24,
-        multiprobe=True,
-    )
-
-
-def _sql_ann_lsh_topk_multiprobe():
-    from cheque_ocr_project_spark.plans import similarity_sql
-
-    return similarity_sql.sql_ann_lsh_topk(
-        dim=64, k=5, n_planes=4, n_bands=24, multiprobe=True
-    )
-
-
-# ---------------------------------------------------------------------------
-# Multimodal plumbing (stubbed decode; rows-only checks)
-# ---------------------------------------------------------------------------
-
-def q_media_image_features(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import multimodal as MM
-
-    media = MM.media_from_documents(_docs(spark, sf_dir))
-    return MM.image_features(media)
-
-
-def q_media_audio_features(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import multimodal as MM
-
-    media = MM.media_from_documents(_docs(spark, sf_dir))
-    return MM.audio_features(media)
-
-
-def q_media_frame_sample(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import multimodal as MM
-
-    media = MM.media_from_documents(_docs(spark, sf_dir))
-    return MM.sample_frames(media, fps=1.0)
-
-
-def q_media_resize(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import multimodal as MM
-
-    media = MM.media_from_documents(_docs(spark, sf_dir))
-    out = MM.resize_images(media, scale_percent=50)
-    return out.select(
-        "media_id", "width", "height",
-        F.octet_length("payload").alias("payload_bytes"),
-    )
-
-
-def _sql_media_image_features():
-    from cheque_ocr_project_spark.plans import media_sql
-
-    return media_sql.sql_media_image_features()
-
-
-def _sql_media_audio_features():
-    from cheque_ocr_project_spark.plans import media_sql
-
-    return media_sql.sql_media_audio_features()
-
-
-def _sql_media_frame_sample():
-    from cheque_ocr_project_spark.plans import media_sql
-
-    return media_sql.sql_media_frame_sample(fps=1.0)
-
-
-def sql_media_resize():
-    # mirrors media_from_documents + resize_images for image-kind docs.
-    # floor() matches Spark's truncating int cast (DuckDB CAST rounds).
-    return """
-SELECT doc_id AS media_id,
-  CAST(floor((((octet_length(encode(text)) % 640) + 32) * 50) / 100.0) AS INT) AS width,
-  CAST(floor((((octet_length(encode(text)) * 7 % 480) + 32) * 50) / 100.0) AS INT) AS height,
-  greatest(CAST(floor((octet_length(encode(text)) * 50) / 100.0) AS INT), 1) AS payload_bytes
-FROM documents WHERE doc_id % 3 = 0"""
-
-
-# ---------------------------------------------------------------------------
-# flagship: full extraction pipeline over documents-as-transcripts
-# (difflib fuzzy join → rows-only check, no SQL oracle)
-# ---------------------------------------------------------------------------
-
-def documents_as_transcripts(spark, sf_dir) -> DataFrame:
-    """Deterministic mapping of the documents table into the transcripts
-    shape (conv_id, turn_idx, role, text, tool, ts)."""
-    d = _docs(spark, sf_dir)
-    role = (
-        F.when(F.col("doc_id") % 3 == 0, "user")
-        .when(F.col("doc_id") % 3 == 1, "assistant")
-        .otherwise("tool")
-    )
-    tool = F.when(
-        F.col("doc_id") % 3 == 2,
-        F.when(F.col("doc_id") % 2 == 0, "web_fetch").otherwise("pdf_extract"),
-    )
-    return d.select(
-        # turn_idx is int32 by the transcripts contract, so a 64-bit
-        # doc_id cannot be cast directly (CAST_OVERFLOW above 2^31-1) nor
-        # reduced mod 2^31 alone (colliding (conv_id, turn_idx) keys fan
-        # out in the per-key SQL-twin joins). The injective split — high
-        # bits into conv_id, low 31 bits into turn_idx — maps EVERY int64
-        # id to a unique key. SQL twins in flagship_sql.py / models_sql.py
-        # mirror the same expressions.
-        # F.concat (not concat_ws) so a NULL source yields NULL conv_id,
-        # matching the SQL twins' null-propagating || operator.
-        # Injectivity assumption: no ``source`` value ends in '-<digits>'
-        # (else 'a-1' high 0 and 'a' high 10 would both render 'a-1-0');
-        # the testdata sources ('src0'..'srcN') satisfy it, and both
-        # engines compute the identical string so oracle parity holds
-        # regardless — only the per-(conv_id, turn_idx) uniqueness argument
-        # relies on it.
-        F.concat(
-            F.col("source"), F.lit("-"),
-            F.expr("CAST(doc_id div 2147483648 AS STRING)"),
-        ).alias("conv_id"),
-        F.pmod(F.col("doc_id"), F.lit(1 << 31)).cast("int").alias("turn_idx"),
-        role.alias("role"),
-        F.col("text"),
-        tool.alias("tool"),
-        F.to_timestamp(F.lit("2026-01-01 00:00:00")).alias("ts"),
-    )
-
-
-def default_drawer_dict() -> list[str]:
-    from cheque_ocr_project_spark.oracle import fuzzy
-    from cheque_ocr_project_spark.sources import synth
-
-    master = synth.generate_master(seed=7)
-    return fuzzy.build_drawer_dict(master.drawer_nm.tolist())
-
-
-def q_flagship_extract(spark, sf_dir):
-    from cheque_ocr_project_spark.plans import pipeline as P
-
-    transcripts = documents_as_transcripts(spark, sf_dir)
-    return P.extract_pipeline(spark, transcripts, default_drawer_dict()).drop(
-        "main_text"
-    )
-
-
-def q_flagship_nofuzzy(spark, sf_dir):
-    """The flagship pipeline with an empty drawer dictionary: every stage
-    except the difflib fuzzy join (which empty-dict reduces to the identity)
-    — and therefore fully SQL-provable. The fuzzy flagship keeps its
-    rows-only driver check; its correctness evidence is the pytest equality
-    suite (arrow == pure-Python oracle)."""
-    from cheque_ocr_project_spark.plans import pipeline as P
-
-    transcripts = documents_as_transcripts(spark, sf_dir)
-    return P.extract_pipeline(spark, transcripts, []).drop("main_text")
-
-
-def _sql_flagship_nofuzzy():
-    from cheque_ocr_project_spark.plans import flagship_sql
-
-    return flagship_sql.sql_flagship_nofuzzy()
-
-
-def q_streaming_extract_nofuzzy(spark, sf_dir):
-    """The incremental-ingest S-family path under the driver oracle:
-    stream_extract (streaming/stream.py — foreachBatch over the SAME
-    extract_turns_udf the batch flagship runs, parquet sink partitioned
-    by batch_id for at-least-once idempotency; graft analog of the
-    reference's incremental batch machinery, parallel_processor.py)
-    driven availableNow over staged transcripts, then the SINK read back
-    as the result. Empty drawer dictionary makes every stage exact-SQL
-    (the fuzzy join reduces to the identity), so the oracle is the same
-    _sql_flagship_nofuzzy the batch row uses — proving streaming ingest
-    lands bit-identical records to the batch pipeline, through the real
-    parquet sink rather than a memory adapter. foreachBatch availableNow
-    self-terminates (no state timers), so a plain awaitTermination is
-    sound here, unlike the stateful adapters."""
-    import tempfile
-
-    from cheque_ocr_project_spark.oracle import issuer as oracle_issuer
-    from cheque_ocr_project_spark.streaming import stream as ST
-
-    tr = documents_as_transcripts(spark, sf_dir)
-    stage = tempfile.mkdtemp(prefix="extract_stream_in_")
-    tr.coalesce(1).write.mode("overwrite").parquet(stage)
-    out_dir = tempfile.mkdtemp(prefix="extract_stream_out_")
-    ckpt = tempfile.mkdtemp(prefix="extract_stream_ckpt_")
-    q = ST.stream_extract(
-        spark, stage, out_dir, ckpt, drawer_dict=[],
-        threshold=oracle_issuer.DEFAULT_THRESHOLD_V1,
-    )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise RuntimeError(
-            "streaming extract did not terminate within 240s — refusing to "
-            "read a potentially partial sink (loud-incomplete discipline, "
-            "same as q_sessionize_streaming)"
-        )
-    return spark.read.parquet(out_dir).drop("batch_id", "main_text")
-
-
-def q_flagship_extract_v3(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import extract as X
-
-    transcripts = documents_as_transcripts(spark, sf_dir)
-    return X.extract_turns_v3_udf(spark, transcripts, default_drawer_dict())
-
-
-def q_flagship_v3_nofuzzy(spark, sf_dir):
-    """V3 pipeline with an empty drawer dictionary — the difflib stage is
-    the identity, so the whole path is SQL-provable (same pattern as
-    flagship_nofuzzy)."""
-    from cheque_ocr_project_spark.operators import extract as X
-
-    transcripts = documents_as_transcripts(spark, sf_dir)
-    return X.extract_turns_v3_udf(spark, transcripts, [])
-
-
-def _sql_flagship_v3_nofuzzy():
-    from cheque_ocr_project_spark.plans import flagship_sql
-
-    return flagship_sql.sql_flagship_v3_nofuzzy()
-
-
-# ---------------------------------------------------------------------------
-# Training-data pipeline staples: deterministic split + composed corpus
-# filter (quality gate ∧ language gate ∧ near-dup removal)
-# ---------------------------------------------------------------------------
-
-SPLIT_MIX = 2654435761
-SPLIT_MOD = (1 << 31) - 1
-
-
-def _split_bucket(id_col):
-    """Overflow-safe split bucket in [0, 100).
-
-    The id is reduced mod P BEFORE the multiply so the 64-bit product is
-    bounded by (P-1)*MIX < 2^63 for ANY int64 id — above doc_id ~3.47e9 the
-    raw product wraps in Spark while DuckDB raises, silently diverging the
-    twins (same guard as sampling.sample_bucket / similarity.ivf_pivots)."""
-    return (
-        F.pmod(F.pmod(id_col, F.lit(SPLIT_MOD)) * SPLIT_MIX, F.lit(SPLIT_MOD))
-        % 100
-    )
-
-
-def _split_bucket_sql(id_expr: str) -> str:
-    return f"((({id_expr}) % {SPLIT_MOD}) * {SPLIT_MIX}) % {SPLIT_MOD} % 100"
-
-
-def q_train_val_split(spark, sf_dir):
-    """Deterministic hash split (90/5/5): stable across runs, machines and
-    engines — the split of a document never changes when the corpus grows
-    (keyed on doc_id, not position). Exact integer arithmetic, so DuckDB
-    recomputes the assignment bit-for-bit."""
-    bucket = _split_bucket(F.col("doc_id"))
-    split = (
-        F.when(bucket < 90, "train").when(bucket < 95, "val").otherwise("test")
-    )
-    return _docs(spark, sf_dir).select(
-        "doc_id", split.alias("split"), bucket.cast("int").alias("bucket")
-    )
-
-
-def sql_train_val_split():
-    b = _split_bucket_sql("doc_id")
-    return f"""
-SELECT doc_id,
-       CASE WHEN {b} < 90 THEN 'train' WHEN {b} < 95 THEN 'val'
-            ELSE 'test' END AS split,
-       CAST({b} AS INT) AS bucket
-FROM documents"""
-
-
-def q_decontaminate(spark, sf_dir):
-    """Train/eval contamination check: a train-split document is flagged
-    when it shares winnowing fingerprints with ANY eval-split (val/test)
-    document — i.e. a common substring of length >= k + w - 1 = 35 chars
-    (the winnow guarantee), the standard n-gram leakage test before
-    pre-training. k/w are sized so incidental shared phrasing does not
-    flag everything (k=8 marks 100% of this corpus; k=20/w=16 isolates
-    genuine long overlaps).
-
-    Scale shape: fingerprints are per-doc local work; the only shuffle is
-    the fp equi-join, and the eval side (5-10% of the corpus, distinct fp
-    values only) is the natural broadcast/build side."""
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    d = _docs(spark, sf_dir)
-    bucket = _split_bucket(F.col("doc_id"))
-    split = (
-        F.when(bucket < 90, "train").when(bucket < 95, "val").otherwise("test")
-    )
-    fps = DD.winnowing_fingerprints(d, "doc_id", "text", k=20, window=16)
-    fps = fps.withColumn(
-        "split",
-        F.when(_split_bucket(F.col("id")) < 90, "train").otherwise("eval"),
-    )
-    eval_fps = (
-        fps.filter(F.col("split") != "train").select("fp").distinct()
-    )
-    shared = (
-        fps.filter(F.col("split") == "train")
-        .join(eval_fps, "fp")
-        .groupBy(F.col("id").alias("doc_id"))
-        .agg(F.count(F.lit(1)).alias("shared_fps"))
-    )
-    train_docs = d.select("doc_id").filter(split == "train")
-    return (
-        train_docs.join(shared, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("shared_fps"), F.lit(0)).alias("shared_fps"),
-            (F.coalesce(F.col("shared_fps"), F.lit(0)) >= 3).alias("contaminated"),
-        )
-    )
-
-
-def sql_decontaminate():
-    from cheque_ocr_project_spark.plans import dedup_sql
-
-    fp_sql = dedup_sql.sql_winnow_fingerprint(k=20, window=16)
-    bid = _split_bucket_sql("id")
-    return f"""
-WITH fps AS ({fp_sql}),
-eval_fps AS (SELECT DISTINCT fp FROM fps WHERE {bid} >= 90),
-shared AS (
-  SELECT id AS doc_id, count(*) AS shared_fps
-  FROM fps JOIN eval_fps USING (fp)
-  WHERE {bid} < 90
-  GROUP BY id
-)
-SELECT d.doc_id AS doc_id,
-       coalesce(s.shared_fps, 0) AS shared_fps,
-       coalesce(s.shared_fps, 0) >= 3 AS contaminated
-FROM documents d LEFT JOIN shared s ON d.doc_id = s.doc_id
-WHERE {_split_bucket_sql("d.doc_id")} < 90"""
-
-
-PACK_CTX_TOKENS = 512
-# doc_ids per prefix-sum chunk. 4096 exercises multi-chunk plans at test
-# scale; a 100 TB run would size this to ~10^5-10^6 ids so the per-source
-# offset table stays small (offsets are O(corpus / PACK_CHUNK) rows).
-PACK_CHUNK = 4096
-
-
-def q_pack_sequences(spark, sf_dir):
-    """Sequence packing for training: per source, documents are laid out in
-    a deterministic order (doc_id) and assigned to fixed-size context bins
-    by exclusive prefix token count — the standard pack-to-context-length
-    layout.
-
-    Scale shape (two-pass distributed prefix sum): a naive
-    Window.partitionBy("source") puts the dominant source's ENTIRE row set
-    in one task at corpus scale ("web" is 90%+ of a real mix). Instead the
-    doc_id axis is cut into fixed ranges (chunk = doc_id div PACK_CHUNK,
-    order-preserving), the running sum is computed per (source, chunk)
-    partition, per-chunk totals are rolled into a tiny per-source offset
-    table (cumulative over chunks), and the offsets are broadcast-joined
-    back: prefix = chunk_offset + local_prefix. The expensive scan +
-    tokenization sits below the one (source, chunk) exchange, which both
-    consumers share via ReuseExchange — the corpus is read ONCE and no
-    window partition ever exceeds PACK_CHUNK rows."""
-    from pyspark.sql import Window
-
-    t = F.col("text")
-    ws_tokens = F.size(F.regexp_extract_all(t, F.lit(r"\S+"), F.lit(0)))
-    # coalesce makes chunk non-nullable so the join-key isnotnull filter
-    # folds away in BOTH branches — otherwise it pushes into only the
-    # rows-branch scan (chunk is a window partition key there), the two
-    # exchange children differ, and ReuseExchange is lost (= corpus read
-    # twice). doc_id is never null in the contract schema.
-    d = par(_docs(spark, sf_dir)).select(
-        "doc_id", "source", ws_tokens.alias("n_tokens"),
-        F.coalesce(F.expr(f"doc_id div {PACK_CHUNK}"), F.lit(-1))
-        .alias("chunk"),
-    )
-    w_local = (
-        Window.partitionBy("source", "chunk").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_total = (
-        Window.partitionBy("source", "chunk").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    rows = d.select(
-        "doc_id", "source", "chunk", "n_tokens",
-        F.coalesce(F.sum("n_tokens").over(w_local), F.lit(0))
-        .alias("local_prefix"),
-        F.sum("n_tokens").over(w_total).alias("chunk_total"),
-    )
-    w_chunks = (
-        Window.partitionBy("source").orderBy("chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        rows.select("source", "chunk", "chunk_total").distinct()
-        .select(
-            "source", "chunk",
-            F.coalesce(F.sum("chunk_total").over(w_chunks), F.lit(0))
-            .alias("chunk_offset"),
-        )
-    )
-    prefix = F.col("chunk_offset") + F.col("local_prefix")
-    return (
-        rows.join(F.broadcast(offsets), ["source", "chunk"])
-        .select(
-            "doc_id", "source", "n_tokens",
-            F.floor(prefix / PACK_CTX_TOKENS).cast("int").alias("bin_id"),
-            F.pmod(prefix, F.lit(PACK_CTX_TOKENS)).cast("int").alias("bin_offset"),
-        )
-    )
-
-
-def sql_pack_sequences():
-    toks = r"len(regexp_extract_all(text, '[^ \t\n\x0b\f\r]+'))"
-    prefix = (
-        "coalesce(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
-    )
-    return f"""
-WITH d AS (SELECT doc_id, source, {toks} AS n_tokens FROM documents)
-SELECT doc_id, source, n_tokens,
-       CAST(floor({prefix} / {PACK_CTX_TOKENS}) AS INT) AS bin_id,
-       CAST({prefix} % {PACK_CTX_TOKENS} AS INT) AS bin_offset
-FROM d"""
-
-
-# ---------------------------------------------------------------------------
-# Gopher-style document quality gates (Rae et al. 2021 §A1.1, public
-# heuristics): pure per-row expressions — one pruned scan, zero shuffles.
-# Output is ints + booleans only, so the cross-engine compare never touches
-# float rounding.
-# ---------------------------------------------------------------------------
-
-GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
-
-
-def q_gopher_quality(spark, sf_dir):
-    """Gopher quality-filter gates per document: word count in [50, 1e5],
-    mean word length in [3, 10], symbol-to-word ratio (#/...) < 0.1,
-    bullet-line fraction < 0.9, ellipsis-line fraction < 0.3, >= 80% of
-    words contain a letter, and >= 2 distinct required stop words.
-    ``keep`` is the conjunction — the standard pre-training quality gate.
-
-    Scale shape: per-row array expressions over one pruned 2-column scan;
-    no UDF, no shuffle, whole-stage codegen end to end."""
-    t = F.col("text")
-    words = F.split(F.trim(t), r"\s+")
-    wc = F.size(words)
-    sum_wl = F.aggregate(words, F.lit(0), lambda a, w: a + F.length(w))
-    mean_wl = sum_wl.cast("double") / wc
-    n_hash = F.length(t) - F.length(F.replace(t, F.lit("#"), F.lit("")))
-    n_ell = (F.length(t) - F.length(F.replace(t, F.lit("..."), F.lit("")))) / 3
-    sym_ratio = (n_hash + n_ell) / wc
-    lines = F.split(t, "\n")
-    nlines = F.size(lines)
-    bullet_frac = (
-        F.size(F.filter(lines, lambda l: l.rlike(r"^\s*[-*]"))) / nlines
-    )
-    ell_frac = (
-        F.size(F.filter(lines, lambda l: l.endswith(F.lit("...")))) / nlines
-    )
-    alpha_frac = (
-        F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]"))) / wc
-    )
-    lowered = F.transform(words, F.lower)
-    stop_hits = sum(
-        F.array_contains(lowered, s).cast("int") for s in GOPHER_STOPWORDS
-    )
-    gates = {
-        "ok_word_count": (wc >= 50) & (wc <= 100000),
-        "ok_mean_word_len": (mean_wl >= 3.0) & (mean_wl <= 10.0),
-        "ok_symbol_ratio": sym_ratio < 0.1,
-        "ok_bullet": bullet_frac < 0.9,
-        "ok_ellipsis": ell_frac < 0.3,
-        "ok_alpha": alpha_frac > 0.8,
-        "ok_stopwords": stop_hits >= 2,
-    }
-    keep = None
-    for g in gates.values():
-        keep = g if keep is None else (keep & g)
-    return par(_docs(spark, sf_dir)).select(
-        "doc_id", wc.alias("word_count"),
-        stop_hits.alias("stop_hits"),
-        *[c.alias(n) for n, c in gates.items()],
-        keep.alias("keep"),
-    )
-
-
-def sql_gopher_quality():
-    stops = " + ".join(
-        f"CAST(list_contains(lowered, '{s}') AS INT)"
-        for s in GOPHER_STOPWORDS
-    )
-    return f"""
-WITH d AS (
-  SELECT doc_id,
-         regexp_split_to_array(trim(text), '[ \\t\\n\\x0b\\f\\r]+') AS words,
-         string_split(text, chr(10)) AS lines,
-         length(text) - length(replace(text, '#', '')) AS n_hash,
-         (length(text) - length(replace(text, '...', ''))) / 3 AS n_ell
-  FROM documents
-), e AS (
-  SELECT doc_id, words, lines, n_hash, n_ell,
-         len(words) AS wc, len(lines) AS nlines,
-         list_transform(words, w -> lower(w)) AS lowered,
-         list_sum(list_transform(words, w -> length(w))) AS sum_wl
-  FROM d
-), g AS (
-  SELECT doc_id, wc AS word_count,
-         {stops} AS stop_hits,
-         wc >= 50 AND wc <= 100000 AS ok_word_count,
-         CAST(sum_wl AS DOUBLE) / wc >= 3.0
-           AND CAST(sum_wl AS DOUBLE) / wc <= 10.0 AS ok_mean_word_len,
-         CAST(n_hash + n_ell AS DOUBLE) / wc < 0.1 AS ok_symbol_ratio,
-         CAST(len(list_filter(lines, l -> regexp_matches(l, '^[ \\t\\n\\x0b\\f\\r]*[-*]')))
-              AS DOUBLE) / nlines < 0.9 AS ok_bullet,
-         CAST(len(list_filter(lines, l -> ends_with(l, '...')))
-              AS DOUBLE) / nlines < 0.3 AS ok_ellipsis,
-         CAST(len(list_filter(words, w -> regexp_matches(w, '[A-Za-z]')))
-              AS DOUBLE) / wc > 0.8 AS ok_alpha
-  FROM e
-)
-SELECT doc_id, word_count, stop_hits, ok_word_count, ok_mean_word_len,
-       ok_symbol_ratio, ok_bullet, ok_ellipsis, ok_alpha,
-       stop_hits >= 2 AS ok_stopwords,
-       ok_word_count AND ok_mean_word_len AND ok_symbol_ratio AND ok_bullet
-         AND ok_ellipsis AND ok_alpha AND stop_hits >= 2 AS keep
-FROM g"""
-
-
-def q_rep_top_bigram(spark, sf_dir):
-    """Gopher repetition rule: each document's most frequent word 2-gram
-    and its count (the filter drops docs whose top n-gram covers too much
-    of the text; emitting the int count keeps the cross-engine compare
-    float-free). Docs with fewer than two words have no bigram and are
-    excluded, matching the oracle.
-
-    Scale shape: bigram explode -> partial-agg count (map-side combine
-    collapses the heavy duplication BEFORE the shuffle) -> per-doc top-1
-    window on the high-cardinality doc_id key. Ties broken (count desc,
-    gram asc) so both engines pick the identical winner."""
-    from pyspark.sql import Window
-
-    t = F.col("text")
-    words = F.split(F.trim(t), r"\s+")
-    n = F.size(words)
-    bigrams = F.zip_with(
-        F.slice(words, 1, n - 1), F.slice(words, 2, n - 1),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    d = par(_docs(spark, sf_dir)).select(
-        "doc_id", F.explode(bigrams).alias("gram")
-    )
-    cnt = d.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("cnt").desc(), F.col("gram").asc()
-    )
-    return (
-        cnt.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "gram", "cnt")
-    )
-
-
-SQL_REP_TOP_BIGRAM = r"""
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '[ \t\n\x0b\f\r]+') AS words
-  FROM documents
-), b AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(words)),
-                               i -> words[i] || ' ' || words[i + 1])) AS gram
-  FROM w
-), c AS (
-  SELECT doc_id, gram, count(*) AS cnt FROM b GROUP BY doc_id, gram
-)
-SELECT doc_id, gram, cnt FROM c
-QUALIFY row_number() OVER (PARTITION BY doc_id
-                           ORDER BY cnt DESC, gram ASC) = 1"""
-
-
-def _docs_with_dup_lines(spark, sf_dir) -> DataFrame:
-    """Planted line structure (the synthetic docs are single-line): every
-    11th doc gains three identical boilerplate footer lines (dup fraction
-    0.5 → gate trips), every 4th a distinct section line (multi-line but
-    clean). Deterministic and identical across engines; modulo-only id
-    arithmetic (int64-fuzz-safe)."""
-    footer = F.when(
-        F.col("doc_id") % 11 == 0,
-        F.lit("\nboilerplate footer\nboilerplate footer\nboilerplate footer"),
-    ).otherwise("")
-    section = F.when(
-        F.col("doc_id") % 4 == 0,
-        F.concat(F.lit("\nsection "), (F.col("doc_id") % 100).cast("string")),
-    ).otherwise("")
-    return par(_docs(spark, sf_dir)).select(
-        "doc_id", F.concat(F.col("text"), section, footer).alias("text")
-    )
-
-
-def q_rep_dup_lines(spark, sf_dir):
-    """Gopher duplicate-line repetition rule: excess duplicate lines per
-    document (n_lines - n_distinct_lines) and the keep gate
-    ``excess * 10 < n_lines * 3`` (the 0.3 duplicate-line-fraction
-    threshold in exact integer form — no float ratio crosses the engine
-    boundary). Pure per-row array expressions: one pruned scan, zero
-    shuffles — unlike rep_top_bigram this needs no explode/agg because
-    the dedup is within one row's array."""
-    lines = F.split(F.col("text"), "\n")
-    n_lines = F.size(lines)
-    excess = n_lines - F.size(F.array_distinct(lines))
-    return _docs_with_dup_lines(spark, sf_dir).select(
-        "doc_id",
-        n_lines.alias("n_lines"),
-        excess.alias("n_dup_excess"),
-        (excess * 10 < n_lines * 3).alias("keep"),
-    )
-
-
-SQL_REP_DUP_LINES = """
-WITH docs AS (
-  SELECT doc_id,
-    text
-    || CASE WHEN doc_id % 4 = 0
-            THEN chr(10) || 'section ' || CAST(doc_id % 100 AS VARCHAR)
-            ELSE '' END
-    || CASE WHEN doc_id % 11 = 0
-            THEN repeat(chr(10) || 'boilerplate footer', 3)
-            ELSE '' END AS text
-  FROM documents
-),
-l AS (
-  SELECT doc_id, string_split(text, chr(10)) AS lines FROM docs
-)
-SELECT doc_id,
-       len(lines) AS n_lines,
-       len(lines) - len(list_distinct(lines)) AS n_dup_excess,
-       (len(lines) - len(list_distinct(lines))) * 10 < len(lines) * 3 AS keep
-FROM l"""
-
-
-# ---------------------------------------------------------------------------
-# As-of join — the classic temporal operator Spark lacks natively. For each
-# 'purchase' event: the most recent 'click' at-or-before it for the same
-# user. Implemented as the scale-safe union + running-last trick: tag both
-# streams, one shuffle on user_id, a running last(ignorenulls) carries the
-# latest right-side row forward — NO range join, whose candidate blowup
-# (every left row x every earlier right row) is the naive formulation's
-# 100 TB failure mode. DuckDB's native ASOF LEFT JOIN is the oracle, so the
-# semantics are checked against an independent implementation, not a mirror.
-# ---------------------------------------------------------------------------
-
-def q_asof_join(spark, sf_dir):
-    from pyspark.sql import Window
-
-    ev = _events(spark, sf_dir)
-    # ONE pruned scan tags both streams; no pre-aggregation needed — the
-    # ordering (ts, side, r_id) makes the running last() pick the highest
-    # click_id among clicks sharing a timestamp, which is exactly the
-    # deterministic per-(user, ts) dedup the oracle states as a GROUP BY.
-    side = F.when(F.col("event_type") == "click", 0).otherwise(1)
-    tagged = (
-        ev.filter(F.col("event_type").isin("click", "purchase"))
-        .select(
-            "user_id", "ts", side.alias("side"),
-            F.when(F.col("event_type") == "click", F.col("event_id"))
-            .alias("r_id"),
-            F.when(F.col("event_type") == "purchase", F.col("event_id"))
-            .alias("l_id"),
-        )
-    )
-    # side=0 sorts before side=1 at equal ts => 'at-or-before' inclusive
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").asc(), F.col("side").asc(), F.col("r_id").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    carried = tagged.select(
-        "user_id", "ts", "side", "l_id",
-        F.last(
-            F.when(F.col("side") == 0, F.struct("ts", "r_id")),
-            ignorenulls=True,
-        ).over(w).alias("c"),
-    )
-    return (
-        carried.filter(F.col("side") == 1)
-        .select(
-            F.col("l_id").alias("event_id"), "user_id", "ts",
-            F.col("c.r_id").alias("click_id"),
-            F.col("c.ts").alias("click_ts"),
-            # exact microsecond delta: tz-independent on NTZ timestamps
-            # (a cast-to-long goes through the session timezone) and free
-            # of the truncate-vs-boundary-crossing divergence between
-            # engines at sub-second resolution
-            F.timestamp_diff("MICROSECOND", F.col("c.ts"), F.col("ts"))
-            .alias("gap_us"),
-        )
-    )
-
-
-def q_event_rollup(spark, sf_dir):
-    """Hierarchical time-bucket rollup (the hypertable/continuous-
-    aggregate pattern): per (event_type, hour) totals, per-type subtotals,
-    and the grand total in ONE pass via ROLLUP — Catalyst expands the
-    grouping sets into a single shuffle instead of three scans. Money is
-    summed in exact integer cents (round(value*100)) so the cross-engine
-    compare never meets float-accumulation-order noise."""
-    ev = _events(spark, sf_dir).select(
-        "event_type",
-        F.date_trunc("hour", F.col("ts")).alias("hr"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    return ev.rollup("event_type", "hr").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("cents").alias("value_cents"),
-    )
-
-
-SQL_EVENT_ROLLUP = """
-SELECT event_type, hr,
-       count(*) AS n_events,
-       CAST(sum(cents) AS BIGINT) AS value_cents
-FROM (
-  SELECT event_type, date_trunc('hour', ts) AS hr,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-)
-GROUP BY ROLLUP (event_type, hr)"""
-
-
-# Per-stage conversion window: a later stage counts only within 24h of
-# the previous one. At sf0.01 the funnel genuinely narrows:
-# 150 users -> 60 click-within-24h -> 25 purchase-within-24h.
-FUNNEL_WINDOW_US = 24 * 3600 * 1_000_000
-
-
-def q_funnel(spark, sf_dir):
-    """Ordered three-stage conversion funnel (view -> click-within-24h ->
-    purchase-within-24h): per user, the first view, the first qualifying
-    click at-or-after it, the first qualifying purchase after that;
-    output is the stage-reach counts.
-
-    Deliberately the groupBy formulation, NOT a per-user window: each
-    stage is a map-side-combinable aggregate joined back on user_id, so
-    one bot user with 10^8 events never pins a single task (the whale
-    shape the chunked operators exist to avoid — an unbounded per-user
-    window would reintroduce it; locked by the whale test + plan
-    assertion in test_scale_mechanics). Only stage-relevant rows ride
-    the joins: clicks against stage 1, purchases against stage 2 — the
-    view/signup/error majority never shuffles twice. Gap bounds compare
-    exact epoch microseconds; a missing earlier stage nulls every later
-    stage through the null-propagating predicates, and LEFT joins keep
-    users who never reach a stage in the counts."""
-    ev = _events(spark, sf_dir).select("user_id", "ts", "event_type")
-
-    def within(prev_col):
-        gap = F.timestamp_diff("MICROSECOND", F.col(prev_col), F.col("ts"))
-        return (F.col("ts") >= F.col(prev_col)) & (gap <= FUNNEL_WINDOW_US)
-
-    u = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("s1")
-    )
-    s2_agg = (
-        ev.filter(F.col("event_type") == "click")
-        .join(u, "user_id")
-        .filter(within("s1"))
-        .groupBy("user_id").agg(F.min("ts").alias("s2"))
-    )
-    c = u.join(s2_agg, "user_id", "left")
-    s3_agg = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c.filter(F.col("s2").isNotNull()).select("user_id", "s2"),
-              "user_id")
-        .filter(within("s2"))
-        .groupBy("user_id").agg(F.min("ts").alias("s3"))
-    )
-    p = c.join(s3_agg, "user_id", "left")
-    return p.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum(F.col("s1").isNotNull().cast("long")).alias("reached_view"),
-        F.sum(F.col("s2").isNotNull().cast("long")).alias("reached_click"),
-        F.sum(F.col("s3").isNotNull().cast("long")).alias("reached_purchase"),
-    )
-
-
-SQL_FUNNEL = f"""
-WITH u AS (
-  SELECT user_id, min(CASE WHEN event_type = 'view' THEN ts END) AS s1
-  FROM events GROUP BY user_id
-),
-c AS (
-  SELECT e.user_id, u.s1,
-         min(CASE WHEN e.event_type = 'click' AND e.ts >= u.s1
-                   AND epoch_us(e.ts) - epoch_us(u.s1) <= {FUNNEL_WINDOW_US}
-                  THEN e.ts END) AS s2
-  FROM events e JOIN u USING (user_id) GROUP BY e.user_id, u.s1
-),
-p AS (
-  SELECT e.user_id, c.s1, c.s2,
-         min(CASE WHEN e.event_type = 'purchase' AND e.ts >= c.s2
-                   AND epoch_us(e.ts) - epoch_us(c.s2) <= {FUNNEL_WINDOW_US}
-                  THEN e.ts END) AS s3
-  FROM events e JOIN c USING (user_id) GROUP BY e.user_id, c.s1, c.s2
-)
-SELECT CAST(count(*) AS BIGINT) AS n_users,
-       CAST(sum(CASE WHEN s1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS reached_view,
-       CAST(sum(CASE WHEN s2 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS reached_click,
-       CAST(sum(CASE WHEN s3 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS reached_purchase
-FROM p"""
-
-
-SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
-
-
-def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization: events of a user separated by more than
-    30 minutes of inactivity start a new session — the classic
-    lag + running-sum formulation. session_seq is the per-user session
-    ordinal, deterministic under the (ts, event_id) ordering.
-
-    Scale shape: ONE shuffle on the high-cardinality user key, one sort,
-    both window functions (lag, running sum) share the partitioning —
-    never a range join or a self-join. Gap compared in exact integer
-    microseconds (no truncation-unit dialect risk)."""
-    from pyspark.sql import Window
-
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "ts")
-    order = [F.col("ts").asc(), F.col("event_id").asc()]
-    w = Window.partitionBy("user_id").orderBy(*order)
-    prev_ts = F.lag("ts").over(w)
-    gap_us = F.timestamp_diff("MICROSECOND", prev_ts, F.col("ts"))
-    new_sess = F.when(
-        prev_ts.isNull() | (gap_us > SESSION_GAP_US), 1
-    ).otherwise(0)
-    run = Window.partitionBy("user_id").orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return (
-        ev.select(
-            "event_id", "user_id", "ts", new_sess.alias("new_sess")
-        )
-        .select(
-            "event_id", "user_id", "ts",
-            F.sum("new_sess").over(run).cast("long").alias("session_seq"),
-            (F.col("new_sess") == 1).alias("is_session_start"),
-        )
-    )
-
-
-SQL_SESSIONIZE = f"""
-WITH l AS (
-  SELECT event_id, user_id, ts,
-         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-  FROM events
-), f AS (
-  SELECT event_id, user_id, ts,
-         CASE WHEN prev_ts IS NULL
-                OR epoch_us(ts) - epoch_us(prev_ts) > {SESSION_GAP_US}
-              THEN 1 ELSE 0 END AS new_sess
-  FROM l
-)
-SELECT event_id, user_id, ts,
-       CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         AS session_seq,
-       new_sess = 1 AS is_session_start
-FROM f"""
-
-
-# ---------------------------------------------------------------------------
-# Whale-user de-skew (VERDICT r04 #3): the plain sessionize/asof windows
-# partition by user_id, so one bot user with 10^8 events pins a single
-# task at 100x scale — the same failure shape pack_sequences' two-pass
-# prefix sum fixed in round 4. Both computations are decomposable the same
-# way: partition by (user_id, ts-chunk) — bounded by the event rate times
-# the chunk width, not by a user's total history — compute per-chunk
-# partials, then combine across a user's chunks on the (much smaller)
-# chunk-summary relation, and join the per-chunk offsets back on the keys
-# the intra window already partitioned by (no extra exchange of the big
-# side). Contract queries prove both variants bit-equal to the SAME DuckDB
-# oracles as the single-window forms.
-# ---------------------------------------------------------------------------
-
-SESSION_CHUNK_US = 24 * 3600 * 1_000_000  # 1-day chunks: sf0.01 events span
-                                          # 30 days, so ~30 chunks/user bind
-
-
-def _epoch_us(col) -> "F.Column":
-    """Microseconds since epoch for a TIMESTAMP_NTZ column (the events
-    contract type): timestamp_diff from an NTZ epoch literal — unlike
-    unix_micros/cast-to-long this neither requires an instant type nor
-    consults the session timezone."""
-    return F.timestamp_diff(
-        "MICROSECOND", F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"), col
-    )
-
-
-def sessionize_chunked(ev: DataFrame, gap_us: int = SESSION_GAP_US,
-                       chunk_us: int = SESSION_CHUNK_US) -> DataFrame:
-    """Gap sessionization as a two-pass distributed running sum.
-
-    Pass 1 (bounded partitions): within each (user_id, chunk) — chunk =
-    unix_micros(ts) div chunk_us, tz-independent — lag gives each
-    non-first event its new-session flag and a running intra-chunk count.
-    Pass 2 (chunk summaries, one row per non-empty (user, chunk)): a lag
-    over a user's chunk rows resolves each chunk's FIRST event against the
-    previous chunk's last timestamp (empty chunks simply have no row), and
-    a running sum of per-chunk totals yields the session-count offset each
-    chunk inherits. session_seq = offset + boundary + intra running count.
-    The final equi-join is on (user_id, chunk) — the exact partitioning
-    the intra window already established."""
-    from pyspark.sql import Window
-
-    # exact integer division (a double quotient could truncate wrong at
-    # chunk boundaries); epochs are non-negative by the events contract.
-    # coalesce makes chunk NON-NULLABLE: otherwise the final inner join's
-    # isnotnull(chunk) null-filter re-inlines the computed expression into
-    # only one branch's scan and kills ReuseExchange — the same trap
-    # pack_sequences hit in round 4 (single-scan plan locked in
-    # test_plan_shapes_hold).
-    e = ev.select(
-        "event_id", "user_id", "ts", _epoch_us(F.col("ts")).alias("__us")
-    ).select(
-        "event_id", "user_id", "ts",
-        F.coalesce(F.expr(f"__us div {chunk_us}"), F.lit(-1)).alias("chunk"),
-    )
-
-    order = [F.col("ts").asc(), F.col("event_id").asc()]
-    wc = Window.partitionBy("user_id", "chunk").orderBy(*order)
-    prev_ts = F.lag("ts").over(wc)
-    gap = F.timestamp_diff("MICROSECOND", prev_ts, F.col("ts"))
-    intra_flag = F.when(prev_ts.isNull(), 0).otherwise(
-        F.when(gap > gap_us, 1).otherwise(0)
-    )
-    run = wc.rowsBetween(Window.unboundedPreceding, 0)
-    e = e.select(
-        "event_id", "user_id", "ts", "chunk",
-        prev_ts.isNull().alias("first_in_chunk"),
-        intra_flag.alias("intra_flag"),
-    ).withColumn("intra_run", F.sum("intra_flag").over(run))
-
-    summary = e.groupBy("user_id", "chunk").agg(
-        F.min(_epoch_us(F.col("ts"))).alias("first_us"),
-        F.max(_epoch_us(F.col("ts"))).alias("last_us"),
-        F.sum("intra_flag").alias("n_intra"),
-    )
-    ws = Window.partitionBy("user_id").orderBy(F.col("chunk").asc())
-    prev_last = F.lag("last_us").over(ws)
-    boundary = F.when(
-        prev_last.isNull() | (F.col("first_us") - prev_last > gap_us), 1
-    ).otherwise(0)
-    summary = summary.withColumn("boundary", boundary).withColumn(
-        "offset",
-        F.coalesce(
-            F.sum(F.col("boundary") + F.col("n_intra")).over(
-                ws.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).select("user_id", "chunk", "boundary", "offset")
-
-    joined = e.join(summary, ["user_id", "chunk"])
-    new_sess = F.when(
-        F.col("first_in_chunk"), F.col("boundary")
-    ).otherwise(F.col("intra_flag"))
-    return joined.select(
-        "event_id", "user_id", "ts",
-        (F.col("offset") + F.col("boundary") + F.col("intra_run"))
-        .cast("long").alias("session_seq"),
-        (new_sess == 1).alias("is_session_start"),
-    )
-
-
-def q_sessionize_chunked(spark, sf_dir):
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "ts")
-    return sessionize_chunked(ev)
-
-
-_STREAM_SESSION_SEQ = iter(range(1, 1_000_000))
-
-
-def q_sessionize_streaming(spark, sf_dir):
-    """Driver-visible contract row for the Structured-Streaming stateful
-    sessionizer (streaming/stateful.py streaming_sessionize — the
-    applyInPandasWithState twin of q_sessionize; graft analog of the
-    reference's incremental machinery, parallel_processor.py:113-134):
-    run it in availableNow mode over the events table and return the
-    collected assignment relation, oracle = the SAME SQL_SESSIONIZE the
-    batch operators are checked against.
-
-    Harness adapter notes (sandbox-only mechanics, not the production
-    shape):
-    - the file stream source lists a DIRECTORY, and the test parquet is a
-      single file, so the file is symlinked into a temp staging dir; a
-      production ingest already reads a directory/prefix.
-    - sink is a memory sink (driver-side rows) purely so the harness can
-      hand the result back as a DataFrame; production is the parquet/
-      foreachBatch sink in streaming/stream.py. Row volume here is the
-      events table at contract scale (10^4..10^5), not 100 TB.
-    - availableNow does NOT self-terminate while applyInPandasWithState
-      processing-time timers are pending, so we poll the sink for
-      completeness (row count == source count) and stop explicitly —
-      the same discipline as tests/test_stateful_streaming.py.
-    """
-    import os
-    import tempfile
-    import time
-
-    from cheque_ocr_project_spark.streaming.stateful import (
-        streaming_sessionize,
-    )
-
-    ev = _events(spark, sf_dir)
-    n_expected = ev.count()
-    stage = tempfile.mkdtemp(prefix="sess_stream_in_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(stage, "events.parquet"),
-    )
-    ckpt = tempfile.mkdtemp(prefix="sess_stream_ckpt_")
-    table = f"sessionize_streaming_{next(_STREAM_SESSION_SEQ)}"
-
-    stream = spark.readStream.schema(ev.schema).parquet(stage)
-    q = (
-        streaming_sessionize(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(table)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        deadline = time.time() + 240
-        while time.time() < deadline:
-            if spark.table(table).count() >= n_expected:
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-        q.awaitTermination(60)
-
-    got = spark.table(table).count()
-    if got != n_expected:
-        raise RuntimeError(
-            f"streaming sessionize incomplete: {got}/{n_expected} rows"
-        )
-    # ts_us (tz-independent long) -> the contract TIMESTAMP_NTZ, the
-    # exact inverse of the operator's ns//1000; columns/aliases match
-    # SQL_SESSIONIZE so the driver's sorted-column value hash aligns.
-    epoch = F.lit("1970-01-01 00:00:00").cast("timestamp_ntz")
-    return spark.table(table).select(
-        "event_id",
-        "user_id",
-        F.timestamp_add("MICROSECOND", F.col("ts_us"), epoch).alias("ts"),
-        "session_seq",
-        "is_session_start",
-    )
-
-
-_STREAM_PROGRESS_SEQ = iter(range(1, 1_000_000))
-
-
-def q_conversation_progress(spark, sf_dir):
-    """Driver-visible contract row for the OTHER stateful streaming
-    operator (streaming/stateful.conversation_progress — per-conversation
-    running aggregates via applyInPandasWithState; graft analog of the
-    reference's in-process mutable counters, issuer_processor_v.py:63-69):
-    drive it in availableNow mode over documents-as-transcripts and
-    return the final per-conversation aggregates; oracle = the plain
-    GROUP BY the running state converges to.
-
-    Determinism: the staged input is written as ONE parquet file so
-    availableNow runs a single micro-batch, and the idle timeout is set
-    beyond the run length so no timeout-eviction rows interleave. The
-    update-mode memory sink keeps every emission; since the tracked
-    counters are monotone non-decreasing across emissions, max() per
-    conversation is exactly the final state (and with one batch there is
-    exactly one emission per conversation anyway). Harness mechanics
-    (staging dir, memory sink, poll-and-stop) are shared with
-    q_sessionize_streaming — see its docstring."""
-    import tempfile
-    import time
-
-    from cheque_ocr_project_spark.streaming.stateful import (
-        conversation_progress,
-    )
-
-    tr = documents_as_transcripts(spark, sf_dir).select(
-        "conv_id", "turn_idx", "text"
-    )
-    n_convs = tr.select("conv_id").distinct().count()
-    stage = tempfile.mkdtemp(prefix="conv_stream_in_")
-    tr.coalesce(1).write.mode("overwrite").parquet(stage)
-    ckpt = tempfile.mkdtemp(prefix="conv_stream_ckpt_")
-    table = f"conversation_progress_{next(_STREAM_PROGRESS_SEQ)}"
-
-    stream = spark.readStream.schema(tr.schema).parquet(stage)
-    q = (
-        conversation_progress(stream, idle_timeout_ms=3_600_000)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(table)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        deadline = time.time() + 240
-        while time.time() < deadline:
-            if (
-                spark.table(table).select("conv_id").distinct().count()
-                >= n_convs
-            ):
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-        q.awaitTermination(60)
-
-    got = spark.table(table).select("conv_id").distinct().count()
-    if got != n_convs:
-        raise RuntimeError(
-            f"streaming progress incomplete: {got}/{n_convs} conversations"
-        )
-    return spark.table(table).groupBy("conv_id").agg(
-        F.max("turns_seen").alias("turns_seen"),
-        F.max("max_turn_idx").alias("max_turn_idx"),
-        F.max("payee_marker_turns").alias("payee_marker_turns"),
-    )
-
-
-# mirrors streaming/stateful._PAYEE_MARKERS (substring containment on the
-# uppercased text, null -> '') and the documents_as_transcripts key split
-# (SQL twin of the conv_id/turn_idx expressions in flagship_sql.py:367)
-SQL_CONVERSATION_PROGRESS = """
-WITH t AS (
-  SELECT source || '-' || CAST(doc_id // 2147483648 AS VARCHAR) AS conv_id,
-         CAST(doc_id % 2147483648 AS INT) AS turn_idx,
-         upper(coalesce(text, '')) AS u
-  FROM documents
-)
-SELECT conv_id,
-       CAST(count(*) AS BIGINT) AS turns_seen,
-       CAST(max(turn_idx) AS BIGINT) AS max_turn_idx,
-       CAST(sum(CASE WHEN contains(u, 'PAY') OR contains(u, 'ORDER OF')
-                       OR contains(u, 'FAVOUR OF')
-                       OR contains(u, 'BENEFICIARY')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS payee_marker_turns
-FROM t GROUP BY conv_id"""
-
-
-REP_TURN_CHUNK = 4096  # turn_idx div 4096 bounds every lag partition
-
-
-def turn_repetition_chunked(tr: DataFrame,
-                            chunk_sz: int = REP_TURN_CHUNK) -> DataFrame:
-    """Degenerate-loop detection over transcripts: per conversation, the
-    token-set Jaccard overlap between each turn and its predecessor —
-    the agent-transcript analog of rep_dup_lines (an assistant stuck
-    re-emitting the same turn shows rep_ppm pinned near 1e6, and a
-    training pipeline drops or truncates such conversations). Counts
-    and the ppm ratio are exact integers; only turns with a
-    predecessor are emitted.
-
-    Scale shape: conv_id is LOW-cardinality by construction (the
-    documents_as_transcripts split yields ~#sources conversations), so
-    a lag window partitioned by conv_id alone would pin an entire
-    conversation into one sort task — the whale shape
-    sessionize_chunked exists to kill. Same two-pass cure: lag within
-    bounded (conv_id, turn_idx-chunk) partitions; each chunk's LAST
-    token set is computed as a full-frame window in the SAME stage
-    (asof_join_chunked's c_full trick — a groupBy branch would not
-    ReuseExchange) and carried to the next non-empty chunk's first turn
-    via a lag over the small per-chunk summary relation. The final
-    equi-join is on (conv_id, chunk), the partitioning the intra
-    window already established."""
-    from pyspark.sql import Window
-
-    toks = F.array_distinct(
-        F.regexp_extract_all(
-            F.lower(F.coalesce(F.col("text"), F.lit(""))),
-            F.lit("[a-z]+"), F.lit(0),
-        )
-    )
-    t = tr.select("conv_id", "turn_idx", toks.alias("toks")).select(
-        "conv_id", "turn_idx", "toks",
-        # non-nullable chunk: see sessionize_chunked (ReuseExchange)
-        F.coalesce(F.expr(f"turn_idx div {chunk_sz}"), F.lit(-1)).alias("chunk"),
-    )
-    base = Window.partitionBy("conv_id", "chunk").orderBy(
-        F.col("turn_idx").asc()
-    )
-    staged = t.select(
-        "conv_id", "turn_idx", "chunk", "toks",
-        F.lag("toks").over(base).alias("prev_intra"),
-        F.last("toks").over(
-            base.rowsBetween(Window.unboundedPreceding,
-                             Window.unboundedFollowing)
-        ).alias("chunk_last"),
-    )
-    ws = Window.partitionBy("conv_id").orderBy(F.col("chunk").asc())
-    summary = (
-        staged.select("conv_id", "chunk", "chunk_last").distinct()
-        .select(
-            "conv_id", "chunk",
-            F.lag("chunk_last").over(ws).alias("carry_toks"),
-        )
-    )
-    joined = staged.join(summary, ["conv_id", "chunk"])
-    prev = F.coalesce(F.col("prev_intra"), F.col("carry_toks"))
-    # toks is never null (text is coalesced), so a null lag value means
-    # exactly "no predecessor in this chunk" — no flag column needed
-    out = joined.filter(prev.isNotNull()).select(
-        "conv_id", "turn_idx",
-        F.size(F.array_intersect(F.col("toks"), prev))
-        .cast("long").alias("inter_toks"),
-        F.size(F.array_union(F.col("toks"), prev))
-        .cast("long").alias("union_toks"),
-    )
-    return out.select(
-        "conv_id", "turn_idx", "inter_toks", "union_toks",
-        F.expr(
-            "CAST((inter_toks * 1000000) div greatest(union_toks, 1) AS BIGINT)"
-        ).alias("rep_ppm"),
-    )
-
-
-def q_turn_repetition(spark, sf_dir):
-    tr = documents_as_transcripts(spark, sf_dir).select(
-        "conv_id", "turn_idx", "text"
-    )
-    return turn_repetition_chunked(tr)
-
-
-# the oracle is the NAIVE single-window lag — the chunked decomposition
-# must be bit-equal to it (same proof obligation as sessionize_chunked
-# vs SQL_SESSIONIZE); list inputs are distinct so
-# |a ∪ b| = |a| + |b| - |a ∩ b|
-SQL_TURN_REPETITION = """
-WITH tr AS (
-  SELECT source || '-' || CAST(doc_id // 2147483648 AS VARCHAR) AS conv_id,
-         CAST(doc_id % 2147483648 AS INT) AS turn_idx,
-         list_distinct(regexp_extract_all(lower(coalesce(text, '')),
-                                          '[a-z]+')) AS toks
-  FROM documents
-), l AS (
-  SELECT conv_id, turn_idx, toks,
-         lag(toks) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev
-  FROM tr
-), m AS (
-  SELECT conv_id, turn_idx,
-         len(list_filter(toks, x -> list_contains(prev, x))) AS inter_toks,
-         len(toks) + len(prev)
-           - len(list_filter(toks, x -> list_contains(prev, x))) AS union_toks
-  FROM l WHERE prev IS NOT NULL
-)
-SELECT conv_id, turn_idx,
-       CAST(inter_toks AS BIGINT) AS inter_toks,
-       CAST(union_toks AS BIGINT) AS union_toks,
-       CAST((inter_toks * 1000000) // greatest(union_toks, 1) AS BIGINT)
-         AS rep_ppm
-FROM m"""
-
-
-LOOP_PPM = 750_000   # a turn repeating >= 75% of the merged token set
-LOOP_FRAC_PCT = 30   # flag when > 30% of scored turns are repeats
-                     # (thresholds bind at sf0.01: 12 of 20 convs flag)
-
-
-def q_loop_flagged_convs(spark, sf_dir):
-    """The gate turn_repetition feeds: a conversation where more than
-    LOOP_FRAC_PCT% of predecessor-scored turns repeat >= LOOP_PPM of
-    their merged token set is a degenerate loop — a training pipeline
-    drops or truncates it before packing. Cross-multiplied integer
-    comparison (loop_turns*100 > scored*PCT), no division at all.
-
-    Scale shape: one map-side-combined agg over turn_repetition's
-    chunk-safe output (conv_id is low-cardinality, but the agg rolls
-    up map-side before the tiny final exchange — aggregation tolerates
-    the low-card key that the lag window could not)."""
-    rep = q_turn_repetition(spark, sf_dir)
-    agg = rep.groupBy("conv_id").agg(
-        F.count(F.lit(1)).alias("scored_turns"),
-        F.sum(
-            F.when(F.col("rep_ppm") >= LOOP_PPM, 1).otherwise(0)
-        ).alias("loop_turns"),
-    )
-    return agg.select(
-        "conv_id",
-        F.col("scored_turns").cast("long").alias("scored_turns"),
-        F.col("loop_turns").cast("long").alias("loop_turns"),
-        (F.col("loop_turns") * 100
-         > F.col("scored_turns") * LOOP_FRAC_PCT).alias("flagged"),
-    )
-
-
-def sql_loop_flagged_convs():
-    return f"""
-WITH rep AS ({SQL_TURN_REPETITION}
-)
-SELECT conv_id,
-       CAST(count(*) AS BIGINT) AS scored_turns,
-       CAST(sum(CASE WHEN rep_ppm >= {LOOP_PPM} THEN 1 ELSE 0 END) AS BIGINT)
-         AS loop_turns,
-       sum(CASE WHEN rep_ppm >= {LOOP_PPM} THEN 1 ELSE 0 END) * 100
-         > count(*) * {LOOP_FRAC_PCT} AS flagged
-FROM rep GROUP BY conv_id"""
-
-
-def asof_join_chunked(ev: DataFrame,
-                      chunk_us: int = SESSION_CHUNK_US) -> DataFrame:
-    """As-of join as a two-pass running last: the carried latest-click
-    struct is decomposable exactly like a running sum. Pass 1 carries it
-    within bounded (user_id, chunk) partitions; pass 2 takes each chunk's
-    last click (max struct — same (ts, r_id) order the running last uses)
-    and carries the last non-null across a user's chunk summaries; the
-    per-event answer is coalesce(intra carry, previous chunks' carry)."""
-    from pyspark.sql import Window
-
-    # Raw event_id (not pre-derived l_id/r_id) travels through the shuffle
-    # so BOTH consumers of the (user, chunk) exchange need the identical
-    # column set — column pruning otherwise specializes the two scans and
-    # kills ReuseExchange (the pack_sequences lesson). Ordering by
-    # event_id is equivalent to the plain form's r_id ordering: among
-    # clicks they coincide, and purchase order within a timestamp never
-    # affects the carried value.
-    side = F.when(F.col("event_type") == "click", 0).otherwise(1)
-    tagged = (
-        ev.filter(F.col("event_type").isin("click", "purchase"))
-        .select(
-            "event_id", "user_id", "ts", side.alias("side"),
-            _epoch_us(F.col("ts")).alias("__us"),
-        )
-        .select(
-            "event_id", "user_id", "ts", "side",
-            # non-nullable chunk: see sessionize_chunked (ReuseExchange)
-            F.coalesce(F.expr(f"__us div {chunk_us}"), F.lit(-1)).alias("chunk"),
-        )
-    )
-    click = F.when(
-        F.col("side") == 0,
-        F.struct(F.col("ts"), F.col("event_id").alias("r_id")),
-    )
-    base = (
-        Window.partitionBy("user_id", "chunk")
-        .orderBy(F.col("ts").asc(), F.col("side").asc(), F.col("event_id").asc())
-    )
-    staged = tagged.select(
-        "event_id", "user_id", "ts", "side", "chunk",
-        F.last(click, ignorenulls=True)
-        .over(base.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("c_intra"),
-        # constant per (user, chunk): the chunk's final carried click —
-        # computed in the same window stage so the chunk-summary branch
-        # shares this scan+exchange instead of re-aggregating its own
-        F.last(click, ignorenulls=True)
-        .over(base.rowsBetween(Window.unboundedPreceding,
-                               Window.unboundedFollowing))
-        .alias("c_full"),
-    )
-
-    ws = Window.partitionBy("user_id").orderBy(F.col("chunk").asc())
-    summary = (
-        staged.select("user_id", "chunk", F.col("c_full").alias("chunk_last"))
-        .distinct()
-        .select(
-            "user_id", "chunk",
-            F.last("chunk_last", ignorenulls=True).over(
-                ws.rowsBetween(Window.unboundedPreceding, -1)
-            ).alias("c_prev"),
-        )
-    )
-
-    joined = staged.join(summary, ["user_id", "chunk"])
-    c = F.coalesce(F.col("c_intra"), F.col("c_prev"))
-    return (
-        joined.filter(F.col("side") == 1)
-        .select(
-            "event_id", "user_id", "ts",
-            c.getField("r_id").alias("click_id"),
-            c.getField("ts").alias("click_ts"),
-            F.timestamp_diff("MICROSECOND", c.getField("ts"), F.col("ts"))
-            .alias("gap_us"),
-        )
-    )
-
-
-def q_asof_join_chunked(spark, sf_dir):
-    return asof_join_chunked(_events(spark, sf_dir))
-
-
-SQL_ASOF_JOIN = """
-WITH clicks AS (
-  SELECT user_id, ts, max(event_id) AS click_id
-  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-), purchases AS (
-  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-)
-SELECT p.event_id AS event_id, p.user_id AS user_id, p.ts AS ts,
-       c.click_id AS click_id, c.ts AS click_ts,
-       epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-FROM purchases p ASOF LEFT JOIN clicks c
-  ON p.user_id = c.user_id AND p.ts >= c.ts"""
-
-
-RANGE_WIN_US = 3600 * 1_000_000  # each purchase opens a 1-hour lookback
-RANGE_BIN_US = 3600 * 1_000_000  # 1-hour bins -> <= 2 bins per window
-
-
-def q_range_join_binned(spark, sf_dir):
-    """Interval-containment join (range join) in its scale-correct
-    BINNED form: every click falling inside the 1-hour window before a
-    purchase, joined as (click, window) pairs with the exact integer
-    gap. The naive formulation is a theta-join (user match AND ts in
-    (start, end]) which Spark plans as a nested loop — quadratic per
-    user at 100x. Binning decomposes it into an EQUI-join on
-    (user_id, time-bin): each window explodes to the bins it covers
-    (bounded: window_width div bin + 1 = 2 rows here — the explode
-    factor is a constant chosen with the bin width, never data-driven),
-    each probe row computes its single bin, the equi-join meets exactly
-    the candidate rows, and the exact range predicate removes the
-    residual same-bin misses. Output pairs need no dedup: a probe's
-    single bin intersects a given window's bin list at most once.
-
-    The DuckDB oracle is the NAIVE range join, so the binned
-    decomposition is proven equal to the plain semantics (same proof
-    obligation as sessionize_chunked/turn_repetition). Boundary
-    semantics are (start, end] — a click at exactly the purchase
-    instant matches, one at exactly window open does not. Epochs are
-    non-negative by the events contract (integer div truncation ==
-    floor); comparisons are exact integer micros."""
-    ev = _events(spark, sf_dir)
-    us = _epoch_us(F.col("ts"))
-    wins = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("w_id"), "user_id",
-        (us - RANGE_WIN_US).alias("w_start_us"),
-        us.alias("w_end_us"),
-    )
-    wbins = wins.select(
-        "w_id", "user_id", "w_start_us", "w_end_us",
-        F.explode(
-            F.expr(
-                f"sequence(w_start_us div {RANGE_BIN_US}, "
-                f"w_end_us div {RANGE_BIN_US})"
-            )
-        ).alias("bin"),
-    )
-    probes = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", us.alias("c_us")
-    ).select(
-        "event_id", "user_id", "c_us",
-        F.expr(f"c_us div {RANGE_BIN_US}").alias("bin"),
-    )
-    return (
-        probes.join(wbins, ["user_id", "bin"])
-        .filter(
-            (F.col("c_us") > F.col("w_start_us"))
-            & (F.col("c_us") <= F.col("w_end_us"))
-        )
-        .select(
-            "w_id",
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            (F.col("w_end_us") - F.col("c_us")).cast("long").alias("gap_us"),
-        )
-    )
-
-
-# the oracle is the NAIVE theta range join — the binned equi-join must
-# reproduce it exactly
-SQL_RANGE_JOIN = f"""
-WITH wins AS (
-  SELECT event_id AS w_id, user_id,
-         epoch_us(ts) - {RANGE_WIN_US} AS w_start_us,
-         epoch_us(ts) AS w_end_us
-  FROM events WHERE event_type = 'purchase'
-), clicks AS (
-  SELECT event_id, user_id, epoch_us(ts) AS c_us
-  FROM events WHERE event_type = 'click'
-)
-SELECT w.w_id, c.event_id AS click_id, c.user_id,
-       CAST(w.w_end_us - c.c_us AS BIGINT) AS gap_us
-FROM clicks c JOIN wins w
-  ON c.user_id = w.user_id
- AND c.c_us > w.w_start_us AND c.c_us <= w.w_end_us"""
-
-
-# Training-mix weights for the stratified-sample contract query: a few
-# named sources get explicit rates, everything else the default.
-MIX_RATES = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.0}
-MIX_DEFAULT = 0.10
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Deterministic per-source training-mix sampling over documents (one
-    scan, zero shuffles, growth-stable — operators/sampling.py)."""
-    from cheque_ocr_project_spark.operators import sampling as S
-
-    d = _docs(spark, sf_dir).select("doc_id", "source")
-    out = S.stratified_sample(d, "doc_id", "source", MIX_RATES, MIX_DEFAULT)
-    return out.select(
-        "doc_id", "source",
-        S.sample_bucket(F.col("doc_id")).cast("int").alias("bucket"),
-    )
-
-
-def sql_stratified_sample():
-    from cheque_ocr_project_spark.operators import sampling as S
-
-    b = S.sample_bucket_sql("doc_id")
-    thr = S.stratified_sample_sql("source", MIX_RATES, MIX_DEFAULT)
-    return f"""
-SELECT doc_id, source, CAST({b} AS INT) AS bucket
-FROM documents WHERE {b} < {thr}"""
-
-
-CORPUS_FILTER_MAX_BUCKET = 64
-
-
-def q_corpus_filter(spark, sf_dir):
-    """Composed pre-training corpus filter: exact-dedup pre-pass (keep the
-    min-id copy of each identical text), then quality >= 0.5 AND lang = 'en'
-    AND not a shadowed near-duplicate (anti-join against the SimHash pair
-    set, computed over the exact-dedup survivors with a bucket-size cap).
-
-    Scale shape: the exact pre-pass is the standard defense against LSH
-    hot buckets — thousands of identical boilerplate docs collapse to one
-    representative BEFORE banding, so they can never form a quadratic
-    bucket; the cap (mirrored bit-exactly by the oracle) bounds whatever
-    near-identical skew remains. One extra hash shuffle + semi-join beyond
-    the LSH pipeline's own."""
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    d = _docs(spark, sf_dir)
-    t = F.col("text")
-    alpha_ratio = C.n_alpha(t) / F.length(t)
-    punct_ratio = F.length(F.regexp_replace(t, r"[^.,;:!?]", "")) / F.length(t)
-    tokens = F.regexp_extract_all(F.lower(t), F.lit(r"[a-z]+"), F.lit(0))
-    stop_hits = F.size(F.filter(tokens, lambda w: w.isin(*_STOPWORDS)))
-    stop_ratio = F.when(F.size(tokens) > 0, stop_hits / F.size(tokens)).otherwise(0.0)
-    quality = 0.4 * alpha_ratio + 0.3 * stop_ratio + 0.3 * (1.0 - punct_ratio)
-    lang_en = stop_ratio >= 0.05
-
-    keepers = DD.exact_dedup(d, "doc_id", "text").select(
-        F.col("keeper_id").alias("doc_id")
-    )
-    survivors = d.join(keepers, "doc_id", "left_semi")
-    pairs = DD.simhash_pairs(survivors, "doc_id", "text", max_hamming=3,
-                             max_bucket=CORPUS_FILTER_MAX_BUCKET)
-    shadowed = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    kept = (
-        survivors.filter((quality >= 0.5) & lang_en)
-        .join(shadowed, "doc_id", "left_anti")
-    )
-    return kept.select("doc_id", F.round(quality, 6).alias("quality"))
-
-
-def _sql_corpus_filter():
-    from cheque_ocr_project_spark.plans import dedup_sql
-
-    norm = D.collapse_ws("upper(text)")
-    survivors_cte = f"""
-docs AS (
-  SELECT doc_id, text FROM (
-    SELECT doc_id, text,
-           min(doc_id) OVER (PARTITION BY md5({norm})) AS keeper
-    FROM documents
-  ) WHERE doc_id = keeper
-)"""
-    pair_sql = dedup_sql.sql_simhash_near_dup(
-        3, max_bucket=CORPUS_FILTER_MAX_BUCKET
-    ).replace(dedup_sql.DOCS_WITH_NEAR_DUPS_CTE, survivors_cte)
-    stop_list = ", ".join(D.q(w) for w in _STOPWORDS)
-    toks = "regexp_extract_all(lower(text), '[a-z]+')"
-    stop_ratio = (
-        f"CASE WHEN len({toks}) > 0 THEN "
-        f"len(list_filter({toks}, w -> w IN ({stop_list}))) * 1.0 / len({toks}) "
-        f"ELSE 0.0 END"
-    )
-    alpha = "length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 / length(text)"
-    punct = "length(regexp_replace(text, '[^.,;:!?]', '', 'g')) * 1.0 / length(text)"
-    quality = f"0.4 * ({alpha}) + 0.3 * ({stop_ratio}) + 0.3 * (1.0 - ({punct}))"
-    return f"""
-WITH pairs AS ({pair_sql}),
-shadowed AS (SELECT DISTINCT id_b AS doc_id FROM pairs),
-survivors AS (
-  SELECT doc_id, text FROM (
-    SELECT doc_id, text,
-           min(doc_id) OVER (PARTITION BY md5({norm})) AS keeper
-    FROM documents
-  ) WHERE doc_id = keeper
-)
-SELECT doc_id, round({quality}, 6) AS quality
-FROM survivors
-WHERE ({quality}) >= 0.5 AND ({stop_ratio}) >= 0.05
-  AND doc_id NOT IN (SELECT doc_id FROM shadowed)"""
-
-
-# Gopher repetition threshold for corpus_filter_v2: drop a doc when its
-# most frequent bigram covers >= 1/5 of all bigram slots (Gopher's
-# published top-2-gram threshold is 0.18; the integer form keeps the
-# cross-engine compare float-free: cnt * 5 < word_count - 1). The
-# synthetic sf corpus has no doc this repetitive inside the composed
-# survivor set (max ratio 0.06 at sf0.01), so the gate's bite is proven by
-# a planted-positive test rather than by tuning the threshold into
-# unrealism (tests/test_driver_contract.py::test_corpus_filter_v2_rep_gate_bites).
-REP_BIGRAM_DEN = 5
-
-# The six structural Gopher gates. ok_stopwords is deliberately NOT in the
-# composed filter: the language/common-word signal already enters through
-# corpus_filter's stop_ratio >= 0.05, and a per-corpus deployment tunes the
-# stopword list to its vocabulary (the synthetic corpus contains none of
-# the eight Gopher English stopwords, so the untuned gate would zero the
-# output rather than filter it).
-GOPHER_STRUCTURAL_GATES = (
-    "ok_word_count", "ok_mean_word_len", "ok_symbol_ratio",
-    "ok_bullet", "ok_ellipsis", "ok_alpha",
-)
-
-
-def q_corpus_filter_v2(spark, sf_dir):
-    """The realistic end-to-end pre-training corpus gate (VERDICT r04 #6):
-    corpus_filter's exact-dedup + quality + lang + capped near-dup
-    anti-join, composed with the structural Gopher gates and the
-    top-bigram repetition rule.
-
-    Scale shape: the three branches each keep their own scan (gopher and
-    repetition are per-row/one-agg pipelines; corpus_filter carries the
-    dedup machinery); the joins land on the high-cardinality doc_id key,
-    and the repetition gate is a LEFT join so bigram-less docs (already
-    excluded by the Gopher word-count floor) cannot silently vanish on a
-    join miss."""
-    base = q_corpus_filter(spark, sf_dir)
-    gates = [F.col(g) for g in GOPHER_STRUCTURAL_GATES]
-    gq = q_gopher_quality(spark, sf_dir).filter(
-        reduce(lambda a, b: a & b, gates)
-    ).select("doc_id", "word_count")
-    rep = q_rep_top_bigram(spark, sf_dir).select(
-        "doc_id", F.col("cnt").alias("top_bigram_cnt")
-    )
-    rep_ok = F.coalesce(
-        F.col("top_bigram_cnt") * REP_BIGRAM_DEN < F.col("word_count") - 1,
-        F.lit(True),
-    )
-    return (
-        base.join(gq, "doc_id")
-        .join(rep, "doc_id", "left")
-        .filter(rep_ok)
-        .select("doc_id", "quality", "word_count", "top_bigram_cnt")
-    )
-
-
-def _sql_corpus_filter_v2():
-    rep_ok = (
-        f"coalesce(rep.cnt * {REP_BIGRAM_DEN} < gq.word_count - 1, TRUE)"
-    )
-    gates = " AND ".join(f"gq.{g}" for g in GOPHER_STRUCTURAL_GATES)
-    return f"""
-SELECT cf.doc_id, cf.quality, gq.word_count, rep.cnt AS top_bigram_cnt
-FROM ({_sql_corpus_filter()}) cf
-JOIN ({sql_gopher_quality()}) gq ON gq.doc_id = cf.doc_id AND {gates}
-LEFT JOIN ({SQL_REP_TOP_BIGRAM}) rep ON rep.doc_id = cf.doc_id
-WHERE {rep_ok}"""
-
-
-def q_corpus_filter_v3(spark, sf_dir):
-    """The STAGED production corpus gate (VERDICT r05 #2, PLANS.md round-5
-    audit): every text-deterministic per-row check — quality, language,
-    the structural Gopher gates, and the top-bigram repetition rule — is
-    evaluated in ONE pass over ONE scan, and only the survivors enter the
-    dedup topology (exact keeper-window, then capped SimHash near-dup
-    shadowing). Semantics deliberately differ from corpus_filter_v2 on
-    shadowed-by-filtered-doc cases: here a doc that fails the cheap gate
-    can no longer shadow a near-duplicate that passes it (v2 computes
-    shadowing over ALL exact-dedup survivors first). Both semantics are
-    legitimate; v3 is what a production deployment runs because the
-    expensive pairwise machinery sees only gate survivors.
-
-    Scale shape: the repetition count is per-row — sort the bigram array
-    and fold the max run length (O(k log k) per doc, no quadratic
-    distinct-scan, no explode/groupBy/join branch), so the whole cheap
-    gate is one whole-stage-codegen pass. Exact dedup is a min-id window
-    over the md5 fingerprint (high-cardinality partition key). Total plan:
-    <= 5 scans (v2's composed form carries 12) — locked by
-    test_corpus_filter_v3_plan_staged."""
-    from pyspark.sql import Window
-
-    from cheque_ocr_project_spark.operators import dedup as DD
-
-    t = F.col("text")
-    # quality + language (identical expressions to corpus_filter)
-    alpha_ratio = C.n_alpha(t) / F.length(t)
-    punct_ratio = F.length(F.regexp_replace(t, r"[^.,;:!?]", "")) / F.length(t)
-    ltokens = F.regexp_extract_all(F.lower(t), F.lit(r"[a-z]+"), F.lit(0))
-    stop_hits = F.size(F.filter(ltokens, lambda w: w.isin(*_STOPWORDS)))
-    stop_ratio = F.when(
-        F.size(ltokens) > 0, stop_hits / F.size(ltokens)
-    ).otherwise(0.0)
-    quality = 0.4 * alpha_ratio + 0.3 * stop_ratio + 0.3 * (1.0 - punct_ratio)
-
-    # structural Gopher gates (identical expressions to q_gopher_quality;
-    # ok_stopwords stays excluded — see GOPHER_STRUCTURAL_GATES note)
-    words = F.split(F.trim(t), r"\s+")
-    wc = F.size(words)
-    sum_wl = F.aggregate(words, F.lit(0), lambda a, w: a + F.length(w))
-    mean_wl = sum_wl.cast("double") / wc
-    n_hash = F.length(t) - F.length(F.replace(t, F.lit("#"), F.lit("")))
-    n_ell = (F.length(t) - F.length(F.replace(t, F.lit("..."), F.lit("")))) / 3
-    lines = F.split(t, "\n")
-    nlines = F.size(lines)
-    gopher_ok = (
-        (wc >= 50) & (wc <= 100000)
-        & (mean_wl >= 3.0) & (mean_wl <= 10.0)
-        & (((n_hash + n_ell) / wc) < 0.1)
-        & ((F.size(F.filter(lines, lambda l: l.rlike(r"^\s*[-*]"))) / nlines)
-           < 0.9)
-        & ((F.size(F.filter(lines, lambda l: l.endswith(F.lit("..."))))
-            / nlines) < 0.3)
-        & ((F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]"))) / wc)
-           > 0.8)
-    )
-
-    # per-row top-bigram count: sorted-run-length fold. Identical value to
-    # q_rep_top_bigram's winner count, without the explode/agg/join branch.
-    bigrams = F.zip_with(
-        F.slice(words, 1, wc - 1), F.slice(words, 2, wc - 1),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    acc0 = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).alias("run"), F.lit(0).alias("best"),
-    )
-
-    def step(acc, g):
-        new_run = F.when(g == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
-        return F.struct(
-            g.alias("prev"), new_run.alias("run"),
-            F.greatest(acc["best"], new_run).alias("best"),
-        )
-
-    top_cnt = F.aggregate(F.array_sort(bigrams), acc0, step,
-                          lambda acc: acc["best"])
-    rep_ok = F.when(
-        wc >= 2, top_cnt * REP_BIGRAM_DEN < wc - 1
-    ).otherwise(True)
-
-    gated = (
-        par(_docs(spark, sf_dir))
-        .filter((quality >= 0.5) & (stop_ratio >= 0.05) & gopher_ok & rep_ok)
-        .select(
-            "doc_id", "text",
-            F.round(quality, 6).alias("quality"),
-            wc.alias("word_count"),
-            top_cnt.cast("long").alias("top_bigram_cnt"),
-        )
-    )
-    w = Window.partitionBy(F.md5(DD.normalize_text(F.col("text"))))
-    survivors = (
-        gated.withColumn("keeper", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") == F.col("keeper"))
-        .drop("keeper")
-    )
-    pairs = DD.simhash_pairs(
-        survivors.select("doc_id", "text"), "doc_id", "text",
-        max_hamming=3, max_bucket=CORPUS_FILTER_MAX_BUCKET,
-    )
-    shadowed = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    return (
-        survivors.join(shadowed, "doc_id", "left_anti")
-        .select("doc_id", "quality", "word_count", "top_bigram_cnt")
-    )
-
-
-def _corpus_v3_survivor_ctes() -> str:
-    """The staged gate as a DuckDB CTE chain ending in ``docs`` — encodes
-    the v3 semantics (gate BEFORE dedup/shadowing) independently of the
-    Spark plan; spliced into the SimHash pair SQL in place of its docs
-    CTE, and reused for the output side."""
-    from cheque_ocr_project_spark.plans import dedup_sql  # noqa: F401
-
-    stop_list = ", ".join(D.q(wd) for wd in _STOPWORDS)
-    toks = "regexp_extract_all(lower(text), '[a-z]+')"
-    stop_ratio = (
-        f"CASE WHEN len({toks}) > 0 THEN "
-        f"len(list_filter({toks}, w -> w IN ({stop_list}))) * 1.0 / len({toks}) "
-        f"ELSE 0.0 END"
-    )
-    alpha = ("length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 "
-             "/ length(text)")
-    punct = ("length(regexp_replace(text, '[^.,;:!?]', '', 'g')) * 1.0 "
-             "/ length(text)")
-    quality = (f"0.4 * ({alpha}) + 0.3 * ({stop_ratio}) "
-               f"+ 0.3 * (1.0 - ({punct}))")
-    norm = D.collapse_ws("upper(text)")
-    return f"""
-perrow AS (
-  SELECT doc_id, text, {quality} AS quality, {stop_ratio} AS stop_ratio,
-         regexp_split_to_array(trim(text), '[ \\t\\n\\x0b\\f\\r]+') AS words,
-         string_split(text, chr(10)) AS lines,
-         length(text) - length(replace(text, '#', '')) AS n_hash,
-         (length(text) - length(replace(text, '...', ''))) / 3 AS n_ell
-  FROM documents
-),
-perrow2 AS (
-  SELECT *, len(words) AS wc, len(lines) AS nlines,
-         CAST(list_sum(list_transform(words, w -> length(w))) AS DOUBLE)
-           / len(words) AS mean_wl
-  FROM perrow
-),
-rep AS (
-  SELECT doc_id, max(cnt) AS top_cnt FROM (
-    SELECT doc_id, gram, count(*) AS cnt FROM (
-      SELECT doc_id,
-             unnest(list_transform(range(1, len(words)),
-                                   i -> words[i] || ' ' || words[i + 1]))
-               AS gram
-      FROM perrow
-    ) GROUP BY doc_id, gram
-  ) GROUP BY doc_id
-),
-gated AS (
-  SELECT p.doc_id, p.text, round(p.quality, 6) AS quality,
-         CAST(p.wc AS INT) AS word_count,
-         CAST(coalesce(r.top_cnt, 0) AS BIGINT) AS top_bigram_cnt
-  FROM perrow2 p LEFT JOIN rep r USING (doc_id)
-  WHERE p.quality >= 0.5 AND p.stop_ratio >= 0.05
-    AND p.wc >= 50 AND p.wc <= 100000
-    AND p.mean_wl >= 3.0 AND p.mean_wl <= 10.0
-    AND CAST(p.n_hash + p.n_ell AS DOUBLE) / p.wc < 0.1
-    AND CAST(len(list_filter(p.lines,
-          l -> regexp_matches(l, '^[ \\t\\n\\x0b\\f\\r]*[-*]')))
-          AS DOUBLE) / p.nlines < 0.9
-    AND CAST(len(list_filter(p.lines, l -> ends_with(l, '...')))
-          AS DOUBLE) / p.nlines < 0.3
-    AND CAST(len(list_filter(p.words, w -> regexp_matches(w, '[A-Za-z]')))
-          AS DOUBLE) / p.wc > 0.8
-    AND coalesce(r.top_cnt * {REP_BIGRAM_DEN} < p.wc - 1, TRUE)
-),
-survivors AS (
-  SELECT doc_id, text, quality, word_count, top_bigram_cnt FROM (
-    SELECT *, min(doc_id) OVER (PARTITION BY md5({norm})) AS keeper
-    FROM gated
-  ) WHERE doc_id = keeper
-),
-docs AS (SELECT doc_id, text FROM survivors)"""
-
-
-def _sql_corpus_filter_v3():
-    from cheque_ocr_project_spark.plans import dedup_sql
-
-    ctes = _corpus_v3_survivor_ctes()
-    pair_sql = dedup_sql.sql_simhash_near_dup(
-        3, max_bucket=CORPUS_FILTER_MAX_BUCKET
-    ).replace("WITH " + dedup_sql.DOCS_WITH_NEAR_DUPS_CTE, "WITH" + ctes)
-    return f"""
-WITH pairs AS ({pair_sql}),
-shadowed AS (SELECT DISTINCT id_b AS doc_id FROM pairs),{ctes}
-SELECT doc_id, quality, word_count, top_bigram_cnt
-FROM survivors
-WHERE doc_id NOT IN (SELECT doc_id FROM shadowed)"""
-
-
-def q_corpus_job_survivors(spark, sf_dir):
-    """The staged corpus_job pipeline under the driver oracle (VERDICT
-    r06 #4 — previously the only entrypoint whose COMPOSITION never
-    reached the driver artifact; graft analog of the reference's
-    full-run outputs, run_production.py:88-129): run all three stages
-    (gate+dedup survivors → pack → split, with _STAGE_DONE markers and
-    summary.txt) against the sf dir into a scratch run directory, then
-    return the survivors relation read back from the REAL parquet
-    artifact stage 2 and 3 consumed. The oracle is _sql_corpus_filter_v3
-    joined back to documents — stage 1 is definitionally that query;
-    pack/split are already oracle-backed individually over any
-    documents-shaped dir.
-
-    Cleanup discipline: each invocation gets its OWN mkdtemp run dir —
-    a fixed shared path would let a concurrent invocation (the bench
-    sweep racing a driver contract check) rmtree the survivors parquet
-    out from under the other's lazily-collected plan. Disk stays
-    bounded by sweeping SIBLING run dirs older than an hour whose
-    creating process is gone (sources.scratch.sweep); nothing is ever
-    removed after building the return value."""
-    from pathlib import Path
-
-    from cheque_ocr_project_spark import corpus_job
-    from cheque_ocr_project_spark.sources import scratch
-
-    scratch.sweep("corpus_job_contract_")
-    out = Path(scratch.mkdtemp("corpus_job_contract_"))
-    corpus_job.run(spark, sf_dir, str(out))
-    return spark.read.parquet(str(out / "survivors" / "documents.parquet"))
-
-
-def _sql_corpus_job_survivors():
-    return f"""
-WITH v3 AS ({_sql_corpus_filter_v3()})
-SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
-FROM documents d JOIN v3 USING (doc_id)"""
-
-
-# ---------------------------------------------------------------------------
-# W2/P11: preprocessing-variant try-all-keep-best
-# (issuer_processor_v2.py:296-330, IssuerBatchProcessorV3.py:374-393)
-# ---------------------------------------------------------------------------
-
-def _variant_conf_col(v):
-    lines = F.filter(F.split(v, "\n"), lambda ln: ln.rlike(r"\S"))
-    line_conf = lambda ln: (  # noqa: E731 — = oracle.issuer.line_confidence
-        F.when(F.length(ln) == 0, F.lit(0.0)).otherwise(
-            0.6 + 0.4 * (C.n_alpha(ln) / F.length(ln))
-        )
-    )
-    s = F.aggregate(lines, F.lit(0.0), lambda acc, ln: acc + line_conf(ln))
-    return F.when(F.size(lines) > 0, s / F.size(lines)).otherwise(0.0)
-
-
-def q_variant_keep_best(spark, sf_dir):
-    """W2 idiom end-to-end: variant struct columns collapsed with
-    when-chain early exit (>= 0.95) + greatest() over structs (max conf,
-    earliest variant on ties via neg_idx). = oracle.variants.keep_best."""
-    from cheque_ocr_project_spark.oracle.variants import EARLY_EXIT, VARIANT_NAMES
-
-    t = F.coalesce(F.col("text"), F.lit(""))
-    variants = [
-        t,
-        F.regexp_replace(t, r"<[^>]*>", ""),
-        F.trim(F.regexp_replace(t, r"\s+", " ")),
-    ]
-    structs = []
-    for i, (name, v) in enumerate(zip(VARIANT_NAMES, variants)):
-        structs.append(
-            F.struct(
-                _variant_conf_col(v).alias("conf"),
-                F.lit(-i).alias("neg_idx"),
-                F.lit(name).alias("name"),
-                v.alias("vtext"),
-            )
-        )
-    chain = None
-    for s in structs:
-        hit = s.getField("conf") >= EARLY_EXIT
-        chain = F.when(hit, s) if chain is None else chain.when(hit, s)
-    chosen = chain.otherwise(F.greatest(*structs))
-
-    lines = F.filter(
-        F.split(F.col("ch.vtext"), "\n"), lambda ln: ln.rlike(r"\S")
-    )
-    u = F.upper(F.array_join(lines, " "))
-    staged = (
-        par(_docs(spark, sf_dir))
-        .select("doc_id", chosen.alias("ch"))
-        .select(
-            "doc_id",
-            F.col("ch.name").alias("best_variant"),
-            F.col("ch.conf").alias("best_conf"),
-            u.alias("u"),
-        )
-        # Exchange barrier: the payee chain below references `u` ~270 times
-        # (10 patterns x rlike/extract/25-term bank gate); without the
-        # barrier CollapseProject would inline the whole variant-confidence
-        # machinery into every reference (measured 97s -> ~3s at sf0.1).
-        .repartition(F.col("doc_id"))
-    )
-    payee = None
-    for p in PAYEE_PATTERNS_SQLSAFE:
-        cand = F.regexp_replace(
-            F.regexp_extract(F.col("u"), p, 1), r"^\s+|\s+$", ""
-        )
-        ok = F.col("u").rlike(p) & ~C.is_bank_or_metadata(cand)
-        payee = F.when(ok, cand) if payee is None else payee.when(ok, cand)
-    payee = payee.otherwise(F.lit(None).cast("string"))
-
-    return staged.select(
-        "doc_id", "best_variant", "best_conf", payee.alias("payee_raw")
-    )
-
-
-def sql_variant_keep_best():
-    from cheque_ocr_project_spark.plans import flagship_sql as FS
-
-    def vconf(v):
-        lines = (
-            f"list_filter(string_split({v}, chr(10)), "
-            f"ln -> regexp_matches(ln, '[^ \\t\\n\\x0b\\f\\r]'))"
-        )
-        fold = (
-            f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_transform({lines}, ln -> {FS.line_conf('ln')})), "
-            f"(a, b) -> a + b)"
-        )
-        return (
-            f"CASE WHEN len({lines}) > 0 THEN {fold} / len({lines}) "
-            f"ELSE 0.0 END"
-        )
-
-    return f"""
-WITH v AS (
-  SELECT doc_id, coalesce(text, '') AS t,
-         regexp_replace(coalesce(text, ''), '<[^>]*>', '', 'g') AS dom,
-         trim(regexp_replace(coalesce(text, ''), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')) AS ws
-  FROM documents
-),
-conf AS (
-  SELECT doc_id, t, dom, ws,
-         {vconf('t')} AS c0, {vconf('dom')} AS c1, {vconf('ws')} AS c2
-  FROM v
-),
-pick AS (
-  SELECT *, CASE WHEN c0 >= 0.95 THEN 0 WHEN c1 >= 0.95 THEN 1
-                 WHEN c2 >= 0.95 THEN 2
-                 WHEN c0 >= c1 AND c0 >= c2 THEN 0
-                 WHEN c1 >= c2 THEN 1 ELSE 2 END AS bi
-  FROM conf
-),
-sel AS (
-  SELECT doc_id,
-         CASE bi WHEN 0 THEN 'plain' WHEN 1 THEN 'dom_stripped'
-                 ELSE 'ws_norm' END AS best_variant,
-         CASE bi WHEN 0 THEN c0 WHEN 1 THEN c1 ELSE c2 END AS best_conf,
-         CASE bi WHEN 0 THEN t WHEN 1 THEN dom ELSE ws END AS vtext
-  FROM pick
-),
-ft AS (
-  SELECT doc_id, best_variant, best_conf,
-         upper(array_to_string(list_filter(string_split(vtext, chr(10)),
-               ln -> regexp_matches(ln, '[^ \\t\\n\\x0b\\f\\r]')), ' ')) AS u
-  FROM sel
-)
-SELECT doc_id, best_variant, best_conf, {FS.payee_raw('u')} AS payee_raw
-FROM ft"""
-
-
-# ---------------------------------------------------------------------------
-# model phase (U2-U5 plumbing + K3 ensemble) — the registered queries
-# exercise the deterministic fallbacks (this container has no transformers);
-# the `backend` column makes a real-model environment visibly diverge.
-# ---------------------------------------------------------------------------
-
-def q_zero_shot_classify(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import models as M
-
-    return M.zero_shot_classify(spark, documents_as_transcripts(spark, sf_dir))
-
-
-def _sql_zero_shot_classify():
-    from cheque_ocr_project_spark.plans import models_sql
-
-    return models_sql.sql_zero_shot_classify()
-
-
-def q_ner_entities(spark, sf_dir):
-    """U2 NER surface (deterministic fallback in this container), exploded
-    to one row per entity so the oracle can hash scalar columns."""
-    from cheque_ocr_project_spark.operators import models as M
-
-    out = M.ner_entities(spark, documents_as_transcripts(spark, sf_dir))
-    return out.select(
-        "conv_id", "turn_idx",
-        F.posexplode("entities").alias("ent_idx", "e"),
-        "backend",
-    ).select(
-        "conv_id", "turn_idx", F.col("ent_idx").cast("int").alias("ent_idx"),
-        F.col("e.entity").alias("entity"), F.col("e.label").alias("label"),
-        F.col("e.score").alias("score"), "backend",
-    )
-
-
-def _sql_ner_entities():
-    from cheque_ocr_project_spark.plans import models_sql
-
-    return models_sql.sql_ner_entities()
-
-
-def q_qa_extract(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import models as M
-
-    return M.qa_extract(spark, documents_as_transcripts(spark, sf_dir))
-
-
-def _sql_qa_extract():
-    from cheque_ocr_project_spark.plans import models_sql
-
-    return models_sql.sql_qa_extract()
-
-
-def q_t5_spell(spark, sf_dir):
-    from cheque_ocr_project_spark.operators import models as M
-
-    out = M.t5_spell_correct(spark, documents_as_transcripts(spark, sf_dir))
-    # UPPER form: DuckDB lacks initcap, and upper∘title is the identity on
-    # the [A-Z ] output charset (same convention as spelling_correct)
-    return out.select(
-        "conv_id", "turn_idx", F.upper("corrected").alias("corrected"),
-        "spell_conf", "backend",
-    )
-
-
-def _sql_t5_spell():
-    from cheque_ocr_project_spark.plans import models_sql
-
-    return models_sql.sql_t5_spell()
-
-
-def q_model_ensemble(spark, sf_dir):
-    """K3 ensemble confidence wired end-to-end: deterministic per-turn
-    component signals combined with the reference's weights
-    (ai_processor.py:75-80) via models.ensemble_confidence."""
-    from cheque_ocr_project_spark.operators import models as M
-    from cheque_ocr_project_spark.plans import models_sql
-
-    d = documents_as_transcripts(spark, sf_dir)
-    lines = F.filter(F.split(F.col("text"), "\n"), lambda ln: ln.rlike(r"\S"))
-    line_conf = lambda ln: (  # noqa: E731 — = oracle.issuer.line_confidence
-        F.when(F.length(ln) == 0, F.lit(0.0)).otherwise(
-            0.6 + 0.4 * (C.n_alpha(ln) / F.length(ln))
-        )
-    )
-    conf_sum = F.aggregate(lines, F.lit(0.0), lambda acc, ln: acc + line_conf(ln))
-    ocr = F.when(F.size(lines) > 0, conf_sum / F.size(lines)).otherwise(0.0)
-    u512 = F.upper(F.substring(F.col("text"), 1, 512))
-    caps = F.size(
-        F.regexp_extract_all(u512, F.lit(models_sql.CAP_SPAN_RX), F.lit(1))
-    )
-    ner = F.least(F.lit(1.0), caps / F.lit(10.0))
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"[a-z]+"), F.lit(0))
-    stop_hits = F.size(F.filter(toks, lambda w: w.isin(*_STOPWORDS)))
-    context = F.when(F.size(toks) > 0, stop_hits / F.size(toks)).otherwise(0.0)
-    spelling = F.lit(1.0) - C.n_digit(F.col("text")) / F.length(F.col("text"))
-    # r08: stage the four component signals once, then combine from
-    # attribute refs — the inline form re-evaluated every heavy HOF
-    # component a second time inside the ensemble expression (same
-    # doubles either way); par parallelizes the single-file scan.
-    staged = par(d).select(
-        "conv_id", "turn_idx",
-        ocr.alias("ocr_conf"), ner.alias("ner_conf"),
-        context.alias("context_conf"), spelling.alias("spelling_conf"),
-    )
-    return staged.select(
-        "conv_id", "turn_idx",
-        "ocr_conf", "ner_conf", "context_conf", "spelling_conf",
-        M.ensemble_confidence(
-            F.col("ocr_conf"), F.col("ner_conf"),
-            F.col("context_conf"), F.col("spelling_conf"),
-        ).alias("ensemble"),
-    )
-
-
-def _sql_model_ensemble():
-    from cheque_ocr_project_spark.plans import models_sql
-
-    return models_sql.sql_model_ensemble()
-
-
-# ---------------------------------------------------------------------------
-# registry
-# ---------------------------------------------------------------------------
-
-REGISTRY: dict[str, tuple] = {
-    "clean_text": (q_clean_text, sql_clean_text),
-    "junk_flag": (q_junk_flag, sql_junk_flag),
-    "classify": (q_classify, sql_classify),
-    "payee_extract": (q_payee_extract, sql_payee_extract),
-    "payee_clean": (q_payee_clean, sql_payee_clean),
-    "spelling_correct": (q_spelling_correct, sql_spelling_correct),
-    "field_grammars": (q_field_grammars, sql_field_grammars),
-    "token_stats": (q_token_stats, sql_token_stats),
-    "quality_score": (q_quality_score, sql_quality_score),
-    "lang_id": (q_lang_id, sql_lang_id),
-    "fingerprint": (q_fingerprint, sql_fingerprint),
-    "dedup_exact": (q_dedup_exact, sql_dedup_exact),
-    "top1_event_per_user": (q_top1_event_per_user, sql_top1_event_per_user),
-    "event_status_gate": (q_event_status_gate, sql_event_status_gate),
-    "event_stats": (q_event_stats, sql_event_stats),
-    "json_props": (q_json_props, sql_json_props),
-    "union_dedup": (q_union_dedup, sql_union_dedup),
-    "last_tokens": (q_last_tokens, sql_last_tokens),
-    "lev_match": (q_lev_match, sql_lev_match),
-    "ann_topk": (q_ann_topk, sql_ann_topk),
-    "minhash_near_dup": (q_minhash_near_dup, _sql_minhash_near_dup),
-    "minhash_near_dup_capped": (
-        q_minhash_near_dup_capped, _sql_minhash_near_dup_capped
-    ),
-    "simhash_near_dup": (q_simhash_near_dup, _sql_simhash_near_dup),
-    "minhash_incremental": (q_minhash_incremental, _sql_minhash_incremental),
-    "simhash_incremental": (q_simhash_incremental, _sql_simhash_incremental),
-    "minhash_compacted": (q_minhash_compacted, _sql_minhash_incremental),
-    "minhash_novelty": (q_minhash_novelty, _sql_minhash_novelty),
-    "streaming_novelty": (q_streaming_novelty, _sql_minhash_novelty),
-    "near_dup_clusters": (q_near_dup_clusters, _sql_near_dup_clusters),
-    "dedup_survivors": (q_dedup_survivors, _sql_dedup_survivors),
-    "winnow_fingerprint": (q_winnow_fingerprint, _sql_winnow_fingerprint),
-    "winnow_substring_pairs": (
-        q_winnow_substring_pairs, _sql_winnow_substring_pairs
-    ),
-    "train_val_split": (q_train_val_split, sql_train_val_split),
-    "stratified_sample": (q_stratified_sample, sql_stratified_sample),
-    "gopher_quality": (q_gopher_quality, sql_gopher_quality),
-    "rep_top_bigram": (q_rep_top_bigram, SQL_REP_TOP_BIGRAM),
-    "rep_dup_lines": (q_rep_dup_lines, SQL_REP_DUP_LINES),
-    "pii_redact": (q_pii_redact, sql_pii_redact),
-    "tfidf_topk": (q_tfidf_topk, sql_tfidf_topk),
-    "boilerplate_ngrams": (q_boilerplate_ngrams, sql_boilerplate_ngrams),
-    "doclen_quantiles": (q_doclen_quantiles, sql_doclen_quantiles),
-    "doc_chunks": (q_doc_chunks, sql_doc_chunks),
-    "vocab_topk": (q_vocab_topk, sql_vocab_topk),
-    "oov_rate": (q_oov_rate, sql_oov_rate),
-    "token_freq_buckets": (q_token_freq_buckets, sql_token_freq_buckets),
-    "source_token_budget": (q_source_token_budget, sql_source_token_budget),
-    "asof_join": (q_asof_join, SQL_ASOF_JOIN),
-    "range_join_binned": (q_range_join_binned, SQL_RANGE_JOIN),
-    "asof_join_chunked": (q_asof_join_chunked, SQL_ASOF_JOIN),
-    "sessionize": (q_sessionize, SQL_SESSIONIZE),
-    "sessionize_chunked": (q_sessionize_chunked, SQL_SESSIONIZE),
-    "sessionize_streaming": (q_sessionize_streaming, SQL_SESSIONIZE),
-    "conversation_progress": (
-        q_conversation_progress, SQL_CONVERSATION_PROGRESS
-    ),
-    "funnel": (q_funnel, SQL_FUNNEL),
-    "event_rollup": (q_event_rollup, SQL_EVENT_ROLLUP),
-    "decontaminate": (q_decontaminate, sql_decontaminate),
-    "pack_sequences": (q_pack_sequences, sql_pack_sequences),
-    "corpus_filter": (q_corpus_filter, _sql_corpus_filter),
-    "corpus_filter_v2": (q_corpus_filter_v2, _sql_corpus_filter_v2),
-    "corpus_filter_v3": (q_corpus_filter_v3, _sql_corpus_filter_v3),
-    "ngram_jaccard_pairs": (q_ngram_jaccard_pairs, sql_ngram_jaccard_pairs),
-    "containment_pairs": (q_containment_pairs, _sql_containment_pairs),
-    "embedding_near_dup": (q_embedding_near_dup, sql_embedding_near_dup),
-    "embedding_lsh_near_dup": (q_embedding_lsh_near_dup, _sql_embedding_lsh_near_dup),
-    "embedding_lsh_near_dup_capped": (
-        q_embedding_lsh_near_dup_capped, _sql_embedding_lsh_near_dup_capped
-    ),
-    "ann_lsh_topk": (q_ann_lsh_topk, _sql_ann_lsh_topk),
-    "ann_lsh_topk_capped": (q_ann_lsh_topk_capped, _sql_ann_lsh_topk_capped),
-    "ann_lsh_topk_multiprobe": (
-        q_ann_lsh_topk_multiprobe, _sql_ann_lsh_topk_multiprobe
-    ),
-    "ann_ivf_topk": (q_ann_ivf_topk, _sql_ann_ivf_topk),
-    "kmeans_refine": (q_kmeans_refine, _sql_kmeans_refine),
-    "semantic_dedup": (q_semantic_dedup, _sql_semantic_dedup),
-    "embedding_quantize": (q_embedding_quantize, sql_embedding_quantize),
-    "ann_quantized_topk": (q_ann_quantized_topk, sql_ann_quantized_topk),
-    "ann_ivf_quantized_topk": (
-        q_ann_ivf_quantized_topk, sql_ann_ivf_quantized_topk
-    ),
-    "corpus_job_survivors": (q_corpus_job_survivors, _sql_corpus_job_survivors),
-    "loop_flagged_convs": (q_loop_flagged_convs, sql_loop_flagged_convs),
-    "remove_boilerplate": (q_remove_boilerplate, sql_remove_boilerplate),
-    "collocations_topk": (q_collocations_topk, sql_collocations_topk),
-    "turn_repetition": (q_turn_repetition, SQL_TURN_REPETITION),
-    "media_image_features": (q_media_image_features, _sql_media_image_features),
-    "media_audio_features": (q_media_audio_features, _sql_media_audio_features),
-    "media_frame_sample": (q_media_frame_sample, _sql_media_frame_sample),
-    "media_resize": (q_media_resize, sql_media_resize),
-    "flagship_extract": (q_flagship_extract, None),
-    "flagship_nofuzzy": (q_flagship_nofuzzy, _sql_flagship_nofuzzy),
-    "streaming_extract_nofuzzy": (
-        q_streaming_extract_nofuzzy, _sql_flagship_nofuzzy
-    ),
-    "flagship_extract_v3": (q_flagship_extract_v3, None),
-    "flagship_v3_nofuzzy": (q_flagship_v3_nofuzzy, _sql_flagship_v3_nofuzzy),
-    "variant_keep_best": (q_variant_keep_best, sql_variant_keep_best),
-    "zero_shot_classify": (q_zero_shot_classify, _sql_zero_shot_classify),
-    "ner_entities": (q_ner_entities, _sql_ner_entities),
-    "qa_extract": (q_qa_extract, _sql_qa_extract),
-    "t5_spell": (q_t5_spell, _sql_t5_spell),
-    "model_ensemble": (q_model_ensemble, _sql_model_ensemble),
-}
+FAMILIES = (grammar, text_stats, events, near_dup, ann, corpus, flagship)
 
 
 # Registry order = sampling order: the external contract check samples a
@@ -4912,23 +59,46 @@ _CHECK_FIRST = (
 )
 
 
-def _merged_registry() -> dict:
-    from cheque_ocr_project_spark.plans.queries_v3 import REGISTRY_V3
+# The rows _CHECK_FIRST does not name, in the order the single-module
+# registry listed them: sampling order is part of the contract, so the
+# tail is spelled out rather than derived from the family layout.
+_CHECK_LAST = (
+    "event_status_gate", "event_stats", "json_props", "union_dedup",
+    "last_tokens", "lev_match", "minhash_near_dup",
+    "minhash_near_dup_capped", "simhash_near_dup", "minhash_incremental",
+    "simhash_incremental", "minhash_compacted", "winnow_fingerprint",
+    "train_val_split", "stratified_sample", "gopher_quality",
+    "rep_top_bigram", "boilerplate_ngrams", "oov_rate", "asof_join",
+    "range_join_binned", "sessionize", "sessionize_streaming",
+    "conversation_progress", "event_rollup", "decontaminate",
+    "pack_sequences", "corpus_filter_v3", "embedding_quantize",
+    "ann_quantized_topk", "loop_flagged_convs", "remove_boilerplate",
+    "turn_repetition", "media_audio_features", "flagship_extract",
+    "flagship_nofuzzy", "streaming_extract_nofuzzy", "flagship_extract_v3",
+    "flagship_v3_nofuzzy", "model_ensemble", "clean_text_v3", "junk_v3",
+    "remove_prefixes", "issuer_for_grammar", "issuer_auth_account_grammar",
+    "issuer_simple",
+)
 
-    merged = dict(REGISTRY)
-    merged.update(REGISTRY_V3)
-    ordered = {k: merged[k] for k in _CHECK_FIRST if k in merged}
-    ordered.update({k: v for k, v in merged.items() if k not in ordered})
-    return ordered
+
+def registry() -> dict[str, tuple]:
+    """Every family's rows in sampling order: _CHECK_FIRST, then
+    _CHECK_LAST, then any row neither names, in family order."""
+    merged: dict[str, tuple] = {}
+    for family in FAMILIES:
+        merged.update(family.REGISTRY)
+    order = [k for k in _CHECK_FIRST + _CHECK_LAST if k in merged]
+    order += [k for k in merged if k not in order]
+    return {k: merged[k] for k in order}
 
 
 def queries():
-    return {name: fn for name, (fn, _sql) in _merged_registry().items()}
+    return {name: fn for name, (fn, _sql) in registry().items()}
 
 
 def oracle_sql():
     out = {}
-    for name, (_fn, sql) in _merged_registry().items():
+    for name, (_fn, sql) in registry().items():
         if sql is not None:
             out[name] = sql() if callable(sql) else sql
     return out

@@ -12,6 +12,11 @@ or a path. Sinks:
   semantics as join + column coalesce + full overwrite.
 - ``stem_key``           — the reference's filename-stem join key
   (issuer_processor_v.py:552-560: lower-cased Path(...).stem)
+
+The registry queries read the test tables of a scale-factor directory
+(``read_documents`` / ``read_events`` / ``read_embeddings``), and the
+flagship rows see the documents table as transcripts
+(``documents_as_transcripts``).
 """
 
 from __future__ import annotations
@@ -64,6 +69,59 @@ def read_transcripts(spark: SparkSession, source: str) -> DataFrame:
         # warehouses land through this branch unchanged
         return _check_transcript_schema(spark.read.orc(source), source)
     return _check_transcript_schema(spark.read.parquet(source), source)
+
+
+def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/events.parquet")
+
+
+def read_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+
+def documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic mapping of the documents table into the transcripts
+    shape (conv_id, turn_idx, role, text, tool, ts)."""
+    d = read_documents(spark, sf_dir)
+    role = (
+        F.when(F.col("doc_id") % 3 == 0, "user")
+        .when(F.col("doc_id") % 3 == 1, "assistant")
+        .otherwise("tool")
+    )
+    tool = F.when(
+        F.col("doc_id") % 3 == 2,
+        F.when(F.col("doc_id") % 2 == 0, "web_fetch").otherwise("pdf_extract"),
+    )
+    return d.select(
+        # turn_idx is int32 by the transcripts contract, so a 64-bit
+        # doc_id cannot be cast directly (CAST_OVERFLOW above 2^31-1) nor
+        # reduced mod 2^31 alone (colliding (conv_id, turn_idx) keys fan
+        # out in the per-key SQL-twin joins). The injective split — high
+        # bits into conv_id, low 31 bits into turn_idx — maps EVERY int64
+        # id to a unique key. The SQL twins in plans/flagship.py and
+        # plans/events.py mirror the same expressions.
+        # F.concat (not concat_ws) so a NULL source yields NULL conv_id,
+        # matching the SQL twins' null-propagating || operator.
+        # Injectivity assumption: no ``source`` value ends in '-<digits>'
+        # (else 'a-1' high 0 and 'a' high 10 would both render 'a-1-0');
+        # the testdata sources ('src0'..'srcN') satisfy it, and both
+        # engines compute the identical string so oracle parity holds
+        # regardless — only the per-(conv_id, turn_idx) uniqueness argument
+        # relies on it.
+        F.concat(
+            F.col("source"), F.lit("-"),
+            F.expr("CAST(doc_id div 2147483648 AS STRING)"),
+        ).alias("conv_id"),
+        F.pmod(F.col("doc_id"), F.lit(1 << 31)).cast("int").alias("turn_idx"),
+        role.alias("role"),
+        F.col("text"),
+        tool.alias("tool"),
+        F.to_timestamp(F.lit("2026-01-01 00:00:00")).alias("ts"),
+    )
 
 
 def write_results(df: DataFrame, path: str, mode: str = "append") -> None:

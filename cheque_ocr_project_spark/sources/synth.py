@@ -17,6 +17,8 @@ from datetime import datetime, timedelta
 
 import pandas as pd
 
+from cheque_ocr_project_spark.oracle import fuzzy
+
 _NAMES = [
     "RAJESH KUMAR", "SHARMA STEEL INDUSTRIES", "ANIL VERMA", "GUPTA TRADERS",
     "PATEL BROTHERS", "MEHTA ELECTRONICS", "JOSHI MEDICAL STORES",
@@ -223,3 +225,9 @@ def generate_master(seed: int = 7, n_extra: int = 120) -> pd.DataFrame:
             name = rng.choice(_JUNK_LINES)
         rows.append((f"IMG_{len(_NAMES) + i:05d}.tif", name))
     return pd.DataFrame(rows, columns=["image_file", "drawer_nm"])
+
+
+def default_drawer_dict() -> list[str]:
+    """The fuzzy drawer dictionary built from ``generate_master``'s names —
+    the dictionary the flagship registry rows and jobs use by default."""
+    return fuzzy.build_drawer_dict(generate_master(seed=7).drawer_nm.tolist())

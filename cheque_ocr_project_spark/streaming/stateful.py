@@ -100,14 +100,11 @@ def conversation_progress(stream: DataFrame, idle_timeout_ms: int = 30_000):
 # tie-break the batch operator and its DuckDB oracle use.
 # ---------------------------------------------------------------------------
 
-def _session_gap_us() -> int:
-    """The ONE gap constant, shared with the batch operators and their
-    DuckDB oracle (plans/queries.SESSION_GAP_US) — a drifted copy here
-    would silently decouple streaming numbering from the oracle-backed
-    batch numbering. Imported lazily to keep this module light."""
-    from cheque_ocr_project_spark.plans.queries import SESSION_GAP_US
-
-    return SESSION_GAP_US
+# 30-minute inactivity gap: the ONE gap constant, read by the batch
+# sessionize operators and their DuckDB oracle (plans/events.py) — a
+# drifted copy would silently decouple streaming numbering from the
+# oracle-backed batch numbering.
+SESSION_GAP_US = 30 * 60 * 1_000_000
 
 
 SESSION_OUTPUT_SCHEMA = T.StructType([
@@ -161,7 +158,7 @@ def _make_session_update(gap_us: int, idle_timeout_ms: int):
     return _update
 
 
-def streaming_sessionize(stream: DataFrame, gap_us: int | None = None,
+def streaming_sessionize(stream: DataFrame, gap_us: int = SESSION_GAP_US,
                          idle_timeout_ms: int = 600_000) -> DataFrame:
     """event stream → per-event session assignment (append mode).
     Bit-equal to the batch q_sessionize on in-order input — proven in
@@ -181,8 +178,6 @@ def streaming_sessionize(stream: DataFrame, gap_us: int | None = None,
             "pandas through spark.sql.session.timeZone and would diverge "
             "from the batch/oracle numbering on non-UTC or DST zones"
         )
-    if gap_us is None:
-        gap_us = _session_gap_us()
     return (
         stream.select("event_id", "user_id", "ts")
         .groupBy("user_id")

@@ -82,7 +82,7 @@ def test_corpus_filter_v2_rep_gate_bites(spark, tmp_path):
     never reaches the Gopher-realistic 1/5 top-bigram threshold inside the
     composed survivor set, so this proves the gate drops a doc that passes
     every OTHER gate — on Spark and on the DuckDB twin alike."""
-    from cheque_ocr_project_spark.plans import queries as Q
+    from cheque_ocr_project_spark.plans import corpus
 
     base_words = (
         "market price steel copper trade demand supply rose under heavy "
@@ -104,17 +104,17 @@ def test_corpus_filter_v2_rep_gate_bites(spark, tmp_path):
     d.mkdir()
     docs.to_parquet(d / "documents.parquet", index=False)
 
-    out = Q.q_corpus_filter_v2(spark, str(d)).toPandas()
+    out = corpus.q_corpus_filter_v2(spark, str(d)).toPandas()
     kept = set(out["doc_id"])
     assert 1 in kept, "clean doc should survive the composed gate"
     assert 2 not in kept, "repetitive doc must be dropped by the rep gate"
     # ...and only the rep gate: it survives the v1 filter + structural set
-    v1 = set(Q.q_corpus_filter(spark, str(d)).toPandas()["doc_id"])
+    v1 = set(corpus.q_corpus_filter(spark, str(d)).toPandas()["doc_id"])
     assert 2 in v1
 
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'")
-    oracle = con.execute(Q._sql_corpus_filter_v2()).df()
+    oracle = con.execute(corpus.sql_corpus_filter_v2()).df()
     assert set(oracle["doc_id"]) == kept
 
 
@@ -127,7 +127,7 @@ def test_corpus_filter_v3_staged_semantics_and_plan(spark, tmp_path):
     so doc 2 is shadowed and BOTH vanish; v3 gates first, so doc 2
     survives — on Spark and on the v3 DuckDB oracle alike. (b) Plan:
     the staged shape reads at most 5 scans (the composed v2 carries 12)."""
-    from cheque_ocr_project_spark.plans import queries as Q
+    from cheque_ocr_project_spark.plans import corpus
 
     base = (
         "the market rate and steel price rose over a long term of trade "
@@ -148,20 +148,20 @@ def test_corpus_filter_v3_staged_semantics_and_plan(spark, tmp_path):
     d.mkdir()
     docs.to_parquet(d / "documents.parquet", index=False)
 
-    v3 = Q.q_corpus_filter_v3(spark, str(d)).toPandas()
+    v3 = corpus.q_corpus_filter_v3(spark, str(d)).toPandas()
     assert set(v3["doc_id"]) == {2}, v3
     # v2 = {} doubles as proof the planted pair IS a near-dup: doc 2 can
     # only be absent from v2 via shadowing (it passes every v2 gate)
-    v2 = Q.q_corpus_filter_v2(spark, str(d)).toPandas()
+    v2 = corpus.q_corpus_filter_v2(spark, str(d)).toPandas()
     assert set(v2["doc_id"]) == set(), v2
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'"
     )
-    oracle = con.execute(Q._sql_corpus_filter_v3()).df()
+    oracle = con.execute(corpus.sql_corpus_filter_v3()).df()
     assert set(oracle["doc_id"]) == {2}
 
-    plan = Q.q_corpus_filter_v3(
+    plan = corpus.q_corpus_filter_v3(
         spark, SF_DIR
     )._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan") <= 5, plan

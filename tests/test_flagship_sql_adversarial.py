@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 
 from cheque_ocr_project_spark.oracle import turn as oracle_turn
-from cheque_ocr_project_spark.plans import flagship_sql
+from cheque_ocr_project_spark.plans import flagship
 from cheque_ocr_project_spark.sources import synth
 
 
@@ -61,7 +61,7 @@ def _compare(ddf: pd.DataFrame, odf: pd.DataFrame, drop=()):
 
 def test_flagship_nofuzzy_sql_adversarial(corpus):
     con, docs = corpus
-    ddf = con.execute(flagship_sql.sql_flagship_nofuzzy()).df()
+    ddf = con.execute(flagship.sql_flagship_nofuzzy()).df()
     odf = _oracle_frame(docs, oracle_turn.extract_turn, 0.90).drop(
         columns=["main_text"]
     )
@@ -76,7 +76,7 @@ def test_flagship_nofuzzy_sql_adversarial(corpus):
 
 def test_flagship_v3_nofuzzy_sql_adversarial(corpus):
     con, docs = corpus
-    ddf = con.execute(flagship_sql.sql_flagship_v3_nofuzzy()).df()
+    ddf = con.execute(flagship.sql_flagship_v3_nofuzzy()).df()
     odf = _oracle_frame(docs, oracle_turn.extract_turn_v3, 0.85)
     assert (ddf.issuer_v3 != "NO_VALID_TEXT").sum() > 20
     assert ddf.status_v3.nunique() >= 3

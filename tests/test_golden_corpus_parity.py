@@ -87,7 +87,7 @@ def test_predicates_on_corpus(corpus_sdf):
 
 
 def test_payee_grammar_on_corpus(corpus_sdf):
-    from cheque_ocr_project_spark.plans.pipeline import _payee_raw_col
+    from cheque_ocr_project_spark.plans.grammar import _payee_raw_col
 
     _check(
         _spark_vals(

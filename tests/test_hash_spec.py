@@ -44,7 +44,7 @@ def test_batch_shingles_equal_scalar(strs, k):
     max_size=40,
 ))
 def test_poly_sql_matches_python(s):
-    from cheque_ocr_project_spark.plans.dedup_sql import poly_sql
+    from cheque_ocr_project_spark.plans.near_dup import poly_sql
 
     lit = "'" + s.replace("'", "''") + "'"
     con = duckdb.connect()

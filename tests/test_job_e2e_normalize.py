@@ -56,7 +56,7 @@ def _run_job(spark, monkeypatch, in_dir, out_dir, extra=()):
 
 
 def _expected(pdf):
-    from cheque_ocr_project_spark.plans.queries import default_drawer_dict
+    from cheque_ocr_project_spark.sources.synth import default_drawer_dict
 
     return oracle_frame(pdf, default_drawer_dict())
 

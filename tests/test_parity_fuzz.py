@@ -106,7 +106,7 @@ def test_junk_garbage_parity(fuzz_sdf):
 
 
 def test_payee_extract_parity(fuzz_sdf):
-    from cheque_ocr_project_spark.plans.pipeline import _payee_raw_col
+    from cheque_ocr_project_spark.plans.grammar import _payee_raw_col
 
     got = _spark_col(fuzz_sdf, _payee_raw_col(F.upper(F.coalesce(F.col("s"), F.lit("")))))
     exp = [grammars.extract_payee(s) for s in CASES]
@@ -162,7 +162,7 @@ def test_classify_parity(fuzz_sdf):
     oracle.turn.extract_turn on the fuzz corpus, the unicode edges and the
     tool payloads, with the default dictionary so the fuzzy top-1 runs."""
     from cheque_ocr_project_spark.plans import pipeline as P
-    from cheque_ocr_project_spark.plans.queries import default_drawer_dict
+    from cheque_ocr_project_spark.sources.synth import default_drawer_dict
 
     rows = [("user", s, None) for s in CASES + UNICODE_CASES]
     rows += [("tool", text, tool) for tool, text in TOOL_CASES]

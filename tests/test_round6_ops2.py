@@ -17,6 +17,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from cheque_ocr_project_spark.plans import ann, events, near_dup, text_stats
 from cheque_ocr_project_spark.plans import queries as Q
 
 
@@ -47,7 +48,7 @@ def test_turn_repetition_identical_turn_pins_ppm(spark, tmp_path):
     ])
     out = {
         r["turn_idx"]: r
-        for r in Q.q_turn_repetition(spark, sf).collect()
+        for r in events.q_turn_repetition(spark, sf).collect()
     }
     assert set(out) == {1, 2, 3}  # turn 0 has no predecessor
     assert (out[1]["inter_toks"], out[1]["union_toks"],
@@ -79,7 +80,7 @@ def test_turn_repetition_chunked_matches_naive_across_gaps(spark, chunk_sz):
         "turn_idx", F.col("turn_idx").cast("int")
     )
     got = (
-        Q.turn_repetition_chunked(sdf, chunk_sz=chunk_sz)
+        events.turn_repetition_chunked(sdf, chunk_sz=chunk_sz)
         .toPandas()
         .sort_values(["conv_id", "turn_idx"])
         .reset_index(drop=True)
@@ -128,7 +129,7 @@ def test_turn_repetition_whale_conversation_plan(spark, tmp_path):
 
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        df = Q.q_turn_repetition(spark, sf)
+        df = events.q_turn_repetition(spark, sf)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("FileScan") == 1 and "ReusedExchange" in plan
         # every window over the full input partitions by (conv, chunk);
@@ -164,7 +165,7 @@ def test_remove_boilerplate_drops_shared_tile_keeps_unique(spark, tmp_path):
         (2, "iii jjj kkk lll", "s"),
     ])
     out = {r["doc_id"]: r for r in
-           Q.q_remove_boilerplate(spark, sf).collect()}
+           text_stats.q_remove_boilerplate(spark, sf).collect()}
     assert out[0]["n_spans"] == 2 and out[0]["kept_spans"] == 1
     assert out[0]["text_clean"] == "aaa bbb ccc ddd"
     assert out[1]["text_clean"] == "eee fff ggg hhh"
@@ -183,7 +184,7 @@ def test_remove_boilerplate_intra_doc_repeat_not_boilerplate(spark, tmp_path):
         (1, "mm nn oo pp", "s"),
     ])
     out = {r["doc_id"]: r for r in
-           Q.q_remove_boilerplate(spark, sf).collect()}
+           text_stats.q_remove_boilerplate(spark, sf).collect()}
     assert out[0]["kept_spans"] == 2
     assert out[0]["text_clean"] == tile + " " + tile
 
@@ -215,7 +216,7 @@ def test_collocations_planted_pair_ranks_first(spark, tmp_path):
         (1, "zyx qwv " + filler, "s"),
         (2, filler + " zyx qwv " + filler, "s"),
     ])
-    rows = Q.q_collocations_topk(spark, sf).collect()
+    rows = text_stats.q_collocations_topk(spark, sf).collect()
     assert rows[0]["bigram"] == "zyx qwv"
     assert rows[0]["pair_cnt"] == 3
     lifts = [r["lift_ppm"] for r in rows]
@@ -226,7 +227,7 @@ def test_collocations_plan_is_top_k_not_global_sort(spark):
     df = Q.queries()["collocations_topk"](spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan, plan
-    assert len(df.collect()) <= Q.COLLOC_K
+    assert len(df.collect()) <= text_stats.COLLOC_K
 
 
 # ---------------------------------------------------------------------------
@@ -251,7 +252,7 @@ def test_embedding_quantize_extremes_and_constant_dim(spark, tmp_path):
     vecs = [[0.5, 0.0], [0.5, 1.0], [0.5, 0.3]]
     sf = _write_emb(tmp_path, vecs)
     out = {r["vec_id"]: r for r in
-           Q.q_embedding_quantize(spark, sf).collect()}
+           ann.q_embedding_quantize(spark, sf).collect()}
     assert out[0]["q_err_l1_micros"] == 0          # both dims exact
     assert out[1]["q_err_l1_micros"] == 0          # max endpoint exact
 
@@ -341,7 +342,7 @@ def test_ann_quantized_planted_nearest_neighbor(spark, tmp_path):
         "label": [0] * 4,
     })
     df.to_parquet(tmp_path / "embeddings.parquet", index=False)
-    out = Q.q_ann_quantized_topk(spark, str(tmp_path)).collect()
+    out = ann.q_ann_quantized_topk(spark, str(tmp_path)).collect()
     by_rank = {r["rn"]: r["vec_id"] for r in out if r["query_id"] == 0}
     assert by_rank[1] == 5
     assert by_rank[3] == 6
@@ -365,7 +366,7 @@ def test_loop_gate_bites_on_degenerate_conversation(spark, tmp_path):
     ]
     sf = _write_docs(tmp_path, loop_turns + varied_turns)
     out = {r["conv_id"]: r for r in
-           Q.q_loop_flagged_convs(spark, sf).collect()}
+           events.q_loop_flagged_convs(spark, sf).collect()}
     assert out["loopy-0"]["flagged"] and out["loopy-0"]["loop_turns"] == 5
     assert not out["varied-0"]["flagged"]
     assert out["varied-0"]["loop_turns"] == 0
@@ -383,7 +384,7 @@ def test_oov_rate_counts_rare_terms(spark, tmp_path):
     rows = [(i, common, "s") for i in range(3)]              # each x3
     rows.append((3, common + " zzz", "s"))                   # zzz once
     sf = _write_docs(tmp_path, rows)
-    out = {r["doc_id"]: r for r in Q.q_oov_rate(spark, sf).collect()}
+    out = {r["doc_id"]: r for r in text_stats.q_oov_rate(spark, sf).collect()}
     assert out[0]["oov_tokens"] == 0 and out[0]["oov_ppm"] == 0
     assert out[3]["n_tokens"] == 21 and out[3]["oov_tokens"] == 1
     assert out[3]["oov_ppm"] == 1_000_000 // 21
@@ -419,7 +420,7 @@ def test_containment_catches_what_jaccard_misses(spark, tmp_path):
         (3, "completely unrelated words about maritime navigation "
             "charts and brass instruments at sea calibration", "s"),
     ])
-    rows = Q.q_containment_pairs(spark, sf).collect()
+    rows = near_dup.q_containment_pairs(spark, sf).collect()
     pairs = {(r["id_a"], r["id_b"]): r for r in rows}
     assert (1, 2) in pairs
     assert pairs[(1, 2)]["cont_ppm"] == 1_000_000  # fully contained
@@ -433,13 +434,13 @@ def test_containment_maxdf_filter_bounds_fanout(spark, tmp_path):
     common = "aaa bbb ccc"  # one 3-gram, shared by all docs
     # ids avoid doc_id % 7 == 0 so the near-dup clone machinery stays
     # inert (a clone would legitimately pair with its original)
-    ids = [i for i in range(1, 60) if i % 7][: Q.CONT_MAXDF + 2]
+    ids = [i for i in range(1, 60) if i % 7][: near_dup.CONT_MAXDF + 2]
     rows = [(i, common + f" u{chr(97 + i % 26)}w only here "
              f"{chr(97 + i % 26)}x {chr(97 + i % 26)}y "
              f"q{chr(97 + i // 26)}{chr(97 + i % 26)}z", "s")
             for i in ids]
     sf = _write_docs(tmp_path, rows)
-    assert Q.q_containment_pairs(spark, sf).count() == 0
+    assert near_dup.q_containment_pairs(spark, sf).count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -447,14 +448,14 @@ def test_containment_maxdf_filter_bounds_fanout(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 def test_rotation_names_valid_and_new_ops_lead_the_sample():
-    """_merged_registry silently skips unknown _CHECK_FIRST names (a
+    """The registry merge silently skips unknown _CHECK_FIRST names (a
     typo would drop a query from the driver sample without a trace), so
     pin: every rotation name resolves, no duplicates, and the round-7
     obligations sit inside the 50-query sample prefix the driver checks
     — the six r04-carries (promised the r07 lead by the r06 comment),
     the queries whose implementation changed after their last driver
     row, and the three round-7 additions (VERDICT r06 #1/#3/#4/#6)."""
-    reg = Q._merged_registry()
+    reg = Q.registry()
     missing = [n for n in Q._CHECK_FIRST if n not in reg]
     assert not missing, missing
     assert len(set(Q._CHECK_FIRST)) == len(Q._CHECK_FIRST)
@@ -503,7 +504,7 @@ def test_range_join_boundaries_and_cross_bin(spark, tmp_path):
     ev["props"] = "{}"
     ev.to_parquet(tmp_path / "events.parquet", index=False,
                   coerce_timestamps="us", allow_truncated_timestamps=True)
-    out = Q.q_range_join_binned(spark, str(tmp_path)).collect()
+    out = events.q_range_join_binned(spark, str(tmp_path)).collect()
     got = {(r["w_id"], r["click_id"]): r["gap_us"] for r in out}
     assert set(got) == {(100, 2), (100, 3), (100, 4)}
     assert got[(100, 4)] == 0                       # at the instant
@@ -583,10 +584,10 @@ def test_containment_maxdf_boundary_is_inclusive(spark, tmp_path):
     identical docs replicated to exactly MAXDF copies... simpler: one
     shared run in exactly CONT_MAXDF docs still produces pairs."""
     shared = "pp qq rr ss tt"  # 3 shingles, each in every doc below
-    ids = [i for i in range(1, 40) if i % 7][: Q.CONT_MAXDF]
+    ids = [i for i in range(1, 40) if i % 7][: near_dup.CONT_MAXDF]
     rows = [(i, shared, "s") for i in ids]
     sf = _write_docs(tmp_path, rows)
-    out = Q.q_containment_pairs(spark, sf).collect()
+    out = near_dup.q_containment_pairs(spark, sf).collect()
     # identical docs: full containment for every pair of the MAXDF docs
     n = len(ids)
     assert len(out) == n * (n - 1) // 2

@@ -12,6 +12,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from cheque_ocr_project_spark.plans import ann, near_dup, text_stats
 from cheque_ocr_project_spark.plans import queries as Q
 
 SF = "/root/testdata/sf0.01"
@@ -306,14 +307,14 @@ def test_semantic_dedup_drops_planted_clones_keeps_min_id(spark, tmp_path):
     ]
     sf = _write_embeddings(tmp_path, base + clones)
     out = {(r["vec_id"], r["cluster"])
-           for r in Q.q_semantic_dedup(spark, sf).collect()}
+           for r in ann.q_semantic_dedup(spark, sf).collect()}
     kept = {v for v, _c in out}
     assert kept == set(range(10)), kept
 
     # plan lock: the survivor path is agg + anti-join — ZERO windows
     # (the argmin is min(struct)); the only corpus x corpus shuffle is
     # the cell equi-join, never a nested loop
-    plan = (Q.q_semantic_dedup(spark, sf)
+    plan = (ann.q_semantic_dedup(spark, sf)
             ._jdf.queryExecution().executedPlan().toString())
     assert "Window" not in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -391,7 +392,7 @@ def test_minhash_novelty_every_arrival_path_fires(spark, tmp_path):
     df.to_parquet(tmp_path / "documents.parquet", index=False)
 
     kept = {r["doc_id"]
-            for r in Q.q_minhash_novelty(spark, str(tmp_path)).collect()}
+            for r in near_dup.q_minhash_novelty(spark, str(tmp_path)).collect()}
     assert kept == {10, 400, 1000600}, kept
 
 
@@ -418,7 +419,7 @@ def test_token_freq_buckets_planted_extremes(spark, tmp_path):
     df.to_parquet(tmp_path / "documents.parquet", index=False)
 
     out = {r["doc_id"]: r
-           for r in Q.q_token_freq_buckets(spark, str(tmp_path)).collect()}
+           for r in text_stats.q_token_freq_buckets(spark, str(tmp_path)).collect()}
     assert set(out) == {1, 2, 3, 4}
     assert out[1]["bucket"] == "head", dict(out[1].asDict())
     assert out[2]["bucket"] == "tail", dict(out[2].asDict())
@@ -430,7 +431,7 @@ def test_token_freq_bucket_thresholds_bind_at_sf001(spark):
     """All three buckets must be non-empty at the contract SF — a
     threshold outside the corpus freq range would make the driver hash
     insensitive to the bucketing logic."""
-    rows = Q.q_token_freq_buckets(spark, SF).collect()
+    rows = text_stats.q_token_freq_buckets(spark, SF).collect()
     buckets = {r["bucket"] for r in rows}
     assert buckets == {"head", "middle", "tail"}, buckets
 
@@ -525,10 +526,10 @@ def test_winnow_substring_pairs_catch_verbatim_quote_minhash_misses(
     sf = str(tmp_path)
 
     sub_pairs = {(r["id_a"], r["id_b"])
-                 for r in Q.q_winnow_substring_pairs(spark, sf).collect()}
+                 for r in near_dup.q_winnow_substring_pairs(spark, sf).collect()}
     assert (1, 2) in sub_pairs, sub_pairs
 
-    docs = Q._docs_with_near_dups(spark, sf)
+    docs = near_dup._docs_with_near_dups(spark, sf)
     mh = {(r["id_a"], r["id_b"]) for r in DD.minhash_lsh_pairs(
         docs, "doc_id", "text", num_perm=64, bands=16, shingle_k=5,
         threshold=0.5,

@@ -200,7 +200,7 @@ def test_pack_sequences_single_source_skew(spark, tmp_path):
     import duckdb
     import pandas as pd
 
-    from cheque_ocr_project_spark.plans import queries as Q
+    from cheque_ocr_project_spark.plans import corpus
 
     n = 120_000
     docs = pd.DataFrame({
@@ -214,17 +214,17 @@ def test_pack_sequences_single_source_skew(spark, tmp_path):
     d.mkdir()
     docs.to_parquet(d / "documents.parquet", index=False)
 
-    out = Q.q_pack_sequences(spark, str(d))
+    out = corpus.q_pack_sequences(spark, str(d))
     # (a) bounded parallel units: rows per (source, chunk) window partition
     from pyspark.sql import functions as F
 
     grp = (
         spark.read.parquet(f"{d}/documents.parquet")
-        .groupBy(F.floor(F.col("doc_id") / Q.PACK_CHUNK))
+        .groupBy(F.floor(F.col("doc_id") / corpus.PACK_CHUNK))
         .count().agg(F.max("count")).collect()[0][0]
     )
-    assert grp <= Q.PACK_CHUNK
-    assert n / Q.PACK_CHUNK >= 20  # the skew case is genuinely multi-chunk
+    assert grp <= corpus.PACK_CHUNK
+    assert n / corpus.PACK_CHUNK >= 20  # the skew case is genuinely multi-chunk
 
     # (b) exact equality with the one-window oracle
     con = duckdb.connect()
@@ -233,7 +233,7 @@ def test_pack_sequences_single_source_skew(spark, tmp_path):
     )
     got = out.toPandas().sort_values("doc_id").reset_index(drop=True)
     exp = (
-        con.execute(Q.sql_pack_sequences()).df()
+        con.execute(corpus.sql_pack_sequences()).df()
         .sort_values("doc_id").reset_index(drop=True)
     )
     for c in ("doc_id", "n_tokens", "bin_id", "bin_offset"):
@@ -307,7 +307,7 @@ def test_sessionize_asof_whale_user_skew(spark, tmp_path):
     import numpy as np
     import pandas as pd
 
-    from cheque_ocr_project_spark.plans import queries as Q
+    from cheque_ocr_project_spark.plans import events
 
     rng = np.random.RandomState(11)
     rows = []
@@ -351,8 +351,8 @@ def test_sessionize_asof_whale_user_skew(spark, tmp_path):
     # than a sliver of the whale's 18k-event history
     sizes = (
         spark.read.parquet(f"{d}/events.parquet")
-        .select("user_id", Q._epoch_us(F.col("ts")).alias("us"))
-        .select("user_id", F.expr(f"us div {Q.SESSION_CHUNK_US}").alias("chunk"))
+        .select("user_id", events._epoch_us(F.col("ts")).alias("us"))
+        .select("user_id", F.expr(f"us div {events.SESSION_CHUNK_US}").alias("chunk"))
         .groupBy("user_id", "chunk").count()
     )
     mx = sizes.agg(F.max("count")).collect()[0][0]
@@ -365,18 +365,18 @@ def test_sessionize_asof_whale_user_skew(spark, tmp_path):
         return (out.toPandas().sort_values(keys).reset_index(drop=True)
                 .astype(str))
 
-    s1 = pdf(Q.q_sessionize(spark, str(d)), ["event_id"])
-    s2 = pdf(Q.q_sessionize_chunked(spark, str(d)), ["event_id"])
+    s1 = pdf(events.q_sessionize(spark, str(d)), ["event_id"])
+    s2 = pdf(events.q_sessionize_chunked(spark, str(d)), ["event_id"])
     assert s1.equals(s2)
-    a1 = pdf(Q.q_asof_join(spark, str(d)), ["event_id"])
-    a2 = pdf(Q.q_asof_join_chunked(spark, str(d)), ["event_id"])
+    a1 = pdf(events.q_asof_join(spark, str(d)), ["event_id"])
+    a2 = pdf(events.q_asof_join_chunked(spark, str(d)), ["event_id"])
     assert a1.equals(a2)
 
     # (c) the funnel holds the same whale-safety contract: no per-user
     # Window anywhere in its plan (the groupBy formulation is the design
     # claim — lock it), and it matches its oracle on the whale corpus
     fplan = (
-        Q.q_funnel(spark, str(d))._jdf.queryExecution()
+        events.q_funnel(spark, str(d))._jdf.queryExecution()
         .executedPlan().toString()
     )
     assert "Window" not in fplan, "funnel reintroduced a per-user window"
@@ -384,14 +384,14 @@ def test_sessionize_asof_whale_user_skew(spark, tmp_path):
     # (d) and all match the independent DuckDB oracles on this corpus
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{d}/events.parquet'")
-    o = con.execute(Q.SQL_SESSIONIZE).df()
+    o = con.execute(events.SQL_SESSIONIZE).df()
     o = o.sort_values(["event_id"]).reset_index(drop=True).astype(str)
     assert s2[sorted(s2.columns)].equals(o[sorted(o.columns)])
-    oa = con.execute(Q.SQL_ASOF_JOIN).df()
+    oa = con.execute(events.SQL_ASOF_JOIN).df()
     oa = oa.sort_values(["event_id"]).reset_index(drop=True).astype(str)
     assert a2[sorted(a2.columns)].equals(oa[sorted(oa.columns)])
-    fgot = Q.q_funnel(spark, str(d)).toPandas().astype(str)
-    fexp = con.execute(Q.SQL_FUNNEL).df().astype(str)
+    fgot = events.q_funnel(spark, str(d)).toPandas().astype(str)
+    fexp = con.execute(events.SQL_FUNNEL).df().astype(str)
     assert fgot[sorted(fgot.columns)].equals(fexp[sorted(fexp.columns)])
 
 
@@ -463,12 +463,13 @@ def test_doclen_quantiles_whale_source_deskewed(spark):
     import math
     import re
 
+    from cheque_ocr_project_spark.plans import text_stats
     from cheque_ocr_project_spark.plans import queries as Q
 
     rows = [("whale", 100 + (i % 7) * 10) for i in range(6000)]
     rows += [("minnow", 200 + i) for i in range(50)]
     d = spark.createDataFrame(rows, "source string, n_chars long")
-    out = {r.source: r for r in Q.doclen_quantiles_over(d).collect()}
+    out = {r.source: r for r in text_stats.doclen_quantiles_over(d).collect()}
 
     # exact discrete quantiles, computed independently
     def expected(vals):
@@ -476,7 +477,7 @@ def test_doclen_quantiles_whale_source_deskewed(spark):
         n = len(vals)
         return {
             lab: vals[math.ceil(num * n / den) - 1]
-            for lab, num, den in Q.QUANTILE_RANKS
+            for lab, num, den in text_stats.QUANTILE_RANKS
         }
 
     for src, vals in (("whale", [v for s, v in rows if s == "whale"]),
@@ -799,7 +800,7 @@ def test_dedup_survivors_tiebreak_and_no_window(spark):
     unrelated singleton; longest-wins selection is separately proven by
     the dedup_survivors driver oracle row, where every mutated clone is
     strictly shorter than its original."""
-    from cheque_ocr_project_spark.plans import queries as Q
+    from cheque_ocr_project_spark.plans import near_dup
 
     base = (
         "the quick brown fox jumps over the lazy dog while market prices "
@@ -809,7 +810,7 @@ def test_dedup_survivors_tiebreak_and_no_window(spark):
             (42, "entirely unrelated astronomy content about minor "
                  "planets and orbital resonance in the outer belt")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = Q.dedup_survivors_over(docs)
+    out = near_dup.dedup_survivors_over(docs)
 
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan and "row_number" not in plan, plan
@@ -847,9 +848,9 @@ def test_minhash_sketch_prefilter_drops_nothing(spark):
     identical pair set and estimates. Uses the near-dup-planted corpus at
     sf0.01 so real hot-band candidates flow through both paths."""
     from cheque_ocr_project_spark.operators import dedup as DD
-    from cheque_ocr_project_spark.plans import queries as Q
+    from cheque_ocr_project_spark.plans import near_dup
 
-    docs = Q._docs_with_near_dups(spark, "/root/testdata/sf0.01")
+    docs = near_dup._docs_with_near_dups(spark, "/root/testdata/sf0.01")
     banded = DD.minhash_banded(docs, "doc_id", "text", 64, 16, 5)
 
     sk_cols = [c for c in banded.columns if c.startswith("sk")]

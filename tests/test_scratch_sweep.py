@@ -57,3 +57,21 @@ def test_sweep_keeps_live_pid_and_fresh_dirs(tmp_root):
     assert not untagged_old.exists() # no pid: the age rule alone
     assert untagged_fresh.exists()
     assert other.exists()            # not a swept prefix
+
+
+def test_sessionize_streaming_sweeps_and_tags_its_scratch(spark, tmp_root):
+    """The streaming contract row stages its input and checkpoint in
+    pid-tagged scratch dirs and sweeps stale siblings, so repeated runs
+    leave no untagged dirs behind."""
+    from cheque_ocr_project_spark.plans import events
+
+    stale = _make(tmp_root, "sess_stream_in_abc", 7200)
+
+    out = events.q_sessionize_streaming(spark, "/root/testdata/sf0.001")
+    assert out.count()
+
+    assert not stale.exists()
+    made = sorted(p.name for p in tmp_root.glob("sess_stream_*"))
+    tag = f"pid{os.getpid()}-"
+    assert [n.split(tag)[0] for n in made] == [
+        "sess_stream_ckpt_", "sess_stream_in_"], made

@@ -58,7 +58,7 @@ def test_streaming_sessionize_matches_batch(spark, tmp_path):
     gaps straddling batch boundaries."""
     import pandas as pd
 
-    from cheque_ocr_project_spark.plans import queries as Q
+    from cheque_ocr_project_spark.plans import events
 
     sf = "/root/testdata/sf0.001"
     ev = spark.read.parquet(f"{sf}/events.parquet").select(
@@ -115,7 +115,7 @@ def test_streaming_sessionize_matches_batch(spark, tmp_path):
         spark.sql("SELECT * FROM stream_sessions_t").toPandas()
         .sort_values("event_id").reset_index(drop=True)
     )
-    exp = Q.q_sessionize(spark, sf).toPandas()
+    exp = events.q_sessionize(spark, sf).toPandas()
     exp["ts_us"] = exp["ts"].astype("int64") // 1000
     exp = exp.drop(columns=["ts"]).sort_values("event_id").reset_index(drop=True)
     assert len(got) == len(exp) > 0

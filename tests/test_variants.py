@@ -26,7 +26,7 @@ def test_keep_best_variant_oracle_properties():
 
 
 def test_spark_matches_oracle(spark, tmp_path):
-    from cheque_ocr_project_spark.plans import queries as Q
+    from cheque_ocr_project_spark.plans import flagship
 
     docs = spark.createDataFrame(
         [(i, t if t is not None else None, "en", "conv-x", len(t or ""))
@@ -37,7 +37,7 @@ def test_spark_matches_oracle(spark, tmp_path):
     docs.write.parquet(f"{path}/documents.parquet")
     got = {
         r.doc_id: r
-        for r in Q.q_variant_keep_best(spark, path).collect()
+        for r in flagship.q_variant_keep_best(spark, path).collect()
     }
     for i, t in enumerate(CASES):
         exp = V.keep_best_variant(t)
