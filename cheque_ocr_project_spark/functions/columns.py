@@ -29,7 +29,11 @@ def any_term(col: Column, terms) -> Column:
     OR-of-contains, not a regex alternation: UTF8String.contains is ~3-4x
     faster than java.util.regex literal alternations and scales linearly in
     term count (measured on 50k x 400-char rows: 90-term rlike 7.6s vs
-    contains chain 2.4s)."""
+    contains chain 2.4s). Set-typed terms are ORed sorted, so the plan does
+    not depend on set order (the hash seed); tuple terms keep their source
+    order, which is the short-circuit order."""
+    if isinstance(terms, (set, frozenset)):
+        terms = sorted(terms)
     hit = reduce(lambda a, b: a | b, [col.contains(t) for t in terms])
     return F.coalesce(hit, F.lit(False))
 
@@ -72,6 +76,17 @@ def n_digit(col: Column) -> Column:
     return count_chars(col, _DIGIT_CHARS)
 
 
+def collapse_ws(col: Column) -> Column:
+    """Whitespace runs to one space, then trim (Python ' '.join(s.split())
+    for the Java \\s set)."""
+    return F.trim(F.regexp_replace(col, r"\s+", " "))
+
+
+def pystrip(col: Column) -> Column:
+    """Python str.strip(): ALL whitespace (Spark trim strips spaces only)."""
+    return F.regexp_replace(col, r"^\s+|\s+$", "")
+
+
 # --------------------------------------------------------------------------
 # cleaning  (oracle.cleaning)
 # --------------------------------------------------------------------------
@@ -82,7 +97,7 @@ def clean_text_v1(col: Column) -> Column:
     s = F.translate(s, "01|5", "OIIS")
     s = replace_not_in(s, "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 .,&/-",
                        "A-Z0-9 .,&/-", " ")
-    s = F.trim(F.regexp_replace(s, r"\s+", " "))
+    s = collapse_ws(s)
     return F.when(col.isNull() | (F.length(col) == 0), F.lit("XXX")).otherwise(s)
 
 
@@ -93,7 +108,7 @@ def clean_text_v3(col: Column) -> Column:
     s = F.replace(s, F.lit("8"), F.lit("B"))
     s = replace_not_in(s, _ALPHA_CHARS + "0123456789 ,.&/-",
                        "A-Za-z0-9 ,.&/-", " ")
-    s = F.trim(F.regexp_replace(s, r"\s+", " "))
+    s = collapse_ws(s)
     return F.when(col.isNull() | (F.length(col) == 0), F.lit("")).otherwise(s)
 
 
@@ -105,11 +120,6 @@ def remove_prefixes_v3(col: Column) -> Column:
     """= oracle.cleaning.remove_prefixes_v3 (ordered anchored strips)."""
     s = _chain_regex_strip(F.upper(col), vocab.PREFIX_PATTERNS_V3)
     return F.when(col.isNull(), col).otherwise(pystrip(s))
-
-
-def pystrip(col: Column) -> Column:
-    """Python str.strip(): ALL whitespace (Spark trim strips spaces only)."""
-    return F.regexp_replace(col, r"^\s+|\s+$", "")
 
 
 def _guarded_chain_strip(col: Column, patterns) -> Column:
@@ -131,7 +141,7 @@ def clean_payee(col: Column) -> Column:
     for ch, repl in vocab.SPECIAL_CHAR_MAP:
         s = F.replace(s, F.lit(ch), F.lit(repl))
     s = _guarded_chain_strip(s, vocab.COMPANY_SUFFIX_PATTERNS)
-    s = F.trim(F.regexp_replace(s, r"\s+", " "))
+    s = collapse_ws(s)
     # r08 re-measurement: the negated-class regex was the single most
     # expensive step of the chain (0.61s vs a 0.33s stage floor at
     # sf1.0); the translate dirty-check guard now wins (0.27s) — the
@@ -260,6 +270,31 @@ def is_bank_or_metadata(col: Column) -> Column:
     """= oracle.predicates.is_bank_or_metadata."""
     u = F.upper(col)
     return any_term(u, vocab.PAYEE_BANK_TERMS) | any_term(u, vocab.PAYEE_METADATA_TERMS)
+
+
+# --------------------------------------------------------------------------
+# line confidence  (oracle.issuer)
+# --------------------------------------------------------------------------
+
+def nonblank_lines(text: Column) -> Column:
+    """The lines of text that hold a non-whitespace character
+    (= oracle.issuer.split_lines without the confidences)."""
+    return F.filter(F.split(text, "\n"), lambda ln: ln.rlike(r"\S"))
+
+
+def line_conf(ln: Column) -> Column:
+    """= oracle.issuer.line_confidence: 0.6 + 0.4 * alpha_ratio (0.0 for
+    empty)."""
+    return F.when(F.length(ln) == 0, F.lit(0.0)).otherwise(
+        0.6 + 0.4 * (n_alpha(ln) / F.length(ln))
+    )
+
+
+def mean_line_conf(lines: Column) -> Column:
+    """Mean line confidence over a line array (0.0 when empty), summed
+    left to right like the oracle."""
+    s = F.aggregate(lines, F.lit(0.0), lambda acc, ln: acc + line_conf(ln))
+    return F.when(F.size(lines) > 0, s / F.size(lines)).otherwise(0.0)
 
 
 # Every character Python's str.split()/\s treats as whitespace that Java's

@@ -1,17 +1,28 @@
-"""DuckDB oracle-SQL fragment generators.
+"""DuckDB renderers of the oracle predicates and stages.
 
-The driver verifies every ``queries()`` entry against DuckDB running
-``oracle_sql()`` on the same parquet. These helpers render the *same* vocab
-lists used by the Spark Column builders into DuckDB SQL (RE2 regex dialect,
-explicit 'g' flag for global replace), so both sides share one source of
-truth for every grammar.
+This is the one module that renders an oracle predicate or stage into
+DuckDB SQL — the twin of functions/columns.py, which builds the same stages
+as Catalyst Columns. Where columns.py has a builder, the renderer here has
+its name. Every DuckDB twin in plans/ (the registry's ``oracle_sql()``
+rows and the flagship statements) is composed from these renderers, so a
+vocab or grammar fix lands in one place, and
+tests/test_ducksql_renderers.py checks each predicate against its oracle
+function on the adversarial synthetic corpus.
+
+The renderers read the same vocab lists as the Column builders (RE2 regex
+dialect, explicit 'g' flag for global replace). ``any_term`` renders its
+terms sorted, so no SQL text depends on set order (the hash seed). Every
+fragment follows the oracle condition for condition, in the oracle's
+float operation order, so doubles are bit-identical.
 """
 
 from __future__ import annotations
 
-import re as _re
+from typing import NamedTuple
 
 from cheque_ocr_project_spark.oracle import vocab
+
+NL = "chr(10)"
 
 
 def q(s: str) -> str:
@@ -63,72 +74,313 @@ def rx(pat: str) -> str:
     return q(_re2_ws(pat))
 
 
-def esc_term(t: str) -> str:
-    return _re.escape(t)
-
-
-def any_term_sql(expr: str, terms) -> str:
-    pat = "|".join(esc_term(t) for t in terms)
-    return f"regexp_matches({expr}, {rx(pat)})"
-
-
 def rr(expr: str, pat: str, repl: str) -> str:
     return f"regexp_replace({expr}, {rx(pat)}, {q(repl)}, 'g')"
 
 
+# --------------------------------------------------------------------------
+# helpers
+# --------------------------------------------------------------------------
+
+def any_term(expr: str, terms) -> str:
+    """OR-of-contains (null-safe False), = columns.any_term."""
+    ors = " OR ".join(f"contains({expr}, {q(t)})" for t in sorted(terms))
+    return f"coalesce(({ors}), FALSE)"
+
+
+def n_alpha(expr: str) -> str:
+    return f"length(regexp_replace(coalesce({expr}, ''), '[^A-Za-z]', '', 'g'))"
+
+
+def n_digit(expr: str) -> str:
+    return f"length(regexp_replace(coalesce({expr}, ''), '[^0-9]', '', 'g'))"
+
+
 def collapse_ws(expr: str) -> str:
+    """Whitespace runs to one space, then trim (= columns.collapse_ws)."""
     inner = rr(expr, r"\s+", " ")  # rx() expands the class
     return f"trim({inner})"
 
 
-def clean_text_v1_sql(col: str) -> str:
-    s = f"translate(upper({col}), '01|5', 'OIIS')"
+def pystrip(expr: str) -> str:
+    """Python str.strip() analog (DuckDB trim strips spaces only).
+
+    Dialect note: rx() expands \\s to the Java set [ \\t\\n\\x0b\\f\\r],
+    which is also what Catalyst evaluates — SQL twin and engine agree
+    exactly. Python's own strip()/\\s additionally treat \\x1c-\\x1f,
+    \\x85 and unicode spaces as whitespace, so the PYTHON-oracle-backed
+    paths can differ from both engines on those characters; the input
+    contract is text whose whitespace falls within the Java \\s set (a
+    production ingest normalizes exotic separators at the scan)."""
+    return rr(expr, r"^\s+|\s+$", "")
+
+
+def words_of(expr: str) -> str:
+    """Python str.split(): any-whitespace split, empty tokens dropped."""
+    return f"list_filter(string_split_regex({expr}, '[ \\t\\n\\x0b\\f\\r]+'), w -> w <> '')"
+
+
+def nonblank_lines(expr: str) -> str:
+    """The lines of ``expr`` that hold a non-whitespace character
+    (= oracle.issuer.split_lines without the confidences)."""
+    return (
+        f"list_filter(string_split({expr}, {NL}), "
+        f"ln -> regexp_matches(ln, '[^ \\t\\n\\x0b\\f\\r]'))"
+    )
+
+
+def chain_replace(expr: str, pairs) -> str:
+    """Ordered literal replace chain (DuckDB replace())."""
+    s = expr
+    for wrong, right in pairs:
+        s = f"replace({s}, {q(wrong)}, {q(right)})"
+    return s
+
+
+def chain_regex_strip(expr: str, patterns, flags: str = "gi") -> str:
+    s = expr
+    for p in patterns:
+        s = f"regexp_replace({s}, {rx(p)}, '', '{flags}')"
+    return s
+
+
+# --------------------------------------------------------------------------
+# cleaning  (oracle.cleaning, oracle.boilerplate)
+# --------------------------------------------------------------------------
+
+def clean_text_v1(expr: str) -> str:
+    """= oracle.cleaning.clean_text_v1."""
+    s = f"translate(upper({expr}), '01|5', 'OIIS')"
     s = rr(s, r"[^A-Z0-9 .,&/-]", " ")
     s = collapse_ws(s)
     return (
-        f"CASE WHEN {col} IS NULL OR length({col}) = 0 THEN 'XXX' ELSE {s} END"
+        f"CASE WHEN {expr} IS NULL OR length({expr}) = 0 THEN 'XXX' ELSE {s} END"
     )
 
 
-def n_alpha_sql(col: str) -> str:
-    return f"length({rr(col, '[^A-Za-z]', '')})"
-
-
-def n_digit_sql(col: str) -> str:
-    return f"length({rr(col, '[^0-9]', '')})"
-
-
-def is_garbage_sql(col: str) -> str:
-    alpha = n_alpha_sql(col)
-    digit = n_digit_sql(col)
-    pats = "|".join(
-        f"(?:{p})"
-        for p in (
-            r"O{4,}|I{4,}|Z{4,}",
-            r"^[OIZ]{5,}$",
-            r"^[A-Z][OIZ]{4,}$",
-            r"[OIZ]{5,}",
-            r"^[A-Z]{1,2}$",
-            r"^[A-Z][\s]*[A-Z]$",
-        )
-    )
+def clean_text_v3(expr: str) -> str:
+    """= oracle.cleaning.clean_text_v3."""
+    s = f"replace(translate(upper({expr}), '|!015', 'IIOIS'), '8', 'B')"
+    s = rr(s, r"[^A-Za-z0-9 ,.&/-]", " ")
+    s = collapse_ws(s)
     return (
-        f"({col} IS NULL OR length({col}) = 0 OR {alpha} < 3 "
-        f"OR {digit} > {alpha} OR regexp_matches({col}, {rx(pats)}))"
+        f"CASE WHEN {expr} IS NULL OR length({expr}) = 0 THEN '' ELSE {s} END"
     )
 
 
-def is_junk_v1_sql(col: str) -> str:
-    u = f"upper({col})"
+def remove_prefixes_v3(expr: str) -> str:
+    """= oracle.cleaning.remove_prefixes_v3 over non-empty text."""
+    return pystrip(chain_regex_strip(f"upper({expr})", vocab.PREFIX_PATTERNS_V3))
+
+
+def clean_payee(expr: str) -> str:
+    """= oracle.cleaning.clean_payee."""
+    s = pystrip(f"upper({expr})")
+    s = chain_regex_strip(s, vocab.TITLE_PATTERNS)
+    s = chain_replace(s, vocab.SPECIAL_CHAR_MAP)
+    s = chain_regex_strip(s, vocab.COMPANY_SUFFIX_PATTERNS)
+    s = collapse_ws(s)
+    # \w == [0-9A-Za-z_] in both dialects for ASCII input
+    s = rr(s, r"[^\w\s\.\-]", "")
     return (
-        f"({col} IS NULL OR length({col}) < 3 "
-        f"OR {any_term_sql(u, sorted(vocab.JUNK_TERMS_V1))} "
-        f"OR {any_term_sql(u, ('SIGN', 'SGN', 'BEARER', 'ORDER'))})"
+        f"CASE WHEN {expr} IS NULL OR length({expr}) = 0 OR length({s}) < 2 "
+        f"THEN 'XXX' ELSE {s} END"
     )
 
 
-def is_junk_v3_sql(u: str) -> str:
-    """= columns.is_junk_v3 over an upper-cased expression."""
+def correct_spelling(expr: str) -> str:
+    """= oracle.cleaning.correct_spelling_ai, UPPER form (DuckDB lacks
+    initcap, so queries compare the UPPER form — the Spark query must
+    upper() its result to match)."""
+    s = f"upper({expr})"
+    s = chain_replace(s, vocab.SPELLING_CORRECTIONS)
+    s = chain_replace(s, [(w, "") for w in vocab.GARBAGE_WORDS])
+    s = collapse_ws(s)
+    s = rr(s, r"[^A-Z\s]", "")
+    return (
+        f"CASE WHEN {expr} IS NULL OR length({expr}) = 0 THEN 'UNKNOWN' "
+        f"WHEN length({s}) >= 3 THEN {s} ELSE 'UNKNOWN' END"
+    )
+
+
+def plain_main(expr: str) -> str:
+    """= oracle.boilerplate.extract_plain."""
+    lines = (
+        f"list_filter(list_transform(string_split({expr}, {NL}), "
+        f"ln -> {collapse_ws('ln')}), x -> x <> '')"
+    )
+    return f"array_to_string({lines}, {NL})"
+
+
+def html_main(text: str) -> str:
+    """= oracle.boilerplate.extract_html_main."""
+    lines = (
+        f"list_filter(string_split({text}, {NL}), "
+        f"ln -> NOT regexp_matches(ln, '(?i)<[ \\t\\n\\x0b\\f\\r]*(script|style)\\b'))"
+    )
+    stripped = "regexp_replace(ln, '<[^>]*>', '', 'g')"
+    visible = collapse_ws(stripped)
+    tagd = f"(length(ln) - length({stripped})) * 1.0 / nullif(length(ln), 0)"
+    anchor_len = (
+        "list_sum(list_prepend(CAST(0 AS BIGINT), list_transform("
+        "regexp_extract_all(ln, '(?i)<a\\b[^>]*>(.*?)</a>', 1), "
+        "m -> CAST(length(regexp_replace(m, '<[^>]*>', '', 'g')) AS BIGINT))))"
+    )
+    linkd = (
+        f"CASE WHEN length({visible}) > 0 "
+        f"THEN {anchor_len} * 1.0 / length({visible}) ELSE 1.0 END"
+    )
+    stats = (
+        f"list_transform({lines}, ln -> struct_pack("
+        f"vis := {visible}, tagd := {tagd}, linkd := {linkd}))"
+    )
+    kept = (
+        f"list_filter({stats}, s -> length(s.vis) >= 25 "
+        f"AND s.tagd < 0.6 AND s.linkd < 0.34)"
+    )
+    return f"array_to_string(list_transform({kept}, s -> s.vis), {NL})"
+
+
+def pdf_main(text: str) -> tuple[str, str]:
+    """= oracle.boilerplate.extract_pdf_main, as (the collapsed non-empty
+    lines, the kept text over them bound as ``lines0``)."""
+    raw = f"string_split(replace({text}, chr(12), {NL}), {NL})"
+    lines = (
+        f"list_filter(list_transform({raw}, ln -> {collapse_ws('ln')}), "
+        f"x -> x <> '')"
+    )
+    page_rx = rx(r"(?i)^\s*(page\s+)?\d+(\s+of\s+\d+)?\s*$")
+    kept = (
+        f"list_filter(lines0, ln -> NOT regexp_matches(ln, {page_rx}) "
+        f"AND len(list_filter(lines0, x -> x = ln)) < 3)"
+    )
+    # lines0 must be bound by the enclosing SELECT
+    return lines, f"array_to_string({kept}, {NL})"
+
+
+# --------------------------------------------------------------------------
+# predicates  (oracle.predicates)
+# --------------------------------------------------------------------------
+
+_GARBAGE_RX = "|".join(
+    f"(?:{p})"
+    for p in (
+        r"O{4,}|I{4,}|Z{4,}",
+        r"^[OIZ]{5,}$",
+        r"^[A-Z][OIZ]{4,}$",
+        r"[OIZ]{5,}",
+        r"^[A-Z]{1,2}$",
+        r"^[A-Z][\s]*[A-Z]$",
+    )
+)
+
+
+def is_garbage(expr: str) -> str:
+    """= oracle.predicates.is_garbage (null-safe TRUE)."""
+    return (
+        f"({expr} IS NULL OR length({expr}) = 0 OR {n_alpha(expr)} < 3 "
+        f"OR {n_digit(expr)} > {n_alpha(expr)} "
+        f"OR coalesce(regexp_matches({expr}, {rx(_GARBAGE_RX)}), FALSE))"
+    )
+
+
+def is_junk_v1(expr: str) -> str:
+    """= oracle.predicates.is_junk_v1."""
+    u = f"upper({expr})"
+    return (
+        f"({expr} IS NULL OR length({expr}) < 3 "
+        f"OR {any_term(u, vocab.JUNK_TERMS_V1)} "
+        f"OR {any_term(u, ('SIGN', 'SGN', 'BEARER', 'ORDER'))})"
+    )
+
+
+def _bank_hits(expr: str) -> str:
+    return " + ".join(
+        f"(CASE WHEN contains({expr}, {q(t)}) THEN 1 ELSE 0 END)"
+        for t in sorted(vocab.BANK_TERMS)
+    )
+
+
+def is_valid_drawer_v1(t: str) -> str:
+    """= oracle.predicates.is_valid_drawer_v1 over *cleaned* (non-null,
+    upper) text.
+    ``t`` must be a simple column reference (it is repeated many times)."""
+    alpha = n_alpha(t)
+    digits = n_digit(t)
+    total = f"length({t})"
+    n_words = f"len({words_of(t)})"
+    has_ms = f"contains({t}, 'M/S')"
+    dot_count = f"({total} - length(regexp_replace({t}, '\\.', '', 'g')))"
+    hyphen_parts = f"len(string_split({t}, '-'))"
+    no_dots = f"regexp_replace({t}, '\\.', '', 'g')"
+    alpha_after_dot = n_alpha(no_dots)
+    ratio = f"({alpha} * 1.0 / nullif({total}, 0))"
+    reject = " OR ".join([
+        is_junk_v1(t),
+        any_term(f"upper({t})", vocab.BANK_TERMS),
+        f"contains({t}, 'BANK')",
+        f"contains({t}, 'PLEASE')",
+        f"({dot_count} > 2 AND NOT {has_ms})",
+        any_term(t, vocab.LOCATION_KEYWORDS),
+        f"({total} = 0)",
+        f"({digits} > {alpha} AND {alpha} < 4)",
+        f"({total} > 6 AND {ratio} < 0.45)",
+        f"(({_bank_hits(t)}) > 0 AND {alpha} < 8)",
+        f"({total} < 5)",
+        f"({digits} >= 3)",
+        f"(NOT contains({t}, ' ') AND {digits} = 0 AND {alpha} >= 5 AND {is_garbage(t)})",
+        f"(NOT contains({t}, ' ') AND {digits} > 0)",
+        f"contains({t}, 'NOTOVER')",
+        f"contains({t}, 'NOT OVER')",
+        f"(contains({t}, 'RS') AND {n_words} <= 3)",
+        f"(contains({t}, '/') AND NOT {has_ms})",
+        f"(contains({t}, '-') AND {hyphen_parts} > 3)",
+        f"(contains({t}, '.') AND {alpha_after_dot} = 0)",
+        f"({digits} > {alpha})",
+        f"({ratio} < 0.6)",
+        is_garbage(t),
+    ])
+    return f"NOT coalesce(({reject}), FALSE)"
+
+
+def looks_like_real_name(t: str) -> str:
+    """= oracle.predicates.looks_like_real_name over raw case-preserved
+    text."""
+    tt = f"coalesce({t}, '')"
+    letters = n_alpha(tt)
+    digits = n_digit(tt)
+    total = f"length({tt})"
+    special = f"({total} - length(regexp_replace({tt}, '[^A-Za-z0-9 ]', '', 'g')))"
+    u = f"upper({tt})"
+    words = words_of(u)
+    common_set = ", ".join(q(w) for w in sorted(vocab.COMMON_NAME_PARTS))
+    common = f"len(list_filter({words}, w -> w IN ({common_set})))"
+    n_words = f"len({words})"
+    suspicious = " OR ".join(
+        f"(contains({u}, {q(s)}) AND {len(s)} > {total} / 2)"
+        for s in vocab.SUSPICIOUS_NAME_TERMS
+    )
+    mwg = (
+        f"len(list_filter({words}, w -> length(w) < 2 OR {is_garbage('w')})) > 0"
+    )
+    reject = " OR ".join([
+        f"({t} IS NULL)",
+        f"({total} = 0)",
+        f"({u} = 'XXX')",
+        f"({digits} > {letters} AND {letters} < 5)",
+        f"({total} < 4 AND {u} NOT IN ('CO', 'LTD', 'PVT', 'INC', 'M/S'))",
+        f"({special} > 3)",
+        is_garbage(tt),
+        f"({suspicious})",
+        f"({common} = 0 AND {n_words} >= 2 AND ({mwg}))",
+        f"({common} = 0 AND {n_words} = 1 AND ({total} < 5 OR {is_garbage(tt)}))",
+    ])
+    return f"NOT coalesce(({reject}), FALSE)"
+
+
+def is_junk_v3(u: str) -> str:
+    """= oracle.predicates.is_junk_v3 over an upper-cased expression
+    (= columns.is_junk_v3)."""
     caps_ok = ", ".join(q(t) for t in vocab.SHORT_CAPS_OK_V3)
     short_caps = (
         f"(regexp_matches({u}, '^[A-Z]{{2,4}}$') AND {u} NOT IN ({caps_ok}))"
@@ -148,59 +400,134 @@ def is_junk_v3_sql(u: str) -> str:
     )
 
 
-def chain_replace_sql(expr: str, pairs) -> str:
-    """Ordered literal replace chain (DuckDB replace())."""
-    s = expr
-    for wrong, right in pairs:
-        s = f"replace({s}, {q(wrong)}, {q(right)})"
-    return s
+def is_valid_business_v3(u: str) -> str:
+    """= oracle.predicates.is_valid_business_name_v3 over an upper-cased
+    expression."""
+    bank_hit = " OR ".join(
+        f"(contains({u}, {q(b)}) AND {len(b)} >= length({u}) * 0.7)"
+        for b in vocab.BANK_NAMES_V3
+    )
+    alpha = n_alpha(u)
+    digits = n_digit(u)
+    total = f"length({u})"
+    return f"""({u} IS NOT NULL AND length({u}) >= 3
+      AND NOT {is_junk_v3(u)}
+      AND NOT ({bank_hit})
+      AND (CASE WHEN {digits} > 0 AND {alpha} = 0 THEN length({u}) >= 8
+           ELSE NOT (CASE WHEN {alpha} > 0
+                     THEN ({alpha} * 1.0 / {total} < 0.3 AND {total} > 5
+                           AND NOT ({digits} > 5))
+                     ELSE FALSE END) END))"""
 
 
-def chain_regex_strip_sql(expr: str, patterns, flags: str = "gi") -> str:
-    s = expr
-    for p in patterns:
-        s = f"regexp_replace({s}, {rx(p)}, '', '{flags}')"
-    return s
-
-
-def pystrip_sql(expr: str) -> str:
-    """Python str.strip() analog (DuckDB trim strips spaces only).
-
-    Dialect note: rx() expands \\s to the Java set [ \\t\\n\\x0b\\f\\r],
-    which is also what Catalyst evaluates — SQL twin and engine agree
-    exactly. Python's own strip()/\\s additionally treat \\x1c-\\x1f,
-    \\x85 and unicode spaces as whitespace, so the PYTHON-oracle-backed
-    paths can differ from both engines on those characters; the input
-    contract is text whose whitespace falls within the Java \\s set (a
-    production ingest normalizes exotic separators at the scan)."""
-    return rr(expr, r"^\s+|\s+$", "")
-
-
-def clean_payee_sql(col: str) -> str:
-    """= oracle.cleaning.clean_payee rendered for DuckDB."""
-    s = pystrip_sql(f"upper({col})")
-    s = chain_regex_strip_sql(s, vocab.TITLE_PATTERNS)
-    s = chain_replace_sql(s, vocab.SPECIAL_CHAR_MAP)
-    s = chain_regex_strip_sql(s, vocab.COMPANY_SUFFIX_PATTERNS)
-    s = collapse_ws(s)
-    # \w == [0-9A-Za-z_] in both dialects for ASCII input
-    s = rr(s, r"[^\w\s\.\-]", "")
+def is_valid_drawer_v3(u: str) -> str:
+    """= oracle.predicates.is_valid_drawer_v3 over an upper-cased
+    expression."""
     return (
-        f"CASE WHEN {col} IS NULL OR length({col}) = 0 OR length({s}) < 2 "
-        f"THEN 'XXX' ELSE {s} END"
+        f"({u} IS NOT NULL AND length({u}) >= 3 "
+        f"AND NOT {is_junk_v3(u)} AND {is_valid_business_v3(u)})"
     )
 
 
-def correct_spelling_sql(col: str) -> str:
-    """= oracle.cleaning.correct_spelling_ai for DuckDB (initcap-free:
-    DuckDB lacks initcap, so queries compare the UPPER form — the Spark
-    query must upper() its result to match)."""
-    s = f"upper({col})"
-    s = chain_replace_sql(s, vocab.SPELLING_CORRECTIONS)
-    s = chain_replace_sql(s, [(w, "") for w in vocab.GARBAGE_WORDS])
-    s = collapse_ws(s)
-    s = rr(s, r"[^A-Z\s]", "")
+def is_bank_or_metadata(expr: str) -> str:
+    """= oracle.predicates.is_bank_or_metadata."""
+    u = f"upper({expr})"
     return (
-        f"CASE WHEN {col} IS NULL OR length({col}) = 0 THEN 'UNKNOWN' "
-        f"WHEN length({s}) >= 3 THEN {s} ELSE 'UNKNOWN' END"
+        f"({any_term(u, vocab.PAYEE_BANK_TERMS)} OR "
+        f"{any_term(u, vocab.PAYEE_METADATA_TERMS)})"
     )
+
+
+# --------------------------------------------------------------------------
+# classification, payee and government rules  (oracle.classify,
+# oracle.grammars, oracle.govrules)
+# --------------------------------------------------------------------------
+
+class ChequeClasses(NamedTuple):
+    """The classification cascade's conditions, in cascade order."""
+    cat3: str
+    cat2: str
+    cat1: str
+    dd: str
+    mc: str
+    crossed: str
+    is_self: str
+
+
+def cheque_classes(u: str) -> ChequeClasses:
+    """= oracle.classify.classify's conditions over upper-cased text:
+    government categories III/II/I, demand draft, manager's cheque,
+    crossed, self; none of them means ORDER."""
+    crossed_rx = "|".join(f"(?:{p})" for p in vocab.CROSSED_PATTERNS)
+    return ChequeClasses(
+        cat3=f"(contains({u}, 'GOVERNMENT ACCOUNT') OR contains({u}, 'GOVT ACCOUNT'))",
+        cat2=(
+            f"(contains({u}, 'NOT TRANSFERABLE') AND "
+            f"{any_term(u, ('GOVT', 'GOVERNMENT', 'PAO', 'DDO'))})"
+        ),
+        cat1=(
+            f"({any_term(u, vocab.GOVT_MARKERS_HIGH)} OR "
+            f"{any_term(u, vocab.GOVT_MARKERS_MEDIUM)})"
+        ),
+        dd=any_term(u, vocab.DD_MARKERS),
+        mc=any_term(u, vocab.MC_MARKERS),
+        crossed=f"coalesce(regexp_matches({u}, {rx(crossed_rx)}), FALSE)",
+        is_self=f"(contains({u}, 'SELF') AND len({words_of(u)}) < 15)",
+    )
+
+
+def payee_raw(u: str) -> str:
+    """= oracle.grammars.extract_payee over upper-cased text, with the
+    lookahead-free patterns: first candidate that is not bank/metadata."""
+    whens = []
+    for p in vocab.PAYEE_PATTERNS_SQLSAFE:
+        cand = pystrip(f"regexp_extract({u}, {rx(p)}, 1)")
+        whens.append(
+            f"WHEN regexp_matches({u}, {rx(p)}) "
+            f"AND NOT {is_bank_or_metadata(cand)} THEN {cand}"
+        )
+    return "CASE " + " ".join(whens) + " ELSE NULL END"
+
+
+def is_government_entity(x: str) -> str:
+    """= oracle.govrules.is_government_entity (null/empty → FALSE)."""
+    u = f"upper(coalesce({x}, ''))"
+    pat = "|".join(f"(?:{p})" for p in vocab.GOVT_PAYEE_PATTERNS)
+    return (
+        f"(length({u}) > 0 AND ({any_term(u, vocab.GOVT_ENTITIES)} "
+        f"OR coalesce(regexp_matches({u}, {rx(pat)}), FALSE) "
+        f"OR (len({words_of(u)}) <= 4 AND {any_term(u, vocab.GOVT_INDICATORS)})))"
+    )
+
+
+def designation_literal(u: str) -> str:
+    """= oracle.govrules.extract_officer_designation over upper-cased
+    text (literal list scanned in order)."""
+    whens = " ".join(
+        f"WHEN contains({u}, {q(d)}) THEN {q(d)}"
+        for d in vocab.OFFICER_DESIGNATIONS
+    )
+    return f"CASE {whens} ELSE NULL END"
+
+
+# --------------------------------------------------------------------------
+# line confidence  (oracle.issuer)
+# --------------------------------------------------------------------------
+
+def line_conf(ln: str) -> str:
+    """= oracle.issuer.line_confidence: 0.6 + 0.4 * alpha_ratio (0.0 for
+    empty)."""
+    return (
+        f"CASE WHEN length({ln}) = 0 THEN 0.0 "
+        f"ELSE 0.6 + 0.4 * ({n_alpha(ln)} / length({ln})) END"
+    )
+
+
+def mean_line_conf(lines: str) -> str:
+    """Mean line confidence over a line list (0.0 when empty), summed
+    left to right like the oracle (= columns.mean_line_conf)."""
+    fold = (
+        f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+        f"list_transform({lines}, ln -> {line_conf('ln')})), (a, b) -> a + b)"
+    )
+    return f"CASE WHEN len({lines}) > 0 THEN {fold} / len({lines}) ELSE 0.0 END"

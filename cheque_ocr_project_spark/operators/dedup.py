@@ -59,6 +59,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cheque_ocr_project_spark.functions import columns as C
 from cheque_ocr_project_spark.operators.extract import par
 
 POLY_P = (1 << 31) - 1       # 2147483647, Mersenne prime
@@ -166,7 +167,7 @@ def _batch_shingle_hashes(texts: list[str], k: int
 
 def normalize_text(col: Column) -> Column:
     """Shared normalization for dedup fingerprints: upper + ws collapse."""
-    return F.trim(F.regexp_replace(F.upper(col), r"\s+", " "))
+    return C.collapse_ws(F.upper(col))
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

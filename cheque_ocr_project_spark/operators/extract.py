@@ -53,9 +53,32 @@ def extract_turns_udf(spark: SparkSession, transcripts: DataFrame,
 
     Per-record errors are isolated inside the batch (B6 semantics: an ERROR
     row is emitted, the job never fails)."""
+
+    def error_record(exc: Exception) -> dict:
+        rec = dict.fromkeys(oracle_turn.RESULT_FIELDS)
+        rec.update({
+            "success": False, "error": str(exc), "status": "ERROR",
+            "issuer_conf": 0.0, "confidence": 0.0,
+            "is_government": False, "file_mark": False,
+        })
+        return rec
+
+    return _map_turns(spark, transcripts, RESULT_SCHEMA,
+                      oracle_turn.extract_turn, drawer_dict, threshold,
+                      on_error=error_record)
+
+
+def _map_turns(spark: SparkSession, transcripts: DataFrame,
+               schema: T.StructType, turn_fn, drawer_dict: list[str],
+               threshold: float, on_error=None) -> DataFrame:
+    """mapInPandas of ``turn_fn(text, role, tool, drawer_dict, threshold,
+    cache)`` per turn into ``schema`` (conv_id, turn_idx, then turn_fn's
+    record fields). Per-task state: the broadcast dictionary and a fuzzy
+    memo. A record that raises becomes ``on_error(exc)``, or fails the
+    task when ``on_error`` is None."""
     bc = spark.sparkContext.broadcast(drawer_dict)
-    field_names = [f.name for f in RESULT_SCHEMA.fields]
-    out_fields = list(oracle_turn.RESULT_FIELDS)
+    names = [f.name for f in schema.fields]
+    fields = names[2:]
 
     def run_batches(pdf_iter):
         dd = bc.value
@@ -63,32 +86,29 @@ def extract_turns_udf(spark: SparkSession, transcripts: DataFrame,
         for pdf in pdf_iter:
             # columnar accumulation (dict-of-lists -> DataFrame is ~5x
             # cheaper than list-of-dicts for wide results)
-            out: dict[str, list] = {name: [] for name in out_fields}
+            out: dict[str, list] = {n: [] for n in fields}
             for text, role, tool in zip(pdf["text"], pdf["role"], pdf["tool"]):
                 try:
-                    rec = oracle_turn.extract_turn(
+                    rec = turn_fn(
                         None if text is None or isinstance(text, float) else text,
                         role,
                         None if tool is None or isinstance(tool, float) else tool,
                         dd, threshold, cache,
                     )
-                except Exception as exc:  # B6: never fail the job
-                    rec = dict.fromkeys(out_fields)
-                    rec.update({
-                        "success": False, "error": str(exc), "status": "ERROR",
-                        "issuer_conf": 0.0, "confidence": 0.0,
-                        "is_government": False, "file_mark": False,
-                    })
-                for name in out_fields:
-                    out[name].append(rec[name])
+                except Exception as exc:  # B6: the caller's ERROR row
+                    if on_error is None:
+                        raise
+                    rec = on_error(exc)
+                for n in fields:
+                    out[n].append(rec[n])
             out_pdf = pd.DataFrame(out)
             out_pdf.insert(0, "conv_id", pdf["conv_id"].values)
             out_pdf.insert(1, "turn_idx", pdf["turn_idx"].values)
-            yield out_pdf[field_names]
+            yield out_pdf[names]
 
     cols = ["conv_id", "turn_idx", "role", "text", "tool"]
     src = _ensure_parallelism(spark, transcripts.select(*cols))
-    return src.mapInPandas(run_batches, schema=RESULT_SCHEMA)
+    return src.mapInPandas(run_batches, schema=schema)
 
 
 def _ensure_parallelism(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -140,28 +160,5 @@ def extract_turns_v3_udf(spark: SparkSession, transcripts: DataFrame,
                          drawer_dict: list[str],
                          threshold: float = 0.85) -> DataFrame:
     """V3-variant extraction (IssuerBatchProcessorV3 semantics)."""
-    bc = spark.sparkContext.broadcast(drawer_dict)
-    names = [f.name for f in V3_SCHEMA.fields]
-
-    def run_batches(pdf_iter):
-        dd = bc.value
-        cache: dict = {}
-        for pdf in pdf_iter:
-            out: dict[str, list] = {n: [] for n in names[2:]}
-            for text, role, tool in zip(pdf["text"], pdf["role"], pdf["tool"]):
-                rec = oracle_turn.extract_turn_v3(
-                    None if text is None or isinstance(text, float) else text,
-                    role,
-                    None if tool is None or isinstance(tool, float) else tool,
-                    dd, threshold, cache,
-                )
-                for n in names[2:]:
-                    out[n].append(rec[n])
-            out_pdf = pd.DataFrame(out)
-            out_pdf.insert(0, "conv_id", pdf["conv_id"].values)
-            out_pdf.insert(1, "turn_idx", pdf["turn_idx"].values)
-            yield out_pdf[names]
-
-    cols = ["conv_id", "turn_idx", "role", "text", "tool"]
-    src = _ensure_parallelism(spark, transcripts.select(*cols))
-    return src.mapInPandas(run_batches, schema=V3_SCHEMA)
+    return _map_turns(spark, transcripts, V3_SCHEMA,
+                      oracle_turn.extract_turn_v3, drawer_dict, threshold)

@@ -31,19 +31,6 @@ from pyspark.sql import types as T
 
 from cheque_ocr_project_spark.operators.dedup import batch_polyhash
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("kind", T.StringType()),
-    T.StructField("payload", T.BinaryType()),
-    T.StructField("meta", T.StructType([
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("duration_ms", T.IntegerType()),
-    ])),
-])
-
 
 def media_from_documents(docs: DataFrame) -> DataFrame:
     """Deterministic media table derived from the documents table: payload
@@ -156,14 +143,6 @@ def image_features(media: DataFrame) -> DataFrame:
     return media.filter(F.col("kind") == "image").mapInPandas(
         batches, schema=IMAGE_FEATURES_SCHEMA
     )
-
-
-RESIZE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("payload", T.BinaryType()),
-])
 
 
 def resize_images(media: DataFrame, scale_percent: int = 50) -> DataFrame:

@@ -18,8 +18,6 @@ import re
 
 from cheque_ocr_project_spark.oracle import vocab
 
-_ALPHA = re.compile(r"[A-Za-z]")
-_DIGIT = re.compile(r"[0-9]")
 _NON_ALPHA = re.compile(r"[^A-Za-z]")   # count via one sub() pass — same
 _NON_DIGIT = re.compile(r"[^0-9]")      # count as len(findall(class)), faster
 _OIZ_RUN = re.compile(r"O{4,}|I{4,}|Z{4,}")

@@ -49,9 +49,6 @@ RESULT_FIELDS = (
 )
 
 
-V3_RESULT_FIELDS = ("issuer_v3", "confidence_v3", "matched_with", "status_v3")
-
-
 def extract_turn_v3(text: str | None, role: str | None, tool: str | None,
                     drawer_dict: list[str],
                     threshold: float = issuer_mod.DEFAULT_THRESHOLD_V3,

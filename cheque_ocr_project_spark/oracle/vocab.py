@@ -267,6 +267,21 @@ PAYEE_PATTERNS = (
     r"([A-Z][A-Z\s\.]{3,30})\s+(?:RUPEES|RS\.?)",
     r"^([A-Z][A-Z\s\.]{5,50})$",
 )
+# lookahead-free rewrites of PAYEE_PATTERNS for RE2 (DuckDB has no
+# lookahead) — group 1 is identical (the asserted terminator becomes
+# consumed; capture unaffected)
+PAYEE_PATTERNS_SQLSAFE = (
+    r"PAY\s*TO\s*[:\s]*([A-Z][A-Z\s\.]+?)(\s+RUPEES|\s+RS\.?|\s*$)",
+    r"ORDER\s*OF\s*[:\s]*([A-Z][A-Z\s\.]+?)(\s+RUPEES|\s+RS\.?|\s*$)",
+    r"[Pp][Aa][Yy]\s*[:\s]*([A-Z][A-Z\s\.]{2,30})",
+    r"BEARER\s*[:\s]*([A-Z][A-Z\s\.]+)",
+    r"OR\s*BEARER\s*[:\s]*([A-Z][A-Z\s\.]+)",
+    r"FAVOUR\s+OF\s*[:\s]*([A-Z][A-Z\s\.]+)",
+    r"FAVOR\s+OF\s*[:\s]*([A-Z][A-Z\s\.]+)",
+    r"BENEFICIARY\s*[:\s]*([A-Z][A-Z\s\.]+)",
+    r"([A-Z][A-Z\s\.]{3,30})\s+(RUPEES|RS\.?)",
+    r"^([A-Z][A-Z\s\.]{5,50})$",
+)
 
 # --- cheque_classifier.py:73-120 --------------------------------------------
 GOVT_MARKERS_HIGH = (

@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 from cheque_ocr_project_spark.operators.extract import par
 from cheque_ocr_project_spark.sources import scratch
 from cheque_ocr_project_spark.sources.io import (
-    documents_as_transcripts, read_documents, read_events,
+    TRANSCRIPT_KEYS_SQL, documents_as_transcripts, read_documents,
+    read_events,
 )
 from cheque_ocr_project_spark.streaming.stateful import (
     SESSION_GAP_US, conversation_progress, streaming_sessionize,
@@ -609,12 +610,9 @@ def q_conversation_progress(spark, sf_dir):
 
 # mirrors streaming/stateful._PAYEE_MARKERS (substring containment on the
 # uppercased text, null -> '') and the documents_as_transcripts key split
-# (SQL twin of the conv_id/turn_idx expressions in flagship.py)
-SQL_CONVERSATION_PROGRESS = """
+SQL_CONVERSATION_PROGRESS = f"""
 WITH t AS (
-  SELECT source || '-' || CAST(doc_id // 2147483648 AS VARCHAR) AS conv_id,
-         CAST(doc_id % 2147483648 AS INT) AS turn_idx,
-         upper(coalesce(text, '')) AS u
+  SELECT {TRANSCRIPT_KEYS_SQL}, upper(coalesce(text, '')) AS u
   FROM documents
 )
 SELECT conv_id,
@@ -712,10 +710,9 @@ def q_turn_repetition(spark, sf_dir):
 # must be bit-equal to it (same proof obligation as sessionize_chunked
 # vs SQL_SESSIONIZE); list inputs are distinct so
 # |a ∪ b| = |a| + |b| - |a ∩ b|
-SQL_TURN_REPETITION = """
+SQL_TURN_REPETITION = f"""
 WITH tr AS (
-  SELECT source || '-' || CAST(doc_id // 2147483648 AS VARCHAR) AS conv_id,
-         CAST(doc_id % 2147483648 AS INT) AS turn_idx,
+  SELECT {TRANSCRIPT_KEYS_SQL},
          list_distinct(regexp_extract_all(lower(coalesce(text, '')),
                                           '[a-z]+')) AS toks
   FROM documents

@@ -29,35 +29,13 @@ from cheque_ocr_project_spark.operators.extract import par
 from cheque_ocr_project_spark.oracle import vocab
 from cheque_ocr_project_spark.sources.io import read_documents
 
-# lookahead-free rewrites of vocab.PAYEE_PATTERNS — group 1 is identical
-# (the asserted terminator becomes consumed; capture unaffected)
-PAYEE_PATTERNS_SQLSAFE = (
-    r"PAY\s*TO\s*[:\s]*([A-Z][A-Z\s\.]+?)(\s+RUPEES|\s+RS\.?|\s*$)",
-    r"ORDER\s*OF\s*[:\s]*([A-Z][A-Z\s\.]+?)(\s+RUPEES|\s+RS\.?|\s*$)",
-    r"[Pp][Aa][Yy]\s*[:\s]*([A-Z][A-Z\s\.]{2,30})",
-    r"BEARER\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"OR\s*BEARER\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"FAVOUR\s+OF\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"FAVOR\s+OF\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"BENEFICIARY\s*[:\s]*([A-Z][A-Z\s\.]+)",
-    r"([A-Z][A-Z\s\.]{3,30})\s+(RUPEES|RS\.?)",
-    r"^([A-Z][A-Z\s\.]{5,50})$",
-)
-
-
 # --------------------------------------------------------------------------
 # native column builders (oracle parity; shared by the queries below)
 # --------------------------------------------------------------------------
 
-_COLLAPSE = lambda c: F.trim(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
-
-# Python str.strip() strips ALL whitespace; Spark trim() strips spaces only.
-_PYSTRIP = lambda c: F.regexp_replace(c, r"^\s+|\s+$", "")  # noqa: E731
-
-
 def _plain_main(text: Column) -> Column:
     """= oracle.boilerplate.extract_plain."""
-    lines = F.filter(F.transform(F.split(text, "\n"), _COLLAPSE), lambda x: x != "")
+    lines = F.filter(F.transform(F.split(text, "\n"), C.collapse_ws), lambda x: x != "")
     return F.array_join(lines, "\n")
 
 
@@ -160,7 +138,7 @@ def _payee_raw_col(u: Column) -> Column:
         return g & rx
 
     cands = F.array(*[
-        F.when(hit(p, g), _PYSTRIP(F.regexp_extract(u, p, 1)))
+        F.when(hit(p, g), C.pystrip(F.regexp_extract(u, p, 1)))
         for p, g in zip(vocab.PAYEE_PATTERNS, _PAYEE_GUARDS)
     ])
     sel = F.filter(cands, lambda c: c.isNotNull() & ~C.is_bank_or_metadata(c))
@@ -179,7 +157,7 @@ def q_clean_text(spark, sf_dir):
 
 def sql_clean_text():
     return (
-        f"SELECT doc_id, {D.clean_text_v1_sql('text')} AS cleaned FROM documents"
+        f"SELECT doc_id, {D.clean_text_v1('text')} AS cleaned FROM documents"
     )
 
 
@@ -198,8 +176,8 @@ def q_junk_flag(spark, sf_dir):
 def sql_junk_flag():
     return (
         "SELECT doc_id, "
-        f"{D.is_junk_v1_sql('upper(text)')} AS is_junk, "
-        f"{D.is_garbage_sql('upper(text)')} AS is_garbage "
+        f"{D.is_junk_v1('upper(text)')} AS is_junk, "
+        f"{D.is_garbage('upper(text)')} AS is_garbage "
         "FROM documents"
     )
 
@@ -249,36 +227,22 @@ def q_classify(spark, sf_dir):
 
 
 def sql_classify():
-    u = "upper(text)"
-    cat3 = f"({u} LIKE '%GOVERNMENT ACCOUNT%' OR {u} LIKE '%GOVT ACCOUNT%')"
-    cat2 = (
-        f"({u} LIKE '%NOT TRANSFERABLE%' AND "
-        f"{D.any_term_sql(u, ('GOVT', 'GOVERNMENT', 'PAO', 'DDO'))})"
-    )
-    cat1 = (
-        f"({D.any_term_sql(u, vocab.GOVT_MARKERS_HIGH)} OR "
-        f"{D.any_term_sql(u, vocab.GOVT_MARKERS_MEDIUM)})"
-    )
-    dd = D.any_term_sql(u, vocab.DD_MARKERS)
-    mc = D.any_term_sql(u, vocab.MC_MARKERS)
-    crossed = f"regexp_matches({u}, {D.rx('|'.join(f'(?:{p})' for p in vocab.CROSSED_PATTERNS))})"
-    n_words = f"len(regexp_extract_all({u}, '[^ \\t\\n\\x0b\\f\\r]+'))"
-    is_self = f"({u} LIKE '%SELF%' AND {n_words} < 15)"
+    c = D.cheque_classes("upper(text)")
     return f"""
 SELECT doc_id,
-  CASE WHEN {cat3} THEN 'GOVT_GOVT_ACCOUNT'
-       WHEN {cat2} THEN 'GOVT_NON_TRANSFERABLE'
-       WHEN {cat1} THEN 'GOVT_NEGOTIABLE'
-       WHEN {dd} THEN 'DEMAND_DRAFT'
-       WHEN {mc} THEN 'MANAGERS_CHEQUE'
-       WHEN {crossed} THEN 'CROSSED'
-       WHEN {is_self} THEN 'SELF'
+  CASE WHEN {c.cat3} THEN 'GOVT_GOVT_ACCOUNT'
+       WHEN {c.cat2} THEN 'GOVT_NON_TRANSFERABLE'
+       WHEN {c.cat1} THEN 'GOVT_NEGOTIABLE'
+       WHEN {c.dd} THEN 'DEMAND_DRAFT'
+       WHEN {c.mc} THEN 'MANAGERS_CHEQUE'
+       WHEN {c.crossed} THEN 'CROSSED'
+       WHEN {c.is_self} THEN 'SELF'
        ELSE 'ORDER' END AS cheque_type,
-  CASE WHEN {cat3} THEN 0.98 WHEN {cat2} THEN 0.95 WHEN {cat1} THEN 0.92
-       WHEN {dd} THEN 0.95 WHEN {mc} THEN 0.95 WHEN {crossed} THEN 0.85
-       WHEN {is_self} THEN 0.8 ELSE 0.7 END AS type_conf,
-  ({cat3} OR {cat2} OR {cat1}) AS is_government,
-  CASE WHEN {cat3} THEN 'III' WHEN {cat2} THEN 'II' WHEN {cat1} THEN 'I'
+  CASE WHEN {c.cat3} THEN 0.98 WHEN {c.cat2} THEN 0.95 WHEN {c.cat1} THEN 0.92
+       WHEN {c.dd} THEN 0.95 WHEN {c.mc} THEN 0.95 WHEN {c.crossed} THEN 0.85
+       WHEN {c.is_self} THEN 0.8 ELSE 0.7 END AS type_conf,
+  ({c.cat3} OR {c.cat2} OR {c.cat1}) AS is_government,
+  CASE WHEN {c.cat3} THEN 'III' WHEN {c.cat2} THEN 'II' WHEN {c.cat1} THEN 'I'
        END AS govt_category
 FROM documents"""
 
@@ -317,7 +281,7 @@ def q_payee_extract(spark, sf_dir):
         return F.when(C.any_term(u, guards), ex)
 
     cands = F.array(*[
-        cand(p, g) for p, g in zip(PAYEE_PATTERNS_SQLSAFE, _PAYEE_GUARDS)
+        cand(p, g) for p, g in zip(vocab.PAYEE_PATTERNS_SQLSAFE, _PAYEE_GUARDS)
     ])
     sel = F.filter(
         cands,
@@ -330,18 +294,13 @@ def q_payee_extract(spark, sf_dir):
 
 def sql_payee_extract():
     u = "regexp_replace(upper(text), '[\\n\\r]+$', '')"
-    bank_meta = (
-        f"({D.any_term_sql('cand', vocab.PAYEE_BANK_TERMS)} OR "
-        f"{D.any_term_sql('cand', vocab.PAYEE_METADATA_TERMS)})"
-    )
     whens = []
-    for p in PAYEE_PATTERNS_SQLSAFE:
+    for p in vocab.PAYEE_PATTERNS_SQLSAFE:
         cand = f"trim(regexp_extract({u}, {D.rx(p)}, 1))"
-        cond = (
-            f"regexp_matches({u}, {D.rx(p)}) AND NOT "
-            + bank_meta.replace("cand", cand)
+        whens.append(
+            f"WHEN regexp_matches({u}, {D.rx(p)}) "
+            f"AND NOT {D.is_bank_or_metadata(cand)} THEN {cand}"
         )
-        whens.append(f"WHEN {cond} THEN {cand}")
     case = "CASE " + " ".join(whens) + " ELSE NULL END"
     return f"SELECT doc_id, {case} AS payee_raw FROM documents"
 
@@ -362,7 +321,7 @@ def q_payee_clean(spark, sf_dir):
 
 def sql_payee_clean():
     return (
-        f"SELECT doc_id, {D.clean_payee_sql('text[1:80]')} AS payee_cleaned "
+        f"SELECT doc_id, {D.clean_payee('text[1:80]')} AS payee_cleaned "
         "FROM documents"
     )
 
@@ -377,7 +336,7 @@ def q_spelling_correct(spark, sf_dir):
         s = F.replace(s, F.lit(wrong), F.lit(right))
     for word in vocab.GARBAGE_WORDS:
         s = F.replace(s, F.lit(word), F.lit(""))
-    s = F.trim(F.regexp_replace(s, r"\s+", " "))
+    s = C.collapse_ws(s)
     s = F.regexp_replace(s, r"[^A-Z\s]", "")
     out = F.when(
         F.col("text").isNull() | (F.length("text") == 0), F.lit("UNKNOWN")
@@ -387,7 +346,7 @@ def q_spelling_correct(spark, sf_dir):
 
 def sql_spelling_correct():
     return (
-        f"SELECT doc_id, {D.correct_spelling_sql('text')} AS corrected "
+        f"SELECT doc_id, {D.correct_spelling('text')} AS corrected "
         "FROM documents"
     )
 
@@ -513,13 +472,7 @@ def q_clean_text_v3(spark, sf_dir):
 
 
 def sql_clean_text_v3():
-    s = "replace(translate(upper(text), '|!015', 'IIOIS'), '8', 'B')"
-    s = D.rr(s, r"[^A-Za-z0-9 ,.&/-]", " ")
-    s = D.collapse_ws(s)
-    return (
-        f"SELECT doc_id, CASE WHEN text IS NULL OR length(text) = 0 THEN '' "
-        f"ELSE {s} END AS cleaned_v3 FROM documents"
-    )
+    return f"SELECT doc_id, {D.clean_text_v3('text')} AS cleaned_v3 FROM documents"
 
 
 # ---------------------------------------------------------------------------
@@ -565,23 +518,9 @@ def q_junk_v3(spark, sf_dir):
 
 def sql_junk_v3():
     u = "upper(text)"
-    bank_hit = " OR ".join(
-        f"(contains({u}, {D.q(b)}) AND {len(b)} >= length({u}) * 0.7)"
-        for b in vocab.BANK_NAMES_V3
-    )
-    alpha = D.n_alpha_sql(u)
-    digits = D.n_digit_sql(u)
-    total = f"length({u})"
-    valid = f"""({u} IS NOT NULL AND length({u}) >= 3
-      AND NOT {D.is_junk_v3_sql(u)}
-      AND NOT ({bank_hit})
-      AND (CASE WHEN {digits} > 0 AND {alpha} = 0 THEN length({u}) >= 8
-           ELSE NOT (CASE WHEN {alpha} > 0
-                     THEN ({alpha} * 1.0 / {total} < 0.3 AND {total} > 5
-                           AND NOT ({digits} > 5))
-                     ELSE FALSE END) END))"""
     return f"""
-SELECT doc_id, {D.is_junk_v3_sql(u)} AS is_junk_v3, {valid} AS is_valid_business_v3
+SELECT doc_id, {D.is_junk_v3(u)} AS is_junk_v3,
+  {D.is_valid_business_v3(u)} AS is_valid_business_v3
 FROM documents"""
 
 
@@ -597,11 +536,10 @@ def q_remove_prefixes(spark, sf_dir):
 
 
 def sql_remove_prefixes():
-    s = "upper(text[1:60])"
-    s = D.chain_regex_strip_sql(s, vocab.PREFIX_PATTERNS_V3)
-    # pystrip (all whitespace), not trim (spaces only): the oracle strips
-    # trailing newlines too — latent divergence on \n-terminated snippets
-    return f"SELECT doc_id, {D.pystrip_sql(s)} AS deprefixed FROM documents"
+    return (
+        f"SELECT doc_id, {D.remove_prefixes_v3('text[1:60]')} AS deprefixed "
+        "FROM documents"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -714,9 +652,7 @@ def q_issuer_simple(spark, sf_dir):
         cand = F.substring_index(cand, delim, 1)
     words = F.filter(F.split(cand, r"\s+"), lambda w: w != "")
     joined = F.array_join(words, " ")
-    cleaned = F.trim(
-        F.regexp_replace(F.regexp_replace(joined, r"[^\w\s]", " "), r"\s+", " ")
-    )
+    cleaned = C.collapse_ws(F.regexp_replace(joined, r"[^\w\s]", " "))
     # materialize the multi-referenced derivations once per row (words is
     # referenced 3x, cleaned 2x, for_result 2x — inlined, each reference
     # would re-run the whole split/regex chain)
@@ -813,18 +749,6 @@ def sql_score_name():
 # C3/C4/C5: government payee rule over documents
 # ---------------------------------------------------------------------------
 
-def _is_govt_entity_sql(x: str) -> str:
-    u = f"upper(coalesce({x}, ''))"
-    entities = D.any_term_sql(u, vocab.GOVT_ENTITIES)
-    pats = f"regexp_matches({u}, {D.rx('|'.join(f'(?:{p})' for p in vocab.GOVT_PAYEE_PATTERNS))})"
-    words = f"len(regexp_extract_all({u}, '[^ \\t\\n\\x0b\\f\\r]+'))"
-    indicators = D.any_term_sql(u, vocab.GOVT_INDICATORS)
-    return (
-        f"(length({u}) > 0 AND ({entities} OR {pats} "
-        f"OR ({words} <= 4 AND {indicators})))"
-    )
-
-
 def q_govt_entity(spark, sf_dir):
     cand = F.substring(F.col("text"), 1, 60)
     u = F.upper(F.col("text"))
@@ -859,12 +783,12 @@ def sql_govt_entity():
         whens.append(f"WHEN contains({u}, {D.q(ind)}) THEN {expr}")
     section = "CASE " + " ".join(whens) + " ELSE NULL END"
     payable = (
-        f"CASE WHEN {section} IS NOT NULL THEN {_is_govt_entity_sql(section)} "
+        f"CASE WHEN {section} IS NOT NULL THEN {D.is_government_entity(section)} "
         "ELSE FALSE END"
     )
     return f"""
 SELECT doc_id,
-  {_is_govt_entity_sql("text[1:60]")} AS is_govt_entity,
+  {D.is_government_entity("text[1:60]")} AS is_govt_entity,
   {payable} AS payable_to_govt,
   {section} AS payee_section
 FROM documents"""
@@ -878,12 +802,10 @@ def q_officer_designation(spark, sf_dir):
 
 
 def sql_officer_designation():
-    u = "upper(text)"
-    whens = " ".join(
-        f"WHEN contains({u}, {D.q(d)}) THEN {D.q(d)}"
-        for d in vocab.OFFICER_DESIGNATIONS
+    return (
+        f"SELECT doc_id, {D.designation_literal('upper(text)')} AS designation "
+        "FROM documents"
     )
-    return f"SELECT doc_id, CASE {whens} ELSE NULL END AS designation FROM documents"
 
 
 # ---------------------------------------------------------------------------
@@ -926,22 +848,16 @@ FROM documents"""
 # ---------------------------------------------------------------------------
 
 def q_line_confidence(spark, sf_dir):
-    t = F.col("text")
-    conf = F.when(F.length(t) == 0, F.lit(0.0)).otherwise(
-        0.6 + 0.4 * (C.n_alpha(t) / F.length(t))
-    )
     return read_documents(spark, sf_dir).select(
-        "doc_id", F.round(conf, 6).alias("line_conf")
+        "doc_id", F.round(C.line_conf(F.col("text")), 6).alias("line_conf")
     )
 
 
 def sql_line_confidence():
-    alpha = D.n_alpha_sql("text")
-    return f"""
-SELECT doc_id,
-  round(CASE WHEN length(text) = 0 THEN 0.0
-        ELSE 0.6 + 0.4 * ({alpha} * 1.0 / length(text)) END, 6) AS line_conf
-FROM documents"""
+    return (
+        f"SELECT doc_id, round({D.line_conf('text')}, 6) AS line_conf "
+        "FROM documents"
+    )
 
 
 def q_window_order(spark, sf_dir):
@@ -967,7 +883,7 @@ def q_clean_text_v2(spark, sf_dir):
     s = F.upper(t)
     s = F.translate(s, "01|568", "OIISGB")
     s = F.regexp_replace(s, r"[^A-Z0-9 .,&/-]", " ")
-    s = F.trim(F.regexp_replace(s, r"\s+", " "))
+    s = C.collapse_ws(s)
     out = F.when(t.isNull() | (F.length(t) == 0), F.lit("XXX")).otherwise(s)
     return par(read_documents(spark, sf_dir)).select("doc_id", out.alias("cleaned_v2"))
 
@@ -1046,12 +962,12 @@ def _clean_name_fast_col(cand: Column) -> Column:
     u = F.upper(cand)
     for wrong, right in vocab.FAST_SPELLING_CORRECTIONS:
         u = F.replace(u, F.lit(wrong), F.lit(right))
-    u = F.trim(F.regexp_replace(F.regexp_replace(u, r"[^\w\s]", " "), r"\s+", " "))
+    u = C.collapse_ws(F.regexp_replace(u, r"[^\w\s]", " "))
     return F.when(F.length(u) >= 3, u).otherwise(F.lit("UNKNOWN"))
 
 
 def _clean_name_fast_sql(cand: str) -> str:
-    s = D.chain_replace_sql(f"upper({cand})", vocab.FAST_SPELLING_CORRECTIONS)
+    s = D.chain_replace(f"upper({cand})", vocab.FAST_SPELLING_CORRECTIONS)
     s = D.collapse_ws(D.rr(s, r"[^\w\s]", " "))
     return f"CASE WHEN length({s}) >= 3 THEN {s} ELSE 'UNKNOWN' END"
 
@@ -1231,13 +1147,7 @@ def q_main_content_plain(spark, sf_dir):
 
 
 def sql_main_content_plain():
-    line = "trim(regexp_replace(x, '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'))"
-    return f"""
-SELECT doc_id,
-  array_to_string(
-    list_filter(list_transform(string_split(text, chr(10)), x -> {line}),
-                x -> x <> ''), chr(10)) AS main_text
-FROM documents"""
+    return f"SELECT doc_id, {D.plain_main('text')} AS main_text FROM documents"
 
 
 # ---------------------------------------------------------------------------

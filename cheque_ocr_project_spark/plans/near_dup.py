@@ -365,7 +365,7 @@ cand AS (
 # ---------------------------------------------------------------------------
 
 def q_dedup_exact(spark, sf_dir):
-    norm = F.trim(F.regexp_replace(F.upper(F.col("text")), r"\s+", " "))
+    norm = DD.normalize_text(F.col("text"))
     df = read_documents(spark, sf_dir).withColumn("fingerprint", F.md5(norm))
     return df.groupBy("fingerprint").agg(
         F.min("doc_id").alias("keeper_doc_id"),

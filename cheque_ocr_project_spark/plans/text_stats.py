@@ -980,7 +980,7 @@ FROM documents"""
 
 
 def q_fingerprint(spark, sf_dir):
-    norm = F.trim(F.regexp_replace(F.upper(F.col("text")), r"\s+", " "))
+    norm = C.collapse_ws(F.upper(F.col("text")))
     return par(read_documents(spark, sf_dir)).select(
         "doc_id", F.md5(norm).alias("fingerprint")
     )

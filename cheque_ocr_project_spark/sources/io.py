@@ -7,16 +7,16 @@ or a path. Sinks:
 
 - ``write_results``      — append-only result table (S6/S7 analog)
 - ``merge_upsert``       — keyed update of a master table (S8: the
-  reference's update_original_dbf by filename-stem key). With an Iceberg
-  catalog this is `MERGE INTO`; the portable fallback implements the same
-  semantics as join + column coalesce + full overwrite.
+  reference's update_original_dbf by filename-stem key): the semantics of
+  `MERGE INTO ... WHEN MATCHED THEN UPDATE` as join + column coalesce.
 - ``stem_key``           — the reference's filename-stem join key
   (issuer_processor_v.py:552-560: lower-cased Path(...).stem)
 
 The registry queries read the test tables of a scale-factor directory
 (``read_documents`` / ``read_events`` / ``read_embeddings``), and the
 flagship rows see the documents table as transcripts
-(``documents_as_transcripts``).
+(``documents_as_transcripts``; its DuckDB twin is
+``DOCUMENTS_AS_TRANSCRIPTS_SQL``).
 """
 
 from __future__ import annotations
@@ -102,8 +102,8 @@ def documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # reduced mod 2^31 alone (colliding (conv_id, turn_idx) keys fan
         # out in the per-key SQL-twin joins). The injective split — high
         # bits into conv_id, low 31 bits into turn_idx — maps EVERY int64
-        # id to a unique key. The SQL twins in plans/flagship.py and
-        # plans/events.py mirror the same expressions.
+        # id to a unique key. TRANSCRIPT_KEYS_SQL below is the one DuckDB
+        # form of the same expressions.
         # F.concat (not concat_ws) so a NULL source yields NULL conv_id,
         # matching the SQL twins' null-propagating || operator.
         # Injectivity assumption: no ``source`` value ends in '-<digits>'
@@ -122,6 +122,23 @@ def documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
         tool.alias("tool"),
         F.to_timestamp(F.lit("2026-01-01 00:00:00")).alias("ts"),
     )
+
+
+# DuckDB twins of documents_as_transcripts for the oracle SQL: the key
+# split alone, and the whole mapping without ``ts`` (no twin reads it).
+TRANSCRIPT_KEYS_SQL = (
+    "source || '-' || CAST(doc_id // 2147483648 AS VARCHAR) AS conv_id, "
+    "CAST(doc_id % 2147483648 AS INT) AS turn_idx"
+)
+DOCUMENTS_AS_TRANSCRIPTS_SQL = f"""
+  SELECT {TRANSCRIPT_KEYS_SQL},
+         CASE WHEN doc_id % 3 = 0 THEN 'user'
+              WHEN doc_id % 3 = 1 THEN 'assistant' ELSE 'tool' END AS role,
+         text,
+         CASE WHEN doc_id % 3 = 2 THEN
+           (CASE WHEN doc_id % 2 = 0 THEN 'web_fetch' ELSE 'pdf_extract' END)
+         END AS tool
+  FROM documents"""
 
 
 def write_results(df: DataFrame, path: str, mode: str = "append") -> None:
@@ -153,24 +170,6 @@ def merge_upsert(target: DataFrame, updates: DataFrame, keys: list[str],
     for c in update_cols:
         merged = merged.withColumn(c, F.coalesce(F.col(f"__new_{c}"), F.col(c)))
     return merged.drop(*[f"__new_{c}" for c in update_cols])
-
-
-def merge_into_iceberg(spark: SparkSession, target_table: str,
-                       updates: DataFrame, keys: list[str],
-                       update_cols: list[str]) -> bool:
-    """True Iceberg `MERGE INTO` when a catalog with the target exists;
-    returns False (caller falls back to merge_upsert) otherwise."""
-    try:
-        updates.createOrReplaceTempView("__merge_updates")
-        on = " AND ".join(f"t.{k} = u.{k}" for k in keys)
-        sets = ", ".join(f"t.{c} = u.{c}" for c in update_cols)
-        spark.sql(
-            f"MERGE INTO {target_table} t USING __merge_updates u "
-            f"ON {on} WHEN MATCHED THEN UPDATE SET {sets}"
-        )
-        return True
-    except Exception:
-        return False
 
 
 def drop_table_and_location(spark: SparkSession, table: str) -> None:

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cheque_ocr_project_spark.functions import columns as C
-from cheque_ocr_project_spark.oracle import cleaning, grammars, predicates
+from cheque_ocr_project_spark.oracle import cleaning, grammars, predicates, vocab
 from tests.conftest import assert_frames_equal, oracle_frame
 
 _CHARS = (
@@ -103,6 +103,18 @@ def test_junk_garbage_parity(fuzz_sdf):
     got_garb = _spark_col(fuzz_sdf, C.is_garbage(F.col("s")))
     exp_garb = [predicates.is_garbage(s) for s in CASES]
     _compare(got_garb, exp_garb, "is_garbage")
+
+
+def test_any_term_plan_is_hash_seed_free(spark):
+    """A frozenset vocab ORs its terms sorted, so junk_flag's plan does not
+    change with PYTHONHASHSEED; a tuple vocab keeps its source order (the
+    short-circuit order)."""
+    col = F.col("s")
+    fs = vocab.JUNK_TERMS_V1
+    assert str(C.any_term(col, fs)) == str(C.any_term(col, sorted(fs)))
+    tup = vocab.GOVT_ENTITIES
+    assert str(C.any_term(col, tup)) == str(C.any_term(col, list(tup)))
+    assert str(C.any_term(col, tup)) != str(C.any_term(col, sorted(tup)))
 
 
 def test_payee_extract_parity(fuzz_sdf):

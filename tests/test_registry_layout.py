@@ -1,11 +1,15 @@
 """The registry is split by query family: each Spark query lives in the
-module of its DuckDB twin, no module outgrows review, and the family
-merge drops no row."""
+module of its DuckDB twin, no module outgrows review, the family merge
+drops no row, and the twins render oracle predicates through
+functions/ducksql.py instead of their own copies."""
 
+import ast
+import inspect
 from functools import partial
 from pathlib import Path
 
 import cheque_ocr_project_spark
+from cheque_ocr_project_spark.functions import ducksql as D
 from cheque_ocr_project_spark.plans import queries as Q
 
 PKG = Path(cheque_ocr_project_spark.__file__).parent
@@ -34,3 +38,45 @@ def test_twin_lives_beside_its_query():
 def test_family_merge_keeps_every_row():
     sizes = {f.__name__: len(f.REGISTRY) for f in Q.FAMILIES}
     assert sum(sizes.values()) == len(Q.queries()) == 114, sizes
+
+
+# oracle predicates and stages that several DuckDB twins render
+SHARED_RENDERERS = (
+    "any_term", "n_alpha", "n_digit", "collapse_ws", "pystrip", "words_of",
+    "is_garbage", "is_junk_v1", "is_junk_v3", "is_valid_drawer_v1",
+    "looks_like_real_name", "is_bank_or_metadata", "is_government_entity",
+    "designation_literal", "clean_text_v1", "clean_text_v3",
+    "remove_prefixes_v3", "clean_payee", "line_conf",
+)
+
+
+def test_plans_define_no_ducksql_renderer():
+    """functions/ducksql.py is the one DuckDB renderer of each oracle
+    predicate and stage: it defines the shared ones, and no plans/ module
+    defines a top-level function under the name of a public renderer."""
+    renderers = {
+        n for n, f in vars(D).items()
+        if inspect.isfunction(f) and f.__module__ == D.__name__
+        and not n.startswith("_")
+    }
+    copies = {}
+    for p in (PKG / "plans").glob("*.py"):
+        tree = ast.parse(p.read_text())
+        names = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
+        shadowed = names & (renderers | set(SHARED_RENDERERS))
+        if shadowed:
+            copies[p.name] = sorted(shadowed)
+    assert not copies, copies
+    assert set(SHARED_RENDERERS) <= renderers, (
+        sorted(set(SHARED_RENDERERS) - renderers)
+    )
+
+
+def test_transcript_key_split_in_sql_once():
+    """The documents→transcripts key split is written in SQL only beside
+    its Spark twin, sources/io.py."""
+    holders = sorted(
+        str(p.relative_to(PKG)) for p in PKG.rglob("*.py")
+        if "// 2147483648" in p.read_text()
+    )
+    assert holders == ["sources/io.py"], holders

@@ -1,32 +1,8 @@
-"""Scale mechanics: salted skew distribution, model-UDF plumbing."""
+"""Scale mechanics: skew handling, plan shapes, model-UDF plumbing."""
 
 from pyspark.sql import functions as F
 
 from cheque_ocr_project_spark.operators import models as M
-from cheque_ocr_project_spark.plans import pipeline as P
-
-
-def test_salted_repartition_spreads_heavy_conversation(spark):
-    """A single 10k-turn conversation must not pin one task (north rule):
-    salting on turn_idx spreads it across the requested partitions."""
-    big = spark.range(10000).select(
-        F.lit("monster-conv").alias("conv_id"),
-        F.col("id").cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.lit("PAY TO : GUPTA TRADERS").alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("timestamp").alias("ts"),
-    )
-    parts = (
-        P.salted_repartition(big, num_partitions=16, salt_buckets=16)
-        .withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
-    sizes = [r["count"] for r in parts]
-    assert len(sizes) >= 8, f"heavy conv landed on only {len(sizes)} partitions"
-    assert max(sizes) < 10000 * 0.25, f"skewed partition: max={max(sizes)}"
 
 
 def test_ner_udf_plumbing(spark, transcripts_sdf):
