@@ -14,6 +14,11 @@ dialect, explicit 'g' flag for global replace). ``any_term`` renders its
 terms sorted, so no SQL text depends on set order (the hash seed). Every
 fragment follows the oracle condition for condition, in the oracle's
 float operation order, so doubles are bit-identical.
+
+A renderer pastes its argument once per read, dozens of times for the
+predicates: pass a column or lambda parameter, never a derived expression.
+An ordered cascade (the first candidate that passes a predicate) goes
+through ``first_where``, which renders the predicate once.
 """
 
 from __future__ import annotations
@@ -86,6 +91,15 @@ def any_term(expr: str, terms) -> str:
     """OR-of-contains (null-safe False), = columns.any_term."""
     ors = " OR ".join(f"contains({expr}, {q(t)})" for t in sorted(terms))
     return f"coalesce(({ors}), FALSE)"
+
+
+def first_where(cands, pred) -> str:
+    """The first non-NULL candidate, in order, that passes ``pred`` (NULL
+    if none; = the Catalyst twins' F.get(F.filter(...), 0)); a guarded
+    candidate is ``CASE WHEN <guard> THEN <cand> END``. ``pred`` is rendered
+    once, over a lambda parameter that no renderer uses inside."""
+    ok = f"fw_c IS NOT NULL AND {pred('fw_c')}"
+    return f"list_filter([{', '.join(cands)}], fw_c -> {ok})[1]"
 
 
 def n_alpha(expr: str) -> str:
@@ -303,8 +317,8 @@ def _bank_hits(expr: str) -> str:
 
 def is_valid_drawer_v1(t: str) -> str:
     """= oracle.predicates.is_valid_drawer_v1 over *cleaned* (non-null,
-    upper) text.
-    ``t`` must be a simple column reference (it is repeated many times)."""
+    upper) text. ``t`` must be a column or lambda parameter: it is read
+    about a hundred times."""
     alpha = n_alpha(t)
     digits = n_digit(t)
     total = f"length({t})"
@@ -479,14 +493,12 @@ def cheque_classes(u: str) -> ChequeClasses:
 def payee_raw(u: str) -> str:
     """= oracle.grammars.extract_payee over upper-cased text, with the
     lookahead-free patterns: first candidate that is not bank/metadata."""
-    whens = []
-    for p in vocab.PAYEE_PATTERNS_SQLSAFE:
-        cand = pystrip(f"regexp_extract({u}, {rx(p)}, 1)")
-        whens.append(
-            f"WHEN regexp_matches({u}, {rx(p)}) "
-            f"AND NOT {is_bank_or_metadata(cand)} THEN {cand}"
-        )
-    return "CASE " + " ".join(whens) + " ELSE NULL END"
+    return first_where(
+        [f"CASE WHEN regexp_matches({u}, {rx(p)}) "
+         f"THEN {pystrip(f'regexp_extract({u}, {rx(p)}, 1)')} END"
+         for p in vocab.PAYEE_PATTERNS_SQLSAFE],
+        lambda c: f"NOT {is_bank_or_metadata(c)}",
+    )
 
 
 def is_government_entity(x: str) -> str:

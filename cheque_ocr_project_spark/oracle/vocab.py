@@ -293,9 +293,6 @@ GOVT_MARKERS_MEDIUM = (
     "ACCREDITED BANK", "NOT TRANSFERABLE", "CHEQUE DRAWING DDO", "DDO",
     "DRAWING AND DISBURSING OFFICER",
 )
-GOVT_MARKERS_LOW = (
-    "GOVT", "GOVERNMENT", "TREASURY", "PUBLIC ACCOUNT", "CONSOLIDATED FUND",
-)
 DD_MARKERS = ("DEMAND DRAFT", "DD", "DRAFT", "BANK DRAFT")
 MC_MARKERS = (
     "MANAGERS CHEQUE", "MANAGER'S CHEQUE", "MC",

@@ -102,7 +102,7 @@ lines_rel AS (
          unnest(lines) AS raw_line
   FROM turns
 ),
-lines2 AS (
+lines2 AS MATERIALIZED (  -- else DuckDB inlines `cleaned` into every predicate read
   SELECT conv_id, turn_idx, line_idx,
          {D.line_conf('raw_line')} AS conf,
          {D.clean_text_v3(D.pystrip('raw_line'))} AS cleaned
@@ -129,23 +129,26 @@ per_turn AS (
          CAST(NULL AS VARCHAR) AS matched_with
   FROM turns t
   LEFT JOIN top1 p ON p.conv_id = t.conv_id AND p.turn_idx = t.turn_idx
+),
+judged AS MATERIALIZED (
+  SELECT *, {D.is_junk_v3('issuer_v3')} AS is_junk,
+         {D.is_valid_drawer_v3('issuer_v3')} AS is_valid
+  FROM per_turn
 )
 SELECT conv_id, turn_idx, issuer_v3, confidence_v3, matched_with,
   CASE
-    WHEN issuer_v3 <> 'NO_VALID_TEXT' AND {D.is_junk_v3('issuer_v3')}
-      THEN 'JUNK-FILTERED'
+    WHEN issuer_v3 <> 'NO_VALID_TEXT' AND is_junk THEN 'JUNK-FILTERED'
     WHEN confidence_v3 >= {threshold} AND length(issuer_v3) > 0
          AND issuer_v3 <> 'NO_VALID_TEXT'
-      THEN (CASE WHEN {D.is_valid_drawer_v3('issuer_v3')}
+      THEN (CASE WHEN is_valid
                  THEN (CASE WHEN {short_review} THEN 'REVIEW-SHORT'
                             ELSE 'AUTO-UPDATED' END)
                  ELSE 'INVALID-TEXT' END)
-    WHEN length(issuer_v3) > 0 AND issuer_v3 <> 'NO_VALID_TEXT'
-         AND {D.is_valid_drawer_v3('issuer_v3')}
+    WHEN length(issuer_v3) > 0 AND issuer_v3 <> 'NO_VALID_TEXT' AND is_valid
       THEN 'REVIEW'
     ELSE 'NO-TEXT'
   END AS status_v3
-FROM per_turn"""
+FROM judged"""
 
 
 # ---------------------------------------------------------------------------
@@ -154,7 +157,7 @@ FROM per_turn"""
 
 def sql_flagship_nofuzzy(
         threshold: float = oracle_issuer.DEFAULT_THRESHOLD_V1) -> str:
-    u = "upper(full_text)"
+    u = "u"  # upper(full_text), bound in turn_level
     c = D.cheque_classes(u)
     has_text = "(n_lines > 0)"
 
@@ -183,23 +186,15 @@ def sql_flagship_nofuzzy(
     marker_rx = D.rx("FOR |F/O |F/ |PROP ")
     for_line_rx = D.rx("FOR |F/O |F/|PROP ")
 
-    scan_whens = []
-    for m in vocab.FOR_MARKERS:
-        cand = D.pystrip(f"substr(stext, strpos({u_raw}, {D.q(m)}) + {len(m)})")
-        scan_whens.append(
-            f"WHEN contains({u_raw}, {D.q(m)}) AND {D.looks_like_real_name(cand)} "
-            f"THEN {cand}"
-        )
-    scan_cand = "CASE " + " ".join(scan_whens) + " ELSE NULL END"
+    def after_marker(col, u_col):  # per FOR marker in order; NULL if absent
+        return [
+            f"CASE WHEN contains({u_col}, {D.q(m)}) THEN "
+            f"{D.pystrip(f'substr({col}, strpos({u_col}, {D.q(m)}) + {len(m)})')} END"
+            for m in vocab.FOR_MARKERS
+        ]
 
-    for_whens = []
-    for m in vocab.FOR_MARKERS:
-        pot = D.pystrip(f"substr(cleaned, strpos(cleaned, {D.q(m)}) + {len(m)})")
-        for_whens.append(
-            f"WHEN contains(cleaned, {D.q(m)}) AND {D.is_valid_drawer_v1(pot)} "
-            f"THEN {pot}"
-        )
-    for_cand = "CASE " + " ".join(for_whens) + " ELSE NULL END"
+    scan_cand = D.first_where(after_marker("stext", u_raw), D.looks_like_real_name)
+    for_cand = D.first_where(after_marker("cleaned", "cleaned"), D.is_valid_drawer_v1)
 
     common_set = ", ".join(D.q(w) for w in sorted(vocab.COMMON_NAME_PARTS))
     fwords = D.words_of("final_text")
@@ -224,11 +219,12 @@ turns AS (
 turn_level AS (
   SELECT conv_id, turn_idx, lines, len(lines) AS n_lines,
          array_to_string(lines, ' ') AS full_text,
+         upper(array_to_string(lines, ' ')) AS u,
          {D.mean_line_conf('lines')} AS confidence
   FROM turns
 ),
 classified AS (
-  SELECT conv_id, turn_idx, lines, n_lines, full_text, confidence,
+  SELECT conv_id, turn_idx, lines, n_lines, full_text, u, confidence,
     CASE WHEN NOT {has_text} THEN NULL
          WHEN {c.cat3} THEN 'GOVT_GOVT_ACCOUNT'
          WHEN {c.cat2} THEN 'GOVT_NON_TRANSFERABLE'
@@ -286,7 +282,7 @@ lines_rel AS (
          unnest(lines) AS raw_line
   FROM turn_level
 ),
-lines2 AS (
+lines2 AS MATERIALIZED (  -- else DuckDB inlines `cleaned` into every predicate read
   SELECT conv_id, turn_idx, line_idx,
          {D.line_conf('raw_line')} AS conf,
          {D.pystrip('raw_line')} AS stext,

@@ -293,16 +293,16 @@ def q_payee_extract(spark, sf_dir):
 
 
 def sql_payee_extract():
-    u = "regexp_replace(upper(text), '[\\n\\r]+$', '')"
-    whens = []
-    for p in vocab.PAYEE_PATTERNS_SQLSAFE:
-        cand = f"trim(regexp_extract({u}, {D.rx(p)}, 1))"
-        whens.append(
-            f"WHEN regexp_matches({u}, {D.rx(p)}) "
-            f"AND NOT {D.is_bank_or_metadata(cand)} THEN {cand}"
-        )
-    case = "CASE " + " ".join(whens) + " ELSE NULL END"
-    return f"SELECT doc_id, {case} AS payee_raw FROM documents"
+    payee = D.first_where(
+        [f"CASE WHEN regexp_matches(u, {D.rx(p)}) "
+         f"THEN trim(regexp_extract(u, {D.rx(p)}, 1)) END"
+         for p in vocab.PAYEE_PATTERNS_SQLSAFE],
+        lambda c: f"NOT {D.is_bank_or_metadata(c)}",
+    )
+    return f"""
+SELECT doc_id, {payee} AS payee_raw
+FROM (SELECT doc_id, regexp_replace(upper(text), '[\\n\\r]+$', '') AS u
+      FROM documents)"""
 
 
 # ---------------------------------------------------------------------------
@@ -697,10 +697,7 @@ def sql_issuer_simple():
     cand = f"trim(string_split({u}, 'FOR')[-1])"
     for delim in vocab.SIMPLE_FOR_DELIMITERS:
         d = D.q(delim) if delim != "\n" else "chr(10)"
-        cand = (
-            f"CASE WHEN contains({cand}, {d}) "
-            f"THEN split_part({cand}, {d}, 1) ELSE {cand} END"
-        )
+        cand = f"split_part({cand}, {d}, 1)"  # whole string if d is absent
     words = f"regexp_extract_all({cand}, '[^ \\t\\n\\x0b\\f\\r]+')"
     joined = f"array_to_string({words}, ' ')"
     cleaned = D.collapse_ws(D.rr(joined, r"[^\w\s]", " "))
@@ -711,9 +708,7 @@ def sql_issuer_simple():
     return f"""
 SELECT doc_id,
   CASE WHEN length(coalesce(text, '')) < 20 THEN 'UNKNOWN'
-       WHEN {bank} IS NOT NULL THEN {bank}
-       WHEN {for_result} IS NOT NULL THEN {for_result}
-       ELSE 'UNKNOWN' END AS issuer_simple
+       ELSE coalesce({bank}, {for_result}, 'UNKNOWN') END AS issuer_simple
 FROM documents"""
 
 
@@ -775,23 +770,21 @@ def q_govt_entity(spark, sf_dir):
 
 
 def sql_govt_entity():
-    section = None
     u = "upper(text)"
-    whens = []
-    for ind in vocab.PAYEE_SECTION_INDICATORS:
-        expr = f"substr({u}, strpos({u}, {D.q(ind)}) + {len(ind)}, 200)"
-        whens.append(f"WHEN contains({u}, {D.q(ind)}) THEN {expr}")
-    section = "CASE " + " ".join(whens) + " ELSE NULL END"
-    payable = (
-        f"CASE WHEN {section} IS NOT NULL THEN {D.is_government_entity(section)} "
-        "ELSE FALSE END"
-    )
+    section = "CASE " + " ".join(
+        f"WHEN contains({u}, {D.q(ind)}) "
+        f"THEN substr({u}, strpos({u}, {D.q(ind)}) + {len(ind)}, 200)"
+        for ind in vocab.PAYEE_SECTION_INDICATORS
+    ) + " ELSE NULL END"
     return f"""
-SELECT doc_id,
-  {D.is_government_entity("text[1:60]")} AS is_govt_entity,
-  {payable} AS payable_to_govt,
-  {section} AS payee_section
-FROM documents"""
+SELECT doc_id, is_govt_entity,
+  CASE WHEN payee_section IS NOT NULL
+       THEN {D.is_government_entity("payee_section")} ELSE FALSE END
+    AS payable_to_govt,
+  payee_section
+FROM (SELECT doc_id, {D.is_government_entity("text[1:60]")} AS is_govt_entity,
+             {section} AS payee_section
+      FROM documents)"""
 
 
 def q_officer_designation(spark, sf_dir):

@@ -14,7 +14,7 @@ import pytest
 
 from cheque_ocr_project_spark.functions import ducksql as D
 from cheque_ocr_project_spark.oracle import (
-    cleaning, govrules, issuer, predicates, vocab,
+    cleaning, govrules, grammars, issuer, predicates, vocab,
 )
 from cheque_ocr_project_spark.sources import synth
 from tests.test_parity_fuzz import CASES as FUZZ
@@ -77,6 +77,8 @@ CASES = [
      ("texts", "stripped", "terms")),
     (lambda x: D.designation_literal(f"upper({x})"),
      govrules.extract_officer_designation, ("texts", "stripped", "terms")),
+    (lambda x: D.payee_raw(f"upper({x})"), grammars.extract_payee,
+     ("texts", "lines")),
     (D.clean_text_v1, cleaning.clean_text_v1, ("texts", "stripped")),
     (D.clean_text_v3, cleaning.clean_text_v3, ("texts", "stripped")),
     (D.remove_prefixes_v3, cleaning.remove_prefixes_v3, ("cleaned_v3",)),

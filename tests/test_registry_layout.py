@@ -1,7 +1,8 @@
 """The registry is split by query family: each Spark query lives in the
 module of its DuckDB twin, no module outgrows review, the family merge
-drops no row, and the twins render oracle predicates through
-functions/ducksql.py instead of their own copies."""
+drops no row, the twins render oracle predicates through
+functions/ducksql.py instead of their own copies, and no twin pastes a
+renderer once per read."""
 
 import ast
 import inspect
@@ -14,6 +15,8 @@ from cheque_ocr_project_spark.plans import queries as Q
 
 PKG = Path(cheque_ocr_project_spark.__file__).parent
 MAX_LINES = 1500
+MAX_SQL_CHARS = 100_000
+MAX_SQL_TOTAL = 700_000
 
 
 def test_no_module_over_max_lines():
@@ -40,13 +43,24 @@ def test_family_merge_keeps_every_row():
     assert sum(sizes.values()) == len(Q.queries()) == 114, sizes
 
 
+def test_oracle_sql_texts_stay_small():
+    """A renderer pastes its argument once per read, so a twin that passes
+    a derived expression, or repeats a predicate once per cascade branch,
+    multiplies its text (the flagship statement was 263 KB before its
+    cascades went through ducksql.first_where)."""
+    sizes = {name: len(sql) for name, sql in Q.oracle_sql().items()}
+    big = {name: n for name, n in sizes.items() if n > MAX_SQL_CHARS}
+    assert not big, big
+    assert sum(sizes.values()) <= MAX_SQL_TOTAL, sum(sizes.values())
+
+
 # oracle predicates and stages that several DuckDB twins render
 SHARED_RENDERERS = (
     "any_term", "n_alpha", "n_digit", "collapse_ws", "pystrip", "words_of",
     "is_garbage", "is_junk_v1", "is_junk_v3", "is_valid_drawer_v1",
     "looks_like_real_name", "is_bank_or_metadata", "is_government_entity",
     "designation_literal", "clean_text_v1", "clean_text_v3",
-    "remove_prefixes_v3", "clean_payee", "line_conf",
+    "remove_prefixes_v3", "clean_payee", "line_conf", "first_where",
 )
 
 
