@@ -18,27 +18,9 @@ import json
 import os
 import time
 
-from pyspark.sql import SparkSession
-
-from bench import driver_memory
+from bench import build_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-def build_session() -> SparkSession:
-    return (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("cheque_ocr_project_spark-bench-extra")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_memory())
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
 
 
 def main() -> None:

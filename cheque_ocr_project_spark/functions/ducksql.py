@@ -414,9 +414,10 @@ def is_junk_v3(u: str) -> str:
     )
 
 
-def is_valid_business_v3(u: str) -> str:
+def is_valid_business_v3(u: str, junk: str | None = None) -> str:
     """= oracle.predicates.is_valid_business_name_v3 over an upper-cased
-    expression."""
+    expression. ``junk``: a column already holding ``is_junk_v3(u)``, so
+    the caller renders that predicate once per value."""
     bank_hit = " OR ".join(
         f"(contains({u}, {q(b)}) AND {len(b)} >= length({u}) * 0.7)"
         for b in vocab.BANK_NAMES_V3
@@ -425,7 +426,7 @@ def is_valid_business_v3(u: str) -> str:
     digits = n_digit(u)
     total = f"length({u})"
     return f"""({u} IS NOT NULL AND length({u}) >= 3
-      AND NOT {is_junk_v3(u)}
+      AND NOT {junk or is_junk_v3(u)}
       AND NOT ({bank_hit})
       AND (CASE WHEN {digits} > 0 AND {alpha} = 0 THEN length({u}) >= 8
            ELSE NOT (CASE WHEN {alpha} > 0
@@ -434,12 +435,13 @@ def is_valid_business_v3(u: str) -> str:
                      ELSE FALSE END) END))"""
 
 
-def is_valid_drawer_v3(u: str) -> str:
+def is_valid_drawer_v3(u: str, junk: str | None = None) -> str:
     """= oracle.predicates.is_valid_drawer_v3 over an upper-cased
-    expression."""
+    expression; ``junk`` as in is_valid_business_v3."""
+    junk = junk or is_junk_v3(u)
     return (
         f"({u} IS NOT NULL AND length({u}) >= 3 "
-        f"AND NOT {is_junk_v3(u)} AND {is_valid_business_v3(u)})"
+        f"AND NOT {junk} AND {is_valid_business_v3(u, junk)})"
     )
 
 

@@ -79,9 +79,12 @@ def sql_ann_lsh_topk(dim: int = 64, k: int = 5, n_planes: int = 4,
                      n_bands: int = 24, seed: int = 29,
                      max_bucket: int | None = None,
                      multiprobe: bool = False) -> str:
-    corpus_sig = _sig_cte("embeddings", "vec_id", "embedding",
-                          dim, n_planes, n_bands, seed, max_bucket)
-    query_sig = _sig_cte("q", "query_id", "qvec", dim, n_planes, n_bands, seed)
+    # one signature relation: the queries are embeddings rows, so their
+    # band keys are its vec_id < 5 slice; only the corpus side is capped
+    sig = _sig_cte("embeddings", "vec_id", "embedding",
+                   dim, n_planes, n_bands, seed)
+    cap = ("" if max_bucket is None else
+           f"\n  QUALIFY count(*) OVER (PARTITION BY band_key) <= {max_bucket}")
     sim = COSINE.format(a="e.embedding", b="qq.qvec")
     probe_cte = ""
     if multiprobe:
@@ -104,8 +107,13 @@ query_sig AS (
 WITH q AS (
   SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5
 ),
-corpus_sig AS {corpus_sig},
-{'query_sig_exact' if multiprobe else 'query_sig'} AS {query_sig}{probe_cte},
+sig AS {sig},
+corpus_sig AS (
+  SELECT vec_id, band_key FROM sig{cap}
+),
+{'query_sig_exact' if multiprobe else 'query_sig'} AS (
+  SELECT vec_id AS query_id, band_key FROM sig WHERE vec_id < 5
+){probe_cte},
 cand AS (
   SELECT DISTINCT qs.query_id, cs.vec_id
   FROM corpus_sig cs JOIN query_sig qs USING (band_key)

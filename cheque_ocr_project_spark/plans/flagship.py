@@ -103,16 +103,17 @@ lines_rel AS (
   FROM turns
 ),
 lines2 AS MATERIALIZED (  -- else DuckDB inlines `cleaned` into every predicate read
-  SELECT conv_id, turn_idx, line_idx,
-         {D.line_conf('raw_line')} AS conf,
-         {D.clean_text_v3(D.pystrip('raw_line'))} AS cleaned
-  FROM lines_rel
+  SELECT *, {D.is_junk_v3('cleaned')} AS junk FROM (
+    SELECT conv_id, turn_idx, line_idx,
+           {D.line_conf('raw_line')} AS conf,
+           {D.clean_text_v3(D.pystrip('raw_line'))} AS cleaned
+    FROM lines_rel
+  )
 ),
 cands AS (
   SELECT conv_id, turn_idx, line_idx, conf, cleaned
   FROM lines2
-  WHERE cleaned <> '' AND NOT {D.is_junk_v3('cleaned')}
-    AND {D.is_valid_drawer_v3('cleaned')}
+  WHERE cleaned <> '' AND NOT junk AND {D.is_valid_drawer_v3('cleaned', 'junk')}
 ),
 top1 AS (
   SELECT conv_id, turn_idx, cleaned AS best_cleaned, conf AS best_conf
@@ -131,9 +132,8 @@ per_turn AS (
   LEFT JOIN top1 p ON p.conv_id = t.conv_id AND p.turn_idx = t.turn_idx
 ),
 judged AS MATERIALIZED (
-  SELECT *, {D.is_junk_v3('issuer_v3')} AS is_junk,
-         {D.is_valid_drawer_v3('issuer_v3')} AS is_valid
-  FROM per_turn
+  SELECT *, {D.is_valid_drawer_v3('issuer_v3', 'is_junk')} AS is_valid
+  FROM (SELECT *, {D.is_junk_v3('issuer_v3')} AS is_junk FROM per_turn)
 )
 SELECT conv_id, turn_idx, issuer_v3, confidence_v3, matched_with,
   CASE

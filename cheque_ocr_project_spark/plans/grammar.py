@@ -517,11 +517,11 @@ def q_junk_v3(spark, sf_dir):
 
 
 def sql_junk_v3():
-    u = "upper(text)"
     return f"""
-SELECT doc_id, {D.is_junk_v3(u)} AS is_junk_v3,
-  {D.is_valid_business_v3(u)} AS is_valid_business_v3
-FROM documents"""
+SELECT doc_id, is_junk_v3,
+  {D.is_valid_business_v3('u', 'is_junk_v3')} AS is_valid_business_v3
+FROM (SELECT doc_id, u, {D.is_junk_v3('u')} AS is_junk_v3
+      FROM (SELECT doc_id, upper(text) AS u FROM documents))"""
 
 
 # ---------------------------------------------------------------------------
