@@ -19,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import sys
 import tempfile
 import time
@@ -191,13 +192,16 @@ def main() -> None:
     # feed all workers through one serial scan task — an artifact of the
     # small testdata, not of the pipeline (real inputs have >> cores splits).
     staged = tempfile.mkdtemp(prefix="bench_transcripts_")
-    replicated_transcripts(spark, SF_DIR, REPLICATION).repartition(
-        CPUS
-    ).write.mode("overwrite").parquet(staged)
-    transcripts = spark.read.parquet(staged)
-    n_turns = transcripts.count()
-    run_record(FLAGSHIP)                    # warmup pass, untimed
-    flagship_sec, min_loads[FLAGSHIP] = timed(FLAGSHIP, passes=3)
+    try:
+        replicated_transcripts(spark, SF_DIR, REPLICATION).repartition(
+            CPUS
+        ).write.mode("overwrite").parquet(staged)
+        transcripts = spark.read.parquet(staged)
+        n_turns = transcripts.count()
+        run_record(FLAGSHIP)                # warmup pass, untimed
+        flagship_sec, min_loads[FLAGSHIP] = timed(FLAGSHIP, passes=3)
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)
     timings["flagship_extract"] = flagship_sec
     turns_per_sec = n_turns / flagship_sec if flagship_sec else 0.0
 

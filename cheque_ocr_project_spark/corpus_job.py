@@ -13,11 +13,13 @@ Composes the contract operators the way a data team runs them nightly:
   4. ``summary.txt`` — driver-small per-stage row counts.
 
 Each stage writes an idempotent parquet artifact plus a ``_STAGE_DONE``
-marker carrying its row count; a killed run restarted with ``--resume``
-skips every completed stage and recomputes only what is missing — the
-corpus-side analog of job.py's checkpointed extraction resume (reference
-behavior: run_production.py:48-80). The SURVIVORS stage keeps the
-canonical documents layout (``survivors/documents.parquet``), so any
+marker carrying its row count (from the artifact's parquet footers; the
+marker is published by temp file + rename, so it is whole or absent); a
+killed run restarted with ``--resume`` skips every completed stage and
+recomputes only what is missing — the corpus-side analog of job.py's
+checkpointed extraction resume (reference behavior:
+run_production.py:48-80). The SURVIVORS stage keeps the canonical
+documents layout (``survivors/documents.parquet``), so any
 contract operator can be pointed at that directory unchanged (packed/
 splits are derived relations, written as ``<stage>/data.parquet``).
 
@@ -38,6 +40,7 @@ from pyspark.sql import SparkSession
 
 from cheque_ocr_project_spark.plans import queries as Q
 from cheque_ocr_project_spark.plans.corpus import q_corpus_filter_v3
+from cheque_ocr_project_spark.sources.io import parquet_stats, write_atomic
 
 DOCS_SCHEMA_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
 
@@ -62,8 +65,9 @@ def _stage_done(stage_dir: Path) -> bool:
     return _marker(stage_dir).exists()
 
 
-def _finish_stage(stage_dir: Path, rows: int, t0: float) -> None:
-    _marker(stage_dir).write_text(json.dumps(
+def _finish_stage(stage_dir: Path, artifact: Path, t0: float) -> None:
+    rows, _ = parquet_stats(artifact)
+    write_atomic(_marker(stage_dir), json.dumps(
         {"rows": rows, "wall_ms": round((time.time() - t0) * 1000, 1)}
     ))
 
@@ -100,13 +104,9 @@ def run(spark: SparkSession, input_dir: str, output_dir: str,
         ids = q_corpus_filter_v3(spark, input_dir).select("doc_id")
         docs = spark.read.parquet(f"{input_dir}/documents.parquet")
         kept = docs.join(ids, "doc_id").select(*DOCS_SCHEMA_COLS)
-        kept.write.mode("overwrite").parquet(
-            str(surv_dir / "documents.parquet")
-        )
-        n = spark.read.parquet(
-            str(surv_dir / "documents.parquet")
-        ).count()
-        _finish_stage(surv_dir, n, t0)
+        artifact = surv_dir / "documents.parquet"
+        kept.write.mode("overwrite").parquet(str(artifact))
+        _finish_stage(surv_dir, artifact, t0)
     counts["survivors"] = json.loads(_marker(surv_dir).read_text())["rows"]
 
     # stages 2+3 read the survivors directory through the SAME contract
@@ -117,9 +117,9 @@ def run(spark: SparkSession, input_dir: str, output_dir: str,
         if not (resume and _stage_done(stage_dir)):
             t0 = time.time()
             df = Q.queries()[qname](spark, str(surv_dir))
-            df.write.mode("overwrite").parquet(str(stage_dir / "data.parquet"))
-            n = spark.read.parquet(str(stage_dir / "data.parquet")).count()
-            _finish_stage(stage_dir, n, t0)
+            artifact = stage_dir / "data.parquet"
+            df.write.mode("overwrite").parquet(str(artifact))
+            _finish_stage(stage_dir, artifact, t0)
         counts[stage] = json.loads(_marker(stage_dir).read_text())["rows"]
 
     (out / "summary.txt").write_text(

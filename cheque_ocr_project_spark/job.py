@@ -33,7 +33,7 @@ def build_args(argv=None):
     ap.add_argument("--wave-size", type=int, default=16,
                     help="buckets committed per manifest wave (crash loses "
                          "at most one in-flight wave; each wave adds a fixed "
-                         "~0.8 s on 4 local cores, so fewer, larger waves "
+                         "~0.45 s on 4 local cores, so fewer, larger waves "
                          "are cheaper)")
     ap.add_argument("--stage-input", action="store_true",
                     help="write the bucketed input once (partitioned by "

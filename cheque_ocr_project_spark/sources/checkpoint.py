@@ -12,9 +12,10 @@ Protocol:
 3. extraction runs on pending; results written with dynamic partition
    overwrite into ``<output>/data/bucket=<b>/`` (re-running a bucket is
    idempotent — it replaces exactly its own directory)
-4. per-bucket metrics (row count, byte size, order-independent input
-   fingerprint) appended to the manifest only AFTER the data commit, so a
-   crash between 3 and 4 re-processes the bucket (at-least-once, idempotent)
+4. per-bucket metrics (committed row count and parquet bytes,
+   order-independent input fingerprint) appended to the manifest only AFTER
+   the data commit, so a crash between 3 and 4 re-processes the bucket
+   (at-least-once, idempotent)
 
 Input fingerprint: the xor-sum of per-row ``xxhash64(conv_id, turn_idx,
 text)`` per bucket, recorded in each manifest entry with the bucket's input
@@ -22,10 +23,10 @@ row count.
 
 Bookkeeping cost: one aggregate pass over the input yields every bucket's id,
 fingerprint and input row count up front (at most ``n`` rows, collected to
-the driver). After each wave's commit, the per-bucket metrics are read back
-from the wave's own ``data/bucket=<b>`` directories only, with a known
-schema, so no wave re-scans the input, infers a schema or lists the buckets
-earlier waves committed.
+the driver). After each wave's commit, each of its buckets is measured from
+the parquet footers and file sizes of its ``data/bucket=<b>`` directory
+(``io.parquet_stats``), so the wave's write is its only Spark job: no wave
+re-scans the input or reads committed data back.
 """
 
 from __future__ import annotations
@@ -37,12 +38,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cheque_ocr_project_spark.sources.io import parquet_stats, write_atomic
+
 BUCKET_COL = "bucket"
-# what the per-wave read-back needs of the committed data: the measured
-# columns plus the partition column
-_COMMITTED_SCHEMA = (
-    f"main_text string, payee_cleaned string, issuer string, {BUCKET_COL} long"
-)
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -74,11 +72,8 @@ def append_manifest(output_dir: str, entries: list[dict]) -> None:
     path = Path(output_dir) / "_manifest"
     path.mkdir(parents=True, exist_ok=True)
     stamp = f"commit-{int(time.time() * 1000)}-{len(entries)}"
-    tmp = path / f".{stamp}.tmp"
-    with tmp.open("w") as fh:
-        for e in entries:
-            fh.write(json.dumps(e) + "\n")
-    tmp.rename(path / f"{stamp}.json")  # atomic publish
+    write_atomic(path / f"{stamp}.json",
+                 "".join(json.dumps(e) + "\n" for e in entries))
 
 
 def input_fingerprints(transcripts_b: DataFrame) -> DataFrame:
@@ -110,10 +105,13 @@ def run_with_checkpoint(
     """Extraction with per-bucket lineage + metrics; resumable.
 
     Buckets are processed in WAVES of ``wave_size``: each wave's data is
-    committed (dynamic partition overwrite — a wave replaces only its own
-    bucket directories) and its manifest entries appended BEFORE the next
-    wave starts, so a driver crash loses at most one in-flight wave, not
-    the whole run. ``wall_ms`` is the honest wall of the entry's own wave.
+    committed (dynamic partition overwrite, set on the write alone — a
+    wave replaces only its own bucket directories, and the caller's
+    session conf is untouched) and its manifest entries appended BEFORE
+    the next wave starts, so a driver crash loses at most one in-flight
+    wave, not the whole run. Each entry's ``rows`` and ``bytes`` are its
+    bucket's committed parquet record count and file bytes, read from the
+    footers. ``wall_ms`` is the honest wall of the entry's own wave.
 
     Input-pass trade-off: one aggregate pass up front fingerprints every
     bucket; then by default each wave re-filters the raw input on its
@@ -126,12 +124,11 @@ def run_with_checkpoint(
     right mode at 100 TB). The staged copy is reused on resume when its
     ``_staged.committed`` marker exists.
 
-    Wave-count trade-off: each wave costs three Spark jobs (its write and
-    the two-stage read-back of its metrics) and a fixed wall, whatever its
-    size, mostly Python worker start-up per task: ~0.8 s on 4 local cores
-    (12k turns in 64 buckets took 4.3 s in one wave, 6.7 s in four and
-    10.0 s in eight). Fewer, larger waves are cheaper; smaller waves lose
-    less to a crash.
+    Wave-count trade-off: each wave costs one Spark job (its write) and a
+    fixed wall, whatever its size, mostly Python worker start-up per task:
+    ~0.45 s on 4 local cores (12k turns in 64 buckets, min of 3: 2.0-2.3 s
+    in one wave, 3.3-3.6 s in four, 5.1-5.6 s in eight). Fewer, larger
+    waves are cheaper; smaller waves lose less to a crash.
 
     ``_fail_after_waves`` is a test hook simulating a mid-run driver crash
     AFTER that many wave commits.
@@ -140,15 +137,13 @@ def run_with_checkpoint(
     """
     from cheque_ocr_project_spark.plans import pipeline as P
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     tb = with_bucket(transcripts, n_buckets)
     if stage_input:
         staged_dir = f"{output_dir}/_staged"
         marker = Path(staged_dir + ".committed")
         if not marker.exists():
             tb.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staged_dir)
-            marker.write_text("ok\n")  # after the write commits (crash-safe)
+            write_atomic(marker, "ok\n")  # after the write commits
         tb = spark.read.parquet(staged_dir).withColumn(
             BUCKET_COL, F.col(BUCKET_COL).cast("long")
         )
@@ -162,11 +157,6 @@ def run_with_checkpoint(
                 "rows": 0, "waves": 0}
 
     data_dir = f"{output_dir}/data"
-    byte_size = (
-        F.octet_length(F.coalesce(F.col("main_text"), F.lit("")))
-        + F.octet_length(F.coalesce(F.col("payee_cleaned"), F.lit("")))
-        + F.octet_length(F.coalesce(F.col("issuer"), F.lit("")))
-    )
 
     total_rows, waves = 0, 0
     for w0 in range(0, len(pending_ids), wave_size):
@@ -178,36 +168,19 @@ def run_with_checkpoint(
             engine=engine,
         )
         result = with_bucket(result, n_buckets)
-        result.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(data_dir)
+        (result.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy(BUCKET_COL).parquet(data_dir))
         wall_ms = int((time.perf_counter() - t0) * 1000)
 
-        # Metrics from the committed data (not the in-flight plan), read
-        # from this wave's bucket directories only. A bucket whose
-        # extraction yielded zero rows has no directory and no stats row.
-        wave_dirs = [f"{data_dir}/{BUCKET_COL}={b}" for b in wave_ids]
-        wave_dirs = [d for d in wave_dirs if Path(d).is_dir()]
-        stats = {}
-        if wave_dirs:
-            committed = (
-                spark.read.schema(_COMMITTED_SCHEMA)
-                .option("basePath", data_dir)
-                .parquet(*wave_dirs)
-            )
-            stats = {
-                r[BUCKET_COL]: (r["rows"], r["bytes"])
-                for r in committed.groupBy(BUCKET_COL).agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.sum(byte_size).alias("bytes"),
-                ).collect()
-            }
         # Key the entries on the ATTEMPTED bucket ids, not the committed
-        # output: a bucket whose extraction yields zero output rows must
-        # still be committed to the manifest (rows/bytes = 0), else it is
-        # re-processed on every resume forever and processed_buckets
-        # overcounts.
+        # output: a bucket whose extraction yields zero output rows has no
+        # directory, measures (0, 0) and must still be committed to the
+        # manifest, else it is re-processed on every resume forever and
+        # processed_buckets overcounts.
         entries = []
         for b in wave_ids:
-            rows, nbytes = stats.get(b, (0, 0))
+            rows, nbytes = parquet_stats(f"{data_dir}/{BUCKET_COL}={b}")
             entries.append({
                 "bucket": b,
                 "rows": rows,

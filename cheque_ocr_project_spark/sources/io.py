@@ -5,12 +5,13 @@ The transcripts table is an Iceberg-layout table in production
 directory with the same schema, so every reader takes either a table name
 or a path. Sinks:
 
-- ``write_results``      — append-only result table (S6/S7 analog)
 - ``merge_upsert``       — keyed update of a master table (S8: the
   reference's update_original_dbf by filename-stem key): the semantics of
   `MERGE INTO ... WHEN MATCHED THEN UPDATE` as join + column coalesce.
 - ``stem_key``           — the reference's filename-stem join key
   (issuer_processor_v.py:552-560: lower-cased Path(...).stem)
+- ``parquet_stats``      — (rows, bytes) of committed parquet, no Spark job
+- ``write_atomic``       — publish a manifest or marker by temp file + rename
 
 The registry queries read the test tables of a scale-factor directory
 (``read_documents`` / ``read_events`` / ``read_embeddings``), and the
@@ -21,6 +22,9 @@ flagship rows see the documents table as transcripts
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -141,8 +145,26 @@ DOCUMENTS_AS_TRANSCRIPTS_SQL = f"""
   FROM documents"""
 
 
-def write_results(df: DataFrame, path: str, mode: str = "append") -> None:
-    df.write.mode(mode).parquet(path)
+def parquet_stats(path: str | Path) -> tuple[int, int]:
+    """(rows, bytes) of the parquet files directly under ``path``: rows from
+    each footer's record count, bytes from the file sizes (Iceberg's
+    per-file ``record_count`` and ``file_size_in_bytes``). A directory that
+    does not exist measures (0, 0)."""
+    rows = nbytes = 0
+    for f in Path(path).glob("*.parquet"):
+        rows += pq.read_metadata(f).num_rows
+        nbytes += f.stat().st_size
+    return rows, nbytes
+
+
+def write_atomic(path: str | Path, text: str) -> None:
+    """Write ``text`` to a hidden temp file beside ``path``, then rename it
+    over ``path``: a crash or a full disk mid-write leaves no truncated
+    file under the final name."""
+    path = Path(path)
+    tmp = path.with_name(f".{path.name}.tmp")
+    tmp.write_text(text)
+    tmp.replace(path)
 
 
 def stem_key(col: Column) -> Column:

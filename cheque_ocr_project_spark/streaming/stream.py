@@ -62,8 +62,6 @@ def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
 
     stream = read_transcript_stream(spark, input_dir)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -73,6 +71,7 @@ def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
         (
             out.withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(output_dir)
         )
@@ -123,7 +122,6 @@ def stream_novelty(spark: SparkSession, input_dir: str, output_dir: str,
         .option("maxFilesPerTrigger", 1)
         .load(input_dir)
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -137,6 +135,7 @@ def stream_novelty(spark: SparkSession, input_dir: str, output_dir: str,
             novel.select("doc_id", F.length("text").alias("text_len"))
             .withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(output_dir)
         )

@@ -125,6 +125,29 @@ def test_payee_extract_parity(fuzz_sdf):
     _compare(got, exp, "payee_extract")
 
 
+def test_filename_fields_parity(spark):
+    """F17: each sf0.01 row of q_filename_fields carries its document's
+    filename key and the amount, account and date the oracle's
+    grammars.filename_fields parses out of it."""
+    from cheque_ocr_project_spark.plans.grammar import q_filename_fields
+    from tests.test_driver_contract import SF_DIR as sf
+
+    docs = pd.read_parquet(f"{sf}/documents.parquet",
+                           columns=["doc_id", "n_chars"])
+    names = {d: f"P_{d}_{n}.50.tif"
+             for d, n in zip(docs["doc_id"], docs["n_chars"])}
+    rows = q_filename_fields(spark, sf).collect()
+    got = {r.doc_id: (r.filename, r.amount, r.account, r.file_date)
+           for r in rows}
+    assert len(rows) == len(docs) and set(got) == set(names)
+    bad = []
+    for d, name in names.items():
+        f = grammars.filename_fields(name)
+        if got[d] != (name, f["amount"], f["account"], f["date"]):
+            bad.append((d, got[d], name, f))
+    assert not bad, f"{len(bad)} divergences; first: {bad[0]}"
+
+
 # Unicode / whitespace edges beyond the ASCII fuzz alphabet.
 UNICODE_CASES = [
     "FOR R\u00c9SUM\u00c9 TRADERS",   # unicode uppercase beyond ASCII

@@ -561,6 +561,41 @@ def test_corpus_job_stages_chain_and_resume(spark, tmp_path):
     assert counts3 == counts
 
 
+def test_corpus_job_half_written_marker_reruns_stage(spark, tmp_path,
+                                                    monkeypatch):
+    """A stage marker whose write dies halfway (a crash, a full disk) must
+    not mark the stage done: the resumed run recomputes the stage and
+    returns the counts of a clean run."""
+    import errno
+    from pathlib import Path
+
+    from __spark_entry__ import SF0001 as src
+    from cheque_ocr_project_spark import corpus_job as CJ
+    from cheque_ocr_project_spark.plans import queries as Q
+
+    expected = Q.queries()["corpus_filter_v3"](spark, src).count()
+    real_write = Path.write_text
+    failed = []
+
+    def dying_write(self, text, *a, **kw):
+        if "_STAGE_DONE" in self.name and not failed:
+            failed.append(self)
+            real_write(self, text[: len(text) // 2], *a, **kw)
+            raise OSError(errno.ENOSPC, "No space left on device")
+        return real_write(self, text, *a, **kw)
+
+    out = tmp_path / "run"
+    monkeypatch.setattr(Path, "write_text", dying_write)
+    with pytest.raises(OSError):
+        CJ.run(spark, src, str(out))
+    monkeypatch.undo()
+    assert failed
+
+    counts = CJ.run(spark, src, str(out), resume=True)
+    assert counts == {"survivors": expected, "packed": expected,
+                      "splits": expected}
+
+
 def test_ann_quantized_recall_vs_exact(spark):
     """The int8 codes must stay a faithful search surface: per query,
     the quantized top-5 and the exact float top-5 (ann_topk) overlap on
