@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the host's usable cores).
-Every record is the minimum of its measured passes, taken after an
-untimed warm-up (sf0.001 for the queries, one pass for the flagship).
+Every record is the minimum of its measured passes, taken after one
+untimed warm-up pass of the same plan on the same input.
 Prints JSON lines; detail records (all-query sweep, per-pass timings +
 load averages) come first and the FINAL line is the short
 driver-parseable metric record:
@@ -168,23 +168,14 @@ def main() -> None:
             one_pass(rec)
         return min(zip(headline_passes[rec], pass_loads[rec]))
 
-    # Warmup at the smallest SF: pays the one-time codegen/janino compile for
-    # every plan shape (the generated code is path-independent, so the
-    # compile cache hits when the same query runs at the target SF).
-    warm_dir = "/root/testdata/sf0.001"
-    for name in HEADLINE:
-        try:
-            registry[name](spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:
-            pass
-
     # HEADLINE phase FIRST (VERDICT r06 #2): these are the round-over-round
     # record of truth, so they run before the flagship passes saturate the
-    # box.
+    # box. Each query gets one untimed pass at SF_DIR first, as the flagship
+    # does: it pays the codegen compile and warms the scan of the plan that
+    # is then measured.
     min_loads: dict[str, float] = {}
     for name in HEADLINE:
+        run_record(name)                    # warmup pass, untimed
         timings[name], min_loads[name] = timed(name, passes=3)
 
     # flagship extraction throughput. The replicated input is materialized

@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import shutil
 import time
 from pathlib import Path
 
@@ -40,7 +39,9 @@ from pyspark.sql import SparkSession
 
 from cheque_ocr_project_spark.plans import queries as Q
 from cheque_ocr_project_spark.plans.corpus import q_corpus_filter_v3
-from cheque_ocr_project_spark.sources.io import parquet_stats, write_atomic
+from cheque_ocr_project_spark.sources.io import (
+    claim_run_state, parquet_stats, write_atomic,
+)
 
 DOCS_SCHEMA_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
 
@@ -53,7 +54,8 @@ def build_args(argv=None):
     ap.add_argument("--resume", action="store_true",
                     help="skip stages whose _STAGE_DONE marker exists")
     ap.add_argument("--overwrite", action="store_true",
-                    help="discard ALL existing run state first")
+                    help="discard ALL existing run state first (not with "
+                         "--resume)")
     return ap.parse_args(argv)
 
 
@@ -79,20 +81,9 @@ def run(spark: SparkSession, input_dir: str, output_dir: str,
     # destruction is scoped to the paths THIS pipeline writes (job.py's
     # discipline: an --output pointed at a directory that also holds
     # unrelated data must never take it down)
-    state_paths = [out / "survivors", out / "packed", out / "splits",
-                   out / "summary.txt"]
-    if any(p.exists() for p in state_paths):
-        if overwrite:
-            for p in state_paths:
-                if p.is_dir():
-                    shutil.rmtree(p)
-                elif p.exists():
-                    p.unlink()
-        elif not resume:
-            raise SystemExit(
-                f"output {output_dir} already holds run state; pass "
-                "--resume to continue it or --overwrite to discard it"
-            )
+    claim_run_state(output_dir, [out / "survivors", out / "packed",
+                                 out / "splits", out / "summary.txt"],
+                    resume, overwrite)
     out.mkdir(parents=True, exist_ok=True)
 
     counts: dict[str, int] = {}

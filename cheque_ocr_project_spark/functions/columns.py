@@ -1,8 +1,12 @@
 """Native Spark Column builders mirroring the oracle stages.
 
 Everything here compiles to JVM-side Catalyst expressions (whole-stage
-codegen; no Python in the hot path). Each builder cites the oracle function
-it must equal; tests assert bit-equality on the synthetic fixture.
+codegen; no Python in the hot path). This is the one module that builds an
+oracle predicate or stage shared by several queries as a Catalyst Column —
+the twin of functions/ducksql.py, which renders the same stages in DuckDB
+SQL under the same names; both read their regexes and term lists from
+oracle/vocab.py. Each builder cites the oracle function it must equal;
+tests assert bit-equality on the synthetic fixture.
 
 Regex-dialect note (SURVEY.md §7.4): the reference grammars are Python `re`;
 these builders re-express them in Java regex. The equality tests are the
@@ -57,15 +61,28 @@ def count_chars(col: Column, chars: str) -> Column:
     return F.length(c) - F.length(F.translate(c, chars, ""))
 
 
-def replace_not_in(col: Column, chars: str, char_class: str,
+def replace_not_in(col: Column, chars: str, pattern: str,
                    replacement: str) -> Column:
-    """= regexp_replace(col, '[^<char_class>]', replacement), with the regex
-    run only on rows that actually contain an out-of-set char (translate
-    dirty check; most cleaned OCR rows are already in-set)."""
+    """= regexp_replace(col, pattern, replacement) for a negated-class
+    ``pattern`` whose set is the literal ``chars``, with the regex run only
+    on rows that actually contain an out-of-set char (translate dirty check;
+    most cleaned OCR rows are already in-set)."""
     dirty = F.length(F.translate(col, chars, "")) > 0
     return F.when(
-        dirty, F.regexp_replace(col, f"[^{char_class}]", replacement)
+        dirty, F.regexp_replace(col, pattern, replacement)
     ).otherwise(col)
+
+
+def when_chain(cases, otherwise: Column | None = None) -> Column:
+    """CASE WHEN c1 THEN v1 WHEN c2 THEN v2 ... ELSE otherwise END over
+    (condition, value) pairs, the first true condition winning like the
+    oracle's ordered scans (a NULL string when ``otherwise`` is None)."""
+    (c0, v0), *rest = cases
+    chain = F.when(c0, v0)
+    for c, v in rest:
+        chain = chain.when(c, v)
+    return chain.otherwise(
+        F.lit(None).cast("string") if otherwise is None else otherwise)
 
 
 def n_alpha(col: Column) -> Column:
@@ -96,7 +113,7 @@ def clean_text_v1(col: Column) -> Column:
     s = F.upper(col)
     s = F.translate(s, "01|5", "OIIS")
     s = replace_not_in(s, "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 .,&/-",
-                       "A-Z0-9 .,&/-", " ")
+                       vocab.NON_CHARSET_V1, " ")
     s = collapse_ws(s)
     return F.when(col.isNull() | (F.length(col) == 0), F.lit("XXX")).otherwise(s)
 
@@ -107,7 +124,7 @@ def clean_text_v3(col: Column) -> Column:
     s = F.translate(s, "|!015", "IIOIS")
     s = F.replace(s, F.lit("8"), F.lit("B"))
     s = replace_not_in(s, _ALPHA_CHARS + "0123456789 ,.&/-",
-                       "A-Za-z0-9 ,.&/-", " ")
+                       vocab.NON_CHARSET_V3, " ")
     s = collapse_ws(s)
     return F.when(col.isNull() | (F.length(col) == 0), F.lit("")).otherwise(s)
 
@@ -149,7 +166,7 @@ def clean_payee(col: Column) -> Column:
     # reproduces (codegen subexpression elimination carries the
     # multi-referenced chain; full-chain timing improved, see
     # OPTIMIZATION_r08.md).
-    s = replace_not_in(s, _WORDISH_CHARS, r"\w\s\.\-", "")
+    s = replace_not_in(s, _WORDISH_CHARS, vocab.NON_WORDISH, "")
     return F.when(
         col.isNull() | (F.length(col) == 0) | (F.length(s) < 2), F.lit("XXX")
     ).otherwise(s)
@@ -159,21 +176,11 @@ def clean_payee(col: Column) -> Column:
 # predicates  (oracle.predicates)
 # --------------------------------------------------------------------------
 
-_GARBAGE_ANCHORED = (
-    r"O{4,}|I{4,}|Z{4,}",     # search
-    r"^[OIZ]{5,}$",
-    r"^[A-Z][OIZ]{4,}$",
-    r"[OIZ]{5,}",             # .*X.* under re.match == search
-    r"^[A-Z]{1,2}$",
-    r"^[A-Z][\s]*[A-Z]$",
-)
-
-
 def is_garbage(col: Column) -> Column:
     """= oracle.predicates.is_garbage."""
     alpha = n_alpha(col)
     digits = n_digit(col)
-    rx = "|".join(f"(?:{p})" for p in _GARBAGE_ANCHORED)
+    rx = "|".join(f"(?:{p})" for p in vocab.GARBAGE_SEARCH_PATTERNS)
     return (
         col.isNull()
         | (F.length(col) == 0)
@@ -190,7 +197,7 @@ def is_junk_v1(col: Column) -> Column:
         col.isNull()
         | (F.length(col) < 3)
         | any_term(u, vocab.JUNK_TERMS_V1)
-        | any_term(u, ("SIGN", "SGN", "BEARER", "ORDER"))
+        | any_term(u, vocab.JUNK_MARKERS_V1)
     )
 
 
@@ -215,7 +222,7 @@ def literal_prefix(pattern: str) -> str:
 
 def is_junk_v3(u: Column) -> Column:
     """V3 junk rule over upper-cased text (60% / 50% coverage rules)."""
-    short_caps = u.rlike(r"^[A-Z]{2,4}$") & ~u.isin(*vocab.SHORT_CAPS_OK_V3)
+    short_caps = u.rlike(vocab.SHORT_CAPS_PATTERN) & ~u.isin(*vocab.SHORT_CAPS_OK_V3)
     # literal-prefix guards skip the regex for the ~90% of rows that lack
     # the pattern's anchor text (pure optimization, regex authoritative)
     pattern_hits = []
@@ -270,6 +277,32 @@ def is_bank_or_metadata(col: Column) -> Column:
     """= oracle.predicates.is_bank_or_metadata."""
     u = F.upper(col)
     return any_term(u, vocab.PAYEE_BANK_TERMS) | any_term(u, vocab.PAYEE_METADATA_TERMS)
+
+
+# --------------------------------------------------------------------------
+# payee grammar  (oracle.grammars)
+# --------------------------------------------------------------------------
+
+def payee_raw(u: Column) -> Column:
+    """= oracle.grammars.extract_payee over upper-cased text: the first
+    stripped PAYEE_PATTERNS_SQLSAFE candidate (ducksql.payee_raw's
+    patterns) that is not bank/metadata. One regexp_extract per pattern
+    behind its PAYEE_GUARDS prefilter (group 1 starts with [A-Z], so a
+    non-empty extract <=> a match), and the bank/metadata gate once, in
+    one filter lambda."""
+    def cand(p: str, guards) -> Column:
+        ex = pystrip(F.regexp_extract(u, p, 1))
+        return F.when(any_term(u, guards), ex) if guards else ex
+
+    cands = F.array(*[
+        cand(p, g)
+        for p, g in zip(vocab.PAYEE_PATTERNS_SQLSAFE, vocab.PAYEE_GUARDS)
+    ])
+    sel = F.filter(
+        cands,
+        lambda c: c.isNotNull() & (F.length(c) > 0) & ~is_bank_or_metadata(c),
+    )
+    return F.get(sel, 0)
 
 
 # --------------------------------------------------------------------------

@@ -4,12 +4,13 @@ This is the one module that renders an oracle predicate or stage into
 DuckDB SQL — the twin of functions/columns.py, which builds the same stages
 as Catalyst Columns. Where columns.py has a builder, the renderer here has
 its name. Every DuckDB twin in plans/ (the registry's ``oracle_sql()``
-rows and the flagship statements) is composed from these renderers, so a
-vocab or grammar fix lands in one place, and
+rows and the flagship statements) is composed from these renderers, and
+every regex and term list they share with the oracle is read from
+oracle/vocab.py, so a grammar fix lands in one place;
 tests/test_ducksql_renderers.py checks each predicate against its oracle
 function on the adversarial synthetic corpus.
 
-The renderers read the same vocab lists as the Column builders (RE2 regex
+The renderers read the same vocab entries as the Column builders (RE2 regex
 dialect, explicit 'g' flag for global replace). ``any_term`` renders its
 terms sorted, so no SQL text depends on set order (the hash seed). Every
 fragment follows the oracle condition for condition, in the oracle's
@@ -103,7 +104,7 @@ def first_where(cands, pred) -> str:
 
 
 def n_alpha(expr: str) -> str:
-    return f"length(regexp_replace(coalesce({expr}, ''), '[^A-Za-z]', '', 'g'))"
+    return f"length(regexp_replace(coalesce({expr}, ''), {rx(vocab.NON_ALPHA)}, '', 'g'))"
 
 
 def n_digit(expr: str) -> str:
@@ -165,7 +166,7 @@ def chain_regex_strip(expr: str, patterns, flags: str = "gi") -> str:
 def clean_text_v1(expr: str) -> str:
     """= oracle.cleaning.clean_text_v1."""
     s = f"translate(upper({expr}), '01|5', 'OIIS')"
-    s = rr(s, r"[^A-Z0-9 .,&/-]", " ")
+    s = rr(s, vocab.NON_CHARSET_V1, " ")
     s = collapse_ws(s)
     return (
         f"CASE WHEN {expr} IS NULL OR length({expr}) = 0 THEN 'XXX' ELSE {s} END"
@@ -175,7 +176,7 @@ def clean_text_v1(expr: str) -> str:
 def clean_text_v3(expr: str) -> str:
     """= oracle.cleaning.clean_text_v3."""
     s = f"replace(translate(upper({expr}), '|!015', 'IIOIS'), '8', 'B')"
-    s = rr(s, r"[^A-Za-z0-9 ,.&/-]", " ")
+    s = rr(s, vocab.NON_CHARSET_V3, " ")
     s = collapse_ws(s)
     return (
         f"CASE WHEN {expr} IS NULL OR length({expr}) = 0 THEN '' ELSE {s} END"
@@ -195,7 +196,7 @@ def clean_payee(expr: str) -> str:
     s = chain_regex_strip(s, vocab.COMPANY_SUFFIX_PATTERNS)
     s = collapse_ws(s)
     # \w == [0-9A-Za-z_] in both dialects for ASCII input
-    s = rr(s, r"[^\w\s\.\-]", "")
+    s = rr(s, vocab.NON_WORDISH, "")
     return (
         f"CASE WHEN {expr} IS NULL OR length({expr}) = 0 OR length({s}) < 2 "
         f"THEN 'XXX' ELSE {s} END"
@@ -210,7 +211,7 @@ def correct_spelling(expr: str) -> str:
     s = chain_replace(s, vocab.SPELLING_CORRECTIONS)
     s = chain_replace(s, [(w, "") for w in vocab.GARBAGE_WORDS])
     s = collapse_ws(s)
-    s = rr(s, r"[^A-Z\s]", "")
+    s = rr(s, vocab.NON_ALPHA_SPACE, "")
     return (
         f"CASE WHEN {expr} IS NULL OR length({expr}) = 0 THEN 'UNKNOWN' "
         f"WHEN length({s}) >= 3 THEN {s} ELSE 'UNKNOWN' END"
@@ -230,15 +231,16 @@ def html_main(text: str) -> str:
     """= oracle.boilerplate.extract_html_main."""
     lines = (
         f"list_filter(string_split({text}, {NL}), "
-        f"ln -> NOT regexp_matches(ln, '(?i)<[ \\t\\n\\x0b\\f\\r]*(script|style)\\b'))"
+        f"ln -> NOT regexp_matches(ln, {rx('(?i)' + vocab.SCRIPT_HINT_PATTERN)}))"
     )
-    stripped = "regexp_replace(ln, '<[^>]*>', '', 'g')"
+    stripped = f"regexp_replace(ln, {rx(vocab.TAG_PATTERN)}, '', 'g')"
     visible = collapse_ws(stripped)
     tagd = f"(length(ln) - length({stripped})) * 1.0 / nullif(length(ln), 0)"
     anchor_len = (
         "list_sum(list_prepend(CAST(0 AS BIGINT), list_transform("
-        "regexp_extract_all(ln, '(?i)<a\\b[^>]*>(.*?)</a>', 1), "
-        "m -> CAST(length(regexp_replace(m, '<[^>]*>', '', 'g')) AS BIGINT))))"
+        f"regexp_extract_all(ln, {rx('(?i)' + vocab.ANCHOR_PATTERN)}, 1), "
+        f"m -> CAST(length(regexp_replace(m, {rx(vocab.TAG_PATTERN)}, '', 'g')) "
+        "AS BIGINT))))"
     )
     linkd = (
         f"CASE WHEN length({visible}) > 0 "
@@ -263,7 +265,7 @@ def pdf_main(text: str) -> tuple[str, str]:
         f"list_filter(list_transform({raw}, ln -> {collapse_ws('ln')}), "
         f"x -> x <> '')"
     )
-    page_rx = rx(r"(?i)^\s*(page\s+)?\d+(\s+of\s+\d+)?\s*$")
+    page_rx = rx("(?i)" + vocab.PAGE_NO_PATTERN)
     kept = (
         f"list_filter(lines0, ln -> NOT regexp_matches(ln, {page_rx}) "
         f"AND len(list_filter(lines0, x -> x = ln)) < 3)"
@@ -276,17 +278,7 @@ def pdf_main(text: str) -> tuple[str, str]:
 # predicates  (oracle.predicates)
 # --------------------------------------------------------------------------
 
-_GARBAGE_RX = "|".join(
-    f"(?:{p})"
-    for p in (
-        r"O{4,}|I{4,}|Z{4,}",
-        r"^[OIZ]{5,}$",
-        r"^[A-Z][OIZ]{4,}$",
-        r"[OIZ]{5,}",
-        r"^[A-Z]{1,2}$",
-        r"^[A-Z][\s]*[A-Z]$",
-    )
-)
+_GARBAGE_RX = "|".join(f"(?:{p})" for p in vocab.GARBAGE_SEARCH_PATTERNS)
 
 
 def is_garbage(expr: str) -> str:
@@ -304,7 +296,7 @@ def is_junk_v1(expr: str) -> str:
     return (
         f"({expr} IS NULL OR length({expr}) < 3 "
         f"OR {any_term(u, vocab.JUNK_TERMS_V1)} "
-        f"OR {any_term(u, ('SIGN', 'SGN', 'BEARER', 'ORDER'))})"
+        f"OR {any_term(u, vocab.JUNK_MARKERS_V1)})"
     )
 
 
@@ -377,12 +369,13 @@ def looks_like_real_name(t: str) -> str:
     mwg = (
         f"len(list_filter({words}, w -> length(w) < 2 OR {is_garbage('w')})) > 0"
     )
+    short_ok = ", ".join(q(w) for w in vocab.SHORT_NAME_OK)
     reject = " OR ".join([
         f"({t} IS NULL)",
         f"({total} = 0)",
         f"({u} = 'XXX')",
         f"({digits} > {letters} AND {letters} < 5)",
-        f"({total} < 4 AND {u} NOT IN ('CO', 'LTD', 'PVT', 'INC', 'M/S'))",
+        f"({total} < 4 AND {u} NOT IN ({short_ok}))",
         f"({special} > 3)",
         is_garbage(tt),
         f"({suspicious})",
@@ -397,7 +390,8 @@ def is_junk_v3(u: str) -> str:
     (= columns.is_junk_v3)."""
     caps_ok = ", ".join(q(t) for t in vocab.SHORT_CAPS_OK_V3)
     short_caps = (
-        f"(regexp_matches({u}, '^[A-Z]{{2,4}}$') AND {u} NOT IN ({caps_ok}))"
+        f"(regexp_matches({u}, {rx(vocab.SHORT_CAPS_PATTERN)}) "
+        f"AND {u} NOT IN ({caps_ok}))"
     )
     pats = " OR ".join(
         f"(regexp_matches({u}, {rx(p)}, 'i') AND "
@@ -479,7 +473,7 @@ def cheque_classes(u: str) -> ChequeClasses:
         cat3=f"(contains({u}, 'GOVERNMENT ACCOUNT') OR contains({u}, 'GOVT ACCOUNT'))",
         cat2=(
             f"(contains({u}, 'NOT TRANSFERABLE') AND "
-            f"{any_term(u, ('GOVT', 'GOVERNMENT', 'PAO', 'DDO'))})"
+            f"{any_term(u, vocab.GOVT_NOT_TRANSFERABLE_TERMS)})"
         ),
         cat1=(
             f"({any_term(u, vocab.GOVT_MARKERS_HIGH)} OR "

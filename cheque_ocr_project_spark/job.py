@@ -45,7 +45,7 @@ def build_args(argv=None):
                     help="allow a fresh run to delete an existing manifest "
                          "(without it, a fresh run into a populated output "
                          "directory fails instead of silently destroying "
-                         "resume state)")
+                         "resume state); not with --resume")
     ap.add_argument("--normalize-ws", action=argparse.BooleanOptionalAction,
                     default=True,
                     help="normalize exotic separators (\\x1c-\\x1f, NEL, "
@@ -64,36 +64,19 @@ def build_args(argv=None):
 def main(argv=None) -> None:
     args = build_args(argv)
 
-    if not args.resume:
-        # Fresh run: a previous manifest is resume state. Destroying it must
-        # be explicit (--overwrite); otherwise fail loudly BEFORE any Spark
-        # work so an operator cannot lose a multi-hour run's progress with a
-        # forgotten flag.
-        import shutil
-        import sys
-        from pathlib import Path
+    from pathlib import Path
 
-        # ALL resume state must go together: the manifest, the staged-input
-        # copy + its commit marker (else a fresh --stage-input run silently
-        # reuses STALE staged data even when --input changed), and the data
-        # dir (else buckets the new input leaves empty survive dynamic
-        # partition overwrite from the prior run).
-        out = Path(args.output)
-        state = [out / "_manifest", out / "_staged",
-                 out / "_staged.committed", out / "data"]
-        existing = [p for p in state if p.exists()]
-        if existing:
-            if not args.overwrite:
-                sys.exit(
-                    f"output {args.output} already has run state "
-                    f"({', '.join(p.name for p in existing)}); pass --resume "
-                    "to continue it or --overwrite to discard all of it"
-                )
-            for p in existing:
-                if p.is_dir():
-                    shutil.rmtree(p)
-                else:
-                    p.unlink()
+    from cheque_ocr_project_spark.sources.io import claim_run_state
+
+    # ALL resume state goes together: the manifest, the staged-input copy +
+    # its commit marker (else a fresh --stage-input run silently reuses
+    # STALE staged data even when --input changed), and the data dir (else
+    # buckets the new input leaves empty survive dynamic partition
+    # overwrite from the prior run).
+    out = Path(args.output)
+    claim_run_state(args.output, [out / "_manifest", out / "_staged",
+                                  out / "_staged.committed", out / "data"],
+                    args.resume, args.overwrite)
 
     from pyspark.sql import SparkSession
 

@@ -807,14 +807,8 @@ def _recover_crashed_compaction(spark, table: str) -> None:
             # dead session's leftover — filesystem exists, catalog does
             # not) would wedge this rename with LOCATION_ALREADY_EXISTS.
             # The catalog has no entry for `table` on this branch, so
-            # clearing the directory is safe and uses the same Hadoop-FS
-            # path as drop_table_and_location.
-            wh = spark.conf.get("spark.sql.warehouse.dir")
-            jvm = spark._jvm
-            path = jvm.org.apache.hadoop.fs.Path(wh, table.lower())
-            fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-            if fs.exists(path):
-                fs.delete(path, True)
+            # dropping it only clears that directory.
+            drop_table_and_location(spark, table)
             spark.sql(f"ALTER TABLE {old} RENAME TO {table}")
     # clear stray catalog entries AND orphaned directories (no-ops when
     # neither exists; old's directory has MOVED if the roll-back ran)

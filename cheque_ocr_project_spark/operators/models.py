@@ -152,8 +152,11 @@ def zero_shot_overlap(text: str, labels) -> tuple[str, float]:
 
 
 def _load_zero_shot(labels):
-    if "zero_shot" in _WORKER_STATE:
-        return _WORKER_STATE["zero_shot"]
+    # keyed by the labels too: a reused worker serves later calls with
+    # other labels
+    key = ("zero_shot", tuple(labels))
+    if key in _WORKER_STATE:
+        return _WORKER_STATE[key]
     try:  # pragma: no cover - transformers not in this container
         from transformers import pipeline
 
@@ -167,7 +170,7 @@ def _load_zero_shot(labels):
         def run(text: str):
             label, score = zero_shot_overlap(text, labels)
             return label, score, "overlap"
-    _WORKER_STATE["zero_shot"] = run
+    _WORKER_STATE[key] = run
     return run
 
 
@@ -227,8 +230,9 @@ def qa_payee_heuristic(text: str) -> tuple[str | None, float]:
 
 
 def _load_qa(question: str):
-    if "qa" in _WORKER_STATE:
-        return _WORKER_STATE["qa"]
+    key = ("qa", question)  # as in _load_zero_shot
+    if key in _WORKER_STATE:
+        return _WORKER_STATE[key]
     try:  # pragma: no cover - transformers not in this container
         from transformers import pipeline
 
@@ -242,7 +246,7 @@ def _load_qa(question: str):
         def run(text: str):
             answer, score = qa_payee_heuristic(text)
             return answer, score, "heuristic"
-    _WORKER_STATE["qa"] = run
+    _WORKER_STATE[key] = run
     return run
 
 

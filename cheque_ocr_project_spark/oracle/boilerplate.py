@@ -31,10 +31,12 @@ from __future__ import annotations
 import re
 from collections import Counter
 
-_TAG_RE = re.compile(r"<[^>]*>")
-_ANCHOR_RE = re.compile(r"<a\b[^>]*>(.*?)</a>", re.IGNORECASE)
-_SCRIPT_HINT_RE = re.compile(r"<\s*(script|style)\b", re.IGNORECASE)
-_PAGE_NO_RE = re.compile(r"^\s*(page\s+)?\d+(\s+of\s+\d+)?\s*$", re.IGNORECASE)
+from cheque_ocr_project_spark.oracle import vocab
+
+_TAG_RE = re.compile(vocab.TAG_PATTERN)
+_ANCHOR_RE = re.compile(vocab.ANCHOR_PATTERN, re.IGNORECASE)
+_SCRIPT_HINT_RE = re.compile(vocab.SCRIPT_HINT_PATTERN, re.IGNORECASE)
+_PAGE_NO_RE = re.compile(vocab.PAGE_NO_PATTERN, re.IGNORECASE)
 _WS = re.compile(r"\s+")
 
 MIN_VISIBLE_LEN = 25

@@ -48,7 +48,7 @@ def detect_government(text_upper: str) -> tuple[bool, str | None]:
     if "GOVERNMENT ACCOUNT" in text_upper or "GOVT ACCOUNT" in text_upper:
         return True, "III"
     if "NOT TRANSFERABLE" in text_upper and any(
-        g in text_upper for g in ("GOVT", "GOVERNMENT", "PAO", "DDO")
+        g in text_upper for g in vocab.GOVT_NOT_TRANSFERABLE_TERMS
     ):
         return True, "II"
     for marker in vocab.GOVT_MARKERS_HIGH:

@@ -17,15 +17,15 @@ import re
 
 from cheque_ocr_project_spark.oracle import vocab
 
-_NON_CHARSET_V1 = re.compile(r"[^A-Z0-9 .,&/-]")
-_NON_CHARSET_V3 = re.compile(r"[^A-Za-z0-9 ,.&/-]")
+_NON_CHARSET_V1 = re.compile(vocab.NON_CHARSET_V1)
+_NON_CHARSET_V3 = re.compile(vocab.NON_CHARSET_V3)
 _TITLE_RES = tuple(re.compile(p, re.IGNORECASE) for p in vocab.TITLE_PATTERNS)
 _SUFFIX_RES = tuple(re.compile(p, re.IGNORECASE) for p in vocab.COMPANY_SUFFIX_PATTERNS)
 _PREFIX_RES_V3 = tuple(re.compile(p, re.IGNORECASE) for p in vocab.PREFIX_PATTERNS_V3)
 _WS = re.compile(r"\s+")
-_NON_WORDISH = re.compile(r"[^\w\s\.\-]")
-_NON_ALPHA_SPACE = re.compile(r"[^A-Z\s]")
-_NON_WORD_OR_SPACE = re.compile(r"[^\w\s]")
+_NON_WORDISH = re.compile(vocab.NON_WORDISH)
+_NON_ALPHA_SPACE = re.compile(vocab.NON_ALPHA_SPACE)
+_NON_WORD_OR_SPACE = re.compile(vocab.NON_WORD_OR_SPACE)
 
 
 # one-pass form of the four sequential confusion replaces: the rules map

@@ -18,23 +18,17 @@ import re
 from cheque_ocr_project_spark.oracle import cleaning, predicates, vocab
 
 _PAYEE_RES = tuple(re.compile(p) for p in vocab.PAYEE_PATTERNS)
-# literal prefilters per pattern: a pattern can only match if one of its
-# anchor literals occurs in the (upper-cased) text — pure optimization, the
-# regex is authoritative; None = no guard (cheap anchored pattern)
-_PAYEE_GUARDS = (
-    ("PAY",), ("ORDER",), ("PAY",), ("BEARER",), ("BEARER",),
-    ("FAVOUR",), ("FAVOR",), ("BENEFICIARY",), ("RUPEES", "RS"), None,
-)
-_DATE_RE = re.compile(r"Date:\s*(\d{2})[./](\d{2})[./](\d{4})")
-_AMOUNT_RE = re.compile(r"[₹Rs\.]*\s*([\d,]+(?:\.\d{2})?)[/\-]?")
-_ACCOUNT_RE = re.compile(r"A/C No\.?[\s:]*(\d{10,20})")
+_DATE_RE = re.compile(vocab.DATE_PATTERN)
+_AMOUNT_RE = re.compile(vocab.AMOUNT_PATTERN)
+_ACCOUNT_RE = re.compile(vocab.ACCOUNT_NO_PATTERN)
 _FIELD_PAYEE_RE = re.compile(r"PAY\s+([A-Z\s]+?)(?=\s+RUPEE|\s+Rs|\s+₹|$)")
 _MICR_RE = re.compile(vocab.MICR_PATTERN)
 _AUTH_RES = tuple(re.compile(p) for p in vocab.AUTH_SIGNATORY_PATTERNS)
 _ACCT_RES = tuple(re.compile(p) for p in vocab.ACCOUNT_PATTERNS)
-_FNAME_AMOUNT_RE = re.compile(r"(\d+\.\d{2})")
+_FNAME_AMOUNT_RE = re.compile(vocab.FNAME_AMOUNT_PATTERN)
 _FNAME_NUM_RE = re.compile(r"\d+")
-_FNAME_DATE_RE = re.compile(r"(\d{8})")
+_FNAME_DATE_RE = re.compile(vocab.FNAME_DATE_PATTERN)
+_NON_WORD_OR_SPACE = re.compile(vocab.NON_WORD_OR_SPACE)
 
 
 def extract_payee(text: str | None) -> str | None:
@@ -42,7 +36,7 @@ def extract_payee(text: str | None) -> str | None:
     if not text:
         return None
     u = text.upper()
-    for rx, guard in zip(_PAYEE_RES, _PAYEE_GUARDS):
+    for rx, guard in zip(_PAYEE_RES, vocab.PAYEE_GUARDS):
         if guard is not None:
             for g in guard:
                 if g in u:
@@ -172,7 +166,7 @@ def clean_name_fast(name: str | None) -> str:
     for wrong, right in vocab.FAST_SPELLING_CORRECTIONS:
         if wrong in u:
             u = u.replace(wrong, right)
-    u = re.sub(r"[^\w\s]", " ", u)
+    u = _NON_WORD_OR_SPACE.sub(" ", u)
     u = " ".join(u.split())
     return u.title() if len(u) >= 3 else "UNKNOWN"
 

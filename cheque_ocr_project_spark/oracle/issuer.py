@@ -20,7 +20,7 @@ import re
 
 from cheque_ocr_project_spark.oracle import cleaning, fuzzy, predicates, vocab
 
-_NON_ALPHA_RE = re.compile(r"[^A-Za-z]")
+_NON_ALPHA_RE = re.compile(vocab.NON_ALPHA)
 
 DEFAULT_THRESHOLD_V1 = 0.90
 DEFAULT_THRESHOLD_V3 = 0.85

@@ -18,16 +18,16 @@ import re
 
 from cheque_ocr_project_spark.oracle import vocab
 
-_NON_ALPHA = re.compile(r"[^A-Za-z]")   # count via one sub() pass — same
+_NON_ALPHA = re.compile(vocab.NON_ALPHA)  # count via one sub() pass — same
 _NON_DIGIT = re.compile(r"[^0-9]")      # count as len(findall(class)), faster
-_OIZ_RUN = re.compile(r"O{4,}|I{4,}|Z{4,}")
+_OIZ_RUN = re.compile(vocab.GARBAGE_OIZ_RUN)
 _GARBAGE_RES = tuple(re.compile(p) for p in vocab.GARBAGE_PATTERNS)
 # any(rx.match(t) for rx in _GARBAGE_RES) as ONE anchored alternation
 # (re.match == anchored-at-start for every pattern in the list)
 _GARBAGE_COMBINED = re.compile(
     "^(?:" + "|".join(f"(?:{p})" for p in vocab.GARBAGE_PATTERNS) + ")"
 )
-_SHORT_CAPS = re.compile(r"^[A-Z]{2,4}$")
+_SHORT_CAPS = re.compile(vocab.SHORT_CAPS_PATTERN)
 _JUNK_RES_V3 = tuple(re.compile(p, re.IGNORECASE) for p in vocab.JUNK_PATTERNS_V3)
 
 
@@ -54,10 +54,9 @@ def is_junk_v1(text: str | None) -> bool:
     for term in vocab.JUNK_TERMS_V1:  # plain loop: no genexpr frame per term
         if term in u:
             return True
-    if "SIGN" in u or "SGN" in u:
-        return True
-    if "BEARER" in u or "ORDER" in u:
-        return True
+    for term in vocab.JUNK_MARKERS_V1:
+        if term in u:
+            return True
     return False
 
 
@@ -150,7 +149,7 @@ def looks_like_real_name(text: str | None) -> bool:
     total = len(text)
     if digits > letters and letters < 5:
         return False
-    if total < 4 and text.upper() not in ("CO", "LTD", "PVT", "INC", "M/S"):
+    if total < 4 and text.upper() not in vocab.SHORT_NAME_OK:
         return False
     # every char is exactly one of alnum / space / special
     special = total - sum(map(str.isalnum, text)) - text.count(" ")

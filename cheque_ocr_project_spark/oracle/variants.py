@@ -21,12 +21,12 @@ from __future__ import annotations
 
 import re
 
-from cheque_ocr_project_spark.oracle import grammars, issuer
+from cheque_ocr_project_spark.oracle import grammars, issuer, vocab
 
 VARIANT_NAMES = ("plain", "dom_stripped", "ws_norm")
 EARLY_EXIT = 0.95
 
-_TAG_RE = re.compile(r"<[^>]*>")
+_TAG_RE = re.compile(vocab.TAG_PATTERN)
 _WS_RE = re.compile(r"\s+")
 
 

@@ -9,6 +9,12 @@ reference (they define the extraction semantics we must match per-turn):
 - government markers & entities:     cheque_classifier.py:73-120,
                                      government_payee_rules.py:29-125
 - spelling-correction map:           dbf_processor.py:34-67
+- field, filename and payee grammars: payee_cleaner.py:157-210,
+                                     custom_csv.py:24-46
+
+Every regex and term list the oracle shares with its Catalyst and DuckDB
+twins lives here once; a twin that needs a rewritten form (RE2 has no
+lookahead) keeps it beside its builder and names the entry it rewrites.
 
 Where the reference uses a ``dict`` the insertion order is semantic (the
 replacement chains are order-sensitive); we keep the exact order.
@@ -29,6 +35,8 @@ JUNK_TERMS_V1 = frozenset({
     "AMOUNT", "DATE", "CHEQUE", "HDFC BANK LTD", "HDFC BANK", "STATE BANK",
     "SBI", "ICICI", "AXIS", "YES", "IDFC", "KOTAK", "INDUSIND", "PNB",
 })
+# --- issuer_processor_v.py:220-242 (checked after the set, in order) --------
+JUNK_MARKERS_V1 = ("SIGN", "SGN", "BEARER", "ORDER")
 
 # --- issuer_processor_v.py:26-29 --------------------------------------------
 BANK_TERMS = frozenset({
@@ -60,6 +68,14 @@ GARBAGE_PATTERNS = (
     r"^[A-Z]{1,2}$",
     r"^[A-Z][\s]*[A-Z]$",
 )
+# issuer_processor_v.py:116-139: the OIZ-run rule, searched before the list
+GARBAGE_OIZ_RUN = r"O{4,}|I{4,}|Z{4,}"
+# the run rule plus GARBAGE_PATTERNS in search form, for the engine twins
+# (their regex predicates search, re.match anchors): every listed pattern
+# is ^-anchored but '.*X.*', which is read as a search for X
+GARBAGE_SEARCH_PATTERNS = (GARBAGE_OIZ_RUN,) + tuple(
+    p.removeprefix(".*").removesuffix(".*") for p in GARBAGE_PATTERNS
+)
 
 # --- issuer_processor_v.py:261-264 ------------------------------------------
 LOCATION_KEYWORDS = (
@@ -80,6 +96,8 @@ SUSPICIOUS_NAME_TERMS = (
     "ACCOUNT", "AMOUNT", "RUPEES", "PAYEE",
     "BEARER", "ORDER", "STAMP",
 )
+# --- issuer_processor_v.py:499-550 (short names looks_like_real_name keeps) --
+SHORT_NAME_OK = ("CO", "LTD", "PVT", "INC", "M/S")
 
 # --- issuer_processor_v.py:394-396 / 474 ------------------------------------
 FOR_MARKERS = ("FOR ", "F/O ", "F/ ", "PROP ")
@@ -151,6 +169,7 @@ JUNK_VARIATIONS_V3 = (
 
 # --- IssuerBatchProcessorV3.py:139 (short-caps whitelist) -------------------
 SHORT_CAPS_OK_V3 = ("LTD", "PVT", "INC", "CORP", "CO.", "M/S")
+SHORT_CAPS_PATTERN = r"^[A-Z]{2,4}$"
 
 # --- IssuerBatchProcessorV3.py:210-215 (bank list, 70% coverage rule) -------
 BANK_NAMES_V3 = (
@@ -282,6 +301,12 @@ PAYEE_PATTERNS_SQLSAFE = (
     r"([A-Z][A-Z\s\.]{3,30})\s+(RUPEES|RS\.?)",
     r"^([A-Z][A-Z\s\.]{5,50})$",
 )
+# literal prefilter per PAYEE_PATTERNS entry (a match needs one of them;
+# the regex stays authoritative); None = no guard, ^-anchored and cheap
+PAYEE_GUARDS = (
+    ("PAY",), ("ORDER",), ("PAY",), ("BEARER",), ("BEARER",),
+    ("FAVOUR",), ("FAVOR",), ("BENEFICIARY",), ("RUPEES", "RS"), None,
+)
 
 # --- cheque_classifier.py:73-120 --------------------------------------------
 GOVT_MARKERS_HIGH = (
@@ -293,6 +318,8 @@ GOVT_MARKERS_MEDIUM = (
     "ACCREDITED BANK", "NOT TRANSFERABLE", "CHEQUE DRAWING DDO", "DDO",
     "DRAWING AND DISBURSING OFFICER",
 )
+# cheque_classifier.py:172-194: category II is NOT TRANSFERABLE plus one of
+GOVT_NOT_TRANSFERABLE_TERMS = ("GOVT", "GOVERNMENT", "PAO", "DDO")
 DD_MARKERS = ("DEMAND DRAFT", "DD", "DRAFT", "BANK DRAFT")
 MC_MARKERS = (
     "MANAGERS CHEQUE", "MANAGER'S CHEQUE", "MC",
@@ -307,6 +334,15 @@ CROSSED_PATTERNS = (
     r"NOT\s+NEGOTIABLE",
 )
 MICR_PATTERN = r"(\d{9})\s+(\d{9})\s+(\d{6,9})"
+
+# --- payee_cleaner.py:186-210 (date / amount / account field grammars) -----
+DATE_PATTERN = r"Date:\s*(\d{2})[./](\d{2})[./](\d{4})"
+AMOUNT_PATTERN = r"[₹Rs\.]*\s*([\d,]+(?:\.\d{2})?)[/\-]?"
+ACCOUNT_NO_PATTERN = r"A/C No\.?[\s:]*(\d{10,20})"
+
+# --- custom_csv.py:24-46 (filename amount and date) -------------------------
+FNAME_AMOUNT_PATTERN = r"(\d+\.\d{2})"
+FNAME_DATE_PATTERN = r"(\d{8})"
 
 # --- cheque_classifier.py:253-270 (classifier designation regexes) ----------
 OFFICER_DESIGNATION_PATTERNS = (
@@ -423,6 +459,9 @@ OFFICER_DESIGNATIONS = (
 
 # --- government_payee_rules.py:226 ------------------------------------------
 PAYEE_SECTION_INDICATORS = ("PAY", "PAY TO", "ORDER OF", "FAVOUR OF", "BENEFICIARY")
+# payee-marker turns of the conversation-progress state
+# (streaming/stateful.py and its DuckDB twin)
+PAYEE_MARKERS = ("PAY", "ORDER OF", "FAVOUR OF", "BENEFICIARY")
 
 # --- dbf_processor.py:34-60 (dict order is the replacement order) -----------
 SPELLING_CORRECTIONS = (
@@ -534,6 +573,20 @@ FAST_ISSUER_PATTERNS = (
     r"([A-Z][A-Z\s\.]{5,50}?)\s+AUTHORISED\s+SIGNATORY",
     r"([A-Z][A-Z\s\.]{5,50}?)\s+SIGNATURE",
 )
+
+# --- character classes of the cleaning and counting stages ------------------
+NON_CHARSET_V1 = r"[^A-Z0-9 .,&/-]"        # cleaning.clean_text_v1/v2
+NON_CHARSET_V3 = r"[^A-Za-z0-9 ,.&/-]"     # cleaning.clean_text_v3
+NON_WORDISH = r"[^\w\s\.\-]"              # cleaning.clean_payee
+NON_ALPHA_SPACE = r"[^A-Z\s]"              # cleaning.correct_spelling_ai
+NON_WORD_OR_SPACE = r"[^\w\s]"             # clean_name_simple / _fast
+NON_ALPHA = r"[^A-Za-z]"                   # letter counts
+TAG_PATTERN = r"<[^>]*>"                   # one HTML tag
+
+# --- main-content line rules (oracle/boilerplate.py; case-insensitive) ------
+ANCHOR_PATTERN = r"<a\b[^>]*>(.*?)</a>"
+SCRIPT_HINT_PATTERN = r"<\s*(script|style)\b"
+PAGE_NO_PATTERN = r"^\s*(page\s+)?\d+(\s+of\s+\d+)?\s*$"
 
 # Fixed output constants — issuer_processor_v.py:58-61
 FIXED_OPR_NO = "AS601"

@@ -19,7 +19,9 @@ import time
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cheque_ocr_project_spark.functions import ducksql as D
 from cheque_ocr_project_spark.operators.extract import par
+from cheque_ocr_project_spark.oracle import vocab
 from cheque_ocr_project_spark.sources import scratch
 from cheque_ocr_project_spark.sources.io import (
     TRANSCRIPT_KEYS_SQL, documents_as_transcripts, read_documents,
@@ -608,8 +610,9 @@ def q_conversation_progress(spark, sf_dir):
     )
 
 
-# mirrors streaming/stateful._PAYEE_MARKERS (substring containment on the
-# uppercased text, null -> '') and the documents_as_transcripts key split
+# mirrors streaming/stateful's payee-marker count (vocab.PAYEE_MARKERS
+# containment on the uppercased text, null -> '') and the
+# documents_as_transcripts key split
 SQL_CONVERSATION_PROGRESS = f"""
 WITH t AS (
   SELECT {TRANSCRIPT_KEYS_SQL}, upper(coalesce(text, '')) AS u
@@ -618,9 +621,7 @@ WITH t AS (
 SELECT conv_id,
        CAST(count(*) AS BIGINT) AS turns_seen,
        CAST(max(turn_idx) AS BIGINT) AS max_turn_idx,
-       CAST(sum(CASE WHEN contains(u, 'PAY') OR contains(u, 'ORDER OF')
-                       OR contains(u, 'FAVOUR OF')
-                       OR contains(u, 'BENEFICIARY')
+       CAST(sum(CASE WHEN {D.any_term('u', vocab.PAYEE_MARKERS)}
                      THEN 1 ELSE 0 END) AS BIGINT) AS payee_marker_turns
 FROM t GROUP BY conv_id"""
 

@@ -56,7 +56,7 @@ def content_sql() -> str:
     """content column over (role, text, tool) — evaluated in two layers so
     the pdf repeated-lines rule can reference its own line list."""
     pdf_lines, pdf_kept = D.pdf_main("text")
-    has_tag = "(contains(text, '<') AND regexp_matches(text, '<[^>]*>'))"
+    has_tag = f"(contains(text, '<') AND regexp_matches(text, {D.rx(vocab.TAG_PATTERN)}))"
     return f"""
   SELECT conv_id, turn_idx, role, text, tool,
     -- outer coalesce: DuckDB array_to_string([]) is NULL, but main_content
@@ -176,14 +176,14 @@ def sql_flagship_nofuzzy(
                  ELSE coalesce(payee_raw, 'XXX') END)
     END"""
 
-    date_pat = D.rx(r"Date:\s*(\d{2})[./](\d{2})[./](\d{4})")
-    amount_pat = D.rx(r"[₹Rs\.]*\s*([\d,]+(\.\d{2})?)[/\-]?")
-    account_pat = D.rx(r"A/C No\.?[\s:]*(\d{10,20})")
+    date_pat = D.rx(vocab.DATE_PATTERN)
+    amount_pat = D.rx(vocab.AMOUNT_PATTERN)
+    account_pat = D.rx(vocab.ACCOUNT_NO_PATTERN)
     micr_pat = D.rx(vocab.MICR_PATTERN)
 
     # issuer per-line stages
     u_raw = "upper(stext)"
-    marker_rx = D.rx("FOR |F/O |F/ |PROP ")
+    marker_rx = D.rx("|".join(vocab.FOR_MARKERS))
     for_line_rx = D.rx("FOR |F/O |F/|PROP ")
 
     def after_marker(col, u_col):  # per FOR marker in order; NULL if absent
@@ -435,7 +435,7 @@ def q_variant_keep_best(spark, sf_dir):
     t = F.coalesce(F.col("text"), F.lit(""))
     variants = [
         t,
-        F.regexp_replace(t, r"<[^>]*>", ""),
+        F.regexp_replace(t, vocab.TAG_PATTERN, ""),
         C.collapse_ws(t),
     ]
     structs = []
@@ -448,11 +448,9 @@ def q_variant_keep_best(spark, sf_dir):
                 v.alias("vtext"),
             )
         )
-    chain = None
-    for s in structs:
-        hit = s.getField("conf") >= EARLY_EXIT
-        chain = F.when(hit, s) if chain is None else chain.when(hit, s)
-    chosen = chain.otherwise(F.greatest(*structs))
+    chosen = C.when_chain(
+        [(s.getField("conf") >= EARLY_EXIT, s) for s in structs],
+        F.greatest(*structs))
 
     u = F.upper(F.array_join(C.nonblank_lines(F.col("ch.vtext")), " "))
     staged = (
@@ -464,21 +462,14 @@ def q_variant_keep_best(spark, sf_dir):
             F.col("ch.conf").alias("best_conf"),
             u.alias("u"),
         )
-        # Exchange barrier: the payee chain below references `u` ~270 times
-        # (10 patterns x rlike/extract/25-term bank gate); without the
-        # barrier CollapseProject would inline the whole variant-confidence
-        # machinery into every reference (measured 97s -> ~3s at sf0.1).
+        # Exchange barrier: payee_raw references `u` once per pattern and
+        # guard; without the barrier CollapseProject would inline the whole
+        # variant-confidence machinery into every reference.
         .repartition(F.col("doc_id"))
     )
-    payee = None
-    for p in vocab.PAYEE_PATTERNS_SQLSAFE:
-        cand = C.pystrip(F.regexp_extract(F.col("u"), p, 1))
-        ok = F.col("u").rlike(p) & ~C.is_bank_or_metadata(cand)
-        payee = F.when(ok, cand) if payee is None else payee.when(ok, cand)
-    payee = payee.otherwise(F.lit(None).cast("string"))
-
     return staged.select(
-        "doc_id", "best_variant", "best_conf", payee.alias("payee_raw")
+        "doc_id", "best_variant", "best_conf",
+        C.payee_raw(F.col("u")).alias("payee_raw"),
     )
 
 
@@ -489,7 +480,7 @@ def sql_variant_keep_best():
     return f"""
 WITH v AS (
   SELECT doc_id, coalesce(text, '') AS t,
-         regexp_replace(coalesce(text, ''), '<[^>]*>', '', 'g') AS dom,
+         regexp_replace(coalesce(text, ''), {D.rx(vocab.TAG_PATTERN)}, '', 'g') AS dom,
          {D.collapse_ws("coalesce(text, '')")} AS ws
   FROM documents
 ),

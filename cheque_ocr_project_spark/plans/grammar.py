@@ -3,11 +3,14 @@
 Cleaning, junk and garbage predicates, the classification cascade, payee
 and field grammars, the V3 variants, issuer grammars, the levenshtein and
 containment dictionary joins, and the star-schema analytics — each a Spark
-query (native Catalyst expressions, built from the same vocab as the
-flagship pipeline) beside its DuckDB twin, with identical output aliases.
-The Catalyst builders these queries share (plain main-content strip,
-officer designation, government-entity rule, payee section and payee
-grammar) live here too; each cites the oracle function it must equal.
+query (native Catalyst expressions) beside its DuckDB twin, with
+identical output aliases. The builders and renderers several families
+share (the payee grammar among them) live in functions/columns.py and
+functions/ducksql.py, and every regex and term list the queries share with
+the oracle is read from oracle/vocab.py. The Catalyst builders only this
+family uses (plain main-content strip, officer designation,
+government-entity rule, payee section, V3 business validity) stay here;
+each cites the oracle function it must equal.
 
 SQL-dialect note: DuckDB regex is RE2 (no lookahead), so the queries that
 need terminator context (``payee_extract``) use lookahead-free rewrites of
@@ -42,38 +45,35 @@ def _plain_main(text: Column) -> Column:
 def _designation_literal(u: Column) -> Column:
     """Rule-engine designation: literal list scanned in order
     (= oracle.govrules.extract_officer_designation)."""
-    chain = None
-    for d in vocab.OFFICER_DESIGNATIONS:
-        chain = (
-            F.when(u.contains(d), F.lit(d))
-            if chain is None
-            else chain.when(u.contains(d), F.lit(d))
-        )
-    return chain.otherwise(F.lit(None).cast("string"))
+    return C.when_chain(
+        [(u.contains(d), F.lit(d)) for d in vocab.OFFICER_DESIGNATIONS])
 
 
-# Boolean-equivalent cheap forms of GOVT_PAYEE_PATTERNS (r08, guide §1.2
-# per-task work): the hit is consumed ONLY as a boolean, so each
+# Boolean-equivalent cheap forms of vocab.GOVT_PAYEE_PATTERNS (r08, guide
+# §1.2 per-task work): the hit is consumed ONLY as a boolean, so the first
+# four patterns are used as they are, and each later capturing
 # `[A-Z\s]+WORD` pattern — whose greedy class prefix backtracks at every
 # position — reduces to `[A-Z\s]WORD` (a match of either form contains a
-# match of the other: the char immediately before WORD is in the class),
-# and every pattern gets a literal contains() guard that short-circuits
+# match of the other: the char immediately before WORD is in the class).
+# Every pattern gets a literal contains() guard that short-circuits
 # the regex for the vast majority of rows that lack the anchor word.
 # Guards are pure prefilters (a regex match implies its literals occur);
 # the regex stays authoritative.
-_GOVT_PAYEE_BOOL_PATTERNS: tuple = (
-    (("PAY", "GOVT"), r"PAY[:\s]*GOVT"),
-    (("PAY", "GOVERNMENT"), r"PAY[:\s]*GOVERNMENT"),
-    (("FAVOUR", "GOVT"), r"FAVOUR[:\s]*GOVT"),
-    (("FAVOUR", "GOVERNMENT"), r"FAVOUR[:\s]*GOVERNMENT"),
-    (("TO", "DEPARTMENT"), r"TO\s+THE\s+[A-Z\s]+DEPARTMENT"),
-    (("BOARD",), r"[A-Z\s]BOARD"),
-    (("MUNICIPALITY",), r"[A-Z\s]MUNICIPALITY"),
-    (("COMMITTEE",), r"[A-Z\s]COMMITTEE"),
-    (("AUTHORITY",), r"[A-Z\s]AUTHORITY"),
-    (("TRUST",), r"[A-Z\s]TRUST"),
-    (("CORPORATION",), r"[A-Z\s]CORPORATION"),
-)
+_GOVT_PAYEE_BOOL_PATTERNS: tuple = tuple(zip(
+    (("PAY", "GOVT"), ("PAY", "GOVERNMENT"), ("FAVOUR", "GOVT"),
+     ("FAVOUR", "GOVERNMENT"), ("TO", "DEPARTMENT"), ("BOARD",),
+     ("MUNICIPALITY",), ("COMMITTEE",), ("AUTHORITY",), ("TRUST",),
+     ("CORPORATION",)),
+    vocab.GOVT_PAYEE_PATTERNS[:4] + (
+        r"TO\s+THE\s+[A-Z\s]+DEPARTMENT",
+        r"[A-Z\s]BOARD",
+        r"[A-Z\s]MUNICIPALITY",
+        r"[A-Z\s]COMMITTEE",
+        r"[A-Z\s]AUTHORITY",
+        r"[A-Z\s]TRUST",
+        r"[A-Z\s]CORPORATION",
+    ),
+))
 
 
 def _is_government_entity(x: Column) -> Column:
@@ -100,49 +100,10 @@ def _is_government_entity(x: Column) -> Column:
 
 def _payee_section(u: Column) -> Column:
     """= oracle.grammars.extract_payee_section (first indicator, 200 chars)."""
-    chain = None
-    for ind in vocab.PAYEE_SECTION_INDICATORS:
-        sect = F.substr(u, F.instr(u, ind) + len(ind), F.lit(200))
-        chain = (
-            F.when(u.contains(ind), sect)
-            if chain is None
-            else chain.when(u.contains(ind), sect)
-        )
-    return chain.otherwise(F.lit(None).cast("string"))
-
-
-# Literal-prefix guard per PAYEE_PATTERN (pure prefilter, regex stays
-# authoritative): every match of pattern i necessarily contains the literal,
-# and contains() is ~10x cheaper than letting the backtracking scan run on
-# rows that cannot match. None = no cheap guard (pattern 10 is ^-anchored —
-# it fails on the first non-[A-Z\s.] char, no scan).
-_PAYEE_GUARDS: tuple = (
-    ("PAY",), ("ORDER",), ("PAY",), ("BEARER",), ("BEARER",),
-    ("FAVOUR",), ("FAVOR",), ("BENEFICIARY",), ("RUPEES", "RS"), None,
-)
-
-
-def _payee_raw_col(u: Column) -> Column:
-    """= oracle.grammars.extract_payee: 10 ordered patterns, first whose
-    candidate is not bank/metadata wins.
-
-    Array-HOF form, not a when-chain: the candidates go into one array and
-    the bank/metadata gate lives in a single `filter` lambda, so its ~40-term
-    tree is generated ONCE instead of once per pattern (10x smaller codegen
-    method — the when-chain form was a janino 64KB-limit contributor)."""
-    def hit(p: str, guards) -> Column:
-        rx = u.rlike(p)
-        if not guards:
-            return rx
-        g = C.any_term(u, guards)
-        return g & rx
-
-    cands = F.array(*[
-        F.when(hit(p, g), C.pystrip(F.regexp_extract(u, p, 1)))
-        for p, g in zip(vocab.PAYEE_PATTERNS, _PAYEE_GUARDS)
+    return C.when_chain([
+        (u.contains(ind), F.substr(u, F.instr(u, ind) + len(ind), F.lit(200)))
+        for ind in vocab.PAYEE_SECTION_INDICATORS
     ])
-    sel = F.filter(cands, lambda c: c.isNotNull() & ~C.is_bank_or_metadata(c))
-    return F.get(sel, 0)
 
 
 # ---------------------------------------------------------------------------
@@ -190,7 +151,7 @@ def q_classify(spark, sf_dir):
     u = F.upper(F.col("text"))
     cat3 = u.contains("GOVERNMENT ACCOUNT") | u.contains("GOVT ACCOUNT")
     cat2 = u.contains("NOT TRANSFERABLE") & C.any_term(
-        u, ("GOVT", "GOVERNMENT", "PAO", "DDO")
+        u, vocab.GOVT_NOT_TRANSFERABLE_TERMS
     )
     cat1 = C.any_term(u, vocab.GOVT_MARKERS_HIGH) | C.any_term(
         u, vocab.GOVT_MARKERS_MEDIUM
@@ -255,52 +216,20 @@ def q_payee_extract(spark, sf_dir):
     # Strip trailing line terminators BEFORE matching: Java '$' (non-
     # MULTILINE) also matches before a final newline while RE2 '$' matches
     # only end-of-text — normalizing the input removes the dialect gap.
-    # The normalization is materialized as its own projection first: the
-    # when-chain references it ~2x per pattern x 10 patterns, and
+    # The normalization is materialized as its own projection first:
+    # payee_raw references it once per pattern and guard, and
     # CollapseProject would otherwise inline the regexp_replace into every
-    # branch (the variant_keep_best trap). Same literal-prefix guards as
-    # _payee_raw_col (pure prefilter, regex authoritative).
+    # reference (the variant_keep_best trap).
     staged = par(read_documents(spark, sf_dir)).select(
         "doc_id",
         F.regexp_replace(F.upper(F.col("text")), r"[\n\r]+$", "").alias("__u"),
     )
-    u = F.col("__u")
-    # r08: array-HOF form (the _payee_raw_col structure) instead of a
-    # when-chain — the chain inlined trim(regexp_extract(u, p, 1)) into
-    # every bank/metadata Contains guard (~31 regex evaluations per
-    # matched pattern per row) while the bank gate's ~40-term tree was
-    # generated once PER PATTERN. Here each pattern runs at most ONE
-    # regex scan (the extract, gated on its cheap literal-contains
-    # guard; group 1 is mandatory and starts with [A-Z], so a
-    # non-empty trimmed extract <=> rlike — no separate rlike scan),
-    # and the bank gate lives in a single filter lambda.
-    def cand(p: str, guards) -> Column:
-        ex = F.trim(F.regexp_extract(u, p, 1))
-        if not guards:
-            return ex
-        return F.when(C.any_term(u, guards), ex)
-
-    cands = F.array(*[
-        cand(p, g) for p, g in zip(vocab.PAYEE_PATTERNS_SQLSAFE, _PAYEE_GUARDS)
-    ])
-    sel = F.filter(
-        cands,
-        lambda c: c.isNotNull() & (F.length(c) > 0)
-        & ~C.is_bank_or_metadata(c),
-    )
-    payee = F.get(sel, 0)
-    return staged.select("doc_id", payee.alias("payee_raw"))
+    return staged.select("doc_id", C.payee_raw(F.col("__u")).alias("payee_raw"))
 
 
 def sql_payee_extract():
-    payee = D.first_where(
-        [f"CASE WHEN regexp_matches(u, {D.rx(p)}) "
-         f"THEN trim(regexp_extract(u, {D.rx(p)}, 1)) END"
-         for p in vocab.PAYEE_PATTERNS_SQLSAFE],
-        lambda c: f"NOT {D.is_bank_or_metadata(c)}",
-    )
     return f"""
-SELECT doc_id, {payee} AS payee_raw
+SELECT doc_id, {D.payee_raw('u')} AS payee_raw
 FROM (SELECT doc_id, regexp_replace(upper(text), '[\\n\\r]+$', '') AS u
       FROM documents)"""
 
@@ -337,7 +266,7 @@ def q_spelling_correct(spark, sf_dir):
     for word in vocab.GARBAGE_WORDS:
         s = F.replace(s, F.lit(word), F.lit(""))
     s = C.collapse_ws(s)
-    s = F.regexp_replace(s, r"[^A-Z\s]", "")
+    s = F.regexp_replace(s, vocab.NON_ALPHA_SPACE, "")
     out = F.when(
         F.col("text").isNull() | (F.length("text") == 0), F.lit("UNKNOWN")
     ).otherwise(F.when(F.length(s) >= 3, s).otherwise(F.lit("UNKNOWN")))
@@ -355,27 +284,25 @@ def sql_spelling_correct():
 # F2-F5: field grammars (date / amount / account / MICR)
 # ---------------------------------------------------------------------------
 
-_DATE_PAT = r"Date:\s*(\d{2})[./](\d{2})[./](\d{4})"
-_AMOUNT_PAT = r"[₹Rs\.]*\s*([\d,]+(\.\d{2})?)[/\-]?"
-_ACCOUNT_PAT = r"A/C No\.?[\s:]*(\d{10,20})"
-
-
 def q_field_grammars(spark, sf_dir):
     t = F.col("text")
+    date_p, amount_p, account_p, micr = (
+        vocab.DATE_PATTERN, vocab.AMOUNT_PATTERN, vocab.ACCOUNT_NO_PATTERN,
+        vocab.MICR_PATTERN,
+    )
     date = F.when(
-        t.rlike(_DATE_PAT),
+        t.rlike(date_p),
         F.concat(
-            F.regexp_extract(t, _DATE_PAT, 1),
-            F.regexp_extract(t, _DATE_PAT, 2),
-            F.regexp_extract(t, _DATE_PAT, 3),
+            F.regexp_extract(t, date_p, 1),
+            F.regexp_extract(t, date_p, 2),
+            F.regexp_extract(t, date_p, 3),
         ),
     )
     amount = F.when(
-        t.rlike(_AMOUNT_PAT),
-        F.replace(F.regexp_extract(t, _AMOUNT_PAT, 1), F.lit(","), F.lit("")),
+        t.rlike(amount_p),
+        F.replace(F.regexp_extract(t, amount_p, 1), F.lit(","), F.lit("")),
     )
-    account = F.when(t.rlike(_ACCOUNT_PAT), F.regexp_extract(t, _ACCOUNT_PAT, 1))
-    micr = vocab.MICR_PATTERN
+    account = F.when(t.rlike(account_p), F.regexp_extract(t, account_p, 1))
     has_micr = t.rlike(micr)
     return par(read_documents(spark, sf_dir)).select(
         "doc_id",
@@ -395,10 +322,13 @@ def sql_field_grammars():
     def guard(pat, expr):
         return f"CASE WHEN regexp_matches(text, {D.rx(pat)}) THEN {expr} END"
 
-    date = guard(_DATE_PAT, f"{ex(_DATE_PAT,1)} || {ex(_DATE_PAT,2)} || {ex(_DATE_PAT,3)}")
-    amount = guard(_AMOUNT_PAT, f"replace({ex(_AMOUNT_PAT,1)}, ',', '')")
-    account = guard(_ACCOUNT_PAT, ex(_ACCOUNT_PAT, 1))
-    micr = vocab.MICR_PATTERN
+    date_p, amount_p, account_p, micr = (
+        vocab.DATE_PATTERN, vocab.AMOUNT_PATTERN, vocab.ACCOUNT_NO_PATTERN,
+        vocab.MICR_PATTERN,
+    )
+    date = guard(date_p, f"{ex(date_p, 1)} || {ex(date_p, 2)} || {ex(date_p, 3)}")
+    amount = guard(amount_p, f"replace({ex(amount_p, 1)}, ',', '')")
+    account = guard(account_p, ex(account_p, 1))
     return f"""
 SELECT doc_id,
   {date} AS field_date,
@@ -599,14 +529,10 @@ def q_issuer_auth_account_grammar(spark, sf_dir):
     ]
 
     def first_match(patterns, guards):
-        chain = None
-        for p, g in zip(patterns, guards):
-            cond = g & u.rlike(p)
-            hit = F.when(cond, F.trim(F.regexp_extract(u, p, 1)))
-            chain = hit if chain is None else chain.when(
-                cond, F.trim(F.regexp_extract(u, p, 1))
-            )
-        return chain.otherwise(F.lit(None).cast("string"))
+        return C.when_chain([
+            (g & u.rlike(p), F.trim(F.regexp_extract(u, p, 1)))
+            for p, g in zip(patterns, guards)
+        ])
 
     return par(read_documents(spark, sf_dir)).select(
         "doc_id",
@@ -652,7 +578,7 @@ def q_issuer_simple(spark, sf_dir):
         cand = F.substring_index(cand, delim, 1)
     words = F.filter(F.split(cand, r"\s+"), lambda w: w != "")
     joined = F.array_join(words, " ")
-    cleaned = C.collapse_ws(F.regexp_replace(joined, r"[^\w\s]", " "))
+    cleaned = C.collapse_ws(F.regexp_replace(joined, vocab.NON_WORD_OR_SPACE, " "))
     # materialize the multi-referenced derivations once per row (words is
     # referenced 3x, cleaned 2x, for_result 2x — inlined, each reference
     # would re-run the whole split/regex chain)
@@ -663,14 +589,8 @@ def q_issuer_simple(spark, sf_dir):
         cleaned.alias("__cleaned"),
     )
     uu = F.col("__u")
-    bank = None
-    for b in vocab.SIMPLE_BANK_NAMES:
-        bank = (
-            F.when(uu.contains(b), F.lit(b))
-            if bank is None
-            else bank.when(uu.contains(b), F.lit(b))
-        )
-    bank = bank.otherwise(F.lit(None).cast("string"))
+    bank = C.when_chain(
+        [(uu.contains(b), F.lit(b)) for b in vocab.SIMPLE_BANK_NAMES])
     for_result = F.when(
         uu.contains("FOR")
         & (F.size("__words") >= 1) & (F.size("__words") <= 5)
@@ -700,7 +620,7 @@ def sql_issuer_simple():
         cand = f"split_part({cand}, {d}, 1)"  # whole string if d is absent
     words = f"regexp_extract_all({cand}, '[^ \\t\\n\\x0b\\f\\r]+')"
     joined = f"array_to_string({words}, ' ')"
-    cleaned = D.collapse_ws(D.rr(joined, r"[^\w\s]", " "))
+    cleaned = D.collapse_ws(D.rr(joined, vocab.NON_WORD_OR_SPACE, " "))
     for_result = (
         f"CASE WHEN contains({u}, 'FOR') AND len({words}) BETWEEN 1 AND 5 "
         f"AND length({cleaned}) >= 5 THEN {cleaned} END"
@@ -810,13 +730,14 @@ def q_filename_fields(spark, sf_dir):
         F.lit("P_"), F.col("doc_id").cast("string"), F.lit("_"),
         F.col("n_chars").cast("string"), F.lit(".50.tif"),
     )
+    amount_p, date_p = vocab.FNAME_AMOUNT_PATTERN, vocab.FNAME_DATE_PATTERN
     amount = F.when(
-        fname.rlike(r"(\d+\.\d{2})"), F.regexp_extract(fname, r"(\d+\.\d{2})", 1)
+        fname.rlike(amount_p), F.regexp_extract(fname, amount_p, 1)
     ).otherwise("0.00")
     account = F.when(
         fname.rlike(r"\d+"), F.regexp_extract(fname, r"(\d+)", 1)
     ).otherwise("0")
-    date = F.when(fname.rlike(r"(\d{8})"), F.regexp_extract(fname, r"(\d{8})", 1))
+    date = F.when(fname.rlike(date_p), F.regexp_extract(fname, date_p, 1))
     return par(read_documents(spark, sf_dir)).select(
         "doc_id", fname.alias("filename"),
         amount.alias("amount"), account.alias("account"), date.alias("file_date"),
@@ -825,14 +746,16 @@ def q_filename_fields(spark, sf_dir):
 
 def sql_filename_fields():
     fname = "'P_' || CAST(doc_id AS VARCHAR) || '_' || CAST(n_chars AS VARCHAR) || '.50.tif'"
+    amount_p = D.rx(vocab.FNAME_AMOUNT_PATTERN)
+    date_p = D.rx(vocab.FNAME_DATE_PATTERN)
     return f"""
 SELECT doc_id, {fname} AS filename,
-  CASE WHEN regexp_matches({fname}, '(\\d+\\.\\d{{2}})')
-       THEN regexp_extract({fname}, '(\\d+\\.\\d{{2}})', 1) ELSE '0.00' END AS amount,
+  CASE WHEN regexp_matches({fname}, {amount_p})
+       THEN regexp_extract({fname}, {amount_p}, 1) ELSE '0.00' END AS amount,
   CASE WHEN regexp_matches({fname}, '\\d+')
        THEN regexp_extract({fname}, '(\\d+)', 1) ELSE '0' END AS account,
-  CASE WHEN regexp_matches({fname}, '(\\d{{8}})')
-       THEN regexp_extract({fname}, '(\\d{{8}})', 1) END AS file_date
+  CASE WHEN regexp_matches({fname}, {date_p})
+       THEN regexp_extract({fname}, {date_p}, 1) END AS file_date
 FROM documents"""
 
 
@@ -875,7 +798,7 @@ def q_clean_text_v2(spark, sf_dir):
     t = F.col("text")
     s = F.upper(t)
     s = F.translate(s, "01|568", "OIISGB")
-    s = F.regexp_replace(s, r"[^A-Z0-9 .,&/-]", " ")
+    s = F.regexp_replace(s, vocab.NON_CHARSET_V1, " ")
     s = C.collapse_ws(s)
     out = F.when(t.isNull() | (F.length(t) == 0), F.lit("XXX")).otherwise(s)
     return par(read_documents(spark, sf_dir)).select("doc_id", out.alias("cleaned_v2"))
@@ -883,7 +806,7 @@ def q_clean_text_v2(spark, sf_dir):
 
 def sql_clean_text_v2():
     s = "translate(upper(text), '01|568', 'OIISGB')"
-    s = D.rr(s, r"[^A-Z0-9 .,&/-]", " ")
+    s = D.rr(s, vocab.NON_CHARSET_V1, " ")
     s = D.collapse_ws(s)
     return (
         f"SELECT doc_id, CASE WHEN text IS NULL OR length(text) = 0 "
@@ -955,13 +878,13 @@ def _clean_name_fast_col(cand: Column) -> Column:
     u = F.upper(cand)
     for wrong, right in vocab.FAST_SPELLING_CORRECTIONS:
         u = F.replace(u, F.lit(wrong), F.lit(right))
-    u = C.collapse_ws(F.regexp_replace(u, r"[^\w\s]", " "))
+    u = C.collapse_ws(F.regexp_replace(u, vocab.NON_WORD_OR_SPACE, " "))
     return F.when(F.length(u) >= 3, u).otherwise(F.lit("UNKNOWN"))
 
 
 def _clean_name_fast_sql(cand: str) -> str:
     s = D.chain_replace(f"upper({cand})", vocab.FAST_SPELLING_CORRECTIONS)
-    s = D.collapse_ws(D.rr(s, r"[^\w\s]", " "))
+    s = D.collapse_ws(D.rr(s, vocab.NON_WORD_OR_SPACE, " "))
     return f"CASE WHEN length({s}) >= 3 THEN {s} ELSE 'UNKNOWN' END"
 
 
@@ -979,25 +902,22 @@ def q_fast_pattern_extract(spark, sf_dir):
 
     # interior-literal guards for the two group-leading issuer patterns
     # (no literal PREFIX to auto-derive, but any match must contain these)
-    interior = {
-        r"([A-Z][A-Z\s\.]{5,50}?)\s+AUTHORISED\s+SIGNATORY": "AUTHORISED",
-        r"([A-Z][A-Z\s\.]{5,50}?)\s+SIGNATURE": "SIGNATURE",
-    }
+    interior = dict(zip(vocab.FAST_ISSUER_PATTERNS[1:],
+                        ("AUTHORISED", "SIGNATURE")))
+
+    def cond(p: str) -> Column:
+        prefix = C.literal_prefix(p)
+        if len(prefix) >= 3:  # skip the backtracking regex cheaply
+            return u.contains(prefix) & u.rlike(p)
+        if p in interior:
+            return u.contains(interior[p]) & u.rlike(p)
+        return u.rlike(p)
 
     def first(patterns):
-        chain = None
-        for p in patterns:
-            cond = u.rlike(p)
-            prefix = C.literal_prefix(p)
-            if len(prefix) >= 3:  # skip the backtracking regex cheaply
-                cond = u.contains(prefix) & cond
-            elif p in interior:
-                cond = u.contains(interior[p]) & cond
-            hit = F.when(cond, _clean_name_fast_col(F.regexp_extract(u, p, 1)))
-            chain = hit if chain is None else chain.when(
-                cond, _clean_name_fast_col(F.regexp_extract(u, p, 1))
-            )
-        return chain.otherwise(F.lit(None).cast("string"))
+        return C.when_chain([
+            (cond(p), _clean_name_fast_col(F.regexp_extract(u, p, 1)))
+            for p in patterns
+        ])
 
     return staged.select(
         "doc_id",

@@ -12,6 +12,7 @@ or a path. Sinks:
   (issuer_processor_v.py:552-560: lower-cased Path(...).stem)
 - ``parquet_stats``      — (rows, bytes) of committed parquet, no Spark job
 - ``write_atomic``       — publish a manifest or marker by temp file + rename
+- ``claim_run_state``    — the entrypoints' one --resume / --overwrite rule
 
 The registry queries read the test tables of a scale-factor directory
 (``read_documents`` / ``read_events`` / ``read_embeddings``), and the
@@ -22,6 +23,7 @@ flagship rows see the documents table as transcripts
 
 from __future__ import annotations
 
+import shutil
 from pathlib import Path
 
 import pyarrow.parquet as pq
@@ -165,6 +167,34 @@ def write_atomic(path: str | Path, text: str) -> None:
     tmp = path.with_name(f".{path.name}.tmp")
     tmp.write_text(text)
     tmp.replace(path)
+
+
+def claim_run_state(output: str, state: list[Path], resume: bool,
+                    overwrite: bool) -> None:
+    """The one rule job.py and corpus_job apply to the run state they keep
+    under ``output`` (the ``state`` paths): --resume continues it,
+    --overwrite discards all of it, neither refuses to start while any of
+    it exists, and both together are an error. Raises SystemExit before any
+    Spark work, so a forgotten flag cannot cost a long run's progress."""
+    if resume and overwrite:
+        raise SystemExit(
+            "--resume continues the run state in an output and --overwrite "
+            "discards it; pass one, not both"
+        )
+    existing = [p for p in state if p.exists()]
+    if resume or not existing:
+        return
+    if not overwrite:
+        raise SystemExit(
+            f"output {output} already has run state "
+            f"({', '.join(p.name for p in existing)}); pass --resume "
+            "to continue it or --overwrite to discard all of it"
+        )
+    for p in existing:
+        if p.is_dir():
+            shutil.rmtree(p)
+        else:
+            p.unlink()
 
 
 def stem_key(col: Column) -> Column:

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
+from cheque_ocr_project_spark.oracle import vocab
+
 OUTPUT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
     T.StructField("turns_seen", T.LongType()),
@@ -32,8 +34,6 @@ STATE_SCHEMA = T.StructType([
     T.StructField("max_turn_idx", T.LongType()),
     T.StructField("payee_marker_turns", T.LongType()),
 ])
-
-_PAYEE_MARKERS = ("PAY", "ORDER OF", "FAVOUR OF", "BENEFICIARY")
 
 
 def _make_update(idle_timeout_ms: int):
@@ -61,7 +61,7 @@ def _update_impl(key, pdf_iter, state: GroupState, idle_timeout_ms: int):
             max_idx = max(max_idx, int(pdf["turn_idx"].max()))
             texts = pdf["text"].fillna("").str.upper()
             markers += int(
-                texts.apply(lambda t: any(m in t for m in _PAYEE_MARKERS)).sum()
+                texts.apply(lambda t: any(m in t for m in vocab.PAYEE_MARKERS)).sum()
             )
     state.update((turns, max_idx, markers))
     state.setTimeoutDuration(idle_timeout_ms)  # close idle conversations

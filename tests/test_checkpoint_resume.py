@@ -224,6 +224,33 @@ def test_job_refuses_silent_manifest_overwrite(tmp_path, monkeypatch):
     assert not marker.exists() and not data.exists()
 
 
+def test_resume_with_overwrite_refused_by_both_entrypoints(tmp_path):
+    """--resume keeps run state and --overwrite discards it: both together
+    is an error in job.py and corpus_job alike, raised before any Spark
+    work and deleting nothing."""
+    import pytest
+
+    from cheque_ocr_project_spark import corpus_job, job
+
+    out = tmp_path / "jobout"
+    manifest = out / "_manifest"
+    manifest.mkdir(parents=True)
+    (manifest / "commit-1-1.json").write_text('{"bucket": 0, "rows": 1}\n')
+    with pytest.raises(SystemExit, match="not both"):
+        job.main(["--input", "/nonexistent", "--output", str(out),
+                  "--resume", "--overwrite"])
+    assert (manifest / "commit-1-1.json").exists()
+
+    run = tmp_path / "corpus"
+    marker = run / "survivors" / "_STAGE_DONE"
+    marker.parent.mkdir(parents=True)
+    marker.write_text('{"rows": 1, "wall_ms": 1.0}')
+    with pytest.raises(SystemExit, match="not both"):
+        corpus_job.run(None, "/nonexistent", str(run), resume=True,
+                       overwrite=True)
+    assert marker.exists()
+
+
 def test_staged_input_waves(spark, transcripts_sdf, fixture_data, tmp_path):
     """stage_input=True: one bucket-partitioned staging write, waves read
     with partition pruning; results identical to the unstaged run."""

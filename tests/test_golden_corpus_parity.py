@@ -87,11 +87,9 @@ def test_predicates_on_corpus(corpus_sdf):
 
 
 def test_payee_grammar_on_corpus(corpus_sdf):
-    from cheque_ocr_project_spark.plans.grammar import _payee_raw_col
-
     _check(
         _spark_vals(
-            corpus_sdf, _payee_raw_col(F.upper(F.coalesce(F.col("s"), F.lit(""))))
+            corpus_sdf, C.payee_raw(F.upper(F.coalesce(F.col("s"), F.lit(""))))
         ),
         [grammars.extract_payee(s) for s in CORPUS],
         "payee_extract",

@@ -117,12 +117,45 @@ def test_any_term_plan_is_hash_seed_free(spark):
     assert str(C.any_term(col, tup)) != str(C.any_term(col, sorted(tup)))
 
 
-def test_payee_extract_parity(fuzz_sdf):
-    from cheque_ocr_project_spark.plans.grammar import _payee_raw_col
+# a tab or newline after the payee: the oracle's .strip() drops it, a
+# space-only trim keeps it
+PAYEE_WS_CASES = [
+    "PAY JOHN \n 123 RUPEES", "PAY RAMESH KUMAR\t", "BEARER SURESH\t\n99",
+    "FAVOUR OF MEENA\t", "PAY TO: GUPTA STORES \t\n", "ORDER OF ACME LTD\n\t",
+]
 
-    got = _spark_col(fuzz_sdf, _payee_raw_col(F.upper(F.coalesce(F.col("s"), F.lit("")))))
-    exp = [grammars.extract_payee(s) for s in CASES]
-    _compare(got, exp, "payee_extract")
+
+def test_payee_extract_parity(spark):
+    cases = CASES + PAYEE_WS_CASES
+    sdf = spark.createDataFrame(pd.DataFrame({"i": range(len(cases)), "s": cases}))
+    got = _spark_col(sdf, C.payee_raw(F.upper(F.coalesce(F.col("s"), F.lit("")))))
+    bad = [(s, g, grammars.extract_payee(s)) for s, g in zip(cases, got)
+           if g != grammars.extract_payee(s)]
+    assert not bad, f"payee_extract: {len(bad)} divergences; first: {bad[0]}"
+
+
+def test_payee_extract_query_rows(spark, tmp_path):
+    """Every row of q_payee_extract equals the oracle on its document's
+    text without trailing line ends (the query's normalization), over the
+    sf0.01 documents plus the whitespace-trailing payee cases."""
+    from cheque_ocr_project_spark.plans.grammar import q_payee_extract
+    from tests.test_driver_contract import SF_DIR as sf
+
+    docs = pd.read_parquet(f"{sf}/documents.parquet")
+    extra = docs.iloc[: len(PAYEE_WS_CASES)].copy()
+    extra["doc_id"] = docs["doc_id"].max() + 1 + pd.RangeIndex(len(extra))
+    extra["text"] = PAYEE_WS_CASES
+    docs = pd.concat([docs, extra], ignore_index=True)
+    docs.to_parquet(tmp_path / "documents.parquet")
+    got = {r.doc_id: r.payee_raw
+           for r in q_payee_extract(spark, str(tmp_path)).collect()}
+    assert set(got) == set(docs["doc_id"])
+    bad = []
+    for d, text in zip(docs["doc_id"], docs["text"]):
+        exp = grammars.extract_payee((text or "").rstrip("\n\r"))
+        if got[d] != exp:
+            bad.append((d, text, got[d], exp))
+    assert not bad, f"{len(bad)} divergences; first: {bad[0]}"
 
 
 def test_filename_fields_parity(spark):

@@ -94,3 +94,63 @@ def test_transcript_key_split_in_sql_once():
         if "// 2147483648" in p.read_text()
     )
     assert holders == ["sources/io.py"], holders
+
+
+_RX_META = set("\\^$.|?*+()[]{}")
+# shared constants that are not a grammar of the oracle, each with the
+# reason it may be spelled in more than one module
+GRAMMAR_COPY_ALLOWLIST: dict = {}
+
+
+def _str_constants(tree) -> set:
+    """Every string constant of a module, docstrings excluded."""
+    docs = {
+        id(n.body[0].value) for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.FunctionDef, ast.ClassDef))
+        and n.body and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+    return {
+        n.value for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+        and id(n) not in docs
+    }
+
+
+def _str_sequences(tree) -> set:
+    """Every tuple or list literal of two or more string constants."""
+    return {
+        tuple(e.value for e in n.elts) for n in ast.walk(tree)
+        if isinstance(n, (ast.Tuple, ast.List)) and len(n.elts) >= 2
+        and all(isinstance(e, ast.Constant) and isinstance(e.value, str)
+                for e in n.elts)
+    }
+
+
+def test_oracle_grammar_spelled_once():
+    """Each regex and term list the oracle shares with its Catalyst and
+    DuckDB twins is spelled once, in oracle/vocab.py (or in the one module
+    that uses it); every other module reads it from there."""
+    trees = {
+        str(p.relative_to(PKG)): ast.parse(p.read_text())
+        for p in sorted(PKG.rglob("*.py"))
+    }
+    consts = {m: _str_constants(t) for m, t in trees.items()}
+    regexes = {
+        s for m, c in consts.items() if m.startswith("oracle/")
+        for s in c if len(s) >= 6 and _RX_META & set(s)
+    }
+    copies = {}
+    for s in sorted(regexes - set(GRAMMAR_COPY_ALLOWLIST)):
+        holders = sorted(m for m, c in consts.items() if s in c)
+        if len(holders) > 1:
+            copies[s] = holders
+    seqs: dict = {}
+    for m, t in trees.items():
+        if m.startswith(("oracle/", "functions/")):
+            for seq in _str_sequences(t):
+                seqs.setdefault(seq, []).append(m)
+    for seq, holders in seqs.items():
+        if len(holders) > 1 and seq not in GRAMMAR_COPY_ALLOWLIST:
+            copies[seq] = holders
+    assert not copies, "\n".join(f"{k!r}: {v}" for k, v in copies.items())

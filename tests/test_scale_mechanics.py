@@ -46,6 +46,27 @@ def test_model_udf_plumbing_u3_u4_u5(spark, transcripts_sdf):
     assert [(r.label, r.score) for r in zs] == [(r.label, r.score) for r in again]
 
 
+def test_model_stages_key_worker_cache_by_parameters(spark):
+    """PySpark reuses Python workers, so a model stage's per-worker cache
+    must serve each call with its own labels or question, not the first
+    call's."""
+    import pandas as pd
+
+    t = spark.createDataFrame(pd.DataFrame({
+        "conv_id": [str(i) for i in range(40)], "turn_idx": range(40),
+        "text": ["PAY TO THE ORDER OF ACME LTD"] * 40,
+    })).withColumn("turn_idx", F.col("turn_idx").cast("int"))
+    M.zero_shot_classify(spark, t).collect()
+    labels = ("acme order", "other thing")
+    rows = M.zero_shot_classify(spark, t, labels=labels).collect()
+    assert len(rows) == 40 and {r.label for r in rows} == {"acme order"}
+
+    # the same on the driver, for both stages
+    assert M._load_zero_shot(("x y",))("x")[0] == "x y"
+    assert M._load_zero_shot(("z w",))("z")[0] == "z w"
+    assert M._load_qa("Who is the payee?") is not M._load_qa("Who signed?")
+
+
 def test_plan_shapes_hold(spark):
     """Guard the audited physical-plan shapes of the scale-sensitive
     queries (PLANS.md round 3): a future edit that re-introduces a global
