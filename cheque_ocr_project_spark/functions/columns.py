@@ -99,6 +99,18 @@ def collapse_ws(col: Column) -> Column:
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
+def lower_terms(col: Column) -> Column:
+    """The lowercase letter runs of col: the word terms of the corpus
+    queries (token counts, stop-word ratios, n-grams)."""
+    return F.regexp_extract_all(F.lower(col), F.lit("[a-z]+"), F.lit(0))
+
+
+def doc_words(col: Column) -> Column:
+    """col trimmed of spaces, then split on whitespace runs: the words of
+    the Gopher rules (an empty text is one empty word)."""
+    return F.split(F.trim(col), r"\s+")
+
+
 def pystrip(col: Column) -> Column:
     """Python str.strip(): ALL whitespace (Spark trim strips spaces only)."""
     return F.regexp_replace(col, r"^\s+|\s+$", "")

@@ -117,6 +117,18 @@ def collapse_ws(expr: str) -> str:
     return f"trim({inner})"
 
 
+def lower_terms(expr: str) -> str:
+    """The lowercase letter runs of expr (= columns.lower_terms)."""
+    return f"regexp_extract_all(lower({expr}), '[a-z]+')"
+
+
+def doc_words(expr: str) -> str:
+    """expr trimmed of spaces, then split on whitespace runs
+    (= columns.doc_words)."""
+    ws = rx(r"\s+")
+    return f"regexp_split_to_array(trim({expr}), {ws})"
+
+
 def pystrip(expr: str) -> str:
     """Python str.strip() analog (DuckDB trim strips spaces only).
 

@@ -55,7 +55,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -170,13 +170,24 @@ def normalize_text(col: Column) -> Column:
     return C.collapse_ws(F.upper(col))
 
 
-def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(fingerprint, keeper_id, n_dups): keep min-id per identical text."""
+def exact_dedup(df: DataFrame, id_col: str, text_col: str,
+                keep_rows: bool = False) -> DataFrame:
+    """Exact dedup: the keeper of each md5 fingerprint of the normalised
+    text is its min id. Returns (fingerprint, keeper_id, n_dups) per
+    fingerprint; with ``keep_rows``, the rows of df that are their text's
+    keeper instead (a min-id window, no aggregate to join back)."""
     fp = F.md5(normalize_text(F.col(text_col)))
+    keeper = F.min(id_col)
+    if keep_rows:
+        return (
+            df.withColumn("keeper", keeper.over(Window.partitionBy(fp)))
+            .filter(F.col(id_col) == F.col("keeper"))
+            .drop("keeper")
+        )
     return (
         df.withColumn("fingerprint", fp)
         .groupBy("fingerprint")
-        .agg(F.min(id_col).alias("keeper_id"), F.count(F.lit(1)).alias("n_dups"))
+        .agg(keeper.alias("keeper_id"), F.count(F.lit(1)).alias("n_dups"))
     )
 
 

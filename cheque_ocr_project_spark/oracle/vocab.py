@@ -72,9 +72,13 @@ GARBAGE_PATTERNS = (
 GARBAGE_OIZ_RUN = r"O{4,}|I{4,}|Z{4,}"
 # the run rule plus GARBAGE_PATTERNS in search form, for the engine twins
 # (their regex predicates search, re.match anchors): every listed pattern
-# is ^-anchored but '.*X.*', which is read as a search for X
+# is ^-anchored but '.*X.*', which re.match reads as X after a run of
+# non-newline characters, ^[^\n]*X (spelled as a class: Java's '.' also
+# stops at \r, \x85, \u2028 and \u2029, Python's and RE2's at \n only)
 GARBAGE_SEARCH_PATTERNS = (GARBAGE_OIZ_RUN,) + tuple(
-    p.removeprefix(".*").removesuffix(".*") for p in GARBAGE_PATTERNS
+    p if p.startswith("^")
+    else r"^[^\n]*" + p.removeprefix(".*").removesuffix(".*")
+    for p in GARBAGE_PATTERNS
 )
 
 # --- issuer_processor_v.py:261-264 ------------------------------------------

@@ -5,6 +5,14 @@ Gopher quality and repetition gates, stratified sampling, the three
 composed corpus filters and the staged corpus job's survivors — each a
 Spark query beside its DuckDB twin. The near-dup stages compose the
 near-dup family's SimHash and winnowing twins.
+
+Each text signal the corpus queries share has one Catalyst builder and one
+DuckDB renderer: the structural Gopher gates (``gopher_gates`` /
+``gopher_gates_sql``) and word bigrams (``bigrams`` / ``bigrams_sql``)
+here, the quality score and stop-word ratio in text_stats (``quality`` /
+``quality_sql``), the words and terms in functions/columns.py and
+functions/ducksql.py (``doc_words``, ``lower_terms``), and the exact-dedup
+keeper in ``dedup.exact_dedup`` / ``near_dup.exact_dedup_sql``.
 """
 
 from __future__ import annotations
@@ -12,7 +20,7 @@ from __future__ import annotations
 from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from cheque_ocr_project_spark.functions import columns as C
@@ -21,9 +29,10 @@ from cheque_ocr_project_spark.operators import dedup as DD
 from cheque_ocr_project_spark.operators import sampling as S
 from cheque_ocr_project_spark.operators.extract import par
 from cheque_ocr_project_spark.plans.near_dup import (
-    DOCS_WITH_NEAR_DUPS_CTE, sql_simhash_near_dup, sql_winnow_fingerprint,
+    DOCS_WITH_NEAR_DUPS_CTE, exact_dedup_sql, sql_simhash_near_dup,
+    sql_winnow_fingerprint,
 )
-from cheque_ocr_project_spark.plans.text_stats import STOPWORDS
+from cheque_ocr_project_spark.plans.text_stats import quality, quality_sql
 from cheque_ocr_project_spark.sources import scratch
 from cheque_ocr_project_spark.sources.io import read_documents
 
@@ -234,53 +243,97 @@ FROM d"""
 
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
+# The six structural Gopher gates, in gopher_gates order. ok_stopwords is
+# deliberately NOT among them: the composed corpus filters take the
+# language/common-word signal from text_stats.stop_ratio >= 0.05, and a
+# per-corpus deployment tunes the stopword list to its vocabulary (the
+# synthetic corpus contains none of the eight Gopher English stopwords, so
+# the untuned gate would zero the output rather than filter it).
+GOPHER_STRUCTURAL_GATES = (
+    "ok_word_count", "ok_mean_word_len", "ok_symbol_ratio",
+    "ok_bullet", "ok_ellipsis", "ok_alpha",
+)
 
-def q_gopher_quality(spark, sf_dir):
-    """Gopher quality-filter gates per document: word count in [50, 1e5],
-    mean word length in [3, 10], symbol-to-word ratio (#/...) < 0.1,
-    bullet-line fraction < 0.9, ellipsis-line fraction < 0.3, >= 80% of
-    words contain a letter, and >= 2 distinct required stop words.
-    ``keep`` is the conjunction — the standard pre-training quality gate.
 
-    Scale shape: per-row array expressions over one pruned 2-column scan;
-    no UDF, no shuffle, whole-stage codegen end to end."""
-    t = F.col("text")
-    words = F.split(F.trim(t), r"\s+")
+def gopher_gates(t: Column, words: Column) -> dict[str, Column]:
+    """The structural Gopher gates of text ``t`` over its
+    columns.doc_words ``words``: word count in [50, 1e5], mean word length
+    in [3, 10], symbol-to-word ratio (#/...) < 0.1, bullet-line fraction
+    < 0.9, ellipsis-line fraction < 0.3, and >= 80% of words holding a
+    letter."""
     wc = F.size(words)
     sum_wl = F.aggregate(words, F.lit(0), lambda a, w: a + F.length(w))
     mean_wl = sum_wl.cast("double") / wc
     n_hash = F.length(t) - F.length(F.replace(t, F.lit("#"), F.lit("")))
     n_ell = (F.length(t) - F.length(F.replace(t, F.lit("..."), F.lit("")))) / 3
-    sym_ratio = (n_hash + n_ell) / wc
     lines = F.split(t, "\n")
     nlines = F.size(lines)
-    bullet_frac = (
-        F.size(F.filter(lines, lambda l: l.rlike(r"^\s*[-*]"))) / nlines
+    bullets = F.size(F.filter(lines, lambda l: l.rlike(r"^\s*[-*]")))
+    ellipses = F.size(F.filter(lines, lambda l: l.endswith(F.lit("..."))))
+    alpha_words = F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]")))
+    return {
+        "ok_word_count": (wc >= 50) & (wc <= 100000),
+        "ok_mean_word_len": (mean_wl >= 3.0) & (mean_wl <= 10.0),
+        "ok_symbol_ratio": (n_hash + n_ell) / wc < 0.1,
+        "ok_bullet": bullets / nlines < 0.9,
+        "ok_ellipsis": ellipses / nlines < 0.3,
+        "ok_alpha": alpha_words / wc > 0.8,
+    }
+
+
+# the words and lines of the text column, as gopher_gates_sql reads them
+GOPHER_COLS_SQL = (
+    f"{D.doc_words('text')} AS words, string_split(text, {D.NL}) AS lines"
+)
+
+
+def gopher_gates_sql(t: str, words: str, lines: str) -> dict[str, str]:
+    """= gopher_gates over columns holding the text, its words and its
+    lines (GOPHER_COLS_SQL)."""
+    wc = f"len({words})"
+    mean_wl = (
+        f"CAST(list_sum(list_transform({words}, w -> length(w))) AS DOUBLE) "
+        f"/ {wc}"
     )
-    ell_frac = (
-        F.size(F.filter(lines, lambda l: l.endswith(F.lit("...")))) / nlines
-    )
-    alpha_frac = (
-        F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]"))) / wc
-    )
+    n_hash = f"(length({t}) - length(replace({t}, '#', '')))"
+    n_ell = f"(length({t}) - length(replace({t}, '...', ''))) / 3"
+    bullet = D.rx(r"^\s*[-*]")
+    return {
+        "ok_word_count": f"{wc} >= 50 AND {wc} <= 100000",
+        "ok_mean_word_len": f"{mean_wl} >= 3.0 AND {mean_wl} <= 10.0",
+        "ok_symbol_ratio": f"CAST({n_hash} + {n_ell} AS DOUBLE) / {wc} < 0.1",
+        "ok_bullet": (
+            f"CAST(len(list_filter({lines}, l -> regexp_matches(l, {bullet}))) "
+            f"AS DOUBLE) / len({lines}) < 0.9"
+        ),
+        "ok_ellipsis": (
+            f"CAST(len(list_filter({lines}, l -> ends_with(l, '...'))) "
+            f"AS DOUBLE) / len({lines}) < 0.3"
+        ),
+        "ok_alpha": (
+            f"CAST(len(list_filter({words}, w -> regexp_matches(w, '[A-Za-z]'))) "
+            f"AS DOUBLE) / {wc} > 0.8"
+        ),
+    }
+
+
+def q_gopher_quality(spark, sf_dir):
+    """Gopher quality-filter gates per document: the structural gates
+    (gopher_gates) and >= 2 distinct required stop words. ``keep`` is the
+    conjunction — the standard pre-training quality gate.
+
+    Scale shape: per-row array expressions over one pruned 2-column scan;
+    no UDF, no shuffle, whole-stage codegen end to end."""
+    t = F.col("text")
+    words = C.doc_words(t)
     lowered = F.transform(words, F.lower)
     stop_hits = sum(
         F.array_contains(lowered, s).cast("int") for s in GOPHER_STOPWORDS
     )
-    gates = {
-        "ok_word_count": (wc >= 50) & (wc <= 100000),
-        "ok_mean_word_len": (mean_wl >= 3.0) & (mean_wl <= 10.0),
-        "ok_symbol_ratio": sym_ratio < 0.1,
-        "ok_bullet": bullet_frac < 0.9,
-        "ok_ellipsis": ell_frac < 0.3,
-        "ok_alpha": alpha_frac > 0.8,
-        "ok_stopwords": stop_hits >= 2,
-    }
-    keep = None
-    for g in gates.values():
-        keep = g if keep is None else (keep & g)
+    gates = {**gopher_gates(t, words), "ok_stopwords": stop_hits >= 2}
+    keep = reduce(lambda a, b: a & b, gates.values())
     return par(read_documents(spark, sf_dir)).select(
-        "doc_id", wc.alias("word_count"),
+        "doc_id", F.size(words).alias("word_count"),
         stop_hits.alias("stop_hits"),
         *[c.alias(n) for n, c in gates.items()],
         keep.alias("keep"),
@@ -292,41 +345,36 @@ def sql_gopher_quality():
         f"CAST(list_contains(lowered, '{s}') AS INT)"
         for s in GOPHER_STOPWORDS
     )
+    gates = gopher_gates_sql("text", "words", "lines")
+    cols = ",\n         ".join(f"{g} AS {n}" for n, g in gates.items())
     return f"""
 WITH d AS (
-  SELECT doc_id,
-         regexp_split_to_array(trim(text), '[ \\t\\n\\x0b\\f\\r]+') AS words,
-         string_split(text, chr(10)) AS lines,
-         length(text) - length(replace(text, '#', '')) AS n_hash,
-         (length(text) - length(replace(text, '...', ''))) / 3 AS n_ell
-  FROM documents
-), e AS (
-  SELECT doc_id, words, lines, n_hash, n_ell,
-         len(words) AS wc, len(lines) AS nlines,
-         list_transform(words, w -> lower(w)) AS lowered,
-         list_sum(list_transform(words, w -> length(w))) AS sum_wl
-  FROM d
+  SELECT doc_id, text, {GOPHER_COLS_SQL} FROM documents
 ), g AS (
-  SELECT doc_id, wc AS word_count,
+  SELECT doc_id, len(words) AS word_count,
          {stops} AS stop_hits,
-         wc >= 50 AND wc <= 100000 AS ok_word_count,
-         CAST(sum_wl AS DOUBLE) / wc >= 3.0
-           AND CAST(sum_wl AS DOUBLE) / wc <= 10.0 AS ok_mean_word_len,
-         CAST(n_hash + n_ell AS DOUBLE) / wc < 0.1 AS ok_symbol_ratio,
-         CAST(len(list_filter(lines, l -> regexp_matches(l, '^[ \\t\\n\\x0b\\f\\r]*[-*]')))
-              AS DOUBLE) / nlines < 0.9 AS ok_bullet,
-         CAST(len(list_filter(lines, l -> ends_with(l, '...')))
-              AS DOUBLE) / nlines < 0.3 AS ok_ellipsis,
-         CAST(len(list_filter(words, w -> regexp_matches(w, '[A-Za-z]')))
-              AS DOUBLE) / wc > 0.8 AS ok_alpha
-  FROM e
+         {cols}
+  FROM (SELECT *, list_transform(words, w -> lower(w)) AS lowered FROM d)
 )
-SELECT doc_id, word_count, stop_hits, ok_word_count, ok_mean_word_len,
-       ok_symbol_ratio, ok_bullet, ok_ellipsis, ok_alpha,
+SELECT doc_id, word_count, stop_hits, {', '.join(gates)},
        stop_hits >= 2 AS ok_stopwords,
-       ok_word_count AND ok_mean_word_len AND ok_symbol_ratio AND ok_bullet
-         AND ok_ellipsis AND ok_alpha AND stop_hits >= 2 AS keep
+       {' AND '.join(gates)} AND stop_hits >= 2 AS keep
 FROM g"""
+
+
+def bigrams(words: Column) -> Column:
+    """The adjacent pairs of ``words``, space-joined, in order."""
+    n = F.size(words)
+    return F.zip_with(
+        F.slice(words, 1, n - 1), F.slice(words, 2, n - 1),
+        lambda a, b: F.concat_ws(" ", a, b),
+    )
+
+
+def bigrams_sql(words: str) -> str:
+    """= bigrams over a list column."""
+    return (f"list_transform(range(1, len({words})), "
+            f"i -> {words}[i] || ' ' || {words}[i + 1])")
 
 
 def q_rep_top_bigram(spark, sf_dir):
@@ -340,15 +388,8 @@ def q_rep_top_bigram(spark, sf_dir):
     collapses the heavy duplication BEFORE the shuffle) -> per-doc top-1
     window on the high-cardinality doc_id key. Ties broken (count desc,
     gram asc) so both engines pick the identical winner."""
-    t = F.col("text")
-    words = F.split(F.trim(t), r"\s+")
-    n = F.size(words)
-    bigrams = F.zip_with(
-        F.slice(words, 1, n - 1), F.slice(words, 2, n - 1),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
     d = par(read_documents(spark, sf_dir)).select(
-        "doc_id", F.explode(bigrams).alias("gram")
+        "doc_id", F.explode(bigrams(C.doc_words(F.col("text")))).alias("gram")
     )
     cnt = d.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("doc_id").orderBy(
@@ -361,15 +402,11 @@ def q_rep_top_bigram(spark, sf_dir):
     )
 
 
-SQL_REP_TOP_BIGRAM = r"""
+SQL_REP_TOP_BIGRAM = f"""
 WITH w AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '[ \t\n\x0b\f\r]+') AS words
-  FROM documents
+  SELECT doc_id, {D.doc_words('text')} AS words FROM documents
 ), b AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(words)),
-                               i -> words[i] || ' ' || words[i + 1])) AS gram
-  FROM w
+  SELECT doc_id, unnest({bigrams_sql('words')}) AS gram FROM w
 ), c AS (
   SELECT doc_id, gram, count(*) AS cnt FROM b GROUP BY doc_id, gram
 )
@@ -465,6 +502,17 @@ FROM documents WHERE {b} < {thr}"""
 CORPUS_FILTER_MAX_BUCKET = 64
 
 
+def _shadowed_sql(rel: str) -> str:
+    """The doc_ids the capped SimHash near-dup pairs over ``rel``'s
+    (doc_id, text) rows shadow: the pair SQL with ``rel`` in place of its
+    clone-planted docs CTE."""
+    pairs = sql_simhash_near_dup(
+        3, max_bucket=CORPUS_FILTER_MAX_BUCKET
+    ).replace(DOCS_WITH_NEAR_DUPS_CTE,
+              f"\ndocs AS (SELECT doc_id, text FROM {rel})")
+    return f"SELECT DISTINCT id_b AS doc_id FROM ({pairs})"
+
+
 def q_corpus_filter(spark, sf_dir):
     """Composed pre-training corpus filter: exact-dedup pre-pass (keep the
     min-id copy of each identical text), then quality >= 0.5 AND lang = 'en'
@@ -478,15 +526,7 @@ def q_corpus_filter(spark, sf_dir):
     near-identical skew remains. One extra hash shuffle + semi-join beyond
     the LSH pipeline's own."""
     d = read_documents(spark, sf_dir)
-    t = F.col("text")
-    alpha_ratio = C.n_alpha(t) / F.length(t)
-    punct_ratio = F.length(F.regexp_replace(t, r"[^.,;:!?]", "")) / F.length(t)
-    tokens = F.regexp_extract_all(F.lower(t), F.lit(r"[a-z]+"), F.lit(0))
-    stop_hits = F.size(F.filter(tokens, lambda w: w.isin(*STOPWORDS)))
-    stop_ratio = F.when(F.size(tokens) > 0, stop_hits / F.size(tokens)).otherwise(0.0)
-    quality = 0.4 * alpha_ratio + 0.3 * stop_ratio + 0.3 * (1.0 - punct_ratio)
-    lang_en = stop_ratio >= 0.05
-
+    q = quality(F.col("text"))
     keepers = DD.exact_dedup(d, "doc_id", "text").select(
         F.col("keeper_id").alias("doc_id")
     )
@@ -495,48 +535,27 @@ def q_corpus_filter(spark, sf_dir):
                              max_bucket=CORPUS_FILTER_MAX_BUCKET)
     shadowed = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     kept = (
-        survivors.filter((quality >= 0.5) & lang_en)
+        survivors.filter((q.score >= 0.5) & (q.stop >= 0.05))
         .join(shadowed, "doc_id", "left_anti")
     )
-    return kept.select("doc_id", F.round(quality, 6).alias("quality"))
+    return kept.select("doc_id", F.round(q.score, 6).alias("quality"))
 
 
 def sql_corpus_filter():
-    norm = D.collapse_ws("upper(text)")
-    survivors_cte = f"""
-docs AS (
-  SELECT doc_id, text FROM (
-    SELECT doc_id, text,
-           min(doc_id) OVER (PARTITION BY md5({norm})) AS keeper
-    FROM documents
-  ) WHERE doc_id = keeper
-)"""
-    pair_sql = sql_simhash_near_dup(
-        3, max_bucket=CORPUS_FILTER_MAX_BUCKET
-    ).replace(DOCS_WITH_NEAR_DUPS_CTE, survivors_cte)
-    stop_list = ", ".join(D.q(w) for w in STOPWORDS)
-    toks = "regexp_extract_all(lower(text), '[a-z]+')"
-    stop_ratio = (
-        f"CASE WHEN len({toks}) > 0 THEN "
-        f"len(list_filter({toks}, w -> w IN ({stop_list}))) * 1.0 / len({toks}) "
-        f"ELSE 0.0 END"
-    )
-    alpha = "length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 / length(text)"
-    punct = "length(regexp_replace(text, '[^.,;:!?]', '', 'g')) * 1.0 / length(text)"
-    quality = f"0.4 * ({alpha}) + 0.3 * ({stop_ratio}) + 0.3 * (1.0 - ({punct}))"
+    q = quality_sql("text", "toks")
     return f"""
-WITH pairs AS ({pair_sql}),
-shadowed AS (SELECT DISTINCT id_b AS doc_id FROM pairs),
-survivors AS (
-  SELECT doc_id, text FROM (
-    SELECT doc_id, text,
-           min(doc_id) OVER (PARTITION BY md5({norm})) AS keeper
-    FROM documents
-  ) WHERE doc_id = keeper
+WITH survivors AS (
+  SELECT doc_id, text FROM ({exact_dedup_sql('documents')})
+  WHERE doc_id = keeper
+),
+shadowed AS ({_shadowed_sql('survivors')}),
+scored AS (
+  SELECT doc_id, {q.score} AS quality, {q.stop} AS stop_ratio
+  FROM (SELECT doc_id, text, {D.lower_terms('text')} AS toks FROM survivors)
 )
-SELECT doc_id, round({quality}, 6) AS quality
-FROM survivors
-WHERE ({quality}) >= 0.5 AND ({stop_ratio}) >= 0.05
+SELECT doc_id, round(quality, 6) AS quality
+FROM scored
+WHERE quality >= 0.5 AND stop_ratio >= 0.05
   AND doc_id NOT IN (SELECT doc_id FROM shadowed)"""
 
 
@@ -549,17 +568,6 @@ WHERE ({quality}) >= 0.5 AND ({stop_ratio}) >= 0.05
 # a planted-positive test rather than by tuning the threshold into
 # unrealism (tests/test_driver_contract.py::test_corpus_filter_v2_rep_gate_bites).
 REP_BIGRAM_DEN = 5
-
-# The six structural Gopher gates. ok_stopwords is deliberately NOT in the
-# composed filter: the language/common-word signal already enters through
-# corpus_filter's stop_ratio >= 0.05, and a per-corpus deployment tunes the
-# stopword list to its vocabulary (the synthetic corpus contains none of
-# the eight Gopher English stopwords, so the untuned gate would zero the
-# output rather than filter it).
-GOPHER_STRUCTURAL_GATES = (
-    "ok_word_count", "ok_mean_word_len", "ok_symbol_ratio",
-    "ok_bullet", "ok_ellipsis", "ok_alpha",
-)
 
 
 def q_corpus_filter_v2(spark, sf_dir):
@@ -628,44 +636,13 @@ def q_corpus_filter_v3(spark, sf_dir):
     <= 5 scans (v2's composed form carries 12) — locked by
     test_corpus_filter_v3_plan_staged."""
     t = F.col("text")
-    # quality + language (identical expressions to corpus_filter)
-    alpha_ratio = C.n_alpha(t) / F.length(t)
-    punct_ratio = F.length(F.regexp_replace(t, r"[^.,;:!?]", "")) / F.length(t)
-    ltokens = F.regexp_extract_all(F.lower(t), F.lit(r"[a-z]+"), F.lit(0))
-    stop_hits = F.size(F.filter(ltokens, lambda w: w.isin(*STOPWORDS)))
-    stop_ratio = F.when(
-        F.size(ltokens) > 0, stop_hits / F.size(ltokens)
-    ).otherwise(0.0)
-    quality = 0.4 * alpha_ratio + 0.3 * stop_ratio + 0.3 * (1.0 - punct_ratio)
-
-    # structural Gopher gates (identical expressions to q_gopher_quality;
-    # ok_stopwords stays excluded — see GOPHER_STRUCTURAL_GATES note)
-    words = F.split(F.trim(t), r"\s+")
+    q = quality(t)
+    words = C.doc_words(t)
     wc = F.size(words)
-    sum_wl = F.aggregate(words, F.lit(0), lambda a, w: a + F.length(w))
-    mean_wl = sum_wl.cast("double") / wc
-    n_hash = F.length(t) - F.length(F.replace(t, F.lit("#"), F.lit("")))
-    n_ell = (F.length(t) - F.length(F.replace(t, F.lit("..."), F.lit("")))) / 3
-    lines = F.split(t, "\n")
-    nlines = F.size(lines)
-    gopher_ok = (
-        (wc >= 50) & (wc <= 100000)
-        & (mean_wl >= 3.0) & (mean_wl <= 10.0)
-        & (((n_hash + n_ell) / wc) < 0.1)
-        & ((F.size(F.filter(lines, lambda l: l.rlike(r"^\s*[-*]"))) / nlines)
-           < 0.9)
-        & ((F.size(F.filter(lines, lambda l: l.endswith(F.lit("..."))))
-            / nlines) < 0.3)
-        & ((F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]"))) / wc)
-           > 0.8)
-    )
+    gopher_ok = reduce(lambda a, b: a & b, gopher_gates(t, words).values())
 
     # per-row top-bigram count: sorted-run-length fold. Identical value to
     # q_rep_top_bigram's winner count, without the explode/agg/join branch.
-    bigrams = F.zip_with(
-        F.slice(words, 1, wc - 1), F.slice(words, 2, wc - 1),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
     acc0 = F.struct(
         F.lit(None).cast("string").alias("prev"),
         F.lit(0).alias("run"), F.lit(0).alias("best"),
@@ -678,7 +655,7 @@ def q_corpus_filter_v3(spark, sf_dir):
             F.greatest(acc["best"], new_run).alias("best"),
         )
 
-    top_cnt = F.aggregate(F.array_sort(bigrams), acc0, step,
+    top_cnt = F.aggregate(F.array_sort(bigrams(words)), acc0, step,
                           lambda acc: acc["best"])
     rep_ok = F.when(
         wc >= 2, top_cnt * REP_BIGRAM_DEN < wc - 1
@@ -686,20 +663,15 @@ def q_corpus_filter_v3(spark, sf_dir):
 
     gated = (
         par(read_documents(spark, sf_dir))
-        .filter((quality >= 0.5) & (stop_ratio >= 0.05) & gopher_ok & rep_ok)
+        .filter((q.score >= 0.5) & (q.stop >= 0.05) & gopher_ok & rep_ok)
         .select(
             "doc_id", "text",
-            F.round(quality, 6).alias("quality"),
+            F.round(q.score, 6).alias("quality"),
             wc.alias("word_count"),
             top_cnt.cast("long").alias("top_bigram_cnt"),
         )
     )
-    w = Window.partitionBy(F.md5(DD.normalize_text(F.col("text"))))
-    survivors = (
-        gated.withColumn("keeper", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") == F.col("keeper"))
-        .drop("keeper")
-    )
+    survivors = DD.exact_dedup(gated, "doc_id", "text", keep_rows=True)
     pairs = DD.simhash_pairs(
         survivors.select("doc_id", "text"), "doc_id", "text",
         max_hamming=3, max_bucket=CORPUS_FILTER_MAX_BUCKET,
@@ -711,86 +683,42 @@ def q_corpus_filter_v3(spark, sf_dir):
     )
 
 
-def _corpus_v3_survivor_ctes() -> str:
-    """The staged gate as a DuckDB CTE chain ending in ``docs`` — encodes
-    the v3 semantics (gate BEFORE dedup/shadowing) independently of the
-    Spark plan; spliced into the SimHash pair SQL in place of its docs
-    CTE, and reused for the output side."""
-    stop_list = ", ".join(D.q(wd) for wd in STOPWORDS)
-    toks = "regexp_extract_all(lower(text), '[a-z]+')"
-    stop_ratio = (
-        f"CASE WHEN len({toks}) > 0 THEN "
-        f"len(list_filter({toks}, w -> w IN ({stop_list}))) * 1.0 / len({toks}) "
-        f"ELSE 0.0 END"
+def sql_corpus_filter_v3():
+    """The staged gate as DuckDB CTEs — the v3 semantics (gate BEFORE
+    dedup and shadowing) encoded independently of the Spark plan."""
+    q = quality_sql("text", "toks")
+    gopher_ok = " AND ".join(
+        f"({g})" for g in gopher_gates_sql("text", "words", "lines").values()
     )
-    alpha = ("length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 "
-             "/ length(text)")
-    punct = ("length(regexp_replace(text, '[^.,;:!?]', '', 'g')) * 1.0 "
-             "/ length(text)")
-    quality = (f"0.4 * ({alpha}) + 0.3 * ({stop_ratio}) "
-               f"+ 0.3 * (1.0 - ({punct}))")
-    norm = D.collapse_ws("upper(text)")
     return f"""
-perrow AS (
-  SELECT doc_id, text, {quality} AS quality, {stop_ratio} AS stop_ratio,
-         regexp_split_to_array(trim(text), '[ \\t\\n\\x0b\\f\\r]+') AS words,
-         string_split(text, chr(10)) AS lines,
-         length(text) - length(replace(text, '#', '')) AS n_hash,
-         (length(text) - length(replace(text, '...', ''))) / 3 AS n_ell
-  FROM documents
-),
-perrow2 AS (
-  SELECT *, len(words) AS wc, len(lines) AS nlines,
-         CAST(list_sum(list_transform(words, w -> length(w))) AS DOUBLE)
-           / len(words) AS mean_wl
-  FROM perrow
+WITH perrow AS (
+  SELECT doc_id, text, words,
+         {q.score} AS quality, {q.stop} AS stop_ratio,
+         {gopher_ok} AS gopher_ok
+  FROM (SELECT doc_id, text, {D.lower_terms('text')} AS toks,
+               {GOPHER_COLS_SQL}
+        FROM documents)
 ),
 rep AS (
   SELECT doc_id, max(cnt) AS top_cnt FROM (
     SELECT doc_id, gram, count(*) AS cnt FROM (
-      SELECT doc_id,
-             unnest(list_transform(range(1, len(words)),
-                                   i -> words[i] || ' ' || words[i + 1]))
-               AS gram
-      FROM perrow
+      SELECT doc_id, unnest({bigrams_sql('words')}) AS gram FROM perrow
     ) GROUP BY doc_id, gram
   ) GROUP BY doc_id
 ),
 gated AS (
   SELECT p.doc_id, p.text, round(p.quality, 6) AS quality,
-         CAST(p.wc AS INT) AS word_count,
+         CAST(len(p.words) AS INT) AS word_count,
          CAST(coalesce(r.top_cnt, 0) AS BIGINT) AS top_bigram_cnt
-  FROM perrow2 p LEFT JOIN rep r USING (doc_id)
-  WHERE p.quality >= 0.5 AND p.stop_ratio >= 0.05
-    AND p.wc >= 50 AND p.wc <= 100000
-    AND p.mean_wl >= 3.0 AND p.mean_wl <= 10.0
-    AND CAST(p.n_hash + p.n_ell AS DOUBLE) / p.wc < 0.1
-    AND CAST(len(list_filter(p.lines,
-          l -> regexp_matches(l, '^[ \\t\\n\\x0b\\f\\r]*[-*]')))
-          AS DOUBLE) / p.nlines < 0.9
-    AND CAST(len(list_filter(p.lines, l -> ends_with(l, '...')))
-          AS DOUBLE) / p.nlines < 0.3
-    AND CAST(len(list_filter(p.words, w -> regexp_matches(w, '[A-Za-z]')))
-          AS DOUBLE) / p.wc > 0.8
-    AND coalesce(r.top_cnt * {REP_BIGRAM_DEN} < p.wc - 1, TRUE)
+  FROM perrow p LEFT JOIN rep r USING (doc_id)
+  WHERE p.quality >= 0.5 AND p.stop_ratio >= 0.05 AND p.gopher_ok
+    AND coalesce(r.top_cnt * {REP_BIGRAM_DEN} < len(p.words) - 1, TRUE)
 ),
 survivors AS (
-  SELECT doc_id, text, quality, word_count, top_bigram_cnt FROM (
-    SELECT *, min(doc_id) OVER (PARTITION BY md5({norm})) AS keeper
-    FROM gated
-  ) WHERE doc_id = keeper
+  SELECT doc_id, text, quality, word_count, top_bigram_cnt
+  FROM ({exact_dedup_sql('gated')}) WHERE doc_id = keeper
 ),
-docs AS (SELECT doc_id, text FROM survivors)"""
-
-
-def sql_corpus_filter_v3():
-    ctes = _corpus_v3_survivor_ctes()
-    pair_sql = sql_simhash_near_dup(
-        3, max_bucket=CORPUS_FILTER_MAX_BUCKET
-    ).replace("WITH " + DOCS_WITH_NEAR_DUPS_CTE, "WITH" + ctes)
-    return f"""
-WITH pairs AS ({pair_sql}),
-shadowed AS (SELECT DISTINCT id_b AS doc_id FROM pairs),{ctes}
+shadowed AS ({_shadowed_sql('survivors')})
 SELECT doc_id, quality, word_count, top_bigram_cnt
 FROM survivors
 WHERE doc_id NOT IN (SELECT doc_id FROM shadowed)"""

@@ -19,6 +19,7 @@ import time
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cheque_ocr_project_spark.functions import columns as C
 from cheque_ocr_project_spark.functions import ducksql as D
 from cheque_ocr_project_spark.operators.extract import par
 from cheque_ocr_project_spark.oracle import vocab
@@ -652,10 +653,7 @@ def turn_repetition_chunked(tr: DataFrame,
     equi-join is on (conv_id, chunk), the partitioning the intra
     window already established."""
     toks = F.array_distinct(
-        F.regexp_extract_all(
-            F.lower(F.coalesce(F.col("text"), F.lit(""))),
-            F.lit("[a-z]+"), F.lit(0),
-        )
+        C.lower_terms(F.coalesce(F.col("text"), F.lit("")))
     )
     t = tr.select("conv_id", "turn_idx", toks.alias("toks")).select(
         "conv_id", "turn_idx", "toks",
@@ -714,8 +712,7 @@ def q_turn_repetition(spark, sf_dir):
 SQL_TURN_REPETITION = f"""
 WITH tr AS (
   SELECT {TRANSCRIPT_KEYS_SQL},
-         list_distinct(regexp_extract_all(lower(coalesce(text, '')),
-                                          '[a-z]+')) AS toks
+         list_distinct({D.lower_terms("coalesce(text, '')")}) AS toks
   FROM documents
 ), l AS (
   SELECT conv_id, turn_idx, toks,

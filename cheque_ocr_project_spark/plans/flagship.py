@@ -38,7 +38,9 @@ from cheque_ocr_project_spark.oracle import vocab
 from cheque_ocr_project_spark.oracle.variants import EARLY_EXIT, VARIANT_NAMES
 from cheque_ocr_project_spark.plans import pipeline as P
 from cheque_ocr_project_spark.plans.near_dup import poly_sql
-from cheque_ocr_project_spark.plans.text_stats import STOPWORDS
+from cheque_ocr_project_spark.plans.text_stats import (
+    stop_ratio, stop_ratio_sql,
+)
 from cheque_ocr_project_spark.sources import scratch
 from cheque_ocr_project_spark.sources.io import (
     DOCUMENTS_AS_TRANSCRIPTS_SQL, TRANSCRIPT_KEYS_SQL,
@@ -665,10 +667,11 @@ def q_model_ensemble(spark, sf_dir):
         F.regexp_extract_all(u512, F.lit(CAP_SPAN_RX), F.lit(1))
     )
     ner = F.least(F.lit(1.0), caps / F.lit(10.0))
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"[a-z]+"), F.lit(0))
-    stop_hits = F.size(F.filter(toks, lambda w: w.isin(*STOPWORDS)))
-    context = F.when(F.size(toks) > 0, stop_hits / F.size(toks)).otherwise(0.0)
-    spelling = F.lit(1.0) - C.n_digit(F.col("text")) / F.length(F.col("text"))
+    context = stop_ratio(C.lower_terms(F.col("text")))
+    # NULL for an empty turn, like DuckDB's x / 0 (ANSI / raises)
+    spelling = F.lit(1.0) - F.try_divide(
+        C.n_digit(F.col("text")), F.length(F.col("text"))
+    )
     # r08: stage the four component signals once, then combine from
     # attribute refs — the inline form re-evaluated every heavy HOF
     # component a second time inside the ensemble expression (same
@@ -692,24 +695,18 @@ def sql_model_ensemble() -> str:
     """K3: 0.3*ocr + 0.4*ner + 0.2*context + 0.1*spelling, every component
     deterministic and recomputable."""
     caps = f"len(regexp_extract_all(upper(text[1:512]), {D.rx(CAP_SPAN_RX)}, 1))"
-    stop_list = ", ".join(D.q(w) for w in STOPWORDS)
-    toks = "regexp_extract_all(lower(text), '[a-z]+')"
-    context = (
-        f"CASE WHEN len({toks}) > 0 THEN "
-        f"len(list_filter({toks}, w -> w IN ({stop_list}))) * 1.0 / len({toks}) "
-        f"ELSE 0.0 END"
-    )
     spelling = f"1.0 - {D.n_digit('text')} / length(text)"
     return f"""
 WITH t AS (
-  SELECT {TRANSCRIPT_KEYS_SQL}, text, {D.nonblank_lines('text')} AS lines
+  SELECT {TRANSCRIPT_KEYS_SQL}, text, {D.nonblank_lines('text')} AS lines,
+         {D.lower_terms('text')} AS toks
   FROM documents
 ),
 parts AS (
   SELECT conv_id, turn_idx,
     {D.mean_line_conf('lines')} AS ocr_conf,
     least(1.0, {caps} / 10.0) AS ner_conf,
-    {context} AS context_conf,
+    {stop_ratio_sql('toks')} AS context_conf,
     {spelling} AS spelling_conf
   FROM t
 )

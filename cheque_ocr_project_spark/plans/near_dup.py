@@ -9,7 +9,10 @@ MinHash/SimHash pair sets bit-for-bit. Every arithmetic step is
 rendered from the same ``dedup.perm_constants`` arrays the Spark side
 broadcasts (single source of truth). Each parameter set a Spark query and
 its twin share is one module constant (``MINHASH``, ``MAX_HAMMING``,
-``WINNOW``, ...), read by the query and by its registry row.
+``WINNOW``, ...), read by the query and by its registry row. The
+exact-dedup keeper (min doc_id per md5 of the normalised text) is
+``dedup.exact_dedup`` in Spark and ``exact_dedup_sql`` in DuckDB, for
+dedup_exact and the corpus filters alike.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from functools import partial, reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cheque_ocr_project_spark.functions import columns as C
 from cheque_ocr_project_spark.functions import ducksql as D
 from cheque_ocr_project_spark.operators import dedup as DD
 from cheque_ocr_project_spark.operators.extract import par
@@ -365,20 +369,26 @@ cand AS (
 # ---------------------------------------------------------------------------
 
 def q_dedup_exact(spark, sf_dir):
-    norm = DD.normalize_text(F.col("text"))
-    df = read_documents(spark, sf_dir).withColumn("fingerprint", F.md5(norm))
-    return df.groupBy("fingerprint").agg(
-        F.min("doc_id").alias("keeper_doc_id"),
-        F.count(F.lit(1)).alias("n_dups"),
+    return DD.exact_dedup(
+        read_documents(spark, sf_dir), "doc_id", "text"
+    ).withColumnRenamed("keeper_id", "keeper_doc_id")
+
+
+def exact_dedup_sql(rel: str) -> str:
+    """``rel``'s rows (doc_id, text, ...) with the md5 ``fingerprint`` of
+    their normalised text and its ``keeper``, the min doc_id
+    (= dedup.exact_dedup)."""
+    fp = f"md5({D.collapse_ws('upper(text)')})"
+    return (
+        "SELECT *, min(doc_id) OVER (PARTITION BY fingerprint) AS keeper "
+        f"FROM (SELECT *, {fp} AS fingerprint FROM {rel})"
     )
 
 
 def sql_dedup_exact():
-    norm = D.collapse_ws("upper(text)")
     return f"""
-SELECT md5({norm}) AS fingerprint, min(doc_id) AS keeper_doc_id,
-       count(*) AS n_dups
-FROM documents GROUP BY 1"""
+SELECT fingerprint, keeper AS keeper_doc_id, count(*) AS n_dups
+FROM ({exact_dedup_sql('documents')}) GROUP BY fingerprint, keeper"""
 
 
 # ---------------------------------------------------------------------------
@@ -802,10 +812,7 @@ def q_containment_pairs(spark, sf_dir):
     more documents than that carries no containment signal but
     quadratic join cost (max MAXDF^2 pairs per shingle)."""
     toks = par(_docs_with_near_dups(spark, sf_dir)).select(
-        "doc_id",
-        F.regexp_extract_all(
-            F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
-        ).alias("t"),
+        "doc_id", C.lower_terms(F.col("text")).alias("t")
     )
     w = CONT_GRAM_W
     sh = (
@@ -832,7 +839,7 @@ def sql_containment_pairs():
     return f"""
 WITH {DOCS_WITH_NEAR_DUPS_CTE},
 toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS t FROM docs
+  SELECT doc_id, {D.lower_terms('text')} AS t FROM docs
 ), sh AS (
   SELECT DISTINCT doc_id AS id, gram FROM (
     SELECT doc_id,

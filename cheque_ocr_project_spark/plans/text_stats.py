@@ -6,11 +6,19 @@ frequency buckets, source token budgets, tf-idf, boilerplate detection and
 removal, collocations and fingerprints — each a Spark query beside its
 DuckDB twin, with identical output aliases and exact integer arithmetic
 wherever a float would risk a cross-engine rounding difference.
+
+The stop-word ratio and the quality score, which the corpus filters and
+model_ensemble read too, have one builder per engine here
+(``stop_ratio`` / ``stop_ratio_sql``, ``quality`` / ``quality_sql``); word
+terms come from ``lower_terms`` in functions/columns.py and
+functions/ducksql.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from cheque_ocr_project_spark.functions import columns as C
@@ -20,6 +28,57 @@ from cheque_ocr_project_spark.sources.io import read_documents
 
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "on",
              "for", "with", "at", "by", "from", "as", "that", "this")
+
+
+def stop_ratio(terms: Column) -> Column:
+    """Share of ``terms`` (a columns.lower_terms array) that are STOPWORDS,
+    0.0 for no terms: the language signal of lang_id, the corpus filters
+    and model_ensemble's context confidence."""
+    hits = F.size(F.filter(terms, lambda w: w.isin(*STOPWORDS)))
+    return F.when(F.size(terms) > 0, hits / F.size(terms)).otherwise(0.0)
+
+
+def stop_ratio_sql(terms: str) -> str:
+    """= stop_ratio over ``terms``, a column holding ducksql.lower_terms."""
+    stops = ", ".join(D.q(w) for w in STOPWORDS)
+    return (
+        f"CASE WHEN len({terms}) > 0 THEN len(list_filter({terms}, "
+        f"w -> w IN ({stops}))) * 1.0 / len({terms}) ELSE 0.0 END"
+    )
+
+
+class Quality(NamedTuple):
+    """The document quality score and its three parts."""
+    alpha: Column | str
+    punct: Column | str
+    stop: Column | str
+    score: Column | str
+
+
+def quality(text: Column) -> Quality:
+    """Heuristic document quality: 0.4 * letter ratio + 0.3 * stop-word
+    ratio + 0.3 * (1 - punctuation ratio). The two ratios over the text
+    length are NULL for an empty text (try_divide, like DuckDB's x / 0),
+    so an empty document scores NULL and passes no quality gate."""
+    alpha = F.try_divide(C.n_alpha(text), F.length(text))
+    punct = F.try_divide(
+        F.length(F.regexp_replace(text, r"[^.,;:!?]", "")), F.length(text)
+    )
+    stop = stop_ratio(C.lower_terms(text))
+    return Quality(alpha, punct, stop,
+                   0.4 * alpha + 0.3 * stop + 0.3 * (1.0 - punct))
+
+
+def quality_sql(text: str, terms: str) -> Quality:
+    """= quality over a text column and ``terms``, a column holding
+    ducksql.lower_terms(text)."""
+    alpha = f"{D.n_alpha(text)} * 1.0 / length({text})"
+    punct = (f"length(regexp_replace({text}, '[^.,;:!?]', '', 'g')) * 1.0 "
+             f"/ length({text})")
+    stop = stop_ratio_sql(terms)
+    return Quality(alpha, punct, stop,
+                   f"0.4 * ({alpha}) + 0.3 * ({stop}) + 0.3 * (1.0 - ({punct}))")
+
 
 # explicit ASCII whitespace (== Java \s) so the RE2 oracle tokenizes
 # identically — RE2 \s lacks \x0b
@@ -50,46 +109,26 @@ FROM documents"""
 
 
 def q_quality_score(spark, sf_dir):
-    t = F.col("text")
-    length = F.length(t)
-    alpha_ratio = C.n_alpha(t) / length
-    punct_ratio = (
-        F.length(F.regexp_replace(t, r"[^.,;:!?]", "")) / length
-    )
-    tokens = F.regexp_extract_all(F.lower(t), F.lit(r"[a-z]+"), F.lit(0))
-    stop_hits = F.size(F.filter(tokens, lambda w: w.isin(*STOPWORDS)))
-    stop_ratio = F.when(F.size(tokens) > 0, stop_hits / F.size(tokens)).otherwise(0.0)
-    quality = F.round(
-        0.4 * alpha_ratio + 0.3 * stop_ratio + 0.3 * (1.0 - punct_ratio), 6
-    )
+    q = quality(F.col("text"))
     return par(read_documents(spark, sf_dir)).select(
         "doc_id",
-        F.round(alpha_ratio, 6).alias("alpha_ratio"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stop_ratio, 6).alias("stop_ratio"),
-        quality.alias("quality"),
+        F.round(q.alpha, 6).alias("alpha_ratio"),
+        F.round(q.punct, 6).alias("punct_ratio"),
+        F.round(q.stop, 6).alias("stop_ratio"),
+        F.round(q.score, 6).alias("quality"),
     )
 
 
 def sql_quality_score():
-    stop_list = ", ".join(D.q(w) for w in STOPWORDS)
+    q = quality_sql("text", "toks")
     return f"""
+WITH t AS (SELECT doc_id, text, {D.lower_terms('text')} AS toks FROM documents)
 SELECT doc_id,
-  round(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 / length(text), 6) AS alpha_ratio,
-  round(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) * 1.0 / length(text), 6) AS punct_ratio,
-  round(CASE WHEN len(regexp_extract_all(lower(text), '[a-z]+')) > 0
-        THEN len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                              w -> w IN ({stop_list}))) * 1.0
-             / len(regexp_extract_all(lower(text), '[a-z]+'))
-        ELSE 0.0 END, 6) AS stop_ratio,
-  round(0.4 * (length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 / length(text))
-      + 0.3 * (CASE WHEN len(regexp_extract_all(lower(text), '[a-z]+')) > 0
-               THEN len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                                     w -> w IN ({stop_list}))) * 1.0
-                    / len(regexp_extract_all(lower(text), '[a-z]+'))
-               ELSE 0.0 END)
-      + 0.3 * (1.0 - length(regexp_replace(text, '[^.,;:!?]', '', 'g')) * 1.0 / length(text)), 6) AS quality
-FROM documents"""
+  round({q.alpha}, 6) AS alpha_ratio,
+  round({q.punct}, 6) AS punct_ratio,
+  round({q.stop}, 6) AS stop_ratio,
+  round({q.score}, 6) AS quality
+FROM t"""
 
 
 # PII redaction (training-data hygiene pass): structural patterns only —
@@ -328,9 +367,7 @@ def q_vocab_topk(spark, sf_dir):
     corpus never funnels through one sort task. Tie-break (count desc,
     term asc) matches the oracle exactly."""
     d = par(read_documents(spark, sf_dir)).select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0))
-        ).alias("term")
+        F.explode(C.lower_terms(F.col("text"))).alias("term")
     )
     return (
         d.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
@@ -343,7 +380,7 @@ def sql_vocab_topk():
     return f"""
 SELECT term, CAST(count(*) AS BIGINT) AS n
 FROM (
-  SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
+  SELECT unnest({D.lower_terms('text')}) AS term
   FROM documents
 )
 GROUP BY term ORDER BY n DESC, term ASC LIMIT {VOCAB_TOPK}"""
@@ -365,11 +402,7 @@ def q_oov_rate(spark, sf_dir):
     ~9.2e12 tokens per document."""
     toks = par(read_documents(spark, sf_dir)).select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
-            )
-        ).alias("term"),
+        F.explode(C.lower_terms(F.col("text"))).alias("term"),
     )
     vocab = (
         toks.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
@@ -397,7 +430,7 @@ def q_oov_rate(spark, sf_dir):
 def sql_oov_rate():
     return f"""
 WITH toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
+  SELECT doc_id, unnest({D.lower_terms('text')}) AS term
   FROM documents
 ), vocab AS (
   SELECT term FROM (
@@ -450,11 +483,7 @@ def q_token_freq_buckets(spark, sf_dir):
     docs = par(read_documents(spark, sf_dir))
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
-            )
-        ).alias("term"),
+        F.explode(C.lower_terms(F.col("text"))).alias("term"),
     )
     uni = toks.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
     total = uni.agg(F.sum("cnt").cast("long").alias("total"))
@@ -488,7 +517,7 @@ def q_token_freq_buckets(spark, sf_dir):
 def sql_token_freq_buckets():
     return f"""
 WITH toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
+  SELECT doc_id, unnest({D.lower_terms('text')}) AS term
   FROM documents
 ), uni AS (
   SELECT term, count(*) AS cnt FROM toks GROUP BY term
@@ -601,9 +630,7 @@ def q_tfidf_topk(spark, sf_dir):
     (__spark_entry__._pin_session_confs) and in tests/conftest.py, not assumed."""
     d = par(read_documents(spark, sf_dir)).select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0))
-        ).alias("term"),
+        F.explode(C.lower_terms(F.col("text"))).alias("term"),
     )
     tf = d.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -624,7 +651,7 @@ def q_tfidf_topk(spark, sf_dir):
 def sql_tfidf_topk():
     return f"""
 WITH t AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
+  SELECT doc_id, unnest({D.lower_terms('text')}) AS term
   FROM documents
 ),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM t GROUP BY doc_id, term),
@@ -675,10 +702,7 @@ def q_boilerplate_ngrams(spark, sf_dir):
     toks = (
         par(read_documents(spark, sf_dir))
         .select(
-            "doc_id",
-            F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
-            ).alias("toks"),
+            "doc_id", C.lower_terms(F.col("text")).alias("toks")
         )
         .filter(F.size("toks") >= BOILER_N)
     )
@@ -720,7 +744,7 @@ def sql_boilerplate_ngrams():
     # sequence(1, size-(N-1)) x slice(toks, i, N) gram set
     return f"""
 WITH toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS t
+  SELECT doc_id, {D.lower_terms('text')} AS t
   FROM documents
 ), eligible AS (
   SELECT doc_id, t FROM toks WHERE len(t) >= {BOILER_N}
@@ -771,10 +795,7 @@ def q_remove_boilerplate(spark, sf_dir):
     doc length). Final left joins restore zero-token docs with
     n_spans=0 and empty text_clean."""
     toks = par(read_documents(spark, sf_dir)).select(
-        "doc_id",
-        F.regexp_extract_all(
-            F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
-        ).alias("t"),
+        "doc_id", C.lower_terms(F.col("text")).alias("t")
     )
     # sequence(1, 0) would generate a DESCENDING [1, 0] — guard size >= 1
     spans = toks.filter(F.size("t") >= 1).select(
@@ -827,7 +848,7 @@ def sql_remove_boilerplate():
     w = SPAN_W
     return f"""
 WITH t AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS t
+  SELECT doc_id, {D.lower_terms('text')} AS t
   FROM documents
 ), sp AS (
   SELECT doc_id,
@@ -885,9 +906,7 @@ def q_collocations_topk(spark, sf_dir):
     the non-portable part, not arithmetic), unbounded in range, and
     collisions just become deterministic bigram-ordered ties."""
     toks = par(read_documents(spark, sf_dir)).select(
-        F.regexp_extract_all(
-            F.lower(F.col("text")), F.lit("[a-z]+"), F.lit(0)
-        ).alias("t")
+        C.lower_terms(F.col("text")).alias("t")
     )
     # element_at is 1-based on both engines (Spark t[i] would be 0-based)
     pairs = toks.filter(F.size("t") >= 2).select(
@@ -933,7 +952,7 @@ def q_collocations_topk(spark, sf_dir):
 def sql_collocations_topk():
     return f"""
 WITH t AS (
-  SELECT regexp_extract_all(lower(text), '[a-z]+') AS t FROM documents
+  SELECT {D.lower_terms('text')} AS t FROM documents
 ), pr AS (
   SELECT unnest(list_transform(range(1, len(t)), i -> t[i])) AS w1,
          unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS w2
@@ -959,24 +978,18 @@ ORDER BY lift_ppm DESC, bigram ASC LIMIT {COLLOC_K}"""
 
 
 def q_lang_id(spark, sf_dir):
-    tokens = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"[a-z]+"), F.lit(0))
-    stop_hits = F.size(F.filter(tokens, lambda w: w.isin(*STOPWORDS)))
-    n = F.size(tokens)
-    ratio = F.when(n > 0, stop_hits / n).otherwise(0.0)
+    ratio = stop_ratio(C.lower_terms(F.col("text")))
     lang = F.when(ratio >= 0.05, "en").otherwise("unk")
     return par(read_documents(spark, sf_dir)).select("doc_id", lang.alias("lang_pred"))
 
 
 def sql_lang_id():
-    stop_list = ", ".join(D.q(w) for w in STOPWORDS)
-    ratio = f"""CASE WHEN len(regexp_extract_all(lower(text), '[a-z]+')) > 0
-      THEN len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                            w -> w IN ({stop_list}))) * 1.0
-           / len(regexp_extract_all(lower(text), '[a-z]+'))
-      ELSE 0.0 END"""
     return f"""
-SELECT doc_id, CASE WHEN {ratio} >= 0.05 THEN 'en' ELSE 'unk' END AS lang_pred
-FROM documents"""
+WITH t AS (SELECT doc_id, {D.lower_terms('text')} AS toks FROM documents)
+SELECT doc_id,
+       CASE WHEN {stop_ratio_sql('toks')} >= 0.05 THEN 'en' ELSE 'unk' END
+         AS lang_pred
+FROM t"""
 
 
 def q_fingerprint(spark, sf_dir):

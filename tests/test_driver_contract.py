@@ -208,3 +208,50 @@ def test_oracle_sql_independent_of_hash_seed():
     differ = sorted(k for k in texts[0].keys() | texts[1].keys()
                     if texts[0].get(k) != texts[1].get(k))
     assert not differ, differ
+
+
+# the rows whose quality or spelling ratio divides by the text length
+EMPTY_TEXT_ROWS = ("quality_score", "corpus_filter", "corpus_filter_v2",
+                   "corpus_filter_v3", "model_ensemble")
+
+
+def test_empty_documents_match_duckdb(spark, tmp_path):
+    """An empty and a whitespace-only document: every row that divides by
+    the text length collects (ANSI mode raises DIVIDE_BY_ZERO on a plain
+    /) and equals its DuckDB twin, where x / 0 is NULL; the staged
+    corpus_job completes on the same input."""
+    import shutil
+    from pathlib import Path
+
+    from cheque_ocr_project_spark import corpus_job
+
+    src = Path(entrymod.SF0001)
+    sf = tmp_path / "sf_empty"
+    sf.mkdir()
+    for p in src.glob("*.parquet"):
+        if p.name != "documents.parquet":
+            shutil.copy(p, sf / p.name)
+    docs = pd.read_parquet(src / "documents.parquet")
+    extra = docs.tail(2).copy()
+    extra["doc_id"] = docs["doc_id"].max() + pd.array([1, 2], dtype="int64")
+    extra["text"] = ["", " \t\n "]
+    extra["n_chars"] = extra["text"].str.len()
+    pd.concat([docs, extra]).astype(docs.dtypes).to_parquet(
+        sf / "documents.parquet", index=False)
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
+    for name in EMPTY_TEXT_ROWS:
+        a = _canon(entrymod.queries()[name](spark, str(sf)).toPandas())
+        b = _canon(con.execute(entrymod.oracle_sql()[name]).df())
+        assert len(a) == len(b), f"{name}: rows {len(a)} vs {len(b)}"
+        for col in a.columns:
+            bad = [
+                (x, y) for x, y in zip(a[col], b[col])
+                if not ((pd.isna(x) and pd.isna(y)) or x == y
+                        or (isinstance(x, float) and isinstance(y, float)
+                            and math.isclose(x, y, rel_tol=0, abs_tol=2e-6)))
+            ]
+            assert not bad, f"{name}.{col}: {len(bad)} mismatches, e.g. {bad[0]}"
+    counts = corpus_job.run(spark, str(sf), str(tmp_path / "job"))
+    assert counts["survivors"] > 0, counts

@@ -51,7 +51,11 @@ def _gen_strings(n: int, seed: int) -> list:
     return out
 
 
-CASES = _gen_strings(400, seed=20260816)
+# an [OIZ]{5,} run after a newline: the oracle's re.match('.*[OIZ]{5,}.*')
+# does not reach it; before one, it does
+CASES = _gen_strings(400, seed=20260816) + [
+    "ABCDEFGH\nOIOIO", "KUMAR TRADERS\nZOIZO", "ZOIZO\nKUMAR",
+]
 
 
 @pytest.fixture(scope="module")

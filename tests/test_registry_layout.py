@@ -6,6 +6,7 @@ renderer once per read."""
 
 import ast
 import inspect
+import re
 from functools import partial
 from pathlib import Path
 
@@ -154,3 +155,43 @@ def test_oracle_grammar_spelled_once():
         if len(holders) > 1 and seq not in GRAMMAR_COPY_ALLOWLIST:
             copies[seq] = holders
     assert not copies, "\n".join(f"{k!r}: {v}" for k, v in copies.items())
+
+
+def _spelled_in(path: Path, pattern: str) -> list:
+    """``module:function`` of every source line of ``path`` matching the
+    regex ``pattern``, named by its enclosing top-level function."""
+    src = path.read_text()
+    spans = [(n.lineno, n.end_lineno, n.name) for n in ast.parse(src).body
+             if isinstance(n, ast.FunctionDef)]
+    mod = str(path.relative_to(PKG))
+    out = []
+    for i, line in enumerate(src.splitlines(), 1):
+        if re.search(pattern, line):
+            fn = next((n for a, b, n in spans if a <= i <= b), "<module>")
+            out.append(f"{mod}:{fn}")
+    return out
+
+
+def test_corpus_signals_spelled_once():
+    """Each corpus text signal has one Catalyst builder and one DuckDB
+    renderer: the term pattern and the punctuation class are each spelled
+    on one line of each, and each Gopher bound once per engine in
+    plans/corpus.py, so a rule fix lands once per engine."""
+    signals = {
+        re.escape("[a-z]+"): ["functions/columns.py:lower_terms",
+                              "functions/ducksql.py:lower_terms"],
+        re.escape("[^.,;:!?]"): ["plans/text_stats.py:quality",
+                                 "plans/text_stats.py:quality_sql"],
+    }
+    copies = {}
+    for pattern, want in signals.items():
+        got = sorted(h for p in sorted(PKG.rglob("*.py"))
+                     for h in _spelled_in(p, pattern))
+        if got != want:
+            copies[pattern] = got
+    gates = ["plans/corpus.py:gopher_gates", "plans/corpus.py:gopher_gates_sql"]
+    for bound in (r">= 50\b", r"<= 100000\b", r">= 3\.0\b", r"<= 10\.0\b"):
+        got = _spelled_in(PKG / "plans" / "corpus.py", bound)
+        if got != gates:
+            copies[bound] = got
+    assert not copies, "\n".join(f"{k}: {v}" for k, v in copies.items())

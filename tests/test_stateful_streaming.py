@@ -1,5 +1,7 @@
 """applyInPandasWithState: per-conversation running state across batches."""
 
+import time
+
 from pyspark.sql import functions as F
 
 from cheque_ocr_project_spark.streaming import stateful as SS
@@ -28,7 +30,22 @@ def test_conversation_progress_accumulates(spark, fixture_data, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # availableNow does not end while applyInPandasWithState timers are
+    # pending, so poll the sink until every conversation has its
+    # idle-timeout "closed" row, then stop the query
+    try:
+        deadline = time.time() + 240
+        while time.time() < deadline:
+            closed = spark.sql(
+                "SELECT count(DISTINCT conv_id) FROM conv_progress_t "
+                "WHERE closed"
+            ).collect()[0][0]
+            if closed >= len(convs):
+                break
+            time.sleep(1)
+    finally:
+        q.stop()
+        q.awaitTermination(60)
 
     rows = spark.sql("SELECT * FROM conv_progress_t").collect()
     # update mode: memory sink keeps every emission; the last row per conv is
@@ -36,6 +53,7 @@ def test_conversation_progress_accumulates(spark, fixture_data, tmp_path):
     latest = {}
     for r in rows:
         latest[r.conv_id] = r
+    assert {c for c, r in latest.items() if r.closed} == set(convs)
 
     expected = subset.groupby("conv_id").agg(
         turns=("turn_idx", "size"), max_idx=("turn_idx", "max")
