@@ -99,6 +99,12 @@ def collapse_ws(col: Column) -> Column:
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
+def text_fingerprint(col: Column) -> Column:
+    """md5 of the whitespace-collapsed, upper-cased text: the exact-dedup
+    fingerprint."""
+    return F.md5(collapse_ws(F.upper(col)))
+
+
 def lower_terms(col: Column) -> Column:
     """The lowercase letter runs of col: the word terms of the corpus
     queries (token counts, stop-word ratios, n-grams)."""

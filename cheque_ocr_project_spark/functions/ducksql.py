@@ -117,6 +117,12 @@ def collapse_ws(expr: str) -> str:
     return f"trim({inner})"
 
 
+def text_fingerprint(expr: str) -> str:
+    """md5 of the whitespace-collapsed, upper-cased text
+    (= columns.text_fingerprint)."""
+    return f"md5({collapse_ws(f'upper({expr})')})"
+
+
 def lower_terms(expr: str) -> str:
     """The lowercase letter runs of expr (= columns.lower_terms)."""
     return f"regexp_extract_all(lower({expr}), '[a-z]+')"

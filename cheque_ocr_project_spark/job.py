@@ -32,9 +32,10 @@ def build_args(argv=None):
                     help="checkpoint/salt buckets (resume granularity)")
     ap.add_argument("--wave-size", type=int, default=16,
                     help="buckets committed per manifest wave (crash loses "
-                         "at most one in-flight wave; each wave adds a fixed "
-                         "~0.45 s on 4 local cores, so fewer, larger waves "
-                         "are cheaper)")
+                         "at most one in-flight wave; each wave appends one "
+                         "flat file per write task and adds a fixed ~0.4 s "
+                         "on 4 local cores, so fewer, larger waves are "
+                         "cheaper)")
     ap.add_argument("--stage-input", action="store_true",
                     help="write the bucketed input once (partitioned by "
                          "bucket) so waves read with partition pruning "
@@ -70,9 +71,9 @@ def main(argv=None) -> None:
 
     # ALL resume state goes together: the manifest, the staged-input copy +
     # its commit marker (else a fresh --stage-input run silently reuses
-    # STALE staged data even when --input changed), and the data dir (else
-    # buckets the new input leaves empty survive dynamic partition
-    # overwrite from the prior run).
+    # STALE staged data even when --input changed), and the data dir (a
+    # data file is live only while a manifest entry lists it, so a run
+    # without the manifest deletes every file in it before its first wave).
     out = Path(args.output)
     claim_run_state(args.output, [out / "_manifest", out / "_staged",
                                   out / "_staged.committed", out / "data"],

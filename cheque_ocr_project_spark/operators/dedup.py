@@ -165,18 +165,13 @@ def _batch_shingle_hashes(texts: list[str], k: int
     return np.concatenate(pieces), out_lens
 
 
-def normalize_text(col: Column) -> Column:
-    """Shared normalization for dedup fingerprints: upper + ws collapse."""
-    return C.collapse_ws(F.upper(col))
-
-
 def exact_dedup(df: DataFrame, id_col: str, text_col: str,
                 keep_rows: bool = False) -> DataFrame:
     """Exact dedup: the keeper of each md5 fingerprint of the normalised
     text is its min id. Returns (fingerprint, keeper_id, n_dups) per
     fingerprint; with ``keep_rows``, the rows of df that are their text's
     keeper instead (a min-id window, no aggregate to join back)."""
-    fp = F.md5(normalize_text(F.col(text_col)))
+    fp = C.text_fingerprint(F.col(text_col))
     keeper = F.min(id_col)
     if keep_rows:
         return (

@@ -32,14 +32,17 @@ def build_drawer_dict(raw_names: Iterable[str]) -> list[str]:
 
 
 # Per-dictionary length index for the match_name_v1 fast path, keyed by
-# id(list) (one dictionary per job; the entry pins the list so the id
-# cannot be recycled). The fast path is EXACTLY get_close_matches(n=1):
+# id(list); each entry pins its list so the id cannot be recycled. Rows
+# matched against different dictionaries in one worker (V1 and V3 rows
+# alternating) keep one index each, up to _LEN_INDEX_MAX, the oldest
+# dropped first. The fast path is EXACTLY get_close_matches(n=1):
 # difflib's first gate is real_quick_ratio = 2*min(la,lb)/(la+lb) >=
 # cutoff, which depends only on lengths — pre-sorting the dictionary by
 # length turns that gate into a contiguous slice, and because the n=1
 # result is max((ratio, name)) over the survivors (heapq.nlargest on the
 # score/name tuples), iteration order cannot change the answer.
 _LEN_INDEX: dict[int, tuple] = {}
+_LEN_INDEX_MAX = 4
 
 
 def _length_index(drawer_dict: list[str]) -> tuple:
@@ -52,7 +55,9 @@ def _length_index(drawer_dict: list[str]) -> tuple:
     by_len = sorted(drawer_dict, key=len)
     lens = [len(x) for x in by_len]
     entry = (drawer_dict, by_len, lens, bisect)
-    _LEN_INDEX.clear()          # one live dictionary per job
+    _LEN_INDEX.pop(key, None)
+    while len(_LEN_INDEX) >= _LEN_INDEX_MAX:
+        del _LEN_INDEX[next(iter(_LEN_INDEX))]
     _LEN_INDEX[key] = entry
     return entry
 

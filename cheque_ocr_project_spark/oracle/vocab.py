@@ -70,16 +70,28 @@ GARBAGE_PATTERNS = (
 )
 # issuer_processor_v.py:116-139: the OIZ-run rule, searched before the list
 GARBAGE_OIZ_RUN = r"O{4,}|I{4,}|Z{4,}"
+
+
+def _garbage_search_form(p: str) -> str:
+    r"""``p`` under re.match, as a pattern Java and RE2 search with the same
+    result: every listed pattern is ^-anchored but '.*X.*', which re.match
+    reads as X after a run of non-newline characters, ^[^\n]*X (spelled as
+    a class: Java's '.' also stops at \r, \x85, \u2028 and \u2029,
+    Python's and RE2's at \n only); and Python's '$' also matches before a
+    final \n, RE2's only at the end and Java's before any final line
+    terminator, so '$' is spelled \n?\z, which Java and RE2 read as Python
+    reads '$'."""
+    if not p.startswith("^"):
+        p = r"^[^\n]*" + p.removeprefix(".*").removesuffix(".*")
+    if p.endswith("$"):
+        p = p.removesuffix("$") + r"\n?\z"
+    return p
+
+
 # the run rule plus GARBAGE_PATTERNS in search form, for the engine twins
-# (their regex predicates search, re.match anchors): every listed pattern
-# is ^-anchored but '.*X.*', which re.match reads as X after a run of
-# non-newline characters, ^[^\n]*X (spelled as a class: Java's '.' also
-# stops at \r, \x85, \u2028 and \u2029, Python's and RE2's at \n only)
+# (their regex predicates search, re.match anchors)
 GARBAGE_SEARCH_PATTERNS = (GARBAGE_OIZ_RUN,) + tuple(
-    p if p.startswith("^")
-    else r"^[^\n]*" + p.removeprefix(".*").removesuffix(".*")
-    for p in GARBAGE_PATTERNS
-)
+    map(_garbage_search_form, GARBAGE_PATTERNS))
 
 # --- issuer_processor_v.py:261-264 ------------------------------------------
 LOCATION_KEYWORDS = (

@@ -32,7 +32,9 @@ from cheque_ocr_project_spark.plans.near_dup import (
     DOCS_WITH_NEAR_DUPS_CTE, exact_dedup_sql, sql_simhash_near_dup,
     sql_winnow_fingerprint,
 )
-from cheque_ocr_project_spark.plans.text_stats import quality, quality_sql
+from cheque_ocr_project_spark.plans.text_stats import (
+    MIN_QUALITY, MIN_STOP_RATIO, quality, quality_sql,
+)
 from cheque_ocr_project_spark.sources import scratch
 from cheque_ocr_project_spark.sources.io import read_documents
 
@@ -245,8 +247,8 @@ GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 # The six structural Gopher gates, in gopher_gates order. ok_stopwords is
 # deliberately NOT among them: the composed corpus filters take the
-# language/common-word signal from text_stats.stop_ratio >= 0.05, and a
-# per-corpus deployment tunes the stopword list to its vocabulary (the
+# language/common-word signal from text_stats.stop_ratio >= MIN_STOP_RATIO,
+# and a per-corpus deployment tunes the stopword list to its vocabulary (the
 # synthetic corpus contains none of the eight Gopher English stopwords, so
 # the untuned gate would zero the output rather than filter it).
 GOPHER_STRUCTURAL_GATES = (
@@ -515,9 +517,10 @@ def _shadowed_sql(rel: str) -> str:
 
 def q_corpus_filter(spark, sf_dir):
     """Composed pre-training corpus filter: exact-dedup pre-pass (keep the
-    min-id copy of each identical text), then quality >= 0.5 AND lang = 'en'
-    AND not a shadowed near-duplicate (anti-join against the SimHash pair
-    set, computed over the exact-dedup survivors with a bucket-size cap).
+    min-id copy of each identical text), then quality >= MIN_QUALITY AND
+    lang = 'en' AND not a shadowed near-duplicate (anti-join against the
+    SimHash pair set, computed over the exact-dedup survivors with a
+    bucket-size cap).
 
     Scale shape: the exact pre-pass is the standard defense against LSH
     hot buckets — thousands of identical boilerplate docs collapse to one
@@ -535,7 +538,8 @@ def q_corpus_filter(spark, sf_dir):
                              max_bucket=CORPUS_FILTER_MAX_BUCKET)
     shadowed = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     kept = (
-        survivors.filter((q.score >= 0.5) & (q.stop >= 0.05))
+        survivors
+        .filter((q.score >= MIN_QUALITY) & (q.stop >= MIN_STOP_RATIO))
         .join(shadowed, "doc_id", "left_anti")
     )
     return kept.select("doc_id", F.round(q.score, 6).alias("quality"))
@@ -555,7 +559,7 @@ scored AS (
 )
 SELECT doc_id, round(quality, 6) AS quality
 FROM scored
-WHERE quality >= 0.5 AND stop_ratio >= 0.05
+WHERE quality >= {MIN_QUALITY} AND stop_ratio >= {MIN_STOP_RATIO}
   AND doc_id NOT IN (SELECT doc_id FROM shadowed)"""
 
 
@@ -663,7 +667,8 @@ def q_corpus_filter_v3(spark, sf_dir):
 
     gated = (
         par(read_documents(spark, sf_dir))
-        .filter((q.score >= 0.5) & (q.stop >= 0.05) & gopher_ok & rep_ok)
+        .filter((q.score >= MIN_QUALITY) & (q.stop >= MIN_STOP_RATIO)
+                & gopher_ok & rep_ok)
         .select(
             "doc_id", "text",
             F.round(q.score, 6).alias("quality"),
@@ -711,7 +716,7 @@ gated AS (
          CAST(len(p.words) AS INT) AS word_count,
          CAST(coalesce(r.top_cnt, 0) AS BIGINT) AS top_bigram_cnt
   FROM perrow p LEFT JOIN rep r USING (doc_id)
-  WHERE p.quality >= 0.5 AND p.stop_ratio >= 0.05 AND p.gopher_ok
+  WHERE p.quality >= {MIN_QUALITY} AND p.stop_ratio >= {MIN_STOP_RATIO} AND p.gopher_ok
     AND coalesce(r.top_cnt * {REP_BIGRAM_DEN} < len(p.words) - 1, TRUE)
 ),
 survivors AS (

@@ -378,7 +378,7 @@ def exact_dedup_sql(rel: str) -> str:
     """``rel``'s rows (doc_id, text, ...) with the md5 ``fingerprint`` of
     their normalised text and its ``keeper``, the min doc_id
     (= dedup.exact_dedup)."""
-    fp = f"md5({D.collapse_ws('upper(text)')})"
+    fp = D.text_fingerprint("text")
     return (
         "SELECT *, min(doc_id) OVER (PARTITION BY fingerprint) AS keeper "
         f"FROM (SELECT *, {fp} AS fingerprint FROM {rel})"

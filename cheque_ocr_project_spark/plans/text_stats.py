@@ -30,6 +30,12 @@ STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "on",
              "for", "with", "at", "by", "from", "as", "that", "this")
 
 
+# the English gate of lang_id and the corpus filters: stop_ratio >= this
+MIN_STOP_RATIO = 0.05
+# the quality gate of the corpus filters: the quality score >= this
+MIN_QUALITY = 0.5
+
+
 def stop_ratio(terms: Column) -> Column:
     """Share of ``terms`` (a columns.lower_terms array) that are STOPWORDS,
     0.0 for no terms: the language signal of lang_id, the corpus filters
@@ -979,7 +985,7 @@ ORDER BY lift_ppm DESC, bigram ASC LIMIT {COLLOC_K}"""
 
 def q_lang_id(spark, sf_dir):
     ratio = stop_ratio(C.lower_terms(F.col("text")))
-    lang = F.when(ratio >= 0.05, "en").otherwise("unk")
+    lang = F.when(ratio >= MIN_STOP_RATIO, "en").otherwise("unk")
     return par(read_documents(spark, sf_dir)).select("doc_id", lang.alias("lang_pred"))
 
 
@@ -987,21 +993,20 @@ def sql_lang_id():
     return f"""
 WITH t AS (SELECT doc_id, {D.lower_terms('text')} AS toks FROM documents)
 SELECT doc_id,
-       CASE WHEN {stop_ratio_sql('toks')} >= 0.05 THEN 'en' ELSE 'unk' END
+       CASE WHEN {stop_ratio_sql('toks')} >= {MIN_STOP_RATIO} THEN 'en' ELSE 'unk' END
          AS lang_pred
 FROM t"""
 
 
 def q_fingerprint(spark, sf_dir):
-    norm = C.collapse_ws(F.upper(F.col("text")))
     return par(read_documents(spark, sf_dir)).select(
-        "doc_id", F.md5(norm).alias("fingerprint")
+        "doc_id", C.text_fingerprint(F.col("text")).alias("fingerprint")
     )
 
 
 def sql_fingerprint():
-    norm = D.collapse_ws("upper(text)")
-    return f"SELECT doc_id, md5({norm}) AS fingerprint FROM documents"
+    return (f"SELECT doc_id, {D.text_fingerprint('text')} AS fingerprint "
+            "FROM documents")
 
 
 # ---------------------------------------------------------------------------

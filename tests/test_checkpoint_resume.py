@@ -278,7 +278,8 @@ def test_staged_input_waves(spark, transcripts_sdf, fixture_data, tmp_path):
 def _assert_manifest_exact(transcripts_sdf, out, n_buckets):
     """Every manifest entry equals an independent recomputation: its input
     fingerprint and row count from the input, its rows from the committed
-    data and its bytes from the sizes of the bucket's parquet files."""
+    data and its bytes from the sizes of the data files holding the
+    bucket's rows; and every data file is listed by an entry."""
     import os
 
     import pandas as pd
@@ -292,11 +293,19 @@ def _assert_manifest_exact(transcripts_sdf, out, n_buckets):
     rows = data.groupby(data["bucket"].astype("int64")).size()
     entries = CP.read_manifest(out)
     assert sorted(e["bucket"] for e in entries) == list(range(n_buckets))
+    data_dir = os.path.join(out, "data")
+    files = {f for f in os.listdir(data_dir) if f.endswith(".parquet")}
+    holding = {}
+    for f in files:
+        buckets = pd.read_parquet(os.path.join(data_dir, f))["bucket"]
+        for b in set(buckets.astype("int64")):
+            holding.setdefault(b, set()).add(f)
+    assert files == {f["path"] for e in entries for f in e["files"]}
     for e in entries:
         b = e["bucket"]
-        bucket_dir = os.path.join(out, "data", f"bucket={b}")
-        nbytes = sum(os.path.getsize(os.path.join(bucket_dir, f))
-                     for f in os.listdir(bucket_dir) if f.endswith(".parquet"))
+        nbytes = sum(os.path.getsize(os.path.join(data_dir, f))
+                     for f in holding[b])
+        assert {f["path"] for f in e["files"]} == holding[b], e
         assert (e["input_fingerprint"], e["input_rows"]) == inputs[b], e
         assert (e["rows"], e["bytes"]) == (rows.loc[b], nbytes), e
 
@@ -378,3 +387,93 @@ def test_writers_leave_session_overwrite_mode_alone(
         assert spark.conf.get(key) == "static"
     finally:
         spark.conf.set(key, before)
+
+
+def _rows(out):
+    import pandas as pd
+
+    key = ["conv_id", "turn_idx"]
+    return (pd.read_parquet(f"{out}/data").sort_values(key)
+            .reset_index(drop=True))
+
+
+def test_unlisted_wave_files_deleted_on_resume(spark, transcripts_sdf,
+                                               fixture_data, tmp_path):
+    """A wave whose data committed but whose manifest commit is missing
+    left files no entry lists: a resume deletes them (and a crashed write's
+    _temporary) before its waves, re-runs the wave's buckets, and the
+    output equals a clean run row for row."""
+    import pandas as pd
+
+    _t, _m, dd = fixture_data
+    n = 8
+    clean = str(tmp_path / "clean")
+    CP.run_with_checkpoint(spark, transcripts_sdf, dd, clean, n, wave_size=3)
+
+    out = str(tmp_path / "out")
+    CP.run_with_checkpoint(spark, transcripts_sdf, dd, out, n, wave_size=3)
+    last = CP._commits(Path(out) / "_manifest")[-1]
+    orphans = {f["path"] for line in last.read_text().splitlines()
+               for f in json.loads(line)["files"]}
+    last.unlink()
+    (Path(out) / "data" / "_temporary" / "0").mkdir(parents=True)
+
+    stats = CP.run_with_checkpoint(spark, transcripts_sdf, dd, out, n,
+                                   wave_size=3)
+    assert stats["processed_buckets"] == 2 and stats["waves"] == 1
+    data = Path(out) / "data"
+    left = {p.name for p in data.iterdir()}
+    assert not orphans & left and "_temporary" not in left
+    assert not any(f".{o}.crc" in left for o in orphans)
+    pd.testing.assert_frame_equal(_rows(out), _rows(clean))
+    _assert_manifest_exact(transcripts_sdf, out, n)
+
+
+def test_partly_listed_files_rewritten_on_resume(spark, transcripts_sdf,
+                                                 fixture_data, tmp_path):
+    """Dropping some of a wave's entries leaves its files holding rows of
+    buckets no entry lists: a resume rewrites those files without them,
+    so the re-run buckets' rows are not duplicated and every entry's bytes
+    still match the files that hold its rows."""
+    import pandas as pd
+
+    _t, _m, dd = fixture_data
+    n = 8
+    clean = str(tmp_path / "clean")
+    CP.run_with_checkpoint(spark, transcripts_sdf, dd, clean, n)
+
+    out = str(tmp_path / "out")
+    CP.run_with_checkpoint(spark, transcripts_sdf, dd, out, n)
+    keep = [e for e in CP.read_manifest(out) if e["bucket"] not in {0, 1, 2}]
+    for f in (Path(out) / "_manifest").glob("*.json"):
+        f.unlink()
+    CP.append_manifest(out, keep)
+
+    stats = CP.run_with_checkpoint(spark, transcripts_sdf, dd, out, n)
+    assert stats["processed_buckets"] == 3
+    pd.testing.assert_frame_equal(_rows(out), _rows(clean))
+    _assert_manifest_exact(transcripts_sdf, out, n)
+    # Spark reads the rewritten files beside its own
+    assert spark.read.parquet(f"{out}/data").count() == len(_rows(clean))
+
+
+def test_resume_refuses_bucket_directory_layout(spark, transcripts_sdf,
+                                                fixture_data, tmp_path):
+    """An output written with data/bucket=<b> directories and entries that
+    list no files cannot be resumed: the run exits with a one-line message
+    and deletes nothing."""
+    import pandas as pd
+    import pytest
+
+    _t, _m, dd = fixture_data
+    out = tmp_path / "old"
+    part = out / "data" / "bucket=3" / "part-0.parquet"
+    part.parent.mkdir(parents=True)
+    pd.DataFrame({"conv_id": ["c"], "turn_idx": [0]}).to_parquet(part)
+    CP.append_manifest(str(out), [{"bucket": 3, "rows": 1, "bytes": 1}])
+    before = sorted(p for p in out.rglob("*"))
+
+    with pytest.raises(SystemExit, match="bucket=<b> directories") as exc:
+        CP.run_with_checkpoint(spark, transcripts_sdf, dd, str(out), 8)
+    assert "\n" not in str(exc.value)
+    assert sorted(p for p in out.rglob("*")) == before

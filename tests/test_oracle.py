@@ -183,6 +183,32 @@ class TestFuzzy:
     def test_v3_prefix_strip_then_exact(self):
         assert fuzzy.match_name_v3("FOR GUPTA TRADERS", self.DICT) == "GUPTA TRADERS"
 
+    def test_length_index_kept_per_dictionary(self, monkeypatch):
+        """Rows alternating between two dictionaries build each one's
+        length index once; past _LEN_INDEX_MAX dictionaries the oldest
+        index is dropped first."""
+        monkeypatch.setattr(fuzzy, "_LEN_INDEX", {})
+        builds = []
+        real_sorted = sorted
+
+        def counting_sorted(xs, **kw):
+            builds.append(id(xs))
+            return real_sorted(xs, **kw)
+
+        monkeypatch.setattr(fuzzy, "sorted", counting_sorted, raising=False)
+        a, b = list(self.DICT), ["KAUR TEXTILES", "MITTAL PHARMA"]
+        for _ in range(5):
+            fuzzy.match_name_v1("RAJESH KUMAT", a)
+            fuzzy.match_name_v1("MITAL PHARMA", b)
+        assert builds == [id(a), id(b)]
+
+        more = [[f"NAME {i}"] for i in range(fuzzy._LEN_INDEX_MAX)]
+        for d in more:
+            fuzzy.match_name_v1("NAME X", d)
+        assert len(fuzzy._LEN_INDEX) == fuzzy._LEN_INDEX_MAX
+        assert id(a) not in fuzzy._LEN_INDEX
+        assert id(more[-1]) in fuzzy._LEN_INDEX
+
 
 class TestBoilerplate:
     def test_html_keeps_content_drops_nav(self):

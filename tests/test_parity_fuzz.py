@@ -55,6 +55,7 @@ def _gen_strings(n: int, seed: int) -> list:
 # does not reach it; before one, it does
 CASES = _gen_strings(400, seed=20260816) + [
     "ABCDEFGH\nOIOIO", "KUMAR TRADERS\nZOIZO", "ZOIZO\nKUMAR",
+    "AOIOI\n", "AOIOI\r", "OIOIO\n",
 ]
 
 

@@ -195,3 +195,24 @@ def test_corpus_signals_spelled_once():
         if got != gates:
             copies[bound] = got
     assert not copies, "\n".join(f"{k}: {v}" for k, v in copies.items())
+
+
+def test_corpus_gates_and_fingerprint_spelled_once():
+    """The English and quality gate thresholds are each named once, beside
+    stop_ratio/quality, and the exact-dedup fingerprint (md5 of the
+    whitespace-collapsed, upper-cased text) has one builder per engine, so
+    lang_id, the corpus filters, fingerprint and the dedup queries cannot
+    drift apart."""
+    modules = [str(p.relative_to(PKG)) for p in sorted(PKG.rglob("*.py"))]
+    checks = [
+        (r"\b0\.05\b", modules, ["plans/text_stats.py:<module>"]),
+        (r">= 0\.5\b", ["plans/text_stats.py", "plans/corpus.py"], []),
+        (r"\bmd5\(", modules, ["functions/columns.py:text_fingerprint",
+                               "functions/ducksql.py:text_fingerprint"]),
+    ]
+    copies = {}
+    for pattern, where, want in checks:
+        got = sorted(h for m in where for h in _spelled_in(PKG / m, pattern))
+        if got != want:
+            copies[pattern] = got
+    assert not copies, "\n".join(f"{k}: {v}" for k, v in copies.items())
