@@ -55,7 +55,6 @@ def _length_index(drawer_dict: list[str]) -> tuple:
     by_len = sorted(drawer_dict, key=len)
     lens = [len(x) for x in by_len]
     entry = (drawer_dict, by_len, lens, bisect)
-    _LEN_INDEX.pop(key, None)
     while len(_LEN_INDEX) >= _LEN_INDEX_MAX:
         del _LEN_INDEX[next(iter(_LEN_INDEX))]
     _LEN_INDEX[key] = entry

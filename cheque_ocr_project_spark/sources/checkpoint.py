@@ -11,18 +11,18 @@ appends one file per write task. ``<output>/_manifest/`` holds one
 JSON-lines commit file per wave with one entry per bucket: bucket, rows,
 bytes, files, input_fingerprint, input_rows, wall_ms, wave, engine.
 ``files`` lists the data files that hold the bucket's rows, each as
-``{"path", "rows", "record_count"}`` (the bucket's rows in the file, and
-all of the file's rows); ``bytes`` is the summed size of those files. This
-is the Iceberg commit: a data file is live only while an entry lists it.
+``{"path", "rows"}`` (the bucket's rows in the file); ``bytes`` is the
+summed size of those files. This is the Iceberg commit: a data file is
+live only while an entry lists it.
 
 Protocol:
 1. entries are read from ``<output>/_manifest``; a later commit's entry
-   for a bucket supersedes an earlier one
-2. before any wave, every ``*.parquet`` under ``data/`` that no entry lists
-   is deleted (with its ``.crc``), and so is ``data/_temporary``; a listed
-   file that also holds rows of buckets no entry lists it for (their
-   entries were lost) is rewritten without those rows under a new name,
-   and one commit re-lists the entries that named it
+   for a bucket supersedes an earlier one (``live_entries``)
+2. before any wave, every ``*.parquet`` under ``data/`` that no live entry
+   lists is deleted (with its ``.crc``), and so is ``data/_temporary``; a
+   listed file whose footer counts more rows than its entries list (an
+   entry was lost) is rewritten without the unlisted buckets' rows under a
+   new name, and one commit re-lists the entries that named it
 3. pending = input buckets with no entry; each wave extracts its pending
    buckets and appends the result to ``data/`` (no partition overwrite:
    step 2 already took every pending bucket's rows out of the live files)
@@ -51,7 +51,6 @@ import time
 import uuid
 from pathlib import Path
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -77,19 +76,24 @@ def _commits(path: Path) -> list[Path]:
 
 
 def read_manifest(output_dir: str) -> list[dict]:
-    """The live entries: the latest committed entry of each bucket."""
+    """Every committed entry, oldest commit first; a resume that rewrites a
+    file re-commits the entries naming it, so a bucket can appear twice."""
     path = Path(output_dir) / "_manifest"
     if not path.exists():
         return []
-    entries = {}
+    entries = []
     for f in _commits(path):
         with f.open() as fh:
             for line in fh:
                 line = line.strip()
                 if line:
-                    e = json.loads(line)
-                    entries[e["bucket"]] = e
-    return list(entries.values())
+                    entries.append(json.loads(line))
+    return entries
+
+
+def live_entries(entries: list[dict]) -> list[dict]:
+    """The latest of ``entries`` (in commit order) for each bucket."""
+    return list({e["bucket"]: e for e in entries}.values())
 
 
 def completed_buckets(output_dir: str) -> set[int]:
@@ -150,40 +154,34 @@ def _reconcile_data(output_dir: str, entries: list[dict]) -> None:
     entries list."""
     data_dir = Path(output_dir) / "data"
     shutil.rmtree(data_dir / "_temporary", ignore_errors=True)
-    # path -> {"count": its record_count, "rows": {bucket: rows in it}}
-    listed: dict[str, dict] = {}
+    # path -> {bucket: its rows in the file}
+    listed: dict[str, dict[int, int]] = {}
     for e in entries:
         for f in e["files"]:
-            rec = listed.setdefault(f["path"], {"count": f["record_count"],
-                                                "rows": {}})
-            rec["rows"][e["bucket"]] = f["rows"]
+            listed.setdefault(f["path"], {})[e["bucket"]] = f["rows"]
     for p in data_dir.glob("*.parquet"):
         if p.name not in listed:
             _remove_data_file(p)
-    stale = {path: rec for path, rec in listed.items()
-             if sum(rec["rows"].values()) < rec["count"]}
+    stale = {path: rows for path, rows in listed.items()
+             if sum(rows.values())
+             < pq.read_metadata(data_dir / path).num_rows}
     if not stale:
         return
     # the Hadoop local FS checks a file against its .crc, so a rewrite
     # takes a new name rather than replacing the file in place
     renamed = {}
-    for path, rec in stale.items():
+    for path, rows in stale.items():
         t = pq.read_table(data_dir / path)
-        keep = pa.array(sorted(rec["rows"]), t.schema.field(BUCKET_COL).type)
+        keep = pa.array(sorted(rows), t.schema.field(BUCKET_COL).type)
         t = t.filter(pc.is_in(t[BUCKET_COL], value_set=keep))
-        new = f"part-{uuid.uuid4()}.parquet"
-        pq.write_table(t, data_dir / new)
-        renamed[path] = (new, t.num_rows)
+        renamed[path] = f"part-{uuid.uuid4()}.parquet"
+        pq.write_table(t, data_dir / renamed[path])
     updated = []
     for e in entries:
         if not any(f["path"] in renamed for f in e["files"]):
             continue
-        files = [
-            {**f, "path": renamed[f["path"]][0],
-             "record_count": renamed[f["path"]][1]}
-            if f["path"] in renamed else f
-            for f in e["files"]
-        ]
+        files = [{**f, "path": renamed.get(f["path"], f["path"])}
+                 for f in e["files"]]
         updated.append({**e, "files": files, "bytes": _bytes(data_dir, files)})
     # a crash before this commit leaves the new files unlisted, and one
     # after it the old ones: either way the next run deletes them
@@ -203,10 +201,9 @@ def _bucket_files(data_dir: Path, names: set[str]) -> dict[int, list[dict]]:
         if len(col) == 0:
             _remove_data_file(data_dir / name)
             continue
-        buckets, counts = np.unique(col.to_numpy(), return_counts=True)
-        for b, n in zip(buckets.tolist(), counts.tolist()):
-            out.setdefault(b, []).append(
-                {"path": name, "rows": n, "record_count": len(col)})
+        for c in pc.value_counts(col).to_pylist():
+            out.setdefault(c["values"], []).append(
+                {"path": name, "rows": c["counts"]})
     return out
 
 
@@ -259,7 +256,7 @@ def run_with_checkpoint(
     """
     from cheque_ocr_project_spark.plans import pipeline as P
 
-    entries = read_manifest(output_dir)
+    entries = live_entries(read_manifest(output_dir))
     _refuse_old_layout(output_dir, entries)
     tb = with_bucket(transcripts, n_buckets)
     if stage_input:

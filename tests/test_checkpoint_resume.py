@@ -291,7 +291,7 @@ def _assert_manifest_exact(transcripts_sdf, out, n_buckets):
     }
     data = pd.read_parquet(f"{out}/data")
     rows = data.groupby(data["bucket"].astype("int64")).size()
-    entries = CP.read_manifest(out)
+    entries = CP.live_entries(CP.read_manifest(out))
     assert sorted(e["bucket"] for e in entries) == list(range(n_buckets))
     data_dir = os.path.join(out, "data")
     files = {f for f in os.listdir(data_dir) if f.endswith(".parquet")}
@@ -477,3 +477,17 @@ def test_resume_refuses_bucket_directory_layout(spark, transcripts_sdf,
         CP.run_with_checkpoint(spark, transcripts_sdf, dd, str(out), 8)
     assert "\n" not in str(exc.value)
     assert sorted(p for p in out.rglob("*")) == before
+
+
+def test_read_manifest_keeps_every_commit(tmp_path):
+    """read_manifest returns every committed entry in commit order, so a
+    bucket committed twice shows twice; live_entries keeps the latest."""
+    out = str(tmp_path / "m")
+    CP.append_manifest(out, [{"bucket": 0, "rows": 1},
+                             {"bucket": 1, "rows": 2}])
+    CP.append_manifest(out, [{"bucket": 0, "rows": 3}])
+    entries = CP.read_manifest(out)
+    assert [(e["bucket"], e["rows"]) for e in entries] == \
+        [(0, 1), (1, 2), (0, 3)]
+    assert sorted((e["bucket"], e["rows"])
+                  for e in CP.live_entries(entries)) == [(0, 3), (1, 2)]
