@@ -16,12 +16,17 @@ Arrow-batched UDF path instead (currently only difflib fuzzy matching).
 
 from __future__ import annotations
 
+import re
 from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from cheque_ocr_project_spark.oracle import vocab
+from cheque_ocr_project_spark.oracle.classify import (
+    CHEQUE_CLASSES, ORDER, ChequeClasses, ChequeOutputs,
+)
+from cheque_ocr_project_spark.oracle.grammars import FieldGrammars
 
 # --------------------------------------------------------------------------
 # helpers
@@ -109,6 +114,22 @@ def lower_terms(col: Column) -> Column:
     """The lowercase letter runs of col: the word terms of the corpus
     queries (token counts, stop-word ratios, n-grams)."""
     return F.regexp_extract_all(F.lower(col), F.lit("[a-z]+"), F.lit(0))
+
+
+_JAVA_WS_RUN = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def split_words(text: str) -> list[str]:
+    """words_of over a Python string, for the Arrow UDF stages: they split
+    like their Catalyst and DuckDB twins (Python's str.split() also splits
+    on EXOTIC_SEPARATORS, below)."""
+    return [w for w in _JAVA_WS_RUN.split(text) if w]
+
+
+def words_of(col: Column) -> Column:
+    """Python str.split() for the Java \\s set: whitespace runs split,
+    empty words dropped."""
+    return F.filter(F.split(col, r"\s+"), lambda w: w != "")
 
 
 def doc_words(col: Column) -> Column:
@@ -281,7 +302,7 @@ def common_name_part_count(words: Column) -> Column:
 
 def score_name(text: Column) -> Column:
     """= oracle.predicates.score_name."""
-    words = F.filter(F.split(text, r"\s+"), lambda w: w != "")
+    words = words_of(text)
     n = F.size(words)
     score = F.lit(0.0)
     score = score + F.when((n >= 2) & (n <= 5), 0.3).otherwise(0.0)
@@ -295,6 +316,62 @@ def is_bank_or_metadata(col: Column) -> Column:
     """= oracle.predicates.is_bank_or_metadata."""
     u = F.upper(col)
     return any_term(u, vocab.PAYEE_BANK_TERMS) | any_term(u, vocab.PAYEE_METADATA_TERMS)
+
+
+# --------------------------------------------------------------------------
+# classification and field grammars  (oracle.classify, oracle.grammars)
+# --------------------------------------------------------------------------
+
+def cheque_classes(u: Column) -> ChequeClasses:
+    """= oracle.classify.classify's conditions over upper-cased text, one
+    per CHEQUE_CLASSES row (= ducksql.cheque_classes)."""
+    return ChequeClasses(
+        cat3=u.contains("GOVERNMENT ACCOUNT") | u.contains("GOVT ACCOUNT"),
+        cat2=(u.contains("NOT TRANSFERABLE")
+              & any_term(u, vocab.GOVT_NOT_TRANSFERABLE_TERMS)),
+        cat1=(any_term(u, vocab.GOVT_MARKERS_HIGH)
+              | any_term(u, vocab.GOVT_MARKERS_MEDIUM)),
+        dd=any_term(u, vocab.DD_MARKERS),
+        mc=any_term(u, vocab.MC_MARKERS),
+        crossed=F.coalesce(
+            u.rlike("|".join(f"(?:{p})" for p in vocab.CROSSED_PATTERNS)),
+            F.lit(False)),
+        is_self=u.contains("SELF") & (F.size(words_of(u)) < 15),
+    )
+
+
+def cheque_outputs(c: ChequeClasses) -> ChequeOutputs:
+    """The CHEQUE_CLASSES table over the cascade's conditions: each output
+    is the value of the first row whose condition holds, else ORDER's."""
+    def cascade(field: str) -> Column:
+        rows = [r for r in CHEQUE_CLASSES if getattr(r, field) is not None]
+        chain = F.when(getattr(c, rows[0].condition), getattr(rows[0], field))
+        for r in rows[1:]:
+            chain = chain.when(getattr(c, r.condition), getattr(r, field))
+        default = getattr(ORDER, field)
+        return chain if default is None else chain.otherwise(default)
+
+    govt = [getattr(c, r.condition) for r in CHEQUE_CLASSES if r.category]
+    return ChequeOutputs(
+        cascade("type"), cascade("confidence"), cascade("payee_rule"),
+        cascade("category"), reduce(lambda a, b: a | b, govt))
+
+
+def field_grammars(t: Column) -> FieldGrammars:
+    """= oracle.grammars.extract_fields and extract_micr: each field's
+    groups where its pattern matches, else NULL (= ducksql.field_grammars)."""
+    def ex(p, g):
+        return F.regexp_extract(t, p, g)
+
+    date, amount, account, micr = (
+        vocab.DATE_PATTERN, vocab.AMOUNT_PATTERN, vocab.ACCOUNT_NO_PATTERN,
+        vocab.MICR_PATTERN)
+    return FieldGrammars(
+        F.when(t.rlike(date), F.concat(*[ex(date, g) for g in (1, 2, 3)])),
+        F.when(t.rlike(amount),
+               F.replace(ex(amount, 1), F.lit(","), F.lit(""))),
+        F.when(t.rlike(account), ex(account, 1)),
+        *[F.when(t.rlike(micr), ex(micr, g)) for g in (1, 2, 3)])
 
 
 # --------------------------------------------------------------------------

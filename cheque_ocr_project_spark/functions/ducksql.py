@@ -24,9 +24,11 @@ through ``first_where``, which renders the predicate once.
 
 from __future__ import annotations
 
-from typing import NamedTuple
-
 from cheque_ocr_project_spark.oracle import vocab
+from cheque_ocr_project_spark.oracle.classify import (
+    CHEQUE_CLASSES, ORDER, ChequeClasses, ChequeOutputs,
+)
+from cheque_ocr_project_spark.oracle.grammars import FieldGrammars
 
 NL = "chr(10)"
 
@@ -149,8 +151,10 @@ def pystrip(expr: str) -> str:
 
 
 def words_of(expr: str) -> str:
-    """Python str.split(): any-whitespace split, empty tokens dropped."""
-    return f"list_filter(string_split_regex({expr}, '[ \\t\\n\\x0b\\f\\r]+'), w -> w <> '')"
+    """Python str.split() for the Java \\s set: the non-whitespace runs
+    (= columns.words_of)."""
+    word = rx(r"\S+")
+    return f"regexp_extract_all({expr}, {word})"
 
 
 def nonblank_lines(expr: str) -> str:
@@ -377,8 +381,7 @@ def looks_like_real_name(t: str) -> str:
     special = f"({total} - length(regexp_replace({tt}, '[^A-Za-z0-9 ]', '', 'g')))"
     u = f"upper({tt})"
     words = words_of(u)
-    common_set = ", ".join(q(w) for w in sorted(vocab.COMMON_NAME_PARTS))
-    common = f"len(list_filter({words}, w -> w IN ({common_set})))"
+    common = common_name_part_count(words)
     n_words = f"len({words})"
     suspicious = " OR ".join(
         f"(contains({u}, {q(s)}) AND {len(s)} > {total} / 2)"
@@ -401,6 +404,13 @@ def looks_like_real_name(t: str) -> str:
         f"({common} = 0 AND {n_words} = 1 AND ({total} < 5 OR {is_garbage(tt)}))",
     ])
     return f"NOT coalesce(({reject}), FALSE)"
+
+
+def common_name_part_count(words: str) -> str:
+    """Count of words (with duplicates) that are COMMON_NAME_PARTS
+    (= columns.common_name_part_count)."""
+    common_set = ", ".join(q(w) for w in sorted(vocab.COMMON_NAME_PARTS))
+    return f"len(list_filter({words}, w -> upper(w) IN ({common_set})))"
 
 
 def is_junk_v3(u: str) -> str:
@@ -471,21 +481,9 @@ def is_bank_or_metadata(expr: str) -> str:
 # oracle.grammars, oracle.govrules)
 # --------------------------------------------------------------------------
 
-class ChequeClasses(NamedTuple):
-    """The classification cascade's conditions, in cascade order."""
-    cat3: str
-    cat2: str
-    cat1: str
-    dd: str
-    mc: str
-    crossed: str
-    is_self: str
-
-
 def cheque_classes(u: str) -> ChequeClasses:
-    """= oracle.classify.classify's conditions over upper-cased text:
-    government categories III/II/I, demand draft, manager's cheque,
-    crossed, self; none of them means ORDER."""
+    """= oracle.classify.classify's conditions over upper-cased text, one
+    per CHEQUE_CLASSES row (= columns.cheque_classes)."""
     crossed_rx = "|".join(f"(?:{p})" for p in vocab.CROSSED_PATTERNS)
     return ChequeClasses(
         cat3=f"(contains({u}, 'GOVERNMENT ACCOUNT') OR contains({u}, 'GOVT ACCOUNT'))",
@@ -502,6 +500,46 @@ def cheque_classes(u: str) -> ChequeClasses:
         crossed=f"coalesce(regexp_matches({u}, {rx(crossed_rx)}), FALSE)",
         is_self=f"(contains({u}, 'SELF') AND len({words_of(u)}) < 15)",
     )
+
+
+def cheque_outputs(c: ChequeClasses) -> ChequeOutputs:
+    """The CHEQUE_CLASSES table over the cascade's conditions
+    (= columns.cheque_outputs)."""
+    def value(v) -> str:
+        return q(v) if isinstance(v, str) else repr(v)
+
+    def cascade(field: str) -> str:
+        whens = " ".join(
+            f"WHEN {getattr(c, r.condition)} THEN {value(getattr(r, field))}"
+            for r in CHEQUE_CLASSES if getattr(r, field) is not None)
+        default = getattr(ORDER, field)
+        other = "" if default is None else f" ELSE {value(default)}"
+        return f"CASE {whens}{other} END"
+
+    govt = " OR ".join(
+        getattr(c, r.condition) for r in CHEQUE_CLASSES if r.category)
+    return ChequeOutputs(
+        cascade("type"), cascade("confidence"), cascade("payee_rule"),
+        cascade("category"), f"({govt})")
+
+
+def field_grammars(t: str) -> FieldGrammars:
+    """= oracle.grammars.extract_fields and extract_micr: each field's
+    groups where its pattern matches, else NULL (= columns.field_grammars)."""
+    def ex(p, g):
+        return f"regexp_extract({t}, {rx(p)}, {g})"
+
+    def on(p, value):
+        return f"CASE WHEN regexp_matches({t}, {rx(p)}) THEN {value} END"
+
+    date, amount, account, micr = (
+        vocab.DATE_PATTERN, vocab.AMOUNT_PATTERN, vocab.ACCOUNT_NO_PATTERN,
+        vocab.MICR_PATTERN)
+    return FieldGrammars(
+        on(date, " || ".join(ex(date, g) for g in (1, 2, 3))),
+        on(amount, f"replace({ex(amount, 1)}, ',', '')"),
+        on(account, ex(account, 1)),
+        *[on(micr, ex(micr, g)) for g in (1, 2, 3)])
 
 
 def payee_raw(u: str) -> str:

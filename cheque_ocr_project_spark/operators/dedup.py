@@ -50,7 +50,6 @@ run-to-run, resumable, and recomputable by the correctness oracle.
 
 from __future__ import annotations
 
-import re as _re
 from functools import reduce
 
 import numpy as np
@@ -67,9 +66,6 @@ POLY_MULT = 31
 SIMHASH_BITS = 62            # h1*2^31 + h2 < 2^62 — never negative in int64
 SIMHASH_MIX1 = 2654435761    # Knuth multiplicative finalizers: spread the
 SIMHASH_MIX2 = 1566083941    # low-entropy short-token polyhashes over 31 bits
-# Java-\s tokenizer set: keeps the SimHash tokenizer bit-aligned with its
-# RE2 SQL twin on control characters (str.split() also splits on \x1c-\x1f)
-_WS_RE = _re.compile(r"[ \t\n\x0b\f\r]+")
 DEFAULT_SEED = 13
 
 
@@ -880,8 +876,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         bit_weights = (np.uint64(1) << bit_idx).astype(np.int64)
         for pdf in pdf_iter:
             row_tokens = [
-                [w for w in _WS_RE.split(
-                    (t if isinstance(t, str) else "").upper()) if w]
+                C.split_words((t if isinstance(t, str) else "").upper())
                 for t in pdf[text_col]
             ]
             counts = np.fromiter(

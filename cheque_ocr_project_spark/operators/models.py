@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from cheque_ocr_project_spark.functions.columns import split_words
 from cheque_ocr_project_spark.operators.extract import par
 
 _WORKER_STATE: dict = {}
@@ -46,18 +47,7 @@ _FAKE_ORG_HINTS = (
     "LTD", "PVT", "ENTERPRISES", "INDUSTRIES", "TRADERS", "BANK", "CO",
     "STORES", "AGENCIES", "TEXTILES",
 )
-# Explicit Java-\s whitespace set so the deterministic fallbacks tokenize
-# exactly like their SQL twins (Python str.split()/\s additionally treat
-# \x1c-\x1f, \x85 and unicode spaces as whitespace; RE2 and Java do not
-# — the contract tokenizer is the Java set).
-_WS_RE = re.compile(r"[ \t\n\x0b\f\r]+")
-
-
 _EXOTIC_WS_RE = re.compile("[\x1c\x1d\x1e\x1f\x85]")
-
-
-def _ws_split(text: str) -> list[str]:
-    return [t for t in _WS_RE.split(text) if t]
 
 
 _CAP_SPAN = re.compile(r"\b([A-Z][A-Z]+(?:[ \t\n\x0b\f\r]+[A-Z][A-Z]+){0,3})\b")
@@ -85,7 +75,7 @@ def _load_ner():
             out = []
             for m in _CAP_SPAN.finditer(text[:512].upper()):
                 span = m.group(1)
-                label = "ORG" if any(h in _ws_split(span) for h in _FAKE_ORG_HINTS) else "PER"
+                label = "ORG" if any(h in split_words(span) for h in _FAKE_ORG_HINTS) else "PER"
                 out.append({"entity": span, "label": label,
                             "score": round(min(1.0, len(span) / 30 + 0.5), 4)})
             return out[:10], "fake"
@@ -141,10 +131,10 @@ DEFAULT_ZS_LABELS = ("government cheque", "business payment", "personal cheque")
 def zero_shot_overlap(text: str, labels) -> tuple[str, float]:
     """Deterministic fallback: label-word containment ratio; argmax with
     first-label tie-break. SQL-recomputable (plans/flagship.py)."""
-    words = set(_ws_split(text[:512].upper()))
+    words = set(split_words(text[:512].upper()))
     best_label, best = labels[0], -1.0
     for lab in labels:
-        lw = _ws_split(lab.upper())
+        lw = split_words(lab.upper())
         score = sum(1 for w in lw if w in words) / len(lw)
         if score > best:
             best_label, best = lab, score
@@ -300,8 +290,8 @@ def spell_correct_deterministic(text: str) -> tuple[str, float]:
     # touching oracle/cleaning.py's reference semantics.
     snippet = _EXOTIC_WS_RE.sub(" ", text[:512])
     corrected = cleaning.correct_spelling_ai(snippet)
-    a = _ws_split(snippet.upper())
-    b = _ws_split(corrected.upper())
+    a = split_words(snippet.upper())
+    b = split_words(corrected.upper())
     denom = max(len(a), len(b))
     if denom == 0:
         return corrected, 1.0
@@ -320,7 +310,7 @@ def _load_t5():
         def run(text: str):
             prompt = f"Fix the spelling: {text[:512]}"
             out = model(prompt, max_length=128)[0]["generated_text"]
-            a, b = _ws_split(text[:512].upper()), _ws_split(out.upper())
+            a, b = split_words(text[:512].upper()), split_words(out.upper())
             denom = max(len(a), len(b))
             conf = (sum(1 for x, y in zip(a, b) if x == y) / denom
                     if denom else 1.0)

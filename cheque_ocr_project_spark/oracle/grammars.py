@@ -14,6 +14,7 @@
 from __future__ import annotations
 
 import re
+from collections import namedtuple
 
 from cheque_ocr_project_spark.oracle import cleaning, predicates, vocab
 
@@ -49,6 +50,12 @@ def extract_payee(text: str | None) -> str | None:
             if not predicates.is_bank_or_metadata(candidate):
                 return candidate
     return None
+
+
+# the twins' field_grammars: extract_fields' fields, then extract_micr's
+FieldGrammars = namedtuple(
+    "FieldGrammars",
+    "field_date field_amount field_account micr_city micr_bank micr_serial")
 
 
 def extract_fields(text: str) -> dict:

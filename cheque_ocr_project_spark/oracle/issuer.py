@@ -70,7 +70,12 @@ def extract_issuer_v1(lines: list[tuple[str, float]],
     for raw_text, conf in lines:
         text = cleaning.clean_text_v1(raw_text.strip())
 
-        if "FOR " in text or "F/O " in text or "F/" in text or "PROP " in text:
+        for_line = False
+        for m in vocab.FOR_LINE_MARKERS:
+            if m in text:
+                for_line = True
+                break
+        if for_line:
             for marker in vocab.FOR_MARKERS:
                 if marker in text:
                     parts = text.split(marker, 1)
@@ -190,9 +195,8 @@ def status_v3(issuer: str, confidence: float, matched: str | None,
         return "JUNK-FILTERED"
     if confidence >= threshold and issuer and issuer != "NO_VALID_TEXT":
         if predicates.is_valid_drawer_v3(issuer):
-            if len(issuer) <= 4 and issuer.isalpha() and issuer not in (
-                "LTD", "PVT", "INC", "CO."
-            ):
+            if (len(issuer) <= 4 and issuer.isalpha()
+                    and issuer not in vocab.SHORT_REVIEW_OK_V3):
                 return "REVIEW-SHORT"
             return "AUTO-UPDATED" if update_succeeds else "MATCHED-NO-UPDATE"
         return "INVALID-TEXT"

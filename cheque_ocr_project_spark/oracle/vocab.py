@@ -117,6 +117,8 @@ SHORT_NAME_OK = ("CO", "LTD", "PVT", "INC", "M/S")
 
 # --- issuer_processor_v.py:394-396 / 474 ------------------------------------
 FOR_MARKERS = ("FOR ", "F/O ", "F/ ", "PROP ")
+# a cleaned line holding one of these is a FOR line ("F/" has no space)
+FOR_LINE_MARKERS = ("FOR ", "F/O ", "F/", "PROP ")
 
 # --- IssuerBatchProcessorV3.py:65-129 (searched in order, 60% coverage) -----
 JUNK_PATTERNS_V3 = (
@@ -186,6 +188,8 @@ JUNK_VARIATIONS_V3 = (
 # --- IssuerBatchProcessorV3.py:139 (short-caps whitelist) -------------------
 SHORT_CAPS_OK_V3 = ("LTD", "PVT", "INC", "CORP", "CO.", "M/S")
 SHORT_CAPS_PATTERN = r"^[A-Z]{2,4}$"
+# --- IssuerBatchProcessorV3.py:447-473 (short names kept from REVIEW-SHORT)
+SHORT_REVIEW_OK_V3 = ("LTD", "PVT", "INC", "CO.")
 
 # --- IssuerBatchProcessorV3.py:210-215 (bank list, 70% coverage rule) -------
 BANK_NAMES_V3 = (

@@ -173,8 +173,7 @@ def q_pack_sequences(spark, sf_dir):
     tokenization sits below the one (source, chunk) exchange, which both
     consumers share via ReuseExchange — the corpus is read ONCE and no
     window partition ever exceeds PACK_CHUNK rows."""
-    t = F.col("text")
-    ws_tokens = F.size(F.regexp_extract_all(t, F.lit(r"\S+"), F.lit(0)))
+    ws_tokens = F.size(C.words_of(F.col("text")))
     # coalesce makes chunk non-nullable so the join-key isnotnull filter
     # folds away in BOTH branches — otherwise it pushes into only the
     # rows-branch scan (chunk is a window partition key there), the two
@@ -223,7 +222,7 @@ def q_pack_sequences(spark, sf_dir):
 
 
 def sql_pack_sequences():
-    toks = r"len(regexp_extract_all(text, '[^ \t\n\x0b\f\r]+'))"
+    toks = f"len({D.words_of('text')})"
     prefix = (
         "coalesce(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"

@@ -134,7 +134,7 @@ SELECT DISTINCT user_id FROM (
 
 
 def q_last_tokens(spark, sf_dir):
-    tokens = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0))
+    tokens = C.words_of(F.col("text"))
     last3 = F.array_join(F.slice(tokens, -3, 3), " ")
     return (
         par(read_documents(spark, sf_dir))
@@ -144,11 +144,10 @@ def q_last_tokens(spark, sf_dir):
 
 
 def sql_last_tokens():
-    return """
-SELECT doc_id,
-  array_to_string(regexp_extract_all(text, '[^ \\t\\n\\x0b\\f\\r]+')[-3:], ' ') AS last_tokens
+    return f"""
+SELECT doc_id, array_to_string({D.words_of('text')}[-3:], ' ') AS last_tokens
 FROM documents
-WHERE len(regexp_extract_all(text, '[^ \\t\\n\\x0b\\f\\r]+')) >= 3"""
+WHERE len({D.words_of('text')}) >= 3"""
 
 
 # ---------------------------------------------------------------------------

@@ -80,17 +80,10 @@ def content_sql() -> str:
   )"""
 
 
-# ---------------------------------------------------------------------------
-# V3 variant (extract_turn_v3: clean_v3 → junk/validity v3 → conf top-1 →
-# prefix strip → status cascade; empty dict ⇒ no fuzzy stage)
-# ---------------------------------------------------------------------------
-
-def sql_flagship_v3_nofuzzy(
-        threshold: float = oracle_issuer.DEFAULT_THRESHOLD_V3) -> str:
-    short_review = (
-        "(length(issuer_v3) <= 4 AND regexp_matches(issuer_v3, '^[A-Za-z]+$')"
-        " AND issuer_v3 NOT IN ('LTD', 'PVT', 'INC', 'CO.'))"
-    )
+def line_relation_sql() -> str:
+    """The CTE chain both flagship statements start from: transcripts →
+    main content → each turn's non-blank lines (``turns``) → one row per
+    line (``lines_rel``: line_idx, raw_line)."""
     return f"""
 WITH transcripts AS ({DOCUMENTS_AS_TRANSCRIPTS_SQL}),
 content AS ({content_sql()}),
@@ -103,7 +96,22 @@ lines_rel AS (
          unnest(range(0, len(lines))) AS line_idx,
          unnest(lines) AS raw_line
   FROM turns
-),
+)"""
+
+
+# ---------------------------------------------------------------------------
+# V3 variant (extract_turn_v3: clean_v3 → junk/validity v3 → conf top-1 →
+# prefix strip → status cascade; empty dict ⇒ no fuzzy stage)
+# ---------------------------------------------------------------------------
+
+def sql_flagship_v3_nofuzzy(
+        threshold: float = oracle_issuer.DEFAULT_THRESHOLD_V3) -> str:
+    review_ok = ", ".join(D.q(t) for t in vocab.SHORT_REVIEW_OK_V3)
+    short_review = (
+        "(length(issuer_v3) <= 4 AND regexp_matches(issuer_v3, '^[A-Za-z]+$')"
+        f" AND issuer_v3 NOT IN ({review_ok}))"
+    )
+    return f"""{line_relation_sql()},
 lines2 AS MATERIALIZED (  -- else DuckDB inlines `cleaned` into every predicate read
   SELECT *, {D.is_junk_v3('cleaned')} AS junk FROM (
     SELECT conv_id, turn_idx, line_idx,
@@ -161,7 +169,12 @@ def sql_flagship_nofuzzy(
         threshold: float = oracle_issuer.DEFAULT_THRESHOLD_V1) -> str:
     u = "u"  # upper(full_text), bound in turn_level
     c = D.cheque_classes(u)
+    o = D.cheque_outputs(c)
     has_text = "(n_lines > 0)"
+    # no has_text guard: a turn without lines has a NULL full_text
+    fields = ",\n    ".join(
+        f"{sql} AS {name}"
+        for name, sql in D.field_grammars("full_text")._asdict().items())
 
     designation = D.designation_literal(u)
     payee_raw_u = "upper(coalesce(payee_raw, ''))"
@@ -178,15 +191,10 @@ def sql_flagship_nofuzzy(
                  ELSE coalesce(payee_raw, 'XXX') END)
     END"""
 
-    date_pat = D.rx(vocab.DATE_PATTERN)
-    amount_pat = D.rx(vocab.AMOUNT_PATTERN)
-    account_pat = D.rx(vocab.ACCOUNT_NO_PATTERN)
-    micr_pat = D.rx(vocab.MICR_PATTERN)
-
     # issuer per-line stages
     u_raw = "upper(stext)"
     marker_rx = D.rx("|".join(vocab.FOR_MARKERS))
-    for_line_rx = D.rx("FOR |F/O |F/|PROP ")
+    for_line_rx = D.rx("|".join(vocab.FOR_LINE_MARKERS))
 
     def after_marker(col, u_col):  # per FOR marker in order; NULL if absent
         return [
@@ -198,26 +206,17 @@ def sql_flagship_nofuzzy(
     scan_cand = D.first_where(after_marker("stext", u_raw), D.looks_like_real_name)
     for_cand = D.first_where(after_marker("cleaned", "cleaned"), D.is_valid_drawer_v1)
 
-    common_set = ", ".join(D.q(w) for w in sorted(vocab.COMMON_NAME_PARTS))
     fwords = D.words_of("final_text")
     n_fwords = f"len({fwords})"
     wc_boost = f"(CASE WHEN {n_fwords} >= 2 AND {n_fwords} <= 4 THEN 0.15 ELSE 0.0 END)"
-    common_boost = (
-        f"(0.1 * len(list_filter({fwords}, w -> upper(w) IN ({common_set}))))"
-    )
+    common_boost = f"(0.1 * {D.common_name_part_count(fwords)})"
     susp = D.any_term("final_text", vocab.SUSPICIOUS_SCORE_TERMS)
     normal_score = (
         f"(((conf + 0.0) + {wc_boost}) + {common_boost}) "
         f"- (CASE WHEN {susp} THEN 0.40 ELSE 0.0 END)"
     )
 
-    return f"""
-WITH transcripts AS ({DOCUMENTS_AS_TRANSCRIPTS_SQL}),
-content AS ({content_sql()}),
-turns AS (
-  SELECT conv_id, turn_idx, {D.nonblank_lines('content')} AS lines
-  FROM content
-),
+    return f"""{line_relation_sql()},
 turn_level AS (
   SELECT conv_id, turn_idx, lines, len(lines) AS n_lines,
          array_to_string(lines, ' ') AS full_text,
@@ -227,29 +226,10 @@ turn_level AS (
 ),
 classified AS (
   SELECT conv_id, turn_idx, lines, n_lines, full_text, u, confidence,
-    CASE WHEN NOT {has_text} THEN NULL
-         WHEN {c.cat3} THEN 'GOVT_GOVT_ACCOUNT'
-         WHEN {c.cat2} THEN 'GOVT_NON_TRANSFERABLE'
-         WHEN {c.cat1} THEN 'GOVT_NEGOTIABLE'
-         WHEN {c.dd} THEN 'DEMAND_DRAFT'
-         WHEN {c.mc} THEN 'MANAGERS_CHEQUE'
-         WHEN {c.crossed} THEN 'CROSSED'
-         WHEN {c.is_self} THEN 'SELF'
-         ELSE 'ORDER' END AS cheque_type,
-    CASE WHEN NOT {has_text} THEN FALSE ELSE ({c.cat3} OR {c.cat2} OR {c.cat1}) END
-      AS is_government,
-    CASE WHEN NOT {has_text} THEN NULL
-         WHEN {c.cat3} THEN 'III' WHEN {c.cat2} THEN 'II' WHEN {c.cat1} THEN 'I'
-         END AS government_category,
-    CASE WHEN NOT {has_text} THEN NULL
-         WHEN {c.cat3} THEN 'government_account'
-         WHEN {c.cat2} THEN 'government_officer'
-         WHEN {c.cat1} THEN 'government_contractor'
-         WHEN {c.dd} THEN 'dd_standard'
-         WHEN {c.mc} THEN 'mc_standard'
-         WHEN {c.crossed} THEN 'account_payee'
-         WHEN {c.is_self} THEN 'self'
-         ELSE 'standard' END AS payee_rule,
+    CASE WHEN {has_text} THEN {o.cheque_type} END AS cheque_type,
+    ({has_text} AND {o.is_government}) AS is_government,
+    CASE WHEN {has_text} THEN {o.govt_category} END AS government_category,
+    CASE WHEN {has_text} THEN {o.payee_rule} END AS payee_rule,
     CASE WHEN {has_text} THEN {D.payee_raw(u)} END AS payee_raw
   FROM turn_level
 ),
@@ -259,30 +239,10 @@ payeed AS (
          WHEN is_government THEN {gov_payee}
          WHEN payee_raw IS NOT NULL THEN {D.clean_payee('payee_raw')}
          ELSE 'XXX' END AS payee_cleaned,
-    CASE WHEN {has_text} AND regexp_matches(full_text, {date_pat})
-         THEN regexp_extract(full_text, {date_pat}, 1)
-           || regexp_extract(full_text, {date_pat}, 2)
-           || regexp_extract(full_text, {date_pat}, 3) END AS field_date,
-    CASE WHEN {has_text} AND regexp_matches(full_text, {amount_pat})
-         THEN replace(regexp_extract(full_text, {amount_pat}, 1), ',', '')
-         END AS field_amount,
-    CASE WHEN {has_text} AND regexp_matches(full_text, {account_pat})
-         THEN regexp_extract(full_text, {account_pat}, 1) END AS field_account,
-    CASE WHEN {has_text} AND regexp_matches(full_text, {micr_pat})
-         THEN regexp_extract(full_text, {micr_pat}, 1) END AS micr_city,
-    CASE WHEN {has_text} AND regexp_matches(full_text, {micr_pat})
-         THEN regexp_extract(full_text, {micr_pat}, 2) END AS micr_bank,
-    CASE WHEN {has_text} AND regexp_matches(full_text, {micr_pat})
-         THEN regexp_extract(full_text, {micr_pat}, 3) END AS micr_serial,
+    {fields},
     {has_text} AS success,
     CASE WHEN NOT {has_text} THEN 'No text detected' END AS error
   FROM classified
-),
-lines_rel AS (
-  SELECT conv_id, turn_idx,
-         unnest(range(0, len(lines))) AS line_idx,
-         unnest(lines) AS raw_line
-  FROM turn_level
 ),
 lines2 AS MATERIALIZED (  -- else DuckDB inlines `cleaned` into every predicate read
   SELECT conv_id, turn_idx, line_idx,
@@ -552,6 +512,9 @@ SELECT conv_id, turn_idx, {label_case} AS label,
 FROM scored"""
 
 
+CAP_SPAN_RX = r"\b([A-Z][A-Z]+(?:\s+[A-Z][A-Z]+){0,3})\b"
+
+
 def q_ner_entities(spark, sf_dir):
     """U2 NER surface (deterministic fallback in this container), exploded
     to one row per entity so the oracle can hash scalar columns."""
@@ -573,12 +536,11 @@ def sql_ner_entities() -> str:
     over text[:512].upper(); ORG iff any span word is a hint literal;
     score = round(min(1, len/30 + 0.5), 4); first 10 spans. RE2 and Python
     re agree on \\b + greedy {0,3} for this pattern (leftmost, greedy)."""
-    pat = r"\b([A-Z][A-Z]+(?:\s+[A-Z][A-Z]+){0,3})\b"
     hints = ", ".join(D.q(h) for h in M._FAKE_ORG_HINTS)
     return f"""
 WITH t AS (
   SELECT {TRANSCRIPT_KEYS_SQL},
-         regexp_extract_all(upper(text[1:512]), {D.rx(pat)}, 1) AS spans
+         regexp_extract_all(upper(text[1:512]), {D.rx(CAP_SPAN_RX)}, 1) AS spans
   FROM documents
 ),
 e AS (
@@ -651,9 +613,6 @@ SELECT conv_id, turn_idx, corr AS corrected,
                  / greatest(len(wa), len(wb)) END AS spell_conf,
        'map' AS backend
 FROM w"""
-
-
-CAP_SPAN_RX = r"\b([A-Z][A-Z]+(?:\s+[A-Z][A-Z]+){0,3})\b"
 
 
 def q_model_ensemble(spark, sf_dir):

@@ -79,7 +79,7 @@ _GOVT_PAYEE_BOOL_PATTERNS: tuple = tuple(zip(
 def _is_government_entity(x: Column) -> Column:
     """= oracle.govrules.is_government_entity (null/empty → False)."""
     u = F.upper(F.coalesce(x, F.lit("")))
-    words = F.filter(F.split(u, r"\s+"), lambda w: w != "")
+    words = C.words_of(u)
     pattern_hit = F.coalesce(
         reduce(
             lambda a, b: a | b,
@@ -147,65 +147,20 @@ def sql_junk_flag():
 # C1/C2: classification cascade (cheque_classifier.py:122-194)
 # ---------------------------------------------------------------------------
 
+_CLASSIFY_COLUMNS = ("cheque_type", "type_conf", "is_government", "govt_category")
+
+
 def q_classify(spark, sf_dir):
-    u = F.upper(F.col("text"))
-    cat3 = u.contains("GOVERNMENT ACCOUNT") | u.contains("GOVT ACCOUNT")
-    cat2 = u.contains("NOT TRANSFERABLE") & C.any_term(
-        u, vocab.GOVT_NOT_TRANSFERABLE_TERMS
-    )
-    cat1 = C.any_term(u, vocab.GOVT_MARKERS_HIGH) | C.any_term(
-        u, vocab.GOVT_MARKERS_MEDIUM
-    )
-    is_dd = C.any_term(u, vocab.DD_MARKERS)
-    is_mc = C.any_term(u, vocab.MC_MARKERS)
-    crossed = F.coalesce(
-        u.rlike("|".join(f"(?:{p})" for p in vocab.CROSSED_PATTERNS)), F.lit(False)
-    )
-    words = F.filter(F.split(u, r"\s+"), lambda w: w != "")
-    is_self = u.contains("SELF") & (F.size(words) < 15)
-    ctype = (
-        F.when(cat3, "GOVT_GOVT_ACCOUNT")
-        .when(cat2, "GOVT_NON_TRANSFERABLE")
-        .when(cat1, "GOVT_NEGOTIABLE")
-        .when(is_dd, "DEMAND_DRAFT")
-        .when(is_mc, "MANAGERS_CHEQUE")
-        .when(crossed, "CROSSED")
-        .when(is_self, "SELF")
-        .otherwise("ORDER")
-    )
-    conf = (
-        F.when(cat3, 0.98).when(cat2, 0.95).when(cat1, 0.92)
-        .when(is_dd, 0.95).when(is_mc, 0.95).when(crossed, 0.85)
-        .when(is_self, 0.8).otherwise(0.7)
-    )
+    o = C.cheque_outputs(C.cheque_classes(F.upper(F.col("text"))))
     return par(read_documents(spark, sf_dir)).select(
-        "doc_id",
-        ctype.alias("cheque_type"),
-        conf.alias("type_conf"),
-        (cat3 | cat2 | cat1).alias("is_government"),
-        F.when(cat3, "III").when(cat2, "II").when(cat1, "I").alias("govt_category"),
+        "doc_id", *[getattr(o, k).alias(k) for k in _CLASSIFY_COLUMNS]
     )
 
 
 def sql_classify():
-    c = D.cheque_classes("upper(text)")
-    return f"""
-SELECT doc_id,
-  CASE WHEN {c.cat3} THEN 'GOVT_GOVT_ACCOUNT'
-       WHEN {c.cat2} THEN 'GOVT_NON_TRANSFERABLE'
-       WHEN {c.cat1} THEN 'GOVT_NEGOTIABLE'
-       WHEN {c.dd} THEN 'DEMAND_DRAFT'
-       WHEN {c.mc} THEN 'MANAGERS_CHEQUE'
-       WHEN {c.crossed} THEN 'CROSSED'
-       WHEN {c.is_self} THEN 'SELF'
-       ELSE 'ORDER' END AS cheque_type,
-  CASE WHEN {c.cat3} THEN 0.98 WHEN {c.cat2} THEN 0.95 WHEN {c.cat1} THEN 0.92
-       WHEN {c.dd} THEN 0.95 WHEN {c.mc} THEN 0.95 WHEN {c.crossed} THEN 0.85
-       WHEN {c.is_self} THEN 0.8 ELSE 0.7 END AS type_conf,
-  ({c.cat3} OR {c.cat2} OR {c.cat1}) AS is_government,
-  CASE WHEN {c.cat3} THEN 'III' WHEN {c.cat2} THEN 'II' WHEN {c.cat1} THEN 'I'
-       END AS govt_category
-FROM documents"""
+    o = D.cheque_outputs(D.cheque_classes("upper(text)"))
+    cols = ", ".join(f"{getattr(o, k)} AS {k}" for k in _CLASSIFY_COLUMNS)
+    return f"SELECT doc_id, {cols} FROM documents"
 
 
 # ---------------------------------------------------------------------------
@@ -285,59 +240,16 @@ def sql_spelling_correct():
 # ---------------------------------------------------------------------------
 
 def q_field_grammars(spark, sf_dir):
-    t = F.col("text")
-    date_p, amount_p, account_p, micr = (
-        vocab.DATE_PATTERN, vocab.AMOUNT_PATTERN, vocab.ACCOUNT_NO_PATTERN,
-        vocab.MICR_PATTERN,
-    )
-    date = F.when(
-        t.rlike(date_p),
-        F.concat(
-            F.regexp_extract(t, date_p, 1),
-            F.regexp_extract(t, date_p, 2),
-            F.regexp_extract(t, date_p, 3),
-        ),
-    )
-    amount = F.when(
-        t.rlike(amount_p),
-        F.replace(F.regexp_extract(t, amount_p, 1), F.lit(","), F.lit("")),
-    )
-    account = F.when(t.rlike(account_p), F.regexp_extract(t, account_p, 1))
-    has_micr = t.rlike(micr)
+    f = C.field_grammars(F.col("text"))
     return par(read_documents(spark, sf_dir)).select(
-        "doc_id",
-        date.alias("field_date"),
-        amount.alias("field_amount"),
-        account.alias("field_account"),
-        F.when(has_micr, F.regexp_extract(t, micr, 1)).alias("micr_city"),
-        F.when(has_micr, F.regexp_extract(t, micr, 2)).alias("micr_bank"),
-        F.when(has_micr, F.regexp_extract(t, micr, 3)).alias("micr_serial"),
+        "doc_id", *[col.alias(name) for name, col in f._asdict().items()]
     )
 
 
 def sql_field_grammars():
-    def ex(pat, grp):
-        return f"regexp_extract(text, {D.rx(pat)}, {grp})"
-
-    def guard(pat, expr):
-        return f"CASE WHEN regexp_matches(text, {D.rx(pat)}) THEN {expr} END"
-
-    date_p, amount_p, account_p, micr = (
-        vocab.DATE_PATTERN, vocab.AMOUNT_PATTERN, vocab.ACCOUNT_NO_PATTERN,
-        vocab.MICR_PATTERN,
-    )
-    date = guard(date_p, f"{ex(date_p, 1)} || {ex(date_p, 2)} || {ex(date_p, 3)}")
-    amount = guard(amount_p, f"replace({ex(amount_p, 1)}, ',', '')")
-    account = guard(account_p, ex(account_p, 1))
-    return f"""
-SELECT doc_id,
-  {date} AS field_date,
-  {amount} AS field_amount,
-  {account} AS field_account,
-  {guard(micr, ex(micr, 1))} AS micr_city,
-  {guard(micr, ex(micr, 2))} AS micr_bank,
-  {guard(micr, ex(micr, 3))} AS micr_serial
-FROM documents"""
+    f = D.field_grammars("text")
+    cols = ", ".join(f"{sql} AS {name}" for name, sql in f._asdict().items())
+    return f"SELECT doc_id, {cols} FROM documents"
 
 
 # ---------------------------------------------------------------------------
@@ -576,7 +488,7 @@ def q_issuer_simple(spark, sf_dir):
     cand = F.trim(F.element_at(F.split(u, "FOR"), -1))
     for delim in vocab.SIMPLE_FOR_DELIMITERS:
         cand = F.substring_index(cand, delim, 1)
-    words = F.filter(F.split(cand, r"\s+"), lambda w: w != "")
+    words = C.words_of(cand)
     joined = F.array_join(words, " ")
     cleaned = C.collapse_ws(F.regexp_replace(joined, vocab.NON_WORD_OR_SPACE, " "))
     # materialize the multi-referenced derivations once per row (words is
@@ -618,7 +530,7 @@ def sql_issuer_simple():
     for delim in vocab.SIMPLE_FOR_DELIMITERS:
         d = D.q(delim) if delim != "\n" else "chr(10)"
         cand = f"split_part({cand}, {d}, 1)"  # whole string if d is absent
-    words = f"regexp_extract_all({cand}, '[^ \\t\\n\\x0b\\f\\r]+')"
+    words = D.words_of(cand)
     joined = f"array_to_string({words}, ' ')"
     cleaned = D.collapse_ws(D.rr(joined, vocab.NON_WORD_OR_SPACE, " "))
     for_result = (
@@ -645,13 +557,12 @@ def q_score_name(spark, sf_dir):
 
 def sql_score_name():
     t = "text[1:40]"
-    words = f"regexp_extract_all({t}, '[^ \\t\\n\\x0b\\f\\r]+')"
+    words = D.words_of(t)
     n = f"len({words})"
     all_alpha = (
         f"(len(list_filter({words}, w -> NOT regexp_matches(w, '^[A-Za-z]+$'))) = 0)"
     )
-    common_list = ", ".join(D.q(w) for w in sorted(vocab.COMMON_NAME_PARTS))
-    common = f"len(list_filter({words}, w -> upper(w) IN ({common_list})))"
+    common = D.common_name_part_count(words)
     score = (
         f"(CASE WHEN {n} BETWEEN 2 AND 5 THEN 0.3 ELSE 0.0 END"
         f" + CASE WHEN {all_alpha} THEN 0.3 ELSE 0.0 END"
@@ -947,9 +858,7 @@ FROM documents"""
 def q_for_first3(spark, sf_dir):
     u = F.upper(F.col("text"))
     seg = F.trim(F.element_at(F.split(u, "FOR"), 2))
-    first3 = F.array_join(
-        F.slice(F.regexp_extract_all(seg, F.lit(r"\S+"), F.lit(0)), 1, 3), " "
-    )
+    first3 = F.array_join(F.slice(C.words_of(seg), 1, 3), " ")
     out = F.when(
         u.contains("FOR") & (F.size(F.split(u, "FOR")) > 1), first3
     ).otherwise(F.lit("UNKNOWN"))
@@ -959,7 +868,7 @@ def q_for_first3(spark, sf_dir):
 def sql_for_first3():
     u = "upper(text)"
     seg = f"trim(string_split({u}, 'FOR')[2])"
-    first3 = f"array_to_string(regexp_extract_all({seg}, '[^ \\t\\n\\x0b\\f\\r]+')[1:3], ' ')"
+    first3 = f"array_to_string({D.words_of(seg)}[1:3], ' ')"
     return f"""
 SELECT doc_id,
   CASE WHEN contains({u}, 'FOR') AND len(string_split({u}, 'FOR')) > 1

@@ -326,7 +326,7 @@ def _simhash_parts(max_hamming: int,
     )
     ctes = f"""toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(upper(text), '[ \\t\\n\\x0b\\f\\r]+'), t -> t <> '') AS toks
+         {D.words_of('upper(text)')} AS toks
   FROM docs
 ),
 th AS (

@@ -97,7 +97,7 @@ _TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0b\f\r]"
 
 def q_token_stats(spark, sf_dir):
     t = F.col("text")
-    ws_tokens = F.size(F.regexp_extract_all(t, F.lit(r"\S+"), F.lit(0)))
+    ws_tokens = F.size(C.words_of(t))
     bpe_tokens = F.size(F.regexp_extract_all(t, F.lit(_TOKEN_PATTERN), F.lit(0)))
     return par(read_documents(spark, sf_dir)).select(
         "doc_id",
@@ -109,7 +109,7 @@ def q_token_stats(spark, sf_dir):
 def sql_token_stats():
     return f"""
 SELECT doc_id,
-  len(regexp_extract_all(text, '[^ \\t\\n\\x0b\\f\\r]+')) AS ws_tokens,
+  len({D.words_of('text')}) AS ws_tokens,
   len(regexp_extract_all(text, {D.rx(_TOKEN_PATTERN)})) AS bpe_tokens
 FROM documents"""
 
@@ -239,8 +239,7 @@ def q_doc_chunks(spark, sf_dir):
     engines, so the text compare is exact); chunk count is
     1 + ceil(max(n - C, 0) / stride) in pure integer arithmetic. One
     pruned scan, a sequence-explode, zero shuffles."""
-    t = F.col("text")
-    tokens = F.regexp_extract_all(t, F.lit(r"[^ \t\n\x0B\f\r]+"), F.lit(0))
+    tokens = C.words_of(F.col("text"))
     n = F.size(tokens)
     n_chunks = F.lit(1) + F.floor(
         (F.greatest(n - CHUNK_TOKENS, F.lit(0)) + CHUNK_STRIDE - 1)
@@ -261,7 +260,7 @@ def q_doc_chunks(spark, sf_dir):
 
 
 def sql_doc_chunks():
-    toks = r"regexp_extract_all(text, '[^ \t\n\x0b\f\r]+')"
+    toks = D.words_of("text")
     return f"""
 WITH d AS (
   SELECT doc_id, {toks} AS toks, len({toks}) AS n_tokens FROM documents
@@ -561,9 +560,7 @@ def q_source_token_budget(spark, sf_dir):
     and degenerated to raw token counts below 1e6 total — ADVICE r05).
     One scan, one map-side-combined agg, a broadcast of the single-row
     total."""
-    toks = F.size(
-        F.regexp_extract_all(F.col("text"), F.lit(r"[^ \t\n\x0B\f\r]+"), F.lit(0))
-    )
+    toks = F.size(C.words_of(F.col("text")))
     per_src = (
         par(read_documents(spark, sf_dir)).select("source", toks.alias("t"))
         .groupBy("source")
@@ -583,7 +580,7 @@ def q_source_token_budget(spark, sf_dir):
 
 
 def sql_source_token_budget():
-    toks = r"len(regexp_extract_all(text, '[^ \t\n\x0b\f\r]+'))"
+    toks = f"len({D.words_of('text')})"
     return f"""
 WITH s AS (
   SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
